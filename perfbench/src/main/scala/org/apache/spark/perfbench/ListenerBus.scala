@@ -1,0 +1,9 @@
+package org.apache.spark.perfbench
+
+import org.apache.spark.SparkContext
+
+/** The listener bus is private to Spark; the benchmark needs to wait for
+  * it to deliver every event before it reads its listener's totals. */
+object ListenerBus {
+  def waitUntilEmpty(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
+}
