@@ -6,8 +6,9 @@ import org.apache.spark.sql.SparkSession
 
 /** Physical-plan audit: dumps `explain("formatted")` for representative
   * queries so pushdown / pruning / join strategy / codegen coverage can
-  * be reviewed (and regressions spotted in diffs). Output is committed
-  * at docs/PLANS.md.
+  * be reviewed. The output is generated on demand (default
+  * docs/PLANS.md, not committed); `PlanContractSpec` enforces the
+  * load-bearing plan rules in code.
   *
   * Usage: runMain graft.Explain [sfDir] [outFile]
   */

@@ -5,9 +5,8 @@ import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.SparkSession
 
 /** Dev tool: dump `explain("formatted")` for named queries, one file
-  * per query — the per-round optimization evidence trail
-  * (plans/r{N}/<query>_<suffix>.txt), complementing docs/PLANS.md's
-  * single-file audit.
+  * per query (`<outDir>/<query>_<suffix>.txt`), e.g. before/after plans
+  * for an optimization; complements [[Explain]]'s single-file audit.
   *
   * Usage: runMain graft.PlanDump <sfDir> <outDir> <suffix> <query>...
   */

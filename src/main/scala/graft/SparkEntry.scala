@@ -6,13 +6,19 @@ import graft.operators.{AnnIncremental, AnnIndex, AnnRetrieval, Breadth, Breadth
 import graft.operators.{Affinity, Audit, Calibration, Contribution, Coreset, CrossCorr, Cuped, Evaluation, Evaluation2, ExactSubstr, Experiment, FeaturePrep, Governance, Graph3, Hierarchy, InfoTheory, InvertedIndex, Keyphrase, Lifecycle, Linkage, MaxCover, Mmr, Pca, SessionState, TextProfile, Vocabulary}
 import graft.streaming.Streams
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
+/** One registered query: its name, the engine's DataFrame program
+  * `(SparkSession, sfDir) => DataFrame`, and the equivalent DuckDB SQL
+  * over the same parquet tables. A query cannot exist without an oracle. */
+final case class QueryDef(name: String,
+    run: (SparkSession, String) => DataFrame, oracle: String)
+
+/** Query registry — the contract of SURVEY.md §7.
   *
-  * Central registry: each operator module contributes a `queries` map
-  * (name -> (SparkSession, sfDir) => DataFrame) and an `oracles` map
-  * (name -> equivalent DuckDB SQL over the same parquet tables). Every
-  * query orders its output totally and rounds money to cents so the
-  * driver's hash compare is deterministic (SURVEY.md §5.2).
+  * Central registry: each operator module contributes a `defs:
+  * Seq[QueryDef]`, and [[all]] names each module once. [[queries]] and
+  * [[oracleSql]] are derived from it. Every query orders its output
+  * totally and rounds money to cents so the oracle hash compare is
+  * deterministic (SURVEY.md §5.2).
   */
 object SparkEntry {
 
@@ -20,26 +26,33 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     Relational.q07Top5Reps(spark, "/root/testdata/sf0.001")
 
-  /** One entry per implemented operator from SURVEY.md §2. */
+  /** Every registered query, one entry per implemented operator from SURVEY.md §2. */
+  lazy val all: Seq[QueryDef] =
+    Relational.defs ++ Breadth.defs ++ Breadth2.defs ++
+      Breadth3.defs ++ Breadth4.defs ++ Breadth5.defs ++ Breadth6.defs ++ Breadth7.defs ++ Breadth8.defs ++ Breadth9.defs ++ Breadth10.defs ++ Breadth11.defs ++
+      Dedup.defs ++ DedupEmbedding.defs ++ DedupClusters.defs ++
+      TextOps.defs ++ TextEncode.defs ++ Similarity.defs ++ AnnIndex.defs ++
+      AnnRetrieval.defs ++ AnnIncremental.defs ++
+      Multimodal.defs ++ Streams.defs ++ XmlShred.defs ++
+      TrainingPipeline.defs ++ Materialize.defs ++ Curation.defs ++ Curation2.defs ++ CurationHardening.defs ++ SketchAlgebra.defs ++ Skew.defs ++
+      StorageLayout.defs ++ Graph.defs ++ Graph2.defs ++ Drift.defs ++ TimeSeries.defs ++ TimeSeries2.defs ++ InvertedIndex.defs ++ Governance.defs ++ Hierarchy.defs ++ Pca.defs ++ MaxCover.defs ++ Experiment.defs ++ SessionState.defs ++ Cuped.defs ++ Calibration.defs ++ Expectations.defs ++ Audit.defs ++ Affinity.defs ++ Lifecycle.defs ++ Contribution.defs ++ FeaturePrep.defs ++ Linkage.defs ++ ExactSubstr.defs ++ Evaluation.defs ++ Evaluation2.defs ++ CrossCorr.defs ++ Mmr.defs ++ Vocabulary.defs ++ InfoTheory.defs ++ Coreset.defs ++ Graph3.defs ++ Keyphrase.defs ++ TextProfile.defs
+
+  /** `defs` keyed by name; refuses a name registered more than once. */
+  def index(defs: Seq[QueryDef]): Map[String, QueryDef] = {
+    val dups = defs.groupBy(_.name).collect { case (n, ds) if ds.size > 1 => n }
+    require(dups.isEmpty, "query names registered more than once: " +
+      dups.toSeq.sorted.mkString(", "))
+    defs.map(d => d.name -> d).toMap
+  }
+
+  private lazy val byName: Map[String, QueryDef] = index(all)
+
+  /** name -> DataFrame program, for every registered query. */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
-    Relational.queries ++ Breadth.queries ++ Breadth2.queries ++
-      Breadth3.queries ++ Breadth4.queries ++ Breadth5.queries ++ Breadth6.queries ++ Breadth7.queries ++ Breadth8.queries ++ Breadth9.queries ++ Breadth10.queries ++ Breadth11.queries ++
-      Dedup.queries ++ DedupEmbedding.queries ++ DedupClusters.queries ++
-      TextOps.queries ++ TextEncode.queries ++ Similarity.queries ++ AnnIndex.queries ++
-      AnnRetrieval.queries ++ AnnIncremental.queries ++
-      Multimodal.queries ++ Streams.queries ++ XmlShred.queries ++
-      TrainingPipeline.queries ++ Materialize.queries ++ Curation.queries ++ Curation2.queries ++ CurationHardening.queries ++ SketchAlgebra.queries ++ Skew.queries ++
-      StorageLayout.queries ++ Graph.queries ++ Graph2.queries ++ Drift.queries ++ TimeSeries.queries ++ TimeSeries2.queries ++ InvertedIndex.queries ++ Governance.queries ++ Hierarchy.queries ++ Pca.queries ++ MaxCover.queries ++ Experiment.queries ++ SessionState.queries ++ Cuped.queries ++ Calibration.queries ++ Expectations.queries ++ Audit.queries ++ Affinity.queries ++ Lifecycle.queries ++ Contribution.queries ++ FeaturePrep.queries ++ Linkage.queries ++ ExactSubstr.queries ++ Evaluation.queries ++ Evaluation2.queries ++ CrossCorr.queries ++ Mmr.queries ++ Vocabulary.queries ++ InfoTheory.queries ++ Coreset.queries ++ Graph3.queries ++ Keyphrase.queries ++ TextProfile.queries
+    byName.map { case (n, d) => n -> d.run }
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omit for non-SQL-expressible ops. */
+    * the same parquet tables. */
   def oracleSql: Map[String, String] =
-    Relational.oracles ++ Breadth.oracles ++ Breadth2.oracles ++
-      Breadth3.oracles ++ Breadth4.oracles ++ Breadth5.oracles ++ Breadth6.oracles ++ Breadth7.oracles ++ Breadth8.oracles ++ Breadth9.oracles ++ Breadth10.oracles ++ Breadth11.oracles ++
-      Dedup.oracles ++ DedupEmbedding.oracles ++ DedupClusters.oracles ++
-      TextOps.oracles ++ TextEncode.oracles ++ Similarity.oracles ++ AnnIndex.oracles ++
-      AnnRetrieval.oracles ++ AnnIncremental.oracles ++
-      Multimodal.oracles ++ Streams.oracles ++ XmlShred.oracles ++
-      TrainingPipeline.oracles ++ Materialize.oracles ++ Curation.oracles ++ Curation2.oracles ++ CurationHardening.oracles ++ SketchAlgebra.oracles ++ Skew.oracles ++
-      StorageLayout.oracles ++ Graph.oracles ++ Graph2.oracles ++ Drift.oracles ++ TimeSeries.oracles ++ TimeSeries2.oracles ++ InvertedIndex.oracles ++ Governance.oracles ++ Hierarchy.oracles ++ Pca.oracles ++ MaxCover.oracles ++ Experiment.oracles ++ SessionState.oracles ++ Cuped.oracles ++ Calibration.oracles ++ Expectations.oracles ++ Audit.oracles ++ Affinity.oracles ++ Lifecycle.oracles ++ Contribution.oracles ++ FeaturePrep.oracles ++ Linkage.oracles ++ ExactSubstr.oracles ++ Evaluation.oracles ++ Evaluation2.oracles ++ CrossCorr.oracles ++ Mmr.oracles ++ Vocabulary.oracles ++ InfoTheory.oracles ++ Coreset.oracles ++ Graph3.oracles ++ Keyphrase.oracles ++ TextProfile.oracles
+    byName.map { case (n, d) => n -> d.oracle }
 }

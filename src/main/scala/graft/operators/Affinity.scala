@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.QueryDef
 import graft.sources.Tables
 
 /** [EXT] co-occurrence analytics: market-basket association mining
@@ -374,17 +375,8 @@ object Affinity {
       .orderBy("basket_size")
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q346_basket_size_profile" -> (q346BasketSizeProfile _),
-    "q282_association_rules" -> (q282AssociationRules _),
-    "q173_basket_lift" -> (q173BasketLift _),
-    "q214_frequent_triples" -> (q214FrequentTriples _),
-    "q174_attribution" -> (q174Attribution _),
-    "q183_item_neighbors" -> (q183ItemNeighbors _),
-    "q186_type_affinity" -> (q186TypeAffinity _))
-
-  val oracles: Map[String, String] = Map(
-    "q346_basket_size_profile" ->
+  val defs: Seq[QueryDef] = Seq(
+    QueryDef("q346_basket_size_profile", q346BasketSizeProfile _,
       """WITH items AS (
         |  SELECT DISTINCT l_orderkey AS okey, l_partkey AS part
         |  FROM lineitem),
@@ -408,8 +400,8 @@ object Affinity {
         |             / (CAST(m.sk AS DOUBLE) / m.n), 6)
         |         AS dispersion_index
         |FROM hist h, mom m
-        |ORDER BY basket_size""".stripMargin,
-    "q282_association_rules" ->
+        |ORDER BY basket_size""".stripMargin),
+    QueryDef("q282_association_rules", q282AssociationRules _,
       s"""${pairsCte(TriMinSup)},
         |tri AS MATERIALIZED (
         |  SELECT a.part AS pa, b.part AS pb, c.part AS pc,
@@ -451,8 +443,21 @@ object Affinity {
         |       confidence, lift
         |FROM scored
         |ORDER BY lift DESC, confidence DESC, ant1, ant2, cons
-        |LIMIT $TopRules""".stripMargin,
-    "q214_frequent_triples" ->
+        |LIMIT $TopRules""".stripMargin),
+    QueryDef("q173_basket_lift", q173BasketLift _,
+      s"""${pairsCte(MinSup)},
+        |n_orders AS (
+        |  SELECT count(DISTINCT okey) AS n_orders FROM items)
+        |SELECT p1, p2, pair_n, n1, n2,
+        |       round(CAST(pair_n AS DOUBLE)
+        |             / (SELECT n_orders FROM n_orders), 6) AS support,
+        |       round(CAST(pair_n AS DOUBLE) / n1, 6) AS confidence,
+        |       round(CAST((SELECT n_orders FROM n_orders) * pair_n AS DOUBLE)
+        |             / (n1 * n2), 6) AS lift
+        |FROM pairs
+        |ORDER BY lift DESC, pair_n DESC, p1, p2
+        |LIMIT $TopPairs""".stripMargin),
+    QueryDef("q214_frequent_triples", q214FrequentTriples _,
       s"""${pairsCte(TriMinSup)},
         |tri AS MATERIALIZED (
         |  SELECT a.part AS pa, b.part AS pb, c.part AS pc,
@@ -468,61 +473,8 @@ object Affinity {
         |JOIN pairs ab ON ab.p1 = pa AND ab.p2 = pb
         |JOIN pairs ac ON ac.p1 = pa AND ac.p2 = pc
         |JOIN pairs bc ON bc.p1 = pb AND bc.p2 = pc
-        |ORDER BY support DESC, pa, pb, pc""".stripMargin,
-    "q186_type_affinity" ->
-      """WITH vec AS (
-        |  SELECT user_id, event_type, count(*) AS n
-        |  FROM events GROUP BY 1, 2),
-        |norms AS (
-        |  SELECT event_type, CAST(sum(n * n) AS BIGINT) AS norm2
-        |  FROM vec GROUP BY 1),
-        |dots AS (
-        |  SELECT a.event_type AS t1, b.event_type AS t2,
-        |         CAST(sum(a.n * b.n) AS BIGINT) AS dot,
-        |         count(*) AS n_users
-        |  FROM vec a JOIN vec b
-        |    ON a.user_id = b.user_id AND a.event_type < b.event_type
-        |  GROUP BY 1, 2)
-        |SELECT t1, t2, n_users, dot,
-        |       round(CAST(dot AS DOUBLE)
-        |             / sqrt(CAST(n1.norm2 * n2.norm2 AS DOUBLE)), 6)
-        |         AS cosine
-        |FROM dots
-        |JOIN norms n1 ON n1.event_type = t1
-        |JOIN norms n2 ON n2.event_type = t2
-        |ORDER BY t1, t2""".stripMargin,
-    "q183_item_neighbors" ->
-      s"""${pairsCte(NeighborMinSup)},
-        |sym AS (
-        |  SELECT p1 AS item, p2 AS neighbor, n1, n2, pair_n FROM pairs
-        |  UNION ALL
-        |  SELECT p2, p1, n2, n1, pair_n FROM pairs),
-        |scored AS (
-        |  SELECT item, neighbor, pair_n,
-        |         CAST(pair_n AS DOUBLE)
-        |           / sqrt(CAST(n1 * n2 AS DOUBLE)) AS cos
-        |  FROM sym),
-        |ranked AS (
-        |  SELECT *, CAST(row_number() OVER (PARTITION BY item
-        |    ORDER BY cos DESC, pair_n DESC, neighbor) AS INTEGER) AS rank
-        |  FROM scored)
-        |SELECT item, rank, neighbor, pair_n, round(cos, 6) AS cosine
-        |FROM ranked WHERE rank <= $TopNeighbors
-        |ORDER BY item, rank""".stripMargin,
-    "q173_basket_lift" ->
-      s"""${pairsCte(MinSup)},
-        |n_orders AS (
-        |  SELECT count(DISTINCT okey) AS n_orders FROM items)
-        |SELECT p1, p2, pair_n, n1, n2,
-        |       round(CAST(pair_n AS DOUBLE)
-        |             / (SELECT n_orders FROM n_orders), 6) AS support,
-        |       round(CAST(pair_n AS DOUBLE) / n1, 6) AS confidence,
-        |       round(CAST((SELECT n_orders FROM n_orders) * pair_n AS DOUBLE)
-        |             / (n1 * n2), 6) AS lift
-        |FROM pairs
-        |ORDER BY lift DESC, pair_n DESC, p1, p2
-        |LIMIT $TopPairs""".stripMargin,
-    "q174_attribution" ->
+        |ORDER BY support DESC, pa, pb, pc""".stripMargin),
+    QueryDef("q174_attribution", q174Attribution _,
       s"""WITH ev AS (
         |  SELECT user_id, event_id, event_type,
         |         epoch_us(CAST(ts AS TIMESTAMP)) AS us
@@ -555,5 +507,45 @@ object Affinity {
         |       COALESCE(first_touch_convs, 0) AS first_touch_convs,
         |       COALESCE(last_touch_convs, 0) AS last_touch_convs
         |FROM first FULL OUTER JOIN last USING (channel)
-        |ORDER BY channel""".stripMargin)
+        |ORDER BY channel""".stripMargin),
+    QueryDef("q183_item_neighbors", q183ItemNeighbors _,
+      s"""${pairsCte(NeighborMinSup)},
+        |sym AS (
+        |  SELECT p1 AS item, p2 AS neighbor, n1, n2, pair_n FROM pairs
+        |  UNION ALL
+        |  SELECT p2, p1, n2, n1, pair_n FROM pairs),
+        |scored AS (
+        |  SELECT item, neighbor, pair_n,
+        |         CAST(pair_n AS DOUBLE)
+        |           / sqrt(CAST(n1 * n2 AS DOUBLE)) AS cos
+        |  FROM sym),
+        |ranked AS (
+        |  SELECT *, CAST(row_number() OVER (PARTITION BY item
+        |    ORDER BY cos DESC, pair_n DESC, neighbor) AS INTEGER) AS rank
+        |  FROM scored)
+        |SELECT item, rank, neighbor, pair_n, round(cos, 6) AS cosine
+        |FROM ranked WHERE rank <= $TopNeighbors
+        |ORDER BY item, rank""".stripMargin),
+    QueryDef("q186_type_affinity", q186TypeAffinity _,
+      """WITH vec AS (
+        |  SELECT user_id, event_type, count(*) AS n
+        |  FROM events GROUP BY 1, 2),
+        |norms AS (
+        |  SELECT event_type, CAST(sum(n * n) AS BIGINT) AS norm2
+        |  FROM vec GROUP BY 1),
+        |dots AS (
+        |  SELECT a.event_type AS t1, b.event_type AS t2,
+        |         CAST(sum(a.n * b.n) AS BIGINT) AS dot,
+        |         count(*) AS n_users
+        |  FROM vec a JOIN vec b
+        |    ON a.user_id = b.user_id AND a.event_type < b.event_type
+        |  GROUP BY 1, 2)
+        |SELECT t1, t2, n_users, dot,
+        |       round(CAST(dot AS DOUBLE)
+        |             / sqrt(CAST(n1.norm2 * n2.norm2 AS DOUBLE)), 6)
+        |         AS cosine
+        |FROM dots
+        |JOIN norms n1 ON n1.event_type = t1
+        |JOIN norms n2 ON n2.event_type = t2
+        |ORDER BY t1, t2""".stripMargin))
 }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.QueryDef
 import graft.sources.Tables
 import Similarity.{QselCte, TopK, onlyQueries, simCol, avgRecallContract}
 
@@ -133,14 +134,11 @@ object AnnIncremental {
         col("avg_recall_ok"))
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q148_ann_incremental" -> (q148AnnIncremental _))
-
   /** Contract-style oracle (the q52/q113/q114 pattern): the split
     * sizes and query count are exact SQL; the recall and integrity
     * flags are engine-side contracts asserted TRUE. */
-  val oracles: Map[String, String] = Map(
-    "q148_ann_incremental" ->
+  val defs: Seq[QueryDef] = Seq(
+    QueryDef("q148_ann_incremental", q148AnnIncremental _,
       s"""WITH $QselCte
         |SELECT (SELECT CAST(count(*) AS BIGINT) FROM qsel) AS n_queries,
         |       CAST(count(CASE WHEN vec_id % $DeltaMod != $DeltaResidue THEN 1 END)
@@ -149,5 +147,5 @@ object AnnIncremental {
         |            AS BIGINT) AS n_delta,
         |       TRUE AS merge_integrity_ok,
         |       TRUE AS avg_recall_ok
-        |FROM embeddings""".stripMargin)
+        |FROM embeddings""".stripMargin))
 }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.QueryDef
 import graft.sources.Tables
 import Similarity.{QselCte, TopK, onlyQueries, queryVecs, corpusVecs, simCol,
   avgRecallContract, embeddingDim}
@@ -441,23 +442,18 @@ object AnnIndex {
   // the flat-ADC level while scanning far fewer code rows per query
   private val IvfPqRecallFloor = 0.5
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q52_ann_ivf_topk" -> (q52AnnIvfTopK _),
-    "q113_ann_pq" -> (q113AnnPq _),
-    "q114_ann_ivfpq" -> (q114AnnIvfPq _))
 
-
-  val oracles: Map[String, String] = Map(
-    "q52_ann_ivf_topk" ->
+  val defs: Seq[QueryDef] = Seq(
+    QueryDef("q52_ann_ivf_topk", q52AnnIvfTopK _,
       s"""WITH $QselCte
         |SELECT count(*) AS n_queries, TRUE AS avg_recall_ok
-        |FROM qsel""".stripMargin,
-    "q113_ann_pq" ->
+        |FROM qsel""".stripMargin),
+    QueryDef("q113_ann_pq", q113AnnPq _,
       s"""WITH $QselCte
         |SELECT count(*) AS n_queries, TRUE AS avg_recall_ok
-        |FROM qsel""".stripMargin,
-    "q114_ann_ivfpq" ->
+        |FROM qsel""".stripMargin),
+    QueryDef("q114_ann_ivfpq", q114AnnIvfPq _,
       s"""WITH $QselCte
         |SELECT count(*) AS n_queries, TRUE AS avg_recall_ok
-        |FROM qsel""".stripMargin)
+        |FROM qsel""".stripMargin))
 }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.QueryDef
 import graft.sources.Tables
 import Similarity.{QselCte, TopK, onlyQueries, queryVecs, corpusVecs, simCol,
   bruteRanked, avgRecallContract}
@@ -722,83 +723,10 @@ object AnnRetrieval {
           .as("mcnemar_chi2"))
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q263_retrieval_ndcg" -> (q263RetrievalNdcg _),
-    "q265_mcnemar_picks" -> (q265McnemarPicks _),
-    "q315_retrieval_map" -> (q315RetrievalMap _),
-    "q255_retrieval_mrr" -> (q255RetrievalMrr _),
-    "q233_label_noise" -> (q233LabelNoise _),
-    "q223_centroid_separation" -> (q223CentroidSeparation _),
-    "q170_context_assembly" -> (q170ContextAssembly _),
-    "q107_semantic_dedup" -> (q107SemanticDedup _),
-    "q101_centroid_eval" -> (q101CentroidEval _),
-    "q120_hybrid_rrf" -> (q120HybridRrf _),
-    "q129_ann_truncated" -> (q129AnnTruncated _),
-    "q131_negative_sampling" -> (q131NegativeSampling _))
 
-
-  val oracles: Map[String, String] = Map(
-    "q315_retrieval_map" ->
-      s"""WITH $QselCte,
-        |ex AS (
-        |  SELECT vec_id, label, i AS pos,
-        |         CAST(round(CAST(embedding[i] AS DOUBLE) * 1000000, 0)
-        |              AS BIGINT) AS vm
-        |  FROM (SELECT vec_id, label, embedding,
-        |               unnest(generate_series(1, len(embedding))) AS i
-        |        FROM embeddings)),
-        |n2 AS (SELECT vec_id, CAST(sum(vm * vm) AS BIGINT) AS nn
-        |       FROM ex GROUP BY 1),
-        |labels AS (SELECT DISTINCT vec_id, label FROM ex),
-        |dots AS (
-        |  SELECT q.vec_id AS qid, c.vec_id AS cid,
-        |         CAST(sum(qe.vm * ce.vm) AS BIGINT) AS dot
-        |  FROM labels q JOIN labels c
-        |    ON q.vec_id IN (SELECT vec_id FROM qsel)
-        |   AND c.vec_id <> q.vec_id
-        |  JOIN ex qe ON qe.vec_id = q.vec_id
-        |  JOIN ex ce ON ce.vec_id = c.vec_id AND ce.pos = qe.pos
-        |  GROUP BY 1, 2),
-        |ranked AS (
-        |  SELECT d.qid, d.cid,
-        |         row_number() OVER (PARTITION BY d.qid
-        |           ORDER BY CAST(d.dot AS DOUBLE)
-        |             / sqrt(CAST(n.nn AS DOUBLE)) DESC, d.cid) AS rn
-        |  FROM dots d JOIN n2 n ON n.vec_id = d.cid),
-        |top AS (SELECT qid, cid, rn FROM ranked WHERE rn <= 10),
-        |hits AS (
-        |  SELECT t.qid, ql.label AS qlabel, t.rn,
-        |         CAST(count(*) OVER (PARTITION BY t.qid ORDER BY t.rn)
-        |           AS BIGINT) AS cumhits
-        |  FROM top t
-        |  JOIN labels cl ON cl.vec_id = t.cid
-        |  JOIN labels ql ON ql.vec_id = t.qid
-        |  WHERE cl.label = ql.label),
-        |perq AS (
-        |  SELECT qid, qlabel,
-        |         CAST(sum(CAST(round(cumhits * 1e6 / rn, 0) AS BIGINT))
-        |           AS BIGINT) AS s_mu,
-        |         CAST(count(*) AS BIGINT) AS n_hits
-        |  FROM hits GROUP BY 1, 2),
-        |lc AS (SELECT label AS qlabel, CAST(count(*) AS BIGINT) AS n_label
-        |       FROM labels GROUP BY 1),
-        |ap AS (
-        |  SELECT q.label AS qlabel,
-        |         COALESCE(CAST(round(CAST(p.s_mu AS DOUBLE)
-        |             / least(l.n_label - 1, 10), 0) AS BIGINT), 0)
-        |           AS ap_mu,
-        |         COALESCE(p.n_hits, 0) AS n_hits
-        |  FROM labels q
-        |  JOIN lc l ON l.qlabel = q.label
-        |  LEFT JOIN perq p ON p.qid = q.vec_id
-        |  WHERE q.vec_id IN (SELECT vec_id FROM qsel))
-        |SELECT qlabel AS label, CAST(count(*) AS BIGINT) AS n_queries,
-        |       round(CAST(sum(ap_mu) AS DOUBLE) / count(*) / 1e6, 6)
-        |         AS map10,
-        |       round(CAST(sum(n_hits) AS DOUBLE) / count(*), 4)
-        |         AS mean_hits_at_10
-        |FROM ap GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q263_retrieval_ndcg" -> {
+  val defs: Seq[QueryDef] = Seq(
+    QueryDef("q263_retrieval_ndcg", q263RetrievalNdcg _,
+      {
       val discList = s"[${NdcgDisc6.mkString(", ")}]"
       val idealList = s"[${NdcgIdeal6.mkString(", ")}]"
       s"""WITH $QselCte,
@@ -857,8 +785,8 @@ object AnnRetrieval {
         |       CAST(count(*) FILTER (WHERE dcg_micro > 0) AS BIGINT)
         |         AS n_with_hits
         |FROM scoredq GROUP BY 1 ORDER BY label""".stripMargin
-    },
-    "q265_mcnemar_picks" ->
+    }),
+    QueryDef("q265_mcnemar_picks", q265McnemarPicks _,
       """WITH ex AS (
         |  SELECT vec_id, label, i AS pos,
         |         CAST(round(CAST(embedding[i] AS DOUBLE) * 1000000, 0)
@@ -915,8 +843,68 @@ object AnnRetrieval {
         |                    (abs(n_cos_only - n_dot_only) - 1) AS DOUBLE) /
         |               CAST(n_cos_only + n_dot_only AS DOUBLE), 6)
         |       END AS mcnemar_chi2
-        |FROM cells""".stripMargin,
-    "q255_retrieval_mrr" ->
+        |FROM cells""".stripMargin),
+    QueryDef("q315_retrieval_map", q315RetrievalMap _,
+      s"""WITH $QselCte,
+        |ex AS (
+        |  SELECT vec_id, label, i AS pos,
+        |         CAST(round(CAST(embedding[i] AS DOUBLE) * 1000000, 0)
+        |              AS BIGINT) AS vm
+        |  FROM (SELECT vec_id, label, embedding,
+        |               unnest(generate_series(1, len(embedding))) AS i
+        |        FROM embeddings)),
+        |n2 AS (SELECT vec_id, CAST(sum(vm * vm) AS BIGINT) AS nn
+        |       FROM ex GROUP BY 1),
+        |labels AS (SELECT DISTINCT vec_id, label FROM ex),
+        |dots AS (
+        |  SELECT q.vec_id AS qid, c.vec_id AS cid,
+        |         CAST(sum(qe.vm * ce.vm) AS BIGINT) AS dot
+        |  FROM labels q JOIN labels c
+        |    ON q.vec_id IN (SELECT vec_id FROM qsel)
+        |   AND c.vec_id <> q.vec_id
+        |  JOIN ex qe ON qe.vec_id = q.vec_id
+        |  JOIN ex ce ON ce.vec_id = c.vec_id AND ce.pos = qe.pos
+        |  GROUP BY 1, 2),
+        |ranked AS (
+        |  SELECT d.qid, d.cid,
+        |         row_number() OVER (PARTITION BY d.qid
+        |           ORDER BY CAST(d.dot AS DOUBLE)
+        |             / sqrt(CAST(n.nn AS DOUBLE)) DESC, d.cid) AS rn
+        |  FROM dots d JOIN n2 n ON n.vec_id = d.cid),
+        |top AS (SELECT qid, cid, rn FROM ranked WHERE rn <= 10),
+        |hits AS (
+        |  SELECT t.qid, ql.label AS qlabel, t.rn,
+        |         CAST(count(*) OVER (PARTITION BY t.qid ORDER BY t.rn)
+        |           AS BIGINT) AS cumhits
+        |  FROM top t
+        |  JOIN labels cl ON cl.vec_id = t.cid
+        |  JOIN labels ql ON ql.vec_id = t.qid
+        |  WHERE cl.label = ql.label),
+        |perq AS (
+        |  SELECT qid, qlabel,
+        |         CAST(sum(CAST(round(cumhits * 1e6 / rn, 0) AS BIGINT))
+        |           AS BIGINT) AS s_mu,
+        |         CAST(count(*) AS BIGINT) AS n_hits
+        |  FROM hits GROUP BY 1, 2),
+        |lc AS (SELECT label AS qlabel, CAST(count(*) AS BIGINT) AS n_label
+        |       FROM labels GROUP BY 1),
+        |ap AS (
+        |  SELECT q.label AS qlabel,
+        |         COALESCE(CAST(round(CAST(p.s_mu AS DOUBLE)
+        |             / least(l.n_label - 1, 10), 0) AS BIGINT), 0)
+        |           AS ap_mu,
+        |         COALESCE(p.n_hits, 0) AS n_hits
+        |  FROM labels q
+        |  JOIN lc l ON l.qlabel = q.label
+        |  LEFT JOIN perq p ON p.qid = q.vec_id
+        |  WHERE q.vec_id IN (SELECT vec_id FROM qsel))
+        |SELECT qlabel AS label, CAST(count(*) AS BIGINT) AS n_queries,
+        |       round(CAST(sum(ap_mu) AS DOUBLE) / count(*) / 1e6, 6)
+        |         AS map10,
+        |       round(CAST(sum(n_hits) AS DOUBLE) / count(*), 4)
+        |         AS mean_hits_at_10
+        |FROM ap GROUP BY 1 ORDER BY 1""".stripMargin),
+    QueryDef("q255_retrieval_mrr", q255RetrievalMrr _,
       s"""WITH $QselCte,
         |ex AS (
         |  SELECT vec_id, label, i AS pos,
@@ -964,8 +952,8 @@ object AnnRetrieval {
         |         AS hits_at_1,
         |       CAST(count(*) FILTER (WHERE first_rank <= 10) AS BIGINT)
         |         AS hits_at_10
-        |FROM per_q GROUP BY 1 ORDER BY label""".stripMargin,
-    "q233_label_noise" ->
+        |FROM per_q GROUP BY 1 ORDER BY label""".stripMargin),
+    QueryDef("q233_label_noise", q233LabelNoise _,
       """WITH ex AS (
         |  SELECT vec_id, label, i AS pos,
         |         CAST(round(CAST(embedding[i] AS DOUBLE) * 1000000, 0)
@@ -1006,8 +994,8 @@ object AnnRetrieval {
         |       round(CAST(n_vecs AS DOUBLE) /
         |             CAST(sum(n_vecs) OVER (PARTITION BY label) AS DOUBLE), 6)
         |         AS share
-        |FROM cells ORDER BY label, pred_label""".stripMargin,
-    "q223_centroid_separation" ->
+        |FROM cells ORDER BY label, pred_label""".stripMargin),
+    QueryDef("q223_centroid_separation", q223CentroidSeparation _,
       """WITH ex AS (
         |  SELECT label, i AS pos,
         |         CAST(round(CAST(embedding[i] AS DOUBLE) * 1000000, 0)
@@ -1040,8 +1028,8 @@ object AnnRetrieval {
         |       round(CAST(dot AS DOUBLE) /
         |             (sqrt(CAST(na2 AS DOUBLE)) * sqrt(CAST(nb2 AS DOUBLE))),
         |             6) AS cos_sim
-        |FROM agg ORDER BY label_a, label_b""".stripMargin,
-    "q170_context_assembly" ->
+        |FROM agg ORDER BY label_a, label_b""".stripMargin),
+    QueryDef("q170_context_assembly", q170ContextAssembly _,
       s"""WITH ${Similarity.QselCte},
          |ex AS (
          |  SELECT vec_id, CAST(unnest(embedding) AS DOUBLE) AS x,
@@ -1090,12 +1078,12 @@ object AnnRetrieval {
          |         chunk_md5
          |  FROM deduped)
          |SELECT * FROM packed WHERE cum_tokens <= $CtxTokenBudget
-         |ORDER BY qid, rank, chunk_ix""".stripMargin,
-    "q107_semantic_dedup" ->
+         |ORDER BY qid, rank, chunk_ix""".stripMargin),
+    QueryDef("q107_semantic_dedup", q107SemanticDedup _,
       """SELECT count(*) AS n_vectors, TRUE AS drops_witnessed,
         |       TRUE AS subset_recall_ok
-        |FROM embeddings""".stripMargin,
-    "q101_centroid_eval" ->
+        |FROM embeddings""".stripMargin),
+    QueryDef("q101_centroid_eval", q101CentroidEval _,
       """WITH ex AS (
         |  SELECT label, vec_id, CAST(unnest(embedding) AS DOUBLE) AS v,
         |         generate_subscripts(embedding, 1) AS pos
@@ -1108,11 +1096,11 @@ object AnnRetrieval {
         |  GROUP BY 1, 2)
         |SELECT label, count(*) AS n_vecs,
         |       round(avg(dot / (nv * nc)), 4) AS avg_cosine_to_centroid
-        |FROM dots GROUP BY 1 ORDER BY 1""".stripMargin,
+        |FROM dots GROUP BY 1 ORDER BY 1""".stripMargin),
     // lexical arm = q96's oracle CTEs verbatim; dense arm = q36's
     // unnest/norm/dot CTEs specialized to query vector 0; RRF in
     // explicit DOUBLE so DuckDB's DECIMAL literals can't diverge
-    "q120_hybrid_rrf" ->
+    QueryDef("q120_hybrid_rrf", q120HybridRrf _,
       s"""WITH tokens AS (
         |  SELECT doc_id, unnest(string_split(trim(text), ' ')) AS word
         |  FROM documents),
@@ -1173,15 +1161,15 @@ object AnnRetrieval {
         |         AS rank,
         |       doc_id, rrf, lex_rank, vec_rank
         |FROM (SELECT * FROM fused ORDER BY rrf DESC, doc_id LIMIT 10)
-        |ORDER BY rank""".stripMargin,
-    "q129_ann_truncated" ->
+        |ORDER BY rank""".stripMargin),
+    QueryDef("q129_ann_truncated", q129AnnTruncated _,
       s"""WITH $QselCte
         |SELECT count(*) AS n_queries, TRUE AS avg_recall_ok
-        |FROM qsel""".stripMargin,
+        |FROM qsel""".stripMargin),
     // q36's exact-ranking CTEs provide the positive + the top-10
     // exclusion set; the negative draw is the same portable md5
     // priority race both engines compute bit-identically
-    "q131_negative_sampling" ->
+    QueryDef("q131_negative_sampling", q131NegativeSampling _,
       s"""WITH $QselCte,
         |ex AS (
         |  SELECT vec_id, CAST(unnest(embedding) AS DOUBLE) AS x,
@@ -1225,5 +1213,5 @@ object AnnRetrieval {
         |  FROM cand)
         |SELECT n.qid, p.pos_id, n.neg_rank, n.cid AS neg_id
         |FROM negs n JOIN pos p USING (qid)
-        |WHERE n.neg_rank <= $NegK ORDER BY qid, neg_rank""".stripMargin)
+        |WHERE n.neg_rank <= $NegK ORDER BY qid, neg_rank""".stripMargin))
 }

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.QueryDef
 import graft.sources.Tables
 
 /** [EXT] table-audit operators: changelog merge-apply (q172, the batch
@@ -474,17 +475,6 @@ object Audit {
       .orderBy("table_name")
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q337_freshness_matrix" -> (q337FreshnessMatrix _),
-    "q328_salt_advisor" -> (q328SaltAdvisor _),
-    "q290_selectivity_calibration" -> (q290SelectivityCalibration _),
-    "q257_card_calibration" -> (q257CardCalibration _),
-    "q239_fd_audit" -> (q239FdAudit _),
-    "q171_replica_audit" -> (q171ReplicaAudit _),
-    "q172_cdc_merge" -> (q172CdcMerge _),
-    "q181_integrity_audit" -> (q181IntegrityAudit _),
-    "q199_partition_manifest" -> (q199PartitionManifest _))
-
   private def fdAuditSql: String = {
     val arms = FdCandidates.map { case (rel, lhs, rhs) =>
       s"""SELECT '$rel' AS rel, '$lhs' AS lhs, '$rhs' AS rhs,
@@ -544,8 +534,8 @@ object Audit {
     s"WITH $ctes\nSELECT * FROM ($arms)\nORDER BY join_pair, key"
   }
 
-  val oracles: Map[String, String] = Map(
-    "q337_freshness_matrix" ->
+  val defs: Seq[QueryDef] = Seq(
+    QueryDef("q337_freshness_matrix", q337FreshnessMatrix _,
       """WITH rows_ AS (
         |  SELECT 'lineitem' AS table_name,
         |         CAST(count(*) AS BIGINT) AS n_rows,
@@ -575,8 +565,8 @@ object Audit {
         |SELECT table_name, n_rows, latest,
         |       CAST(date_diff('day', latest, (SELECT f FROM freshest))
         |         AS INTEGER) AS days_stale
-        |FROM rows_ ORDER BY table_name""".stripMargin,
-    "q328_salt_advisor" ->
+        |FROM rows_ ORDER BY table_name""".stripMargin),
+    QueryDef("q328_salt_advisor", q328SaltAdvisor _,
       s"""WITH melted AS (
         |  SELECT 'l_orderkey' AS key_name, l_orderkey AS key_value
         |  FROM lineitem
@@ -596,8 +586,8 @@ object Audit {
         |       round(CAST(max_n AS DOUBLE) / rows, 8) AS top_key_share,
         |       (max_n * $SaltParallelism + rows - 1) // rows
         |         AS salt_factor
-        |FROM agg ORDER BY key_name""".stripMargin,
-    "q290_selectivity_calibration" ->
+        |FROM agg ORDER BY key_name""".stripMargin),
+    QueryDef("q290_selectivity_calibration", q290SelectivityCalibration _,
       """WITH cents AS (
         |  SELECT CAST(round(l_extendedprice * 100, 0) AS BIGINT) AS c
         |  FROM lineitem),
@@ -628,53 +618,11 @@ object Audit {
         |                      THEN (j - 1 + (m - lo) / (hi - lo)) / 10.0
         |                      ELSE (CAST(j AS DOUBLE) - 0.5) / 10.0 END
         |                 - CAST(n_le AS DOUBLE) / n), 8) AS abs_err
-        |FROM actual ORDER BY bucket""".stripMargin,
-    "q257_card_calibration" -> cardCalibrationSql,
-    "q239_fd_audit" -> fdAuditSql,
-    "q199_partition_manifest" ->
-      """WITH rows_ AS (
-        |  SELECT CAST(CAST(ts AS TIMESTAMP) AS DATE) AS d,
-        |         CAST(round(value * 100, 0) AS BIGINT) AS cents,
-        |         ('0x' || substr(md5(concat_ws('|', event_id,
-        |            epoch_us(CAST(ts AS TIMESTAMP)), user_id, event_type,
-        |            CAST(round(value * 100, 0) AS BIGINT))), 1, 15))::BIGINT
-        |           AS h
-        |  FROM events)
-        |SELECT d, count(*) AS n_rows,
-        |       CAST(sum(cents) AS BIGINT) AS cents_sum,
-        |       bit_xor(h) AS fingerprint
-        |FROM rows_ GROUP BY d ORDER BY d""".stripMargin,
-    "q181_integrity_audit" ->
-      s"""WITH ord AS (
-        |  SELECT * FROM orders WHERE o_orderkey % $OrphanMod <> 0),
-        |checks AS (
-        |  SELECT 'customer_nation_fk' AS constraint_name,
-        |         (SELECT count(*) FROM customer c
-        |          WHERE NOT EXISTS (SELECT 1 FROM nation n
-        |                            WHERE n.n_nationkey = c.c_nationkey))
-        |           AS violations,
-        |         (SELECT count(*) FROM customer) AS n_checked
-        |  UNION ALL
-        |  SELECT 'lineitem_orders_fk',
-        |         (SELECT count(*) FROM lineitem l
-        |          WHERE NOT EXISTS (SELECT 1 FROM ord o
-        |                            WHERE o.o_orderkey = l.l_orderkey)),
-        |         (SELECT count(*) FROM lineitem)
-        |  UNION ALL
-        |  SELECT 'lineitem_part_fk',
-        |         (SELECT count(*) FROM lineitem l
-        |          WHERE NOT EXISTS (SELECT 1 FROM part p
-        |                            WHERE p.p_partkey = l.l_partkey)),
-        |         (SELECT count(*) FROM lineitem)
-        |  UNION ALL
-        |  SELECT 'orders_customer_fk',
-        |         (SELECT count(*) FROM ord o
-        |          WHERE NOT EXISTS (SELECT 1 FROM customer c
-        |                            WHERE c.c_custkey = o.o_custkey)),
-        |         (SELECT count(*) FROM ord))
-        |SELECT constraint_name, violations, n_checked FROM checks
-        |ORDER BY constraint_name""".stripMargin,
-    "q171_replica_audit" ->
+        |FROM actual ORDER BY bucket""".stripMargin),
+    QueryDef("q257_card_calibration", q257CardCalibration _,
+      cardCalibrationSql),
+    QueryDef("q239_fd_audit", q239FdAudit _, fdAuditSql),
+    QueryDef("q171_replica_audit", q171ReplicaAudit _,
       s"""WITH base AS (
         |  SELECT CAST(unnest(range(0, $BaseUsers)) AS BIGINT) AS user_id,
         |         CAST($BaseCents AS BIGINT) AS base_cents),
@@ -712,8 +660,8 @@ object Audit {
         |SELECT status, count(*) AS n_keys,
         |       CAST(sum(k) AS BIGINT) AS key_checksum,
         |       min(k) AS min_key, max(k) AS max_key
-        |FROM classified GROUP BY status ORDER BY status""".stripMargin,
-    "q172_cdc_merge" ->
+        |FROM classified GROUP BY status ORDER BY status""".stripMargin),
+    QueryDef("q172_cdc_merge", q172CdcMerge _,
       s"""WITH base AS (
         |  SELECT CAST(unnest(range(0, $BaseUsers)) AS BIGINT) AS user_id,
         |         CAST($BaseCents AS BIGINT) AS base_cents),
@@ -732,5 +680,48 @@ object Audit {
         |       CASE WHEN op = 'U' THEN 'changelog' ELSE 'base' END AS src
         |FROM base FULL OUTER JOIN latest ON base.user_id = latest.user_id
         |WHERE op IS NULL OR op <> 'D'
-        |ORDER BY user_id""".stripMargin)
+        |ORDER BY user_id""".stripMargin),
+    QueryDef("q181_integrity_audit", q181IntegrityAudit _,
+      s"""WITH ord AS (
+        |  SELECT * FROM orders WHERE o_orderkey % $OrphanMod <> 0),
+        |checks AS (
+        |  SELECT 'customer_nation_fk' AS constraint_name,
+        |         (SELECT count(*) FROM customer c
+        |          WHERE NOT EXISTS (SELECT 1 FROM nation n
+        |                            WHERE n.n_nationkey = c.c_nationkey))
+        |           AS violations,
+        |         (SELECT count(*) FROM customer) AS n_checked
+        |  UNION ALL
+        |  SELECT 'lineitem_orders_fk',
+        |         (SELECT count(*) FROM lineitem l
+        |          WHERE NOT EXISTS (SELECT 1 FROM ord o
+        |                            WHERE o.o_orderkey = l.l_orderkey)),
+        |         (SELECT count(*) FROM lineitem)
+        |  UNION ALL
+        |  SELECT 'lineitem_part_fk',
+        |         (SELECT count(*) FROM lineitem l
+        |          WHERE NOT EXISTS (SELECT 1 FROM part p
+        |                            WHERE p.p_partkey = l.l_partkey)),
+        |         (SELECT count(*) FROM lineitem)
+        |  UNION ALL
+        |  SELECT 'orders_customer_fk',
+        |         (SELECT count(*) FROM ord o
+        |          WHERE NOT EXISTS (SELECT 1 FROM customer c
+        |                            WHERE c.c_custkey = o.o_custkey)),
+        |         (SELECT count(*) FROM ord))
+        |SELECT constraint_name, violations, n_checked FROM checks
+        |ORDER BY constraint_name""".stripMargin),
+    QueryDef("q199_partition_manifest", q199PartitionManifest _,
+      """WITH rows_ AS (
+        |  SELECT CAST(CAST(ts AS TIMESTAMP) AS DATE) AS d,
+        |         CAST(round(value * 100, 0) AS BIGINT) AS cents,
+        |         ('0x' || substr(md5(concat_ws('|', event_id,
+        |            epoch_us(CAST(ts AS TIMESTAMP)), user_id, event_type,
+        |            CAST(round(value * 100, 0) AS BIGINT))), 1, 15))::BIGINT
+        |           AS h
+        |  FROM events)
+        |SELECT d, count(*) AS n_rows,
+        |       CAST(sum(cents) AS BIGINT) AS cents_sum,
+        |       bit_xor(h) AS fingerprint
+        |FROM rows_ GROUP BY d ORDER BY d""".stripMargin))
 }

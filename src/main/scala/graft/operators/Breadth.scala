@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.QueryDef
 import graft.sources.Tables
 
 /** [EXT] relational operator breadth (SURVEY.md §2 J5/A6/A7/T2/F8, §2.5,
@@ -338,45 +339,13 @@ object Breadth {
         col("props_map").getItem("k").as("k_value"))
       .orderBy("event_id")
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q49_approx_distinct" -> (q49ApproxDistinct _),
-    "q50_stats_agg" -> (q50StatsAgg _),
-    "q51_map_funcs" -> (q51MapFuncs _),
-    "q13_semi_join" -> (q13SemiJoin _),
-    "q14_anti_join" -> (q14AntiJoin _),
-    "q15_full_outer_join" -> (q15FullOuterJoin _),
-    "q16_cross_join" -> (q16CrossJoin _),
-    "q17_rollup" -> (q17Rollup _),
-    "q18_cube" -> (q18Cube _),
-    "q19_grouping_sets" -> (q19GroupingSets _),
-    "q20_window_rank" -> (q20WindowRank _),
-    "q21_window_analytic" -> (q21WindowAnalytic _),
-    "q22_set_ops" -> (q22SetOps _),
-    "q23_distinct_agg" -> (q23DistinctAgg _),
-    "q24_scalar_string" -> (q24ScalarString _),
-    "q25_json" -> (q25Json _),
-    "q108_variant_shred" -> (q108VariantShred _),
-    "q26_array_funcs" -> (q26ArrayFuncs _),
-    "q27_date_funcs" -> (q27DateFuncs _),
-    "q28_topk" -> (q28TopK _),
-    "q29_range_join" -> (q29RangeJoin _),
-    "q30_asof_join" -> (q30AsofJoin _))
-
-  val oracles: Map[String, String] = Map(
-    "q49_approx_distinct" ->
+  val defs: Seq[QueryDef] = Seq(
+    QueryDef("q49_approx_distinct", q49ApproxDistinct _,
       """SELECT event_type,
         |       count(DISTINCT user_id) AS exact_users,
         |       TRUE AS approx_within_15pct
-        |FROM events GROUP BY 1 ORDER BY 1""".stripMargin,
-    // json_keys (not hardcoded 'k'/1) so map_keys/size semantics are
-    // actually differential-tested on multi-key props (ADVICE.md r01)
-    "q51_map_funcs" ->
-      """SELECT event_id,
-        |       json_keys(props)[1] AS first_key,
-        |       CAST(len(json_keys(props)) AS INT) AS n_keys,
-        |       CAST(json_extract_string(props, '$.k') AS INT) AS k_value
-        |FROM events ORDER BY event_id""".stripMargin,
-    "q50_stats_agg" ->
+        |FROM events GROUP BY 1 ORDER BY 1""".stripMargin),
+    QueryDef("q50_stats_agg", q50StatsAgg _,
       """SELECT l_returnflag AS returnflag,
         |       round(avg(l_extendedprice), 4) AS avg_price,
         |       round(stddev_samp(l_extendedprice), 4) AS stddev_price,
@@ -384,21 +353,29 @@ object Breadth {
         |       min(l_extendedprice) AS min_price,
         |       max(l_extendedprice) AS max_price
         |FROM lineitem
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q13_semi_join" ->
+        |GROUP BY 1 ORDER BY 1""".stripMargin),
+    // json_keys (not hardcoded 'k'/1) so map_keys/size semantics are
+    // actually differential-tested on multi-key props (ADVICE.md r01)
+    QueryDef("q51_map_funcs", q51MapFuncs _,
+      """SELECT event_id,
+        |       json_keys(props)[1] AS first_key,
+        |       CAST(len(json_keys(props)) AS INT) AS n_keys,
+        |       CAST(json_extract_string(props, '$.k') AS INT) AS k_value
+        |FROM events ORDER BY event_id""".stripMargin),
+    QueryDef("q13_semi_join", q13SemiJoin _,
       """SELECT c_mktsegment AS mktsegment, count(*) AS n_customers
         |FROM customer c
         |WHERE EXISTS (SELECT 1 FROM orders o
         |              WHERE o.o_custkey = c.c_custkey AND o.o_totalprice > 300000)
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q14_anti_join" ->
+        |GROUP BY 1 ORDER BY 1""".stripMargin),
+    QueryDef("q14_anti_join", q14AntiJoin _,
       """SELECT c_mktsegment AS mktsegment, count(*) AS n_customers
         |FROM customer c
         |WHERE NOT EXISTS (SELECT 1 FROM orders o
         |                  WHERE o.o_custkey = c.c_custkey
         |                    AND year(o.o_orderdate) = 1996)
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q15_full_outer_join" ->
+        |GROUP BY 1 ORDER BY 1""".stripMargin),
+    QueryDef("q15_full_outer_join", q15FullOuterJoin _,
       """WITH a AS (SELECT o_custkey AS ck, count(*) AS cnt FROM orders
         |           WHERE year(o_orderdate) = 1996 GROUP BY 1),
         |     b AS (SELECT o_custkey AS ck, count(*) AS cnt FROM orders
@@ -407,13 +384,13 @@ object Breadth {
         |       coalesce(a.cnt, 0) AS orders_1996,
         |       coalesce(b.cnt, 0) AS orders_1997
         |FROM a FULL OUTER JOIN b ON a.ck = b.ck
-        |ORDER BY custkey""".stripMargin,
-    "q16_cross_join" ->
+        |ORDER BY custkey""".stripMargin),
+    QueryDef("q16_cross_join", q16CrossJoin _,
       """SELECT r_name AS region, returnflag
         |FROM region
         |CROSS JOIN (SELECT DISTINCT l_returnflag AS returnflag FROM lineitem)
-        |ORDER BY region, returnflag""".stripMargin,
-    "q17_rollup" ->
+        |ORDER BY region, returnflag""".stripMargin),
+    QueryDef("q17_rollup", q17Rollup _,
       """SELECT coalesce(CAST(year(o_orderdate) AS INT), -1) AS sale_year,
         |       coalesce(CAST(quarter(o_orderdate) AS INT), -1) AS sale_quarter,
         |       round(sum(o_totalprice), 2) AS total_price,
@@ -422,23 +399,23 @@ object Breadth {
         |       CAST(grouping(quarter(o_orderdate)) AS INT) AS g_quarter
         |FROM orders
         |GROUP BY ROLLUP (year(o_orderdate), quarter(o_orderdate))
-        |ORDER BY sale_year, sale_quarter""".stripMargin,
-    "q18_cube" ->
+        |ORDER BY sale_year, sale_quarter""".stripMargin),
+    QueryDef("q18_cube", q18Cube _,
       """SELECT coalesce(l_returnflag, 'ALL') AS returnflag,
         |       coalesce(l_linestatus, 'ALL') AS linestatus,
         |       count(*) AS n_rows,
         |       round(sum(l_quantity), 2) AS total_qty
         |FROM lineitem
         |GROUP BY CUBE (l_returnflag, l_linestatus)
-        |ORDER BY returnflag, linestatus""".stripMargin,
-    "q19_grouping_sets" ->
+        |ORDER BY returnflag, linestatus""".stripMargin),
+    QueryDef("q19_grouping_sets", q19GroupingSets _,
       """SELECT coalesce(CAST(year(o_orderdate) AS INT), -1) AS sale_year,
         |       coalesce(CAST(quarter(o_orderdate) AS INT), -1) AS sale_quarter,
         |       round(sum(o_totalprice), 2) AS total_price
         |FROM orders
         |GROUP BY GROUPING SETS ((year(o_orderdate)), (quarter(o_orderdate)), ())
-        |ORDER BY sale_year, sale_quarter""".stripMargin,
-    "q20_window_rank" ->
+        |ORDER BY sale_year, sale_quarter""".stripMargin),
+    QueryDef("q20_window_rank", q20WindowRank _,
       """WITH rev AS (
         |  SELECT p_brand AS brand, p_partkey AS partkey,
         |         round(sum(l_extendedprice), 2) AS revenue
@@ -451,8 +428,8 @@ object Breadth {
         |         CAST(dense_rank() OVER w AS INT) AS drnk
         |  FROM rev
         |  WINDOW w AS (PARTITION BY brand ORDER BY revenue DESC, partkey ASC))
-        |SELECT * FROM ranked WHERE rn <= 3 ORDER BY brand, rn""".stripMargin,
-    "q21_window_analytic" ->
+        |SELECT * FROM ranked WHERE rn <= 3 ORDER BY brand, rn""".stripMargin),
+    QueryDef("q21_window_analytic", q21WindowAnalytic _,
       """WITH monthly AS (
         |  SELECT CAST(date_trunc('month', o_orderdate) AS DATE) AS month,
         |         round(sum(o_totalprice), 2) AS revenue
@@ -467,15 +444,15 @@ object Breadth {
         |         ROWS BETWEEN 2 PRECEDING AND CURRENT ROW), 2) AS moving_avg3
         |FROM monthly
         |WINDOW w AS (ORDER BY month)
-        |ORDER BY month""".stripMargin,
-    "q22_set_ops" ->
+        |ORDER BY month""".stripMargin),
+    QueryDef("q22_set_ops", q22SetOps _,
       """WITH a AS (SELECT DISTINCT o_custkey FROM orders WHERE year(o_orderdate) = 1996),
         |     b AS (SELECT DISTINCT o_custkey FROM orders WHERE year(o_orderdate) = 1997)
         |SELECT
         |  (SELECT count(*) FROM (SELECT * FROM a INTERSECT SELECT * FROM b)) AS n_intersect,
         |  (SELECT count(*) FROM (SELECT * FROM a EXCEPT SELECT * FROM b)) AS n_except,
-        |  (SELECT count(*) FROM (SELECT * FROM a UNION SELECT * FROM b)) AS n_union""".stripMargin,
-    "q23_distinct_agg" ->
+        |  (SELECT count(*) FROM (SELECT * FROM a UNION SELECT * FROM b)) AS n_union""".stripMargin),
+    QueryDef("q23_distinct_agg", q23DistinctAgg _,
       """SELECT n_name AS nation,
         |       coalesce(s.cnt, 0) AS n_suppliers,
         |       coalesce(c.cnt, 0) AS n_customers
@@ -484,50 +461,50 @@ object Breadth {
         |           FROM supplier GROUP BY 1) s ON s_nationkey = n_nationkey
         |LEFT JOIN (SELECT c_nationkey, count(DISTINCT c_custkey) AS cnt
         |           FROM customer GROUP BY 1) c ON c_nationkey = n_nationkey
-        |ORDER BY nation""".stripMargin,
-    "q24_scalar_string" ->
+        |ORDER BY nation""".stripMargin),
+    QueryDef("q24_scalar_string", q24ScalarString _,
       """SELECT doc_id,
         |       length(text) AS text_len,
         |       substring(text, 1, 10) AS prefix10,
         |       regexp_extract(text, '^([a-z]+)', 1) AS first_word,
         |       upper(source) AS source_upper,
         |       lang || ':' || source AS lang_source
-        |FROM documents ORDER BY doc_id""".stripMargin,
-    "q25_json" ->
+        |FROM documents ORDER BY doc_id""".stripMargin),
+    QueryDef("q25_json", q25Json _,
       """SELECT event_type,
         |       count(*) AS n_events,
         |       round(avg(CAST(json_extract_string(props, '$.k') AS INT)), 6) AS avg_k,
         |       max(CAST(json_extract_string(props, '$.k') AS INT)) AS max_k
         |FROM events
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q108_variant_shred" ->
+        |GROUP BY 1 ORDER BY 1""".stripMargin),
+    QueryDef("q108_variant_shred", q108VariantShred _,
       """SELECT event_id,
         |       CAST(json_extract_string(props, '$.k') AS INT) AS k_int,
         |       json_extract_string(props, '$.k') AS k_str,
         |       json_extract_string(props, '$.absent') AS absent_str,
         |       json_extract(props, '$.k') = 'null' AS k_is_json_null
-        |FROM events ORDER BY event_id""".stripMargin,
-    "q26_array_funcs" ->
+        |FROM events ORDER BY event_id""".stripMargin),
+    QueryDef("q26_array_funcs", q26ArrayFuncs _,
       """SELECT vec_id,
         |       CAST(len(embedding) AS INT) AS dim,
         |       round(CAST(embedding[1] AS DOUBLE), 6) AS first_elem,
         |       round(list_sum(list_transform(embedding, x -> CAST(x AS DOUBLE))), 6)
         |         AS vec_sum
-        |FROM embeddings ORDER BY vec_id""".stripMargin,
-    "q27_date_funcs" ->
+        |FROM embeddings ORDER BY vec_id""".stripMargin),
+    QueryDef("q27_date_funcs", q27DateFuncs _,
       """SELECT CAST(year(o_orderdate) AS INT) AS sale_year,
         |       CAST(month(o_orderdate) AS INT) AS sale_month,
         |       count(*) AS n_orders,
         |       CAST(min(day(o_orderdate)) AS INT) AS min_day,
         |       CAST(max(day(o_orderdate)) AS INT) AS max_day
         |FROM orders
-        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-    "q28_topk" ->
+        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin),
+    QueryDef("q28_topk", q28TopK _,
       """SELECT l_orderkey, l_linenumber, l_extendedprice
         |FROM lineitem
         |ORDER BY l_extendedprice DESC, l_orderkey ASC, l_linenumber ASC
-        |LIMIT 20""".stripMargin,
-    "q29_range_join" ->
+        |LIMIT 20""".stripMargin),
+    QueryDef("q29_range_join", q29RangeJoin _,
       """SELECT l_returnflag AS returnflag,
         |       count(*) AS n_rows,
         |       round(avg(delay_days), 6) AS avg_delay
@@ -536,8 +513,8 @@ object Breadth {
         |                       CAST(l_shipdate AS DATE)) AS delay_days
         |      FROM lineitem JOIN orders ON l_orderkey = o_orderkey)
         |WHERE delay_days >= 0 AND delay_days <= 30
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q30_asof_join" ->
+        |GROUP BY 1 ORDER BY 1""".stripMargin),
+    QueryDef("q30_asof_join", q30AsofJoin _,
       """WITH p AS (SELECT user_id, event_id, CAST(ts AS TIMESTAMP) AS ts
         |           FROM events WHERE event_type = 'purchase'),
         |     s AS (SELECT user_id, CAST(ts AS TIMESTAMP) AS ts
@@ -547,5 +524,5 @@ object Breadth {
         |       count(s.ts) AS n_with_prior_signup
         |FROM p ASOF LEFT JOIN s
         |  ON p.user_id = s.user_id AND s.ts <= p.ts
-        |GROUP BY 1 ORDER BY 1""".stripMargin)
+        |GROUP BY 1 ORDER BY 1""".stripMargin))
 }

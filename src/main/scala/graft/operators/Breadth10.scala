@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.QueryDef
 import graft.sources.Tables
 
 /** [EXT] round-12 breadth: Dirichlet-smoothed query-likelihood
@@ -495,18 +496,93 @@ object Breadth10 {
       .orderBy("join_name")
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q381_sample_cardinality" -> (q381SampleCardinality _),
-    "q380_quantile_trajectory" -> (q380QuantileTrajectory _),
-    "q374_query_likelihood" -> (q374QueryLikelihood _),
-    "q375_ddsketch_quantiles" -> (q375DdsketchQuantiles _),
-    "q376_compaction_planner" -> (q376CompactionPlanner _),
-    "q377_join_order_advisor" -> (q377JoinOrderAdvisor _),
-    "q378_cell_suppression" -> (q378CellSuppression _),
-    "q379_retention_sweep" -> (q379RetentionSweep _))
-
-  val oracles: Map[String, String] = Map(
-    "q374_query_likelihood" ->
+  val defs: Seq[QueryDef] = Seq(
+    QueryDef("q381_sample_cardinality", q381SampleCardinality _,
+      s"""WITH li AS (
+        |  SELECT l_orderkey, l_linenumber, l_partkey, l_suppkey
+        |  FROM lineitem),
+        |s AS (
+        |  SELECT * FROM li
+        |  WHERE ('0x' || substr(md5('cardsample:'
+        |          || CAST(l_orderkey AS VARCHAR) || ':'
+        |          || CAST(l_linenumber AS VARCHAR)), 1, 15))::BIGINT
+        |        % $CardSampleMod = 0),
+        |pf AS (SELECT p_partkey FROM part
+        |       WHERE p_size <= $AdvisorPartMaxSize),
+        |sf AS (SELECT s_suppkey FROM supplier
+        |       WHERE s_nationkey <= $AdvisorSuppMaxNation),
+        |arms AS (
+        |  SELECT 'part_and_supplier' AS join_name,
+        |    (SELECT CAST(count(*) AS BIGINT) FROM s
+        |     JOIN pf ON l_partkey = p_partkey
+        |     JOIN sf ON l_suppkey = s_suppkey) AS sample_n,
+        |    (SELECT CAST(count(*) AS BIGINT) FROM li
+        |     JOIN pf ON l_partkey = p_partkey
+        |     JOIN sf ON l_suppkey = s_suppkey) AS actual_rows
+        |  UNION ALL
+        |  SELECT 'part_filter',
+        |    (SELECT CAST(count(*) AS BIGINT) FROM s
+        |     JOIN pf ON l_partkey = p_partkey),
+        |    (SELECT CAST(count(*) AS BIGINT) FROM li
+        |     JOIN pf ON l_partkey = p_partkey)
+        |  UNION ALL
+        |  SELECT 'supplier_filter',
+        |    (SELECT CAST(count(*) AS BIGINT) FROM s
+        |     JOIN sf ON l_suppkey = s_suppkey),
+        |    (SELECT CAST(count(*) AS BIGINT) FROM li
+        |     JOIN sf ON l_suppkey = s_suppkey))
+        |SELECT join_name, sample_n,
+        |       CAST(sample_n * $CardSampleMod AS BIGINT) AS est_rows,
+        |       actual_rows,
+        |       round((CAST(sample_n * $CardSampleMod AS DOUBLE)
+        |              - actual_rows) / actual_rows, 6) AS rel_err
+        |FROM arms ORDER BY join_name""".stripMargin),
+    QueryDef("q380_quantile_trajectory", q380QuantileTrajectory _,
+      {
+      val lst = DdBounds.mkString("[", ", ", "]")
+      val mids = DdMids.mkString("[", ", ", "]")
+      s"""WITH ev AS (
+        |  SELECT CAST(CAST(ts AS TIMESTAMP) AS DATE) AS day,
+        |         CAST(round(value * 100, 0) AS BIGINT) AS cents
+        |  FROM events),
+        |bk AS (
+        |  SELECT day,
+        |         CAST(len(list_filter($lst, b -> b < cents))
+        |              AS INTEGER) AS bucket
+        |  FROM ev),
+        |daily AS (SELECT day, bucket,
+        |                 CAST(count(*) AS BIGINT) AS n
+        |          FROM bk GROUP BY 1, 2),
+        |dense AS (
+        |  SELECT m.day, b.bucket, coalesce(x.n, 0) AS n
+        |  FROM (SELECT DISTINCT day FROM daily) m
+        |  CROSS JOIN (SELECT DISTINCT bucket FROM daily) b
+        |  LEFT JOIN daily x
+        |    ON x.day = m.day AND x.bucket = b.bucket),
+        |merged AS (
+        |  SELECT day, bucket,
+        |         CAST(sum(n) OVER (PARTITION BY bucket ORDER BY day
+        |           ROWS UNBOUNDED PRECEDING) AS BIGINT) AS cum_n
+        |  FROM dense),
+        |nz AS (SELECT * FROM merged WHERE cum_n > 0),
+        |readoff AS (
+        |  SELECT day, bucket, cum_n,
+        |         CAST(sum(cum_n) OVER (PARTITION BY day
+        |           ORDER BY bucket ROWS UNBOUNDED PRECEDING)
+        |           AS BIGINT) AS run,
+        |         CAST(sum(cum_n) OVER (PARTITION BY day)
+        |              AS BIGINT) AS n_cum
+        |  FROM nz)
+        |SELECT day, n_cum, bucket,
+        |       CAST(($mids)[bucket + 1] AS BIGINT) AS p95_cents,
+        |       round(CAST(($mids)[bucket + 1] AS DOUBLE) / 100.0, 2)
+        |         AS p95_dollars
+        |FROM readoff
+        |WHERE run >= ($TrajPerMille * n_cum + 999) // 1000
+        |  AND run - cum_n < ($TrajPerMille * n_cum + 999) // 1000
+        |ORDER BY day""".stripMargin
+    }),
+    QueryDef("q374_query_likelihood", q374QueryLikelihood _,
       s"""WITH toks AS (
         |  SELECT doc_id, unnest(string_split(trim(text), ' ')) AS word
         |  FROM documents),
@@ -540,8 +616,9 @@ object Breadth10 {
         |       doc_id,
         |       round(CAST(score_micro AS DOUBLE) / 1e6, 6) AS ql_score,
         |       n_matched_tokens
-        |FROM top ORDER BY rank""".stripMargin,
-    "q375_ddsketch_quantiles" -> {
+        |FROM top ORDER BY rank""".stripMargin),
+    QueryDef("q375_ddsketch_quantiles", q375DdsketchQuantiles _,
+      {
       val lst = DdBounds.mkString("[", ", ", "]")
       val mids = DdMids.mkString("[", ", ", "]")
       val pm = DdPerMille.mkString("[", ", ", "]")
@@ -595,8 +672,8 @@ object Breadth10 {
         |WHERE p.cum >= (p.per_mille * p.n_total + 999) // 1000
         |  AND p.cum - p.n < (p.per_mille * p.n_total + 999) // 1000
         |ORDER BY p.event_type, per_mille""".stripMargin
-    },
-    "q376_compaction_planner" ->
+    }),
+    QueryDef("q376_compaction_planner", q376CompactionPlanner _,
       s"""WITH daily AS (
         |  SELECT CAST(l_shipdate AS DATE) AS day,
         |         CAST(count(*) * $CompactRowBytes AS BIGINT) AS est_bytes
@@ -612,159 +689,8 @@ object Breadth10 {
         |       round(CAST(sum(est_bytes) AS DOUBLE)
         |             / $CompactTargetBytes, 6) AS fill_ratio,
         |       min_by(day, cum) AS heaviest_day
-        |FROM packed GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q381_sample_cardinality" ->
-      s"""WITH li AS (
-        |  SELECT l_orderkey, l_linenumber, l_partkey, l_suppkey
-        |  FROM lineitem),
-        |s AS (
-        |  SELECT * FROM li
-        |  WHERE ('0x' || substr(md5('cardsample:'
-        |          || CAST(l_orderkey AS VARCHAR) || ':'
-        |          || CAST(l_linenumber AS VARCHAR)), 1, 15))::BIGINT
-        |        % $CardSampleMod = 0),
-        |pf AS (SELECT p_partkey FROM part
-        |       WHERE p_size <= $AdvisorPartMaxSize),
-        |sf AS (SELECT s_suppkey FROM supplier
-        |       WHERE s_nationkey <= $AdvisorSuppMaxNation),
-        |arms AS (
-        |  SELECT 'part_and_supplier' AS join_name,
-        |    (SELECT CAST(count(*) AS BIGINT) FROM s
-        |     JOIN pf ON l_partkey = p_partkey
-        |     JOIN sf ON l_suppkey = s_suppkey) AS sample_n,
-        |    (SELECT CAST(count(*) AS BIGINT) FROM li
-        |     JOIN pf ON l_partkey = p_partkey
-        |     JOIN sf ON l_suppkey = s_suppkey) AS actual_rows
-        |  UNION ALL
-        |  SELECT 'part_filter',
-        |    (SELECT CAST(count(*) AS BIGINT) FROM s
-        |     JOIN pf ON l_partkey = p_partkey),
-        |    (SELECT CAST(count(*) AS BIGINT) FROM li
-        |     JOIN pf ON l_partkey = p_partkey)
-        |  UNION ALL
-        |  SELECT 'supplier_filter',
-        |    (SELECT CAST(count(*) AS BIGINT) FROM s
-        |     JOIN sf ON l_suppkey = s_suppkey),
-        |    (SELECT CAST(count(*) AS BIGINT) FROM li
-        |     JOIN sf ON l_suppkey = s_suppkey))
-        |SELECT join_name, sample_n,
-        |       CAST(sample_n * $CardSampleMod AS BIGINT) AS est_rows,
-        |       actual_rows,
-        |       round((CAST(sample_n * $CardSampleMod AS DOUBLE)
-        |              - actual_rows) / actual_rows, 6) AS rel_err
-        |FROM arms ORDER BY join_name""".stripMargin,
-    "q380_quantile_trajectory" -> {
-      val lst = DdBounds.mkString("[", ", ", "]")
-      val mids = DdMids.mkString("[", ", ", "]")
-      s"""WITH ev AS (
-        |  SELECT CAST(CAST(ts AS TIMESTAMP) AS DATE) AS day,
-        |         CAST(round(value * 100, 0) AS BIGINT) AS cents
-        |  FROM events),
-        |bk AS (
-        |  SELECT day,
-        |         CAST(len(list_filter($lst, b -> b < cents))
-        |              AS INTEGER) AS bucket
-        |  FROM ev),
-        |daily AS (SELECT day, bucket,
-        |                 CAST(count(*) AS BIGINT) AS n
-        |          FROM bk GROUP BY 1, 2),
-        |dense AS (
-        |  SELECT m.day, b.bucket, coalesce(x.n, 0) AS n
-        |  FROM (SELECT DISTINCT day FROM daily) m
-        |  CROSS JOIN (SELECT DISTINCT bucket FROM daily) b
-        |  LEFT JOIN daily x
-        |    ON x.day = m.day AND x.bucket = b.bucket),
-        |merged AS (
-        |  SELECT day, bucket,
-        |         CAST(sum(n) OVER (PARTITION BY bucket ORDER BY day
-        |           ROWS UNBOUNDED PRECEDING) AS BIGINT) AS cum_n
-        |  FROM dense),
-        |nz AS (SELECT * FROM merged WHERE cum_n > 0),
-        |readoff AS (
-        |  SELECT day, bucket, cum_n,
-        |         CAST(sum(cum_n) OVER (PARTITION BY day
-        |           ORDER BY bucket ROWS UNBOUNDED PRECEDING)
-        |           AS BIGINT) AS run,
-        |         CAST(sum(cum_n) OVER (PARTITION BY day)
-        |              AS BIGINT) AS n_cum
-        |  FROM nz)
-        |SELECT day, n_cum, bucket,
-        |       CAST(($mids)[bucket + 1] AS BIGINT) AS p95_cents,
-        |       round(CAST(($mids)[bucket + 1] AS DOUBLE) / 100.0, 2)
-        |         AS p95_dollars
-        |FROM readoff
-        |WHERE run >= ($TrajPerMille * n_cum + 999) // 1000
-        |  AND run - cum_n < ($TrajPerMille * n_cum + 999) // 1000
-        |ORDER BY day""".stripMargin
-    },
-    "q378_cell_suppression" ->
-      s"""WITH cells AS (
-        |  SELECT n.n_name AS nation, c.c_mktsegment AS segment,
-        |         CAST(count(DISTINCT c.c_custkey) AS BIGINT) AS n_custs,
-        |         CAST(sum(CAST(round(o.o_totalprice * 100, 0) AS BIGINT))
-        |              AS BIGINT) AS cents
-        |  FROM customer c
-        |  JOIN nation n ON c.c_nationkey = n.n_nationkey
-        |  JOIN orders o ON c.c_custkey = o.o_custkey
-        |  GROUP BY 1, 2),
-        |base AS (SELECT *, n_custs < $SuppressK AS primary_sup
-        |         FROM cells),
-        |rowp AS (
-        |  SELECT *,
-        |    sum(CASE WHEN primary_sup THEN 1 ELSE 0 END)
-        |      OVER (PARTITION BY nation) AS row_primaries,
-        |    row_number() OVER (PARTITION BY nation
-        |      ORDER BY n_custs, segment) AS rn,
-        |    sum(CASE WHEN primary_sup THEN 1 ELSE 0 END)
-        |      OVER (PARTITION BY nation ORDER BY n_custs, segment
-        |            ROWS UNBOUNDED PRECEDING) AS pcum
-        |  FROM base),
-        |afterrow AS (
-        |  SELECT nation, segment, n_custs, cents, primary_sup,
-        |    (NOT primary_sup) AND row_primaries = 1 AND rn = pcum + 1
-        |      AS row_comp
-        |  FROM rowp),
-        |colp AS (
-        |  SELECT *,
-        |    sum(CASE WHEN primary_sup OR row_comp THEN 1 ELSE 0 END)
-        |      OVER (PARTITION BY segment) AS col_suppressed,
-        |    row_number() OVER (PARTITION BY segment
-        |      ORDER BY n_custs, nation) AS cn,
-        |    sum(CASE WHEN primary_sup OR row_comp THEN 1 ELSE 0 END)
-        |      OVER (PARTITION BY segment ORDER BY n_custs, nation
-        |            ROWS UNBOUNDED PRECEDING) AS scum
-        |  FROM afterrow),
-        |fin AS (
-        |  SELECT *, (NOT (primary_sup OR row_comp))
-        |        AND col_suppressed = 1 AND cn = scum + 1 AS col_comp
-        |  FROM colp)
-        |SELECT nation, segment, n_custs,
-        |  CASE WHEN primary_sup THEN 'primary'
-        |       WHEN row_comp THEN 'row_complement'
-        |       WHEN col_comp THEN 'col_complement'
-        |       ELSE 'none' END AS suppression,
-        |  CASE WHEN primary_sup OR row_comp OR col_comp THEN NULL
-        |       ELSE round(CAST(cents AS DOUBLE) / 100.0, 2)
-        |  END AS published_dollars
-        |FROM fin ORDER BY nation, segment""".stripMargin,
-    "q379_retention_sweep" ->
-      s"""WITH ev AS (
-        |  SELECT event_type,
-        |         CAST(CAST(ts AS TIMESTAMP) AS DATE) AS d
-        |  FROM events),
-        |cut AS (SELECT max(d) - $RetentionDays AS cutoff FROM ev)
-        |SELECT event_type, CAST(count(*) AS BIGINT) AS n_events,
-        |       CAST(sum(CASE WHEN d < (SELECT cutoff FROM cut)
-        |                     THEN 1 ELSE 0 END) AS BIGINT) AS n_expired,
-        |       round(CAST(sum(CASE WHEN d < (SELECT cutoff FROM cut)
-        |                           THEN 1 ELSE 0 END) AS DOUBLE)
-        |             / count(*), 6) AS expired_share,
-        |       CAST(sum(CASE WHEN d < (SELECT cutoff FROM cut)
-        |                     THEN 1 ELSE 0 END) * 64 AS BIGINT)
-        |         AS est_reclaim_bytes,
-        |       (SELECT cutoff FROM cut) AS cutoff
-        |FROM ev GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q377_join_order_advisor" ->
+        |FROM packed GROUP BY 1 ORDER BY 1""".stripMargin),
+    QueryDef("q377_join_order_advisor", q377JoinOrderAdvisor _,
       s"""WITH prof AS (
         |  SELECT 'part' AS dim_name, CAST(count(*) AS BIGINT)
         |           AS dim_rows,
@@ -819,5 +745,72 @@ object Breadth10 {
         |       END, 2) AS est_rows_after,
         |       act.actual_final_rows
         |FROM ord o CROSS JOIN nf CROSS JOIN act
-        |ORDER BY o.position""".stripMargin)
+        |ORDER BY o.position""".stripMargin),
+    QueryDef("q378_cell_suppression", q378CellSuppression _,
+      s"""WITH cells AS (
+        |  SELECT n.n_name AS nation, c.c_mktsegment AS segment,
+        |         CAST(count(DISTINCT c.c_custkey) AS BIGINT) AS n_custs,
+        |         CAST(sum(CAST(round(o.o_totalprice * 100, 0) AS BIGINT))
+        |              AS BIGINT) AS cents
+        |  FROM customer c
+        |  JOIN nation n ON c.c_nationkey = n.n_nationkey
+        |  JOIN orders o ON c.c_custkey = o.o_custkey
+        |  GROUP BY 1, 2),
+        |base AS (SELECT *, n_custs < $SuppressK AS primary_sup
+        |         FROM cells),
+        |rowp AS (
+        |  SELECT *,
+        |    sum(CASE WHEN primary_sup THEN 1 ELSE 0 END)
+        |      OVER (PARTITION BY nation) AS row_primaries,
+        |    row_number() OVER (PARTITION BY nation
+        |      ORDER BY n_custs, segment) AS rn,
+        |    sum(CASE WHEN primary_sup THEN 1 ELSE 0 END)
+        |      OVER (PARTITION BY nation ORDER BY n_custs, segment
+        |            ROWS UNBOUNDED PRECEDING) AS pcum
+        |  FROM base),
+        |afterrow AS (
+        |  SELECT nation, segment, n_custs, cents, primary_sup,
+        |    (NOT primary_sup) AND row_primaries = 1 AND rn = pcum + 1
+        |      AS row_comp
+        |  FROM rowp),
+        |colp AS (
+        |  SELECT *,
+        |    sum(CASE WHEN primary_sup OR row_comp THEN 1 ELSE 0 END)
+        |      OVER (PARTITION BY segment) AS col_suppressed,
+        |    row_number() OVER (PARTITION BY segment
+        |      ORDER BY n_custs, nation) AS cn,
+        |    sum(CASE WHEN primary_sup OR row_comp THEN 1 ELSE 0 END)
+        |      OVER (PARTITION BY segment ORDER BY n_custs, nation
+        |            ROWS UNBOUNDED PRECEDING) AS scum
+        |  FROM afterrow),
+        |fin AS (
+        |  SELECT *, (NOT (primary_sup OR row_comp))
+        |        AND col_suppressed = 1 AND cn = scum + 1 AS col_comp
+        |  FROM colp)
+        |SELECT nation, segment, n_custs,
+        |  CASE WHEN primary_sup THEN 'primary'
+        |       WHEN row_comp THEN 'row_complement'
+        |       WHEN col_comp THEN 'col_complement'
+        |       ELSE 'none' END AS suppression,
+        |  CASE WHEN primary_sup OR row_comp OR col_comp THEN NULL
+        |       ELSE round(CAST(cents AS DOUBLE) / 100.0, 2)
+        |  END AS published_dollars
+        |FROM fin ORDER BY nation, segment""".stripMargin),
+    QueryDef("q379_retention_sweep", q379RetentionSweep _,
+      s"""WITH ev AS (
+        |  SELECT event_type,
+        |         CAST(CAST(ts AS TIMESTAMP) AS DATE) AS d
+        |  FROM events),
+        |cut AS (SELECT max(d) - $RetentionDays AS cutoff FROM ev)
+        |SELECT event_type, CAST(count(*) AS BIGINT) AS n_events,
+        |       CAST(sum(CASE WHEN d < (SELECT cutoff FROM cut)
+        |                     THEN 1 ELSE 0 END) AS BIGINT) AS n_expired,
+        |       round(CAST(sum(CASE WHEN d < (SELECT cutoff FROM cut)
+        |                           THEN 1 ELSE 0 END) AS DOUBLE)
+        |             / count(*), 6) AS expired_share,
+        |       CAST(sum(CASE WHEN d < (SELECT cutoff FROM cut)
+        |                     THEN 1 ELSE 0 END) * 64 AS BIGINT)
+        |         AS est_reclaim_bytes,
+        |       (SELECT cutoff FROM cut) AS cutoff
+        |FROM ev GROUP BY 1 ORDER BY 1""".stripMargin))
 }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.QueryDef
 import graft.sources.Tables
 
 /** [EXT] round-13 batch: drift LOCALIZATION (where did the series
@@ -430,17 +431,8 @@ object Breadth11 {
 
   // ------------------------------------------------------------ registry
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q382_changepoint" -> (q382Changepoint _),
-    "q383_curation_funnel" -> (q383CurationFunnel _),
-    "q384_token_budget_sample" -> (q384TokenBudgetSample _),
-    "q385_boilerplate_prefix" -> (q385BoilerplatePrefix _),
-    "q386_simplified_silhouette" -> (q386SimplifiedSilhouette _),
-    "q387_int8_quant_audit" -> (q387Int8QuantAudit _),
-    "q388_changepoint2" -> (q388Changepoint2 _))
-
-  val oracles: Map[String, String] = Map(
-    "q382_changepoint" ->
+  val defs: Seq[QueryDef] = Seq(
+    QueryDef("q382_changepoint", q382Changepoint _,
       """WITH daily AS (
         |  SELECT event_type, CAST(CAST(ts AS TIMESTAMP) AS DATE) AS day,
         |         CAST(count(*) AS BIGINT) AS x
@@ -480,8 +472,9 @@ object Breadth11 {
         |       round(gaind, 6) AS gain,
         |       CASE WHEN sse > 0
         |            THEN round(grel_u / 1e6, 6) END AS eta2
-        |FROM best WHERE rn = 1 ORDER BY event_type""".stripMargin,
-    "q383_curation_funnel" -> {
+        |FROM best WHERE rn = 1 ORDER BY event_type""".stripMargin),
+    QueryDef("q383_curation_funnel", q383CurationFunnel _,
+      {
       val stops = FunnelStops.map(s => s"'$s'").mkString("[", ", ", "]")
       s"""WITH d AS (
         |  SELECT source, n_chars,
@@ -516,8 +509,8 @@ object Breadth11 {
         |            AS BIGINT) * 1000000
         |         // CAST(count(*) AS BIGINT) AS keep_ppm
         |FROM r GROUP BY source ORDER BY source""".stripMargin
-    },
-    "q384_token_budget_sample" ->
+    }),
+    QueryDef("q384_token_budget_sample", q384TokenBudgetSample _,
       s"""WITH d AS (
         |  SELECT doc_id,
         |         CAST(len(list_filter(string_split(text, ' '),
@@ -535,8 +528,114 @@ object Breadth11 {
         |         AS multiplicity
         |FROM c
         |WHERE cum // $TokenStride > (cum - n_tokens) // $TokenStride
-        |ORDER BY cum""".stripMargin,
-    "q388_changepoint2" ->
+        |ORDER BY cum""".stripMargin),
+    QueryDef("q385_boilerplate_prefix", q385BoilerplatePrefix _,
+      s"""SELECT substr(text, 1, $BoilerPrefixLen) AS prefix,
+        |       CAST(count(*) AS BIGINT) AS n_docs,
+        |       CAST(count(DISTINCT source) AS BIGINT) AS n_sources,
+        |       CAST(count(DISTINCT lang) AS BIGINT) AS n_langs,
+        |       CAST(min(doc_id) AS BIGINT) AS example_doc
+        |FROM documents
+        |GROUP BY 1 HAVING count(*) >= 2
+        |ORDER BY n_docs DESC, prefix LIMIT $BoilerTopN""".stripMargin),
+    QueryDef("q386_simplified_silhouette", q386SimplifiedSilhouette _,
+      """WITH ex AS (
+        |  SELECT vec_id, label, i AS pos,
+        |         CAST(round(CAST(embedding[i] AS DOUBLE) * 1000000, 0)
+        |              AS BIGINT) AS vm
+        |  FROM (SELECT vec_id, label, embedding,
+        |               unnest(generate_series(1, len(embedding))) AS i
+        |        FROM embeddings)),
+        |cd AS (SELECT label, pos, CAST(count(*) AS BIGINT) AS n,
+        |              CAST(sum(vm) AS BIGINT) AS s
+        |       FROM ex GROUP BY 1, 2),
+        |cq AS (SELECT label AS c_label, pos,
+        |              CAST(round(CAST(s AS DOUBLE) / n, 0) AS BIGINT)
+        |                AS cq
+        |       FROM cd),
+        |c2 AS (SELECT c_label, CAST(sum(cq * cq) AS BIGINT) AS c2
+        |       FROM cq GROUP BY 1),
+        |v2 AS (SELECT vec_id, CAST(sum(vm * vm) AS BIGINT) AS v2
+        |       FROM ex GROUP BY 1),
+        |dots AS (
+        |  SELECT e.vec_id, e.label, q.c_label,
+        |         CAST(sum(e.vm * q.cq) AS BIGINT) AS dot
+        |  FROM ex e JOIN cq q ON q.pos = e.pos
+        |  GROUP BY 1, 2, 3),
+        |sc AS (
+        |  SELECT d.vec_id, d.label, d.c_label,
+        |         CAST(d.dot AS DOUBLE) / (sqrt(CAST(v.v2 AS DOUBLE))
+        |           * sqrt(CAST(c.c2 AS DOUBLE))) AS cos
+        |  FROM dots d JOIN v2 v USING (vec_id) JOIN c2 c
+        |    USING (c_label)
+        |  WHERE v.v2 > 0),
+        |per AS (
+        |  SELECT vec_id, label,
+        |         max(CASE WHEN c_label = label THEN cos END) AS cos_own,
+        |         max(CASE WHEN c_label <> label THEN cos END)
+        |           AS cos_other
+        |  FROM sc GROUP BY 1, 2),
+        |su AS (
+        |  SELECT label,
+        |         CAST(round(CASE WHEN 1 - least(cos_own, cos_other)
+        |                <> 0
+        |              THEN (cos_own - cos_other)
+        |                / (1 - least(cos_own, cos_other)) END * 1e6, 0)
+        |              AS BIGINT) AS s_u
+        |  FROM per)
+        |SELECT label, CAST(count(*) AS BIGINT) AS n_vecs,
+        |       round(CAST(sum(s_u) AS DOUBLE) / count(*) / 1e6, 6)
+        |         AS mean_sil,
+        |       CAST(sum(CASE WHEN s_u < 0 THEN 1 ELSE 0 END)
+        |            AS BIGINT) * 1000000
+        |         // CAST(count(*) AS BIGINT) AS neg_ppm,
+        |       round(min(s_u) / 1e6, 6) AS worst_sil
+        |FROM su GROUP BY label ORDER BY label""".stripMargin),
+    QueryDef("q387_int8_quant_audit", q387Int8QuantAudit _,
+      s"""WITH ex AS (
+        |  SELECT vec_id, label, i AS pos,
+        |         CAST(round(CAST(embedding[i] AS DOUBLE) * 1000000, 0)
+        |              AS BIGINT) AS vm
+        |  FROM (SELECT vec_id, label, embedding,
+        |               unnest(generate_series(1, len(embedding))) AS i
+        |        FROM embeddings)),
+        |sc AS (
+        |  SELECT vec_id, label, pos, vm,
+        |         max(abs(vm)) OVER (PARTITION BY vec_id) AS scale_m
+        |  FROM ex),
+        |qt AS (
+        |  SELECT *,
+        |         CAST(round(vm * $QuantMax.0 / scale_m, 0) AS BIGINT)
+        |           AS code
+        |  FROM sc WHERE scale_m > 0),
+        |rc AS (
+        |  SELECT *,
+        |         CAST(round(code * scale_m / $QuantMax.0, 0) AS BIGINT)
+        |           AS rm
+        |  FROM qt),
+        |per AS (
+        |  SELECT vec_id, label,
+        |         CAST(sum(vm * rm) AS BIGINT) AS dot,
+        |         CAST(sum(vm * vm) AS BIGINT) AS v2,
+        |         CAST(sum(rm * rm) AS BIGINT) AS r2,
+        |         CAST(sum((vm - rm) * (vm - rm)) AS BIGINT) AS e2,
+        |         CAST(max(abs(vm - rm)) AS BIGINT) AS max_err
+        |  FROM rc GROUP BY 1, 2),
+        |cu AS (
+        |  SELECT *,
+        |         CAST(round(CAST(dot AS DOUBLE)
+        |           / (sqrt(CAST(v2 AS DOUBLE)) * sqrt(CAST(r2
+        |           AS DOUBLE))) * 1e6, 0) AS BIGINT) AS cos_u
+        |  FROM per)
+        |SELECT label, CAST(count(*) AS BIGINT) AS n_vecs,
+        |       round(CAST(sum(cos_u) AS DOUBLE) / count(*) / 1e6, 6)
+        |         AS mean_cos,
+        |       round(min(cos_u) / 1e6, 6) AS worst_cos,
+        |       CAST(max(max_err) AS BIGINT) AS max_abs_err_micro,
+        |       round(CAST(sum(e2) AS DOUBLE) / CAST(sum(v2) AS DOUBLE),
+        |         6) AS rel_mse
+        |FROM cu GROUP BY label ORDER BY label""".stripMargin),
+    QueryDef("q388_changepoint2", q388Changepoint2 _,
       """WITH daily AS (
         |  SELECT event_type, CAST(CAST(ts AS TIMESTAMP) AS DATE) AS day,
         |         CAST(count(*) AS BIGINT) AS x
@@ -609,111 +708,5 @@ object Breadth11 {
         |       round(CAST(s - c2 AS DOUBLE) / (n - k2), 6) AS m3,
         |       round(gain1d, 6) AS gain_first,
         |       round(gain2d, 6) AS gain_second
-        |FROM win ORDER BY event_type""".stripMargin,
-    "q386_simplified_silhouette" ->
-      """WITH ex AS (
-        |  SELECT vec_id, label, i AS pos,
-        |         CAST(round(CAST(embedding[i] AS DOUBLE) * 1000000, 0)
-        |              AS BIGINT) AS vm
-        |  FROM (SELECT vec_id, label, embedding,
-        |               unnest(generate_series(1, len(embedding))) AS i
-        |        FROM embeddings)),
-        |cd AS (SELECT label, pos, CAST(count(*) AS BIGINT) AS n,
-        |              CAST(sum(vm) AS BIGINT) AS s
-        |       FROM ex GROUP BY 1, 2),
-        |cq AS (SELECT label AS c_label, pos,
-        |              CAST(round(CAST(s AS DOUBLE) / n, 0) AS BIGINT)
-        |                AS cq
-        |       FROM cd),
-        |c2 AS (SELECT c_label, CAST(sum(cq * cq) AS BIGINT) AS c2
-        |       FROM cq GROUP BY 1),
-        |v2 AS (SELECT vec_id, CAST(sum(vm * vm) AS BIGINT) AS v2
-        |       FROM ex GROUP BY 1),
-        |dots AS (
-        |  SELECT e.vec_id, e.label, q.c_label,
-        |         CAST(sum(e.vm * q.cq) AS BIGINT) AS dot
-        |  FROM ex e JOIN cq q ON q.pos = e.pos
-        |  GROUP BY 1, 2, 3),
-        |sc AS (
-        |  SELECT d.vec_id, d.label, d.c_label,
-        |         CAST(d.dot AS DOUBLE) / (sqrt(CAST(v.v2 AS DOUBLE))
-        |           * sqrt(CAST(c.c2 AS DOUBLE))) AS cos
-        |  FROM dots d JOIN v2 v USING (vec_id) JOIN c2 c
-        |    USING (c_label)
-        |  WHERE v.v2 > 0),
-        |per AS (
-        |  SELECT vec_id, label,
-        |         max(CASE WHEN c_label = label THEN cos END) AS cos_own,
-        |         max(CASE WHEN c_label <> label THEN cos END)
-        |           AS cos_other
-        |  FROM sc GROUP BY 1, 2),
-        |su AS (
-        |  SELECT label,
-        |         CAST(round(CASE WHEN 1 - least(cos_own, cos_other)
-        |                <> 0
-        |              THEN (cos_own - cos_other)
-        |                / (1 - least(cos_own, cos_other)) END * 1e6, 0)
-        |              AS BIGINT) AS s_u
-        |  FROM per)
-        |SELECT label, CAST(count(*) AS BIGINT) AS n_vecs,
-        |       round(CAST(sum(s_u) AS DOUBLE) / count(*) / 1e6, 6)
-        |         AS mean_sil,
-        |       CAST(sum(CASE WHEN s_u < 0 THEN 1 ELSE 0 END)
-        |            AS BIGINT) * 1000000
-        |         // CAST(count(*) AS BIGINT) AS neg_ppm,
-        |       round(min(s_u) / 1e6, 6) AS worst_sil
-        |FROM su GROUP BY label ORDER BY label""".stripMargin,
-    "q387_int8_quant_audit" ->
-      s"""WITH ex AS (
-        |  SELECT vec_id, label, i AS pos,
-        |         CAST(round(CAST(embedding[i] AS DOUBLE) * 1000000, 0)
-        |              AS BIGINT) AS vm
-        |  FROM (SELECT vec_id, label, embedding,
-        |               unnest(generate_series(1, len(embedding))) AS i
-        |        FROM embeddings)),
-        |sc AS (
-        |  SELECT vec_id, label, pos, vm,
-        |         max(abs(vm)) OVER (PARTITION BY vec_id) AS scale_m
-        |  FROM ex),
-        |qt AS (
-        |  SELECT *,
-        |         CAST(round(vm * $QuantMax.0 / scale_m, 0) AS BIGINT)
-        |           AS code
-        |  FROM sc WHERE scale_m > 0),
-        |rc AS (
-        |  SELECT *,
-        |         CAST(round(code * scale_m / $QuantMax.0, 0) AS BIGINT)
-        |           AS rm
-        |  FROM qt),
-        |per AS (
-        |  SELECT vec_id, label,
-        |         CAST(sum(vm * rm) AS BIGINT) AS dot,
-        |         CAST(sum(vm * vm) AS BIGINT) AS v2,
-        |         CAST(sum(rm * rm) AS BIGINT) AS r2,
-        |         CAST(sum((vm - rm) * (vm - rm)) AS BIGINT) AS e2,
-        |         CAST(max(abs(vm - rm)) AS BIGINT) AS max_err
-        |  FROM rc GROUP BY 1, 2),
-        |cu AS (
-        |  SELECT *,
-        |         CAST(round(CAST(dot AS DOUBLE)
-        |           / (sqrt(CAST(v2 AS DOUBLE)) * sqrt(CAST(r2
-        |           AS DOUBLE))) * 1e6, 0) AS BIGINT) AS cos_u
-        |  FROM per)
-        |SELECT label, CAST(count(*) AS BIGINT) AS n_vecs,
-        |       round(CAST(sum(cos_u) AS DOUBLE) / count(*) / 1e6, 6)
-        |         AS mean_cos,
-        |       round(min(cos_u) / 1e6, 6) AS worst_cos,
-        |       CAST(max(max_err) AS BIGINT) AS max_abs_err_micro,
-        |       round(CAST(sum(e2) AS DOUBLE) / CAST(sum(v2) AS DOUBLE),
-        |         6) AS rel_mse
-        |FROM cu GROUP BY label ORDER BY label""".stripMargin,
-    "q385_boilerplate_prefix" ->
-      s"""SELECT substr(text, 1, $BoilerPrefixLen) AS prefix,
-        |       CAST(count(*) AS BIGINT) AS n_docs,
-        |       CAST(count(DISTINCT source) AS BIGINT) AS n_sources,
-        |       CAST(count(DISTINCT lang) AS BIGINT) AS n_langs,
-        |       CAST(min(doc_id) AS BIGINT) AS example_doc
-        |FROM documents
-        |GROUP BY 1 HAVING count(*) >= 2
-        |ORDER BY n_docs DESC, prefix LIMIT $BoilerTopN""".stripMargin)
+        |FROM win ORDER BY event_type""".stripMargin))
 }

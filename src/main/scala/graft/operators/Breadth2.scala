@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.QueryDef
 import graft.sources.Tables
 
 /** [EXT] second wave of relational operator breadth (SURVEY.md §2 A6/A7,
@@ -298,33 +299,16 @@ object Breadth2 {
       .orderBy("suppkey")
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q77_scalar_subquery" -> (q77ScalarSubquery _),
-    "q78_scd1_upsert" -> (q78Scd1Upsert _),
-    "q74_theta_band_join" -> (q74ThetaBandJoin _),
-    "q72_approx_percentile" -> (q72ApproxPercentile _),
-    "q70_asof_native" -> (q70AsofNative _),
-    "q54_pivot" -> (q54Pivot _),
-    "q55_unpivot" -> (q55Unpivot _),
-    "q56_percentiles" -> (q56Percentiles _),
-    "q57_corr_regr" -> (q57CorrRegr _),
-    "q58_conditional_agg" -> (q58ConditionalAgg _),
-    "q59_lateral_explode" -> (q59LateralExplode _),
-    "q60_date_spine" -> (q60DateSpine _),
-    "q61_range_frame" -> (q61RangeFrame _),
-    "q62_ntile" -> (q62Ntile _),
-    "q63_value_windows" -> (q63ValueWindows _))
-
-  val oracles: Map[String, String] = Map(
-    "q77_scalar_subquery" ->
+  val defs: Seq[QueryDef] = Seq(
+    QueryDef("q77_scalar_subquery", q77ScalarSubquery _,
       """SELECT CAST(year(o_orderdate) AS INT) AS sale_year,
         |       CAST(quarter(o_orderdate) AS INT) AS sale_quarter,
         |       count(*) AS n_big_orders,
         |       round(sum(o_totalprice), 2) AS total_price
         |FROM orders
         |WHERE o_totalprice > (SELECT avg(o_totalprice) FROM orders)
-        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-    "q78_scd1_upsert" ->
+        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin),
+    QueryDef("q78_scd1_upsert", q78Scd1Upsert _,
       """WITH cur AS (
         |  SELECT s_suppkey AS k, s_name AS cur_name, s_acctbal AS cur_bal
         |  FROM supplier WHERE s_suppkey % 2 = 0),
@@ -339,8 +323,8 @@ object Breadth2 {
         |            WHEN new_name IS NULL THEN 'unchanged'
         |            ELSE 'updated' END AS change_type
         |FROM cur FULL OUTER JOIN inc ON cur.k = inc.k
-        |ORDER BY suppkey""".stripMargin,
-    "q74_theta_band_join" ->
+        |ORDER BY suppkey""".stripMargin),
+    QueryDef("q74_theta_band_join", q74ThetaBandJoin _,
       """SELECT a.p_brand AS brand,
         |       count(*) AS n_pairs,
         |       round(avg(abs(a.p_size - b.p_size)), 6) AS avg_gap
@@ -348,14 +332,14 @@ object Breadth2 {
         |  ON a.p_brand = b.p_brand
         | AND a.p_partkey < b.p_partkey
         | AND abs(a.p_size - b.p_size) <= 1
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q72_approx_percentile" ->
+        |GROUP BY 1 ORDER BY 1""".stripMargin),
+    QueryDef("q72_approx_percentile", q72ApproxPercentile _,
       """SELECT l_returnflag AS returnflag,
         |       round(quantile_cont(l_extendedprice, 0.5), 4) AS exact_p50,
         |       round(quantile_cont(l_extendedprice, 0.95), 4) AS exact_p95,
         |       TRUE AS approx_within_1pct
-        |FROM lineitem GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q70_asof_native" ->
+        |FROM lineitem GROUP BY 1 ORDER BY 1""".stripMargin),
+    QueryDef("q70_asof_native", q70AsofNative _,
       """WITH p AS (SELECT user_id, CAST(ts AS TIMESTAMP) AS ts
         |           FROM events WHERE event_type = 'purchase'),
         |     s AS (SELECT user_id, CAST(ts AS TIMESTAMP) AS ts
@@ -365,15 +349,15 @@ object Breadth2 {
         |       count(s.ts) AS n_with_prior_signup
         |FROM p ASOF LEFT JOIN s
         |  ON p.user_id = s.user_id AND s.ts <= p.ts
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q54_pivot" ->
+        |GROUP BY 1 ORDER BY 1""".stripMargin),
+    QueryDef("q54_pivot", q54Pivot _,
       """SELECT CAST(year(o_orderdate) AS INT) AS sale_year,
         |       round(sum(o_totalprice) FILTER (quarter(o_orderdate) = 1), 2) AS q1,
         |       round(sum(o_totalprice) FILTER (quarter(o_orderdate) = 2), 2) AS q2,
         |       round(sum(o_totalprice) FILTER (quarter(o_orderdate) = 3), 2) AS q3,
         |       round(sum(o_totalprice) FILTER (quarter(o_orderdate) = 4), 2) AS q4
-        |FROM orders GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q55_unpivot" ->
+        |FROM orders GROUP BY 1 ORDER BY 1""".stripMargin),
+    QueryDef("q55_unpivot", q55Unpivot _,
       """WITH wide AS (
         |  SELECT l_returnflag AS returnflag,
         |         round(sum(l_quantity), 2) AS sum_qty,
@@ -386,43 +370,43 @@ object Breadth2 {
         |  SELECT returnflag, 'sum_price', sum_price FROM wide
         |  UNION ALL
         |  SELECT returnflag, 'n_rows', n_rows FROM wide)
-        |ORDER BY returnflag, metric""".stripMargin,
-    "q56_percentiles" ->
+        |ORDER BY returnflag, metric""".stripMargin),
+    QueryDef("q56_percentiles", q56Percentiles _,
       """SELECT l_returnflag AS returnflag,
         |       round(quantile_cont(l_extendedprice, 0.25), 4) AS p25,
         |       round(quantile_cont(l_extendedprice, 0.50), 4) AS p50,
         |       round(quantile_cont(l_extendedprice, 0.75), 4) AS p75,
         |       round(quantile_cont(l_extendedprice, 0.95), 4) AS p95
-        |FROM lineitem GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q57_corr_regr" ->
+        |FROM lineitem GROUP BY 1 ORDER BY 1""".stripMargin),
+    QueryDef("q57_corr_regr", q57CorrRegr _,
       """SELECT l_returnflag AS returnflag,
         |       round(corr(l_quantity, l_extendedprice), 6) AS corr_qp,
         |       round(covar_samp(l_quantity, l_extendedprice), 4) AS covar_qp,
         |       round(regr_slope(l_extendedprice, l_quantity), 6) AS slope,
         |       round(regr_intercept(l_extendedprice, l_quantity), 4) AS intercept
-        |FROM lineitem GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q58_conditional_agg" ->
+        |FROM lineitem GROUP BY 1 ORDER BY 1""".stripMargin),
+    QueryDef("q58_conditional_agg", q58ConditionalAgg _,
       """SELECT c_mktsegment AS mktsegment,
         |       count(*) FILTER (c_acctbal > 5000) AS n_high_bal,
         |       count(*) FILTER (c_acctbal < 0) AS n_negative,
         |       bool_and(c_name IS NOT NULL) AS all_have_name,
         |       bool_or(c_acctbal > 9000) AS any_very_high
-        |FROM customer GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q59_lateral_explode" ->
+        |FROM customer GROUP BY 1 ORDER BY 1""".stripMargin),
+    QueryDef("q59_lateral_explode", q59LateralExplode _,
       """SELECT doc_id, CAST(i - 1 AS INT) AS pos, words[i] AS word
         |FROM (SELECT doc_id, string_split(text, ' ') AS words,
         |             unnest(generate_series(1, len(string_split(text, ' ')))) AS i
         |      FROM documents WHERE doc_id % 200 = 0)
-        |ORDER BY doc_id, pos""".stripMargin,
-    "q60_date_spine" ->
+        |ORDER BY doc_id, pos""".stripMargin),
+    QueryDef("q60_date_spine", q60DateSpine _,
       """SELECT o_orderkey,
         |       CAST(unnest(generate_series(
         |         CAST(date_trunc('month', o_orderdate) AS DATE),
         |         CAST(date_trunc('month', o_orderdate) AS DATE) + INTERVAL 3 MONTH,
         |         INTERVAL 1 MONTH)) AS DATE) AS month_start
         |FROM orders WHERE o_orderkey % 5000 = 0
-        |ORDER BY o_orderkey, month_start""".stripMargin,
-    "q61_range_frame" ->
+        |ORDER BY o_orderkey, month_start""".stripMargin),
+    QueryDef("q61_range_frame", q61RangeFrame _,
       """WITH daily AS (
         |  SELECT CAST(o_orderdate AS DATE) AS day,
         |         sum(CAST(round(o_totalprice * 100, 0) AS BIGINT)) AS cents,
@@ -433,8 +417,8 @@ object Breadth2 {
         |       round(sum(cents) OVER (ORDER BY day_num
         |         RANGE BETWEEN 6 PRECEDING AND CURRENT ROW) / 100.0, 2)
         |         AS trailing_7d
-        |FROM daily ORDER BY day""".stripMargin,
-    "q62_ntile" ->
+        |FROM daily ORDER BY day""".stripMargin),
+    QueryDef("q62_ntile", q62Ntile _,
       """WITH rev AS (
         |  SELECT s_name AS rep_name, round(sum(l_extendedprice), 2) AS revenue
         |  FROM lineitem JOIN supplier ON l_suppkey = s_suppkey
@@ -445,8 +429,8 @@ object Breadth2 {
         |       round(cume_dist() OVER w, 6) AS cume
         |FROM rev
         |WINDOW w AS (ORDER BY revenue DESC, rep_name ASC)
-        |ORDER BY rep_name""".stripMargin,
-    "q63_value_windows" ->
+        |ORDER BY rep_name""".stripMargin),
+    QueryDef("q63_value_windows", q63ValueWindows _,
       """WITH monthly AS (
         |  SELECT CAST(year(o_orderdate) AS INT) AS sale_year,
         |         CAST(month(o_orderdate) AS INT) AS sale_month,
@@ -459,5 +443,5 @@ object Breadth2 {
         |FROM monthly
         |WINDOW w AS (PARTITION BY sale_year ORDER BY sale_month
         |             ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING)
-        |ORDER BY sale_year, sale_month""".stripMargin)
+        |ORDER BY sale_year, sale_month""".stripMargin))
 }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.QueryDef
 import graft.sources.Tables
 
 /** [EXT] third wave of operator breadth: the event-analytics patterns a
@@ -487,28 +488,8 @@ object Breadth3 {
       .orderBy("event_type")
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q116_winsorize" -> (q116Winsorize _),
-    "q105_topk_sketch_union" -> (q105TopkSketchUnion _),
-    "q100_hll_union" -> (q100HllUnion _),
-    "q95_sequence_match" -> (q95SequenceMatch _),
-    "q93_rolling_zscore" -> (q93RollingZscore _),
-    "q94_profile_stats" -> (q94ProfileStats _),
-    "q92_count_min" -> (q92CountMin _),
-    "q89_ohlc_bars" -> (q89OhlcBars _),
-    "q90_forward_fill" -> (q90ForwardFill _),
-    "q91_higher_moments" -> (q91HigherMoments _),
-    "q88_asof_forward" -> (q88AsofForward _),
-    "q80_scd2_history" -> (q80Scd2History _),
-    "q128_scd2_pit_join" -> (q128Scd2PitJoin _),
-    "q81_sessionize_gaps" -> (q81SessionizeGaps _),
-    "q82_funnel" -> (q82Funnel _),
-    "q83_cohort_retention" -> (q83CohortRetention _),
-    "q84_transition_matrix" -> (q84TransitionMatrix _),
-    "q85_histogram" -> (q85Histogram _))
-
-  val oracles: Map[String, String] = Map(
-    "q116_winsorize" ->
+  val defs: Seq[QueryDef] = Seq(
+    QueryDef("q116_winsorize", q116Winsorize _,
       """WITH bounds AS (
         |  SELECT event_type,
         |         quantile_cont(value, 0.01) AS p01,
@@ -525,20 +506,20 @@ object Breadth3 {
         |         AS winsorized_mean,
         |       round(avg(e.value), 4) AS raw_mean
         |FROM events e JOIN bounds b USING (event_type)
-        |GROUP BY e.event_type ORDER BY e.event_type""".stripMargin,
-    "q105_topk_sketch_union" ->
+        |GROUP BY e.event_type ORDER BY e.event_type""".stripMargin),
+    QueryDef("q105_topk_sketch_union", q105TopkSketchUnion _,
       """SELECT event_type, count(*) AS est_count
         |FROM events GROUP BY 1
         |ORDER BY est_count DESC, event_type
-        |LIMIT 10""".stripMargin,
-    "q100_hll_union" ->
+        |LIMIT 10""".stripMargin),
+    QueryDef("q100_hll_union", q100HllUnion _,
       """SELECT event_type,
         |       count(DISTINCT CAST(CAST(ts AS TIMESTAMP) AS DATE))
         |         AS n_day_sketches,
         |       count(DISTINCT user_id) AS exact_users,
         |       TRUE AS merged_within_15pct
-        |FROM events GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q95_sequence_match" ->
+        |FROM events GROUP BY 1 ORDER BY 1""".stripMargin),
+    QueryDef("q95_sequence_match", q95SequenceMatch _,
       """WITH seqs AS (
         |  SELECT user_id,
         |         ',' || string_agg(event_type, ','
@@ -551,8 +532,8 @@ object Breadth3 {
         |       CAST(len(regexp_extract_all(replace(seq, ',', ',,'),
         |                                   ',view,,purchase,')) AS INT)
         |         AS n_adjacent_conv
-        |FROM seqs ORDER BY user_id""".stripMargin,
-    "q93_rolling_zscore" ->
+        |FROM seqs ORDER BY user_id""".stripMargin),
+    QueryDef("q93_rolling_zscore", q93RollingZscore _,
       """WITH e AS (SELECT user_id, CAST(ts AS TIMESTAMP) AS ts,
         |                  event_id, value FROM events),
         |wf AS (
@@ -567,8 +548,8 @@ object Breadth3 {
         |       abs(round((value - avg_prev) / std_prev, 4)) > 3.0
         |         AS is_anomaly
         |FROM wf WHERE n_prev >= 5 AND std_prev > 0
-        |ORDER BY user_id, event_id""".stripMargin,
-    "q94_profile_stats" ->
+        |ORDER BY user_id, event_id""".stripMargin),
+    QueryDef("q94_profile_stats", q94ProfileStats _,
       """WITH cols AS (
         |  SELECT 'l_linestatus' AS column_name, count(*) AS n_rows,
         |         CAST(sum(CASE WHEN l_linestatus IS NULL THEN 1 ELSE 0 END)
@@ -601,11 +582,11 @@ object Breadth3 {
         |         min(CAST(l_returnflag AS VARCHAR)),
         |         max(CAST(l_returnflag AS VARCHAR))
         |  FROM lineitem)
-        |SELECT * FROM cols ORDER BY column_name""".stripMargin,
-    "q92_count_min" ->
+        |SELECT * FROM cols ORDER BY column_name""".stripMargin),
+    QueryDef("q92_count_min", q92CountMin _,
       """SELECT event_type, count(*) AS exact_n, TRUE AS within_bound
-        |FROM events GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q89_ohlc_bars" ->
+        |FROM events GROUP BY 1 ORDER BY 1""".stripMargin),
+    QueryDef("q89_ohlc_bars", q89OhlcBars _,
       """SELECT user_id,
         |       date_trunc('hour', CAST(ts AS TIMESTAMP)) AS bar,
         |       arg_min(value, CAST(ts AS TIMESTAMP)) AS open,
@@ -613,8 +594,8 @@ object Breadth3 {
         |       min(value) AS low,
         |       arg_max(value, CAST(ts AS TIMESTAMP)) AS close,
         |       count(*) AS n_events
-        |FROM events GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-    "q90_forward_fill" ->
+        |FROM events GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin),
+    QueryDef("q90_forward_fill", q90ForwardFill _,
       """SELECT user_id, event_id, event_type,
         |       last_value(CASE WHEN event_type = 'purchase' THEN value END
         |                  IGNORE NULLS)
@@ -622,15 +603,15 @@ object Breadth3 {
         |               ORDER BY CAST(ts AS TIMESTAMP), event_id
         |               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
         |         AS last_purchase_value
-        |FROM events ORDER BY user_id, event_id""".stripMargin,
-    "q91_higher_moments" ->
+        |FROM events ORDER BY user_id, event_id""".stripMargin),
+    QueryDef("q91_higher_moments", q91HigherMoments _,
       """SELECT l_returnflag AS returnflag, count(*) AS n,
         |       round(skewness(l_extendedprice)
         |             * (count(*) - 2)
         |             / sqrt(count(*) * (count(*) - 1.0)), 4) AS skew_pop,
         |       round(kurtosis_pop(l_extendedprice), 4) AS kurt_pop
-        |FROM lineitem GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q88_asof_forward" ->
+        |FROM lineitem GROUP BY 1 ORDER BY 1""".stripMargin),
+    QueryDef("q88_asof_forward", q88AsofForward _,
       """WITH s AS (SELECT user_id, CAST(ts AS TIMESTAMP) AS ts
         |           FROM events WHERE event_type = 'signup'),
         |     p AS (SELECT user_id, CAST(ts AS TIMESTAMP) AS ts
@@ -650,11 +631,36 @@ object Breadth3 {
         |       count(p_ts) AS n_converted_7d,
         |       CAST(sum((epoch_us(p_ts) - epoch_us(ts)) // 1000000)
         |            AS BIGINT) AS sum_gap_sec
-        |FROM m2 GROUP BY 1 ORDER BY 1""".stripMargin,
+        |FROM m2 GROUP BY 1 ORDER BY 1""".stripMargin),
+    QueryDef("q80_scd2_history", q80Scd2History _,
+      """WITH base AS (
+        |  SELECT o_custkey AS custkey, o_orderpriority AS priority,
+        |         o_orderdate AS ts, o_orderkey
+        |  FROM orders),
+        |marked AS (
+        |  SELECT *, CASE WHEN lag(priority) OVER w IS NULL
+        |                   OR lag(priority) OVER w <> priority
+        |                 THEN 1 ELSE 0 END AS chg
+        |  FROM base WINDOW w AS (PARTITION BY custkey ORDER BY ts, o_orderkey)),
+        |versioned AS (
+        |  SELECT *, CAST(sum(chg) OVER (PARTITION BY custkey
+        |              ORDER BY ts, o_orderkey ROWS UNBOUNDED PRECEDING)
+        |            AS INT) AS version
+        |  FROM marked),
+        |vers AS (
+        |  SELECT custkey, version, min(priority) AS priority,
+        |         min(ts) AS valid_from, count(*) AS n_orders
+        |  FROM versioned GROUP BY custkey, version)
+        |SELECT custkey, version, priority, valid_from,
+        |       lead(valid_from) OVER w2 AS valid_to,
+        |       (lead(valid_from) OVER w2 IS NULL) AS is_current,
+        |       n_orders
+        |FROM vers WINDOW w2 AS (PARTITION BY custkey ORDER BY version)
+        |ORDER BY custkey, version""".stripMargin),
     // q80's version chain, end-of-day deduped, attached point-in-time
     // via DuckDB's real ASOF JOIN (unique match per fact by
     // construction, so both engines are deterministic)
-    "q128_scd2_pit_join" ->
+    QueryDef("q128_scd2_pit_join", q128Scd2PitJoin _,
       """WITH base AS (
         |  SELECT o_custkey AS custkey, o_orderpriority AS priority,
         |         o_orderdate AS ts, o_orderkey
@@ -692,33 +698,8 @@ object Breadth3 {
         |       CAST(max(h.pit_version) AS INT) AS max_version
         |FROM facts f ASOF LEFT JOIN h2 h
         |  ON f.custkey = h.h_custkey AND h.valid_from <= f.o_orderdate
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q80_scd2_history" ->
-      """WITH base AS (
-        |  SELECT o_custkey AS custkey, o_orderpriority AS priority,
-        |         o_orderdate AS ts, o_orderkey
-        |  FROM orders),
-        |marked AS (
-        |  SELECT *, CASE WHEN lag(priority) OVER w IS NULL
-        |                   OR lag(priority) OVER w <> priority
-        |                 THEN 1 ELSE 0 END AS chg
-        |  FROM base WINDOW w AS (PARTITION BY custkey ORDER BY ts, o_orderkey)),
-        |versioned AS (
-        |  SELECT *, CAST(sum(chg) OVER (PARTITION BY custkey
-        |              ORDER BY ts, o_orderkey ROWS UNBOUNDED PRECEDING)
-        |            AS INT) AS version
-        |  FROM marked),
-        |vers AS (
-        |  SELECT custkey, version, min(priority) AS priority,
-        |         min(ts) AS valid_from, count(*) AS n_orders
-        |  FROM versioned GROUP BY custkey, version)
-        |SELECT custkey, version, priority, valid_from,
-        |       lead(valid_from) OVER w2 AS valid_to,
-        |       (lead(valid_from) OVER w2 IS NULL) AS is_current,
-        |       n_orders
-        |FROM vers WINDOW w2 AS (PARTITION BY custkey ORDER BY version)
-        |ORDER BY custkey, version""".stripMargin,
-    "q81_sessionize_gaps" ->
+        |GROUP BY 1 ORDER BY 1""".stripMargin),
+    QueryDef("q81_sessionize_gaps", q81SessionizeGaps _,
       """WITH marked AS (
         |  SELECT user_id, CAST(ts AS TIMESTAMP) AS ts, event_id,
         |         CASE WHEN lag(CAST(ts AS TIMESTAMP)) OVER w IS NULL
@@ -736,8 +717,8 @@ object Breadth3 {
         |       min(ts) AS session_start, max(ts) AS session_end,
         |       (epoch_us(max(ts)) - epoch_us(min(ts))) // 1000000 AS duration_sec
         |FROM sessions GROUP BY user_id, session_idx
-        |ORDER BY user_id, session_idx""".stripMargin,
-    "q82_funnel" ->
+        |ORDER BY user_id, session_idx""".stripMargin),
+    QueryDef("q82_funnel", q82Funnel _,
       """WITH v AS (
         |  SELECT user_id, min(CAST(ts AS TIMESTAMP)) AS t_view
         |  FROM events WHERE event_type = 'view' GROUP BY user_id),
@@ -758,8 +739,8 @@ object Breadth3 {
         |SELECT step, n_users,
         |       round(CAST(n_users AS DOUBLE) /
         |             lag(n_users) OVER (ORDER BY step), 4) AS conv_from_prev
-        |FROM steps ORDER BY step""".stripMargin,
-    "q83_cohort_retention" ->
+        |FROM steps ORDER BY step""".stripMargin),
+    QueryDef("q83_cohort_retention", q83CohortRetention _,
       """WITH firstseen AS (
         |  SELECT user_id,
         |         CAST(date_trunc('week', min(CAST(ts AS TIMESTAMP))) AS DATE)
@@ -771,8 +752,8 @@ object Breadth3 {
         |            // 7 AS INT) AS week_offset,
         |       count(DISTINCT e.user_id) AS n_users
         |FROM events e JOIN firstseen f ON e.user_id = f.user_id
-        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-    "q84_transition_matrix" ->
+        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin),
+    QueryDef("q84_transition_matrix", q84TransitionMatrix _,
       """WITH pairs AS (
         |  SELECT event_type,
         |         lead(event_type) OVER (PARTITION BY user_id
@@ -785,8 +766,8 @@ object Breadth3 {
         |SELECT event_type, next_type, n,
         |       round(CAST(n AS DOUBLE) /
         |             sum(n) OVER (PARTITION BY event_type), 6) AS p
-        |FROM counts ORDER BY event_type, next_type""".stripMargin,
-    "q85_histogram" ->
+        |FROM counts ORDER BY event_type, next_type""".stripMargin),
+    QueryDef("q85_histogram", q85Histogram _,
       """WITH bounds AS (
         |  SELECT min(l_extendedprice) AS lo, max(l_extendedprice) AS hi
         |  FROM lineitem)
@@ -798,5 +779,5 @@ object Breadth3 {
         |       CAST(sum(CAST(round(l_extendedprice * 100) AS BIGINT))
         |            AS BIGINT) AS sum_price_cents
         |FROM lineitem CROSS JOIN bounds
-        |GROUP BY 1 ORDER BY 1""".stripMargin)
+        |GROUP BY 1 ORDER BY 1""".stripMargin))
 }

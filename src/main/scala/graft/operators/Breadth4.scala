@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.QueryDef
 import graft.sources.Tables
 
 /** [EXT] breadth tranche 4 — four operator families the earlier
@@ -150,14 +151,8 @@ object Breadth4 {
       .limit(TopMovers)
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q190_rolling_median" -> (q190RollingMedian _),
-    "q191_journey_mining" -> (q191JourneyMining _),
-    "q192_skyline" -> (q192Skyline _),
-    "q193_rank_delta" -> (q193RankDelta _))
-
-  val oracles: Map[String, String] = Map(
-    "q190_rolling_median" ->
+  val defs: Seq[QueryDef] = Seq(
+    QueryDef("q190_rolling_median", q190RollingMedian _,
       s"""WITH ev AS (
         |  SELECT user_id, event_id, epoch_us(CAST(ts AS TIMESTAMP)) AS us,
         |         CAST(round(value * 100, 0) AS BIGINT) AS cents
@@ -167,8 +162,8 @@ object Breadth4 {
         |         PARTITION BY user_id ORDER BY us, event_id
         |         ROWS BETWEEN $MedianFrame PRECEDING AND CURRENT ROW)
         |         / 100.0, 6) AS rolling_median
-        |FROM ev ORDER BY user_id, event_id""".stripMargin,
-    "q191_journey_mining" ->
+        |FROM ev ORDER BY user_id, event_id""".stripMargin),
+    QueryDef("q191_journey_mining", q191JourneyMining _,
       s"""WITH ranked AS (
         |  SELECT user_id, event_type,
         |         row_number() OVER (PARTITION BY user_id
@@ -182,8 +177,8 @@ object Breadth4 {
         |  GROUP BY user_id)
         |SELECT journey, count(*) AS n_users
         |FROM journeys GROUP BY journey
-        |ORDER BY n_users DESC, journey""".stripMargin,
-    "q192_skyline" ->
+        |ORDER BY n_users DESC, journey""".stripMargin),
+    QueryDef("q192_skyline", q192Skyline _,
       """WITH parts AS (
         |  SELECT p_partkey,
         |         CAST(round(p_retailprice * 100, 0) AS BIGINT) AS cents,
@@ -195,8 +190,8 @@ object Breadth4 {
         |  SELECT 1 FROM parts b
         |  WHERE b.cents <= a.cents AND b.p_size >= a.p_size
         |    AND (b.cents < a.cents OR b.p_size > a.p_size))
-        |ORDER BY p_partkey""".stripMargin,
-    "q193_rank_delta" ->
+        |ORDER BY p_partkey""".stripMargin),
+    QueryDef("q193_rank_delta", q193RankDelta _,
       s"""WITH li AS (
         |  SELECT l.l_partkey AS part,
         |         CAST(round(l.l_extendedprice * 100, 0) AS BIGINT) AS cents,
@@ -221,5 +216,5 @@ object Breadth4 {
         |       cents_a, cents_b
         |FROM ra JOIN rb USING (part)
         |ORDER BY rank_gain DESC, cents_b DESC, part
-        |LIMIT $TopMovers""".stripMargin)
+        |LIMIT $TopMovers""".stripMargin))
 }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.QueryDef
 import graft.sources.Tables
 
 /** [EXT] round-11 breadth: binary-signature Hamming retrieval (q348),
@@ -389,16 +390,6 @@ object Breadth5 {
       .limit(20)
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q348_hamming_retrieval" -> (q348HammingRetrieval _),
-    "q349_cohort_retention" -> (q349CohortRetention _),
-    "q350_retrieval_exposure" -> (q350RetrievalExposure _),
-    "q351_temporal_holdout" -> (q351TemporalHoldout _),
-    "q352_theil_decomposition" -> (q352TheilDecomposition _),
-    "q353_benford_audit" -> (q353BenfordAudit _),
-    "q354_jl_distortion" -> (q354JlDistortion _),
-    "q355_session_paths" -> (q355SessionPaths _))
-
   import DedupEmbedding.{EmbBandBits, EmbNPlanes, EmbCapFloor, EmbCapDiv}
   import Similarity.{QselCte, onlyQueries}
 
@@ -467,11 +458,11 @@ object Breadth5 {
       |btop AS (SELECT qid, cid FROM branked WHERE rank <= 10)"""
       .stripMargin
 
-  val oracles: Map[String, String] = Map(
+  val defs: Seq[QueryDef] = Seq(
     // NOTE: bandCtes is already stripped — concatenate, never
     // stripMargin over it again (a second pass eats the `||` concat
     // lines inside it; the q224 mmrSql lesson)
-    "q348_hamming_retrieval" ->
+    QueryDef("q348_hamming_retrieval", q348HammingRetrieval _,
       (s"WITH $QselCte,\n$bandCtes,\n" +
       s"""cand AS (
         |  SELECT DISTINCT q.vec_id AS qid, c.vec_id AS cid
@@ -490,8 +481,8 @@ object Breadth5 {
         |         row_number() OVER (PARTITION BY qid
         |                            ORDER BY hamming, cid) AS rn
         |  FROM ham)
-        |WHERE rn <= $HammK ORDER BY qid, rn""".stripMargin),
-    "q349_cohort_retention" ->
+        |WHERE rn <= $HammK ORDER BY qid, rn""".stripMargin)),
+    QueryDef("q349_cohort_retention", q349CohortRetention _,
       """WITH ev AS (
         |  SELECT user_id, CAST(ts AS DATE) AS d FROM events),
         |d0 AS (SELECT min(d) AS d0 FROM ev),
@@ -511,8 +502,8 @@ object Breadth5 {
         |FROM uw u JOIN coh c ON u.user_id = c.user_id
         |JOIN sizes s ON s.cohort_week = c.cohort_week
         |GROUP BY 1, 2, s.cohort_size
-        |ORDER BY 1, 2""".stripMargin,
-    "q350_retrieval_exposure" ->
+        |ORDER BY 1, 2""".stripMargin),
+    QueryDef("q350_retrieval_exposure", q350RetrievalExposure _,
       s"""WITH $bruteTopCtes,
         |expo AS (SELECT cid, CAST(count(*) AS BIGINT) AS x
         |         FROM btop GROUP BY 1),
@@ -531,8 +522,8 @@ object Breadth5 {
         |                  - (nn.n + 1) * a.sx AS DOUBLE)
         |             / (CAST(nn.n AS DOUBLE) * CAST(a.sx AS DOUBLE)), 6)
         |         AS exposure_gini
-        |FROM agg a, nn""".stripMargin,
-    "q351_temporal_holdout" ->
+        |FROM agg a, nn""".stripMargin),
+    QueryDef("q351_temporal_holdout", q351TemporalHoldout _,
       """WITH ev AS (
         |  SELECT user_id, event_type, epoch_us(ts) AS us FROM events),
         |mid AS (SELECT (min(us) + max(us)) // 2 AS mid FROM ev),
@@ -555,8 +546,8 @@ object Breadth5 {
         |       round(CAST(count(DISTINCT CASE WHEN seen = 1
         |                                      THEN user_id END) AS DOUBLE)
         |             / count(DISTINCT user_id), 6) AS warm_user_share
-        |FROM test GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q352_theil_decomposition" ->
+        |FROM test GROUP BY 1 ORDER BY 1""".stripMargin),
+    QueryDef("q352_theil_decomposition", q352TheilDecomposition _,
       """WITH spend AS (
         |  SELECT o.o_custkey AS custkey,
         |         CAST(sum(CAST(round(o_totalprice * 100, 0) AS BIGINT))
@@ -606,8 +597,9 @@ object Breadth5 {
         |             / (SELECT n FROM tot) / 1e6, 6) AS theil_total,
         |       round(CAST((SELECT b_micro FROM totals) AS DOUBLE) / 1e6, 6)
         |         AS theil_between
-        |FROM nation_rows ORDER BY nation""".stripMargin,
-    "q353_benford_audit" -> {
+        |FROM nation_rows ORDER BY nation""".stripMargin),
+    QueryDef("q353_benford_audit", q353BenfordAudit _,
+      {
       val ppm = BenfordPpm.zipWithIndex
         .map { case (p, i) => s"(${i + 1}, ${p})" }.mkString(", ")
       s"""WITH expected(digit, expected_ppm) AS (VALUES $ppm),
@@ -633,8 +625,9 @@ object Breadth5 {
         |         AS BIGINT) AS chi2_micro
         |FROM expected e LEFT JOIN obs o ON o.digit = e.digit
         |ORDER BY e.digit""".stripMargin
-    },
-    "q354_jl_distortion" -> {
+    }),
+    QueryDef("q354_jl_distortion", q354JlDistortion _,
+      {
       s"""WITH $QselCte,
         |ex AS (
         |  SELECT vec_id, CAST(unnest(embedding) AS DOUBLE) AS x,
@@ -689,8 +682,8 @@ object Breadth5 {
         |       round(CAST(max(ratio_micro) AS DOUBLE) / min(ratio_micro),
         |             6) AS spread
         |FROM ratios""".stripMargin
-    },
-    "q355_session_paths" ->
+    }),
+    QueryDef("q355_session_paths", q355SessionPaths _,
       s"""WITH ev AS (
         |  SELECT user_id, event_id, event_type, epoch_us(ts) AS us
         |  FROM events),
@@ -714,5 +707,5 @@ object Breadth5 {
         |  FROM sess GROUP BY 1, 2)
         |SELECT path, CAST(count(*) AS BIGINT) AS n_sessions
         |FROM paths GROUP BY 1
-        |ORDER BY n_sessions DESC, path LIMIT 20""".stripMargin)
+        |ORDER BY n_sessions DESC, path LIMIT 20""".stripMargin))
 }

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.QueryDef
 import graft.functions.Hashing
 import graft.sources.Tables
 
@@ -325,17 +326,8 @@ object Breadth6 {
           .as("hrw_moved_frac"))
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q356_broadcast_advisor" -> (q356BroadcastAdvisor _),
-    "q357_novelty_curve" -> (q357NoveltyCurve _),
-    "q358_trade_flows" -> (q358TradeFlows _),
-    "q359_ltv_curve" -> (q359LtvCurve _),
-    "q360_encoding_advisor" -> (q360EncodingAdvisor _),
-    "q361_pseudonymize_audit" -> (q361PseudonymizeAudit _),
-    "q362_shard_rebalance" -> (q362ShardRebalance _))
-
-  val oracles: Map[String, String] = Map(
-    "q356_broadcast_advisor" ->
+  val defs: Seq[QueryDef] = Seq(
+    QueryDef("q356_broadcast_advisor", q356BroadcastAdvisor _,
       s"""SELECT * FROM (
         |  SELECT 'customer' AS table_name, CAST(count(*) AS BIGINT)
         |           AS n_rows,
@@ -373,8 +365,8 @@ object Breadth6 {
         |         round(CAST(sum(len(s_name) + 20) AS DOUBLE) / count(*), 6),
         |         sum(len(s_name) + 20) <= $BroadcastBudget
         |  FROM supplier)
-        |ORDER BY table_name""".stripMargin,
-    "q357_novelty_curve" ->
+        |ORDER BY table_name""".stripMargin),
+    QueryDef("q357_novelty_curve", q357NoveltyCurve _,
       (s"WITH ${Dedup.shinglesCte},\n" +
       """ids AS (SELECT min(doc_id) AS lo, max(doc_id) AS hi
         |        FROM documents),
@@ -400,8 +392,8 @@ object Breadth6 {
         |       round(CAST(sum(new_shingles) OVER (ORDER BY bucket
         |           ROWS UNBOUNDED PRECEDING) AS DOUBLE)
         |         / (SELECT t FROM tot), 6) AS cum_share
-        |FROM pb ORDER BY bucket""".stripMargin),
-    "q358_trade_flows" ->
+        |FROM pb ORDER BY bucket""".stripMargin)),
+    QueryDef("q358_trade_flows", q358TradeFlows _,
       """WITH flows AS (
         |  SELECT c.c_nationkey AS from_nation, s.s_nationkey AS to_nation,
         |         CAST(count(*) AS BIGINT) AS n_items,
@@ -417,8 +409,8 @@ object Breadth6 {
         |FROM flows f
         |LEFT JOIN flows r ON r.from_nation = f.to_nation
         |                 AND r.to_nation = f.from_nation
-        |ORDER BY f.from_nation, f.to_nation""".stripMargin,
-    "q359_ltv_curve" ->
+        |ORDER BY f.from_nation, f.to_nation""".stripMargin),
+    QueryDef("q359_ltv_curve", q359LtvCurve _,
       """WITH ev AS (
         |  SELECT user_id, CAST(ts AS DATE) AS d,
         |         CAST(round(value * 100, 0) AS BIGINT) AS cents
@@ -456,8 +448,8 @@ object Breadth6 {
         |       round(CAST(sum(incr_micro) OVER (ORDER BY k
         |           ROWS UNBOUNDED PRECEDING) AS DOUBLE) / 1e6, 6)
         |         AS ltv_dollars
-        |FROM per_k ORDER BY week_offset""".stripMargin,
-    "q360_encoding_advisor" ->
+        |FROM per_k ORDER BY week_offset""".stripMargin),
+    QueryDef("q360_encoding_advisor", q360EncodingAdvisor _,
       """WITH melted AS (
         |  SELECT 'o_custkey' AS col_name, CAST(o_custkey AS VARCHAR)
         |    AS val FROM orders
@@ -479,8 +471,8 @@ object Breadth6 {
         |       round(CAST(sum(len(val)) AS DOUBLE) / count(*), 6)
         |         AS avg_width,
         |       count(DISTINCT val) * 10 < count(*) AS dictionary_friendly
-        |FROM melted GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q361_pseudonymize_audit" ->
+        |FROM melted GROUP BY 1 ORDER BY 1""".stripMargin),
+    QueryDef("q361_pseudonymize_audit", q361PseudonymizeAudit _,
       """WITH ids AS (
         |  SELECT DISTINCT user_id FROM events),
         |mapped AS (
@@ -507,8 +499,8 @@ object Breadth6 {
         |       (b.u_groups = c.p_groups AND b.u_events = c.p_events
         |        AND b.u_max = c.p_max) AS fk_preserved,
         |       b.u_events AS n_events
-        |FROM a, b, c""".stripMargin,
-    "q362_shard_rebalance" ->
+        |FROM a, b, c""".stripMargin),
+    QueryDef("q362_shard_rebalance", q362ShardRebalance _,
       """WITH keys AS (
         |  SELECT DISTINCT user_id,
         |         ('0x' || substr(md5('shard:' || CAST(user_id AS VARCHAR)),
@@ -538,5 +530,5 @@ object Breadth6 {
         |            AS BIGINT) AS hrw_moved,
         |       round(CAST(sum(CASE WHEN hrw_moved THEN 1 ELSE 0 END)
         |                  AS DOUBLE) / count(*), 6) AS hrw_moved_frac
-        |FROM moved""".stripMargin)
+        |FROM moved""".stripMargin))
 }

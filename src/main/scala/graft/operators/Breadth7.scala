@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.QueryDef
 import graft.sources.Tables
 
 /** [EXT] round-11 breadth, third batch: exact distributed median
@@ -162,13 +163,8 @@ object Breadth7 {
           col("v_micro").cast("double") / 1e6, 6).as("chi2"))
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q363_exact_median" -> (q363ExactMedian _),
-    "q364_neyman_allocation" -> (q364NeymanAllocation _),
-    "q365_logrank_test" -> (q365LogrankTest _))
-
-  val oracles: Map[String, String] = Map(
-    "q363_exact_median" ->
+  val defs: Seq[QueryDef] = Seq(
+    QueryDef("q363_exact_median", q363ExactMedian _,
       """WITH c AS (
         |  SELECT CAST(round(l_extendedprice * 100, 0) AS BIGINT)
         |           AS cents,
@@ -186,8 +182,9 @@ object Breadth7 {
         |         AS median_dollars
         |FROM ranked
         |WHERE r = ((SELECT n FROM n) + 1) // 2
-        |   OR r = ((SELECT n FROM n) + 2) // 2""".stripMargin,
-    "q364_neyman_allocation" -> {
+        |   OR r = ((SELECT n FROM n) + 2) // 2""".stripMargin),
+    QueryDef("q364_neyman_allocation", q364NeymanAllocation _,
+      {
       val b = NeymanBudget
       s"""WITH strata AS (
         |  SELECT c_mktsegment AS segment,
@@ -224,8 +221,8 @@ object Breadth7 {
         |       base_alloc + CASE WHEN rem_rank <=
         |           $b - (SELECT tb FROM tot) THEN 1 ELSE 0 END AS alloc
         |FROM ranked ORDER BY segment""".stripMargin
-    },
-    "q365_logrank_test" ->
+    }),
+    QueryDef("q365_logrank_test", q365LogrankTest _,
       """WITH lifes AS (
         |  SELECT CASE WHEN o.o_orderpriority IN ('1-URGENT', '2-HIGH')
         |              THEN 1 ELSE 0 END AS g1,
@@ -266,5 +263,5 @@ object Breadth7 {
         |       round(CAST(sum(u_micro) AS DOUBLE) * sum(u_micro)
         |             / CAST(sum(v_micro) AS DOUBLE) / 1e6, 6) AS chi2
         |FROM terms, pop p
-        |GROUP BY 1, 2""".stripMargin)
+        |GROUP BY 1, 2""".stripMargin))
 }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.QueryDef
 import graft.sources.Tables
 
 /** [EXT] round-11 breadth, fourth batch — exact financial/ops
@@ -238,14 +239,8 @@ object Breadth8 {
       .orderBy("bucket")
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q366_grouped_median" -> (q366GroupedMedian _),
-    "q367_penny_proration" -> (q367PennyProration _),
-    "q368_revenue_recognition" -> (q368RevenueRecognition _),
-    "q369_open_order_aging" -> (q369OpenOrderAging _))
-
-  val oracles: Map[String, String] = Map(
-    "q366_grouped_median" ->
+  val defs: Seq[QueryDef] = Seq(
+    QueryDef("q366_grouped_median", q366GroupedMedian _,
       """WITH vals AS (
         |  SELECT c.c_mktsegment AS segment,
         |         CAST(round(o_totalprice * 100, 0) AS BIGINT) AS cents,
@@ -264,8 +259,8 @@ object Breadth8 {
         |         AS median_dollars
         |FROM ranked
         |WHERE rn = (n_orders + 1) // 2 OR rn = (n_orders + 2) // 2
-        |GROUP BY segment ORDER BY segment""".stripMargin,
-    "q367_penny_proration" ->
+        |GROUP BY segment ORDER BY segment""".stripMargin),
+    QueryDef("q367_penny_proration", q367PennyProration _,
       """WITH lines AS (
         |  SELECT l.l_orderkey, l.l_linenumber,
         |         CAST(round(l_extendedprice * 100, 0) AS BIGINT)
@@ -310,8 +305,8 @@ object Breadth8 {
         |       bool_and(alloc_sum = total_cents) AS allocation_exact,
         |       CAST(sum(total_cents) AS BIGINT)
         |         AS total_allocated_cents
-        |FROM per_order""".stripMargin,
-    "q368_revenue_recognition" ->
+        |FROM per_order""".stripMargin),
+    QueryDef("q368_revenue_recognition", q368RevenueRecognition _,
       """WITH units AS (
         |  SELECT l_orderkey, l_linenumber,
         |         CAST(l_shipdate AS DATE) AS ship,
@@ -366,8 +361,8 @@ object Breadth8 {
         |       round(CAST(recognized_cents AS DOUBLE) /
         |             (SELECT sum(recognized_cents) FROM by_month), 6)
         |         AS share
-        |FROM by_month ORDER BY month""".stripMargin,
-    "q369_open_order_aging" ->
+        |FROM by_month ORDER BY month""".stripMargin),
+    QueryDef("q369_open_order_aging", q369OpenOrderAging _,
       """WITH ords AS (
         |  SELECT o_orderkey, CAST(o_orderdate AS DATE) AS ord,
         |         CAST(round(o_totalprice * 100, 0) AS BIGINT) AS cents
@@ -403,5 +398,5 @@ object Breadth8 {
         |       round(CAST(coalesce(a.cents, 0) AS DOUBLE) /
         |             (SELECT sum(cents) FROM agg), 6) AS value_share
         |FROM spine s LEFT JOIN agg a ON a.bucket = s.bucket
-        |ORDER BY s.bucket""".stripMargin)
+        |ORDER BY s.bucket""".stripMargin))
 }

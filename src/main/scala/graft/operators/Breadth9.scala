@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.QueryDef
 import graft.sources.Tables
 
 /** [EXT] round-11 breadth, fifth batch: ABC revenue classification on
@@ -156,60 +157,8 @@ object Breadth9 {
     ladder.reduce(_ unionByName _).orderBy("per_mille")
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q370_abc_classification" -> (q370AbcClassification _),
-    "q371_duplicate_invoice" -> (q371DuplicateInvoice _),
-    "q372_horizon_audit" -> (q372HorizonAudit _),
-    "q373_quantile_ladder" -> (q373QuantileLadder _))
-
-  val oracles: Map[String, String] = Map(
-    "q372_horizon_audit" -> {
-      val h = Breadth8.RecognitionHorizonDays
-      s"""WITH spans AS (
-        |  SELECT CAST(round(l_extendedprice * 100, 0) AS BIGINT)
-        |           AS cents,
-        |         date_diff('day',
-        |           least(CAST(o.o_orderdate AS DATE),
-        |                 CAST(l.l_shipdate AS DATE)),
-        |           greatest(CAST(o.o_orderdate AS DATE),
-        |                    CAST(l.l_shipdate AS DATE))) + 1 AS raw_days
-        |  FROM lineitem l JOIN orders o ON o.o_orderkey = l.l_orderkey)
-        |SELECT CAST(count(*) AS BIGINT) AS n_lines,
-        |       CAST(sum(CASE WHEN raw_days > $h THEN 1 ELSE 0 END)
-        |            AS BIGINT) AS n_capped,
-        |       round(CAST(sum(CASE WHEN raw_days > $h THEN 1 ELSE 0 END)
-        |                  AS DOUBLE) / count(*), 6) AS capped_line_share,
-        |       round(CAST(sum(CASE WHEN raw_days > $h THEN cents
-        |                       ELSE 0 END) AS DOUBLE)
-        |             / CAST(sum(cents) AS BIGINT), 6)
-        |         AS capped_value_share,
-        |       round(CAST(sum(raw_days) AS DOUBLE) / count(*), 6)
-        |         AS mean_raw_span_days,
-        |       $h AS horizon_days
-        |FROM spans""".stripMargin
-    },
-    "q373_quantile_ladder" -> {
-      val arms = QuantileLadder.map { p =>
-        s"""SELECT CAST($p AS BIGINT) AS per_mille, cents,
-           |       CAST(cents AS DOUBLE) / 100.0 AS dollars
-           |FROM ranked
-           |WHERE r = ($p * (SELECT n FROM n) + 999)
-           |        // 1000""".stripMargin
-      }.mkString("\nUNION ALL\n")
-      s"""WITH c AS (
-        |  SELECT CAST(round(o_totalprice * 100, 0) AS BIGINT) AS cents,
-        |         o_orderkey
-        |  FROM orders),
-        |n AS (SELECT CAST(count(*) AS BIGINT) AS n FROM c),
-        |ranked AS (
-        |  SELECT cents,
-        |         row_number() OVER (ORDER BY cents, o_orderkey) AS r
-        |  FROM c)
-        |SELECT * FROM (
-        |$arms)
-        |ORDER BY per_mille""".stripMargin
-    },
-    "q370_abc_classification" ->
+  val defs: Seq[QueryDef] = Seq(
+    QueryDef("q370_abc_classification", q370AbcClassification _,
       """WITH by_part AS (
         |  SELECT l_partkey AS part,
         |         CAST(sum(CAST(round(l_extendedprice * 100, 0) AS BIGINT))
@@ -231,8 +180,8 @@ object Breadth9 {
         |       CAST(sum(cents) AS BIGINT) AS cents,
         |       round(CAST(sum(cents) AS DOUBLE) / max(total), 6)
         |         AS revenue_share
-        |FROM classed GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q371_duplicate_invoice" ->
+        |FROM classed GROUP BY 1 ORDER BY 1""".stripMargin),
+    QueryDef("q371_duplicate_invoice", q371DuplicateInvoice _,
       s"""WITH ords AS (
         |  SELECT o_custkey AS cust,
         |         CAST(round(o_totalprice * 100, 0) AS BIGINT) AS cents,
@@ -258,5 +207,53 @@ object Breadth9 {
         |         AS n_suspect_pairs,
         |       coalesce(a.n_held_orders, 0) AS n_held_orders,
         |       coalesce(a.cents_at_risk, 0) AS cents_at_risk
-        |FROM agg a""".stripMargin)
+        |FROM agg a""".stripMargin),
+    QueryDef("q372_horizon_audit", q372HorizonAudit _,
+      {
+      val h = Breadth8.RecognitionHorizonDays
+      s"""WITH spans AS (
+        |  SELECT CAST(round(l_extendedprice * 100, 0) AS BIGINT)
+        |           AS cents,
+        |         date_diff('day',
+        |           least(CAST(o.o_orderdate AS DATE),
+        |                 CAST(l.l_shipdate AS DATE)),
+        |           greatest(CAST(o.o_orderdate AS DATE),
+        |                    CAST(l.l_shipdate AS DATE))) + 1 AS raw_days
+        |  FROM lineitem l JOIN orders o ON o.o_orderkey = l.l_orderkey)
+        |SELECT CAST(count(*) AS BIGINT) AS n_lines,
+        |       CAST(sum(CASE WHEN raw_days > $h THEN 1 ELSE 0 END)
+        |            AS BIGINT) AS n_capped,
+        |       round(CAST(sum(CASE WHEN raw_days > $h THEN 1 ELSE 0 END)
+        |                  AS DOUBLE) / count(*), 6) AS capped_line_share,
+        |       round(CAST(sum(CASE WHEN raw_days > $h THEN cents
+        |                       ELSE 0 END) AS DOUBLE)
+        |             / CAST(sum(cents) AS BIGINT), 6)
+        |         AS capped_value_share,
+        |       round(CAST(sum(raw_days) AS DOUBLE) / count(*), 6)
+        |         AS mean_raw_span_days,
+        |       $h AS horizon_days
+        |FROM spans""".stripMargin
+    }),
+    QueryDef("q373_quantile_ladder", q373QuantileLadder _,
+      {
+      val arms = QuantileLadder.map { p =>
+        s"""SELECT CAST($p AS BIGINT) AS per_mille, cents,
+           |       CAST(cents AS DOUBLE) / 100.0 AS dollars
+           |FROM ranked
+           |WHERE r = ($p * (SELECT n FROM n) + 999)
+           |        // 1000""".stripMargin
+      }.mkString("\nUNION ALL\n")
+      s"""WITH c AS (
+        |  SELECT CAST(round(o_totalprice * 100, 0) AS BIGINT) AS cents,
+        |         o_orderkey
+        |  FROM orders),
+        |n AS (SELECT CAST(count(*) AS BIGINT) AS n FROM c),
+        |ranked AS (
+        |  SELECT cents,
+        |         row_number() OVER (ORDER BY cents, o_orderkey) AS r
+        |  FROM c)
+        |SELECT * FROM (
+        |$arms)
+        |ORDER BY per_mille""".stripMargin
+    }))
 }

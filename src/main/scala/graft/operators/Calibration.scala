@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.QueryDef
 import graft.sources.Tables
 
 /** [EXT] score calibration across sources (q168) — quantile
@@ -255,14 +256,8 @@ object Calibration {
       .orderBy("bin")
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q237_isotonic_calibrate" -> (q237IsotonicCalibrate _),
-    "q168_quantile_normalize" -> (q168QuantileNormalize _),
-    "q169_int8_calibrate" -> (q169Int8Calibrate _),
-    "q218_conformal_threshold" -> (q218ConformalThreshold _))
-
-  val oracles: Map[String, String] = Map(
-    "q237_isotonic_calibrate" ->
+  val defs: Seq[QueryDef] = Seq(
+    QueryDef("q237_isotonic_calibrate", q237IsotonicCalibrate _,
       s"""WITH per_user AS (
         |  SELECT user_id,
         |         CAST(sum(CAST(round(value * 100, 0) AS BIGINT))
@@ -308,39 +303,8 @@ object Calibration {
         |       round(CAST(b.n_pos AS DOUBLE) / b.n_users, 6) AS raw_rate,
         |       round(i.iso_rate, 6) AS iso_rate
         |FROM bins b JOIN iso i ON b.bin = i.k
-        |ORDER BY b.bin""".stripMargin,
-    "q169_int8_calibrate" ->
-      s"""WITH coords AS (
-         |  SELECT CAST(unnest(embedding) AS DOUBLE) AS x FROM embeddings),
-         |sc AS (
-         |  SELECT round(quantile_cont(abs(x), $ClipP), 6) AS scale,
-         |         count(*) AS n_coords
-         |  FROM coords),
-         |n AS (SELECT CAST(count(*) AS BIGINT) AS n_vectors,
-         |             CAST(max(len(embedding)) AS INTEGER) AS dim
-         |      FROM embeddings),
-         |quant AS (
-         |  SELECT x, scale, n_coords,
-         |         floor(x / scale * 127 + 0.5) AS yq,
-         |         least(greatest(floor(x / scale * 127 + 0.5), -127.0), 127.0)
-         |           AS q
-         |  FROM coords CROSS JOIN sc),
-         |err AS (
-         |  SELECT scale, n_coords,
-         |         CASE WHEN yq <> q THEN 1 ELSE 0 END AS clipped,
-         |         CAST(floor((x - q * scale / 127) * 1000000 + 0.5)
-         |              AS BIGINT) AS e6
-         |  FROM quant)
-         |SELECT (SELECT n_vectors FROM n) AS n_vectors,
-         |       (SELECT dim FROM n) AS dim,
-         |       min(scale) AS scale,
-         |       CAST(sum(clipped) AS BIGINT) AS n_clipped,
-         |       round(CAST(sum(clipped) AS DOUBLE) / min(n_coords), 6)
-         |         AS clip_rate,
-         |       round(CAST(sum(e6 * e6) AS DOUBLE) / min(n_coords) / 1e12, 9)
-         |         AS mse
-         |FROM err""".stripMargin,
-    "q168_quantile_normalize" ->
+        |ORDER BY b.bin""".stripMargin),
+    QueryDef("q168_quantile_normalize", q168QuantileNormalize _,
       s"""WITH base AS (
          |  SELECT doc_id, source, ' ' || text || ' ' AS padded,
          |         len(string_split(trim(text), ' ')) AS n_words,
@@ -377,8 +341,39 @@ object Calibration {
          |                     - g[CAST(((rk - 1) * $G) // (ns - 1) AS INT) + 1])
          |             ELSE 0.0 END, 6) AS calibrated
          |FROM ranked CROSS JOIN grid
-         |ORDER BY doc_id""".stripMargin,
-    "q218_conformal_threshold" ->
+         |ORDER BY doc_id""".stripMargin),
+    QueryDef("q169_int8_calibrate", q169Int8Calibrate _,
+      s"""WITH coords AS (
+         |  SELECT CAST(unnest(embedding) AS DOUBLE) AS x FROM embeddings),
+         |sc AS (
+         |  SELECT round(quantile_cont(abs(x), $ClipP), 6) AS scale,
+         |         count(*) AS n_coords
+         |  FROM coords),
+         |n AS (SELECT CAST(count(*) AS BIGINT) AS n_vectors,
+         |             CAST(max(len(embedding)) AS INTEGER) AS dim
+         |      FROM embeddings),
+         |quant AS (
+         |  SELECT x, scale, n_coords,
+         |         floor(x / scale * 127 + 0.5) AS yq,
+         |         least(greatest(floor(x / scale * 127 + 0.5), -127.0), 127.0)
+         |           AS q
+         |  FROM coords CROSS JOIN sc),
+         |err AS (
+         |  SELECT scale, n_coords,
+         |         CASE WHEN yq <> q THEN 1 ELSE 0 END AS clipped,
+         |         CAST(floor((x - q * scale / 127) * 1000000 + 0.5)
+         |              AS BIGINT) AS e6
+         |  FROM quant)
+         |SELECT (SELECT n_vectors FROM n) AS n_vectors,
+         |       (SELECT dim FROM n) AS dim,
+         |       min(scale) AS scale,
+         |       CAST(sum(clipped) AS BIGINT) AS n_clipped,
+         |       round(CAST(sum(clipped) AS DOUBLE) / min(n_coords), 6)
+         |         AS clip_rate,
+         |       round(CAST(sum(e6 * e6) AS DOUBLE) / min(n_coords) / 1e12, 9)
+         |         AS mse
+         |FROM err""".stripMargin),
+    QueryDef("q218_conformal_threshold", q218ConformalThreshold _,
       s"""WITH base AS (
         |  SELECT c_custkey AS k, c_mktsegment AS seg,
         |         CAST(round(c_acctbal * 100, 0) AS BIGINT) AS cents,
@@ -412,5 +407,5 @@ object Calibration {
         |FROM scored s JOIN thr t ON s.seg = t.seg
         |WHERE NOT s.is_cal
         |GROUP BY s.seg, s.n_cal, s.m_rank, t.thr_scaled
-        |ORDER BY s.seg""".stripMargin)
+        |ORDER BY s.seg""".stripMargin))
 }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.QueryDef
 import graft.sources.Tables
 
 /** [EXT] value-contribution analytics over the orders/lineitem facts:
@@ -696,26 +697,8 @@ object Contribution {
       .orderBy("month")
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q339_market_share_shift" -> (q339MarketShareShift _),
-    "q342_fulfilment_span" -> (q342FulfilmentSpan _),
-    "q331_price_elasticity" -> (q331PriceElasticity _),
-    "q323_return_trend" -> (q323ReturnTrend _),
-    "q324_discount_curve" -> (q324DiscountCurve _),
-    "q319_markup_audit" -> (q319MarkupAudit _),
-    "q317_segment_migration" -> (q317SegmentMigration _),
-    "q314_price_dispersion" -> (q314PriceDispersion _),
-    "q310_supplier_hhi" -> (q310SupplierHhi _),
-    "q303_revenue_var" -> (q303RevenueVar _),
-    "q281_price_volume_mix" -> (q281PriceVolumeMix _),
-    "q274_simpson_audit" -> (q274SimpsonAudit _),
-    "q260_rank_overlap" -> (q260RankOverlap _),
-    "q184_rfm_segments" -> (q184RfmSegments _),
-    "q185_pareto_deciles" -> (q185ParetoDeciles _),
-    "q211_revenue_gini" -> (q211RevenueGini _))
-
-  val oracles: Map[String, String] = Map(
-    "q339_market_share_shift" ->
+  val defs: Seq[QueryDef] = Seq(
+    QueryDef("q339_market_share_shift", q339MarketShareShift _,
       """WITH li AS (
         |  SELECT epoch_us(CAST(l_shipdate AS TIMESTAMP)) AS us,
         |         l_suppkey,
@@ -748,8 +731,8 @@ object Contribution {
         |         AS share_delta,
         |       round(v.tv, 6) AS mix_tv_distance
         |FROM prof p, tot t, tv v
-        |ORDER BY p.nation""".stripMargin,
-    "q342_fulfilment_span" ->
+        |ORDER BY p.nation""".stripMargin),
+    QueryDef("q342_fulfilment_span", q342FulfilmentSpan _,
       """WITH spans AS (
         |  SELECT l_orderkey AS o_orderkey,
         |         CAST(date_diff('day', min(CAST(l_shipdate AS DATE)),
@@ -767,8 +750,8 @@ object Contribution {
         |         AS single_shipment_share,
         |       round(quantile_cont(span, 0.5), 4) AS p50_span_days,
         |       round(quantile_cont(span, 0.9), 4) AS p90_span_days
-        |FROM m GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q331_price_elasticity" ->
+        |FROM m GROUP BY 1 ORDER BY 1""".stripMargin),
+    QueryDef("q331_price_elasticity", q331PriceElasticity _,
       """WITH lines AS (
         |  SELECT p.p_type,
         |         CAST(round(ln(l.l_extendedprice / l.l_quantity) * 1e6,
@@ -796,8 +779,8 @@ object Contribution {
         |       round(num / denx, 6) AS elasticity,
         |       round((num * num) / (denx * deny), 6) AS r2
         |FROM f WHERE k >= 2 AND denx <> 0.0 AND deny <> 0.0
-        |ORDER BY p_type""".stripMargin,
-    "q323_return_trend" ->
+        |ORDER BY p_type""".stripMargin),
+    QueryDef("q323_return_trend", q323ReturnTrend _,
       """WITH li AS (
         |  SELECT strftime(CAST(l_shipdate AS TIMESTAMP), '%Y-%m')
         |           AS month,
@@ -813,8 +796,8 @@ object Contribution {
         |       round(CAST(sum(CASE WHEN l_returnflag = 'R'
         |                          THEN cents ELSE 0 END) AS DOUBLE)
         |             / sum(cents), 6) AS return_revenue_share
-        |FROM li GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q324_discount_curve" ->
+        |FROM li GROUP BY 1 ORDER BY 1""".stripMargin),
+    QueryDef("q324_discount_curve", q324DiscountCurve _,
       """WITH li AS (
         |  SELECT CAST(round(l_discount * 100, 0) AS BIGINT)
         |           AS discount_pct,
@@ -826,8 +809,8 @@ object Contribution {
         |       round(CAST(sum(cents) AS DOUBLE) / 100, 2) AS revenue,
         |       round(CAST(sum(cents) AS DOUBLE) / count(*) / 100, 2)
         |         AS revenue_per_line
-        |FROM li GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q319_markup_audit" ->
+        |FROM li GROUP BY 1 ORDER BY 1""".stripMargin),
+    QueryDef("q319_markup_audit", q319MarkupAudit _,
       """WITH lines AS (
         |  SELECT p.p_brand,
         |         CAST(round((l.l_extendedprice
@@ -838,8 +821,8 @@ object Contribution {
         |       round(quantile_cont(mu, 0.5) / 1e6, 6) AS median_markup,
         |       round(CAST(sum(CASE WHEN mu < 0 THEN 1 ELSE 0 END)
         |               AS DOUBLE) / count(*), 6) AS below_retail_share
-        |FROM lines GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q317_segment_migration" ->
+        |FROM lines GROUP BY 1 ORDER BY 1""".stripMargin),
+    QueryDef("q317_segment_migration", q317SegmentMigration _,
       """WITH ord AS (
         |  SELECT epoch_us(CAST(o_orderdate AS TIMESTAMP)) AS us,
         |         o_custkey,
@@ -884,8 +867,8 @@ object Contribution {
         |SELECT seg_first, seg_second, n_customers,
         |       round(CAST(n_customers AS DOUBLE)
         |             / (SELECT sum(n_customers) FROM counts), 6) AS share
-        |FROM counts ORDER BY seg_first, seg_second""".stripMargin,
-    "q314_price_dispersion" ->
+        |FROM counts ORDER BY seg_first, seg_second""".stripMargin),
+    QueryDef("q314_price_dispersion", q314PriceDispersion _,
       """WITH p AS (
         |  SELECT p_brand,
         |         CAST(round(p_retailprice * 100, 0) AS BIGINT) AS c
@@ -901,8 +884,8 @@ object Contribution {
         |       round(q2 / 100, 2) AS median,
         |       round(q3 / 100, 2) AS p75,
         |       round((q3 - q1) / (q3 + q1), 6) AS cqv
-        |FROM agg ORDER BY p_brand""".stripMargin,
-    "q310_supplier_hhi" ->
+        |FROM agg ORDER BY p_brand""".stripMargin),
+    QueryDef("q310_supplier_hhi", q310SupplierHhi _,
       """WITH rev AS (
         |  SELECT CAST(year(CAST(l_shipdate AS TIMESTAMP)) AS VARCHAR)
         |           || '-Q' ||
@@ -927,8 +910,8 @@ object Contribution {
         |             / (CAST(rt AS DOUBLE) * CAST(rt AS DOUBLE))), 4)
         |         AS effective_suppliers,
         |       round(CAST(rmax AS DOUBLE) / rt, 6) AS top_share
-        |FROM agg ORDER BY qtr""".stripMargin,
-    "q303_revenue_var" ->
+        |FROM agg ORDER BY qtr""".stripMargin),
+    QueryDef("q303_revenue_var", q303RevenueVar _,
       """WITH daily AS (
         |  SELECT CAST(l_shipdate AS DATE) AS day,
         |         CAST(sum(CAST(round(l_extendedprice * 100, 0) AS BIGINT))
@@ -951,8 +934,8 @@ object Contribution {
         |                        THEN 1 ELSE 0 END) / 100, 2)
         |         AS cvar_daily
         |FROM daily d, vr v
-        |GROUP BY v.n_days, v.var5, v.tot""".stripMargin,
-    "q281_price_volume_mix" ->
+        |GROUP BY v.n_days, v.var5, v.tot""".stripMargin),
+    QueryDef("q281_price_volume_mix", q281PriceVolumeMix _,
       """WITH li AS (
         |  SELECT epoch_us(CAST(l_shipdate AS TIMESTAMP)) AS us,
         |         l_partkey,
@@ -990,8 +973,8 @@ object Contribution {
         |                - CAST(r0 AS DOUBLE) / q0)
         |               * CAST(q1 - q0 AS DOUBLE) / 100, 2)
         |       END AS cross_effect
-        |FROM halves ORDER BY p_type""".stripMargin,
-    "q274_simpson_audit" ->
+        |FROM halves ORDER BY p_type""".stripMargin),
+    QueryDef("q274_simpson_audit", q274SimpsonAudit _,
       """WITH per_cust AS (
         |  SELECT o_custkey AS custkey,
         |         CAST(sum(CAST(round(o_totalprice, 0) AS BIGINT))
@@ -1044,8 +1027,9 @@ object Contribution {
         |              - CAST(p.psx AS DOUBLE) * CAST(p.psy AS DOUBLE))
         |       < 0.0 AS sign_reversed
         |FROM by_nation b CROSS JOIN pooled p
-        |ORDER BY nation""".stripMargin,
-    "q260_rank_overlap" -> {
+        |ORDER BY nation""".stripMargin),
+    QueryDef("q260_rank_overlap", q260RankOverlap _,
+      {
       val w6List = s"[${RboW6.mkString(", ")}]"
       s"""WITH ut AS (
         |  SELECT user_id,
@@ -1084,34 +1068,8 @@ object Contribution {
         |         ROWS UNBOUNDED PRECEDING) AS DOUBLE) / 1e6, 6)
         |         AS rbo_cum
         |FROM quant ORDER BY depth""".stripMargin
-    },
-    "q211_revenue_gini" ->
-      """WITH spend AS (
-        |  SELECT o_custkey AS custkey,
-        |         CAST(sum(CAST(round(o_totalprice * 100, 0) AS BIGINT))
-        |              AS BIGINT) AS cents
-        |  FROM orders GROUP BY 1),
-        |by_nation AS (
-        |  SELECT c.c_nationkey AS nation, s.custkey, s.cents
-        |  FROM spend s JOIN customer c ON c.c_custkey = s.custkey),
-        |ranked AS (
-        |  SELECT nation, cents,
-        |         CAST(row_number() OVER (
-        |           PARTITION BY nation ORDER BY cents, custkey)
-        |         AS BIGINT) AS i
-        |  FROM by_nation),
-        |agg AS (
-        |  SELECT nation, count(*) AS n_customers,
-        |         CAST(sum(cents) AS BIGINT) AS total_cents,
-        |         CAST(sum(i * cents) AS BIGINT) AS s_ix
-        |  FROM ranked GROUP BY 1)
-        |SELECT nation, n_customers, total_cents,
-        |       round(CAST(2 * s_ix - (n_customers + 1) * total_cents
-        |                  AS DOUBLE)
-        |             / CAST(n_customers * total_cents AS DOUBLE), 6)
-        |         AS gini
-        |FROM agg ORDER BY nation""".stripMargin,
-    "q184_rfm_segments" ->
+    }),
+    QueryDef("q184_rfm_segments", q184RfmSegments _,
       """WITH by_cust AS (
         |  SELECT o_custkey AS custkey,
         |         max(CAST(o_orderdate AS DATE)) AS last_d,
@@ -1138,8 +1096,8 @@ object Contribution {
         |SELECT r_score, f_score, m_score, count(*) AS n_customers,
         |       CAST(sum(cents) AS BIGINT) AS segment_cents
         |FROM scored GROUP BY 1, 2, 3
-        |ORDER BY r_score, f_score, m_score""".stripMargin,
-    "q185_pareto_deciles" ->
+        |ORDER BY r_score, f_score, m_score""".stripMargin),
+    QueryDef("q185_pareto_deciles", q185ParetoDeciles _,
       """WITH by_part AS (
         |  SELECT l_partkey AS part,
         |         CAST(sum(CAST(round(l_extendedprice * 100, 0) AS BIGINT))
@@ -1162,5 +1120,31 @@ object Contribution {
         |               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
         |             AS DOUBLE) / (SELECT total_cents FROM total), 6)
         |         AS cum_share
-        |FROM per_decile ORDER BY decile""".stripMargin)
+        |FROM per_decile ORDER BY decile""".stripMargin),
+    QueryDef("q211_revenue_gini", q211RevenueGini _,
+      """WITH spend AS (
+        |  SELECT o_custkey AS custkey,
+        |         CAST(sum(CAST(round(o_totalprice * 100, 0) AS BIGINT))
+        |              AS BIGINT) AS cents
+        |  FROM orders GROUP BY 1),
+        |by_nation AS (
+        |  SELECT c.c_nationkey AS nation, s.custkey, s.cents
+        |  FROM spend s JOIN customer c ON c.c_custkey = s.custkey),
+        |ranked AS (
+        |  SELECT nation, cents,
+        |         CAST(row_number() OVER (
+        |           PARTITION BY nation ORDER BY cents, custkey)
+        |         AS BIGINT) AS i
+        |  FROM by_nation),
+        |agg AS (
+        |  SELECT nation, count(*) AS n_customers,
+        |         CAST(sum(cents) AS BIGINT) AS total_cents,
+        |         CAST(sum(i * cents) AS BIGINT) AS s_ix
+        |  FROM ranked GROUP BY 1)
+        |SELECT nation, n_customers, total_cents,
+        |       round(CAST(2 * s_ix - (n_customers + 1) * total_cents
+        |                  AS DOUBLE)
+        |             / CAST(n_customers * total_cents AS DOUBLE), 6)
+        |         AS gini
+        |FROM agg ORDER BY nation""".stripMargin))
 }

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.QueryDef
 import graft.sources.Tables
 
 /** [EXT] K-CENTER CORESET SELECTION (q243) — greedy farthest-point
@@ -79,9 +80,6 @@ object Coreset {
       .orderBy("pick_round")
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q243_kcenter_coreset" -> (q243KCenterCoreset _))
-
   /** Oracle: the same greedy mechanically unrolled — integer
     * micro-vectors via per-position unnest joins, then [[CoresetK]]−1
     * MATERIALIZED state rounds (the q224 chain discipline; everything
@@ -141,6 +139,6 @@ object Coreset {
        |FROM chosen ORDER BY pick_round""".stripMargin
   }
 
-  val oracles: Map[String, String] = Map(
-    "q243_kcenter_coreset" -> kCenterSql)
+  val defs: Seq[QueryDef] = Seq(
+    QueryDef("q243_kcenter_coreset", q243KCenterCoreset _, kCenterSql))
 }

@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.QueryDef
+
 /** [EXT] lead–lag cross-correlation between event-type volume series
   * (q207) — "does signup volume LEAD purchase volume?", the
   * time-series relationship screen run before building a forecasting
@@ -58,11 +60,8 @@ object CrossCorr {
       .orderBy("t1", "t2", "lag")
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q207_lead_lag" -> (q207LeadLag _))
-
-  val oracles: Map[String, String] = Map(
-    "q207_lead_lag" ->
+  val defs: Seq[QueryDef] = Seq(
+    QueryDef("q207_lead_lag", q207LeadLag _,
       s"""WITH ev AS (
         |  SELECT event_type, CAST(CAST(ts AS TIMESTAMP) AS DATE) AS dd
         |  FROM events),
@@ -98,5 +97,5 @@ object CrossCorr {
         |       round(num / sqrt(den1 * den2), 6) AS r
         |FROM fitted
         |WHERE k >= 2 AND den1 > 0 AND den2 > 0
-        |ORDER BY t1, t2, lag""".stripMargin)
+        |ORDER BY t1, t2, lag""".stripMargin))
 }

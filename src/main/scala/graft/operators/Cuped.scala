@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.QueryDef
 import graft.functions.Hashing
 import graft.sources.Tables
 
@@ -88,11 +89,8 @@ object Cuped {
       round(lit(1) - vAdj / vRaw, 6).as("var_reduction"))
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q167_cuped" -> (q167Cuped _))
-
-  val oracles: Map[String, String] = Map(
-    "q167_cuped" ->
+  val defs: Seq[QueryDef] = Seq(
+    QueryDef("q167_cuped", q167Cuped _,
       """WITH ev AS (
         |  SELECT user_id, epoch_us(CAST(ts AS TIMESTAMP)) AS us,
         |         CAST(round(value * 100, 0) AS BIGINT) AS cents
@@ -160,5 +158,5 @@ object Cuped {
         |             / (n_t - 1))
         |          / ((syy_t - sy_t * (sy_t / n_t)) / (n_t - 1)), 6)
         |    AS var_reduction
-        |FROM calc2""".stripMargin)
+        |FROM calc2""".stripMargin))
 }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.QueryDef
 import graft.functions.Hashing
 import graft.sources.Tables
 
@@ -604,26 +605,6 @@ object Curation {
       .orderBy("split")
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q117_leakage_safe_split" -> (q117LeakageSafeSplit _),
-    "q112_weighted_sample" -> (q112WeightedSample _),
-    "q99_data_mix" -> (q99DataMix _),
-    "q97_train_split" -> (q97TrainSplit _),
-    "q98_pack_sequences" -> (q98PackSequences _),
-    "q79_fuzzy_match" -> (q79FuzzyMatch _),
-    "q64_boilerplate_strip" -> (q64BoilerplateStrip _),
-    "q65_pii_scrub" -> (q65PiiScrub _),
-    "q66_contamination" -> (q66Contamination _),
-    "q103_bloom_decontaminate" -> (q103BloomDecontaminate _),
-    "q104_chunk_docs" -> (q104ChunkDocs _),
-    "q124_cdc_chunk" -> (q124CdcChunk _),
-    "q125_cdc_gear" -> (q125CdcGear _),
-    "q127_incremental_chunk_dedup" -> (q127IncrementalChunkDedup _),
-    "q130_token_budget_select" -> (q130TokenBudgetSelect _),
-    "q67_repetition_score" -> (q67RepetitionScore _),
-    "q68_stratified_sample" -> (q68StratifiedSample _),
-    "q69_vocab" -> (q69Vocab _))
-
   /** Shared oracle CTE chain: the q124 md5-window CDC boundary rule
     * down to the per-chunk (doc_id, h, clen) frame (q124 + q127). */
   private val cdcChunksCte: String =
@@ -658,73 +639,9 @@ object Curation {
       |               unnest(generate_series(1, len(ends))) AS i
       |        FROM spans))""".stripMargin
 
-  val oracles: Map[String, String] = Map(
-    // the oracle states the SEMANTICS directly (global greedy cumsum by
-    // quality desc, doc_id); the engine's two-phase bucket form must
-    // equal it row-for-row
-    "q130_token_budget_select" ->
-      """WITH base AS (
-        |  SELECT doc_id, ' ' || text || ' ' AS p,
-        |         CAST(len(string_split(trim(text), ' ')) AS BIGINT)
-        |           AS n_tokens,
-        |         len(string_split(trim(text), ' ')) AS n_words
-        |  FROM documents),
-        |q AS (
-        |  SELECT doc_id, n_tokens,
-        |         round(ln(1.0 + n_words) * (1.0 -
-        |           CAST(CAST((length(p) - length(replace(p, ' the ', ''))) / 5
-        |                + (length(p) - length(replace(p, ' a ', ''))) / 3
-        |                AS INT) AS DOUBLE) / n_words), 6) AS quality
-        |  FROM base),
-        |tot AS (SELECT CAST(floor(0.25 * sum(n_tokens)) AS BIGINT)
-        |          AS budget FROM q),
-        |ranked AS (
-        |  SELECT doc_id, quality, n_tokens,
-        |         sum(n_tokens) OVER (ORDER BY quality DESC, doc_id
-        |                             ROWS UNBOUNDED PRECEDING) AS cum
-        |  FROM q)
-        |SELECT doc_id, quality, n_tokens,
-        |       cum <= budget AS selected
-        |FROM ranked CROSS JOIN tot ORDER BY doc_id""".stripMargin,
-    // the gear table is engine-side (not SQL-portable): contract oracle
-    // in the q37 style — the engine computes the law flags, a
-    // regression flips them against these constants
-    "q125_cdc_gear" ->
-      """SELECT count(*) AS n_docs, TRUE AS twin_dup_ok, TRUE AS max_len_ok
-        |FROM documents WHERE length(text) > 0""".stripMargin,
-    // same boundary rule bit-for-bit: 60-bit md5-prefix hash of the
-    // trailing 16-char window, divisible by 32; end-of-doc boundary
-    // appended; chunks rebuilt from consecutive boundary pairs
-    "q124_cdc_chunk" ->
-      s"""WITH $cdcChunksCte,
-        |shared AS (
-        |  SELECT h, count(DISTINCT doc_id) AS nd FROM chunks GROUP BY 1)
-        |SELECT c.doc_id,
-        |       count(*) AS n_chunks,
-        |       round(avg(c.clen), 4) AS avg_chunk_len,
-        |       CAST(sum(CASE WHEN s.nd >= 2 THEN 1 ELSE 0 END) AS BIGINT)
-        |         AS n_shared_chunks,
-        |       round(CAST(sum(CASE WHEN s.nd >= 2 THEN 1 ELSE 0 END)
-        |                  AS DOUBLE) / count(*), 4) AS dup_frac
-        |FROM chunks c JOIN shared s USING (h)
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-    // q124's chunk CTEs + the persisted-store membership join
-    "q127_incremental_chunk_dedup" ->
-      s"""WITH $cdcChunksCte,
-        |known AS (
-        |  SELECT DISTINCT h FROM chunks WHERE doc_id % 2 = 0)
-        |SELECT c.doc_id,
-        |       count(*) AS n_chunks,
-        |       CAST(sum(CASE WHEN k.h IS NOT NULL THEN 1 ELSE 0 END)
-        |            AS BIGINT) AS n_known_chunks,
-        |       round(CAST(sum(CASE WHEN k.h IS NOT NULL THEN c.clen
-        |                           ELSE 0 END) AS DOUBLE)
-        |             / sum(c.clen), 4) AS known_char_frac
-        |FROM chunks c LEFT JOIN known k ON c.h = k.h
-        |WHERE c.doc_id % 2 = 1
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
+  val defs: Seq[QueryDef] = Seq(
     // q73's recursive closure + q97's split hash keyed on the cluster id
-    "q117_leakage_safe_split" ->
+    QueryDef("q117_leakage_safe_split", q117LeakageSafeSplit _,
       s"""WITH RECURSIVE ${Dedup.shinglesCte},
          |sizes AS (SELECT doc_id, count(*) AS sz FROM shingles GROUP BY 1),
          |inter AS (
@@ -763,8 +680,8 @@ object Curation {
          |       CAST(count(DISTINCT group_key) AS BIGINT) AS n_groups,
          |       CAST(sum(CASE WHEN is_clustered THEN 1 ELSE 0 END) AS BIGINT)
          |         AS n_clustered_docs
-         |FROM b GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q112_weighted_sample" ->
+         |FROM b GROUP BY 1 ORDER BY 1""".stripMargin),
+    QueryDef("q112_weighted_sample", q112WeightedSample _,
       s"""WITH pri AS (
         |  SELECT doc_id, n_chars,
         |         -ln((('0x' || substr(md5('ws_' || CAST(doc_id AS VARCHAR)),
@@ -776,8 +693,8 @@ object Curation {
         |SELECT CAST(row_number() OVER (ORDER BY priority, doc_id) AS INT)
         |         AS rank,
         |       doc_id, n_chars AS weight, round(priority, 8) AS priority
-        |FROM top ORDER BY rank""".stripMargin,
-    "q99_data_mix" ->
+        |FROM top ORDER BY rank""".stripMargin),
+    QueryDef("q99_data_mix", q99DataMix _,
       """WITH counts AS (
         |  SELECT source, count(*) AS n_total,
         |         min(count(*)) OVER () AS min_n
@@ -792,8 +709,8 @@ object Curation {
         |       count(*) FILTER (WHERE keep) AS n_kept,
         |       round(CAST(count(*) FILTER (WHERE keep) AS DOUBLE)
         |             / min(n_total), 4) AS achieved_rate
-        |FROM marked GROUP BY source ORDER BY source""".stripMargin,
-    "q97_train_split" ->
+        |FROM marked GROUP BY source ORDER BY source""".stripMargin),
+    QueryDef("q97_train_split", q97TrainSplit _,
       """WITH buckets AS (
         |  SELECT lang, n_chars,
         |         ('0x' || substr(md5('split:' || CAST(doc_id AS VARCHAR)),
@@ -805,8 +722,8 @@ object Curation {
         |            ELSE 'test' END AS split,
         |       count(*) AS n_docs,
         |       CAST(sum(n_chars) AS BIGINT) AS n_chars
-        |FROM buckets GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-    "q98_pack_sequences" ->
+        |FROM buckets GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin),
+    QueryDef("q98_pack_sequences", q98PackSequences _,
       """WITH toks AS (
         |  SELECT doc_id, doc_id // 1000 AS shard,
         |         CAST(len(string_split(trim(text), ' ')) AS BIGINT)
@@ -823,8 +740,8 @@ object Curation {
         |       CAST(sum(n_tokens) AS BIGINT) AS n_tokens_packed,
         |       min(doc_id) AS first_doc, max(doc_id) AS last_doc,
         |       round(CAST(sum(n_tokens) AS DOUBLE) / 2048, 4) AS fill_ratio
-        |FROM cum GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-    "q79_fuzzy_match" ->
+        |FROM cum GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin),
+    QueryDef("q79_fuzzy_match", q79FuzzyMatch _,
       """WITH base AS (
         |  SELECT c_custkey AS k, c_name AS name,
         |         c_custkey // 100 AS block
@@ -845,8 +762,8 @@ object Curation {
         |FROM (SELECT k, nk, lev,
         |             row_number() OVER (PARTITION BY k ORDER BY lev, nk) AS rn
         |      FROM cand)
-        |WHERE rn = 1 ORDER BY k""".stripMargin,
-    "q64_boilerplate_strip" ->
+        |WHERE rn = 1 ORDER BY k""".stripMargin),
+    QueryDef("q64_boilerplate_strip", q64BoilerplateStrip _,
       """WITH top5 AS (
         |  SELECT word FROM (
         |    SELECT DISTINCT doc_id, unnest(string_split(text, ' ')) AS word
@@ -867,8 +784,8 @@ object Curation {
         |SELECT d.doc_id, md5(r.cleaned_text) AS cleaned_md5, r.n_kept,
         |       len(string_split(d.text, ' ')) - r.n_kept AS n_removed
         |FROM documents d JOIN rebuilt r ON d.doc_id = r.doc_id
-        |ORDER BY d.doc_id""".stripMargin,
-    "q65_pii_scrub" ->
+        |ORDER BY d.doc_id""".stripMargin),
+    QueryDef("q65_pii_scrub", q65PiiScrub _,
       """SELECT doc_id,
         |       CAST(len(regexp_extract_all(text,
         |         '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}')) AS INT) AS n_emails,
@@ -880,8 +797,8 @@ object Curation {
         |         '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}', '<EMAIL>', 'g'),
         |         '\+?[0-9]{3}[- .][0-9]{3}[- .][0-9]{4}', '<PHONE>', 'g'),
         |         '([0-9]{1,3}\.){3}[0-9]{1,3}', '<IP>', 'g')) AS scrubbed_md5
-        |FROM documents ORDER BY doc_id""".stripMargin,
-    "q66_contamination" ->
+        |FROM documents ORDER BY doc_id""".stripMargin),
+    QueryDef("q66_contamination", q66Contamination _,
       """WITH grams AS (
         |  SELECT DISTINCT doc_id,
         |         array_to_string(words[i:i+4], ' ') AS gram
@@ -894,8 +811,8 @@ object Curation {
         |       count(DISTINCT b.bench_id) AS n_bench_docs,
         |       count(DISTINCT c.gram) AS n_shared_grams
         |FROM corpus c JOIN bench b ON c.gram = b.gram
-        |GROUP BY c.doc_id ORDER BY c.doc_id""".stripMargin,
-    "q103_bloom_decontaminate" ->
+        |GROUP BY c.doc_id ORDER BY c.doc_id""".stripMargin),
+    QueryDef("q103_bloom_decontaminate", q103BloomDecontaminate _,
       """WITH grams AS (
         |  SELECT DISTINCT doc_id,
         |         array_to_string(words[i:i+4], ' ') AS gram
@@ -912,8 +829,8 @@ object Curation {
         |       count(*) - count(c.doc_id) AS n_clean
         |FROM documents d LEFT JOIN contaminated c ON d.doc_id = c.doc_id
         |WHERE d.doc_id % 97 <> 0
-        |GROUP BY d.source ORDER BY d.source""".stripMargin,
-    "q104_chunk_docs" ->
+        |GROUP BY d.source ORDER BY d.source""".stripMargin),
+    QueryDef("q104_chunk_docs", q104ChunkDocs _,
       """SELECT doc_id,
         |       CAST((p - 1) // 192 AS INT) AS chunk_ix,
         |       CAST(p AS INT) AS start_pos,
@@ -923,8 +840,72 @@ object Curation {
         |             unnest(generate_series(1, greatest(length(text), 1), 192))
         |               AS p
         |      FROM documents)
-        |ORDER BY doc_id, chunk_ix""".stripMargin,
-    "q67_repetition_score" ->
+        |ORDER BY doc_id, chunk_ix""".stripMargin),
+    // same boundary rule bit-for-bit: 60-bit md5-prefix hash of the
+    // trailing 16-char window, divisible by 32; end-of-doc boundary
+    // appended; chunks rebuilt from consecutive boundary pairs
+    QueryDef("q124_cdc_chunk", q124CdcChunk _,
+      s"""WITH $cdcChunksCte,
+        |shared AS (
+        |  SELECT h, count(DISTINCT doc_id) AS nd FROM chunks GROUP BY 1)
+        |SELECT c.doc_id,
+        |       count(*) AS n_chunks,
+        |       round(avg(c.clen), 4) AS avg_chunk_len,
+        |       CAST(sum(CASE WHEN s.nd >= 2 THEN 1 ELSE 0 END) AS BIGINT)
+        |         AS n_shared_chunks,
+        |       round(CAST(sum(CASE WHEN s.nd >= 2 THEN 1 ELSE 0 END)
+        |                  AS DOUBLE) / count(*), 4) AS dup_frac
+        |FROM chunks c JOIN shared s USING (h)
+        |GROUP BY 1 ORDER BY 1""".stripMargin),
+    // the gear table is engine-side (not SQL-portable): contract oracle
+    // in the q37 style — the engine computes the law flags, a
+    // regression flips them against these constants
+    QueryDef("q125_cdc_gear", q125CdcGear _,
+      """SELECT count(*) AS n_docs, TRUE AS twin_dup_ok, TRUE AS max_len_ok
+        |FROM documents WHERE length(text) > 0""".stripMargin),
+    // q124's chunk CTEs + the persisted-store membership join
+    QueryDef("q127_incremental_chunk_dedup", q127IncrementalChunkDedup _,
+      s"""WITH $cdcChunksCte,
+        |known AS (
+        |  SELECT DISTINCT h FROM chunks WHERE doc_id % 2 = 0)
+        |SELECT c.doc_id,
+        |       count(*) AS n_chunks,
+        |       CAST(sum(CASE WHEN k.h IS NOT NULL THEN 1 ELSE 0 END)
+        |            AS BIGINT) AS n_known_chunks,
+        |       round(CAST(sum(CASE WHEN k.h IS NOT NULL THEN c.clen
+        |                           ELSE 0 END) AS DOUBLE)
+        |             / sum(c.clen), 4) AS known_char_frac
+        |FROM chunks c LEFT JOIN known k ON c.h = k.h
+        |WHERE c.doc_id % 2 = 1
+        |GROUP BY 1 ORDER BY 1""".stripMargin),
+    // the oracle states the SEMANTICS directly (global greedy cumsum by
+    // quality desc, doc_id); the engine's two-phase bucket form must
+    // equal it row-for-row
+    QueryDef("q130_token_budget_select", q130TokenBudgetSelect _,
+      """WITH base AS (
+        |  SELECT doc_id, ' ' || text || ' ' AS p,
+        |         CAST(len(string_split(trim(text), ' ')) AS BIGINT)
+        |           AS n_tokens,
+        |         len(string_split(trim(text), ' ')) AS n_words
+        |  FROM documents),
+        |q AS (
+        |  SELECT doc_id, n_tokens,
+        |         round(ln(1.0 + n_words) * (1.0 -
+        |           CAST(CAST((length(p) - length(replace(p, ' the ', ''))) / 5
+        |                + (length(p) - length(replace(p, ' a ', ''))) / 3
+        |                AS INT) AS DOUBLE) / n_words), 6) AS quality
+        |  FROM base),
+        |tot AS (SELECT CAST(floor(0.25 * sum(n_tokens)) AS BIGINT)
+        |          AS budget FROM q),
+        |ranked AS (
+        |  SELECT doc_id, quality, n_tokens,
+        |         sum(n_tokens) OVER (ORDER BY quality DESC, doc_id
+        |                             ROWS UNBOUNDED PRECEDING) AS cum
+        |  FROM q)
+        |SELECT doc_id, quality, n_tokens,
+        |       cum <= budget AS selected
+        |FROM ranked CROSS JOIN tot ORDER BY doc_id""".stripMargin),
+    QueryDef("q67_repetition_score", q67RepetitionScore _,
       """WITH grams AS (
         |  SELECT doc_id, array_to_string(words[i:i+2], ' ') AS gram
         |  FROM (SELECT doc_id, string_split(text, ' ') AS words,
@@ -934,20 +915,20 @@ object Curation {
         |SELECT doc_id, count(*) AS n_grams,
         |       round(CAST(count(*) - count(DISTINCT gram) AS DOUBLE)
         |             / count(*), 6) AS repetition_ratio
-        |FROM grams GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-    "q68_stratified_sample" ->
+        |FROM grams GROUP BY doc_id ORDER BY doc_id""".stripMargin),
+    QueryDef("q68_stratified_sample", q68StratifiedSample _,
       """SELECT lang, count(*) AS n_total,
         |       count(*) FILTER (
         |         ('0x' || substr(md5(lang || '|' || CAST(doc_id AS VARCHAR)), 1, 15))::BIGINT
         |           % 100 < CASE WHEN lang = 'en' THEN 20 ELSE 100 END)
         |         AS n_kept
-        |FROM documents GROUP BY lang ORDER BY lang""".stripMargin,
-    "q69_vocab" ->
+        |FROM documents GROUP BY lang ORDER BY lang""".stripMargin),
+    QueryDef("q69_vocab", q69Vocab _,
       """SELECT word, count(DISTINCT doc_id) AS doc_freq,
         |       count(*) AS total_count
         |FROM (SELECT doc_id, unnest(string_split(text, ' ')) AS word
         |      FROM documents)
         |GROUP BY word
         |ORDER BY doc_freq DESC, total_count DESC, word ASC
-        |LIMIT 20""".stripMargin)
+        |LIMIT 20""".stripMargin))
 }

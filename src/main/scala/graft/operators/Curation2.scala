@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.QueryDef
 import graft.functions.Hashing
 import graft.sources.Tables
 
@@ -444,19 +445,8 @@ object Curation2 {
       .orderBy("source")
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q301_water_filling" -> (q301WaterFilling _),
-    "q284_jackknife_influence" -> (q284JackknifeInfluence _),
-    "q283_effective_sample_size" -> (q283EffectiveSampleSize _),
-    "q225_weighted_median" -> (q225WeightedMedian _),
-    "q146_domain_cap" -> (q146DomainCap _),
-    "q147_dsir_select" -> (q147DsirSelect _),
-    "q150_temperature_mix" -> (q150TemperatureMix _),
-    "q210_novelty_select" -> (q210NoveltySelect _),
-    "q215_data_card" -> (q215DataCard _))
-
-  val oracles: Map[String, String] = Map(
-    "q301_water_filling" ->
+  val defs: Seq[QueryDef] = Seq(
+    QueryDef("q301_water_filling", q301WaterFilling _,
       """WITH supply AS (
         |  SELECT source,
         |         CAST(sum(len(list_filter(string_split(trim(text), ' '),
@@ -489,8 +479,8 @@ object Curation2 {
         |       CAST(r.supply AS DOUBLE) > s.level AS capped,
         |       round(s.level, 4) AS water_level
         |FROM ranked r, seg s
-        |ORDER BY r.source""".stripMargin,
-    "q284_jackknife_influence" ->
+        |ORDER BY r.source""".stripMargin),
+    QueryDef("q284_jackknife_influence", q284JackknifeInfluence _,
       """WITH per_src AS (
         |  SELECT source, CAST(count(*) AS BIGINT) AS n_docs,
         |         CAST(sum(n_chars) AS BIGINT) AS s_chars
@@ -523,8 +513,8 @@ object Curation2 {
         |                  * (s.g - 1) / s.g) / 1000000, 6)
         |         AS jackknife_se
         |FROM themu m JOIN se s USING (g)
-        |ORDER BY m.source""".stripMargin,
-    "q283_effective_sample_size" ->
+        |ORDER BY m.source""".stripMargin),
+    QueryDef("q283_effective_sample_size", q283EffectiveSampleSize _,
       """WITH stats AS (
         |  SELECT source, CAST(count(*) AS BIGINT) AS n_docs,
         |         CAST(sum(n_chars) AS BIGINT) AS sw,
@@ -535,8 +525,8 @@ object Curation2 {
         |             / CAST(sw2 AS DOUBLE), 4) AS ess,
         |       round(CAST(sw AS DOUBLE) * CAST(sw AS DOUBLE)
         |             / CAST(sw2 AS DOUBLE) / n_docs, 6) AS ess_ratio
-        |FROM stats ORDER BY source""".stripMargin,
-    "q225_weighted_median" ->
+        |FROM stats ORDER BY source""".stripMargin),
+    QueryDef("q225_weighted_median", q225WeightedMedian _,
       """WITH base AS (
         |  SELECT doc_id, source,
         |         CAST(len(string_split(trim(text), ' ')) AS BIGINT)
@@ -564,45 +554,8 @@ object Curation2 {
         |                THEN c.n_words END) AS median_words
         |FROM c JOIN t ON c.source = t.source
         |GROUP BY c.source, t.n_docs, t.tot_w
-        |ORDER BY c.source""".stripMargin,
-    "q215_data_card" ->
-      """WITH docs AS (
-        |  SELECT source, md5(text) AS h,
-        |         CAST(len(string_split(text, ' ')) AS BIGINT) AS toks,
-        |         CAST(octet_length(CAST(text AS BLOB)) AS BIGINT)
-        |           AS bytes
-        |  FROM documents)
-        |SELECT source, count(*) AS n_docs,
-        |       count(DISTINCT h) AS n_unique,
-        |       round(CAST(count(*) - count(DISTINCT h) AS DOUBLE)
-        |             / count(*), 6) AS dup_frac,
-        |       CAST(sum(toks) AS BIGINT) AS total_tokens,
-        |       round(CAST(sum(toks) AS DOUBLE) / count(*), 2)
-        |         AS mean_tokens,
-        |       round(quantile_cont(CAST(toks AS DOUBLE), 0.5), 1)
-        |         AS p50_tokens,
-        |       round(quantile_cont(CAST(toks AS DOUBLE), 0.95), 1)
-        |         AS p95_tokens,
-        |       round(CAST(sum(bytes) AS DOUBLE) / count(*), 2)
-        |         AS mean_bytes
-        |FROM docs GROUP BY source ORDER BY source""".stripMargin,
-    "q210_novelty_select" ->
-      s"""WITH ${Dedup.shinglesCte},
-        |ref AS (
-        |  SELECT DISTINCT shingle FROM shingles WHERE doc_id % 2 = 0),
-        |novel AS (
-        |  SELECT s.doc_id, count(*) AS n_shingles,
-        |         CAST(sum(CASE WHEN r.shingle IS NULL THEN 1
-        |                       ELSE 0 END) AS BIGINT) AS n_novel
-        |  FROM shingles s LEFT JOIN ref r ON r.shingle = s.shingle
-        |  WHERE s.doc_id % 2 = 1
-        |  GROUP BY 1)
-        |SELECT doc_id, n_shingles, n_novel,
-        |       round(CAST(n_novel AS DOUBLE) / n_shingles, 6) AS novelty
-        |FROM novel
-        |ORDER BY novelty DESC, doc_id
-        |LIMIT $NoveltyTopK""".stripMargin,
-    "q146_domain_cap" ->
+        |ORDER BY c.source""".stripMargin),
+    QueryDef("q146_domain_cap", q146DomainCap _,
       s"""WITH ranked AS (
         |  SELECT doc_id, source,
         |         row_number() OVER (
@@ -617,8 +570,8 @@ object Curation2 {
         |            AS BIGINT) AS n_kept,
         |       CAST(sum(CASE WHEN rn <= $CapPerSource THEN doc_id END)
         |            AS BIGINT) AS kept_docid_sum
-        |FROM ranked GROUP BY source ORDER BY source""".stripMargin,
-    "q147_dsir_select" ->
+        |FROM ranked GROUP BY source ORDER BY source""".stripMargin),
+    QueryDef("q147_dsir_select", q147DsirSelect _,
       s"""WITH docs AS (
         |  SELECT doc_id, lang,
         |         list_filter(string_split(trim(text), ' '),
@@ -659,8 +612,8 @@ object Curation2 {
         |FROM db JOIN lr USING (b)
         |GROUP BY doc_id, lang
         |ORDER BY weight DESC, doc_id ASC
-        |LIMIT $DsirTopK""".stripMargin,
-    "q150_temperature_mix" ->
+        |LIMIT $DsirTopK""".stripMargin),
+    QueryDef("q150_temperature_mix", q150TemperatureMix _,
       s"""WITH counts AS (
         |  SELECT lang, count(*) AS n_total FROM documents GROUP BY 1),
         |rates AS (
@@ -689,5 +642,42 @@ object Curation2 {
         |         AS achieved_rate
         |FROM emitted JOIN rates USING (lang)
         |GROUP BY lang, n_total, rate
-        |ORDER BY lang""".stripMargin)
+        |ORDER BY lang""".stripMargin),
+    QueryDef("q210_novelty_select", q210NoveltySelect _,
+      s"""WITH ${Dedup.shinglesCte},
+        |ref AS (
+        |  SELECT DISTINCT shingle FROM shingles WHERE doc_id % 2 = 0),
+        |novel AS (
+        |  SELECT s.doc_id, count(*) AS n_shingles,
+        |         CAST(sum(CASE WHEN r.shingle IS NULL THEN 1
+        |                       ELSE 0 END) AS BIGINT) AS n_novel
+        |  FROM shingles s LEFT JOIN ref r ON r.shingle = s.shingle
+        |  WHERE s.doc_id % 2 = 1
+        |  GROUP BY 1)
+        |SELECT doc_id, n_shingles, n_novel,
+        |       round(CAST(n_novel AS DOUBLE) / n_shingles, 6) AS novelty
+        |FROM novel
+        |ORDER BY novelty DESC, doc_id
+        |LIMIT $NoveltyTopK""".stripMargin),
+    QueryDef("q215_data_card", q215DataCard _,
+      """WITH docs AS (
+        |  SELECT source, md5(text) AS h,
+        |         CAST(len(string_split(text, ' ')) AS BIGINT) AS toks,
+        |         CAST(octet_length(CAST(text AS BLOB)) AS BIGINT)
+        |           AS bytes
+        |  FROM documents)
+        |SELECT source, count(*) AS n_docs,
+        |       count(DISTINCT h) AS n_unique,
+        |       round(CAST(count(*) - count(DISTINCT h) AS DOUBLE)
+        |             / count(*), 6) AS dup_frac,
+        |       CAST(sum(toks) AS BIGINT) AS total_tokens,
+        |       round(CAST(sum(toks) AS DOUBLE) / count(*), 2)
+        |         AS mean_tokens,
+        |       round(quantile_cont(CAST(toks AS DOUBLE), 0.5), 1)
+        |         AS p50_tokens,
+        |       round(quantile_cont(CAST(toks AS DOUBLE), 0.95), 1)
+        |         AS p95_tokens,
+        |       round(CAST(sum(bytes) AS DOUBLE) / count(*), 2)
+        |         AS mean_bytes
+        |FROM docs GROUP BY source ORDER BY source""".stripMargin))
 }

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.QueryDef
 import graft.functions.Hashing
 import graft.sources.Tables
 
@@ -212,13 +213,8 @@ object CurationHardening {
       .orderBy("label")
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q393_leakage_free_split" -> (q393LeakageFreeSplit _),
-    "q394_repetition_profile" -> (q394RepetitionProfile _),
-    "q395_embedding_outlier_audit" -> (q395EmbeddingOutlierAudit _))
-
-  val oracles: Map[String, String] = Map(
-    "q393_leakage_free_split" ->
+  val defs: Seq[QueryDef] = Seq(
+    QueryDef("q393_leakage_free_split", q393LeakageFreeSplit _,
       s"""WITH RECURSIVE ${Dedup.shinglesCte},
          |sizes AS (SELECT doc_id, count(*) AS sz FROM shingles GROUP BY 1),
          |inter AS (
@@ -291,8 +287,8 @@ object CurationHardening {
          |LEFT JOIN nstats n ON n.split = sp.split
          |LEFT JOIN ln ON ln.split = sp.split
          |LEFT JOIN lu ON lu.split = sp.split
-         |ORDER BY sp.split""".stripMargin,
-    "q394_repetition_profile" ->
+         |ORDER BY sp.split""".stripMargin),
+    QueryDef("q394_repetition_profile", q394RepetitionProfile _,
       s"""WITH corpus AS (
          |  SELECT doc_id, source, text FROM documents
          |  UNION ALL
@@ -321,8 +317,8 @@ object CurationHardening {
          |       CAST(COALESCE(sum(doc_id - $RepTileOffset)
          |              FILTER (WHERE rep > 0.2), 0) AS BIGINT)
          |         AS flagged_id_sum
-         |FROM scored GROUP BY source ORDER BY source""".stripMargin,
-    "q395_embedding_outlier_audit" ->
+         |FROM scored GROUP BY source ORDER BY source""".stripMargin),
+    QueryDef("q395_embedding_outlier_audit", q395EmbeddingOutlierAudit _,
       s"""WITH vecs AS (
          |  SELECT vec_id, label, embedding FROM embeddings
          |  UNION ALL
@@ -348,5 +344,5 @@ object CurationHardening {
          |         AS n_outliers,
          |       CAST(count(*) FILTER (WHERE vec_id >= $OutlierOffset)
          |         AS BIGINT) AS n_planted
-         |FROM z GROUP BY label ORDER BY label""".stripMargin)
+         |FROM z GROUP BY label ORDER BY label""".stripMargin))
 }

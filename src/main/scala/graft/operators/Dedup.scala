@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.QueryDef
 import graft.functions.Hashing
 import graft.sources.Tables
 
@@ -727,22 +728,6 @@ object Dedup {
       .orderBy("length_decile")
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q340_dup_rate_by_length" -> (q340DupRateByLength _),
-    "q332_lsh_bucket_audit" -> (q332LshBucketAudit _),
-    "q329_exact_dup_savings" -> (q329ExactDupSavings _),
-    "q249_threshold_curve" -> (q249ThresholdCurve _),
-    "q31_dedup_exact" -> (q31DedupExact _),
-    "q158_containment_dedup" -> (q158ContainmentDedup _),
-    "q202_containment_pipeline" -> (q202ContainmentPipeline _),
-    "q32_dedup_minhash" -> (q32DedupMinhash _),
-    "q33_dedup_simhash" -> (q33DedupSimhash _),
-    "q297_transitivity_audit" -> (q297TransitivityAudit _),
-    "q34_dedup_ngram_jaccard" -> (q34DedupNgramJaccard _),
-    "q106_jaccard_prefix" -> (q106DedupJaccardPrefix _),
-    "q110_span_dedup" -> (q110SpanDedup _),
-    "q102_cross_batch_minhash" -> (q102CrossBatchMinhash _))
-
 
   /** Shared oracle CTE: distinct word-3-gram shingles per doc
     * (package-visible: q117's leakage-safe-split oracle rebuilds the
@@ -754,8 +739,8 @@ object Dedup {
       |               unnest(generate_series(1, len(string_split(text, ' ')) - 2)) AS i
       |        FROM documents))""".stripMargin
 
-  val oracles: Map[String, String] = Map(
-    "q340_dup_rate_by_length" ->
+  val defs: Seq[QueryDef] = Seq(
+    QueryDef("q340_dup_rate_by_length", q340DupRateByLength _,
       """WITH docs AS (
         |  SELECT doc_id, n_chars, md5(text) AS h FROM documents),
         |canon AS (SELECT h, min(doc_id) AS canon FROM docs GROUP BY 1),
@@ -779,8 +764,8 @@ object Dedup {
         |         AS n_dup,
         |       round(CAST(sum(CASE WHEN is_dup THEN 1 ELSE 0 END)
         |               AS DOUBLE) / count(*), 6) AS dup_rate
-        |FROM bucketed GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q332_lsh_bucket_audit" ->
+        |FROM bucketed GROUP BY 1 ORDER BY 1""".stripMargin),
+    QueryDef("q332_lsh_bucket_audit", q332LshBucketAudit _,
       s"""WITH $shinglesCte,
          |hashed AS (
          |  SELECT doc_id, shingle,
@@ -809,8 +794,8 @@ object Dedup {
          |       round(CAST(max(c) AS DOUBLE) / sum(c), 6) AS max_share,
          |       round(CAST(sum(CAST(c AS HUGEINT) * c) AS DOUBLE)
          |             / CAST(sum(c) AS DOUBLE), 4) AS expected_probe
-         |FROM buckets GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q329_exact_dup_savings" ->
+         |FROM buckets GROUP BY 1 ORDER BY 1""".stripMargin),
+    QueryDef("q329_exact_dup_savings", q329ExactDupSavings _,
       """WITH docs AS (
         |  SELECT doc_id, source, md5(text) AS h,
         |         CAST(len(list_filter(string_split(trim(text), ' '),
@@ -828,50 +813,8 @@ object Dedup {
         |               AS DOUBLE) / count(*), 6) AS doc_savings,
         |       round(CAST(sum(CASE WHEN is_dup THEN toks ELSE 0 END)
         |               AS DOUBLE) / sum(toks), 6) AS token_savings
-        |FROM tagged GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q297_transitivity_audit" -> {
-      val tauRows = TransitivityTaus.map { t =>
-        s"""SELECT $t AS tau,
-           |  (SELECT CAST(sum(CASE WHEN jaccard >= $t THEN 1 ELSE 0 END)
-           |     AS BIGINT) FROM pairs) AS n_pairs,
-           |  (SELECT CAST(sum(CASE WHEN jmin >= $t THEN 1 ELSE 0 END)
-           |     AS BIGINT) FROM wedges) AS n_wedges,
-           |  (SELECT CAST(sum(CASE WHEN jmin >= $t AND jac >= $t
-           |     THEN 1 ELSE 0 END) AS BIGINT) FROM wedges) AS n_closed""".stripMargin
-      }.mkString("\nUNION ALL\n")
-      s"""WITH $shinglesCte,
-         |sizes AS (SELECT doc_id, count(*) AS sz FROM shingles GROUP BY 1),
-         |inter AS (
-         |  SELECT a.doc_id AS id1, b.doc_id AS id2, count(*) AS n_inter
-         |  FROM shingles a JOIN shingles b
-         |    ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-         |  GROUP BY 1, 2),
-         |pairs AS MATERIALIZED (
-         |  SELECT id1, id2,
-         |         round(CAST(n_inter AS DOUBLE)
-         |               / (z1.sz + z2.sz - n_inter), 6) AS jaccard
-         |  FROM inter
-         |  JOIN sizes z1 ON z1.doc_id = id1
-         |  JOIN sizes z2 ON z2.doc_id = id2
-         |  WHERE CAST(n_inter AS DOUBLE) / (z1.sz + z2.sz - n_inter)
-         |        >= 0.8),
-         |und AS MATERIALIZED (
-         |  SELECT id1 AS b, id2 AS x, jaccard AS j FROM pairs
-         |  UNION ALL SELECT id2, id1, jaccard FROM pairs),
-         |wedges AS MATERIALIZED (
-         |  SELECT least(u1.j, u2.j) AS jmin,
-         |         COALESCE(p.jaccard, -1.0) AS jac
-         |  FROM und u1 JOIN und u2 ON u1.b = u2.b AND u1.x < u2.x
-         |  LEFT JOIN pairs p ON p.id1 = u1.x AND p.id2 = u2.x),
-         |report AS ($tauRows)
-         |SELECT tau, n_pairs, n_wedges, n_closed,
-         |       n_wedges - n_closed AS n_violations,
-         |       CASE WHEN n_wedges > 0 THEN
-         |         round(CAST(n_closed AS DOUBLE) / n_wedges, 6)
-         |       END AS closure_rate
-         |FROM report ORDER BY tau""".stripMargin
-    },
-    "q249_threshold_curve" ->
+        |FROM tagged GROUP BY 1 ORDER BY 1""".stripMargin),
+    QueryDef("q249_threshold_curve", q249ThresholdCurve _,
       s"""WITH $shinglesCte,
          |hashed AS (
          |  SELECT doc_id, shingle,
@@ -940,8 +883,34 @@ object Dedup {
          |       CASE WHEN n_exact_pos > 0
          |            THEN round(CAST(tp AS DOUBLE) / n_exact_pos, 6) END
          |         AS recall
-         |FROM agg ORDER BY threshold_pct""".stripMargin,
-    "q202_containment_pipeline" ->
+         |FROM agg ORDER BY threshold_pct""".stripMargin),
+    QueryDef("q31_dedup_exact", q31DedupExact _,
+      """WITH docs AS (SELECT doc_id, md5(text) AS text_hash FROM documents)
+        |SELECT doc_id,
+        |       min(doc_id) OVER (PARTITION BY text_hash) AS canonical_id,
+        |       count(*) OVER (PARTITION BY text_hash) AS group_size,
+        |       doc_id <> min(doc_id) OVER (PARTITION BY text_hash) AS is_duplicate
+        |FROM docs ORDER BY doc_id""".stripMargin),
+    QueryDef("q158_containment_dedup", q158ContainmentDedup _,
+      s"""WITH $shinglesCte,
+         |sizes AS (SELECT doc_id, count(*) AS sz FROM shingles GROUP BY 1),
+         |inter AS (
+         |  SELECT a.doc_id AS id1, b.doc_id AS id2, count(*) AS n_inter
+         |  FROM shingles a JOIN shingles b
+         |    ON a.shingle = b.shingle AND a.doc_id < b.doc_id
+         |  GROUP BY 1, 2)
+         |SELECT id1, id2, n_inter, z1.sz AS sz1, z2.sz AS sz2,
+         |       round(CAST(n_inter AS DOUBLE) / least(z1.sz, z2.sz), 6)
+         |         AS containment,
+         |       round(CAST(n_inter AS DOUBLE) / (z1.sz + z2.sz - n_inter), 6)
+         |         AS jaccard,
+         |       CASE WHEN z2.sz < z1.sz THEN id2 ELSE id1 END AS contained_id
+         |FROM inter
+         |JOIN sizes z1 ON z1.doc_id = id1
+         |JOIN sizes z2 ON z2.doc_id = id2
+         |WHERE 10 * n_inter >= 9 * least(z1.sz, z2.sz)
+         |ORDER BY id1, id2""".stripMargin),
+    QueryDef("q202_containment_pipeline", q202ContainmentPipeline _,
       s"""WITH $shinglesCte,
          |docs AS (SELECT doc_id, md5(text) AS h FROM documents),
          |surv AS (
@@ -966,34 +935,8 @@ object Dedup {
          |JOIN surv v1 ON v1.doc_id = id1
          |JOIN surv v2 ON v2.doc_id = id2
          |WHERE 10 * n_inter >= 9 * least(z1.sz, z2.sz)
-         |ORDER BY id1, id2""".stripMargin,
-    "q158_containment_dedup" ->
-      s"""WITH $shinglesCte,
-         |sizes AS (SELECT doc_id, count(*) AS sz FROM shingles GROUP BY 1),
-         |inter AS (
-         |  SELECT a.doc_id AS id1, b.doc_id AS id2, count(*) AS n_inter
-         |  FROM shingles a JOIN shingles b
-         |    ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-         |  GROUP BY 1, 2)
-         |SELECT id1, id2, n_inter, z1.sz AS sz1, z2.sz AS sz2,
-         |       round(CAST(n_inter AS DOUBLE) / least(z1.sz, z2.sz), 6)
-         |         AS containment,
-         |       round(CAST(n_inter AS DOUBLE) / (z1.sz + z2.sz - n_inter), 6)
-         |         AS jaccard,
-         |       CASE WHEN z2.sz < z1.sz THEN id2 ELSE id1 END AS contained_id
-         |FROM inter
-         |JOIN sizes z1 ON z1.doc_id = id1
-         |JOIN sizes z2 ON z2.doc_id = id2
-         |WHERE 10 * n_inter >= 9 * least(z1.sz, z2.sz)
-         |ORDER BY id1, id2""".stripMargin,
-    "q31_dedup_exact" ->
-      """WITH docs AS (SELECT doc_id, md5(text) AS text_hash FROM documents)
-        |SELECT doc_id,
-        |       min(doc_id) OVER (PARTITION BY text_hash) AS canonical_id,
-        |       count(*) OVER (PARTITION BY text_hash) AS group_size,
-        |       doc_id <> min(doc_id) OVER (PARTITION BY text_hash) AS is_duplicate
-        |FROM docs ORDER BY doc_id""".stripMargin,
-    "q32_dedup_minhash" ->
+         |ORDER BY id1, id2""".stripMargin),
+    QueryDef("q32_dedup_minhash", q32DedupMinhash _,
       s"""WITH $shinglesCte,
          |hashed AS (
          |  SELECT doc_id, shingle,
@@ -1016,36 +959,8 @@ object Dedup {
          |       count(DISTINCT a.band) AS n_shared_bands
          |FROM bands a JOIN bands b
          |  ON a.band = b.band AND a.band_sig = b.band_sig AND a.doc_id < b.doc_id
-         |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-    // same band math as q32, restricted to cross-parity (cross-day)
-    // pairs — verifies the incremental path finds exactly what a
-    // monolithic build would across the batch boundary
-    "q102_cross_batch_minhash" ->
-      s"""WITH $shinglesCte,
-         |hashed AS (
-         |  SELECT doc_id, shingle,
-         |         ('0x' || substr(md5(shingle), 1, 15))::BIGINT AS x
-         |  FROM shingles),
-         |perms AS (
-         |  SELECT doc_id, x, unnest(generate_series(0, 15)) AS j
-         |  FROM hashed),
-         |minhashes AS (
-         |  SELECT doc_id, j,
-         |         min((((2654435761 * (j + 1)) % 1000000007) * (x % 1000000007)
-         |              + ((123456789 * (j + 1) + 987654321) % 1000000007))
-         |             % 1000000007) AS mh
-         |  FROM perms GROUP BY doc_id, j),
-         |bands AS (
-         |  SELECT doc_id, j // 4 AS band,
-         |         md5(string_agg(CAST(mh AS VARCHAR), '_' ORDER BY j)) AS band_sig
-         |  FROM minhashes GROUP BY doc_id, j // 4)
-         |SELECT a.doc_id AS id1, b.doc_id AS id2,
-         |       count(DISTINCT a.band) AS n_shared_bands
-         |FROM bands a JOIN bands b
-         |  ON a.band = b.band AND a.band_sig = b.band_sig
-         |  AND a.doc_id % 2 = 0 AND b.doc_id % 2 = 1
-         |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-    "q33_dedup_simhash" ->
+         |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin),
+    QueryDef("q33_dedup_simhash", q33DedupSimhash _,
       """WITH wc AS (
         |  SELECT doc_id, word, count(*) AS cnt
         |  FROM (SELECT doc_id, unnest(string_split(text, ' ')) AS word
@@ -1078,8 +993,51 @@ object Dedup {
         |JOIN sigs s2 ON s2.doc_id = id2
         |WHERE bit_count(xor(s1.sig_lo, s2.sig_lo))
         |      + bit_count(xor(s1.sig_hi, s2.sig_hi)) <= 5
-        |ORDER BY id1, id2""".stripMargin,
-    "q34_dedup_ngram_jaccard" ->
+        |ORDER BY id1, id2""".stripMargin),
+    QueryDef("q297_transitivity_audit", q297TransitivityAudit _,
+      {
+      val tauRows = TransitivityTaus.map { t =>
+        s"""SELECT $t AS tau,
+           |  (SELECT CAST(sum(CASE WHEN jaccard >= $t THEN 1 ELSE 0 END)
+           |     AS BIGINT) FROM pairs) AS n_pairs,
+           |  (SELECT CAST(sum(CASE WHEN jmin >= $t THEN 1 ELSE 0 END)
+           |     AS BIGINT) FROM wedges) AS n_wedges,
+           |  (SELECT CAST(sum(CASE WHEN jmin >= $t AND jac >= $t
+           |     THEN 1 ELSE 0 END) AS BIGINT) FROM wedges) AS n_closed""".stripMargin
+      }.mkString("\nUNION ALL\n")
+      s"""WITH $shinglesCte,
+         |sizes AS (SELECT doc_id, count(*) AS sz FROM shingles GROUP BY 1),
+         |inter AS (
+         |  SELECT a.doc_id AS id1, b.doc_id AS id2, count(*) AS n_inter
+         |  FROM shingles a JOIN shingles b
+         |    ON a.shingle = b.shingle AND a.doc_id < b.doc_id
+         |  GROUP BY 1, 2),
+         |pairs AS MATERIALIZED (
+         |  SELECT id1, id2,
+         |         round(CAST(n_inter AS DOUBLE)
+         |               / (z1.sz + z2.sz - n_inter), 6) AS jaccard
+         |  FROM inter
+         |  JOIN sizes z1 ON z1.doc_id = id1
+         |  JOIN sizes z2 ON z2.doc_id = id2
+         |  WHERE CAST(n_inter AS DOUBLE) / (z1.sz + z2.sz - n_inter)
+         |        >= 0.8),
+         |und AS MATERIALIZED (
+         |  SELECT id1 AS b, id2 AS x, jaccard AS j FROM pairs
+         |  UNION ALL SELECT id2, id1, jaccard FROM pairs),
+         |wedges AS MATERIALIZED (
+         |  SELECT least(u1.j, u2.j) AS jmin,
+         |         COALESCE(p.jaccard, -1.0) AS jac
+         |  FROM und u1 JOIN und u2 ON u1.b = u2.b AND u1.x < u2.x
+         |  LEFT JOIN pairs p ON p.id1 = u1.x AND p.id2 = u2.x),
+         |report AS ($tauRows)
+         |SELECT tau, n_pairs, n_wedges, n_closed,
+         |       n_wedges - n_closed AS n_violations,
+         |       CASE WHEN n_wedges > 0 THEN
+         |         round(CAST(n_closed AS DOUBLE) / n_wedges, 6)
+         |       END AS closure_rate
+         |FROM report ORDER BY tau""".stripMargin
+    }),
+    QueryDef("q34_dedup_ngram_jaccard", q34DedupNgramJaccard _,
       s"""WITH $shinglesCte,
          |sizes AS (SELECT doc_id, count(*) AS sz FROM shingles GROUP BY 1),
          |inter AS (
@@ -1094,12 +1052,12 @@ object Dedup {
          |JOIN sizes z1 ON z1.doc_id = id1
          |JOIN sizes z2 ON z2.doc_id = id2
          |WHERE CAST(n_inter AS DOUBLE) / (z1.sz + z2.sz - n_inter) >= 0.8
-         |ORDER BY id1, id2""".stripMargin,
+         |ORDER BY id1, id2""".stripMargin),
     // q106 is the PROVABLY-LOSSLESS prefix-filtered plan for the same
     // semantics, so its ground truth is q34's exact-Jaccard SQL verbatim
     // — the strongest possible oracle for an optimization: the driver
     // hash-compares the optimized plan against the unoptimized answer
-    "q106_jaccard_prefix" ->
+    QueryDef("q106_jaccard_prefix", q106DedupJaccardPrefix _,
       s"""WITH $shinglesCte,
          |sizes AS (SELECT doc_id, count(*) AS sz FROM shingles GROUP BY 1),
          |inter AS (
@@ -1114,8 +1072,8 @@ object Dedup {
          |JOIN sizes z1 ON z1.doc_id = id1
          |JOIN sizes z2 ON z2.doc_id = id2
          |WHERE CAST(n_inter AS DOUBLE) / (z1.sz + z2.sz - n_inter) >= 0.8
-         |ORDER BY id1, id2""".stripMargin,
-    "q110_span_dedup" ->
+         |ORDER BY id1, id2""".stripMargin),
+    QueryDef("q110_span_dedup", q110SpanDedup _,
       s"""WITH spans AS (
         |  SELECT doc_id, md5(substring(text, CAST(s AS INT), $SpanLen)) AS h
         |  FROM (SELECT doc_id, text,
@@ -1135,5 +1093,33 @@ object Dedup {
         |            THEN round(CAST(n_shared_spans AS DOUBLE) / n_spans, 4)
         |       END AS dup_frac
         |FROM documents d LEFT JOIN per USING (doc_id)
-        |ORDER BY doc_id""".stripMargin)
+        |ORDER BY doc_id""".stripMargin),
+    // same band math as q32, restricted to cross-parity (cross-day)
+    // pairs — verifies the incremental path finds exactly what a
+    // monolithic build would across the batch boundary
+    QueryDef("q102_cross_batch_minhash", q102CrossBatchMinhash _,
+      s"""WITH $shinglesCte,
+         |hashed AS (
+         |  SELECT doc_id, shingle,
+         |         ('0x' || substr(md5(shingle), 1, 15))::BIGINT AS x
+         |  FROM shingles),
+         |perms AS (
+         |  SELECT doc_id, x, unnest(generate_series(0, 15)) AS j
+         |  FROM hashed),
+         |minhashes AS (
+         |  SELECT doc_id, j,
+         |         min((((2654435761 * (j + 1)) % 1000000007) * (x % 1000000007)
+         |              + ((123456789 * (j + 1) + 987654321) % 1000000007))
+         |             % 1000000007) AS mh
+         |  FROM perms GROUP BY doc_id, j),
+         |bands AS (
+         |  SELECT doc_id, j // 4 AS band,
+         |         md5(string_agg(CAST(mh AS VARCHAR), '_' ORDER BY j)) AS band_sig
+         |  FROM minhashes GROUP BY doc_id, j // 4)
+         |SELECT a.doc_id AS id1, b.doc_id AS id2,
+         |       count(DISTINCT a.band) AS n_shared_bands
+         |FROM bands a JOIN bands b
+         |  ON a.band = b.band AND a.band_sig = b.band_sig
+         |  AND a.doc_id % 2 = 0 AND b.doc_id % 2 = 1
+         |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin))
 }

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.QueryDef
 import graft.sources.Tables
 
 /** [EXT] near-dup CLUSTER RESOLUTION and its consumers (split from
@@ -426,20 +427,12 @@ object DedupClusters {
       .limit(IdfShiftTopK)
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q300_idf_shift" -> (q300IdfShift _),
-    "q277_dedup_savings" -> (q277DedupSavings _),
-    "q258_cluster_sizes" -> (q258ClusterSizes _),
-    "q73_dedup_clusters" -> (q73DedupClusters _),
-    "q115_cluster_canonical" -> (q115ClusterCanonical _),
-    "q126_cross_source_dup" -> (q126CrossSourceDup _))
-
   /** q73's oracle closure is shared verbatim with q115/q126. */
   private val shinglesCte: String = Dedup.shinglesCte
 
 
-  val oracles: Map[String, String] = Map(
-    "q300_idf_shift" ->
+  val defs: Seq[QueryDef] = Seq(
+    QueryDef("q300_idf_shift", q300IdfShift _,
       s"""WITH RECURSIVE $shinglesCte,
          |sizes AS (SELECT doc_id, count(*) AS sz FROM shingles GROUP BY 1),
          |inter AS (
@@ -495,8 +488,8 @@ object DedupClusters {
          |             - ln(CAST(t.n_raw + 1 AS DOUBLE) / (df_raw + 1)), 6)
          |         AS idf_shift
          |FROM dfs, totals t
-         |ORDER BY df_drop DESC, word LIMIT $IdfShiftTopK""".stripMargin,
-    "q277_dedup_savings" ->
+         |ORDER BY df_drop DESC, word LIMIT $IdfShiftTopK""".stripMargin),
+    QueryDef("q277_dedup_savings", q277DedupSavings _,
       s"""WITH RECURSIVE $shinglesCte,
          |sizes AS (SELECT doc_id, count(*) AS sz FROM shingles GROUP BY 1),
          |inter AS (
@@ -546,8 +539,8 @@ object DedupClusters {
          |         AS doc_savings,
          |       round(CAST(n_dup_tokens AS DOUBLE) / n_tokens, 6)
          |         AS token_savings
-         |FROM agg""".stripMargin,
-    "q258_cluster_sizes" ->
+         |FROM agg""".stripMargin),
+    QueryDef("q258_cluster_sizes", q258ClusterSizes _,
       s"""WITH RECURSIVE $shinglesCte,
          |sizes AS (SELECT doc_id, count(*) AS sz FROM shingles GROUP BY 1),
          |inter AS (
@@ -588,8 +581,8 @@ object DedupClusters {
          |SELECT size, n_clusters, n_docs,
          |       round(CAST(n_docs AS DOUBLE)
          |             / (SELECT n_total FROM tot), 6) AS doc_share
-         |FROM full_h ORDER BY size""".stripMargin,
-    "q73_dedup_clusters" ->
+         |FROM full_h ORDER BY size""".stripMargin),
+    QueryDef("q73_dedup_clusters", q73DedupClusters _,
       s"""WITH RECURSIVE $shinglesCte,
          |sizes AS (SELECT doc_id, count(*) AS sz FROM shingles GROUP BY 1),
          |inter AS (
@@ -612,10 +605,10 @@ object DedupClusters {
          |SELECT u AS doc_id,
          |       least(u, min(v)) AS cluster_id,
          |       u = least(u, min(v)) AS is_canonical
-         |FROM reach GROUP BY u ORDER BY doc_id""".stripMargin,
+         |FROM reach GROUP BY u ORDER BY doc_id""".stripMargin),
     // q73's closure + q39's quality formula: canonical = per-cluster
     // argmax(quality), lowest-id tie-break
-    "q115_cluster_canonical" ->
+    QueryDef("q115_cluster_canonical", q115ClusterCanonical _,
       s"""WITH RECURSIVE $shinglesCte,
          |sizes AS (SELECT doc_id, count(*) AS sz FROM shingles GROUP BY 1),
          |inter AS (
@@ -660,10 +653,10 @@ object DedupClusters {
          |  FROM members m JOIN qual q USING (doc_id))
          |SELECT cluster_id, CAST(n_members AS BIGINT) AS n_members,
          |       doc_id AS canonical_id, quality AS best_quality
-         |FROM ranked WHERE rn = 1 ORDER BY cluster_id""".stripMargin,
+         |FROM ranked WHERE rn = 1 ORDER BY cluster_id""".stripMargin),
     // q73's recursive closure + the documents source column: clusters
     // spanning a source pair counted once per pair
-    "q126_cross_source_dup" ->
+    QueryDef("q126_cross_source_dup", q126CrossSourceDup _,
       s"""WITH RECURSIVE $shinglesCte,
          |sizes AS (SELECT doc_id, count(*) AS sz FROM shingles GROUP BY 1),
          |inter AS (
@@ -693,5 +686,5 @@ object DedupClusters {
          |       count(*) AS n_shared_clusters
          |FROM cs a JOIN cs b
          |  ON a.cluster_id = b.cluster_id AND a.source <= b.source
-         |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin)
+         |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin))
 }

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.QueryDef
 import graft.functions.Hashing
 import graft.sources.Tables
 
@@ -214,13 +215,9 @@ object DedupEmbedding {
       .orderBy("id1", "id2")
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q119_vector_exact_dedup" -> (q119VectorExactDedup _),
-    "q35_dedup_embedding" -> (q35DedupEmbedding _))
 
-
-  val oracles: Map[String, String] = Map(
-    "q119_vector_exact_dedup" ->
+  val defs: Seq[QueryDef] = Seq(
+    QueryDef("q119_vector_exact_dedup", q119VectorExactDedup _,
       """WITH vecs AS (
         |  SELECT vec_id,
         |         md5(array_to_string(
@@ -233,12 +230,12 @@ object DedupEmbedding {
         |SELECT vec_id, canonical_id, group_size,
         |       vec_id <> canonical_id AS is_duplicate
         |FROM vecs JOIN groups USING (vkey)
-        |ORDER BY vec_id""".stripMargin,
+        |ORDER BY vec_id""".stripMargin),
     // replicates the banding EXACTLY: md5-derived integer planes,
     // floor(x*1000) quantization, sign bits, 8-bit bands MSB-first,
     // multi-probe single-bit flips — all integer arithmetic, so both
     // engines derive the identical candidate set, then exact-score it
-    "q35_dedup_embedding" ->
+    QueryDef("q35_dedup_embedding", q35DedupEmbedding _,
       s"""WITH ex AS (
         |  SELECT vec_id, CAST(unnest(embedding) AS DOUBLE) AS x,
         |         generate_subscripts(embedding, 1) AS i
@@ -290,5 +287,5 @@ object DedupEmbedding {
         |JOIN norms n1 ON n1.vec_id = id1
         |JOIN norms n2 ON n2.vec_id = id2
         |WHERE round(dot / (n1.nrm * n2.nrm), 6) >= 0.4
-        |ORDER BY id1, id2""".stripMargin)
+        |ORDER BY id1, id2""".stripMargin))
 }

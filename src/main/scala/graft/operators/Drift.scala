@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.QueryDef
 import graft.sources.Tables
 
 /** [EXT] distribution-drift monitoring (q151): the Population
@@ -354,14 +355,6 @@ object Drift {
       .orderBy("event_type")
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q334_dkw_median_band" -> (q334DkwMedianBand _),
-    "q234_ks_drift" -> (q234KsDrift _),
-    "q151_psi_drift" -> (q151PsiDrift _),
-    "q298_wasserstein_drift" -> (q298WassersteinDrift _),
-    "q305_priority_drift" -> (q305PriorityDrift _),
-    "q278_quantile_drift" -> (q278QuantileDrift _))
-
   /** q278 — QUANTILE-SHIFT (QQ) drift profile: per event type, the
     * decile-by-decile value shift between the q151/q234 SHARED time
     * halves — the WHERE-and-HOW-MUCH companion to the verdict-style
@@ -402,8 +395,8 @@ object Drift {
       .orderBy("event_type", "probe_pct")
   }
 
-  val oracles: Map[String, String] = Map(
-    "q334_dkw_median_band" ->
+  val defs: Seq[QueryDef] = Seq(
+    QueryDef("q334_dkw_median_band", q334DkwMedianBand _,
       s"""WITH ev AS (
         |  SELECT event_type,
         |         CAST(round(value * 100, 0) AS BIGINT) AS c
@@ -437,97 +430,8 @@ object Drift {
         |       round(CAST(b.hi_c - b.lo_c AS DOUBLE) / 100, 2)
         |         AS band_width
         |FROM bands b JOIN med m USING (event_type)
-        |ORDER BY b.event_type""".stripMargin,
-    "q305_priority_drift" ->
-      """WITH ord AS (
-        |  SELECT epoch_us(CAST(o_orderdate AS TIMESTAMP)) AS us,
-        |         o_orderpriority AS priority
-        |  FROM orders),
-        |cut AS (SELECT (min(us) + max(us)) // 2 AS cut FROM ord),
-        |prof AS (
-        |  SELECT priority,
-        |         CAST(sum(CASE WHEN us < (SELECT cut FROM cut)
-        |                       THEN 1 ELSE 0 END) AS BIGINT) AS n1,
-        |         CAST(sum(CASE WHEN us >= (SELECT cut FROM cut)
-        |                       THEN 1 ELSE 0 END) AS BIGINT) AS n2
-        |  FROM ord GROUP BY 1),
-        |tot AS (SELECT CAST(sum(n1) AS BIGINT) AS t1,
-        |               CAST(sum(n2) AS BIGINT) AS t2 FROM prof),
-        |tv AS (
-        |  SELECT CAST(sum(abs(n1 * t.t2 - n2 * t.t1)) AS DOUBLE)
-        |         / (2.0 * CAST(t.t1 AS DOUBLE) * CAST(t.t2 AS DOUBLE))
-        |           AS tv
-        |  FROM prof, tot t GROUP BY t.t1, t.t2)
-        |SELECT p.priority, p.n1, p.n2,
-        |       round(CAST(p.n1 AS DOUBLE) / t.t1, 6) AS share_first,
-        |       round(CAST(p.n2 AS DOUBLE) / t.t2, 6) AS share_second,
-        |       round(CAST(p.n2 AS DOUBLE) / t.t2
-        |             - CAST(p.n1 AS DOUBLE) / t.t1, 6) AS delta,
-        |       round(v.tv, 6) AS tv_distance
-        |FROM prof p, tot t, tv v
-        |ORDER BY p.priority""".stripMargin,
-    "q298_wasserstein_drift" ->
-      """WITH ev AS (
-        |  SELECT epoch_us(CAST(ts AS TIMESTAMP)) AS us, event_type,
-        |         CAST(round(value * 100, 0) AS BIGINT) AS c
-        |  FROM events),
-        |cut AS (SELECT (min(us) + max(us)) // 2 AS cut FROM ev),
-        |hist AS (
-        |  SELECT event_type, c,
-        |         CAST(sum(CASE WHEN us < (SELECT cut FROM cut)
-        |                       THEN 1 ELSE 0 END) AS BIGINT) AS nr,
-        |         CAST(sum(CASE WHEN us >= (SELECT cut FROM cut)
-        |                       THEN 1 ELSE 0 END) AS BIGINT) AS nc
-        |  FROM ev GROUP BY 1, 2),
-        |terms AS (
-        |  SELECT event_type,
-        |         CAST(sum(nr) OVER wt AS BIGINT) AS n_ref,
-        |         CAST(sum(nc) OVER wt AS BIGINT) AS n_cur,
-        |         CAST(round(abs(CAST(sum(nr) OVER wc AS DOUBLE)
-        |                        / CAST(sum(nr) OVER wt AS DOUBLE)
-        |                        - CAST(sum(nc) OVER wc AS DOUBLE)
-        |                          / CAST(sum(nc) OVER wt AS DOUBLE))
-        |                    * CAST(COALESCE(lead(c, 1) OVER wc, c) - c
-        |                           AS DOUBLE)
-        |                    * 1000000, 0) AS BIGINT) AS term_mu
-        |  FROM hist
-        |  WINDOW wc AS (PARTITION BY event_type ORDER BY c),
-        |         wt AS (PARTITION BY event_type))
-        |SELECT event_type,
-        |       max(n_ref) AS n_ref, max(n_cur) AS n_cur,
-        |       round(CAST(sum(term_mu) AS DOUBLE) / 1000000 / 100, 6)
-        |         AS w1_value
-        |FROM terms GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q278_quantile_drift" ->
-      s"""WITH ev AS (
-        |  SELECT epoch_us(CAST(ts AS TIMESTAMP)) AS us, event_type, value
-        |  FROM events),
-        |cut AS (SELECT (min(us) + max(us)) // 2 AS cut FROM ev),
-        |flagged AS (
-        |  SELECT event_type, value, us < (SELECT cut FROM cut) AS is_ref
-        |  FROM ev),
-        |qs AS (
-        |  SELECT event_type, is_ref,
-        |         quantile_cont(value, [${DecileProbes.mkString(", ")}])
-        |           AS q
-        |  FROM flagged GROUP BY 1, 2),
-        |probes AS (
-        |  SELECT event_type, is_ref, i, q[i] AS qv
-        |  FROM (SELECT event_type, is_ref, q,
-        |               unnest(generate_series(1, len(q))) AS i
-        |        FROM qs)),
-        |cells AS (
-        |  SELECT event_type, i,
-        |         max(CASE WHEN is_ref THEN qv END) AS refv,
-        |         max(CASE WHEN NOT is_ref THEN qv END) AS curv
-        |  FROM probes GROUP BY 1, 2)
-        |SELECT event_type, CAST(i * 10 AS INTEGER) AS probe_pct,
-        |       round(refv, 6) AS ref_value, round(curv, 6) AS cur_value,
-        |       round(curv - refv, 6) AS shift,
-        |       CASE WHEN refv <> 0.0
-        |            THEN round((curv - refv) / refv, 6) END AS shift_pct
-        |FROM cells ORDER BY event_type, probe_pct""".stripMargin,
-    "q234_ks_drift" ->
+        |ORDER BY b.event_type""".stripMargin),
+    QueryDef("q234_ks_drift", q234KsDrift _,
       s"""WITH ev AS (
         |  SELECT epoch_us(CAST(ts AS TIMESTAMP)) AS us, event_type, value
         |  FROM events),
@@ -575,8 +479,8 @@ object Drift {
         |              CAST(n_ref + n_cur AS DOUBLE)
         |              / (CAST(n_ref AS DOUBLE) * CAST(n_cur AS DOUBLE))), 6)
         |            THEN 'drifted' ELSE 'stable' END AS verdict
-        |FROM per_type ORDER BY event_type""".stripMargin,
-    "q151_psi_drift" ->
+        |FROM per_type ORDER BY event_type""".stripMargin),
+    QueryDef("q151_psi_drift", q151PsiDrift _,
       s"""WITH ev AS (
         |  SELECT epoch_us(CAST(ts AS TIMESTAMP)) AS us, event_type, value
         |  FROM events),
@@ -638,5 +542,94 @@ object Drift {
         |       (SELECT n_cur FROM counts) AS n_cur
         |FROM (SELECT 'event_type' AS feature, psi FROM tpsi
         |      UNION ALL SELECT 'value', psi FROM vpsi)
-        |ORDER BY feature""".stripMargin)
+        |ORDER BY feature""".stripMargin),
+    QueryDef("q298_wasserstein_drift", q298WassersteinDrift _,
+      """WITH ev AS (
+        |  SELECT epoch_us(CAST(ts AS TIMESTAMP)) AS us, event_type,
+        |         CAST(round(value * 100, 0) AS BIGINT) AS c
+        |  FROM events),
+        |cut AS (SELECT (min(us) + max(us)) // 2 AS cut FROM ev),
+        |hist AS (
+        |  SELECT event_type, c,
+        |         CAST(sum(CASE WHEN us < (SELECT cut FROM cut)
+        |                       THEN 1 ELSE 0 END) AS BIGINT) AS nr,
+        |         CAST(sum(CASE WHEN us >= (SELECT cut FROM cut)
+        |                       THEN 1 ELSE 0 END) AS BIGINT) AS nc
+        |  FROM ev GROUP BY 1, 2),
+        |terms AS (
+        |  SELECT event_type,
+        |         CAST(sum(nr) OVER wt AS BIGINT) AS n_ref,
+        |         CAST(sum(nc) OVER wt AS BIGINT) AS n_cur,
+        |         CAST(round(abs(CAST(sum(nr) OVER wc AS DOUBLE)
+        |                        / CAST(sum(nr) OVER wt AS DOUBLE)
+        |                        - CAST(sum(nc) OVER wc AS DOUBLE)
+        |                          / CAST(sum(nc) OVER wt AS DOUBLE))
+        |                    * CAST(COALESCE(lead(c, 1) OVER wc, c) - c
+        |                           AS DOUBLE)
+        |                    * 1000000, 0) AS BIGINT) AS term_mu
+        |  FROM hist
+        |  WINDOW wc AS (PARTITION BY event_type ORDER BY c),
+        |         wt AS (PARTITION BY event_type))
+        |SELECT event_type,
+        |       max(n_ref) AS n_ref, max(n_cur) AS n_cur,
+        |       round(CAST(sum(term_mu) AS DOUBLE) / 1000000 / 100, 6)
+        |         AS w1_value
+        |FROM terms GROUP BY 1 ORDER BY 1""".stripMargin),
+    QueryDef("q305_priority_drift", q305PriorityDrift _,
+      """WITH ord AS (
+        |  SELECT epoch_us(CAST(o_orderdate AS TIMESTAMP)) AS us,
+        |         o_orderpriority AS priority
+        |  FROM orders),
+        |cut AS (SELECT (min(us) + max(us)) // 2 AS cut FROM ord),
+        |prof AS (
+        |  SELECT priority,
+        |         CAST(sum(CASE WHEN us < (SELECT cut FROM cut)
+        |                       THEN 1 ELSE 0 END) AS BIGINT) AS n1,
+        |         CAST(sum(CASE WHEN us >= (SELECT cut FROM cut)
+        |                       THEN 1 ELSE 0 END) AS BIGINT) AS n2
+        |  FROM ord GROUP BY 1),
+        |tot AS (SELECT CAST(sum(n1) AS BIGINT) AS t1,
+        |               CAST(sum(n2) AS BIGINT) AS t2 FROM prof),
+        |tv AS (
+        |  SELECT CAST(sum(abs(n1 * t.t2 - n2 * t.t1)) AS DOUBLE)
+        |         / (2.0 * CAST(t.t1 AS DOUBLE) * CAST(t.t2 AS DOUBLE))
+        |           AS tv
+        |  FROM prof, tot t GROUP BY t.t1, t.t2)
+        |SELECT p.priority, p.n1, p.n2,
+        |       round(CAST(p.n1 AS DOUBLE) / t.t1, 6) AS share_first,
+        |       round(CAST(p.n2 AS DOUBLE) / t.t2, 6) AS share_second,
+        |       round(CAST(p.n2 AS DOUBLE) / t.t2
+        |             - CAST(p.n1 AS DOUBLE) / t.t1, 6) AS delta,
+        |       round(v.tv, 6) AS tv_distance
+        |FROM prof p, tot t, tv v
+        |ORDER BY p.priority""".stripMargin),
+    QueryDef("q278_quantile_drift", q278QuantileDrift _,
+      s"""WITH ev AS (
+        |  SELECT epoch_us(CAST(ts AS TIMESTAMP)) AS us, event_type, value
+        |  FROM events),
+        |cut AS (SELECT (min(us) + max(us)) // 2 AS cut FROM ev),
+        |flagged AS (
+        |  SELECT event_type, value, us < (SELECT cut FROM cut) AS is_ref
+        |  FROM ev),
+        |qs AS (
+        |  SELECT event_type, is_ref,
+        |         quantile_cont(value, [${DecileProbes.mkString(", ")}])
+        |           AS q
+        |  FROM flagged GROUP BY 1, 2),
+        |probes AS (
+        |  SELECT event_type, is_ref, i, q[i] AS qv
+        |  FROM (SELECT event_type, is_ref, q,
+        |               unnest(generate_series(1, len(q))) AS i
+        |        FROM qs)),
+        |cells AS (
+        |  SELECT event_type, i,
+        |         max(CASE WHEN is_ref THEN qv END) AS refv,
+        |         max(CASE WHEN NOT is_ref THEN qv END) AS curv
+        |  FROM probes GROUP BY 1, 2)
+        |SELECT event_type, CAST(i * 10 AS INTEGER) AS probe_pct,
+        |       round(refv, 6) AS ref_value, round(curv, 6) AS cur_value,
+        |       round(curv - refv, 6) AS shift,
+        |       CASE WHEN refv <> 0.0
+        |            THEN round((curv - refv) / refv, 6) END AS shift_pct
+        |FROM cells ORDER BY event_type, probe_pct""".stripMargin))
 }

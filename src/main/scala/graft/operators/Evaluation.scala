@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.QueryDef
 import graft.sources.Tables
 
 /** [EXT] ranking-evaluation statistics (q205): exact ROC-AUC
@@ -452,18 +453,8 @@ object Evaluation {
       .orderBy("event_type")
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q254_median_stability" -> (q254MedianStability _),
-    "q242_brier_decomposition" -> (q242BrierDecomposition _),
-    "q229_rater_kappa" -> (q229RaterKappa _),
-    "q222_metric_stability" -> (q222MetricStability _),
-    "q205_ranking_auc" -> (q205RankingAuc _),
-    "q208_digit_audit" -> (q208DigitAudit _),
-    "q209_eval_sample" -> (q209EvalSample _),
-    "q213_reliability_curve" -> (q213ReliabilityCurve _))
-
-  val oracles: Map[String, String] = Map(
-    "q254_median_stability" ->
+  val defs: Seq[QueryDef] = Seq(
+    QueryDef("q254_median_stability", q254MedianStability _,
       s"""WITH base AS (
         |  SELECT event_type,
         |         CAST(round(value * 100, 0) AS BIGINT) AS cents,
@@ -497,8 +488,9 @@ object Evaluation {
         |       round(rep_max / 100.0, 4) AS rep_max,
         |       round((rep_max - rep_min) / 100.0, 4) AS rep_range,
         |       within_1pct
-        |FROM agg ORDER BY event_type""".stripMargin,
-    "q242_brier_decomposition" -> {
+        |FROM agg ORDER BY event_type""".stripMargin),
+    QueryDef("q242_brier_decomposition", q242BrierDecomposition _,
+      {
       val probes = (1 until BrierBins).map(_.toDouble / BrierBins)
       s"""WITH per_user AS (
         |  SELECT user_id,
@@ -574,8 +566,8 @@ object Evaluation {
         |       s.reliability, s.resolution, s.uncertainty, s.brier
         |FROM quant q CROSS JOIN summ s
         |ORDER BY q.bin""".stripMargin
-    },
-    "q229_rater_kappa" ->
+    }),
+    QueryDef("q229_rater_kappa", q229RaterKappa _,
       """WITH docs AS (
         |  SELECT doc_id, lang, n_chars,
         |         len(list_filter(string_split(trim(text), ' '),
@@ -621,8 +613,8 @@ object Evaluation {
         |       round(pe, 6) AS p_expected,
         |       CASE WHEN pe < 1.0
         |            THEN round((po - pe) / (1.0 - pe), 6) END AS kappa
-        |FROM rates ORDER BY lang""".stripMargin,
-    "q222_metric_stability" ->
+        |FROM rates ORDER BY lang""".stripMargin),
+    QueryDef("q222_metric_stability", q222MetricStability _,
       s"""WITH base AS (
         |  SELECT event_type,
         |         CAST(round(value * 100, 0) AS BIGINT) AS cents,
@@ -655,86 +647,8 @@ object Evaluation {
         |       n_reps, round(rep_min, 6) AS rep_min,
         |       round(rep_max, 6) AS rep_max,
         |       round(rep_max - rep_min, 6) AS rep_range, within_1pct
-        |FROM agg ORDER BY event_type""".stripMargin,
-    "q213_reliability_curve" ->
-      """WITH per_user AS (
-        |  SELECT user_id,
-        |         CAST(sum(CAST(round(value * 100, 0) AS BIGINT))
-        |              AS BIGINT) AS cents,
-        |         CAST(sum(CASE WHEN event_type = 'purchase' THEN 1
-        |                       ELSE 0 END) AS BIGINT) AS pcnt
-        |  FROM events GROUP BY 1),
-        |med AS (SELECT quantile_cont(CAST(pcnt AS DOUBLE), 0.5) AS med
-        |        FROM per_user),
-        |users AS (
-        |  SELECT user_id, cents,
-        |         CASE WHEN pcnt > (SELECT med FROM med) THEN 1
-        |              ELSE 0 END AS label
-        |  FROM per_user),
-        |binned AS (
-        |  SELECT CAST(ntile(10) OVER (ORDER BY cents DESC, user_id)
-        |              AS INTEGER) AS decile,
-        |         cents, label
-        |  FROM users),
-        |agg AS (
-        |  SELECT decile, count(*) AS n_users,
-        |         CAST(sum(label) AS BIGINT) AS n_pos,
-        |         CAST(sum(cents) AS BIGINT) AS cents
-        |  FROM binned GROUP BY 1),
-        |global AS (
-        |  SELECT CAST(sum(n_pos) AS BIGINT) AS g_pos,
-        |         CAST(sum(n_users) AS BIGINT) AS g_n
-        |  FROM agg)
-        |SELECT decile, n_users, n_pos,
-        |       round(CAST(n_pos AS DOUBLE) / n_users, 6) AS pos_rate,
-        |       round(CAST(cents AS DOUBLE) / n_users / 100.0, 2)
-        |         AS mean_spend,
-        |       round((CAST(n_pos AS DOUBLE) / n_users) /
-        |             (CAST((SELECT g_pos FROM global) AS DOUBLE)
-        |              / (SELECT g_n FROM global)), 6) AS lift
-        |FROM agg ORDER BY decile""".stripMargin,
-    "q208_digit_audit" -> {
-      val benfordCase = Benford6
-        .map { case (d, p) => s"WHEN $d THEN CAST($p AS DOUBLE)" }
-        .mkString("CASE digit ", " ", " END")
-      s"""WITH obs AS (
-        |  SELECT CAST(substr(CAST(c AS VARCHAR), 1, 1) AS INTEGER)
-        |           AS digit,
-        |         count(*) AS n_obs
-        |  FROM (SELECT CAST(round(o_totalprice * 100, 0) AS BIGINT) AS c
-        |        FROM orders)
-        |  WHERE c > 0 GROUP BY 1),
-        |total AS (SELECT CAST(sum(n_obs) AS BIGINT) AS n_all FROM obs),
-        |terms AS (
-        |  SELECT digit, n_obs,
-        |         ($benfordCase)
-        |           * CAST((SELECT n_all FROM total) AS DOUBLE) AS e
-        |  FROM obs),
-        |quant AS (
-        |  SELECT digit, n_obs, e,
-        |         CAST(round((n_obs - e) * (n_obs - e) / e * 1e6, 0)
-        |              AS BIGINT) AS term_micro
-        |  FROM terms),
-        |stat AS (SELECT CAST(sum(term_micro) AS DOUBLE) / 1e6
-        |           AS chi2_total FROM quant)
-        |SELECT digit, n_obs,
-        |       round(e, 4) AS expected,
-        |       round((n_obs - e) / sqrt(e), 6) AS std_residual,
-        |       round((SELECT chi2_total FROM stat), 6) AS chi2_total
-        |FROM quant ORDER BY digit""".stripMargin
-    },
-    "q209_eval_sample" ->
-      s"""WITH ranked AS (
-        |  SELECT event_type, event_id,
-        |         CAST(row_number() OVER (
-        |           PARTITION BY event_type
-        |           ORDER BY md5(CAST(event_id AS VARCHAR)), event_id)
-        |         AS INTEGER) AS rn
-        |  FROM events)
-        |SELECT event_type, rn, event_id
-        |FROM ranked WHERE rn <= $SampleK
-        |ORDER BY event_type, rn""".stripMargin,
-    "q205_ranking_auc" ->
+        |FROM agg ORDER BY event_type""".stripMargin),
+    QueryDef("q205_ranking_auc", q205RankingAuc _,
       """WITH per_user AS (
         |  SELECT user_id,
         |         CAST(sum(CAST(round(value * 100, 0) AS BIGINT))
@@ -770,5 +684,84 @@ object Evaluation {
         |            THEN round(CAST(u2 AS DOUBLE)
         |                       / CAST(2 * n_pos * n_neg AS DOUBLE), 6)
         |            END AS auc
-        |FROM agg""".stripMargin)
+        |FROM agg""".stripMargin),
+    QueryDef("q208_digit_audit", q208DigitAudit _,
+      {
+      val benfordCase = Benford6
+        .map { case (d, p) => s"WHEN $d THEN CAST($p AS DOUBLE)" }
+        .mkString("CASE digit ", " ", " END")
+      s"""WITH obs AS (
+        |  SELECT CAST(substr(CAST(c AS VARCHAR), 1, 1) AS INTEGER)
+        |           AS digit,
+        |         count(*) AS n_obs
+        |  FROM (SELECT CAST(round(o_totalprice * 100, 0) AS BIGINT) AS c
+        |        FROM orders)
+        |  WHERE c > 0 GROUP BY 1),
+        |total AS (SELECT CAST(sum(n_obs) AS BIGINT) AS n_all FROM obs),
+        |terms AS (
+        |  SELECT digit, n_obs,
+        |         ($benfordCase)
+        |           * CAST((SELECT n_all FROM total) AS DOUBLE) AS e
+        |  FROM obs),
+        |quant AS (
+        |  SELECT digit, n_obs, e,
+        |         CAST(round((n_obs - e) * (n_obs - e) / e * 1e6, 0)
+        |              AS BIGINT) AS term_micro
+        |  FROM terms),
+        |stat AS (SELECT CAST(sum(term_micro) AS DOUBLE) / 1e6
+        |           AS chi2_total FROM quant)
+        |SELECT digit, n_obs,
+        |       round(e, 4) AS expected,
+        |       round((n_obs - e) / sqrt(e), 6) AS std_residual,
+        |       round((SELECT chi2_total FROM stat), 6) AS chi2_total
+        |FROM quant ORDER BY digit""".stripMargin
+    }),
+    QueryDef("q209_eval_sample", q209EvalSample _,
+      s"""WITH ranked AS (
+        |  SELECT event_type, event_id,
+        |         CAST(row_number() OVER (
+        |           PARTITION BY event_type
+        |           ORDER BY md5(CAST(event_id AS VARCHAR)), event_id)
+        |         AS INTEGER) AS rn
+        |  FROM events)
+        |SELECT event_type, rn, event_id
+        |FROM ranked WHERE rn <= $SampleK
+        |ORDER BY event_type, rn""".stripMargin),
+    QueryDef("q213_reliability_curve", q213ReliabilityCurve _,
+      """WITH per_user AS (
+        |  SELECT user_id,
+        |         CAST(sum(CAST(round(value * 100, 0) AS BIGINT))
+        |              AS BIGINT) AS cents,
+        |         CAST(sum(CASE WHEN event_type = 'purchase' THEN 1
+        |                       ELSE 0 END) AS BIGINT) AS pcnt
+        |  FROM events GROUP BY 1),
+        |med AS (SELECT quantile_cont(CAST(pcnt AS DOUBLE), 0.5) AS med
+        |        FROM per_user),
+        |users AS (
+        |  SELECT user_id, cents,
+        |         CASE WHEN pcnt > (SELECT med FROM med) THEN 1
+        |              ELSE 0 END AS label
+        |  FROM per_user),
+        |binned AS (
+        |  SELECT CAST(ntile(10) OVER (ORDER BY cents DESC, user_id)
+        |              AS INTEGER) AS decile,
+        |         cents, label
+        |  FROM users),
+        |agg AS (
+        |  SELECT decile, count(*) AS n_users,
+        |         CAST(sum(label) AS BIGINT) AS n_pos,
+        |         CAST(sum(cents) AS BIGINT) AS cents
+        |  FROM binned GROUP BY 1),
+        |global AS (
+        |  SELECT CAST(sum(n_pos) AS BIGINT) AS g_pos,
+        |         CAST(sum(n_users) AS BIGINT) AS g_n
+        |  FROM agg)
+        |SELECT decile, n_users, n_pos,
+        |       round(CAST(n_pos AS DOUBLE) / n_users, 6) AS pos_rate,
+        |       round(CAST(cents AS DOUBLE) / n_users / 100.0, 2)
+        |         AS mean_spend,
+        |       round((CAST(n_pos AS DOUBLE) / n_users) /
+        |             (CAST((SELECT g_pos FROM global) AS DOUBLE)
+        |              / (SELECT g_n FROM global)), 6) AS lift
+        |FROM agg ORDER BY decile""".stripMargin))
 }

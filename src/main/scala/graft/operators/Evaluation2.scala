@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.QueryDef
 import graft.functions.Hashing
 import graft.sources.Tables
 
@@ -180,13 +181,8 @@ object Evaluation2 {
           .as("tau_b"))
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q262_pr_auc" -> (q262PrAuc _),
-    "q264_cliffs_delta" -> (q264CliffsDelta _),
-    "q267_kendall_tau" -> (q267KendallTau _))
-
-  val oracles: Map[String, String] = Map(
-    "q262_pr_auc" ->
+  val defs: Seq[QueryDef] = Seq(
+    QueryDef("q262_pr_auc", q262PrAuc _,
       """WITH pu AS (
         |  SELECT user_id,
         |         CAST(sum(CAST(round(value * 100, 0) AS BIGINT))
@@ -225,8 +221,8 @@ object Evaluation2 {
         |             CAST(t.n_pos * c.cum_all AS DOUBLE), 0) AS BIGINT)
         |         END) AS DOUBLE) / 1e6, 6) AS ap
         |FROM cum c CROSS JOIN tot t
-        |GROUP BY 1, 2, 3""".stripMargin,
-    "q264_cliffs_delta" ->
+        |GROUP BY 1, 2, 3""".stripMargin),
+    QueryDef("q264_cliffs_delta", q264CliffsDelta _,
       """WITH pu AS (
         |  SELECT event_type,
         |         ('0x' || substr(md5('arm:' || user_id), 1, 15))::BIGINT
@@ -267,8 +263,8 @@ object Evaluation2 {
         |            WHEN abs(delta) >= 0.33 THEN 'medium'
         |            WHEN abs(delta) >= 0.147 THEN 'small'
         |            ELSE 'negligible' END AS magnitude
-        |FROM scored ORDER BY event_type""".stripMargin,
-    "q267_kendall_tau" ->
+        |FROM scored ORDER BY event_type""".stripMargin),
+    QueryDef("q267_kendall_tau", q267KendallTau _,
       """WITH profile AS (
         |  SELECT c.c_nationkey AS nation,
         |         CAST(sum(CAST(round(o.o_totalprice * 100, 0) AS BIGINT))
@@ -299,5 +295,5 @@ object Evaluation2 {
         |              sqrt(CAST((n_pairs - ties_x) * (n_pairs - ties_y)
         |                AS DOUBLE)), 6)
         |       END AS tau_b
-        |FROM agg""".stripMargin)
+        |FROM agg""".stripMargin))
 }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.QueryDef
 import graft.sources.Tables
 
 /** [EXT] exact-substring duplication detection (q204) — the
@@ -146,12 +147,8 @@ object ExactSubstr {
       .orderBy("source")
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q204_exact_substr" -> (q204ExactSubstr _),
-    "q219_span_excision" -> (q219SpanExcision _))
-
-  val oracles: Map[String, String] = Map(
-    "q204_exact_substr" ->
+  val defs: Seq[QueryDef] = Seq(
+    QueryDef("q204_exact_substr", q204ExactSubstr _,
       s"""WITH wins AS (
         |  SELECT doc_id, i AS idx,
         |         md5(array_to_string(ws[i:i + ${W - 1}], ' ')) AS wh
@@ -191,8 +188,8 @@ object ExactSubstr {
         |       n_runs, n_shared_windows
         |FROM best
         |ORDER BY longest_run_words DESC, id1, id2
-        |LIMIT $TopPairs""".stripMargin,
-    "q219_span_excision" ->
+        |LIMIT $TopPairs""".stripMargin),
+    QueryDef("q219_span_excision", q219SpanExcision _,
       s"""WITH wins AS (
         |  SELECT doc_id, i AS idx,
         |         md5(array_to_string(ws[i:i + ${W - 1}], ' ')) AS wh
@@ -243,5 +240,5 @@ object ExactSubstr {
         |       round(CAST(coalesce(sum(p.excised_words), 0) AS DOUBLE)
         |             / CAST(sum(d.n_words) AS BIGINT), 6) AS excision_rate
         |FROM d LEFT JOIN perdoc p USING (doc_id)
-        |GROUP BY d.source ORDER BY d.source""".stripMargin)
+        |GROUP BY d.source ORDER BY d.source""".stripMargin))
 }

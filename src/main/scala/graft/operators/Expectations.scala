@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.QueryDef
 import graft.sources.Tables
 
 /** [EXT] data-quality expectation suite (the Deequ/dbt-tests shape): the
@@ -84,11 +85,8 @@ object Expectations {
       .orderBy("expectation")
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q139_data_expectations" -> (q139DataExpectations _))
-
-  val oracles: Map[String, String] = Map(
-    "q139_data_expectations" ->
+  val defs: Seq[QueryDef] = Seq(
+    QueryDef("q139_data_expectations", q139DataExpectations _,
       s"""WITH ev AS (
         |  SELECT count(*) FILTER (WHERE ts IS NULL) AS ts_null,
         |         count(*) FILTER (WHERE ts IS NOT NULL
@@ -137,5 +135,5 @@ object Expectations {
         |         priority_null = 0 FROM ord
         |  UNION ALL SELECT 'orders_totalprice_positive', price_bad,
         |         price_bad = 0 FROM ord)
-        |ORDER BY expectation""".stripMargin)
+        |ORDER BY expectation""".stripMargin))
 }

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.QueryDef
 import graft.functions.Hashing
 import graft.sources.Tables
 
@@ -511,144 +512,8 @@ object Experiment {
       .orderBy("event_type", "probe_pct")
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q318_quantile_effects" -> (q318QuantileEffects _),
-    "q308_duration_planner" -> (q308DurationPlanner _),
-    "q295_winsorized_welch" -> (q295WinsorizedWelch _),
-    "q287_peeking_audit" -> (q287PeekingAudit _),
-    "q280_ab_power" -> (q280AbPower _),
-    "q253_rate_change" -> (q253RateChange _),
-    "q251_brown_forsythe" -> (q251BrownForsythe _),
-    "q248_diff_in_diff" -> (q248DiffInDiff _),
-    "q165_ab_welch" -> (q165AbWelch _))
-
-  val oracles: Map[String, String] = Map(
-    "q253_rate_change" ->
-      """WITH ev AS (
-        |  SELECT event_type, epoch_us(CAST(ts AS TIMESTAMP)) AS us
-        |  FROM events),
-        |bounds AS (
-        |  SELECT min(us) AS t0, max(us) AS t1,
-        |         (min(us) + max(us)) // 2 AS cut
-        |  FROM ev),
-        |counts AS (
-        |  SELECT event_type,
-        |         CAST(sum(CASE WHEN us < (SELECT cut FROM bounds)
-        |                       THEN 1 ELSE 0 END) AS BIGINT) AS c1,
-        |         CAST(sum(CASE WHEN us >= (SELECT cut FROM bounds)
-        |                       THEN 1 ELSE 0 END) AS BIGINT) AS c2,
-        |         (SELECT cut - t0 FROM bounds) AS exp1,
-        |         (SELECT t1 - cut + 1 FROM bounds) AS exp2
-        |  FROM ev GROUP BY 1),
-        |calc AS (
-        |  SELECT *,
-        |         CAST(exp1 AS DOUBLE) / CAST(exp1 + exp2 AS DOUBLE) AS p0,
-        |         c1 + c2 AS n
-        |  FROM counts),
-        |zz AS (
-        |  SELECT *,
-        |         (CAST(c1 AS DOUBLE) - CAST(n AS DOUBLE) * p0)
-        |           / sqrt(CAST(n AS DOUBLE) * p0 * (1.0 - p0)) AS z
-        |  FROM calc)
-        |SELECT event_type, c1, c2,
-        |       round(CAST(n AS DOUBLE) * p0, 2) AS expected_c1,
-        |       round(z, 6) AS z,
-        |       CASE WHEN abs(z) > 1.96 THEN 'rate_changed'
-        |            ELSE 'rate_stable' END AS verdict
-        |FROM zz ORDER BY event_type""".stripMargin,
-    "q251_brown_forsythe" ->
-      """WITH ev AS (
-        |  SELECT event_type, epoch_us(CAST(ts AS TIMESTAMP)) AS us,
-        |         CAST(round(value * 100, 0) AS BIGINT) AS cents
-        |  FROM events),
-        |cut AS (SELECT (min(us) + max(us)) // 2 AS cut FROM ev),
-        |flagged AS (
-        |  SELECT event_type, us < (SELECT cut FROM cut) AS is_ref, cents
-        |  FROM ev),
-        |meds AS (
-        |  SELECT event_type, is_ref,
-        |         quantile_cont(CAST(cents AS DOUBLE), 0.5) AS med
-        |  FROM flagged GROUP BY 1, 2),
-        |z AS (
-        |  SELECT f.event_type, f.is_ref,
-        |         CAST(round(abs(f.cents - m.med) * 2, 0) AS BIGINT) AS z2
-        |  FROM flagged f JOIN meds m
-        |    ON f.event_type = m.event_type AND f.is_ref = m.is_ref),
-        |stats AS (
-        |  SELECT event_type,
-        |         CAST(sum(CASE WHEN is_ref THEN 1 ELSE 0 END) AS BIGINT)
-        |           AS na,
-        |         CAST(sum(CASE WHEN is_ref THEN z2 ELSE 0 END) AS BIGINT)
-        |           AS sa,
-        |         CAST(sum(CASE WHEN is_ref THEN z2 * z2 ELSE 0 END)
-        |              AS BIGINT) AS qa,
-        |         CAST(sum(CASE WHEN NOT is_ref THEN 1 ELSE 0 END)
-        |              AS BIGINT) AS nb,
-        |         CAST(sum(CASE WHEN NOT is_ref THEN z2 ELSE 0 END)
-        |              AS BIGINT) AS sb,
-        |         CAST(sum(CASE WHEN NOT is_ref THEN z2 * z2 ELSE 0 END)
-        |              AS BIGINT) AS qb
-        |  FROM z GROUP BY 1),
-        |calc AS (
-        |  SELECT *,
-        |         CAST(sa AS DOUBLE) / na AS ma,
-        |         CAST(sb AS DOUBLE) / nb AS mb
-        |  FROM stats),
-        |tt AS (
-        |  SELECT *,
-        |         (ma - mb) / sqrt(
-        |           ((CAST(qa AS DOUBLE) - CAST(sa AS DOUBLE) * ma)
-        |              / (na - 1)) / na
-        |           + ((CAST(qb AS DOUBLE) - CAST(sb AS DOUBLE) * mb)
-        |                / (nb - 1)) / nb) AS t
-        |  FROM calc)
-        |SELECT event_type, na AS n_ref, nb AS n_cur,
-        |       round(ma / 200, 4) AS mean_absdev_ref,
-        |       round(mb / 200, 4) AS mean_absdev_cur,
-        |       round(t, 6) AS t_bf,
-        |       CASE WHEN abs(t) > 1.96 THEN 'spread_changed'
-        |            ELSE 'spread_stable' END AS verdict
-        |FROM tt ORDER BY event_type""".stripMargin,
-    "q248_diff_in_diff" ->
-      """WITH ev AS (
-        |  SELECT user_id, epoch_us(CAST(ts AS TIMESTAMP)) AS us,
-        |         CAST(round(value * 100, 0) AS BIGINT) AS cents
-        |  FROM events),
-        |cut AS (SELECT (min(us) + max(us)) // 2 AS cut FROM ev),
-        |panel AS (
-        |  SELECT user_id,
-        |         CASE WHEN us < (SELECT cut FROM cut) THEN 'pre'
-        |              ELSE 'post' END AS period,
-        |         CAST(sum(cents) AS BIGINT) AS cents
-        |  FROM ev GROUP BY 1, 2),
-        |tagged AS (
-        |  SELECT *,
-        |         CASE WHEN ('0x' || substr(md5('did:'
-        |                || CAST(user_id AS VARCHAR)), 1, 15))::BIGINT % 2
-        |                = 0
-        |              THEN 'treat' ELSE 'control' END AS grp
-        |  FROM panel),
-        |cells AS (
-        |  SELECT grp, period, count(*) AS n_units,
-        |         CAST(sum(cents) AS BIGINT) AS cents,
-        |         CAST(CAST(sum(cents) AS BIGINT) AS DOUBLE) / count(*)
-        |           AS mean_cents
-        |  FROM tagged GROUP BY 1, 2),
-        |did AS (
-        |  SELECT ((SELECT mean_cents FROM cells
-        |           WHERE grp = 'treat' AND period = 'post')
-        |          - (SELECT mean_cents FROM cells
-        |             WHERE grp = 'treat' AND period = 'pre'))
-        |         - ((SELECT mean_cents FROM cells
-        |             WHERE grp = 'control' AND period = 'post')
-        |            - (SELECT mean_cents FROM cells
-        |               WHERE grp = 'control' AND period = 'pre'))
-        |           AS did_cents)
-        |SELECT grp, period, n_units,
-        |       round(mean_cents / 100.0, 4) AS mean_spend,
-        |       round((SELECT did_cents FROM did) / 100.0, 4) AS did_spend
-        |FROM cells ORDER BY grp, period""".stripMargin,
-    "q318_quantile_effects" ->
+  val defs: Seq[QueryDef] = Seq(
+    QueryDef("q318_quantile_effects", q318QuantileEffects _,
       """WITH ev AS (
         |  SELECT event_type,
         |         ('0x' || substr(md5('arm:' || user_id), 1, 15))::BIGINT
@@ -670,8 +535,8 @@ object Experiment {
         |       round(qa / 100, 4) AS q_a,
         |       round(qb / 100, 4) AS q_b,
         |       round((qa - qb) / 100, 4) + 0.0 AS qte
-        |FROM m ORDER BY event_type, probe_pct""".stripMargin,
-    "q308_duration_planner" ->
+        |FROM m ORDER BY event_type, probe_pct""".stripMargin),
+    QueryDef("q308_duration_planner", q308DurationPlanner _,
       s"""WITH ev AS (
         |  SELECT event_type, CAST(ts AS DATE) AS day,
         |         ('0x' || substr(md5('arm:' || user_id), 1, 15))::BIGINT
@@ -715,8 +580,8 @@ object Experiment {
         |                      n_req * n_days / nb), 2) AS days_needed,
         |       greatest(n_req * n_days / na, n_req * n_days / nb)
         |         <= CAST(n_days AS DOUBLE) AS already_enough
-        |FROM calc ORDER BY event_type""".stripMargin,
-    "q295_winsorized_welch" ->
+        |FROM calc ORDER BY event_type""".stripMargin),
+    QueryDef("q295_winsorized_welch", q295WinsorizedWelch _,
       """WITH ev AS (
         |  SELECT event_type,
         |         ('0x' || substr(md5('arm:' || user_id), 1, 15))::BIGINT
@@ -782,8 +647,8 @@ object Experiment {
         |       CASE WHEN abs(t_winsor) > 1.96 THEN 'significant'
         |            ELSE 'not_significant' END AS verdict_winsor,
         |       (abs(t_raw) > 1.96) <> (abs(t_winsor) > 1.96) AS flipped
-        |FROM t ORDER BY event_type""".stripMargin,
-    "q287_peeking_audit" ->
+        |FROM t ORDER BY event_type""".stripMargin),
+    QueryDef("q287_peeking_audit", q287PeekingAudit _,
       """WITH ev AS (
         |  SELECT event_type, CAST(ts AS DATE) AS day,
         |         ('0x' || substr(md5('arm:' || user_id), 1, 15))::BIGINT
@@ -879,8 +744,8 @@ object Experiment {
         |       (i.first_stop_idx IS NOT NULL AND
         |        NOT COALESCE(abs(f.final_z) > 1.96, false)) AS false_stop
         |FROM interim i JOIN finz f USING (event_type)
-        |ORDER BY i.event_type""".stripMargin,
-    "q280_ab_power" ->
+        |ORDER BY i.event_type""".stripMargin),
+    QueryDef("q280_ab_power", q280AbPower _,
       s"""WITH ev AS (
         |  SELECT event_type,
         |         ('0x' || substr(md5('arm:' || user_id), 1, 15))::BIGINT
@@ -910,8 +775,133 @@ object Experiment {
         |                     + ((CAST(qb AS DOUBLE) - CAST(sb AS DOUBLE)
         |                        * (CAST(sb AS DOUBLE) / nb)) / (nb - 1)) / nb))
         |             / (CAST(sa AS DOUBLE) / na), 6) AS mde_rel
-        |FROM stats ORDER BY event_type""".stripMargin,
-    "q165_ab_welch" ->
+        |FROM stats ORDER BY event_type""".stripMargin),
+    QueryDef("q253_rate_change", q253RateChange _,
+      """WITH ev AS (
+        |  SELECT event_type, epoch_us(CAST(ts AS TIMESTAMP)) AS us
+        |  FROM events),
+        |bounds AS (
+        |  SELECT min(us) AS t0, max(us) AS t1,
+        |         (min(us) + max(us)) // 2 AS cut
+        |  FROM ev),
+        |counts AS (
+        |  SELECT event_type,
+        |         CAST(sum(CASE WHEN us < (SELECT cut FROM bounds)
+        |                       THEN 1 ELSE 0 END) AS BIGINT) AS c1,
+        |         CAST(sum(CASE WHEN us >= (SELECT cut FROM bounds)
+        |                       THEN 1 ELSE 0 END) AS BIGINT) AS c2,
+        |         (SELECT cut - t0 FROM bounds) AS exp1,
+        |         (SELECT t1 - cut + 1 FROM bounds) AS exp2
+        |  FROM ev GROUP BY 1),
+        |calc AS (
+        |  SELECT *,
+        |         CAST(exp1 AS DOUBLE) / CAST(exp1 + exp2 AS DOUBLE) AS p0,
+        |         c1 + c2 AS n
+        |  FROM counts),
+        |zz AS (
+        |  SELECT *,
+        |         (CAST(c1 AS DOUBLE) - CAST(n AS DOUBLE) * p0)
+        |           / sqrt(CAST(n AS DOUBLE) * p0 * (1.0 - p0)) AS z
+        |  FROM calc)
+        |SELECT event_type, c1, c2,
+        |       round(CAST(n AS DOUBLE) * p0, 2) AS expected_c1,
+        |       round(z, 6) AS z,
+        |       CASE WHEN abs(z) > 1.96 THEN 'rate_changed'
+        |            ELSE 'rate_stable' END AS verdict
+        |FROM zz ORDER BY event_type""".stripMargin),
+    QueryDef("q251_brown_forsythe", q251BrownForsythe _,
+      """WITH ev AS (
+        |  SELECT event_type, epoch_us(CAST(ts AS TIMESTAMP)) AS us,
+        |         CAST(round(value * 100, 0) AS BIGINT) AS cents
+        |  FROM events),
+        |cut AS (SELECT (min(us) + max(us)) // 2 AS cut FROM ev),
+        |flagged AS (
+        |  SELECT event_type, us < (SELECT cut FROM cut) AS is_ref, cents
+        |  FROM ev),
+        |meds AS (
+        |  SELECT event_type, is_ref,
+        |         quantile_cont(CAST(cents AS DOUBLE), 0.5) AS med
+        |  FROM flagged GROUP BY 1, 2),
+        |z AS (
+        |  SELECT f.event_type, f.is_ref,
+        |         CAST(round(abs(f.cents - m.med) * 2, 0) AS BIGINT) AS z2
+        |  FROM flagged f JOIN meds m
+        |    ON f.event_type = m.event_type AND f.is_ref = m.is_ref),
+        |stats AS (
+        |  SELECT event_type,
+        |         CAST(sum(CASE WHEN is_ref THEN 1 ELSE 0 END) AS BIGINT)
+        |           AS na,
+        |         CAST(sum(CASE WHEN is_ref THEN z2 ELSE 0 END) AS BIGINT)
+        |           AS sa,
+        |         CAST(sum(CASE WHEN is_ref THEN z2 * z2 ELSE 0 END)
+        |              AS BIGINT) AS qa,
+        |         CAST(sum(CASE WHEN NOT is_ref THEN 1 ELSE 0 END)
+        |              AS BIGINT) AS nb,
+        |         CAST(sum(CASE WHEN NOT is_ref THEN z2 ELSE 0 END)
+        |              AS BIGINT) AS sb,
+        |         CAST(sum(CASE WHEN NOT is_ref THEN z2 * z2 ELSE 0 END)
+        |              AS BIGINT) AS qb
+        |  FROM z GROUP BY 1),
+        |calc AS (
+        |  SELECT *,
+        |         CAST(sa AS DOUBLE) / na AS ma,
+        |         CAST(sb AS DOUBLE) / nb AS mb
+        |  FROM stats),
+        |tt AS (
+        |  SELECT *,
+        |         (ma - mb) / sqrt(
+        |           ((CAST(qa AS DOUBLE) - CAST(sa AS DOUBLE) * ma)
+        |              / (na - 1)) / na
+        |           + ((CAST(qb AS DOUBLE) - CAST(sb AS DOUBLE) * mb)
+        |                / (nb - 1)) / nb) AS t
+        |  FROM calc)
+        |SELECT event_type, na AS n_ref, nb AS n_cur,
+        |       round(ma / 200, 4) AS mean_absdev_ref,
+        |       round(mb / 200, 4) AS mean_absdev_cur,
+        |       round(t, 6) AS t_bf,
+        |       CASE WHEN abs(t) > 1.96 THEN 'spread_changed'
+        |            ELSE 'spread_stable' END AS verdict
+        |FROM tt ORDER BY event_type""".stripMargin),
+    QueryDef("q248_diff_in_diff", q248DiffInDiff _,
+      """WITH ev AS (
+        |  SELECT user_id, epoch_us(CAST(ts AS TIMESTAMP)) AS us,
+        |         CAST(round(value * 100, 0) AS BIGINT) AS cents
+        |  FROM events),
+        |cut AS (SELECT (min(us) + max(us)) // 2 AS cut FROM ev),
+        |panel AS (
+        |  SELECT user_id,
+        |         CASE WHEN us < (SELECT cut FROM cut) THEN 'pre'
+        |              ELSE 'post' END AS period,
+        |         CAST(sum(cents) AS BIGINT) AS cents
+        |  FROM ev GROUP BY 1, 2),
+        |tagged AS (
+        |  SELECT *,
+        |         CASE WHEN ('0x' || substr(md5('did:'
+        |                || CAST(user_id AS VARCHAR)), 1, 15))::BIGINT % 2
+        |                = 0
+        |              THEN 'treat' ELSE 'control' END AS grp
+        |  FROM panel),
+        |cells AS (
+        |  SELECT grp, period, count(*) AS n_units,
+        |         CAST(sum(cents) AS BIGINT) AS cents,
+        |         CAST(CAST(sum(cents) AS BIGINT) AS DOUBLE) / count(*)
+        |           AS mean_cents
+        |  FROM tagged GROUP BY 1, 2),
+        |did AS (
+        |  SELECT ((SELECT mean_cents FROM cells
+        |           WHERE grp = 'treat' AND period = 'post')
+        |          - (SELECT mean_cents FROM cells
+        |             WHERE grp = 'treat' AND period = 'pre'))
+        |         - ((SELECT mean_cents FROM cells
+        |             WHERE grp = 'control' AND period = 'post')
+        |            - (SELECT mean_cents FROM cells
+        |               WHERE grp = 'control' AND period = 'pre'))
+        |           AS did_cents)
+        |SELECT grp, period, n_units,
+        |       round(mean_cents / 100.0, 4) AS mean_spend,
+        |       round((SELECT did_cents FROM did) / 100.0, 4) AS did_spend
+        |FROM cells ORDER BY grp, period""".stripMargin),
+    QueryDef("q165_ab_welch", q165AbWelch _,
       """WITH ev AS (
         |  SELECT event_type,
         |         ('0x' || substr(md5('arm:' || user_id), 1, 15))::BIGINT
@@ -943,5 +933,5 @@ object Experiment {
         |                       * (CAST(sb AS DOUBLE) / nb)) / (nb - 1)) / nb))
         |             > 1.96
         |            THEN 'significant' ELSE 'not_significant' END AS verdict
-        |FROM stats ORDER BY event_type""".stripMargin)
+        |FROM stats ORDER BY event_type""".stripMargin))
 }

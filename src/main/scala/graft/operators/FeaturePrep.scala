@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.QueryDef
 import graft.sources.Tables
 
 /** [EXT] ML feature-preparation operators: temporal train/test
@@ -471,18 +472,6 @@ object FeaturePrep {
       .orderBy("source")
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q335_fold_balance" -> (q335FoldBalance _),
-    "q336_spearman_length_quality" -> (q336SpearmanLengthQuality _),
-    "q313_loo_encoding" -> (q313LooEncoding _),
-    "q312_covariate_balance" -> (q312CovariateBalance _),
-    "q306_cramers_v" -> (q306CramersV _),
-    "q227_feature_corr" -> (q227FeatureCorr _),
-    "q196_temporal_split" -> (q196TemporalSplit _),
-    "q197_target_encoding" -> (q197TargetEncoding _),
-    "q198_mutual_information" -> (q198MutualInformation _),
-    "q201_chi_square" -> (q201ChiSquare _))
-
   private def featureCorrSql: String = {
     val pairs = for {
       i <- CorrFeatures.indices; j <- CorrFeatures.indices if i < j
@@ -610,8 +599,8 @@ object FeaturePrep {
        |ORDER BY feature""".stripMargin
   }
 
-  val oracles: Map[String, String] = Map(
-    "q335_fold_balance" ->
+  val defs: Seq[QueryDef] = Seq(
+    QueryDef("q335_fold_balance", q335FoldBalance _,
       s"""WITH rows_ AS (
         |  SELECT label,
         |         CAST(('0x' || substr(md5('fold:' || vec_id), 1, 15))
@@ -628,8 +617,8 @@ object FeaturePrep {
         |       round(CAST(c.n AS DOUBLE) / s.n_label
         |             - 1.0 / $CvFolds, 6) AS share_deviation
         |FROM cells c JOIN strata s USING (label)
-        |ORDER BY c.label, c.fold""".stripMargin,
-    "q336_spearman_length_quality" ->
+        |ORDER BY c.label, c.fold""".stripMargin),
+    QueryDef("q336_spearman_length_quality", q336SpearmanLengthQuality _,
       """WITH docs AS (
         |  SELECT source, n_chars,
         |         CAST(len(list_filter(string_split(trim(text), ' '),
@@ -667,8 +656,8 @@ object FeaturePrep {
         |SELECT source, k AS n_docs,
         |       round(num / (sqrt(denx) * sqrt(deny)), 6) AS spearman_rho
         |FROM f WHERE denx > 0 AND deny > 0
-        |ORDER BY source""".stripMargin,
-    "q313_loo_encoding" ->
+        |ORDER BY source""".stripMargin),
+    QueryDef("q313_loo_encoding", q313LooEncoding _,
       """WITH rows_ AS (
         |  SELECT o_orderpriority AS category,
         |         CAST(round(o_totalprice * 100, 0) AS BIGINT) AS cents
@@ -692,11 +681,12 @@ object FeaturePrep {
         |             / (CAST(p.n AS DOUBLE) * (p.n - 1)) / 100, 6)
         |         AS max_loo_shift
         |FROM prof p JOIN dev d USING (category)
-        |ORDER BY p.category""".stripMargin,
-    "q312_covariate_balance" -> covariateBalanceSql,
-    "q306_cramers_v" -> cramersVSql,
-    "q227_feature_corr" -> featureCorrSql,
-    "q196_temporal_split" ->
+        |ORDER BY p.category""".stripMargin),
+    QueryDef("q312_covariate_balance", q312CovariateBalance _,
+      covariateBalanceSql),
+    QueryDef("q306_cramers_v", q306CramersV _, cramersVSql),
+    QueryDef("q227_feature_corr", q227FeatureCorr _, featureCorrSql),
+    QueryDef("q196_temporal_split", q196TemporalSplit _,
       s"""WITH ev AS (
         |  SELECT user_id, epoch_us(CAST(ts AS TIMESTAMP)) AS us
         |  FROM events),
@@ -714,8 +704,8 @@ object FeaturePrep {
         |SELECT split, count(*) AS n_events,
         |       count(DISTINCT user_id) AS n_users,
         |       min(us) AS min_us, max(us) AS max_us
-        |FROM tagged GROUP BY split ORDER BY split""".stripMargin,
-    "q197_target_encoding" ->
+        |FROM tagged GROUP BY split ORDER BY split""".stripMargin),
+    QueryDef("q197_target_encoding", q197TargetEncoding _,
       s"""WITH rows_ AS (
         |  SELECT o_orderpriority AS category,
         |         CAST(round(o_totalprice * 100, 0) AS BIGINT) AS cents
@@ -734,8 +724,39 @@ object FeaturePrep {
         |         / (n + $SmoothM) / 100.0, 6) AS encoded,
         |       round(CAST(n AS DOUBLE) / (n + $SmoothM), 6)
         |         AS shrink_weight
-        |FROM per_cat ORDER BY category""".stripMargin,
-    "q201_chi_square" ->
+        |FROM per_cat ORDER BY category""".stripMargin),
+    QueryDef("q198_mutual_information", q198MutualInformation _,
+      """WITH cells AS (
+        |  SELECT event_type AS t,
+        |         CAST(isodow(CAST(CAST(ts AS TIMESTAMP) AS DATE)) - 1
+        |              AS INTEGER) AS dow,
+        |         count(*) AS n_ij
+        |  FROM events GROUP BY 1, 2),
+        |row_m AS (SELECT t, CAST(sum(n_ij) AS BIGINT) AS n_i
+        |          FROM cells GROUP BY t),
+        |col_m AS (SELECT dow, CAST(sum(n_ij) AS BIGINT) AS n_j
+        |          FROM cells GROUP BY dow),
+        |total AS (SELECT CAST(sum(n_ij) AS BIGINT) AS n_all FROM cells),
+        |terms AS (
+        |  SELECT c.t, c.dow, c.n_ij,
+        |         log2(CAST(c.n_ij * (SELECT n_all FROM total) AS DOUBLE)
+        |              / (r.n_i * m.n_j)) AS pmi_bits,
+        |         (SELECT n_all FROM total) AS n_all
+        |  FROM cells c
+        |  JOIN row_m r ON r.t = c.t
+        |  JOIN col_m m ON m.dow = c.dow),
+        |quant AS (
+        |  SELECT t, dow, n_ij, pmi_bits,
+        |         CAST(round(pmi_bits * n_ij / n_all * 1e6, 0) AS BIGINT)
+        |           AS term_micro
+        |  FROM terms),
+        |mi AS (SELECT CAST(sum(term_micro) AS DOUBLE) / 1e6
+        |         AS mi_bits_total FROM quant)
+        |SELECT t, dow, n_ij,
+        |       round(pmi_bits, 6) AS pmi_bits,
+        |       round((SELECT mi_bits_total FROM mi), 6) AS mi_bits_total
+        |FROM quant ORDER BY t, dow""".stripMargin),
+    QueryDef("q201_chi_square", q201ChiSquare _,
       """WITH obs AS (
         |  SELECT event_type AS t,
         |         CAST(isodow(CAST(CAST(ts AS TIMESTAMP) AS DATE)) - 1
@@ -775,36 +796,5 @@ object FeaturePrep {
         |       round((n_ij - e) / sqrt(e), 6) AS std_residual,
         |       round((SELECT chi2_total FROM stat), 6) AS chi2_total,
         |       (SELECT dof FROM stat) AS dof
-        |FROM quant ORDER BY t, dow""".stripMargin,
-    "q198_mutual_information" ->
-      """WITH cells AS (
-        |  SELECT event_type AS t,
-        |         CAST(isodow(CAST(CAST(ts AS TIMESTAMP) AS DATE)) - 1
-        |              AS INTEGER) AS dow,
-        |         count(*) AS n_ij
-        |  FROM events GROUP BY 1, 2),
-        |row_m AS (SELECT t, CAST(sum(n_ij) AS BIGINT) AS n_i
-        |          FROM cells GROUP BY t),
-        |col_m AS (SELECT dow, CAST(sum(n_ij) AS BIGINT) AS n_j
-        |          FROM cells GROUP BY dow),
-        |total AS (SELECT CAST(sum(n_ij) AS BIGINT) AS n_all FROM cells),
-        |terms AS (
-        |  SELECT c.t, c.dow, c.n_ij,
-        |         log2(CAST(c.n_ij * (SELECT n_all FROM total) AS DOUBLE)
-        |              / (r.n_i * m.n_j)) AS pmi_bits,
-        |         (SELECT n_all FROM total) AS n_all
-        |  FROM cells c
-        |  JOIN row_m r ON r.t = c.t
-        |  JOIN col_m m ON m.dow = c.dow),
-        |quant AS (
-        |  SELECT t, dow, n_ij, pmi_bits,
-        |         CAST(round(pmi_bits * n_ij / n_all * 1e6, 0) AS BIGINT)
-        |           AS term_micro
-        |  FROM terms),
-        |mi AS (SELECT CAST(sum(term_micro) AS DOUBLE) / 1e6
-        |         AS mi_bits_total FROM quant)
-        |SELECT t, dow, n_ij,
-        |       round(pmi_bits, 6) AS pmi_bits,
-        |       round((SELECT mi_bits_total FROM mi), 6) AS mi_bits_total
-        |FROM quant ORDER BY t, dow""".stripMargin)
+        |FROM quant ORDER BY t, dow""".stripMargin))
 }

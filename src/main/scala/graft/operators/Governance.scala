@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.QueryDef
 import graft.functions.Hashing
 import graft.sources.Tables
 
@@ -215,14 +216,9 @@ object Governance {
       .orderBy("clip_cents")
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q245_clip_calibration" -> (q245ClipCalibration _),
-    "q159_erasure_cascade" -> (q159ErasureCascade _),
-    "q160_mlm_mask" -> (q160MlmMask _),
-    "q216_k_anonymity" -> (q216KAnonymity _))
-
-  val oracles: Map[String, String] = Map(
-    "q245_clip_calibration" -> {
+  val defs: Seq[QueryDef] = Seq(
+    QueryDef("q245_clip_calibration", q245ClipCalibration _,
+      {
       val probes = ClipLadderBp.map(_ / 10000.0)
       val labels = ClipLadderBp.map(bp => s"'p${bp / 100}'")
       s"""WITH ut AS (
@@ -253,8 +249,56 @@ object Governance {
         |       round(CAST(clipped_cents AS DOUBLE)
         |             / CAST(raw_cents AS DOUBLE), 6) AS retained_mass
         |FROM stats ORDER BY clip_cents""".stripMargin
-    },
-    "q216_k_anonymity" ->
+    }),
+    QueryDef("q159_erasure_cascade", q159ErasureCascade _,
+      s"""WITH forget AS (
+         |  SELECT DISTINCT user_id FROM events WHERE user_id % $ForgetMod = 0),
+         |delc AS (
+         |  SELECT c_custkey FROM customer JOIN forget ON c_custkey = user_id),
+         |delo AS (
+         |  SELECT o_orderkey FROM orders JOIN delc ON o_custkey = c_custkey),
+         |audit AS (
+         |  SELECT 'customer' AS table_name, count(*) AS n_before,
+         |         count(*) FILTER (c_custkey IN (SELECT user_id FROM forget))
+         |           AS n_deleted
+         |  FROM customer
+         |  UNION ALL
+         |  SELECT 'events', count(*),
+         |         count(*) FILTER (user_id IN (SELECT user_id FROM forget))
+         |  FROM events
+         |  UNION ALL
+         |  SELECT 'lineitem', count(*),
+         |         count(*) FILTER (l_orderkey IN (SELECT o_orderkey FROM delo))
+         |  FROM lineitem
+         |  UNION ALL
+         |  SELECT 'orders', count(*),
+         |         count(*) FILTER (o_custkey IN (SELECT c_custkey FROM delc))
+         |  FROM orders)
+         |SELECT table_name, CAST(n_before AS BIGINT) AS n_before,
+         |       CAST(n_deleted AS BIGINT) AS n_deleted,
+         |       CAST(n_before - n_deleted AS BIGINT) AS n_after
+         |FROM audit ORDER BY table_name""".stripMargin),
+    QueryDef("q160_mlm_mask", q160MlmMask _,
+      s"""WITH toks AS (
+         |  SELECT doc_id, i - 1 AS pos, words[i] AS word
+         |  FROM (SELECT doc_id, string_split(trim(text), ' ') AS words,
+         |               unnest(generate_series(1,
+         |                 len(string_split(trim(text), ' ')))) AS i
+         |        FROM documents)),
+         |flagged AS (
+         |  SELECT doc_id, pos, word,
+         |         ('0x' || substr(md5(doc_id || ':' || pos), 1, 15))::BIGINT
+         |           % $MaskMod = 0 AS m
+         |  FROM toks)
+         |SELECT doc_id,
+         |       md5(string_agg(CASE WHEN m THEN '<mask>' ELSE word END,
+         |                      ' ' ORDER BY pos)) AS masked_md5,
+         |       CAST(count(*) AS INTEGER) AS n_tokens,
+         |       CAST(count(*) FILTER (m) AS INTEGER) AS n_masked,
+         |       md5(string_agg(word, ' ' ORDER BY pos) FILTER (m))
+         |         AS target_md5
+         |FROM flagged GROUP BY doc_id ORDER BY doc_id""".stripMargin),
+    QueryDef("q216_k_anonymity", q216KAnonymity _,
       s"""WITH classes AS (
          |  SELECT c_nationkey AS nat, c_mktsegment AS seg,
          |         CAST(floor(c_acctbal / 1000) AS INTEGER) AS bkt,
@@ -282,53 +326,5 @@ object Governance {
          |         AS frac_below_k,
          |       g.l_min
          |FROM worst w CROSS JOIN global g
-         |ORDER BY w.class_size, w.nat, w.seg, w.bkt""".stripMargin,
-    "q159_erasure_cascade" ->
-      s"""WITH forget AS (
-         |  SELECT DISTINCT user_id FROM events WHERE user_id % $ForgetMod = 0),
-         |delc AS (
-         |  SELECT c_custkey FROM customer JOIN forget ON c_custkey = user_id),
-         |delo AS (
-         |  SELECT o_orderkey FROM orders JOIN delc ON o_custkey = c_custkey),
-         |audit AS (
-         |  SELECT 'customer' AS table_name, count(*) AS n_before,
-         |         count(*) FILTER (c_custkey IN (SELECT user_id FROM forget))
-         |           AS n_deleted
-         |  FROM customer
-         |  UNION ALL
-         |  SELECT 'events', count(*),
-         |         count(*) FILTER (user_id IN (SELECT user_id FROM forget))
-         |  FROM events
-         |  UNION ALL
-         |  SELECT 'lineitem', count(*),
-         |         count(*) FILTER (l_orderkey IN (SELECT o_orderkey FROM delo))
-         |  FROM lineitem
-         |  UNION ALL
-         |  SELECT 'orders', count(*),
-         |         count(*) FILTER (o_custkey IN (SELECT c_custkey FROM delc))
-         |  FROM orders)
-         |SELECT table_name, CAST(n_before AS BIGINT) AS n_before,
-         |       CAST(n_deleted AS BIGINT) AS n_deleted,
-         |       CAST(n_before - n_deleted AS BIGINT) AS n_after
-         |FROM audit ORDER BY table_name""".stripMargin,
-    "q160_mlm_mask" ->
-      s"""WITH toks AS (
-         |  SELECT doc_id, i - 1 AS pos, words[i] AS word
-         |  FROM (SELECT doc_id, string_split(trim(text), ' ') AS words,
-         |               unnest(generate_series(1,
-         |                 len(string_split(trim(text), ' ')))) AS i
-         |        FROM documents)),
-         |flagged AS (
-         |  SELECT doc_id, pos, word,
-         |         ('0x' || substr(md5(doc_id || ':' || pos), 1, 15))::BIGINT
-         |           % $MaskMod = 0 AS m
-         |  FROM toks)
-         |SELECT doc_id,
-         |       md5(string_agg(CASE WHEN m THEN '<mask>' ELSE word END,
-         |                      ' ' ORDER BY pos)) AS masked_md5,
-         |       CAST(count(*) AS INTEGER) AS n_tokens,
-         |       CAST(count(*) FILTER (m) AS INTEGER) AS n_masked,
-         |       md5(string_agg(word, ' ' ORDER BY pos) FILTER (m))
-         |         AS target_md5
-         |FROM flagged GROUP BY doc_id ORDER BY doc_id""".stripMargin)
+         |ORDER BY w.class_size, w.nat, w.seg, w.bkt""".stripMargin))
 }

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.QueryDef
 import graft.sources.Tables
 
 /** [EXT] iterative graph analytics beyond the cluster-resolution family
@@ -457,13 +458,6 @@ object Graph {
       .limit(ClusterTopK)
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q138_pagerank" -> (q138PageRank _),
-    "q140_triangle_count" -> (q140TriangleCount _),
-    "q141_adamic_adar" -> (q141AdamicAdar _),
-    "q142_kcore" -> (q142KCore _),
-    "q285_clustering_coefficient" -> (q285ClusteringCoefficient _))
-
   /** The oracle generates one CTE per iteration — same recurrence,
     * mechanically unrolled. */
   private def pagerankSql: String = {
@@ -547,12 +541,11 @@ object Graph {
        |         (SELECT count(*) FROM k${PeelRounds - 1}) AS converged""".stripMargin
   }
 
-  val oracles: Map[String, String] = Map(
-    "q138_pagerank" -> pagerankSql,
-    "q142_kcore" -> kcoreSql,
+  val defs: Seq[QueryDef] = Seq(
+    QueryDef("q138_pagerank", q138PageRank _, pagerankSql),
     // id-ordering suffices here: the triangle count is invariant under
     // any acyclic orientation, and nodes/edges/wedges are orientation-free
-    "q140_triangle_count" ->
+    QueryDef("q140_triangle_count", q140TriangleCount _,
       s"""WITH pairs AS (
         |  SELECT a.l_partkey AS p1, b.l_partkey AS p2, count(*) AS support
         |  FROM lineitem a JOIN lineitem b
@@ -576,8 +569,8 @@ object Graph {
         |              FROM edges e1 JOIN edges e2 ON e1.p2 = e2.p1
         |              JOIN edges e3 ON e3.p1 = e1.p1 AND e3.p2 = e2.p2) /
         |             (SELECT sum(deg * (deg - 1) // 2) FROM degrees), 6)
-        |         AS clustering_coeff""".stripMargin,
-    "q141_adamic_adar" ->
+        |         AS clustering_coeff""".stripMargin),
+    QueryDef("q141_adamic_adar", q141AdamicAdar _,
       s"""WITH pairs AS (
         |  SELECT a.l_partkey AS p1, b.l_partkey AS p2, count(*) AS support
         |  FROM lineitem a JOIN lineitem b
@@ -603,8 +596,9 @@ object Graph {
         |       round(sum(CAST(1 AS DOUBLE) / ln(d.deg)), 6) AS adamic_adar
         |FROM cand c JOIN centers d ON d.node = c.w
         |GROUP BY c.a, c.b
-        |ORDER BY adamic_adar DESC, a, b LIMIT 20""".stripMargin,
-    "q285_clustering_coefficient" ->
+        |ORDER BY adamic_adar DESC, a, b LIMIT 20""".stripMargin),
+    QueryDef("q142_kcore", q142KCore _, kcoreSql),
+    QueryDef("q285_clustering_coefficient", q285ClusteringCoefficient _,
       s"""WITH pairs AS (
         |  SELECT a.l_partkey AS p1, b.l_partkey AS p2, count(*) AS support
         |  FROM lineitem a JOIN lineitem b
@@ -631,5 +625,5 @@ object Graph {
         |FROM degrees d LEFT JOIN tri_nodes t USING (node)
         |WHERE d.deg >= 2
         |ORDER BY local_cc DESC, triangles DESC, deg DESC, node
-        |LIMIT $ClusterTopK""".stripMargin)
+        |LIMIT $ClusterTopK""".stripMargin))
 }

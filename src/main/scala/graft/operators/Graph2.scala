@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.QueryDef
 import graft.sources.Tables
 
 /** [EXT] seed-anchored graph analytics — the second half of the graph
@@ -392,13 +393,6 @@ object Graph2 {
       .orderBy("cost_bucket")
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q143_ppr" -> (q143Ppr _),
-    "q144_hits" -> (q144Hits _),
-    "q145_bfs_reach" -> (q145BfsReach _),
-    "q152_walk_corpus" -> (q152WalkCorpus _),
-    "q195_weighted_sssp" -> (q195WeightedSssp _))
-
   /** PPR oracle: one MATERIALIZED CTE per round (each round is
     * referenced twice — dangling + contributions — so DuckDB's default
     * CTE inlining would re-expand the prefix chain per reference; the
@@ -598,10 +592,10 @@ object Graph2 {
        |FROM d$SsspRounds GROUP BY 1 ORDER BY cost_bucket""".stripMargin
   }
 
-  val oracles: Map[String, String] = Map(
-    "q143_ppr" -> pprSql,
-    "q144_hits" -> hitsSql,
-    "q145_bfs_reach" -> bfsSql,
-    "q152_walk_corpus" -> walkSql,
-    "q195_weighted_sssp" -> ssspSql)
+  val defs: Seq[QueryDef] = Seq(
+    QueryDef("q143_ppr", q143Ppr _, pprSql),
+    QueryDef("q144_hits", q144Hits _, hitsSql),
+    QueryDef("q145_bfs_reach", q145BfsReach _, bfsSql),
+    QueryDef("q152_walk_corpus", q152WalkCorpus _, walkSql),
+    QueryDef("q195_weighted_sssp", q195WeightedSssp _, ssspSql))
 }

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.QueryDef
 import graft.sources.Tables
 
 /** [EXT] community detection (q266): synchronous label propagation
@@ -187,13 +188,44 @@ object Graph3 {
           .as("homophily"))
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q266_lpa_communities" -> (q266LpaCommunities _),
-    "q269_assortativity" -> (q269Assortativity _),
-    "q292_brand_homophily" -> (q292BrandHomophily _))
-
-  val oracles: Map[String, String] = Map(
-    "q292_brand_homophily" ->
+  val defs: Seq[QueryDef] = Seq(
+    QueryDef("q266_lpa_communities", q266LpaCommunities _, lpaSql),
+    QueryDef("q269_assortativity", q269Assortativity _,
+      """WITH edges AS (
+        |  SELECT DISTINCT 's' || CAST(l_suppkey AS VARCHAR) AS src,
+        |         'p' || CAST(l_partkey AS VARCHAR) AS dst
+        |  FROM lineitem),
+        |und AS MATERIALIZED (
+        |  SELECT src AS node, dst AS nbr FROM edges
+        |  UNION ALL SELECT dst, src FROM edges),
+        |deg AS (SELECT node, CAST(count(*) AS BIGINT) AS deg
+        |        FROM und GROUP BY 1),
+        |stats AS (
+        |  SELECT CAST(count(*) AS BIGINT) AS m,
+        |         CAST(sum(dj.deg) AS BIGINT) AS s_j,
+        |         CAST(sum(dj.deg * dj.deg) AS BIGINT) AS s_j2,
+        |         CAST(sum(dj.deg * dk.deg) AS BIGINT) AS s_jk
+        |  FROM und u
+        |  JOIN deg dj ON dj.node = u.node
+        |  JOIN deg dk ON dk.node = u.nbr),
+        |ns AS (SELECT CAST(count(*) AS BIGINT) AS n_nodes,
+        |              CAST(max(deg) AS BIGINT) AS max_degree FROM deg)
+        |SELECT ns.n_nodes, stats.m // 2 AS n_edges, ns.max_degree,
+        |       stats.s_jk, stats.s_j, stats.s_j2,
+        |       CASE WHEN CAST(stats.m AS DOUBLE) * CAST(stats.s_j2 AS DOUBLE)
+        |                 - CAST(stats.s_j AS DOUBLE) * CAST(stats.s_j AS DOUBLE)
+        |                 <> 0.0
+        |            THEN round((CAST(stats.m AS DOUBLE)
+        |                   * CAST(stats.s_jk AS DOUBLE)
+        |                   - CAST(stats.s_j AS DOUBLE)
+        |                     * CAST(stats.s_j AS DOUBLE))
+        |                 / (CAST(stats.m AS DOUBLE)
+        |                    * CAST(stats.s_j2 AS DOUBLE)
+        |                    - CAST(stats.s_j AS DOUBLE)
+        |                      * CAST(stats.s_j AS DOUBLE)), 6)
+        |       END AS assortativity
+        |FROM stats CROSS JOIN ns""".stripMargin),
+    QueryDef("q292_brand_homophily", q292BrandHomophily _,
       s"""WITH pairs AS (
         |  SELECT a.l_partkey AS p1, b.l_partkey AS p2, count(*) AS support
         |  FROM lineitem a JOIN lineitem b
@@ -232,43 +264,7 @@ object Graph3 {
         |                          / ((2.0 * m.n_edges) * (2.0 * m.n_edges))),
         |                       6)
         |       END AS homophily
-        |FROM m, degb""".stripMargin,
-    "q266_lpa_communities" -> lpaSql,
-    "q269_assortativity" ->
-      """WITH edges AS (
-        |  SELECT DISTINCT 's' || CAST(l_suppkey AS VARCHAR) AS src,
-        |         'p' || CAST(l_partkey AS VARCHAR) AS dst
-        |  FROM lineitem),
-        |und AS MATERIALIZED (
-        |  SELECT src AS node, dst AS nbr FROM edges
-        |  UNION ALL SELECT dst, src FROM edges),
-        |deg AS (SELECT node, CAST(count(*) AS BIGINT) AS deg
-        |        FROM und GROUP BY 1),
-        |stats AS (
-        |  SELECT CAST(count(*) AS BIGINT) AS m,
-        |         CAST(sum(dj.deg) AS BIGINT) AS s_j,
-        |         CAST(sum(dj.deg * dj.deg) AS BIGINT) AS s_j2,
-        |         CAST(sum(dj.deg * dk.deg) AS BIGINT) AS s_jk
-        |  FROM und u
-        |  JOIN deg dj ON dj.node = u.node
-        |  JOIN deg dk ON dk.node = u.nbr),
-        |ns AS (SELECT CAST(count(*) AS BIGINT) AS n_nodes,
-        |              CAST(max(deg) AS BIGINT) AS max_degree FROM deg)
-        |SELECT ns.n_nodes, stats.m // 2 AS n_edges, ns.max_degree,
-        |       stats.s_jk, stats.s_j, stats.s_j2,
-        |       CASE WHEN CAST(stats.m AS DOUBLE) * CAST(stats.s_j2 AS DOUBLE)
-        |                 - CAST(stats.s_j AS DOUBLE) * CAST(stats.s_j AS DOUBLE)
-        |                 <> 0.0
-        |            THEN round((CAST(stats.m AS DOUBLE)
-        |                   * CAST(stats.s_jk AS DOUBLE)
-        |                   - CAST(stats.s_j AS DOUBLE)
-        |                     * CAST(stats.s_j AS DOUBLE))
-        |                 / (CAST(stats.m AS DOUBLE)
-        |                    * CAST(stats.s_j2 AS DOUBLE)
-        |                    - CAST(stats.s_j AS DOUBLE)
-        |                      * CAST(stats.s_j AS DOUBLE)), 6)
-        |       END AS assortativity
-        |FROM stats CROSS JOIN ns""".stripMargin)
+        |FROM m, degb""".stripMargin))
 
   /** The synchronous recurrence mechanically unrolled (the q138/q142
     * idiom); MATERIALIZED because each round is referenced by the

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.QueryDef
 import graft.sources.Tables
 
 /** [EXT] hierarchical (recursive) rollup — the BOM / org-chart /
@@ -66,11 +67,8 @@ object Hierarchy {
       .orderBy("hid")
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q161_hierarchy_rollup" -> (q161HierarchyRollup _))
-
-  val oracles: Map[String, String] = Map(
-    "q161_hierarchy_rollup" ->
+  val defs: Seq[QueryDef] = Seq(
+    QueryDef("q161_hierarchy_rollup", q161HierarchyRollup _,
       s"""WITH parts AS (
          |  SELECT p_partkey + 1 AS hid,
          |         CAST(round(p_retailprice * 100, 0) AS BIGINT) AS cents
@@ -91,5 +89,5 @@ object Hierarchy {
          |FROM rollup r
          |LEFT JOIN rollup p ON p.anc = r.anc // 10 AND r.anc >= 10
          |WHERE r.anc <= 99
-         |ORDER BY hid""".stripMargin)
+         |ORDER BY hid""".stripMargin))
 }

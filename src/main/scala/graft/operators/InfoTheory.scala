@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.QueryDef
 import graft.functions.Hashing
 import graft.sources.Tables
 
@@ -357,16 +358,8 @@ object InfoTheory {
       .orderBy("segment")
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q341_engagement_diversity" -> (q341EngagementDiversity _),
-    "q321_markov_backtest" -> (q321MarkovBacktest _),
-    "q241_surprisal_anomaly" -> (q241SurprisalAnomaly _),
-    "q244_incremental_surprisal" -> (q244IncrementalSurprisal _),
-    "q231_source_jsd" -> (q231SourceJsd _),
-    "q232_transition_entropy" -> (q232TransitionEntropy _))
-
-  val oracles: Map[String, String] = Map(
-    "q341_engagement_diversity" ->
+  val defs: Seq[QueryDef] = Seq(
+    QueryDef("q341_engagement_diversity", q341EngagementDiversity _,
       """WITH per_ut AS (
         |  SELECT user_id, event_type, CAST(count(*) AS BIGINT) AS c,
         |         CAST(sum(CAST(round(value * 100, 0) AS BIGINT))
@@ -396,8 +389,8 @@ object InfoTheory {
         |         AS mean_events,
         |       round(CAST(sum(cents) AS DOUBLE) / count(*) / 100, 2)
         |         AS mean_spend
-        |FROM seg GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q321_markov_backtest" ->
+        |FROM seg GROUP BY 1 ORDER BY 1""".stripMargin),
+    QueryDef("q321_markov_backtest", q321MarkovBacktest _,
       """WITH ev AS (
         |  SELECT user_id, event_id, event_type,
         |         epoch_us(CAST(ts AS TIMESTAMP)) AS us
@@ -438,35 +431,8 @@ object InfoTheory {
         |FROM t2 t JOIN pred p USING (prev) CROSS JOIN baseline b
         |WHERE t.is_test
         |GROUP BY 1, 2
-        |ORDER BY t.prev""".stripMargin,
-    // the q166 equivalence class: the oracle is the plain FULL
-    // recompute — hash equality proves incremental == full
-    "q244_incremental_surprisal" ->
-      """WITH pairs AS (
-        |  SELECT user_id, event_type, next_type
-        |  FROM (SELECT user_id, event_type,
-        |               lead(event_type) OVER (PARTITION BY user_id
-        |                 ORDER BY ts, event_id) AS next_type
-        |        FROM events)
-        |  WHERE next_type IS NOT NULL),
-        |model AS (
-        |  SELECT event_type, next_type,
-        |         CAST(round(-log2(CAST(n_ij AS DOUBLE)
-        |                          / CAST(n_i AS DOUBLE)) * 1e6, 0)
-        |              AS BIGINT) AS s_micro
-        |  FROM (SELECT event_type, next_type, count(*) AS n_ij,
-        |               CAST(sum(count(*)) OVER (PARTITION BY event_type)
-        |                    AS BIGINT) AS n_i
-        |        FROM pairs GROUP BY 1, 2))
-        |SELECT p.user_id, count(*) AS n_trans,
-        |       round(CAST(CAST(sum(m.s_micro) AS BIGINT) AS DOUBLE)
-        |             / CAST(count(*) AS DOUBLE) / 1e6, 6)
-        |         AS surprisal_bits
-        |FROM pairs p JOIN model m
-        |  ON p.event_type = m.event_type AND p.next_type = m.next_type
-        |GROUP BY 1
-        |ORDER BY p.user_id""".stripMargin,
-    "q241_surprisal_anomaly" ->
+        |ORDER BY t.prev""".stripMargin),
+    QueryDef("q241_surprisal_anomaly", q241SurprisalAnomaly _,
       s"""WITH pairs AS (
         |  SELECT user_id, event_type, next_type
         |  FROM (SELECT user_id, event_type,
@@ -495,8 +461,35 @@ object InfoTheory {
         |FROM scored
         |ORDER BY CAST(s_sum AS DOUBLE) / CAST(n_trans AS DOUBLE) / 1e6
         |           DESC, user_id
-        |LIMIT $AnomalyTopK""".stripMargin,
-    "q231_source_jsd" ->
+        |LIMIT $AnomalyTopK""".stripMargin),
+    // the q166 equivalence class: the oracle is the plain FULL
+    // recompute — hash equality proves incremental == full
+    QueryDef("q244_incremental_surprisal", q244IncrementalSurprisal _,
+      """WITH pairs AS (
+        |  SELECT user_id, event_type, next_type
+        |  FROM (SELECT user_id, event_type,
+        |               lead(event_type) OVER (PARTITION BY user_id
+        |                 ORDER BY ts, event_id) AS next_type
+        |        FROM events)
+        |  WHERE next_type IS NOT NULL),
+        |model AS (
+        |  SELECT event_type, next_type,
+        |         CAST(round(-log2(CAST(n_ij AS DOUBLE)
+        |                          / CAST(n_i AS DOUBLE)) * 1e6, 0)
+        |              AS BIGINT) AS s_micro
+        |  FROM (SELECT event_type, next_type, count(*) AS n_ij,
+        |               CAST(sum(count(*)) OVER (PARTITION BY event_type)
+        |                    AS BIGINT) AS n_i
+        |        FROM pairs GROUP BY 1, 2))
+        |SELECT p.user_id, count(*) AS n_trans,
+        |       round(CAST(CAST(sum(m.s_micro) AS BIGINT) AS DOUBLE)
+        |             / CAST(count(*) AS DOUBLE) / 1e6, 6)
+        |         AS surprisal_bits
+        |FROM pairs p JOIN model m
+        |  ON p.event_type = m.event_type AND p.next_type = m.next_type
+        |GROUP BY 1
+        |ORDER BY p.user_id""".stripMargin),
+    QueryDef("q231_source_jsd", q231SourceJsd _,
       s"""WITH counts AS (
         |  SELECT source,
         |         ('0x' || substr(md5(w), 1, 15))::BIGINT % $JsdBuckets AS b,
@@ -536,8 +529,8 @@ object InfoTheory {
         |       CAST(max(n_b) AS BIGINT) AS n_b,
         |       round(CAST(sum(term_micro) AS DOUBLE) / 1e6, 6) AS jsd_bits
         |FROM pairs GROUP BY 1, 2
-        |ORDER BY source_a, source_b""".stripMargin,
-    "q232_transition_entropy" ->
+        |ORDER BY source_a, source_b""".stripMargin),
+    QueryDef("q232_transition_entropy", q232TransitionEntropy _,
       """WITH trans AS (
         |  SELECT event_type, next_type, count(*) AS n_ij
         |  FROM (SELECT event_type,
@@ -578,5 +571,5 @@ object InfoTheory {
         |  FROM rows_t)
         |SELECT * FROM per_prev
         |UNION ALL SELECT * FROM overall
-        |ORDER BY prev_type""".stripMargin)
+        |ORDER BY prev_type""".stripMargin))
 }

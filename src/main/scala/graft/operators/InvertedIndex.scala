@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.QueryDef
 import graft.sources.{DfCache, Tables}
 
 /** [EXT] positional inverted index + exact phrase retrieval (q157) —
@@ -72,11 +73,8 @@ object InvertedIndex {
       .select("w1", "w2", "doc_id", "n_occurrences", "first_pos")
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q157_phrase_search" -> (q157PhraseSearch _))
-
-  val oracles: Map[String, String] = Map(
-    "q157_phrase_search" ->
+  val defs: Seq[QueryDef] = Seq(
+    QueryDef("q157_phrase_search", q157PhraseSearch _,
       """WITH toks AS (
         |  SELECT doc_id, i - 1 AS pos, words[i] AS word
         |  FROM (SELECT doc_id, string_split(trim(text), ' ') AS words,
@@ -100,5 +98,5 @@ object InvertedIndex {
         |SELECT (SELECT w1 FROM top) AS w1, (SELECT w2 FROM top) AS w2,
         |       doc_id, n_occurrences, first_pos
         |FROM hits
-        |ORDER BY n_occurrences DESC, doc_id LIMIT 20""".stripMargin)
+        |ORDER BY n_occurrences DESC, doc_id LIMIT 20""".stripMargin))
 }

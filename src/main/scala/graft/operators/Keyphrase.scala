@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.QueryDef
 import graft.sources.Tables
 
 /** [EXT] keyphrase extraction (q270): RAKE (Rapid Automatic Keyword
@@ -88,11 +89,9 @@ object Keyphrase {
       .orderBy(col("rake_score").desc, col("phrase"))
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q270_rake_keyphrases" -> (q270RakeKeyphrases _))
-
-  val oracles: Map[String, String] = Map(
-    "q270_rake_keyphrases" -> {
+  val defs: Seq[QueryDef] = Seq(
+    QueryDef("q270_rake_keyphrases", q270RakeKeyphrases _,
+      {
       val stopList = Stopwords.map(s => s"'$s'").mkString(", ")
       s"""WITH raw AS (
         |  SELECT doc_id,
@@ -141,5 +140,5 @@ object Keyphrase {
         |       round(CAST(score_micro AS DOUBLE) / 1e6, 6) AS rake_score
         |FROM scored
         |ORDER BY score_micro DESC, phrase LIMIT $RakeTopK""".stripMargin
-    })
+    }))
 }

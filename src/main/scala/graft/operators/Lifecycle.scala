@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.QueryDef
 import graft.sources.Tables
 
 /** [EXT] user-lifecycle analytics over the events stream: lifetime
@@ -758,29 +759,8 @@ object Lifecycle {
       .orderBy("event_type")
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q345_events_data_card" -> (q345EventsDataCard _),
-    "q333_priority_sla" -> (q333PrioritySla _),
-    "q327_onboarding_velocity" -> (q327OnboardingVelocity _),
-    "q330_growth_accounting" -> (q330GrowthAccounting _),
-    "q325_burstiness" -> (q325Burstiness _),
-    "q326_streak_distribution" -> (q326StreakDistribution _),
-    "q320_watermark_sweep" -> (q320WatermarkSweep _),
-    "q316_user_influx" -> (q316UserInflux _),
-    "q307_churn_wilson" -> (q307ChurnWilson _),
-    "q302_churn_labels" -> (q302ChurnLabels _),
-    "q296_lead_time_sla" -> (q296LeadTimeSla _),
-    "q235_km_survival" -> (q235KmSurvival _),
-    "q179_survival_curve" -> (q179SurvivalCurve _),
-    "q272_session_thresholds" -> (q272SessionThresholds _),
-    "q180_interarrival" -> (q180InterArrival _),
-    "q212_lateness_profile" -> (q212LatenessProfile _),
-    "q182_active_users" -> (q182ActiveUsers _),
-    "q188_conversion_lag" -> (q188ConversionLag _),
-    "q189_ltv_curve" -> (q189LtvCurve _))
-
-  val oracles: Map[String, String] = Map(
-    "q345_events_data_card" ->
+  val defs: Seq[QueryDef] = Seq(
+    QueryDef("q345_events_data_card", q345EventsDataCard _,
       """WITH ev AS (
         |  SELECT event_type, user_id, CAST(ts AS DATE) AS d,
         |         CAST(round(value * 100, 0) AS BIGINT) AS cents
@@ -797,8 +777,8 @@ object Lifecycle {
         |       round(CAST(max(cents) AS DOUBLE) / 100, 2) AS max_value,
         |       round(CAST(count(*) AS DOUBLE)
         |             / count(DISTINCT user_id), 4) AS events_per_user
-        |FROM ev GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q333_priority_sla" ->
+        |FROM ev GROUP BY 1 ORDER BY 1""".stripMargin),
+    QueryDef("q333_priority_sla", q333PrioritySla _,
       """WITH lags AS (
         |  SELECT o.o_orderpriority AS priority,
         |         CAST(date_diff('day', CAST(o.o_orderdate AS DATE),
@@ -813,8 +793,9 @@ object Lifecycle {
         |       round((SELECT p90_all FROM overall), 4) AS p90_overall,
         |       quantile_cont(lag, 0.9) <= (SELECT p90_all FROM overall)
         |         AS beats_overall
-        |FROM lags GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q327_onboarding_velocity" -> {
+        |FROM lags GROUP BY 1 ORDER BY 1""".stripMargin),
+    QueryDef("q327_onboarding_velocity", q327OnboardingVelocity _,
+      {
       val arms = OnboardK.map { k =>
         s"""SELECT CAST($k AS BIGINT) AS milestone_k,
            |  (SELECT n_users FROM tot) AS n_users,
@@ -840,8 +821,8 @@ object Lifecycle {
          |        FROM ranked WHERE rn = 1)
          |$arms
          |ORDER BY milestone_k""".stripMargin
-    },
-    "q330_growth_accounting" ->
+    }),
+    QueryDef("q330_growth_accounting", q330GrowthAccounting _,
       """WITH uw AS (
         |  SELECT DISTINCT user_id,
         |         date_diff('day', DATE '2024-01-01', CAST(ts AS DATE))
@@ -876,8 +857,8 @@ object Lifecycle {
         |            THEN round(CAST(new_u + resurrected AS DOUBLE)
         |                 / lag(churning_after, 1) OVER (ORDER BY wk), 4)
         |       END AS quick_ratio
-        |FROM by_week ORDER BY week""".stripMargin,
-    "q325_burstiness" ->
+        |FROM by_week ORDER BY week""".stripMargin),
+    QueryDef("q325_burstiness", q325Burstiness _,
       """WITH gaps AS (
         |  SELECT event_type,
         |         us - lag(us, 1) OVER w AS d
@@ -905,8 +886,8 @@ object Lifecycle {
         |                      - CAST(sd AS DOUBLE)
         |                        * (CAST(sd AS DOUBLE) / n)) / n)
         |                + CAST(sd AS DOUBLE) / n), 6) AS burstiness
-        |FROM stats ORDER BY event_type""".stripMargin,
-    "q326_streak_distribution" ->
+        |FROM stats ORDER BY event_type""".stripMargin),
+    QueryDef("q326_streak_distribution", q326StreakDistribution _,
       """WITH user_days AS (
         |  SELECT DISTINCT user_id,
         |         date_diff('day', DATE '2024-01-01', CAST(ts AS DATE))
@@ -925,8 +906,9 @@ object Lifecycle {
         |       CAST(count(DISTINCT user_id) AS BIGINT) AS n_users,
         |       round(CAST(count(*) AS DOUBLE) / (SELECT t FROM tot), 6)
         |         AS streak_share
-        |FROM streaks GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q320_watermark_sweep" -> {
+        |FROM streaks GROUP BY 1 ORDER BY 1""".stripMargin),
+    QueryDef("q320_watermark_sweep", q320WatermarkSweep _,
+      {
       val arms = WatermarkDelays.map { d =>
         s"""SELECT event_type, n_events, CAST($d AS BIGINT) AS delay_s,
            |  d$d AS n_dropped,
@@ -950,8 +932,8 @@ object Lifecycle {
          |  FROM late GROUP BY 1)
          |$arms
          |ORDER BY event_type, delay_s""".stripMargin
-    },
-    "q316_user_influx" ->
+    }),
+    QueryDef("q316_user_influx", q316UserInflux _,
       """WITH ev AS (
         |  SELECT event_type, user_id,
         |         epoch_us(CAST(ts AS TIMESTAMP)) AS us
@@ -974,8 +956,8 @@ object Lifecycle {
         |               AS DOUBLE) / count(*), 6) AS new_user_share,
         |       round(CAST(sum(CASE WHEN is_new THEN n_ev ELSE 0 END)
         |               AS DOUBLE) / sum(n_ev), 6) AS new_volume_share
-        |FROM put GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q307_churn_wilson" ->
+        |FROM put GROUP BY 1 ORDER BY 1""".stripMargin),
+    QueryDef("q307_churn_wilson", q307ChurnWilson _,
       s"""WITH ev AS (
         |  SELECT epoch_us(CAST(ts AS TIMESTAMP)) AS us, user_id
         |  FROM events),
@@ -1023,8 +1005,8 @@ object Lifecycle {
         |FROM (SELECT *, CAST(n AS DOUBLE) AS count_n,
         |             CAST(k AS DOUBLE) / CAST(n AS DOUBLE) AS p
         |      FROM agg)
-        |ORDER BY bucket""".stripMargin,
-    "q302_churn_labels" ->
+        |ORDER BY bucket""".stripMargin),
+    QueryDef("q302_churn_labels", q302ChurnLabels _,
       """WITH ev AS (
         |  SELECT epoch_us(CAST(ts AS TIMESTAMP)) AS us, user_id
         |  FROM events),
@@ -1056,8 +1038,8 @@ object Lifecycle {
         |         AS n_churned,
         |       round(CAST(sum(CASE WHEN churned THEN 1 ELSE 0 END)
         |               AS DOUBLE) / count(*), 6) AS churn_rate
-        |FROM bucketed GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q296_lead_time_sla" ->
+        |FROM bucketed GROUP BY 1 ORDER BY 1""".stripMargin),
+    QueryDef("q296_lead_time_sla", q296LeadTimeSla _,
       """WITH lags AS (
         |  SELECT strftime(CAST(o.o_orderdate AS TIMESTAMP), '%Y-%m')
         |           AS month,
@@ -1071,8 +1053,8 @@ object Lifecycle {
         |         AS mean_lag_days,
         |       round(quantile_cont(lag, 0.5), 4) AS p50_days,
         |       round(quantile_cont(lag, 0.9), 4) AS p90_days
-        |FROM lags GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q235_km_survival" ->
+        |FROM lags GROUP BY 1 ORDER BY 1""".stripMargin),
+    QueryDef("q235_km_survival", q235KmSurvival _,
       s"""WITH per_user AS (
         |  SELECT user_id,
         |         CAST(min(CAST(ts AS TIMESTAMP)) AS DATE) AS first_d,
@@ -1112,60 +1094,8 @@ object Lifecycle {
         |  FROM fac)
         |SELECT t AS lifetime_days, n_risk, d AS d_churn, c AS c_censored,
         |       factor, km_s
-        |FROM km ORDER BY lifetime_days""".stripMargin,
-    "q188_conversion_lag" ->
-      s"""WITH ev AS (
-        |  SELECT user_id, event_type, epoch_us(CAST(ts AS TIMESTAMP)) AS us
-        |  FROM events),
-        |signups AS (
-        |  SELECT user_id, min(us) AS s_us FROM ev
-        |  WHERE event_type = 'signup' GROUP BY user_id),
-        |first_purchase AS (
-        |  SELECT e.user_id, min(e.us) AS p_us, min(s.s_us) AS s_us
-        |  FROM ev e JOIN signups s ON s.user_id = e.user_id
-        |  WHERE e.event_type = 'purchase' AND e.us >= s.s_us
-        |  GROUP BY e.user_id),
-        |lags AS (
-        |  SELECT s.user_id,
-        |         CASE WHEN fp.user_id IS NULL THEN $NeverBucket
-        |              ELSE least((fp.p_us - fp.s_us) // 86400000000,
-        |                         $MaxLagDays) END AS lag_days
-        |  FROM signups s
-        |  LEFT JOIN first_purchase fp ON fp.user_id = s.user_id)
-        |SELECT lag_days, count(*) AS n_users
-        |FROM lags GROUP BY lag_days ORDER BY lag_days""".stripMargin,
-    "q189_ltv_curve" ->
-      """WITH ev AS (
-        |  SELECT user_id, event_type, value,
-        |         epoch_us(CAST(ts AS TIMESTAMP)) // 86400000000 AS day
-        |  FROM events),
-        |d0 AS (SELECT min(day) AS d0 FROM ev),
-        |cohorts AS (
-        |  SELECT user_id,
-        |         (min(day) - (SELECT d0 FROM d0)) // 7 AS cohort_w,
-        |         min(day) AS first_day
-        |  FROM ev GROUP BY user_id),
-        |sizes AS (SELECT cohort_w, count(*) AS cohort_users
-        |          FROM cohorts GROUP BY cohort_w),
-        |revenue AS (
-        |  SELECT c.cohort_w, (e.day - c.first_day) // 7 AS age_w,
-        |         CAST(sum(CAST(round(e.value * 100, 0) AS BIGINT))
-        |              AS BIGINT) AS cents
-        |  FROM ev e JOIN cohorts c ON c.user_id = e.user_id
-        |  WHERE e.event_type = 'purchase'
-        |  GROUP BY 1, 2),
-        |cum AS (
-        |  SELECT cohort_w, age_w, cents,
-        |         CAST(sum(cents) OVER (PARTITION BY cohort_w ORDER BY age_w
-        |           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-        |           AS BIGINT) AS cum_cents
-        |  FROM revenue)
-        |SELECT c.cohort_w, c.age_w, s.cohort_users, c.cents, c.cum_cents,
-        |       round(CAST(c.cum_cents AS DOUBLE) / s.cohort_users / 100.0, 6)
-        |         AS ltv_per_user
-        |FROM cum c JOIN sizes s ON s.cohort_w = c.cohort_w
-        |ORDER BY c.cohort_w, c.age_w""".stripMargin,
-    "q179_survival_curve" ->
+        |FROM km ORDER BY lifetime_days""".stripMargin),
+    QueryDef("q179_survival_curve", q179SurvivalCurve _,
       s"""WITH lt AS (
         |  SELECT least(
         |    (max(epoch_us(CAST(ts AS TIMESTAMP)))
@@ -1181,35 +1111,9 @@ object Lifecycle {
         |       round(CAST((SELECT count(*) FROM lt WHERE ltd >= day)
         |               AS DOUBLE)
         |             / (SELECT total_users FROM total), 6) AS survival_rate
-        |FROM spine ORDER BY day""".stripMargin,
-    "q212_lateness_profile" ->
-      """WITH ev AS (
-        |  SELECT event_type, event_id,
-        |         epoch_us(CAST(ts AS TIMESTAMP)) AS us
-        |  FROM events),
-        |lat AS (
-        |  SELECT event_type,
-        |         max(us) OVER (PARTITION BY event_type ORDER BY event_id
-        |           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-        |           - us AS late_us
-        |  FROM ev),
-        |agg AS (
-        |  SELECT event_type, count(*) AS n_events,
-        |         CAST(sum(CASE WHEN late_us > 0 THEN 1 ELSE 0 END)
-        |              AS BIGINT) AS n_late,
-        |         quantile_cont(CAST(late_us AS DOUBLE), 0.5) AS p50_us,
-        |         quantile_cont(CAST(late_us AS DOUBLE), 0.95) AS p95_us,
-        |         quantile_cont(CAST(late_us AS DOUBLE), 0.99) AS p99_us,
-        |         CAST(max(late_us) AS BIGINT) AS max_us
-        |  FROM lat GROUP BY 1)
-        |SELECT event_type, n_events, n_late,
-        |       round(CAST(n_late AS DOUBLE) / n_events, 6) AS late_frac,
-        |       round(p50_us / 1e6, 3) AS p50_late_s,
-        |       round(p95_us / 1e6, 3) AS p95_late_s,
-        |       CAST(max_us // 1000000 AS BIGINT) AS max_late_s,
-        |       CAST(ceil(p99_us / 1e6) AS BIGINT) AS wm_suggest_s
-        |FROM agg ORDER BY event_type""".stripMargin,
-    "q272_session_thresholds" -> {
+        |FROM spine ORDER BY day""".stripMargin),
+    QueryDef("q272_session_thresholds", q272SessionThresholds _,
+      {
       val breakSelects = SessionThresholds.map { t =>
         s"CAST(sum(CASE WHEN delta_us > ${t * 1000000L} THEN 1 ELSE 0" +
           s" END) AS BIGINT) AS b$t"
@@ -1244,8 +1148,8 @@ object Lifecycle {
         |             / CAST(n_events - n_users AS DOUBLE), 6)
         |         AS gap_break_rate
         |FROM rows_t ORDER BY threshold_s""".stripMargin
-    },
-    "q180_interarrival" ->
+    }),
+    QueryDef("q180_interarrival", q180InterArrival _,
       """WITH seq AS (
         |  SELECT event_type,
         |         epoch_us(CAST(ts AS TIMESTAMP))
@@ -1262,8 +1166,35 @@ object Lifecycle {
         |       round(quantile_cont(CAST(delta_us AS DOUBLE), 0.9) / 1e6, 6)
         |         AS p90_s
         |FROM seq WHERE delta_us IS NOT NULL
-        |GROUP BY event_type ORDER BY event_type""".stripMargin,
-    "q182_active_users" ->
+        |GROUP BY event_type ORDER BY event_type""".stripMargin),
+    QueryDef("q212_lateness_profile", q212LatenessProfile _,
+      """WITH ev AS (
+        |  SELECT event_type, event_id,
+        |         epoch_us(CAST(ts AS TIMESTAMP)) AS us
+        |  FROM events),
+        |lat AS (
+        |  SELECT event_type,
+        |         max(us) OVER (PARTITION BY event_type ORDER BY event_id
+        |           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
+        |           - us AS late_us
+        |  FROM ev),
+        |agg AS (
+        |  SELECT event_type, count(*) AS n_events,
+        |         CAST(sum(CASE WHEN late_us > 0 THEN 1 ELSE 0 END)
+        |              AS BIGINT) AS n_late,
+        |         quantile_cont(CAST(late_us AS DOUBLE), 0.5) AS p50_us,
+        |         quantile_cont(CAST(late_us AS DOUBLE), 0.95) AS p95_us,
+        |         quantile_cont(CAST(late_us AS DOUBLE), 0.99) AS p99_us,
+        |         CAST(max(late_us) AS BIGINT) AS max_us
+        |  FROM lat GROUP BY 1)
+        |SELECT event_type, n_events, n_late,
+        |       round(CAST(n_late AS DOUBLE) / n_events, 6) AS late_frac,
+        |       round(p50_us / 1e6, 3) AS p50_late_s,
+        |       round(p95_us / 1e6, 3) AS p95_late_s,
+        |       CAST(max_us // 1000000 AS BIGINT) AS max_late_s,
+        |       CAST(ceil(p99_us / 1e6) AS BIGINT) AS wm_suggest_s
+        |FROM agg ORDER BY event_type""".stripMargin),
+    QueryDef("q182_active_users", q182ActiveUsers _,
       s"""WITH du AS (
         |  SELECT DISTINCT user_id, CAST(CAST(ts AS TIMESTAMP) AS DATE) AS d
         |  FROM events),
@@ -1286,5 +1217,57 @@ object Lifecycle {
         |FROM spine s
         |LEFT JOIN dau ON dau.d = s.day
         |LEFT JOIN wau ON wau.target_d = s.day
-        |ORDER BY s.day""".stripMargin)
+        |ORDER BY s.day""".stripMargin),
+    QueryDef("q188_conversion_lag", q188ConversionLag _,
+      s"""WITH ev AS (
+        |  SELECT user_id, event_type, epoch_us(CAST(ts AS TIMESTAMP)) AS us
+        |  FROM events),
+        |signups AS (
+        |  SELECT user_id, min(us) AS s_us FROM ev
+        |  WHERE event_type = 'signup' GROUP BY user_id),
+        |first_purchase AS (
+        |  SELECT e.user_id, min(e.us) AS p_us, min(s.s_us) AS s_us
+        |  FROM ev e JOIN signups s ON s.user_id = e.user_id
+        |  WHERE e.event_type = 'purchase' AND e.us >= s.s_us
+        |  GROUP BY e.user_id),
+        |lags AS (
+        |  SELECT s.user_id,
+        |         CASE WHEN fp.user_id IS NULL THEN $NeverBucket
+        |              ELSE least((fp.p_us - fp.s_us) // 86400000000,
+        |                         $MaxLagDays) END AS lag_days
+        |  FROM signups s
+        |  LEFT JOIN first_purchase fp ON fp.user_id = s.user_id)
+        |SELECT lag_days, count(*) AS n_users
+        |FROM lags GROUP BY lag_days ORDER BY lag_days""".stripMargin),
+    QueryDef("q189_ltv_curve", q189LtvCurve _,
+      """WITH ev AS (
+        |  SELECT user_id, event_type, value,
+        |         epoch_us(CAST(ts AS TIMESTAMP)) // 86400000000 AS day
+        |  FROM events),
+        |d0 AS (SELECT min(day) AS d0 FROM ev),
+        |cohorts AS (
+        |  SELECT user_id,
+        |         (min(day) - (SELECT d0 FROM d0)) // 7 AS cohort_w,
+        |         min(day) AS first_day
+        |  FROM ev GROUP BY user_id),
+        |sizes AS (SELECT cohort_w, count(*) AS cohort_users
+        |          FROM cohorts GROUP BY cohort_w),
+        |revenue AS (
+        |  SELECT c.cohort_w, (e.day - c.first_day) // 7 AS age_w,
+        |         CAST(sum(CAST(round(e.value * 100, 0) AS BIGINT))
+        |              AS BIGINT) AS cents
+        |  FROM ev e JOIN cohorts c ON c.user_id = e.user_id
+        |  WHERE e.event_type = 'purchase'
+        |  GROUP BY 1, 2),
+        |cum AS (
+        |  SELECT cohort_w, age_w, cents,
+        |         CAST(sum(cents) OVER (PARTITION BY cohort_w ORDER BY age_w
+        |           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
+        |           AS BIGINT) AS cum_cents
+        |  FROM revenue)
+        |SELECT c.cohort_w, c.age_w, s.cohort_users, c.cents, c.cum_cents,
+        |       round(CAST(c.cum_cents AS DOUBLE) / s.cohort_users / 100.0, 6)
+        |         AS ltv_per_user
+        |FROM cum c JOIN sizes s ON s.cohort_w = c.cohort_w
+        |ORDER BY c.cohort_w, c.age_w""".stripMargin))
 }

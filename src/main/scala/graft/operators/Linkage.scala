@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.QueryDef
 import graft.functions.Hashing
 import graft.sources.Tables
 
@@ -295,11 +296,6 @@ object Linkage {
       .orderBy("prefix")
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q247_clone_rate" -> (q247CloneRate _),
-    "q200_linkage_weights" -> (q200LinkageWeights _),
-    "q203_linkage_retrieval" -> (q203LinkageRetrieval _))
-
   /** Shared oracle CTE prefix: fixture, modulus, hash sample, blocked
     * estimation pairs, and sample-learned m/u. The hash sample is the
     * q152 cross-engine identity: Spark `conv(substr(md5(x),1,15),16,10)`
@@ -362,8 +358,8 @@ object Linkage {
       |FROM scored GROUP BY 1, 2
       |ORDER BY is_match, w_bucket""".stripMargin
 
-  val oracles: Map[String, String] = Map(
-    "q247_clone_rate" ->
+  val defs: Seq[QueryDef] = Seq(
+    QueryDef("q247_clone_rate", q247CloneRate _,
       s"""WITH ev AS (
         |  SELECT user_id, epoch_us(CAST(ts AS TIMESTAMP)) AS us,
         |         event_id, event_type
@@ -399,11 +395,11 @@ object Linkage {
         |       round(CAST(a.n_clones AS DOUBLE) / a.n_probes, 6)
         |         AS clone_rate
         |FROM agg a JOIN sizes s ON a.prefix = s.prefix
-        |ORDER BY a.prefix""".stripMargin,
-    "q200_linkage_weights" ->
+        |ORDER BY a.prefix""".stripMargin),
+    QueryDef("q200_linkage_weights", q200LinkageWeights _,
       s"""$estPrefixSql,
-        |${histogramSql("est")}""".stripMargin,
-    "q203_linkage_retrieval" ->
+        |${histogramSql("est")}""".stripMargin),
+    QueryDef("q203_linkage_retrieval", q203LinkageRetrieval _,
       s"""$estPrefixSql,
         |cand AS (
         |  SELECT a.k = b.k AS is_match,
@@ -412,5 +408,5 @@ object Linkage {
         |  FROM base a JOIN alt b
         |    ON substr(a.nm, 1, length(a.nm) - 1)
         |       = substr(b.nm, 1, length(b.nm) - 1)),
-        |${histogramSql("cand")}""".stripMargin)
+        |${histogramSql("cand")}""".stripMargin))
 }

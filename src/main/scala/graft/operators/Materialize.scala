@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.QueryDef
 import graft.sources.Tables
 
 /** [EXT] q389 — the END-TO-END TRAINING-DATA MATERIALIZATION PIPELINE
@@ -202,11 +203,9 @@ object Materialize {
       .orderBy("stage")
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q389_training_materialization" -> (q389TrainingMaterialization _))
-
-  val oracles: Map[String, String] = Map(
-    "q389_training_materialization" -> {
+  val defs: Seq[QueryDef] = Seq(
+    QueryDef("q389_training_materialization", q389TrainingMaterialization _,
+      {
       val stops = Breadth11.FunnelStops.map(s => s"'$s'")
         .mkString("[", ", ", "]")
       s"""WITH base AS (
@@ -335,5 +334,5 @@ object Materialize {
         |  UNION ALL SELECT '6_pack', n_sm, n_bins, t_packed
         |  FROM stats, packs)
         |ORDER BY stage""".stripMargin
-    })
+    }))
 }

@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.QueryDef
+
 /** [EXT] greedy maximum-coverage subset selection (q163) — the
   * submodular "pick the K most COMPLEMENTARY documents" primitive
   * behind diversity-aware corpus curation: where q130 ranks by
@@ -124,11 +126,9 @@ object MaxCover {
       .orderBy("round")
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q163_max_cover" -> (q163MaxCover _))
-
-  val oracles: Map[String, String] = Map(
-    "q163_max_cover" -> {
+  val defs: Seq[QueryDef] = Seq(
+    QueryDef("q163_max_cover", q163MaxCover _,
+      {
       // mechanical unrolling: round r picks from u{r-1}, covers c{r},
       // leaves u{r} (MATERIALIZED: each CTE is read by pick, cover,
       // and the next round — DuckDB's default inlining would expand
@@ -156,5 +156,5 @@ object MaxCover {
          |       CAST(sum(gain) OVER (ORDER BY round) AS BIGINT)
          |         AS covered_total
          |FROM picks ORDER BY round""".stripMargin
-    })
+    }))
 }

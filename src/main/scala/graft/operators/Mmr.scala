@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.QueryDef
 import graft.functions.Hashing
 import graft.sources.Tables
 
@@ -294,9 +295,6 @@ object Mmr {
       .orderBy("qid", "round")
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q224_mmr_retrieval" -> (q224MmrRetrieval _))
-
   /** Oracle: the identical pool derivation (md5 planes, adaptive
     * width from the corpus count, sign bits, MSB-first packing,
     * multi-probe flips, hot cap — all integer-exact) followed by the
@@ -442,6 +440,6 @@ object Mmr {
          |ORDER BY qid, round""".stripMargin
   }
 
-  val oracles: Map[String, String] = Map(
-    "q224_mmr_retrieval" -> mmrSql)
+  val defs: Seq[QueryDef] = Seq(
+    QueryDef("q224_mmr_retrieval", q224MmrRetrieval _, mmrSql))
 }

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.QueryDef
 import graft.sources.Tables
 
 /** Typed metadata for an opaque media payload. */
@@ -444,24 +445,26 @@ object Multimodal {
       .orderBy("status")
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q43_multimodal_decode" -> (q43MultimodalDecode _),
-    "q76_frame_sample" -> (q76FrameSample _),
-    "q164_phash_dedup" -> (q164PhashDedup _),
-    "q390_cross_modal_audit" -> (q390CrossModalAudit _),
-    "q391_video_frame_dedup" -> (q391VideoFrameDedup _),
-    "q392_video_dedup_recall" -> (q392VideoDedupRecall _))
-
-  val oracles: Map[String, String] = Map(
-    "q43_multimodal_decode" ->
+  val defs: Seq[QueryDef] = Seq(
+    QueryDef("q43_multimodal_decode", q43MultimodalDecode _,
       """SELECT doc_id,
         |       CAST(octet_length(encode(text)) AS INT) AS n_bytes,
         |       round(ascii(substr(text, 1, 1)) / 255.0, 6) AS f0,
         |       round(ascii(substr(text, 2, 1)) / 255.0, 6) AS f1,
         |       round(ascii(substr(text, 3, 1)) / 255.0, 6) AS f2,
         |       round(ascii(substr(text, 4, 1)) / 255.0, 6) AS f3
-        |FROM documents ORDER BY doc_id""".stripMargin,
-    "q164_phash_dedup" ->
+        |FROM documents ORDER BY doc_id""".stripMargin),
+    QueryDef("q76_frame_sample", q76FrameSample _,
+      """SELECT doc_id, CAST(i AS INT) AS frame_idx,
+        |       CAST(length(substr(text, i * 16 + 1, 16)) AS INT) AS frame_len,
+        |       md5(substr(text, i * 16 + 1, 16)) AS frame_md5
+        |FROM (SELECT doc_id, text,
+        |             unnest(generate_series(0,
+        |               CAST(ceil(length(text) / 16.0) AS BIGINT) - 1)) AS i
+        |      FROM documents)
+        |WHERE i % 4 = 0
+        |ORDER BY doc_id, frame_idx""".stripMargin),
+    QueryDef("q164_phash_dedup", q164PhashDedup _,
       s"""WITH corpus AS (
          |  SELECT doc_id, text FROM documents
          |  UNION ALL
@@ -506,18 +509,8 @@ object Multimodal {
          |JOIN sig s2 ON s2.doc_id = id2
          |WHERE bit_count(xor(s1.sig_lo, s2.sig_lo))
          |      + bit_count(xor(s1.sig_hi, s2.sig_hi)) <= $PhashMaxHamming
-         |ORDER BY id1, id2""".stripMargin,
-    "q76_frame_sample" ->
-      """SELECT doc_id, CAST(i AS INT) AS frame_idx,
-        |       CAST(length(substr(text, i * 16 + 1, 16)) AS INT) AS frame_len,
-        |       md5(substr(text, i * 16 + 1, 16)) AS frame_md5
-        |FROM (SELECT doc_id, text,
-        |             unnest(generate_series(0,
-        |               CAST(ceil(length(text) / 16.0) AS BIGINT) - 1)) AS i
-        |      FROM documents)
-        |WHERE i % 4 = 0
-        |ORDER BY doc_id, frame_idx""".stripMargin,
-    "q390_cross_modal_audit" ->
+         |ORDER BY id1, id2""".stripMargin),
+    QueryDef("q390_cross_modal_audit", q390CrossModalAudit _,
       s"""WITH corpus AS (
          |  SELECT doc_id AS pair_id, text AS img_text, text AS caption
          |  FROM documents
@@ -569,8 +562,8 @@ object Multimodal {
          |         CAST(min(pair_id) AS BIGINT)
          |  FROM keyed GROUP BY cap
          |  HAVING count(*) >= 2 AND count(DISTINCT img) > 1)
-         |ORDER BY modality, group_key""".stripMargin,
-    "q391_video_frame_dedup" ->
+         |ORDER BY modality, group_key""".stripMargin),
+    QueryDef("q391_video_frame_dedup", q391VideoFrameDedup _,
       s"""WITH corpus AS (
          |  SELECT doc_id, text FROM documents
          |  UNION ALL
@@ -607,8 +600,8 @@ object Multimodal {
          |JOIN sizes s2 ON s2.doc_id = id2
          |WHERE $FrameOverlapDen * n_shared
          |      >= $FrameOverlapNum * least(s1.nf, s2.nf)
-         |ORDER BY id1, id2""".stripMargin,
-    "q392_video_dedup_recall" ->
+         |ORDER BY id1, id2""".stripMargin),
+    QueryDef("q392_video_dedup_recall", q392VideoDedupRecall _,
       s"""WITH corpus AS (
          |  SELECT doc_id, text FROM documents
          |  UNION ALL
@@ -657,5 +650,5 @@ object Multimodal {
          |SELECT status, CAST(count(*) AS BIGINT) AS n_pairs,
          |       CAST(min(n2) AS BIGINT) AS min_copy_frames,
          |       CAST(max(n2) AS BIGINT) AS max_copy_frames
-         |FROM cls GROUP BY status ORDER BY status""".stripMargin)
+         |FROM cls GROUP BY status ORDER BY status""".stripMargin))
 }

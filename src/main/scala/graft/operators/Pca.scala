@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.QueryDef
 import graft.sources.{DfCache, Tables}
 
 /** [EXT] top principal component of the embedding corpus by distributed
@@ -59,17 +60,22 @@ object Pca {
       // dim head, mean collect — each a full scheduling round trip):
       // the pos-keyed profile's row count IS dim and any pos's count
       // IS n. Per-pos sums are unchanged, so the mean is bit-identical.
+      // posexplode_OUTER: a NULL (or empty) embedding becomes one
+      // pos = NULL row instead of vanishing, so it is refused below
+      // rather than silently undercounting n.
       val prof = ex
-        .select(posexplode(col("embedding")).as(Seq("pos", "x")))
+        .select(posexplode_outer(col("embedding")).as(Seq("pos", "x")))
         .groupBy("pos").agg(sum(col("x").cast("double")).as("sx"),
           count(lit(1)).as("cnt"))
         .collect()
+      val nulls = prof.filter(_.isNullAt(0)).map(_.getLong(2)).sum
+      require(nulls == 0,
+        s"NULL or empty embedding in $dir: $nulls row(s) have no vector")
       val n = prof.head.getLong(2)
       // n is read off ONE position's profile row, which equals the
-      // embedding row count only when every vector has the same length
-      // and none is null (posexplode drops nulls). Assert that instead
-      // of assuming it (ADVICE r15): a ragged or null embedding must
-      // fail loudly, not silently skew n/dim and the mean.
+      // embedding row count only when every vector has the same length.
+      // Assert that instead of assuming it (ADVICE r15): a ragged
+      // embedding must fail loudly, not silently skew n/dim and the mean.
       require(prof.forall(_.getLong(2) == n),
         s"ragged embedding corpus in $dir: per-position counts " +
           s"${prof.map(_.getLong(2)).distinct.sorted.mkString(",")}")
@@ -189,12 +195,8 @@ object Pca {
       .orderBy("pos")
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q238_dim_health" -> (q238DimHealth _),
-    "q162_top_component" -> (q162TopComponent _))
-
-  val oracles: Map[String, String] = Map(
-    "q238_dim_health" ->
+  val defs: Seq[QueryDef] = Seq(
+    QueryDef("q238_dim_health", q238DimHealth _,
       s"""WITH ex AS (
         |  SELECT i - 1 AS pos,
         |         CAST(round(CAST(embedding[i] AS DOUBLE) * 1000000, 0)
@@ -226,13 +228,13 @@ object Pca {
         |       round(CAST(vmax AS DOUBLE) / 1e6, 6) AS v_max,
         |       round(CAST(n_zero AS DOUBLE) / n, 6) AS zero_frac,
         |       variance * ${DeadVarPct}.0 < (SELECT mv FROM mv) AS dead
-        |FROM pv ORDER BY pos""".stripMargin,
-    "q162_top_component" ->
+        |FROM pv ORDER BY pos""".stripMargin),
+    QueryDef("q162_top_component", q162TopComponent _,
       s"""SELECT CAST(count(*) AS BIGINT) AS n_vectors,
          |       CAST(max(len(embedding)) AS INTEGER) AS dim,
          |       $Iters AS iters,
          |       TRUE AS unit_norm_ok,
          |       TRUE AS rayleigh_monotone_ok,
          |       TRUE AS lambda_in_variance_ok
-         |FROM embeddings""".stripMargin)
+         |FROM embeddings""".stripMargin))
 }

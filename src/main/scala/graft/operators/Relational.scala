@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.QueryDef
 import graft.sources.Tables
 
 /** Reference-parity relational surface (SURVEY.md §2.12), re-expressed over
@@ -171,8 +172,8 @@ object Relational {
   def q09UnionBatches(spark: SparkSession, dir: String): DataFrame = {
     // the declared §4.3 optimizer stretch: the agg-through-union rule
     // rewrites this exact shape into per-batch partial aggregates
-    // merged above the union (plan pinned in PushAggThroughUnionSpec
-    // and docs/PLANS.md; the oracle verifies semantics are unchanged)
+    // merged above the union (plan pinned in PushAggThroughUnionSpec;
+    // the oracle verifies semantics are unchanged)
     graft.plans.PushAggThroughUnion.ensureRule(spark)
     val li = Tables.lineitem(spark, dir)
     val batch1 = li.filter(col("l_linenumber") <= 3)
@@ -347,22 +348,6 @@ object Relational {
       .orderBy("o_orderkey")
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q01_product_facts" -> (q01ProductFacts _),
-    "q02_rep_facts" -> (q02RepFacts _),
-    "q03_quarterly_totals" -> (q03QuarterlyTotals _),
-    "q04_product_quarterly" -> (q04ProductQuarterly _),
-    "q05_top_product" -> (q05TopProduct _),
-    "q06_rep_totals" -> (q06RepTotals _),
-    "q07_top5_reps" -> (q07Top5Reps _),
-    "q08_quarterly_trend" -> (q08QuarterlyTrend _),
-    "q09_union_batches" -> (q09UnionBatches _),
-    "q10_first_seen_keys" -> (q10FirstSeenKeys _),
-    "q11_fk_left_join" -> (q11FkLeftJoin _),
-    "q12_key_fixup" -> (q12KeyFixup _),
-    "q135_incremental_facts" -> (q135IncrementalFacts _),
-    "q136_snapshot_diff" -> (q136SnapshotDiff _))
-
   /** DuckDB CTE mirroring [[productFacts]] exactly (incl. cent rounding at
     * the fact grain, so re-aggregations sum identical values). */
   private val productFactsCte: String =
@@ -392,59 +377,59 @@ object Relational {
       |  JOIN supplier ON l_suppkey = s_suppkey
       |  GROUP BY 1, 2, 3, 4)""".stripMargin
 
-  val oracles: Map[String, String] = Map(
-    "q01_product_facts" ->
+  val defs: Seq[QueryDef] = Seq(
+    QueryDef("q01_product_facts", q01ProductFacts _,
       s"""WITH $productFactsCte
          |SELECT * FROM product_facts
-         |ORDER BY product_brand, sale_year, sale_quarter, region""".stripMargin,
-    "q02_rep_facts" ->
+         |ORDER BY product_brand, sale_year, sale_quarter, region""".stripMargin),
+    QueryDef("q02_rep_facts", q02RepFacts _,
       s"""WITH $repFactsCte
          |SELECT * FROM rep_facts
-         |ORDER BY rep_name, sale_year, sale_quarter, product_brand""".stripMargin,
-    "q03_quarterly_totals" ->
+         |ORDER BY rep_name, sale_year, sale_quarter, product_brand""".stripMargin),
+    QueryDef("q03_quarterly_totals", q03QuarterlyTotals _,
       s"""WITH $productFactsCte
          |SELECT sale_quarter, round(sum(total_sold), 2) AS total_sold
          |FROM product_facts WHERE sale_year = 1996
-         |GROUP BY sale_quarter ORDER BY sale_quarter""".stripMargin,
-    "q04_product_quarterly" ->
+         |GROUP BY sale_quarter ORDER BY sale_quarter""".stripMargin),
+    QueryDef("q04_product_quarterly", q04ProductQuarterly _,
       s"""WITH $productFactsCte
          |SELECT sale_quarter, round(sum(total_sold), 2) AS total_sold
          |FROM product_facts
          |WHERE sale_year = 1996 AND product_brand = 'Brand#1'
-         |GROUP BY sale_quarter ORDER BY sale_quarter""".stripMargin,
-    "q05_top_product" ->
+         |GROUP BY sale_quarter ORDER BY sale_quarter""".stripMargin),
+    QueryDef("q05_top_product", q05TopProduct _,
       s"""WITH $productFactsCte
          |SELECT product_brand, round(sum(total_sold), 2) AS total_sold
          |FROM product_facts WHERE sale_year = 1996
          |GROUP BY product_brand
-         |ORDER BY total_sold DESC, product_brand ASC LIMIT 1""".stripMargin,
-    "q06_rep_totals" ->
+         |ORDER BY total_sold DESC, product_brand ASC LIMIT 1""".stripMargin),
+    QueryDef("q06_rep_totals", q06RepTotals _,
       s"""WITH $repFactsCte
          |SELECT rep_name, round(sum(total_sold), 2) AS total_sold
          |FROM rep_facts WHERE sale_year = 1996
          |GROUP BY rep_name
-         |ORDER BY total_sold DESC, rep_name ASC""".stripMargin,
-    "q07_top5_reps" ->
+         |ORDER BY total_sold DESC, rep_name ASC""".stripMargin),
+    QueryDef("q07_top5_reps", q07Top5Reps _,
       s"""WITH $repFactsCte
          |SELECT sale_year, rep_name, round(sum(total_sold), 2) AS total_sales
          |FROM rep_facts
          |GROUP BY sale_year, rep_name
-         |ORDER BY sale_year DESC, total_sales DESC, rep_name ASC LIMIT 5""".stripMargin,
-    "q08_quarterly_trend" ->
+         |ORDER BY sale_year DESC, total_sales DESC, rep_name ASC LIMIT 5""".stripMargin),
+    QueryDef("q08_quarterly_trend", q08QuarterlyTrend _,
       s"""WITH $productFactsCte
          |SELECT sale_year, sale_quarter, round(sum(total_sold), 2) AS total_sold
          |FROM product_facts
          |GROUP BY sale_year, sale_quarter
-         |ORDER BY sale_year, sale_quarter""".stripMargin,
-    "q09_union_batches" ->
+         |ORDER BY sale_year, sale_quarter""".stripMargin),
+    QueryDef("q09_union_batches", q09UnionBatches _,
       """SELECT l_returnflag AS returnflag,
         |       count(*) AS n_rows,
         |       round(sum(l_extendedprice), 2) AS total_price
         |FROM (SELECT * FROM lineitem WHERE l_linenumber <= 3
         |      UNION ALL
         |      SELECT * FROM lineitem WHERE l_linenumber > 3)
-        |GROUP BY returnflag ORDER BY returnflag""".stripMargin,
-    "q10_first_seen_keys" ->
+        |GROUP BY returnflag ORDER BY returnflag""".stripMargin),
+    QueryDef("q10_first_seen_keys", q10FirstSeenKeys _,
       """WITH ranked AS (
         |  SELECT o_custkey AS custkey, o_orderdate, o_orderkey,
         |         row_number() OVER (PARTITION BY o_custkey
@@ -456,16 +441,16 @@ object Relational {
         |SELECT custkey,
         |       CAST(row_number() OVER (ORDER BY first_date, first_key) AS INT)
         |         AS surrogate_id
-        |FROM first_seen ORDER BY surrogate_id""".stripMargin,
-    "q11_fk_left_join" ->
+        |FROM first_seen ORDER BY surrogate_id""".stripMargin),
+    QueryDef("q11_fk_left_join", q11FkLeftJoin _,
       """SELECT l_returnflag AS returnflag,
         |       count(*) AS n_rows,
         |       count(p_brand) AS n_matched
         |FROM lineitem
         |LEFT JOIN (SELECT p_partkey, p_brand FROM part WHERE p_size > 25) dim
         |  ON l_partkey = p_partkey
-        |GROUP BY returnflag ORDER BY returnflag""".stripMargin,
-    "q12_key_fixup" ->
+        |GROUP BY returnflag ORDER BY returnflag""".stripMargin),
+    QueryDef("q12_key_fixup", q12KeyFixup _,
       """WITH fact AS (
         |  SELECT 'r' || CAST(l_suppkey AS VARCHAR) AS rep_id, l_extendedprice
         |  FROM lineitem),
@@ -474,10 +459,10 @@ object Relational {
         |  FROM supplier)
         |SELECT s_name AS rep_name, round(sum(l_extendedprice), 2) AS total_sold
         |FROM fact JOIN dim USING (rep_id)
-        |GROUP BY s_name ORDER BY rep_name""".stripMargin,
+        |GROUP BY s_name ORDER BY rep_name""".stripMargin),
     // the oracle is the FULL from-scratch build (no cutoff anywhere):
     // the engine's incremental merge must hash-match it exactly
-    "q135_incremental_facts" ->
+    QueryDef("q135_incremental_facts", q135IncrementalFacts _,
       """SELECT p_brand AS product_brand,
         |       CAST(year(o_orderdate) AS INT) AS sale_year,
         |       CAST(quarter(o_orderdate) AS INT) AS sale_quarter,
@@ -490,8 +475,8 @@ object Relational {
         |JOIN customer ON o_custkey = c_custkey
         |JOIN nation ON c_nationkey = n_nationkey
         |GROUP BY 1, 2, 3, 4
-        |ORDER BY 1, 2, 3, 4""".stripMargin,
-    "q136_snapshot_diff" ->
+        |ORDER BY 1, 2, 3, 4""".stripMargin),
+    QueryDef("q136_snapshot_diff", q136SnapshotDiff _,
       """WITH ver_a AS (
         |  SELECT o_orderkey,
         |         md5(CAST(CAST(round(o_totalprice * 100, 0) AS BIGINT)
@@ -511,5 +496,5 @@ object Relational {
         |            WHEN hash_a <> hash_b THEN 'updated' END AS change_type
         |FROM ver_a FULL OUTER JOIN ver_b USING (o_orderkey)
         |WHERE (hash_a IS NULL) OR (hash_b IS NULL) OR (hash_a <> hash_b)
-        |ORDER BY o_orderkey""".stripMargin)
+        |ORDER BY o_orderkey""".stripMargin))
 }

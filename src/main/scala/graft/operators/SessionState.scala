@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.QueryDef
 import graft.sources.Tables
 
 /** [EXT] incremental sessionization across a batch boundary (q166) —
@@ -114,13 +115,10 @@ object SessionState {
       .orderBy("user_id", "session_idx")
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q166_incremental_sessions" -> (q166IncrementalSessions _))
-
   /** The oracle is the FULL recompute — hash equality proves the
     * incremental path reconstructs it exactly. */
-  val oracles: Map[String, String] = Map(
-    "q166_incremental_sessions" ->
+  val defs: Seq[QueryDef] = Seq(
+    QueryDef("q166_incremental_sessions", q166IncrementalSessions _,
       """WITH marked AS (
         |  SELECT user_id, CAST(ts AS TIMESTAMP) AS ts, event_id,
         |         CASE WHEN lag(CAST(ts AS TIMESTAMP)) OVER w IS NULL
@@ -139,5 +137,5 @@ object SessionState {
         |       (epoch_us(max(ts)) - epoch_us(min(ts))) // 1000000
         |         AS duration_sec
         |FROM sessions GROUP BY user_id, session_idx
-        |ORDER BY user_id, session_idx""".stripMargin)
+        |ORDER BY user_id, session_idx""".stripMargin))
 }

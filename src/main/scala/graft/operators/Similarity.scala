@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.QueryDef
 import graft.sources.Tables
 
 /** [EXT] similarity search over the `embeddings` table (BASELINE.json
@@ -357,15 +358,9 @@ object Similarity {
       .orderBy("qid")
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q311_ild_audit" -> (q311IldAudit _),
-    "q304_isotropy_audit" -> (q304IsotropyAudit _),
-    "q36_ann_brute_topk" -> (q36AnnBruteTopK _),
-    "q37_ann_lsh_topk" -> (q37AnnLshTopK _))
 
-
-  val oracles: Map[String, String] = Map(
-    "q311_ild_audit" ->
+  val defs: Seq[QueryDef] = Seq(
+    QueryDef("q311_ild_audit", q311IldAudit _,
       s"""WITH $QselCte,
         |ex AS (
         |  SELECT vec_id, CAST(unnest(embedding) AS DOUBLE) AS x,
@@ -416,8 +411,8 @@ object Similarity {
         |  JOIN n2 zb ON zb.vec_id = d.c2)
         |SELECT qid, CAST(count(*) AS BIGINT) AS n_pairs,
         |       round(CAST(sum(mu) AS DOUBLE) / count(*) / 1e6, 6) AS ild
-        |FROM mus GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q304_isotropy_audit" ->
+        |FROM mus GROUP BY 1 ORDER BY 1""".stripMargin),
+    QueryDef("q304_isotropy_audit", q304IsotropyAudit _,
       """WITH iv AS (
         |  SELECT vec_id,
         |         list_transform(embedding, v ->
@@ -454,8 +449,8 @@ object Similarity {
         |       d.dominant_dim,
         |       round(CAST(d.s_dom * d.s_dom AS DOUBLE)
         |             / CAST(a.mu2 AS DOUBLE), 6) AS dominant_share
-        |FROM rows_ r, dim_agg a, dom d""".stripMargin,
-    "q36_ann_brute_topk" ->
+        |FROM rows_ r, dim_agg a, dom d""".stripMargin),
+    QueryDef("q36_ann_brute_topk", q36AnnBruteTopK _,
       s"""WITH $QselCte,
         |ex AS (
         |  SELECT vec_id, CAST(unnest(embedding) AS DOUBLE) AS x,
@@ -481,14 +476,14 @@ object Similarity {
         |           AS rank
         |  FROM scored)
         |SELECT qid, cid, cosine, rank FROM ranked
-        |WHERE rank <= 10 ORDER BY qid, rank""".stripMargin,
+        |WHERE rank <= 10 ORDER BY qid, rank""".stripMargin),
     // The LSH/IVF internals (hyperplane matrix, centroid assignment) are
     // Scala-side deterministic constants, not SQL-expressible — so the
     // oracle checks the CONTRACT instead: every query must reach the
     // recall floor vs exact brute force. A recall regression flips
     // recall_ok and fails the compare.
-    "q37_ann_lsh_topk" ->
+    QueryDef("q37_ann_lsh_topk", q37AnnLshTopK _,
       s"""WITH $QselCte
         |SELECT vec_id AS qid, TRUE AS recall_ok FROM qsel
-        |ORDER BY qid""".stripMargin)
+        |ORDER BY qid""".stripMargin))
 }

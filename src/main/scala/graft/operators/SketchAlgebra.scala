@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.QueryDef
 import graft.sources.Tables
 
 /** [EXT] sketch ALGEBRA beyond q100's union rollup: set-intersection
@@ -330,18 +331,10 @@ object SketchAlgebra {
       .orderBy("source_a", "source_b")
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q276_weighted_overlap" -> (q276WeightedOverlap _),
-    "q273_source_overlap" -> (q273SourceOverlap _),
-    "q153_hll_intersect" -> (q153HllIntersect _),
-    "q217_kmv_distinct" -> (q217KmvDistinct _),
-    "q226_incremental_kmv" -> (q226IncrementalKmv _),
-    "q228_kmv_jaccard" -> (q228KmvJaccard _))
-
   /** Exact-overlap arm in SQL; the sketch estimate's tolerance verdict
     * is the engine-side contract (the q52/q148 pattern). */
-  val oracles: Map[String, String] = Map(
-    "q276_weighted_overlap" ->
+  val defs: Seq[QueryDef] = Seq(
+    QueryDef("q276_weighted_overlap", q276WeightedOverlap _,
       """WITH cnts AS (
         |  SELECT source, ws[i] || ' ' || ws[i + 1] AS unit,
         |         CAST(count(*) AS BIGINT) AS c
@@ -372,8 +365,8 @@ object SketchAlgebra {
         |         AS weighted_jaccard
         |FROM spine s LEFT JOIN min_sums m
         |  ON m.sa = s.sa AND m.sb = s.sb
-        |ORDER BY source_a, source_b""".stripMargin,
-    "q273_source_overlap" ->
+        |ORDER BY source_a, source_b""".stripMargin),
+    QueryDef("q273_source_overlap", q273SourceOverlap _,
       """WITH units AS (
         |  SELECT DISTINCT source, ws[i] || ' ' || ws[i + 1] AS unit
         |  FROM (SELECT source, string_split(trim(text), ' ') AS ws,
@@ -415,8 +408,8 @@ object SketchAlgebra {
         |       n_a + n_b - n_inter AS n_union,
         |       round(CAST(n_inter AS DOUBLE)
         |             / CAST(n_a + n_b - n_inter AS DOUBLE), 6) AS jaccard
-        |FROM folded ORDER BY source_a, source_b""".stripMargin,
-    "q153_hll_intersect" ->
+        |FROM folded ORDER BY source_a, source_b""".stripMargin),
+    QueryDef("q153_hll_intersect", q153HllIntersect _,
       """WITH tu AS (SELECT DISTINCT event_type, user_id FROM events)
         |SELECT a.event_type AS type_a, b.event_type AS type_b,
         |       CAST(count(DISTINCT a.user_id) AS BIGINT) AS n_exact,
@@ -424,11 +417,11 @@ object SketchAlgebra {
         |FROM tu a JOIN tu b
         |  ON a.user_id = b.user_id AND a.event_type < b.event_type
         |GROUP BY 1, 2
-        |ORDER BY type_a, type_b""".stripMargin,
+        |ORDER BY type_a, type_b""".stripMargin),
     // fully EXACT oracle (no tolerance arm): KMV sketch contents are a
     // deterministic function of the input set, and bottom-k of the
     // union of sketches == bottom-k of the union of sets
-    "q217_kmv_distinct" ->
+    QueryDef("q217_kmv_distinct", q217KmvDistinct _,
       s"""WITH h AS (
         |  SELECT DISTINCT event_type,
         |         ('0x' || substr(md5('kmv:' || CAST(user_id AS VARCHAR)),
@@ -458,8 +451,48 @@ object SketchAlgebra {
         |                       / CAST(sk.kth_hash AS DOUBLE) END, 4)
         |         AS kmv_est
         |FROM sk JOIN ex ON sk.scope = ex.scope
-        |ORDER BY sk.scope""".stripMargin,
-    "q228_kmv_jaccard" ->
+        |ORDER BY sk.scope""".stripMargin),
+    QueryDef("q226_incremental_kmv", q226IncrementalKmv _,
+      s"""WITH ev AS (
+        |  SELECT DISTINCT CAST(ts AS DATE) AS day,
+        |         ('0x' || substr(md5('kmv:' || CAST(user_id AS VARCHAR)),
+        |                         1, 15))::BIGINT AS h
+        |  FROM events),
+        |dsk AS (
+        |  SELECT day, h FROM (
+        |    SELECT day, h,
+        |           row_number() OVER (PARTITION BY day ORDER BY h) AS rn
+        |    FROM ev)
+        |  WHERE rn <= $KmvK),
+        |days AS (SELECT DISTINCT day AS d FROM ev),
+        |cum AS (
+        |  SELECT d, count(*) AS cum_sketch_size, max(h) AS kth FROM (
+        |    SELECT d, h FROM (
+        |      SELECT u.d, u.h,
+        |             row_number() OVER (PARTITION BY u.d ORDER BY u.h)
+        |               AS rn
+        |      FROM (SELECT DISTINCT y.d, e.h
+        |            FROM dsk e JOIN days y ON e.day <= y.d) u)
+        |    WHERE rn <= $KmvK)
+        |  GROUP BY d),
+        |fs AS (SELECT h, min(day) AS fday FROM ev GROUP BY h),
+        |nn AS (SELECT fday, count(*) AS n_new FROM fs GROUP BY 1),
+        |cex AS (SELECT y.d, CAST(sum(n.n_new) AS BIGINT) AS cum_exact
+        |        FROM nn n JOIN days y ON n.fday <= y.d GROUP BY 1)
+        |SELECT c.d AS day,
+        |       CAST(coalesce(nn.n_new, 0) AS BIGINT) AS n_new_users,
+        |       x.cum_exact AS cum_exact_users,
+        |       CAST(c.cum_sketch_size AS INTEGER) AS cum_sketch_size,
+        |       round(CASE WHEN c.cum_sketch_size < $KmvK
+        |                  THEN CAST(c.cum_sketch_size AS DOUBLE)
+        |                  ELSE (${KmvK - 1}.0 * 1152921504606846976.0)
+        |                       / CAST(c.kth AS DOUBLE) END, 4)
+        |         AS cum_kmv_est
+        |FROM cum c
+        |JOIN cex x ON x.d = c.d
+        |LEFT JOIN nn ON nn.fday = c.d
+        |ORDER BY day""".stripMargin),
+    QueryDef("q228_kmv_jaccard", q228KmvJaccard _,
       s"""WITH h AS (
         |  SELECT DISTINCT source,
         |         ('0x' || substr(md5('kmvj:' || (ws[i] || ' ' || ws[i + 1])),
@@ -516,45 +549,5 @@ object SketchAlgebra {
         |JOIN inter i ON i.ta = e.ta AND i.tb = e.tb
         |JOIN sz sa ON sa.source = e.ta
         |JOIN sz sb ON sb.source = e.tb
-        |ORDER BY source_a, source_b""".stripMargin,
-    "q226_incremental_kmv" ->
-      s"""WITH ev AS (
-        |  SELECT DISTINCT CAST(ts AS DATE) AS day,
-        |         ('0x' || substr(md5('kmv:' || CAST(user_id AS VARCHAR)),
-        |                         1, 15))::BIGINT AS h
-        |  FROM events),
-        |dsk AS (
-        |  SELECT day, h FROM (
-        |    SELECT day, h,
-        |           row_number() OVER (PARTITION BY day ORDER BY h) AS rn
-        |    FROM ev)
-        |  WHERE rn <= $KmvK),
-        |days AS (SELECT DISTINCT day AS d FROM ev),
-        |cum AS (
-        |  SELECT d, count(*) AS cum_sketch_size, max(h) AS kth FROM (
-        |    SELECT d, h FROM (
-        |      SELECT u.d, u.h,
-        |             row_number() OVER (PARTITION BY u.d ORDER BY u.h)
-        |               AS rn
-        |      FROM (SELECT DISTINCT y.d, e.h
-        |            FROM dsk e JOIN days y ON e.day <= y.d) u)
-        |    WHERE rn <= $KmvK)
-        |  GROUP BY d),
-        |fs AS (SELECT h, min(day) AS fday FROM ev GROUP BY h),
-        |nn AS (SELECT fday, count(*) AS n_new FROM fs GROUP BY 1),
-        |cex AS (SELECT y.d, CAST(sum(n.n_new) AS BIGINT) AS cum_exact
-        |        FROM nn n JOIN days y ON n.fday <= y.d GROUP BY 1)
-        |SELECT c.d AS day,
-        |       CAST(coalesce(nn.n_new, 0) AS BIGINT) AS n_new_users,
-        |       x.cum_exact AS cum_exact_users,
-        |       CAST(c.cum_sketch_size AS INTEGER) AS cum_sketch_size,
-        |       round(CASE WHEN c.cum_sketch_size < $KmvK
-        |                  THEN CAST(c.cum_sketch_size AS DOUBLE)
-        |                  ELSE (${KmvK - 1}.0 * 1152921504606846976.0)
-        |                       / CAST(c.kth AS DOUBLE) END, 4)
-        |         AS cum_kmv_est
-        |FROM cum c
-        |JOIN cex x ON x.d = c.d
-        |LEFT JOIN nn ON nn.fday = c.d
-        |ORDER BY day""".stripMargin)
+        |ORDER BY source_a, source_b""".stripMargin))
 }

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.QueryDef
 import graft.sources.Tables
 
 /** Skew-handling utilities (SURVEY.md §4.2 / the 100 TB mandate).
@@ -190,12 +191,6 @@ object Skew {
           .as("mean_above"))
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q279_otsu_threshold" -> (q279OtsuThreshold _),
-    "q259_hill_tail" -> (q259HillTail _),
-    "q75_salted_agg" -> (q75SaltedAgg _),
-    "q206_skew_profile" -> (q206SkewProfile _))
-
   private def hillSql: String = {
     val kMax = HillKs.max
     val arms = HillKs.map { k =>
@@ -225,8 +220,8 @@ object Skew {
        |ORDER BY k""".stripMargin
   }
 
-  val oracles: Map[String, String] = Map(
-    "q279_otsu_threshold" ->
+  val defs: Seq[QueryDef] = Seq(
+    QueryDef("q279_otsu_threshold", q279OtsuThreshold _,
       """WITH spend AS (
         |  SELECT user_id,
         |         CAST(sum(CAST(round(value * 100, 0) AS BIGINT))
@@ -261,14 +256,14 @@ object Skew {
         |         AS mean_below,
         |       CAST((2 * s1 + n1) // (2 * n1) AS DOUBLE) / 100.0
         |         AS mean_above
-        |FROM best""".stripMargin,
-    "q259_hill_tail" -> hillSql,
-    "q75_salted_agg" ->
+        |FROM best""".stripMargin),
+    QueryDef("q259_hill_tail", q259HillTail _, hillSql),
+    QueryDef("q75_salted_agg", q75SaltedAgg _,
       """SELECT l_returnflag AS returnflag,
         |       round(sum(l_extendedprice), 2) AS total_price,
         |       count(*) AS n_rows
-        |FROM lineitem GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q206_skew_profile" ->
+        |FROM lineitem GROUP BY 1 ORDER BY 1""".stripMargin),
+    QueryDef("q206_skew_profile", q206SkewProfile _,
       s"""WITH counts AS (
         |  SELECT l_partkey AS key, count(*) AS n
         |  FROM lineitem GROUP BY 1),
@@ -293,5 +288,5 @@ object Skew {
         |         AS skew_ratio,
         |       CAST(ceil(CAST(max_n AS DOUBLE) / p90) AS BIGINT)
         |         AS suggested_salt
-        |FROM agg""".stripMargin)
+        |FROM agg""".stripMargin))
 }

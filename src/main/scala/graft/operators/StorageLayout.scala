@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.functions._
 
+import graft.QueryDef
 import graft.sources.Tables
 import Similarity.{QselCte, simCol}
 import AnnIndex.{ivfCentroids, nearestCells, ivfNprobe, IvfProbeScale, ProbeFloor}
@@ -18,7 +19,7 @@ import AnnIndex.{ivfCentroids, nearestCells, ivfNprobe, IvfProbeScale, ProbeFloo
   * (rows surfaced / files read), so a layout regression (pruning
   * silently lost, partition filter not pushed) fails the driver's hash
   * compare. The returned plan itself contains the pruned scan, so
-  * docs/PLANS.md shows the PartitionFilters / PushedFilters evidence.
+  * `graft.Explain` shows the PartitionFilters / PushedFilters evidence.
   */
 object StorageLayout {
 
@@ -137,7 +138,7 @@ object StorageLayout {
     * [[AnnIndex.ivfNprobe]] nearest cells, and the serving read
     * filters on that cell set — Catalyst turns the filter into
     * PartitionFilters and the scan touches ONLY the probed cells'
-    * files (the returned plan in docs/PLANS.md shows it; the
+    * files (the returned plan's `graft.Explain` dump shows it; the
     * files_read_lt_total contract measures it from scan metrics).
     * The top-10 within the probed cells is re-derived from the pruned
     * layout and checked identical to q52's ivfTopK for that query —
@@ -430,16 +431,47 @@ object StorageLayout {
       .orderBy("key_name")
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q132_zorder_scan" -> (q132ZorderScan _),
-    "q133_cell_serving" -> (q133CellServing _),
-    "q134_bucketed_join" -> (q134BucketedJoin _),
-    "q347_dim_bucketed_join" -> (q347DimBucketedJoin _),
-    "q309_bloom_advisor" -> (q309BloomAdvisor _),
-    "q286_partition_advisor" -> (q286PartitionAdvisor _))
-
-  val oracles: Map[String, String] = Map(
-    "q309_bloom_advisor" ->
+  val defs: Seq[QueryDef] = Seq(
+    QueryDef("q132_zorder_scan", q132ZorderScan _,
+      """SELECT count(*) AS n_rows,
+        |       round(sum(l_extendedprice), 2) AS sum_price
+        |FROM lineitem
+        |WHERE l_partkey <= (SELECT max(l_partkey) // 4 FROM lineitem)
+        |  AND l_suppkey <= (SELECT max(l_suppkey) // 4 FROM lineitem)""".stripMargin),
+    // layout internals (Lloyd cells, probe set) are Scala-side
+    // deterministic, not SQL-expressible — contract oracle, like q52
+    QueryDef("q133_cell_serving", q133CellServing _,
+      s"""WITH $QselCte
+        |SELECT CAST(min(vec_id) AS BIGINT) AS qid,
+        |       true AS cells_probed_lt_total,
+        |       true AS files_read_lt_total,
+        |       true AS topk_matches_ivf,
+        |       true AS topk_complete
+        |FROM qsel""".stripMargin),
+    QueryDef("q134_bucketed_join", q134BucketedJoin _,
+      """SELECT CAST(count(*) AS BIGINT) AS n_orders,
+        |       CAST(sum(n_items) AS BIGINT) AS n_items,
+        |       CAST(sum(cents) AS BIGINT) AS revenue_cents,
+        |       true AS join_and_agg_shuffle_free,
+        |       true AS colocated_merge_join
+        |FROM (
+        |  SELECT o_orderkey,
+        |         count(*) AS n_items,
+        |         sum(CAST(round(l_extendedprice * 100, 0) AS BIGINT)) AS cents
+        |  FROM orders JOIN lineitem ON o_orderkey = l_orderkey
+        |  GROUP BY 1)""".stripMargin),
+    QueryDef("q347_dim_bucketed_join", q347DimBucketedJoin _,
+      """SELECT c_mktsegment AS segment,
+        |       CAST(count(DISTINCT c_custkey) AS BIGINT)
+        |         AS n_purchasing_customers,
+        |       CAST(count(*) AS BIGINT) AS n_orders,
+        |       CAST(sum(CAST(round(o_totalprice * 100, 0) AS BIGINT))
+        |            AS BIGINT) AS revenue_cents,
+        |       true AS join_subtree_shuffle_free,
+        |       true AS colocated_merge_join
+        |FROM customer JOIN orders ON c_custkey = o_custkey
+        |GROUP BY 1 ORDER BY 1""".stripMargin),
+    QueryDef("q309_bloom_advisor", q309BloomAdvisor _,
       s"""WITH melted AS (
         |  SELECT 'l_orderkey' AS key_name, l_orderkey AS key_value
         |  FROM lineitem
@@ -458,8 +490,8 @@ object StorageLayout {
         |             / 8 / 1024 / 1024, 4) AS bloom_mib,
         |       $BloomHashes AS n_hashes,
         |       round(CAST(ndv AS DOUBLE) / rows, 6) AS ndv_per_row
-        |FROM agg ORDER BY key_name""".stripMargin,
-    "q286_partition_advisor" ->
+        |FROM agg ORDER BY key_name""".stripMargin),
+    QueryDef("q286_partition_advisor", q286PartitionAdvisor _,
       """WITH melted AS (
         |  SELECT 'ship_month' AS key_name,
         |         strftime(CAST(l_shipdate AS TIMESTAMP), '%Y-%m')
@@ -490,44 +522,5 @@ object StorageLayout {
         |             / (CAST(rows AS DOUBLE) * rows), 8)
         |         AS expected_scan_frac,
         |       round(CAST(max_n AS DOUBLE) / rows, 8) AS max_part_frac
-        |FROM keys ORDER BY key_name""".stripMargin,
-    "q132_zorder_scan" ->
-      """SELECT count(*) AS n_rows,
-        |       round(sum(l_extendedprice), 2) AS sum_price
-        |FROM lineitem
-        |WHERE l_partkey <= (SELECT max(l_partkey) // 4 FROM lineitem)
-        |  AND l_suppkey <= (SELECT max(l_suppkey) // 4 FROM lineitem)""".stripMargin,
-    // layout internals (Lloyd cells, probe set) are Scala-side
-    // deterministic, not SQL-expressible — contract oracle, like q52
-    "q133_cell_serving" ->
-      s"""WITH $QselCte
-        |SELECT CAST(min(vec_id) AS BIGINT) AS qid,
-        |       true AS cells_probed_lt_total,
-        |       true AS files_read_lt_total,
-        |       true AS topk_matches_ivf,
-        |       true AS topk_complete
-        |FROM qsel""".stripMargin,
-    "q347_dim_bucketed_join" ->
-      """SELECT c_mktsegment AS segment,
-        |       CAST(count(DISTINCT c_custkey) AS BIGINT)
-        |         AS n_purchasing_customers,
-        |       CAST(count(*) AS BIGINT) AS n_orders,
-        |       CAST(sum(CAST(round(o_totalprice * 100, 0) AS BIGINT))
-        |            AS BIGINT) AS revenue_cents,
-        |       true AS join_subtree_shuffle_free,
-        |       true AS colocated_merge_join
-        |FROM customer JOIN orders ON c_custkey = o_custkey
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q134_bucketed_join" ->
-      """SELECT CAST(count(*) AS BIGINT) AS n_orders,
-        |       CAST(sum(n_items) AS BIGINT) AS n_items,
-        |       CAST(sum(cents) AS BIGINT) AS revenue_cents,
-        |       true AS join_and_agg_shuffle_free,
-        |       true AS colocated_merge_join
-        |FROM (
-        |  SELECT o_orderkey,
-        |         count(*) AS n_items,
-        |         sum(CAST(round(l_extendedprice * 100, 0) AS BIGINT)) AS cents
-        |  FROM orders JOIN lineitem ON o_orderkey = l_orderkey
-        |  GROUP BY 1)""".stripMargin)
+        |FROM keys ORDER BY key_name""".stripMargin))
 }

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.QueryDef
 import graft.sources.Tables
 
 /** [EXT] distributed BPE ENCODE (q149) — the production counterpart of
@@ -82,11 +83,8 @@ object TextEncode {
         (col("ta") < col("tokens_before")).as("compressed"))
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q149_bpe_encode" -> (q149BpeEncode _))
-
-  val oracles: Map[String, String] = Map(
-    "q149_bpe_encode" ->
+  val defs: Seq[QueryDef] = Seq(
+    QueryDef("q149_bpe_encode", q149BpeEncode _,
       """WITH ww AS (
         |  SELECT doc_id, w FROM (
         |    SELECT doc_id, unnest(string_split(text, ' ')) AS w
@@ -97,5 +95,5 @@ object TextEncode {
         |       CAST(sum(len(w)) AS BIGINT) AS tokens_before,
         |       TRUE AS encode_matches_histogram,
         |       TRUE AS compressed
-        |FROM ww""".stripMargin)
+        |FROM ww""".stripMargin))
 }

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.QueryDef
 import graft.functions.Hashing
 import graft.sources.Tables
 
@@ -538,25 +539,8 @@ object TextOps {
       .orderBy("cls")
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q256_class_report" -> (q256ClassReport _),
-    "q137_bpe_train" -> (q137BpeTrain _),
-    "q123_pmi_cooccurrence" -> (q123PmiCooccurrence _),
-    "q121_adaptive_quality" -> (q121AdaptiveQuality _),
-    "q118_bigram_surprisal" -> (q118BigramSurprisal _),
-    "q111_lm_surprisal" -> (q111LmSurprisal _),
-    "q96_bm25" -> (q96Bm25 _),
-    "q86_tfidf" -> (q86Tfidf _),
-    "q87_entropy" -> (q87Entropy _),
-    "q38_lang_id" -> (q38LangId _),
-    "q39_quality_score" -> (q39QualityScore _),
-    "q40_token_count" -> (q40TokenCount _),
-    "q41_fingerprint" -> (q41Fingerprint _),
-    "q42_multimodal_meta" -> (q42MultimodalMeta _),
-    "q221_vocab_coverage" -> (q221VocabCoverage _))
-
-  val oracles: Map[String, String] = Map(
-    "q256_class_report" ->
+  val defs: Seq[QueryDef] = Seq(
+    QueryDef("q256_class_report", q256ClassReport _,
       """WITH scored AS (
         |  SELECT doc_id, lang,
         |    CAST((length(p) - length(replace(p, ' der ', ''))) / 5 AS INT) AS score_de,
@@ -610,39 +594,10 @@ object TextOps {
         |       round(f1, 6) AS f1,
         |       round((SELECT accuracy FROM tot), 6) AS accuracy,
         |       round((SELECT macro_f1 FROM tot), 6) AS macro_f1
-        |FROM pcf ORDER BY cls""".stripMargin,
-    "q221_vocab_coverage" -> {
-      val covArms = CoverageNs.map { n =>
-        s"""  SELECT $n AS top_n, count(*) AS vocab_used,
-           |         CAST(sum(n) AS BIGINT) AS covered
-           |  FROM ranked WHERE rn <= $n""".stripMargin
-      }.mkString("\nUNION ALL\n")
-      s"""WITH toks AS (
-        |  SELECT ws[i] || ' ' || ws[i + 1] AS unit
-        |  FROM (SELECT string_split(trim(text), ' ') AS ws,
-        |               unnest(generate_series(1,
-        |                 len(string_split(trim(text), ' ')) - 1)) AS i
-        |        FROM documents)
-        |  WHERE len(ws) >= 2),
-        |counts AS (SELECT unit, count(*) AS n FROM toks GROUP BY unit),
-        |tot AS (SELECT CAST(sum(n) AS BIGINT) AS total_tokens,
-        |               count(*) AS n_vocab
-        |        FROM counts),
-        |ranked AS (SELECT unit, n,
-        |                  row_number() OVER (ORDER BY n DESC, unit) AS rn
-        |           FROM counts),
-        |cov AS (
-        |$covArms)
-        |SELECT CAST(cov.top_n AS INTEGER) AS top_n, cov.vocab_used,
-        |       t.n_vocab, cov.covered, t.total_tokens,
-        |       round(CAST(cov.covered AS DOUBLE) / t.total_tokens, 6)
-        |         AS coverage
-        |FROM cov CROSS JOIN tot t
-        |ORDER BY top_n""".stripMargin
-    },
+        |FROM pcf ORDER BY cls""".stripMargin),
     // first merge + histogram totals recomputed exactly; iterative tail
     // pinned by the independent Scala reference in TextOpsBpeSpec
-    "q137_bpe_train" ->
+    QueryDef("q137_bpe_train", q137BpeTrain _,
       s"""WITH words AS (
         |  SELECT unnest(string_split(text, ' ')) AS w FROM documents),
         |wf AS (SELECT w, count(*) AS f FROM words
@@ -662,10 +617,10 @@ object TextOps {
         |         AS tokens_before,
         |       true AS compressed,
         |       true AS reduction_bounded_by_pair_counts
-        |FROM pairs ORDER BY cnt DESC, l, r LIMIT 1""".stripMargin,
+        |FROM pairs ORDER BY cnt DESC, l, r LIMIT 1""".stripMargin),
     // document-granularity PMI: P(a), P(b), P(a,b) all from doc counts;
     // the top-20 vocab gate bounds the pair space in both engines
-    "q123_pmi_cooccurrence" ->
+    QueryDef("q123_pmi_cooccurrence", q123PmiCooccurrence _,
       """WITH tokens AS (
         |  SELECT DISTINCT doc_id,
         |         unnest(string_split(trim(text), ' ')) AS word
@@ -688,10 +643,10 @@ object TextOps {
         |       round(log2(CAST(n_both AS DOUBLE) * n_docs
         |                  / (df1 * df2)), 4) AS pmi
         |FROM pairs CROSS JOIN n
-        |ORDER BY pmi DESC, w1, w2 LIMIT 30""".stripMargin,
+        |ORDER BY pmi DESC, w1, w2 LIMIT 30""".stripMargin),
     // quality CTEs = q39's oracle; threshold = exact continuous p25 per
     // source, rounded to 6 in BOTH engines before the kept comparison
-    "q121_adaptive_quality" ->
+    QueryDef("q121_adaptive_quality", q121AdaptiveQuality _,
       """WITH base AS (
         |  SELECT doc_id, source, text, ' ' || text || ' ' AS p,
         |         len(string_split(trim(text), ' ')) AS n_words
@@ -714,8 +669,8 @@ object TextOps {
         |SELECT doc_id, source, quality, src_p25,
         |       quality >= src_p25 AS kept
         |FROM q JOIN bounds USING (source)
-        |ORDER BY doc_id""".stripMargin,
-    "q118_bigram_surprisal" ->
+        |ORDER BY doc_id""".stripMargin),
+    QueryDef("q118_bigram_surprisal", q118BigramSurprisal _,
       """WITH bgr AS (
         |  SELECT doc_id, array_to_string(words[i:i+1], ' ') AS bg,
         |         words[i] AS w1
@@ -734,8 +689,8 @@ object TextOps {
         |       CAST(coalesce(n_bigrams, 0) AS BIGINT) AS n_bigrams,
         |       round(bits / n_bigrams, 4) AS avg_bigram_bits
         |FROM documents d LEFT JOIN agg USING (doc_id)
-        |ORDER BY doc_id""".stripMargin,
-    "q111_lm_surprisal" ->
+        |ORDER BY doc_id""".stripMargin),
+    QueryDef("q111_lm_surprisal", q111LmSurprisal _,
       """WITH tokens AS (
         |  SELECT doc_id, unnest(string_split(trim(text), ' ')) AS word
         |  FROM documents),
@@ -753,8 +708,8 @@ object TextOps {
         |  GROUP BY doc_id)
         |SELECT doc_id, n_tokens,
         |       round(bits / n_tokens, 4) AS avg_surprisal_bits
-        |FROM agg ORDER BY doc_id""".stripMargin,
-    "q96_bm25" ->
+        |FROM agg ORDER BY doc_id""".stripMargin),
+    QueryDef("q96_bm25", q96Bm25 _,
       """WITH tokens AS (
         |  SELECT doc_id, unnest(string_split(trim(text), ' ')) AS word
         |  FROM documents),
@@ -781,8 +736,8 @@ object TextOps {
         |SELECT CAST(row_number() OVER (ORDER BY bm25 DESC, doc_id) AS INT)
         |         AS rank,
         |       doc_id, bm25, n_matched_terms
-        |FROM top ORDER BY rank""".stripMargin,
-    "q86_tfidf" ->
+        |FROM top ORDER BY rank""".stripMargin),
+    QueryDef("q86_tfidf", q86Tfidf _,
       """WITH tokens AS (
         |  SELECT doc_id, unnest(string_split(trim(text), ' ')) AS word
         |  FROM documents),
@@ -802,8 +757,8 @@ object TextOps {
         |                ORDER BY score DESC, word) AS INT) AS rnk
         |  FROM scored)
         |SELECT doc_id, rnk, word, score FROM ranked
-        |WHERE rnk <= 3 ORDER BY doc_id, rnk""".stripMargin,
-    "q87_entropy" ->
+        |WHERE rnk <= 3 ORDER BY doc_id, rnk""".stripMargin),
+    QueryDef("q87_entropy", q87Entropy _,
       """WITH tokens AS (
         |  SELECT doc_id, unnest(string_split(trim(text), ' ')) AS word
         |  FROM documents),
@@ -822,8 +777,8 @@ object TextOps {
         |         round((ln(CAST(n_tokens AS DOUBLE)) - sum_tlnt / n_tokens)
         |               / ln(CAST(n_distinct AS DOUBLE)), 4)
         |       END AS norm_entropy
-        |FROM agg ORDER BY doc_id""".stripMargin,
-    "q38_lang_id" ->
+        |FROM agg ORDER BY doc_id""".stripMargin),
+    QueryDef("q38_lang_id", q38LangId _,
       """WITH scored AS (
         |  SELECT doc_id, lang,
         |    CAST((length(p) - length(replace(p, ' der ', ''))) / 5 AS INT) AS score_de,
@@ -852,8 +807,8 @@ object TextOps {
         |         ELSE 'zh'
         |       END = lang) AS is_correct,
         |       score_de, score_en, score_es, score_fr, score_zh
-        |FROM scored ORDER BY doc_id""".stripMargin,
-    "q39_quality_score" ->
+        |FROM scored ORDER BY doc_id""".stripMargin),
+    QueryDef("q39_quality_score", q39QualityScore _,
       """WITH base AS (
         |  SELECT doc_id, text, ' ' || text || ' ' AS p,
         |         length(text) AS n_chars_actual,
@@ -872,8 +827,8 @@ object TextOps {
         |       round(CAST(n_stopwords AS DOUBLE) / n_words, 6) AS stopword_ratio,
         |       round(ln(1.0 + n_words)
         |             * (1.0 - CAST(n_stopwords AS DOUBLE) / n_words), 6) AS quality
-        |FROM counted ORDER BY doc_id""".stripMargin,
-    "q40_token_count" ->
+        |FROM counted ORDER BY doc_id""".stripMargin),
+    QueryDef("q40_token_count", q40TokenCount _,
       """SELECT doc_id,
         |       CAST(len(string_split_regex(trim(text), '\s+')) AS INT)
         |         AS n_ws_tokens,
@@ -882,8 +837,8 @@ object TextOps {
         |       round(CAST(length(text) AS DOUBLE)
         |             / len(string_split_regex(trim(text), '\s+')), 6)
         |         AS chars_per_token
-        |FROM documents ORDER BY doc_id""".stripMargin,
-    "q41_fingerprint" ->
+        |FROM documents ORDER BY doc_id""".stripMargin),
+    QueryDef("q41_fingerprint", q41Fingerprint _,
       """WITH norm AS (
         |  SELECT doc_id,
         |         trim(regexp_replace(regexp_replace(lower(text), '[^a-z0-9 ]', '', 'g'),
@@ -891,13 +846,43 @@ object TextOps {
         |  FROM documents)
         |SELECT doc_id, md5(normalized) AS fingerprint,
         |       ('0x' || substr(md5(normalized), 1, 15))::BIGINT AS fingerprint60
-        |FROM norm ORDER BY doc_id""".stripMargin,
-    "q42_multimodal_meta" ->
+        |FROM norm ORDER BY doc_id""".stripMargin),
+    QueryDef("q42_multimodal_meta", q42MultimodalMeta _,
       """SELECT doc_id,
         |       CAST(octet_length(encode(text)) AS INT) AS n_bytes,
         |       md5(text) AS checksum,
         |       'utf8-text' AS media_kind,
         |       n_chars AS meta_width,
         |       CAST(1 AS BIGINT) AS meta_height
-        |FROM documents ORDER BY doc_id""".stripMargin)
+        |FROM documents ORDER BY doc_id""".stripMargin),
+    QueryDef("q221_vocab_coverage", q221VocabCoverage _,
+      {
+      val covArms = CoverageNs.map { n =>
+        s"""  SELECT $n AS top_n, count(*) AS vocab_used,
+           |         CAST(sum(n) AS BIGINT) AS covered
+           |  FROM ranked WHERE rn <= $n""".stripMargin
+      }.mkString("\nUNION ALL\n")
+      s"""WITH toks AS (
+        |  SELECT ws[i] || ' ' || ws[i + 1] AS unit
+        |  FROM (SELECT string_split(trim(text), ' ') AS ws,
+        |               unnest(generate_series(1,
+        |                 len(string_split(trim(text), ' ')) - 1)) AS i
+        |        FROM documents)
+        |  WHERE len(ws) >= 2),
+        |counts AS (SELECT unit, count(*) AS n FROM toks GROUP BY unit),
+        |tot AS (SELECT CAST(sum(n) AS BIGINT) AS total_tokens,
+        |               count(*) AS n_vocab
+        |        FROM counts),
+        |ranked AS (SELECT unit, n,
+        |                  row_number() OVER (ORDER BY n DESC, unit) AS rn
+        |           FROM counts),
+        |cov AS (
+        |$covArms)
+        |SELECT CAST(cov.top_n AS INTEGER) AS top_n, cov.vocab_used,
+        |       t.n_vocab, cov.covered, t.total_tokens,
+        |       round(CAST(cov.covered AS DOUBLE) / t.total_tokens, 6)
+        |         AS coverage
+        |FROM cov CROSS JOIN tot t
+        |ORDER BY top_n""".stripMargin
+    }))
 }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.QueryDef
 import graft.sources.Tables
 
 /** [EXT] corpus text-profile analytics: classic readability scoring
@@ -283,16 +284,8 @@ object TextProfile {
       .orderBy("context_len")
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q343_ingest_quality_trend" -> (q343IngestQualityTrend _),
-    "q344_truncation_waste" -> (q344TruncationWaste _),
-    "q338_charset_profile" -> (q338CharsetProfile _),
-    "q288_readability" -> (q288Readability _),
-    "q289_oov_emergence" -> (q289OovEmergence _),
-    "q291_heaps_law" -> (q291HeapsLaw _))
-
-  val oracles: Map[String, String] = Map(
-    "q343_ingest_quality_trend" ->
+  val defs: Seq[QueryDef] = Seq(
+    QueryDef("q343_ingest_quality_trend", q343IngestQualityTrend _,
       """WITH docs AS (
         |  SELECT doc_id, n_chars,
         |         CAST(len(list_filter(string_split(trim(text), ' '),
@@ -320,8 +313,9 @@ object TextProfile {
         |         AS mean_word_len,
         |       round(CAST(sum(CASE WHEN n_words < 50 THEN 1 ELSE 0 END)
         |               AS DOUBLE) / count(*), 6) AS short_doc_share
-        |FROM bucketed GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q344_truncation_waste" -> {
+        |FROM bucketed GROUP BY 1 ORDER BY 1""".stripMargin),
+    QueryDef("q344_truncation_waste", q344TruncationWaste _,
+      {
       val arms = ContextLengths.map { l =>
         s"""SELECT (SELECT n_docs FROM tot) AS n_docs,
            |  (SELECT n_tokens FROM tot) AS n_tokens,
@@ -347,8 +341,8 @@ object TextProfile {
          |               CAST(sum(toks) AS BIGINT) AS n_tokens FROM docs)
          |$arms
          |ORDER BY context_len""".stripMargin
-    },
-    "q338_charset_profile" ->
+    }),
+    QueryDef("q338_charset_profile", q338CharsetProfile _,
       """WITH per_doc AS (
         |  SELECT source, CAST(length(text) AS BIGINT) AS n,
         |         CAST(length(text)
@@ -378,8 +372,8 @@ object TextProfile {
         |       round(CAST(p AS DOUBLE) / chars, 6) AS punct_share,
         |       round(CAST(chars - l - d - s - p AS DOUBLE) / chars, 6)
         |         AS other_share
-        |FROM agg ORDER BY source""".stripMargin,
-    "q288_readability" ->
+        |FROM agg ORDER BY source""".stripMargin),
+    QueryDef("q288_readability", q288Readability _,
       """WITH per_doc AS (
         |  SELECT source,
         |         CAST(len(list_filter(string_split(trim(text), ' '),
@@ -410,8 +404,8 @@ object TextProfile {
         |       round(0.39 * (CAST(sw AS DOUBLE) / ss)
         |             + 11.8 * (CAST(ssyl AS DOUBLE) / sw) - 15.59, 4)
         |         AS fk_grade
-        |FROM prof ORDER BY source""".stripMargin,
-    "q289_oov_emergence" ->
+        |FROM prof ORDER BY source""".stripMargin),
+    QueryDef("q289_oov_emergence", q289OovEmergence _,
       """WITH cut AS (
         |  SELECT (min(doc_id) + max(doc_id)) // 2 AS cut
         |  FROM documents),
@@ -442,8 +436,8 @@ object TextProfile {
         |SELECT source, v1, v2, v2_new,
         |       round(CAST(v2_new AS DOUBLE) / v2, 6) AS type_oov_rate,
         |       round(CAST(t2_new AS DOUBLE) / t2, 6) AS token_oov_rate
-        |FROM prof WHERE v2 > 0 ORDER BY source""".stripMargin,
-    "q291_heaps_law" ->
+        |FROM prof WHERE v2 > 0 ORDER BY source""".stripMargin),
+    QueryDef("q291_heaps_law", q291HeapsLaw _,
       """WITH docs AS (
         |  SELECT source, doc_id,
         |         list_filter(string_split(trim(text), ' '),
@@ -500,5 +494,5 @@ object TextProfile {
         |       round(num / denx, 6) AS heaps_beta,
         |       round((num * num) / (denx * deny), 6) AS r2
         |FROM f WHERE k >= 2 AND denx <> 0.0 AND deny <> 0.0
-        |ORDER BY source""".stripMargin)
+        |ORDER BY source""".stripMargin))
 }

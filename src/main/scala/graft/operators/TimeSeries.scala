@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.QueryDef
 import graft.sources.{DfCache, Tables}
 
 /** [EXT] time-series analytics over the events stream — the monitoring
@@ -231,14 +232,9 @@ object TimeSeries {
       .orderBy("event_type", "day")
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q261_ewma" -> (q261Ewma _),
-    "q154_decayed_engagement" -> (q154DecayedEngagement _),
-    "q155_changepoint" -> (q155ChangePoint _),
-    "q156_acf" -> (q156Acf _))
-
-  val oracles: Map[String, String] = Map(
-    "q261_ewma" -> {
+  val defs: Seq[QueryDef] = Seq(
+    QueryDef("q261_ewma", q261Ewma _,
+      {
       val w6List = s"[${EwmaW6.mkString(", ")}]"
       s"""WITH ev AS (
         |  SELECT event_type, CAST(CAST(ts AS TIMESTAMP) AS DATE) AS dd
@@ -268,8 +264,8 @@ object TimeSeries {
         |       (SELECT d0 FROM d0) + CAST(tday AS INTEGER) AS day,
         |       round(CAST(num AS DOUBLE) / CAST(den AS DOUBLE), 4) AS ewma
         |FROM agg ORDER BY event_type, day""".stripMargin
-    },
-    "q154_decayed_engagement" ->
+    }),
+    QueryDef("q154_decayed_engagement", q154DecayedEngagement _,
       """WITH ev AS (
         |  SELECT event_type, CAST(CAST(ts AS TIMESTAMP) AS DATE) AS d, value
         |  FROM events),
@@ -292,8 +288,8 @@ object TimeSeries {
         |       CAST(sum(cents) AS BIGINT) AS raw_cents,
         |       round(CAST(sum(cents * w6) AS DOUBLE) / 1e8, 4)
         |         AS decayed_value
-        |FROM contrib GROUP BY event_type ORDER BY event_type""".stripMargin,
-    "q155_changepoint" ->
+        |FROM contrib GROUP BY event_type ORDER BY event_type""".stripMargin),
+    QueryDef("q155_changepoint", q155ChangePoint _,
       """WITH ev AS (
         |  SELECT event_type, CAST(CAST(ts AS TIMESTAMP) AS DATE) AS d
         |  FROM events),
@@ -330,8 +326,8 @@ object TimeSeries {
         |       round(CAST(s - sl AS DOUBLE) / (nn - t), 6) AS right_mean,
         |       round(gap, 6) AS gap,
         |       5 * num * nn > s * den AS shifted
-        |FROM ranked WHERE rk = 1 ORDER BY event_type""".stripMargin,
-    "q156_acf" ->
+        |FROM ranked WHERE rk = 1 ORDER BY event_type""".stripMargin),
+    QueryDef("q156_acf", q156Acf _,
       """WITH ev AS (
         |  SELECT event_type, CAST(CAST(ts AS TIMESTAMP) AS DATE) AS d
         |  FROM events),
@@ -349,5 +345,5 @@ object TimeSeries {
         |FROM daily a CROSS JOIN lags
         |JOIN daily b ON b.event_type = a.event_type
         |            AND b.day = a.day + lag
-        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin)
+        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin))
 }

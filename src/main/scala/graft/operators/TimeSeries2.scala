@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.QueryDef
 import graft.sources.Tables
 
 /** [EXT] time-series tranche 2 — the series-repair and series-model
@@ -815,25 +816,6 @@ object TimeSeries2 {
       .orderBy("event_type")
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q322_load_profile" -> (q322LoadProfile _),
-    "q299_decomposition_anomalies" -> (q299DecompositionAnomalies _),
-    "q294_seasonal_strength" -> (q294SeasonalStrength _),
-    "q293_brown_backtest" -> (q293BrownBacktest _),
-    "q275_burst_episodes" -> (q275BurstEpisodes _),
-    "q268_periodogram" -> (q268Periodogram _),
-    "q271_forecast_backtest" -> (q271ForecastBacktest _),
-    "q252_cusum" -> (q252Cusum _),
-    "q250_overdispersion" -> (q250Overdispersion _),
-    "q246_linear_interpolate" -> (q246LinearInterpolate _),
-    "q236_mann_kendall" -> (q236MannKendall _),
-    "q194_theil_sen" -> (q194TheilSen _),
-    "q175_gap_fill" -> (q175GapFill _),
-    "q176_mad_outliers" -> (q176MadOutliers _),
-    "q177_dow_seasonality" -> (q177DowSeasonality _),
-    "q178_ols_trend" -> (q178OlsTrend _),
-    "q187_dod_alerts" -> (q187DodAlerts _))
-
   /** Shared oracle CTE chain for the q294/q299 decomposition frame:
     * ends at `q(event_type, day, y, qdetr, qresid, qdeseas)`. */
   private val decompCte: String =
@@ -882,8 +864,8 @@ object TimeSeries2 {
       |  FROM valid v JOIN sdow s
       |    ON s.event_type = v.event_type AND s.dow = v.dow)""".stripMargin
 
-  val oracles: Map[String, String] = Map(
-    "q322_load_profile" ->
+  val defs: Seq[QueryDef] = Seq(
+    QueryDef("q322_load_profile", q322LoadProfile _,
       """WITH hourly AS (
         |  SELECT event_type,
         |         CAST(hour(CAST(ts AS TIMESTAMP)) AS INTEGER) AS h,
@@ -901,8 +883,8 @@ object TimeSeries2 {
         |       round(CAST(n AS DOUBLE) / tot, 6) AS peak_share,
         |       round(CAST(n AS DOUBLE) * 24 / tot, 4) AS peak_to_mean
         |FROM ranked WHERE rn = 1 ORDER BY event_type""".stripMargin
-        .replace("ranked_src", "hourly"),
-    "q299_decomposition_anomalies" ->
+        .replace("ranked_src", "hourly")),
+    QueryDef("q299_decomposition_anomalies", q299DecompositionAnomalies _,
       s"""WITH $decompCte,
         |mom AS (
         |  SELECT event_type,
@@ -920,8 +902,8 @@ object TimeSeries2 {
         |FROM q JOIN mom m USING (event_type)
         |WHERE m.sigma_mu > 0
         |  AND abs(CAST(q.qresid AS DOUBLE) / m.sigma_mu) > $AnomalySigma
-        |ORDER BY q.event_type, day""".stripMargin,
-    "q294_seasonal_strength" ->
+        |ORDER BY q.event_type, day""".stripMargin),
+    QueryDef("q294_seasonal_strength", q294SeasonalStrength _,
       """WITH ev AS (
         |  SELECT event_type, CAST(CAST(ts AS TIMESTAMP) AS DATE) AS dd
         |  FROM events),
@@ -994,8 +976,9 @@ object TimeSeries2 {
         |       CASE WHEN v_s > 0 THEN
         |         round(greatest(0.0, 1.0 - v_r / v_s), 6) END
         |         AS seasonal_strength
-        |FROM v ORDER BY event_type""".stripMargin,
-    "q293_brown_backtest" -> {
+        |FROM v ORDER BY event_type""".stripMargin),
+    QueryDef("q293_brown_backtest", q293BrownBacktest _,
+      {
       val taps2 = BrownK2.length
       val k1List = s"[${BrownK.padTo(taps2, 0L).mkString(", ")}]"
       val k2List = s"[${BrownK2.mkString(", ")}]"
@@ -1056,8 +1039,8 @@ object TimeSeries2 {
         |               / (CAST(se_n AS DOUBLE) * 1000000), 6)
         |       END AS skill
         |FROM agg ORDER BY event_type""".stripMargin
-    },
-    "q275_burst_episodes" ->
+    }),
+    QueryDef("q275_burst_episodes", q275BurstEpisodes _,
       s"""WITH ev AS (
         |  SELECT event_type, CAST(CAST(ts AS TIMESTAMP) AS DATE) AS dd
         |  FROM events),
@@ -1088,8 +1071,9 @@ object TimeSeries2 {
         |       CAST(max(n) AS BIGINT) AS peak_daily,
         |       CAST(sum(n) AS BIGINT) AS burst_volume
         |FROM isl GROUP BY event_type, grp
-        |ORDER BY event_type, start_day""".stripMargin,
-    "q268_periodogram" -> {
+        |ORDER BY event_type, start_day""".stripMargin),
+    QueryDef("q268_periodogram", q268Periodogram _,
+      {
       def lst(xs: Seq[Long]) = s"[${xs.mkString(", ")}]"
       s"""WITH ev AS (
         |  SELECT event_type, CAST(CAST(ts AS TIMESTAMP) AS DATE) AS dd
@@ -1138,8 +1122,8 @@ object TimeSeries2 {
         |                * CAST(total_events AS DOUBLE)), 6)
         |         AS rel_amplitude
         |FROM xy ORDER BY event_type, period""".stripMargin
-    },
-    "q271_forecast_backtest" ->
+    }),
+    QueryDef("q271_forecast_backtest", q271ForecastBacktest _,
       """WITH ev AS (
         |  SELECT event_type, CAST(CAST(ts AS TIMESTAMP) AS DATE) AS dd
         |  FROM events),
@@ -1169,8 +1153,8 @@ object TimeSeries2 {
         |       CASE WHEN ae7 < ae1 THEN 'seasonal_naive'
         |            WHEN ae1 < ae7 THEN 'naive'
         |            ELSE 'tie' END AS winner
-        |FROM agg ORDER BY event_type""".stripMargin,
-    "q252_cusum" ->
+        |FROM agg ORDER BY event_type""".stripMargin),
+    QueryDef("q252_cusum", q252Cusum _,
       """WITH ev AS (
         |  SELECT event_type, CAST(CAST(ts AS TIMESTAMP) AS DATE) AS dd
         |  FROM events),
@@ -1205,8 +1189,8 @@ object TimeSeries2 {
         |SELECT event_type, CAST(day AS INTEGER) AS day, n,
         |       CAST(p - runmin AS BIGINT) AS s_micro,
         |       p - runmin > h_micro AS alarm
-        |FROM runm ORDER BY event_type, day""".stripMargin,
-    "q250_overdispersion" ->
+        |FROM runm ORDER BY event_type, day""".stripMargin),
+    QueryDef("q250_overdispersion", q250Overdispersion _,
       """WITH ev AS (
         |  SELECT event_type, CAST(CAST(ts AS TIMESTAMP) AS DATE) AS dd
         |  FROM events),
@@ -1231,8 +1215,8 @@ object TimeSeries2 {
         |       CASE WHEN disp < 2.0 THEN 'poisson_like'
         |            WHEN disp < 5.0 THEN 'moderate'
         |            ELSE 'bursty' END AS verdict
-        |FROM d ORDER BY event_type""".stripMargin,
-    "q246_linear_interpolate" ->
+        |FROM d ORDER BY event_type""".stripMargin),
+    QueryDef("q246_linear_interpolate", q246LinearInterpolate _,
       s"""WITH ev AS (
         |  SELECT event_type,
         |         epoch_us(date_trunc('hour', CAST(ts AS TIMESTAMP)))
@@ -1283,8 +1267,8 @@ object TimeSeries2 {
         |                     * CAST(hidx - prev_h AS DOUBLE)
         |                     / CAST(next_h - prev_h AS DOUBLE), 4)
         |       END AS interp
-        |FROM nb ORDER BY event_type, ts_hour""".stripMargin,
-    "q236_mann_kendall" ->
+        |FROM nb ORDER BY event_type, ts_hour""".stripMargin),
+    QueryDef("q236_mann_kendall", q236MannKendall _,
       s"""WITH ev AS (
         |  SELECT event_type, CAST(CAST(ts AS TIMESTAMP) AS DATE) AS dd
         |  FROM events),
@@ -1327,8 +1311,8 @@ object TimeSeries2 {
         |       CASE WHEN z > $MkZCrit THEN 'increasing'
         |            WHEN z < -$MkZCrit THEN 'decreasing'
         |            ELSE 'none' END AS trend
-        |FROM z ORDER BY event_type""".stripMargin,
-    "q194_theil_sen" ->
+        |FROM z ORDER BY event_type""".stripMargin),
+    QueryDef("q194_theil_sen", q194TheilSen _,
       """WITH ev AS (
         |  SELECT event_type, CAST(CAST(ts AS TIMESTAMP) AS DATE) AS dd
         |  FROM events),
@@ -1356,25 +1340,8 @@ object TimeSeries2 {
         |       round(ts_slope, 6) AS ts_slope,
         |       round(quantile_cont(res_intercept, 0.5), 6) AS ts_intercept
         |FROM res GROUP BY event_type, n_pairs, ts_slope
-        |ORDER BY event_type""".stripMargin,
-    "q187_dod_alerts" ->
-      s"""WITH ev AS (
-        |  SELECT event_type, CAST(CAST(ts AS TIMESTAMP) AS DATE) AS d
-        |  FROM events),
-        |daily AS (
-        |  SELECT event_type, d, count(*) AS n FROM ev GROUP BY 1, 2),
-        |lagged AS (
-        |  SELECT event_type, d, n,
-        |         lag(n) OVER (PARTITION BY event_type ORDER BY d)
-        |           AS prev_n
-        |  FROM daily)
-        |SELECT event_type, d AS alert_day, prev_n, n,
-        |       round(CAST(n - prev_n AS DOUBLE) / prev_n, 6) AS pct_change
-        |FROM lagged
-        |WHERE prev_n IS NOT NULL
-        |  AND abs(n - prev_n) * $AlertQuarters > prev_n
-        |ORDER BY event_type, alert_day""".stripMargin,
-    "q175_gap_fill" ->
+        |ORDER BY event_type""".stripMargin),
+    QueryDef("q175_gap_fill", q175GapFill _,
       """WITH ev AS (
         |  SELECT event_type,
         |         epoch_us(date_trunc('hour', CAST(ts AS TIMESTAMP))) AS hus
@@ -1402,8 +1369,8 @@ object TimeSeries2 {
         |       h.n_obs IS NULL AS is_gap
         |FROM spine s LEFT JOIN hourly h
         |  ON h.event_type = s.event_type AND h.hidx = s.hidx
-        |ORDER BY s.event_type, ts_hour""".stripMargin,
-    "q176_mad_outliers" ->
+        |ORDER BY s.event_type, ts_hour""".stripMargin),
+    QueryDef("q176_mad_outliers", q176MadOutliers _,
       s"""WITH cells AS (
         |  SELECT user_id, CAST(CAST(ts AS TIMESTAMP) AS DATE) AS d,
         |         CAST(sum(CAST(round(value * 100, 0) AS BIGINT))
@@ -1425,8 +1392,8 @@ object TimeSeries2 {
         |WHERE (SELECT mad FROM mad) > 0
         |  AND adev > $Kmad * (SELECT mad FROM mad)
         |ORDER BY score DESC, user_id, d
-        |LIMIT $TopOutliers""".stripMargin,
-    "q177_dow_seasonality" ->
+        |LIMIT $TopOutliers""".stripMargin),
+    QueryDef("q177_dow_seasonality", q177DowSeasonality _,
       """WITH ev AS (
         |  SELECT event_type, CAST(CAST(ts AS TIMESTAMP) AS DATE) AS d
         |  FROM events),
@@ -1445,8 +1412,8 @@ object TimeSeries2 {
         |             (CAST(p.s_all AS DOUBLE) / p.k_all), 6) AS seasonal_ix
         |FROM typed t JOIN per_type p ON p.event_type = t.event_type
         |GROUP BY t.event_type, dow, p.s_all, p.k_all
-        |ORDER BY t.event_type, dow""".stripMargin,
-    "q178_ols_trend" ->
+        |ORDER BY t.event_type, dow""".stripMargin),
+    QueryDef("q178_ols_trend", q178OlsTrend _,
       """WITH ev AS (
         |  SELECT event_type, CAST(CAST(ts AS TIMESTAMP) AS DATE) AS d
         |  FROM events),
@@ -1479,5 +1446,22 @@ object TimeSeries2 {
         |       round((num * num) / (dend * denn), 6) AS r2
         |FROM fitted
         |WHERE k >= 2 AND denn <> 0
-        |ORDER BY event_type""".stripMargin)
+        |ORDER BY event_type""".stripMargin),
+    QueryDef("q187_dod_alerts", q187DodAlerts _,
+      s"""WITH ev AS (
+        |  SELECT event_type, CAST(CAST(ts AS TIMESTAMP) AS DATE) AS d
+        |  FROM events),
+        |daily AS (
+        |  SELECT event_type, d, count(*) AS n FROM ev GROUP BY 1, 2),
+        |lagged AS (
+        |  SELECT event_type, d, n,
+        |         lag(n) OVER (PARTITION BY event_type ORDER BY d)
+        |           AS prev_n
+        |  FROM daily)
+        |SELECT event_type, d AS alert_day, prev_n, n,
+        |       round(CAST(n - prev_n AS DOUBLE) / prev_n, 6) AS pct_change
+        |FROM lagged
+        |WHERE prev_n IS NOT NULL
+        |  AND abs(n - prev_n) * $AlertQuarters > prev_n
+        |ORDER BY event_type, alert_day""".stripMargin))
 }

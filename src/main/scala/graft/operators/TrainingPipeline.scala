@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.QueryDef
 import graft.sources.Tables
 
 /** q53 — composed training-data curation pipeline: the operators of this
@@ -146,15 +147,10 @@ object TrainingPipeline {
       .orderBy("epoch")
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q122_length_buckets" -> (q122LengthBuckets _),
-    "q53_curation_pipeline" -> (q53CurationPipeline _),
-    "q220_epoch_shuffle" -> (q220EpochShuffle _))
-
-  val oracles: Map[String, String] = Map(
+  val defs: Seq[QueryDef] = Seq(
     // exact continuous quartile edges (quantile_cont == Spark
     // percentile); the ROLLUP total row is the unbucketed baseline
-    "q122_length_buckets" ->
+    QueryDef("q122_length_buckets", q122LengthBuckets _,
       """WITH toks AS (
         |  SELECT doc_id, len(string_split(trim(text), ' ')) AS n_tok
         |  FROM documents),
@@ -179,8 +175,8 @@ object TrainingPipeline {
         |                   / (count(*) * max(n_tok)), 6) AS padding_waste
         |FROM bucketed
         |GROUP BY ROLLUP (bucket)
-        |ORDER BY bucket""".stripMargin,
-    "q53_curation_pipeline" ->
+        |ORDER BY bucket""".stripMargin),
+    QueryDef("q53_curation_pipeline", q53CurationPipeline _,
       """WITH docs AS (
         |  SELECT doc_id, text, source, md5(text) AS text_hash,
         |         ' ' || text || ' ' AS padded,
@@ -209,8 +205,8 @@ object TrainingPipeline {
         |       CAST(sum(octet_length(encode(text))) AS BIGINT) AS total_bytes,
         |       round(avg(n_words), 6) AS avg_tokens
         |FROM curated
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q220_epoch_shuffle" ->
+        |GROUP BY 1 ORDER BY 1""".stripMargin),
+    QueryDef("q220_epoch_shuffle", q220EpochShuffle _,
       s"""WITH p AS (
         |  SELECT greatest(4, count(*) // $ShardTarget) AS n_shards
         |  FROM documents),
@@ -237,5 +233,5 @@ object TrainingPipeline {
         |       count(*) AS n_shards,
         |       min(sz) AS min_shard_docs, max(sz) AS max_shard_docs,
         |       CAST(sum(ck) AS BIGINT) AS order_checksum
-        |FROM ps GROUP BY epoch ORDER BY epoch""".stripMargin)
+        |FROM ps GROUP BY epoch ORDER BY epoch""".stripMargin))
 }

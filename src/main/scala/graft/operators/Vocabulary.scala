@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.QueryDef
 import graft.sources.Tables
 
 /** [EXT] vocabulary-richness estimation (q230): the Good–Turing
@@ -118,12 +119,8 @@ object Vocabulary {
       .orderBy("source")
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q240_zipf_slope" -> (q240ZipfSlope _),
-    "q230_vocab_richness" -> (q230VocabRichness _))
-
-  val oracles: Map[String, String] = Map(
-    "q240_zipf_slope" ->
+  val defs: Seq[QueryDef] = Seq(
+    QueryDef("q240_zipf_slope", q240ZipfSlope _,
       s"""WITH hist AS (
         |  SELECT source, word, count(*) AS cnt
         |  FROM (SELECT source,
@@ -160,8 +157,8 @@ object Vocabulary {
         |       round(num / denx, 6) AS zipf_slope,
         |       round((num * num) / (denx * deny), 6) AS r2
         |FROM f WHERE k >= 2 AND deny <> 0.0
-        |ORDER BY source""".stripMargin,
-    "q230_vocab_richness" ->
+        |ORDER BY source""".stripMargin),
+    QueryDef("q230_vocab_richness", q230VocabRichness _,
       """WITH hist AS (
         |  SELECT source, word, count(*) AS cnt
         |  FROM (SELECT source,
@@ -181,5 +178,5 @@ object Vocabulary {
         |       round(CAST(v_obs AS DOUBLE)
         |             + CAST(f1 AS DOUBLE) * (CAST(f1 AS DOUBLE) - 1.0)
         |               / (2.0 * (CAST(f2 AS DOUBLE) + 1.0)), 2) AS chao1
-        |FROM prof ORDER BY source""".stripMargin)
+        |FROM prof ORDER BY source""".stripMargin))
 }

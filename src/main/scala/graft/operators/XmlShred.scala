@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.QueryDef
 import graft.sources.Tables
 
 /** XML document shredding (SURVEY.md §2.1 S1-S3): the reference's whole
@@ -61,15 +62,12 @@ object XmlShred {
            countDistinct(col("custkey")).as("n_customers"))
       .orderBy("status", "priority")
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q48_xml_shred" -> (q48XmlShred _))
-
-  val oracles: Map[String, String] = Map(
-    "q48_xml_shred" ->
+  val defs: Seq[QueryDef] = Seq(
+    QueryDef("q48_xml_shred", q48XmlShred _,
       """SELECT o_orderstatus AS status, o_orderpriority AS priority,
         |       count(*) AS n_orders,
         |       round(sum(o_totalprice), 2) AS total_price,
         |       count(DISTINCT o_custkey) AS n_customers
         |FROM orders
-        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin)
+        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin))
 }

@@ -3,7 +3,7 @@ package graft.plans
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, BloomFilterMightContain, Expression, ExpressionInfo}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
@@ -216,33 +216,38 @@ case class VectorSignBits(left: Expression, right: Expression)
 
 /** Registration for the graft native functions: usable either via
   * `spark.sql.extensions=graft.plans.GraftExtensions` or the idempotent
-  * runtime [[GraftFunctions.register]] that every query entry calls. */
+  * runtime [[GraftFunctions.register]] that every query entry calls.
+  * Both paths read the one [[GraftFunctions.functions]] list. */
 object GraftFunctions {
-  val functions: Seq[(String, Seq[Expression] => Expression)] = Seq(
-    "graft_dot" -> ((children: Seq[Expression]) =>
-      VectorDot(children(0), children(1))),
-    "graft_sign_bits" -> ((children: Seq[Expression]) =>
-      VectorSignBits(children(0), children(1))),
+  /** A native function: its SQL name, the expression class
+    * `ExpressionInfo` reports, and how to build it from its arguments. */
+  final case class Native(name: String, expression: Class[_ <: Expression],
+      build: Seq[Expression] => Expression)
+
+  val functions: Seq[Native] = Seq(
+    Native("graft_dot", classOf[VectorDot],
+      children => VectorDot(children(0), children(1))),
+    Native("graft_sign_bits", classOf[VectorSignBits],
+      children => VectorSignBits(children(0), children(1))),
     // Spark's own codegen bloom-probe predicate, exposed as a session
     // function so DataFrame pipelines can consume an explicitly built
     // `util.sketch.BloomFilter` (serialized bytes, xxhash64'd key) the
     // same way the optimizer's runtime bloom-join filters do — the
     // probe stays inside WholeStageCodegen instead of a boxed UDF.
-    "graft_bloom_contains" -> ((children: Seq[Expression]) =>
-      new org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain(
-        children(0), children(1))),
+    Native("graft_bloom_contains", classOf[BloomFilterMightContain],
+      children => new BloomFilterMightContain(children(0), children(1))),
     // same discipline for the Count-Min point-frequency probe: the
     // serialized sketch is a binary literal, the probe is codegen
-    "graft_cms_estimate" -> ((children: Seq[Expression]) =>
-      CmsEstimateCount(children(0), children(1))),
-    "graft_gear_ends" -> ((children: Seq[Expression]) =>
-      GearChunkEnds(children(0))))
+    Native("graft_cms_estimate", classOf[CmsEstimateCount],
+      children => CmsEstimateCount(children(0), children(1))),
+    Native("graft_gear_ends", classOf[GearChunkEnds],
+      children => GearChunkEnds(children(0))))
 
   def register(spark: SparkSession): Unit = {
     val registry = spark.sessionState.functionRegistry
-    functions.foreach { case (name, builder) =>
-      if (!registry.functionExists(FunctionIdentifier(name))) {
-        registry.createOrReplaceTempFunction(name, builder, "built-in")
+    functions.foreach { f =>
+      if (!registry.functionExists(FunctionIdentifier(f.name))) {
+        registry.createOrReplaceTempFunction(f.name, f.build, "built-in")
       }
     }
   }
@@ -252,32 +257,10 @@ object GraftFunctions {
   * `spark.sql.extensions=graft.plans.GraftExtensions`). */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(extensions: SparkSessionExtensions): Unit = {
-    extensions.injectFunction((
-      FunctionIdentifier("graft_dot"),
-      new ExpressionInfo(classOf[VectorDot].getName, "graft_dot"),
-      (children: Seq[Expression]) => VectorDot(children(0), children(1))))
-    extensions.injectFunction((
-      FunctionIdentifier("graft_sign_bits"),
-      new ExpressionInfo(classOf[VectorSignBits].getName, "graft_sign_bits"),
-      (children: Seq[Expression]) => VectorSignBits(children(0), children(1))))
-    extensions.injectFunction((
-      FunctionIdentifier("graft_bloom_contains"),
-      new ExpressionInfo(
-        classOf[org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain].getName,
-        "graft_bloom_contains"),
-      (children: Seq[Expression]) =>
-        new org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain(
-          children(0), children(1))))
-    extensions.injectFunction((
-      FunctionIdentifier("graft_cms_estimate"),
-      new ExpressionInfo(classOf[CmsEstimateCount].getName,
-        "graft_cms_estimate"),
-      (children: Seq[Expression]) =>
-        CmsEstimateCount(children(0), children(1))))
-    extensions.injectFunction((
-      FunctionIdentifier("graft_gear_ends"),
-      new ExpressionInfo(classOf[GearChunkEnds].getName, "graft_gear_ends"),
-      (children: Seq[Expression]) => GearChunkEnds(children(0))))
+    GraftFunctions.functions.foreach { f =>
+      extensions.injectFunction((FunctionIdentifier(f.name),
+        new ExpressionInfo(f.expression.getName, f.name), f.build))
+    }
     extensions.injectOptimizerRule(_ => RewriteDotProduct)
     extensions.injectOptimizerRule(_ => PushAggThroughUnion)
     extensions.injectPlannerStrategy(_ => AsofJoinStrategy)

@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.QueryDef
 import graft.sources.Tables
 
 /** [EXT] streaming surface (SURVEY.md §2.10) over
@@ -686,16 +687,8 @@ object Streams {
       .orderBy("user_id")
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q109_interval_left_join" -> (q109IntervalLeftJoin _),
-    "q71_interval_join" -> (q71IntervalJoin _),
-    "q44_tumbling_window" -> (q44TumblingWindow _),
-    "q45_sliding_window" -> (q45SlidingWindow _),
-    "q46_session_window" -> (q46SessionWindow _),
-    "q47_stream_dedup" -> (q47StreamDedup _))
-
-  val oracles: Map[String, String] = Map(
-    "q109_interval_left_join" ->
+  val defs: Seq[QueryDef] = Seq(
+    QueryDef("q109_interval_left_join", q109IntervalLeftJoin _,
       """WITH p AS (SELECT user_id, CAST(ts AS TIMESTAMP) AS ts
         |           FROM events WHERE event_type = 'purchase'),
         |     s AS (SELECT user_id, CAST(ts AS TIMESTAMP) AS ts
@@ -709,8 +702,8 @@ object Streams {
         |SELECT user_id, CAST(sum(n_pairs) AS BIGINT) AS n_signup_pairs,
         |       count(*) FILTER (WHERE n_pairs = 0)
         |         AS n_unmatched_purchases
-        |FROM per GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q71_interval_join" ->
+        |FROM per GROUP BY 1 ORDER BY 1""".stripMargin),
+    QueryDef("q71_interval_join", q71IntervalJoin _,
       """WITH p AS (SELECT user_id, CAST(ts AS TIMESTAMP) AS ts
         |           FROM events WHERE event_type = 'purchase'),
         |     s AS (SELECT user_id, CAST(ts AS TIMESTAMP) AS ts
@@ -719,22 +712,22 @@ object Streams {
         |FROM p JOIN s
         |  ON p.user_id = s.user_id
         | AND s.ts BETWEEN p.ts - INTERVAL 7 DAY AND p.ts
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q44_tumbling_window" ->
+        |GROUP BY 1 ORDER BY 1""".stripMargin),
+    QueryDef("q44_tumbling_window", q44TumblingWindow _,
       """SELECT date_trunc('hour', CAST(ts AS TIMESTAMP)) AS window_start,
         |       event_type,
         |       count(*) AS n_events,
         |       round(sum(value), 2) AS total_value
         |FROM events
-        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-    "q45_sliding_window" ->
+        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin),
+    QueryDef("q45_sliding_window", q45SlidingWindow _,
       """SELECT time_bucket(INTERVAL '15 minutes', CAST(ts AS TIMESTAMP))
         |         - k * INTERVAL '15 minutes' AS window_start,
         |       count(*) AS n_events,
         |       round(sum(value), 2) AS total_value
         |FROM events, generate_series(0, 3) t(k)
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q46_session_window" ->
+        |GROUP BY 1 ORDER BY 1""".stripMargin),
+    QueryDef("q46_session_window", q46SessionWindow _,
       """WITH e AS (SELECT user_id, CAST(ts AS TIMESTAMP) AS ts FROM events),
         |marked AS (
         |  SELECT user_id, ts,
@@ -751,11 +744,11 @@ object Streams {
         |  FROM marked)
         |SELECT user_id, min(ts) AS session_start, count(*) AS n_events
         |FROM sessions GROUP BY user_id, sess_id
-        |ORDER BY user_id, session_start""".stripMargin,
-    "q47_stream_dedup" ->
+        |ORDER BY user_id, session_start""".stripMargin),
+    QueryDef("q47_stream_dedup", q47StreamDedup _,
       """SELECT user_id, event_type,
         |       min(CAST(ts AS TIMESTAMP)) AS first_ts,
         |       count(*) AS n_events
         |FROM events
-        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin)
+        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin))
 }

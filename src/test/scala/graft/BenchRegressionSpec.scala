@@ -44,20 +44,7 @@ class BenchRegressionSpec extends AnyFunSuite {
     * (VERDICT r14 #9). r14's per-QUERY setup-draining accounting
     * change needed no entries (it only made queries faster, and
     * improvements are never flagged). */
-  private val allowlist: Map[String, (Int, String)] = Map(
-    "setup:shingles" -> (15, "work deliberately moved INTO the shared " +
-      "build: per-row array_distinct+size replaces the corpus-wide " +
-      "distinct (deletes the per-doc size join/broadcast, VERDICT r14 " +
-      "#1) and the materialization is hash-partitioned by shingle so " +
-      "the pair self-joins are exchange-free; consumers q106 -3.3s, " +
-      "q389 -3.0s, q158/q202 -1s each vs r14"),
-    "setup:minhash_day0" -> (15, "same r15 shingleRows change " +
-      "(per-row array_distinct+size) on the per-day incremental-dedup " +
-      "sketch build"),
-    "setup:minhash_day1" -> (15, "same r15 shingleRows change " +
-      "(per-row array_distinct+size) on the per-day incremental-dedup " +
-      "sketch build")
-  )
+  private val allowlist: Map[String, (Int, String)] = Map.empty
 
   private def read(p: String): Option[String] = {
     val path = Paths.get(p)

@@ -1,8 +1,10 @@
 package graft
 
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 
 import graft.operators.{Pca => P}
+import graft.sources.Tables
 
 /** q162 — the distributed power iteration pinned against a dense
   * same-recurrence recompute (tight tolerance: identical algorithm,
@@ -82,5 +84,29 @@ class PcaSpec extends SparkTestBase {
     assert(math.abs((before - after) - tc.rayleigh.last) <
       0.015 * tc.rayleigh.last,
       s"variance removed ${before - after} vs lambda ${tc.rayleigh.last}")
+  }
+
+  /** A scratch sf dir whose `embeddings` table holds `vectors` (None = a
+    * NULL embedding); topComponent reads nothing else. */
+  private def corpus(vectors: Seq[Option[Seq[Float]]]): String = {
+    val dir = java.nio.file.Files.createTempDirectory("graft_pca").toString
+    val rows = vectors.zipWithIndex.map { case (v, i) =>
+      Row(i.toLong, v.orNull, 0) }
+    spark.createDataFrame(java.util.Arrays.asList(rows: _*),
+      Tables.embeddingsSchema).write.parquet(s"$dir/embeddings.parquet")
+    dir
+  }
+
+  test("a ragged embedding corpus is refused by name") {
+    val dir = corpus(Seq(Some(Seq(1f, 2f)), Some(Seq(3f, 4f)), Some(Seq(5f))))
+    val e = intercept[IllegalArgumentException](P.topComponent(spark, dir))
+    assert(e.getMessage.contains("ragged embedding corpus"), e.getMessage)
+  }
+
+  test("a NULL embedding is refused by name, not dropped from n") {
+    val dir = corpus(Seq(Some(Seq(1f, 2f)), Some(Seq(3f, 4f)), None))
+    val e = intercept[IllegalArgumentException](P.topComponent(spark, dir))
+    assert(e.getMessage.contains("NULL or empty embedding"), e.getMessage)
+    assert(e.getMessage.contains("1 row(s)"), e.getMessage)
   }
 }

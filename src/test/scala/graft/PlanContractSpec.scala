@@ -11,7 +11,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
 
 /** The ENFORCED physical-plan contract over every registered query
-  * (VERDICT r08 #1): `docs/PLANS.md` hand-audits the plans, and an
+  * (VERDICT r08 #1): `graft.Explain` dumps plans for a hand audit, and an
   * r03-era spec pinned q35 only — this spec generalizes that check so
   * a future edit that silently regresses a join strategy (a data×data
   * cartesian, a nested-loop pair scan, a simple scan predicate that
