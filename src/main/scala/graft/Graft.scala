@@ -8,11 +8,12 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * operation is a declarative DataFrame transform registered in
   * [[SparkEntry]] with a DuckDB differential oracle.
   *
-  * Session setup: `SparkSession.builder.config("spark.sql.extensions",
-  * "graft.plans.GraftExtensions")` injects the native function
-  * (`graft_dot`), the dot-product rewrite rule, and the as-of join
-  * strategy; each entry point below also self-registers at runtime, so
-  * the extension config is optional.
+  * Session setup is required, once per session: build it with
+  * `SparkSession.builder.config("spark.sql.extensions",
+  * "graft.plans.GraftExtensions")` or call [[registerFunctions]] on it.
+  * Either installs the native functions (`graft_dot`, ...), the
+  * optimizer rules and the as-of join strategy; no entry point below
+  * sets anything up on the session it is given.
   */
 object Graft {
 
@@ -46,9 +47,10 @@ object Graft {
     plans.AsofJoin.asofJoin(left, right, leftKeys, rightKeys,
       leftTime, rightTime, toleranceMicros, direction)
 
-  /** Register graft's native SQL functions (`graft_dot`) on a session. */
+  /** Install graft's session setup on a running session (idempotent;
+    * skips what the extension config already injected). */
   def registerFunctions(spark: SparkSession): Unit =
-    plans.GraftFunctions.register(spark)
+    plans.GraftExtensions.install(spark)
 
   // ---- LLM-data-pipeline operators (over a `documents`-shaped dir) ----
 

@@ -47,7 +47,6 @@ object AnnIncremental {
     * centroids). Exposed for the spec's independent argmax pin. */
   private[graft] def baseCentroids(spark: SparkSession,
       dir: String): DataFrame = {
-    graft.plans.GraftFunctions.register(spark)
     val base = Tables.embeddings(spark, dir)
       .filter(col("vec_id") % DeltaMod =!= DeltaResidue)
       .select(col("vec_id"), col("embedding"),
@@ -66,7 +65,6 @@ object AnnIncremental {
   private[graft] def mergedAssignment(spark: SparkSession,
       dir: String): DataFrame =
     graft.sources.DfCache.df(spark, s"ann_incr_assigned|$dir") {
-      graft.plans.GraftFunctions.register(spark)
       val all = Tables.embeddings(spark, dir)
         .select(col("vec_id"), col("embedding"),
           DedupEmbedding.normExpr.as("nrm"))
@@ -84,7 +82,6 @@ object AnnIncremental {
 
   private[graft] def incrementalTopK(spark: SparkSession,
       dir: String): DataFrame = {
-    graft.plans.GraftFunctions.register(spark)
     val all = Tables.embeddings(spark, dir)
       .select(col("vec_id"), col("embedding"),
         DedupEmbedding.normExpr.as("nrm"))

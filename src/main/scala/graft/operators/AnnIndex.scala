@@ -69,7 +69,6 @@ object AnnIndex {
   /** Cell count of the (cached) IVF quantizer — exposed for the
     * ProbeSweep dev tool so sweeps report probe FRACTION honestly. */
   private[graft] def ivfCellCount(spark: SparkSession, dir: String): Long = {
-    graft.plans.GraftFunctions.register(spark)
     val all = Tables.embeddings(spark, dir)
       .select(col("vec_id"), col("embedding"), DedupEmbedding.normExpr.as("nrm"))
     graft.sources.DfCache.value(spark, s"ivf_ncells|$dir")(
@@ -161,7 +160,6 @@ object AnnIndex {
     * files. */
   def ivfTopK(spark: SparkSession, dir: String,
       nprobeOverride: Option[Int] = None): DataFrame = {
-    graft.plans.GraftFunctions.register(spark)
     val all = Tables.embeddings(spark, dir)
       .select(col("vec_id"), col("embedding"), DedupEmbedding.normExpr.as("nrm"))
     val centroids = ivfCentroids(spark, dir, all)
@@ -312,7 +310,6 @@ object AnnIndex {
     * Raw-vector I/O drops from O(Q x N) (q36 brute) to
     * O(Q x [[PqShortlist]]). */
   def pqTopK(spark: SparkSession, dir: String): DataFrame = {
-    graft.plans.GraftFunctions.register(spark)
     val dim = embeddingDim(spark, dir)
     if (dim % PqM != 0)
       throw new IllegalStateException(
@@ -380,7 +377,6 @@ object AnnIndex {
     * is exactly the budget that pays for wider probes. */
   def ivfPqTopK(spark: SparkSession, dir: String,
       nprobeOverride: Option[Int] = None): DataFrame = {
-    graft.plans.GraftFunctions.register(spark)
     val dim = embeddingDim(spark, dir)
     if (dim % PqM != 0)
       throw new IllegalStateException(

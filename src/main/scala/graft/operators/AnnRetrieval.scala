@@ -50,7 +50,6 @@ object AnnRetrieval {
     * SemDeDup paper's cluster-then-pairwise shape, never corpus^2. */
   private[graft] def semanticDrops(spark: SparkSession, dir: String)
       : DataFrame = {
-    graft.plans.GraftFunctions.register(spark)
     val all = Tables.embeddings(spark, dir)
       .select(col("vec_id"), col("embedding"), DedupEmbedding.normExpr.as("nrm"))
     val centroids = ivfCentroids(spark, dir, all)
@@ -153,7 +152,6 @@ object AnnRetrieval {
     * (a quarter with MRL-trained embeddings at 16 dims);
     * cost O(Q x N x TruncDims) + O(Q x TruncShortlist x dim). */
   def truncatedTopK(spark: SparkSession, dir: String): DataFrame = {
-    graft.plans.GraftFunctions.register(spark)
     // per-vector prefix norms are computed ONCE here, not inside the
     // Q x N shortlist projection (code-review r04: the inline form
     // evaluated three dots + two sqrts per pair)
@@ -246,7 +244,6 @@ object AnnRetrieval {
     * join — corpus cost is the two arm scans, both already linear and
     * shuffle-minimal; nothing about fusion itself grows with N. */
   def q120HybridRrf(spark: SparkSession, dir: String): DataFrame = {
-    graft.plans.GraftFunctions.register(spark)
     val lex = TextOps.q96Bm25(spark, dir)
       .select(col("doc_id"), col("rank").as("lex_rank"))
     val q = Tables.embeddings(spark, dir)

@@ -98,12 +98,15 @@ object Breadth {
 
   /** q19 — GROUPING SETS (A6) via Spark SQL. */
   def q19GroupingSets(spark: SparkSession, dir: String): DataFrame = {
-    Tables.orders(spark, dir).createOrReplaceTempView("graft_orders_v")
+    // one view name per dir: overlapping calls on different dirs must
+    // not resolve each other's view
+    val view = s"graft_orders_v_${Tables.nameTag(dir)}"
+    Tables.orders(spark, dir).createOrReplaceTempView(view)
     spark.sql(
-      """SELECT coalesce(year(o_orderdate), -1) AS sale_year,
+      s"""SELECT coalesce(year(o_orderdate), -1) AS sale_year,
         |       coalesce(quarter(o_orderdate), -1) AS sale_quarter,
         |       round(sum(o_totalprice), 2) AS total_price
-        |FROM graft_orders_v
+        |FROM $view
         |GROUP BY GROUPING SETS ((year(o_orderdate)), (quarter(o_orderdate)), ())
         |ORDER BY sale_year, sale_quarter""".stripMargin)
   }

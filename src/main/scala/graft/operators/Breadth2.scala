@@ -265,14 +265,15 @@ object Breadth2 {
     * whose single-row result broadcasts into the filter — no per-row
     * re-evaluation. */
   def q77ScalarSubquery(spark: SparkSession, dir: String): DataFrame = {
-    Tables.orders(spark, dir).createOrReplaceTempView("graft_orders_sq")
+    val view = s"graft_orders_sq_${Tables.nameTag(dir)}"
+    Tables.orders(spark, dir).createOrReplaceTempView(view)
     spark.sql(
-      """SELECT CAST(year(o_orderdate) AS INT) AS sale_year,
+      s"""SELECT CAST(year(o_orderdate) AS INT) AS sale_year,
         |       CAST(quarter(o_orderdate) AS INT) AS sale_quarter,
         |       count(*) AS n_big_orders,
         |       round(sum(o_totalprice), 2) AS total_price
-        |FROM graft_orders_sq
-        |WHERE o_totalprice > (SELECT avg(o_totalprice) FROM graft_orders_sq)
+        |FROM $view
+        |WHERE o_totalprice > (SELECT avg(o_totalprice) FROM $view)
         |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin)
   }
 

@@ -288,7 +288,6 @@ object Breadth3 {
     * across partitions/days, answering point frequency queries without
     * rescanning the corpus. */
   def q92CountMin(spark: SparkSession, dir: String): DataFrame = {
-    graft.plans.GraftFunctions.register(spark)
     val ev = Tables.events(spark, dir)
     val eps = 0.001
     val sketch = graft.sources.DfCache.value(spark, s"cms_event_type|$dir") {

@@ -316,7 +316,6 @@ object Breadth5 {
     * integer differences; each pair's ratio is ONE double division
     * micro-quantized before the min/max/mean folds. */
   def q354JlDistortion(spark: SparkSession, dir: String): DataFrame = {
-    graft.plans.GraftFunctions.register(spark)
     val dim = Similarity.embeddingDim(spark, dir)
     val planes = DedupEmbedding.portablePlanes(dim).take(JlDim)
     val prepped = Tables.embeddings(spark, dir)

@@ -157,7 +157,6 @@ object Curation {
     * set. Bit-identical to the exact join — the bloom only prunes. */
   private[operators] def bloomContaminatedIds(spark: SparkSession,
       bench: DataFrame, corpusGrams: DataFrame): DataFrame = {
-    graft.plans.GraftFunctions.register(spark)
     val benchHashes = bench.select(xxhash64(col("gram")).as("h"))
     // expectedNumItems sizes the bit array; the exact count is one tiny
     // job over the benchmark side (never the corpus side)
@@ -324,7 +323,6 @@ object Curation {
     * exactness (kernel == independent Scala reference, insertion
     * re-alignment) is spec-checked in GearCdcSpec. */
   def q125CdcGear(spark: SparkSession, dir: String): DataFrame = {
-    graft.plans.GraftFunctions.register(spark)
     val docs = Tables.documents(spark, dir)
     // gear boundaries are BYTE offsets: slice the UTF-8 bytes, not the
     // string — char-based substring would silently shift every chunk

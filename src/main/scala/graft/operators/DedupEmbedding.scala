@@ -115,7 +115,6 @@ object DedupEmbedding {
     * MSB-first. One narrow shuffle-free projection of the embeddings
     * scan; cached per (session, dir) because both join sides read it. */
   private[operators] def embeddingBands(spark: SparkSession, dir: String): DataFrame = {
-    graft.plans.GraftFunctions.register(spark)
     val dim = Similarity.embeddingDim(spark, dir)
     graft.sources.DfCache.df(spark, s"emb_bands|$dir")(
       Tables.embeddings(spark, dir)
@@ -160,7 +159,6 @@ object DedupEmbedding {
     * planes), so the registered result is still hash-verified end to
     * end. */
   def q35DedupEmbedding(spark: SparkSession, dir: String): DataFrame = {
-    graft.plans.GraftFunctions.register(spark)
     val raw = embeddingBands(spark, dir)
     // hot-bucket guard (see embHotBucketCap): the bucket-size table is
     // tiny (<= band space), so the exclusion join broadcasts. The count
@@ -200,7 +198,6 @@ object DedupEmbedding {
     * textbook scale-killer (VERDICT.md r03). */
   private[graft] def bruteEmbeddingPairs(spark: SparkSession, dir: String)
       : DataFrame = {
-    graft.plans.GraftFunctions.register(spark)
     val e = Tables.embeddings(spark, dir)
       .select(col("vec_id"), col("embedding"), normExpr.as("nrm"))
     val a = e.select(col("vec_id").as("id1"), col("embedding").as("ea"),

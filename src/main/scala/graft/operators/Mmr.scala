@@ -140,7 +140,6 @@ object Mmr {
     * one shuffle-free projection of the embeddings scan, cached
     * because the probe and corpus sides both read it. */
   private def mmrBandTable(spark: SparkSession, dir: String): DataFrame = {
-    graft.plans.GraftFunctions.register(spark)
     val dim = Similarity.embeddingDim(spark, dir)
     val b = mmrBandBits(embCount(spark, dir))
     graft.sources.DfCache.df(spark, s"mmr_bands|$dir")(

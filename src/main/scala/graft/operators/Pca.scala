@@ -53,7 +53,6 @@ object Pca {
   private[graft] def topComponent(spark: SparkSession, dir: String)
       : TopComponent =
     DfCache.value(spark, s"pca_top|$dir") {
-      graft.plans.GraftFunctions.register(spark)
       val ex = DfCache.df(spark, s"pca_embeddings|$dir")(
         Tables.embeddings(spark, dir).select("embedding"))
       // ONE job yields n, dim AND the mean vector (was three: count,
@@ -130,7 +129,6 @@ object Pca {
     // total variance = E‖x−μ‖² — exact enough from the same passes
     val totalVar = {
       val ex = Tables.embeddings(spark, dir)
-      graft.plans.GraftFunctions.register(spark)
       val sumSq = ex.select(expr("graft_dot(embedding, embedding)").as("q"))
         .agg(sum(col("q"))).head().getDouble(0)
       sumSq / tc.n - tc.mean.map(x => x * x).sum

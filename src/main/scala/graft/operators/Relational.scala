@@ -171,10 +171,10 @@ object Relational {
     * union of two fact slices re-aggregated — load-order invariant. */
   def q09UnionBatches(spark: SparkSession, dir: String): DataFrame = {
     // the declared §4.3 optimizer stretch: the agg-through-union rule
-    // rewrites this exact shape into per-batch partial aggregates
-    // merged above the union (plan pinned in PushAggThroughUnionSpec;
-    // the oracle verifies semantics are unchanged)
-    graft.plans.PushAggThroughUnion.ensureRule(spark)
+    // (installed with the session, see GraftExtensions) rewrites this
+    // exact shape into per-batch partial aggregates merged above the
+    // union (plan pinned in PushAggThroughUnionSpec; the oracle
+    // verifies semantics are unchanged)
     val li = Tables.lineitem(spark, dir)
     val batch1 = li.filter(col("l_linenumber") <= 3)
     val batch2 = li.filter(col("l_linenumber") > 3)

@@ -113,7 +113,6 @@ object Similarity {
     * contracts compare against. */
   private[operators] def bruteRanked(spark: SparkSession, dir: String): DataFrame =
     graft.sources.DfCache.df(spark, s"ann_brute|$dir") {
-      graft.plans.GraftFunctions.register(spark)
       val scored = broadcast(queryVecs(spark, dir))
         .crossJoin(corpusVecs(spark, dir))
         .filter(col("qid") =!= col("cid"))
@@ -220,7 +219,6 @@ object Similarity {
   /** LSH-bucketed ANN top-k rows. Corpus is bucketed once by band value;
     * only same-bucket candidates are scored. */
   def lshTopK(spark: SparkSession, dir: String): DataFrame = {
-    graft.plans.GraftFunctions.register(spark)
     val dim = embeddingDim(spark, dir)
     val q = withProbeBands(
       onlyQueries(spark, dir, Tables.embeddings(spark, dir)), dim)

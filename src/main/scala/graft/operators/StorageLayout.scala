@@ -28,6 +28,19 @@ object StorageLayout {
   private def layoutRoot(dir: String, kind: String): String =
     s"/tmp/graft_layout/${dir.replaceAll("[^A-Za-z0-9.]+", "_")}/$kind"
 
+  /** A session for inspecting a bucketed-join plan (q134, q347) with AQE
+    * and broadcast off, so the assertion is about the bucket layout, not
+    * about runtime re-planning or a small-side broadcast that would
+    * vanish at real scale. It shares the catalog holding the bucketed
+    * tables, and the caller's session keeps its confs, so a concurrent
+    * client on it never plans with these two turned off. */
+  private def layoutInspector(spark: SparkSession): SparkSession = {
+    val s = spark.newSession()
+    s.conf.set("spark.sql.adaptive.enabled", "false")
+    s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    s
+  }
+
   /** Execute `df` and read one metric off its parquet scan. */
   private def scanMetric(df: DataFrame, metric: String): Long = {
     df.collect()
@@ -144,7 +157,6 @@ object StorageLayout {
     * layout and checked identical to q52's ivfTopK for that query —
     * the layout changes I/O, never answers. */
   def q133CellServing(spark: SparkSession, dir: String): DataFrame = {
-    graft.plans.GraftFunctions.register(spark)
     val root = layoutRoot(dir, "ivfcells")
     val all = Tables.embeddings(spark, dir)
       .select(col("vec_id"), col("embedding"),
@@ -221,7 +233,7 @@ object StorageLayout {
     * them through a merge with no network at all. */
   def q134BucketedJoin(spark: SparkSession, dir: String): DataFrame = {
     val root = layoutRoot(dir, "buckets")
-    val tag = dir.replaceAll("[^A-Za-z0-9]+", "_")
+    val tag = Tables.nameTag(dir)
     val ordT = s"graft_bucketed_orders_$tag"
     val liT = s"graft_bucketed_lineitem_$tag"
     graft.sources.DfCache.timedValue(spark, s"bucket_layout|$dir") {
@@ -236,35 +248,21 @@ object StorageLayout {
         .mode("overwrite").saveAsTable(liT)
       true
     }
-    def perOrder(): DataFrame =
-      spark.table(ordT)
-        .join(spark.table(liT), col("o_orderkey") === col("l_orderkey"))
+    def perOrder(s: SparkSession): DataFrame =
+      s.table(ordT)
+        .join(s.table(liT), col("o_orderkey") === col("l_orderkey"))
         .groupBy(col("o_orderkey"))
         .agg(count(lit(1)).as("n_items"),
           sum(round(col("l_extendedprice") * 100, 0).cast("long"))
             .as("cents"))
-    // inspect the plan with AQE + broadcast off, so the assertion is
-    // about the bucket layout, not about runtime re-planning or a
-    // small-side broadcast that would vanish at real scale
-    val (prevAqe, prevBc) = (
-      spark.conf.get("spark.sql.adaptive.enabled"),
-      spark.conf.get("spark.sql.autoBroadcastJoinThreshold"))
-    val (shuffles, mergeJoin) =
-      try {
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        val plan = perOrder().queryExecution.executedPlan
-        (plan.collect {
-          case e: org.apache.spark.sql.execution.exchange.ShuffleExchangeExec => e
-        }.size,
-          plan.collect {
-            case j: org.apache.spark.sql.execution.joins.SortMergeJoinExec => j
-          }.nonEmpty)
-      } finally {
-        spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevBc)
-      }
-    perOrder()
+    val plan = perOrder(layoutInspector(spark)).queryExecution.executedPlan
+    val shuffles = plan.collect {
+      case e: org.apache.spark.sql.execution.exchange.ShuffleExchangeExec => e
+    }.size
+    val mergeJoin = plan.collect {
+      case j: org.apache.spark.sql.execution.joins.SortMergeJoinExec => j
+    }.nonEmpty
+    perOrder(spark)
       .agg(count(lit(1)).as("n_orders"),
         sum(col("n_items")).as("n_items"),
         sum(col("cents")).as("revenue_cents"))
@@ -293,7 +291,7 @@ object StorageLayout {
     * never answers. */
   def q347DimBucketedJoin(spark: SparkSession, dir: String): DataFrame = {
     val root = layoutRoot(dir, "dimbuckets")
-    val tag = dir.replaceAll("[^A-Za-z0-9]+", "_")
+    val tag = Tables.nameTag(dir)
     val custT = s"graft_bucketed_customer_$tag"
     val ordT = s"graft_bucketed_orders_cust_$tag"
     graft.sources.DfCache.timedValue(spark, s"dim_bucket_layout|$dir") {
@@ -307,30 +305,18 @@ object StorageLayout {
         .mode("overwrite").saveAsTable(ordT)
       true
     }
-    def joined(): DataFrame =
-      spark.table(custT)
-        .join(spark.table(ordT), col("c_custkey") === col("o_custkey"))
-    val (prevAqe, prevBc) = (
-      spark.conf.get("spark.sql.adaptive.enabled"),
-      spark.conf.get("spark.sql.autoBroadcastJoinThreshold"))
-    val (joinSubtreeShuffles, mergeJoin) =
-      try {
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        val plan = joined().groupBy(col("c_mktsegment"))
-          .agg(count(lit(1)).as("n")).queryExecution.executedPlan
-        val joins = plan.collect {
-          case j: org.apache.spark.sql.execution.joins.SortMergeJoinExec => j
-        }
-        (joins.map(_.collect {
-          case e: org.apache.spark.sql.execution.exchange
-            .ShuffleExchangeExec => e
-        }.size).sum, joins.nonEmpty)
-      } finally {
-        spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevBc)
+    def joined(s: SparkSession): DataFrame =
+      s.table(custT)
+        .join(s.table(ordT), col("c_custkey") === col("o_custkey"))
+    val joins = joined(layoutInspector(spark)).groupBy(col("c_mktsegment"))
+      .agg(count(lit(1)).as("n")).queryExecution.executedPlan.collect {
+        case j: org.apache.spark.sql.execution.joins.SortMergeJoinExec => j
       }
-    joined()
+    val joinSubtreeShuffles = joins.map(_.collect {
+      case e: org.apache.spark.sql.execution.exchange.ShuffleExchangeExec => e
+    }.size).sum
+    val mergeJoin = joins.nonEmpty
+    joined(spark)
       .groupBy(col("c_mktsegment").as("segment"))
       .agg(countDistinct(col("c_custkey")).as("n_purchasing_customers"),
         count(lit(1)).as("n_orders"),

@@ -1,7 +1,7 @@
 package graft.plans
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.logical.{BinaryNode, LogicalPlan}
@@ -10,8 +10,8 @@ import org.apache.spark.sql.execution.{BinaryExecNode, SparkPlan, SparkStrategy}
 
 /** Native AS-OF JOIN — the whole-operator custom-plan path (SURVEY.md
   * §4.3 / builder mandate option (c)): a `LogicalPlan` node, a
-  * `SparkStrategy`, and a `SparkPlan` registered via
-  * [[GraftExtensions]] / [[AsofJoin.ensureStrategy]].
+  * `SparkStrategy`, and a `SparkPlan`; the strategy is installed with
+  * the session by [[GraftExtensions]].
   *
   * Semantics (left-outer as-of): for every left row, the single right
   * row with equal keys and the greatest right-time <= left-time
@@ -66,7 +66,10 @@ object AsofJoin {
       case other => throw new IllegalArgumentException(
         s"asofJoin: direction must be 'backward' or 'forward', got '$other'")
     }
-    ensureStrategy(spark)
+    require(GraftExtensions.installed(spark, AsofJoinStrategy),
+      "asofJoin: AsofJoinStrategy is not installed on this session; build " +
+        "it with spark.sql.extensions=graft.plans.GraftExtensions or call " +
+        "graft.Graft.registerFunctions(spark) once")
     val lPlan = left.queryExecution.analyzed
     val rPlan = right.queryExecution.analyzed
     // honor the session's name-resolution semantics (spark.sql.caseSensitive)
@@ -108,15 +111,6 @@ object AsofJoin {
     val node = AsofJoin(lPlan, rPlan, lk, rk, lt, rt, toleranceMicros, forward)
     org.apache.spark.sql.graft.Bridge.ofRows(spark, node)
   }
-
-  /** Idempotently add the planner strategy to a session (the
-    * `spark.sql.extensions=graft.plans.GraftExtensions` route injects it
-    * at session build instead). */
-  def ensureStrategy(spark: SparkSession): Unit =
-    if (!spark.experimental.extraStrategies.contains(AsofJoinStrategy)) {
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ AsofJoinStrategy
-    }
 }
 
 /** Plans the logical [[AsofJoin]] into [[AsofJoinExec]]. */

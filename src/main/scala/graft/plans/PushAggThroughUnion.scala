@@ -1,6 +1,5 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.aggregate._
 import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, LogicalPlan, Union}
@@ -39,8 +38,8 @@ import org.apache.spark.sql.types.{DecimalType, LongType}
   * (sum of per-batch sums); Spark's own partial aggregation already
   * does exactly that, so the rewrite introduces no NEW nondeterminism
   * class — and the repo-wide money convention (exact cents / rounded
-  * display) is what actually pins the hash-compare. Registered via
-  * [[GraftExtensions]] or [[PushAggThroughUnion.ensureRule]].
+  * display) is what actually pins the hash-compare. Installed with the
+  * session by [[GraftExtensions]].
   */
 object PushAggThroughUnion extends Rule[LogicalPlan] {
 
@@ -179,13 +178,4 @@ object PushAggThroughUnion extends Rule[LogicalPlan] {
       None
     else Some(rebuilt)
   }
-
-  /** Idempotently add this rule to a session (the
-    * `spark.sql.extensions=graft.plans.GraftExtensions` route injects
-    * it at session build instead). */
-  def ensureRule(spark: SparkSession): Unit =
-    if (!spark.experimental.extraOptimizations.contains(PushAggThroughUnion)) {
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ PushAggThroughUnion
-    }
 }

@@ -18,8 +18,8 @@ import org.apache.spark.sql.types.{ArrayType, DoubleType, FloatType}
   * purpose: for two different arrays, `zip_with` pads the shorter side
   * with nulls so the lambda sum becomes NULL on ragged input, while
   * VectorDot uses min-length — only the self-dot is unconditionally
-  * semantics-preserving. Inject via
-  * `spark.experimental.extraOptimizations` or [[GraftExtensions]].
+  * semantics-preserving. Installed with the session by
+  * [[GraftExtensions]].
   */
 object RewriteDotProduct extends Rule[LogicalPlan] {
 

@@ -5,9 +5,12 @@ import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, BloomFilterMightContain, Expression, ExpressionInfo}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.SparkSessionExtensions
+import org.apache.spark.sql.execution.SparkStrategy
 
 /** Native dot product over numeric array columns, with whole-stage
   * codegen (SURVEY.md §4.3: custom `Expression` as the perf upgrade over
@@ -214,10 +217,8 @@ case class VectorSignBits(left: Expression, right: Expression)
     copy(left = newLeft, right = newRight)
 }
 
-/** Registration for the graft native functions: usable either via
-  * `spark.sql.extensions=graft.plans.GraftExtensions` or the idempotent
-  * runtime [[GraftFunctions.register]] that every query entry calls.
-  * Both paths read the one [[GraftFunctions.functions]] list. */
+/** The graft native functions. [[GraftExtensions]] sets them up on a
+  * session together with graft's optimizer rules and planner strategy. */
 object GraftFunctions {
   /** A native function: its SQL name, the expression class
     * `ExpressionInfo` reports, and how to build it from its arguments. */
@@ -242,15 +243,6 @@ object GraftFunctions {
       children => CmsEstimateCount(children(0), children(1))),
     Native("graft_gear_ends", classOf[GearChunkEnds],
       children => GearChunkEnds(children(0))))
-
-  def register(spark: SparkSession): Unit = {
-    val registry = spark.sessionState.functionRegistry
-    functions.foreach { f =>
-      if (!registry.functionExists(FunctionIdentifier(f.name))) {
-        registry.createOrReplaceTempFunction(f.name, f.build, "built-in")
-      }
-    }
-  }
 }
 
 /** `SparkSessionExtensions` injector (config
@@ -261,8 +253,42 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       extensions.injectFunction((FunctionIdentifier(f.name),
         new ExpressionInfo(f.expression.getName, f.name), f.build))
     }
-    extensions.injectOptimizerRule(_ => RewriteDotProduct)
-    extensions.injectOptimizerRule(_ => PushAggThroughUnion)
-    extensions.injectPlannerStrategy(_ => AsofJoinStrategy)
+    GraftExtensions.optimizerRules.foreach(r =>
+      extensions.injectOptimizerRule(_ => r))
+    GraftExtensions.strategies.foreach(s =>
+      extensions.injectPlannerStrategy(_ => s))
   }
+}
+
+/** Graft's session setup, in one place: the native functions, the
+  * optimizer rules and the planner strategies. A session gets them once,
+  * when it is made — from the extension config at build time or from
+  * [[install]] on a running session — and no query body touches session
+  * setup, so a query's plan never depends on which queries ran before
+  * it. Both routes read the same three lists. */
+object GraftExtensions {
+  val optimizerRules: Seq[Rule[LogicalPlan]] =
+    Seq(RewriteDotProduct, PushAggThroughUnion)
+  val strategies: Seq[SparkStrategy] = Seq(AsofJoinStrategy)
+
+  /** Idempotently add the native functions, optimizer rules and planner
+    * strategies to `spark`, skipping any the extension config already
+    * injected, so either route, or both, yields one copy of each. */
+  def install(spark: SparkSession): Unit = synchronized {
+    val registry = spark.sessionState.functionRegistry
+    GraftFunctions.functions.foreach { f =>
+      if (!registry.functionExists(FunctionIdentifier(f.name))) {
+        registry.createOrReplaceTempFunction(f.name, f.build, "built-in")
+      }
+    }
+    val exp = spark.experimental
+    val injected = spark.sessionState.optimizer.extendedOperatorOptimizationRules
+    exp.extraOptimizations ++= optimizerRules.filterNot(r =>
+      injected.contains(r) || exp.extraOptimizations.contains(r))
+    exp.extraStrategies ++= strategies.filterNot(installed(spark, _))
+  }
+
+  /** Whether `strategy` plans in `spark`, by either route. */
+  def installed(spark: SparkSession, strategy: SparkStrategy): Boolean =
+    spark.sessionState.planner.strategies.contains(strategy)
 }

@@ -41,6 +41,16 @@ private[graft] object DfCache {
   // Bench's per-query sum-subtraction is exact
   // (DfCacheNestingSpec pins this).
   private val buildTimes = TrieMap.empty[(String, String), Double]
+  // set on this thread while a timed window is open (df's eager count()
+  // under build timing, or a timedValue build): a timed build starting
+  // inside one fails instead of double-counting in Bench's subtraction
+  private val inTimedBuild = ThreadLocal.withInitial[Boolean](() => false)
+  private def timedWindow[T](key: String)(body: => T): T = {
+    require(!inTimedBuild.get,
+      s"DfCache: timed build '$key' started inside another timed build")
+    inTimedBuild.set(true)
+    try body finally inTimedBuild.set(false)
+  }
   @volatile private var timeBuilds = false
   private[graft] def enableBuildTiming(): Unit = { timeBuilds = true }
   // test hygiene only (DfCacheNestingSpec): Bench never turns it off
@@ -81,7 +91,7 @@ private[graft] object DfCache {
       case None => lockFor(k).synchronized {
         dfs.getOrElseUpdate(k, {
           val persisted = build.persist(StorageLevel.MEMORY_AND_DISK)
-          if (timeBuilds) {
+          if (timeBuilds) timedWindow(key) {
             val t0 = System.nanoTime()
             persisted.count()
             buildTimes.put(k, (System.nanoTime() - t0) / 1e9)
@@ -110,12 +120,13 @@ private[graft] object DfCache {
     * whose build is real shared work — the q132/q133/q134/q347 layout
     * writes, the q137/q149 BPE merge loop — so consumer query rows
     * measure the scan/join they exist to measure instead of absorbing
-    * whichever rep ran the one-time build. Callers must not run other
-    * DfCache builds INSIDE the gated block (the timed windows would
-    * nest and Bench's per-query sum-subtraction double-counts): every
-    * current caller only writes from plain table reads or from cached
-    * frames built BEFORE the gate. Exactly [[value]] when timing is
-    * off (Verify, tests). */
+    * whichever rep ran the one-time build. A timed build (a timed df
+    * materialization or another timedValue) started INSIDE the gated
+    * block fails with a named `require`, timing on or off: the windows
+    * would nest and Bench's per-query sum-subtraction double-count.
+    * Callers write from plain table reads or from cached frames built
+    * BEFORE the gate. Records nothing when timing is off (Verify,
+    * tests). */
   def timedValue[T](spark: SparkSession, key: String)(build: => T): T = {
     val sid = org.apache.spark.sql.graft.SessionIds.uuid(spark)
     hookEviction(spark)
@@ -123,13 +134,11 @@ private[graft] object DfCache {
     vals.get(k) match {
       case Some(cached) => cached.asInstanceOf[T]
       case None => lockFor(k).synchronized {
-        vals.getOrElseUpdate(k, {
-          if (timeBuilds) {
-            val t0 = System.nanoTime()
-            val v = build
-            buildTimes.put(k, (System.nanoTime() - t0) / 1e9)
-            v
-          } else build
+        vals.getOrElseUpdate(k, timedWindow(key) {
+          val t0 = System.nanoTime()
+          val v = build
+          if (timeBuilds) buildTimes.put(k, (System.nanoTime() - t0) / 1e9)
+          v
         }).asInstanceOf[T]
       }
     }

@@ -114,6 +114,10 @@ object Tables {
     StructField("embedding", ArrayType(FloatType)),
     StructField("label", IntegerType)))
 
+  /** `dir` as an identifier suffix, for catalog and temp-view names
+    * that must not collide between calls on different dirs. */
+  def nameTag(dir: String): String = dir.replaceAll("[^A-Za-z0-9]+", "_")
+
   private def read(spark: SparkSession, dir: String, name: String,
                    schema: StructType): DataFrame =
     spark.read.schema(schema).parquet(s"$dir/$name.parquet")

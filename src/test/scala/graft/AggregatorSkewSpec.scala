@@ -57,7 +57,7 @@ class AggregatorSkewSpec extends SparkTestBase {
     new graft.plans.GraftExtensions().apply(ext)
     // runtime registration path + SQL evaluation + null/length semantics
     val s2 = spark.newSession()
-    graft.plans.GraftFunctions.register(s2)
+    Graft.registerFunctions(s2)
     val r = s2.sql(
       """SELECT graft_dot(array(1.0D, 2.0D), array(3.0D, 4.0D)) AS d,
         |       graft_dot(array(CAST(1.0 AS FLOAT)), array(2.0D, 9.0D)) AS mixed,

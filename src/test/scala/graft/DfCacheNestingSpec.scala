@@ -47,4 +47,20 @@ class DfCacheNestingSpec extends SparkTestBase {
       DfCache.drainBuildTimes(spark)
     }
   }
+
+  test("a timed build started inside a timedValue build fails with a " +
+      "named require, and the failed gate caches nothing") {
+    try {
+      val err = intercept[IllegalArgumentException] {
+        DfCache.timedValue(spark, "nestspec_gate|t") {
+          DfCache.timedValue(spark, "nestspec_inner_gate|t")(1)
+        }
+      }
+      assert(err.getMessage.contains("started inside another timed build"))
+      // the flag is cleared on the way out: the same gates built one
+      // after the other on this thread succeed
+      assert(DfCache.timedValue(spark, "nestspec_inner_gate|t")(1) == 1)
+      assert(DfCache.timedValue(spark, "nestspec_gate|t")(2) == 2)
+    } finally DfCache.clear(spark)
+  }
 }

@@ -40,13 +40,8 @@ class GearCdcSpec extends SparkTestBase {
     scan(0, 0, 0L, Nil)
   }
 
-  private def registered = {
-    graft.plans.GraftFunctions.register(spark)
-    spark
-  }
-
   test("kernel boundaries == independent scala reference on real docs") {
-    val sess = registered
+    val sess = spark
     val got = Tables.documents(sess, sf)
       .selectExpr("doc_id", "text", "graft_gear_ends(text) AS ends")
       .collect()
@@ -86,7 +81,7 @@ class GearCdcSpec extends SparkTestBase {
   }
 
   test("null text -> NULL ends; empty text -> empty array (both paths)") {
-    val sess = registered
+    val sess = spark
     import sess.implicits._
     val rows = Seq(Option("key agg row scan slow fast table value"),
         Option(""), Option.empty[String])
@@ -102,7 +97,7 @@ class GearCdcSpec extends SparkTestBase {
 
   test("byte-oriented slicing keeps multibyte text exact: twin docs " +
       "with non-ASCII chars are fully chunk-shared") {
-    val sess = registered
+    val sess = spark
     import sess.implicits._
     // 300+ bytes with multibyte chars early, two identical copies plus
     // a distinct third doc; byte-accurate slicing must mark the twins

@@ -70,7 +70,8 @@ class GraphSpec extends SparkTestBase {
     val nodes = edges.select(col("src").as("node")).distinct()
     val outdeg = edges.groupBy(col("src").as("node"))
       .agg(count(lit(1)).as("d"))
-    val ranks = Graph.pagerankRanks(nodes, edges, outdeg, 5L).collect()
+    val edgesD = edges.join(outdeg.withColumnRenamed("node", "src"), Seq("src"))
+    val ranks = Graph.pagerankRanks(nodes, edgesD, outdeg, 5L).collect()
     assert(ranks.length == 5)
     assert(ranks.forall(_.getBoolean(2)), "fixed point must report converged")
     ranks.foreach(r => assert(math.abs(r.getDouble(1) - 0.2) < 1e-12,

@@ -9,11 +9,6 @@ import org.apache.spark.sql.functions._
   * rewrite (non-decomposable aggs, distinct, already-aggregated arms). */
 class PushAggThroughUnionSpec extends SparkTestBase {
 
-  private def ensured() = {
-    graft.plans.PushAggThroughUnion.ensureRule(spark)
-    spark
-  }
-
   private def unionAggPlan(df: org.apache.spark.sql.DataFrame): LogicalPlan =
     df.queryExecution.optimizedPlan
 
@@ -25,7 +20,7 @@ class PushAggThroughUnionSpec extends SparkTestBase {
 
   test("q09's shape rewrites to per-batch partial aggregates under " +
       "the union and keeps identical results") {
-    val sess = ensured()
+    val sess = spark
     val li = graft.sources.Tables.lineitem(sess, sf)
     def q09() = li.filter(col("l_linenumber") <= 3)
       .unionByName(li.filter(col("l_linenumber") > 3))
@@ -58,7 +53,7 @@ class PushAggThroughUnionSpec extends SparkTestBase {
   }
 
   test("sum/count/min/max decompose exactly; count never goes null") {
-    val sess = ensured()
+    val sess = spark
     import sess.implicits._
     val a = pq("a", Seq((1, 10.0), (1, 5.0), (2, 1.0)))
     val b = pq("b", Seq((1, 2.0), (3, 7.0)))
@@ -76,7 +71,7 @@ class PushAggThroughUnionSpec extends SparkTestBase {
   }
 
   test("non-decomposable and distinct aggregates are left untouched") {
-    val sess = ensured()
+    val sess = spark
     import sess.implicits._
     val a = pq("na", Seq((1, 10.0), (2, 1.0)))
     val b = pq("nb", Seq((1, 2.0)))
@@ -92,7 +87,7 @@ class PushAggThroughUnionSpec extends SparkTestBase {
   }
 
   test("global (no grouping) aggregation over a union also decomposes") {
-    val sess = ensured()
+    val sess = spark
     import sess.implicits._
     val a = pq("ga", Seq((0, 1.0), (0, 2.0)))
     val b = pq("gb", Seq((0, 4.0)))

@@ -8,16 +8,11 @@ import org.apache.spark.sql.functions._
   * paths (codegen and interpreted), including null propagation. */
 class SignBitsSpec extends SparkTestBase {
 
-  private def registered = {
-    graft.plans.GraftFunctions.register(spark)
-    spark
-  }
-
   private val lambdaBits =
     "transform(planes, p -> IF(graft_dot(p, vec) > 0D, 1L, 0L))"
 
   test("native bits == lambda bits on real embeddings (double planes)") {
-    val sess = registered
+    val sess = spark
     val planes = graft.operators.DedupEmbedding.portablePlanes(64)
     val base = graft.sources.Tables.embeddings(sess, sf)
       .select(col("vec_id"),
@@ -35,7 +30,7 @@ class SignBitsSpec extends SparkTestBase {
   }
 
   test("float vectors accepted, zero dot maps to bit 0") {
-    val sess = registered
+    val sess = spark
     import sess.implicits._
     val df = Seq((1L, Seq(0.0f, 0.0f)), (2L, Seq(1.0f, -2.0f)))
       .toDF("id", "vec")
@@ -51,7 +46,7 @@ class SignBitsSpec extends SparkTestBase {
   }
 
   test("null vector element propagates to NULL (both eval paths)") {
-    val sess = registered
+    val sess = spark
     import sess.implicits._
     val rows = Seq(Seq[java.lang.Double](1.0, null), Seq[java.lang.Double](1.0, 2.0))
       .toDF("vec")

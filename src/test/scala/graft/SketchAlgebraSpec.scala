@@ -34,7 +34,6 @@ class SketchAlgebraSpec extends SparkTestBase {
   test("graft_cms_estimate (codegen CMS probe) equals direct " +
       "estimateCount and propagates null keys") {
     import org.apache.spark.sql.functions._
-    graft.plans.GraftFunctions.register(spark)
     val cms = org.apache.spark.util.sketch.CountMinSketch.create(0.001, 0.99, 42)
     Seq("view", "view", "purchase", "view", "cart").foreach(cms.addString)
     val bytes = {

@@ -15,6 +15,7 @@ object SparkTestSession {
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
+    graft.plans.GraftExtensions.install(s)
     s
   }
 }
