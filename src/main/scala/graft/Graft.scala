@@ -13,7 +13,12 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * "graft.plans.GraftExtensions")` or call [[registerFunctions]] on it.
   * Either installs the native functions (`graft_dot`, ...), the
   * optimizer rules and the as-of join strategy; no entry point below
-  * sets anything up on the session it is given.
+  * sets anything up on the session it is given. Also set
+  * `spark.sql.codegen.cache.maxEntries` to
+  * [[DevSession.CodegenCacheEntries]] on the builder: it is a static
+  * conf, read before any query runs, so [[registerFunctions]] cannot
+  * set it, and at Spark's default of 100 a mix of more than a few
+  * queries recompiles its generated code on every run (docs/SCALE.md).
   */
 object Graft {
 

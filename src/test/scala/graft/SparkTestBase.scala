@@ -13,6 +13,8 @@ object SparkTestSession {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      .config("spark.sql.codegen.cache.maxEntries",
+        DevSession.CodegenCacheEntries.toLong)
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     graft.plans.GraftExtensions.install(s)
