@@ -4,7 +4,7 @@
 Usage: python3 scripts/bench_summary.py [bench_out.json] [prev.json]
 
 Dev-only (driver-side python). The sidecar is written by `graft.Bench`
-(best-of-N over SPARK_GRAFT_BENCH_REPS reps, default 2, after a
+(best-of-N over SPARK_GRAFT_BENCH_REPS reps, default 3, after a
 sf0.001 warmup pass); the driver's BENCH_r{N}.json keeps only a
 truncated stdout tail, so docs/bench/r{N}.json + bench_out.json are
 the durable artifacts. Every number quoted in README.md §Status must

@@ -354,6 +354,8 @@ object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val out = args.lift(1).getOrElse("docs/PLANS.md")
+    // an audited name that is no longer registered fails the run
+    val audited = SparkEntry.select(Audited)
     val spark = DevSession.make()
     spark.sparkContext.setLogLevel("ERROR")
     val sb = new StringBuilder
@@ -371,13 +373,10 @@ object Explain {
       "tables, enum-keyed spines), any GLOBAL window not in the documented profile-bounded `GlobalWindowAllow` grants, and any pushable-shaped scan " +
       "predicate that fails source translation. This file remains the " +
       "full narrative audit; the spec is the tripwire.\n")
-    Audited.foreach { name =>
-      SparkEntry.queries.get(name).foreach { fn =>
-        val df = fn(spark, sfDir)
-        val plan = df.queryExecution.explainString(
-          org.apache.spark.sql.execution.FormattedMode)
-        sb.append(s"\n## $name\n\n```\n$plan```\n")
-      }
+    audited.foreach { q =>
+      val plan = q.run(spark, sfDir).queryExecution.explainString(
+        org.apache.spark.sql.execution.FormattedMode)
+      sb.append(s"\n## ${q.name}\n\n```\n$plan```\n")
     }
     // q389 reads its flag spine through a localCheckpoint (measured
     // r15 fix), which cuts the gate→dedup→decontamination lineage out

@@ -3,15 +3,23 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Dev tool: build a pseudo-sf1 dataset (10x sf0.1, key-shifted copies)
-  * under /tmp and time representative queries on it, to measure how the
-  * operator plans scale with data volume (docs/SCALE.md). Correctness at
-  * this size is NOT oracle-checked (DuckDB would take minutes); the same
-  * plans are bit-verified at sf0.01/sf0.1.
+/** Dev tool: build the scaling datasets under /tmp from sf0.1, and run
+  * the one-off scaling recipes that are not registered queries
+  * (docs/SCALE.md). Correctness at these sizes is NOT oracle-checked
+  * (DuckDB would take minutes); the same plans are bit-verified at
+  * sf0.01/sf0.1.
   *
-  * Usage: runMain graft.ScaleSmoke [build|run|all] [queryName ...]
-  * (query-name filters restrict the run phase — the recipe passes at the
-  * end only run when no filter is given)
+  * Timing a registered query at scale is a Bench run on the built dir,
+  * e.g. `SPARK_GRAFT_SF_DIR=/tmp/graft_sfx1 SPARK_GRAFT_BENCH_ONLY=...`,
+  * compared with the same subset on sf0.1 (docs/SCALE.md "Measured
+  * scaling" keeps the subsets per axis).
+  *
+  * Usage: runMain graft.ScaleSmoke <build|dimbuild|usrbuild|recipes>
+  *   build     pseudo-sf1: facts 10x (key-shifted copies), dims as-is
+  *   dimbuild  customer/part 10x, facts re-keyed to the dim copies
+  *   usrbuild  events 10x as new users
+  *   recipes   (after build + dimbuild) q34/q35 after exact dedup on
+  *             pseudo-sf1; q200/q203 candidate-pair mass, sf0.1 vs sfdim
   */
 object ScaleSmoke {
   private val SrcDir = "/root/testdata/sf0.1"
@@ -115,345 +123,86 @@ object ScaleSmoke {
     println(s"[scale] built $UsrDir")
   }
 
+  private def noop(df: DataFrame): Unit =
+    df.write.format("noop").mode("overwrite").save()
+
+  /** Scaling measurements that are not registered queries. Each wall
+    * includes every shared build the recipe touches (no DfCache build
+    * timing): these are whole-recipe numbers, not Bench rows. */
+  def recipes(spark: SparkSession): Unit = {
+    Seq(OutDir -> "build", DimDir -> "dimbuild").foreach { case (d, m) =>
+      require(new java.io.File(d).isDirectory,
+        s"$d is missing: run `ScaleSmoke $m` first")
+    }
+    // warm the recipes' kernels at the smallest SF first (same rationale
+    // as Bench's warm-up): the walls below measure the engine, not JIT
+    val warm = "/root/testdata/sf0.001"
+    noop(operators.Dedup.q34DedupNgramJaccard(spark, warm))
+    noop(operators.DedupEmbedding.q35DedupEmbedding(spark, warm))
+    operators.Linkage.estimationPairs(spark, warm).count()
+    operators.Linkage.retrievedPairs(spark, warm).count()
+    // the documented production order for near-dup at scale: exact
+    // dedup FIRST (collapses identical-text clusters), then Jaccard
+    // over the survivors — measure the difference on the pathological
+    // 10-identical-copies corpus
+    graft.sources.DfCache.clear(spark)
+    val t0 = System.nanoTime()
+    val survivors = operators.Dedup.q31DedupExact(spark, OutDir)
+      .filter(!col("is_duplicate")).select("doc_id")
+    val survivorDocs = spark.read.parquet(s"$OutDir/documents.parquet")
+      .join(survivors, Seq("doc_id"))
+    val tmpSurv = s"$OutDir/__survivors"
+    survivorDocs.write.mode("overwrite")
+      .parquet(s"$tmpSurv/documents.parquet")
+    noop(operators.Dedup.q34DedupNgramJaccard(spark, tmpSurv))
+    println(f"[scale] q34_after_exact_dedup sfx1: ${(System.nanoTime() - t0) / 1e9}%.2f s")
+    // same recipe for embeddings: identical-VECTOR dedup first, then
+    // banded near-dup over survivors. The proportional hot-bucket cap
+    // keeps q35's recall honest as occupancy grows, so on a
+    // mass-duplicate corpus the twin buckets are legitimately heavy
+    // and the bucket join pays bucket^2 on them — removing exact
+    // twins first (flat cost) is the production order, exactly as for
+    // q34's shingle join.
+    graft.sources.DfCache.clear(spark)
+    val t1 = System.nanoTime()
+    val emb = spark.read.parquet(s"$OutDir/embeddings.parquet")
+    val firstIds = emb
+      .select(col("vec_id"), md5(to_json(col("embedding"))).as("h"))
+      .groupBy("h").agg(min(col("vec_id")).as("vec_id"))
+      .select("vec_id")
+    val tmpEmb = s"$OutDir/__emb_survivors"
+    emb.join(firstIds, Seq("vec_id"))
+      .write.mode("overwrite").parquet(s"$tmpEmb/embeddings.parquet")
+    noop(operators.DedupEmbedding.q35DedupEmbedding(spark, tmpEmb))
+    println(f"[scale] q35_after_exact_dedup sfx1: ${(System.nanoTime() - t1) / 1e9}%.2f s")
+    // the linkage metric: candidate-pair MASS under dimension growth
+    // (blocking quality, not just wall-clock). q200's registered plan
+    // blocks the bounded hash sample (expected ~flat), q203 retrieves
+    // on the name prefix whose cardinality grows with the dimension
+    // (expected ~linear). The FULL attribute-blocked set
+    // (Linkage.candidatePairs) is the documented quadratic
+    // counter-example — its round-9 sfdim measurement (100x pairs at 10x
+    // customers) stands in docs/SCALE.md; not re-counted here (minutes
+    // of join time for a number that cannot change).
+    Seq(SrcDir -> "sf0.1", DimDir -> "sfdim").foreach { case (dir, label) =>
+      graft.sources.DfCache.clear(spark)
+      val e = operators.Linkage.estimationPairs(spark, dir).count()
+      val r = operators.Linkage.retrievedPairs(spark, dir).count()
+      val c = spark.read.parquet(s"$dir/customer.parquet").count()
+      println(s"[scale] q200_estimation_pairs $label: $e pairs over $c customers")
+      println(s"[scale] q203_retrieved_pairs $label: $r pairs over $c customers")
+    }
+  }
+
   def main(args: Array[String]): Unit = {
-    val mode = args.headOption.getOrElse("all")
-    val only = args.drop(1).toSet
+    val modes = Map[String, SparkSession => Unit]("build" -> build,
+      "dimbuild" -> buildDim, "usrbuild" -> buildUsr, "recipes" -> recipes)
+    val mode = args.headOption.getOrElse("")
+    require(modes.contains(mode),
+      s"usage: ScaleSmoke <${modes.keys.toSeq.sorted.mkString("|")}>")
     val spark = DevSession.make()
     spark.sparkContext.setLogLevel("WARN")
-    if (mode == "dimbuild") buildDim(spark)
-    if (mode == "usrbuild") buildUsr(spark)
-    if (mode == "usrrun") {
-      val usrQueries = Seq("q349_cohort_retention", "q351_temporal_holdout",
-        "q355_session_paths", "q359_ltv_curve", "q361_pseudonymize_audit",
-        // user-grain ntile/profile queries rewritten onto
-        // DistributedRank this round — same stress axis
-        "q213_reliability_curve", "q237_isotonic_calibrate",
-        // round-12 DistributedRank rewrites over user-grain profiles
-        "q205_ranking_auc", "q262_pr_auc", "q279_otsu_threshold",
-        "q260_rank_overlap")
-        .filter(n => only.isEmpty || only(n))
-      usrQueries.foreach { n =>
-        try SparkEntry.queries(n)(spark, "/root/testdata/sf0.001")
-          .write.format("noop").mode("overwrite").save()
-        catch { case scala.util.control.NonFatal(e) =>
-          println(s"[scale] warmup $n failed: ${e.getMessage}")
-        }
-      }
-      usrQueries.foreach { name =>
-        Seq(SrcDir -> "sf0.1", UsrDir -> "sfusr").foreach {
-          case (dir, label) =>
-            graft.sources.DfCache.clear(spark)
-            val t0 = System.nanoTime()
-            try {
-              SparkEntry.queries(name)(spark, dir)
-                .write.format("noop").mode("overwrite").save()
-              val dt = (System.nanoTime() - t0) / 1e9
-              println(f"[scale] $name $label: $dt%.2f s")
-            } catch { case e: Throwable =>
-              println(s"[scale] $name $label FAILED: ${e.getMessage}")
-            }
-        }
-      }
-    }
-    if (mode == "dimrun") {
-      // the queries whose cost is keyed to customer/part dimension
-      // size — the axis pseudo-sf1 cannot stress
-      val dimQueries = Seq("q200_linkage_weights", "q203_linkage_retrieval",
-        "q79_fuzzy_match",
-        "q183_item_neighbors", "q184_rfm_segments", "q185_pareto_deciles",
-        "q192_skyline", "q193_rank_delta",
-        "q211_revenue_gini", "q213_reliability_curve", "q216_k_anonymity",
-        "q218_conformal_threshold",
-        // round-10 additions whose key profiles are DIMENSION-sized:
-        // FD candidates over customer/part, ndv/count profiles over
-        // customer/part keys
-        "q239_fd_audit", "q257_card_calibration",
-        // round-11 additions (VERDICT r10 #5): supplier-/brand-/
-        // priority-keyed profiles whose SCALE notes name dim growth
-        // as the real stress axis
-        "q310_supplier_hhi", "q314_price_dispersion",
-        "q333_priority_sla",
-        // round-13 (VERDICT r12 #4): q381's six arms broadcast the
-        // FILTERED part/supplier dims — the part dim grows 10x on
-        // this axis (facts re-keyed to reference the copies), which
-        // is the broadcast-build stress its SCALE note names; the
-        // supplier dim is constant in this build (documented floor)
-        "q381_sample_cardinality")
-        .filter(n => only.isEmpty || only(n))
-      dimQueries.foreach { n =>
-        try SparkEntry.queries(n)(spark, "/root/testdata/sf0.001")
-          .write.format("noop").mode("overwrite").save()
-        catch { case scala.util.control.NonFatal(e) =>
-          // a query that cannot even BUILD must be loud here, not first
-          // surface as a FAILED line in the timed pass (ADVICE r09)
-          println(s"[scale] warmup $n failed: ${e.getMessage}")
-        }
-      }
-      dimQueries.foreach { name =>
-        Seq(SrcDir -> "sf0.1", DimDir -> "sfdim").foreach {
-          case (dir, label) =>
-            graft.sources.DfCache.clear(spark)
-            val t0 = System.nanoTime()
-            try {
-              SparkEntry.queries(name)(spark, dir)
-                .write.format("noop").mode("overwrite").save()
-              val dt = (System.nanoTime() - t0) / 1e9
-              println(f"[scale] $name $label: $dt%.2f s")
-            } catch { case e: Throwable =>
-              println(s"[scale] $name $label FAILED: ${e.getMessage}")
-            }
-        }
-      }
-      // the verdict's linkage metric: candidate-pair MASS under
-      // dimension growth (blocking quality, not just wall-clock).
-      // q200's registered plan now blocks the bounded hash sample
-      // (expected ~flat), q203 retrieves on the name prefix whose
-      // cardinality grows with the dimension (expected ~linear). The
-      // FULL attribute-blocked set (Linkage.candidatePairs) is the
-      // documented quadratic counter-example — its round-9 sfdim
-      // measurement (100x pairs at 10x customers) stands in
-      // docs/SCALE.md; not re-counted here (minutes of join time for a
-      // number that cannot change).
-      Seq(SrcDir -> "sf0.1", DimDir -> "sfdim").foreach { case (dir, label) =>
-        graft.sources.DfCache.clear(spark)
-        val e = operators.Linkage.estimationPairs(spark, dir).count()
-        val r = operators.Linkage.retrievedPairs(spark, dir).count()
-        val c = spark.read.parquet(s"$dir/customer.parquet").count()
-        println(s"[scale] q200_estimation_pairs $label: $e pairs over $c customers")
-        println(s"[scale] q203_retrieved_pairs $label: $r pairs over $c customers")
-      }
-    }
-    if (mode == "build" || mode == "all") build(spark)
-    if (mode == "run" || mode == "all") {
-      // lsh_topk is measured DIRECTLY (Similarity.lshTopK), not via the
-      // registered q37, which is the recall CONTRACT and recomputes the
-      // brute-force ground truth — timing it would mostly measure brute
-      val queries: Seq[(String, (SparkSession, String) => DataFrame)] = Seq(
-        "q01_product_facts", "q02_rep_facts", "q31_dedup_exact",
-        "q32_dedup_minhash", "q34_dedup_ngram_jaccard",
-        "q44_tumbling_window", "q51_map_funcs", "q36_ann_brute_topk",
-        "q73_dedup_clusters", "q80_scd2_history", "q81_sessionize_gaps",
-        "q86_tfidf", "q88_asof_forward", "q89_ohlc_bars",
-        "q93_rolling_zscore", "q95_sequence_match", "q96_bm25",
-        "q98_pack_sequences", "q35_dedup_embedding",
-        "q102_cross_batch_minhash", "q103_bloom_decontaminate",
-        "q104_chunk_docs", "q105_topk_sketch_union",
-        "q106_jaccard_prefix", "q110_span_dedup", "q111_lm_surprisal",
-        "q112_weighted_sample", "q115_cluster_canonical", "q116_winsorize",
-        "q117_leakage_safe_split", "q118_bigram_surprisal",
-        "q119_vector_exact_dedup", "q120_hybrid_rrf",
-        "q121_adaptive_quality", "q122_length_buckets",
-        "q123_pmi_cooccurrence", "q124_cdc_chunk", "q125_cdc_gear",
-        "q126_cross_source_dup", "q127_incremental_chunk_dedup",
-        "q128_scd2_pit_join", "q130_token_budget_select",
-        "q131_negative_sampling", "q132_zorder_scan", "q133_cell_serving",
-        "q134_bucketed_join", "q135_incremental_facts",
-        "q136_snapshot_diff", "q137_bpe_train", "q138_pagerank",
-        "q139_data_expectations", "q140_triangle_count",
-        "q141_adamic_adar", "q142_kcore", "q143_ppr", "q144_hits",
-        "q145_bfs_reach", "q146_domain_cap", "q147_dsir_select",
-        "q149_bpe_encode", "q150_temperature_mix", "q151_psi_drift",
-        "q152_walk_corpus", "q154_decayed_engagement", "q155_changepoint",
-        "q156_acf", "q157_phrase_search", "q158_containment_dedup",
-        "q159_erasure_cascade", "q160_mlm_mask", "q161_hierarchy_rollup",
-        "q162_top_component", "q163_max_cover", "q164_phash_dedup", "q165_ab_welch",
-        "q166_incremental_sessions", "q167_cuped",
-        "q168_quantile_normalize", "q169_int8_calibrate", "q170_context_assembly",
-        "q171_replica_audit", "q172_cdc_merge", "q173_basket_lift",
-        "q174_attribution", "q175_gap_fill", "q176_mad_outliers",
-        "q177_dow_seasonality", "q178_ols_trend", "q179_survival_curve",
-        "q180_interarrival", "q181_integrity_audit", "q182_active_users",
-        "q183_item_neighbors", "q184_rfm_segments", "q185_pareto_deciles",
-        "q186_type_affinity", "q187_dod_alerts", "q188_conversion_lag",
-        "q189_ltv_curve", "q190_rolling_median", "q191_journey_mining",
-        "q192_skyline", "q193_rank_delta", "q194_theil_sen",
-        "q195_weighted_sssp", "q196_temporal_split",
-        "q197_target_encoding", "q198_mutual_information",
-        "q199_partition_manifest", "q200_linkage_weights",
-        "q201_chi_square", "q202_containment_pipeline",
-        "q203_linkage_retrieval", "q204_exact_substr",
-        "q205_ranking_auc", "q206_skew_profile", "q207_lead_lag",
-        "q208_digit_audit", "q209_eval_sample", "q210_novelty_select",
-        "q211_revenue_gini", "q212_lateness_profile",
-        "q213_reliability_curve", "q214_frequent_triples",
-        "q215_data_card", "q216_k_anonymity", "q217_kmv_distinct",
-        "q218_conformal_threshold", "q219_span_excision",
-        "q220_epoch_shuffle", "q221_vocab_coverage",
-        "q222_metric_stability", "q223_centroid_separation",
-        "q224_mmr_retrieval", "q225_weighted_median",
-        "q226_incremental_kmv", "q227_feature_corr", "q228_kmv_jaccard",
-        "q229_rater_kappa", "q230_vocab_richness", "q231_source_jsd",
-        "q232_transition_entropy", "q233_label_noise", "q234_ks_drift",
-        "q235_km_survival", "q236_mann_kendall", "q237_isotonic_calibrate",
-        "q238_dim_health", "q239_fd_audit", "q240_zipf_slope",
-        "q241_surprisal_anomaly", "q242_brier_decomposition",
-        "q243_kcenter_coreset", "q244_incremental_surprisal",
-        "q245_clip_calibration", "q246_linear_interpolate",
-        "q247_clone_rate", "q248_diff_in_diff", "q249_threshold_curve",
-        "q250_overdispersion", "q251_brown_forsythe", "q252_cusum",
-        "q253_rate_change", "q254_median_stability",
-        "q255_retrieval_mrr", "q256_class_report", "q257_card_calibration",
-        "q258_cluster_sizes", "q259_hill_tail", "q260_rank_overlap",
-        "q261_ewma", "q262_pr_auc", "q263_retrieval_ndcg",
-        "q264_cliffs_delta", "q265_mcnemar_picks",
-        "q266_lpa_communities", "q267_kendall_tau",
-        "q268_periodogram", "q269_assortativity",
-        "q270_rake_keyphrases", "q271_forecast_backtest",
-        "q272_session_thresholds", "q273_source_overlap",
-        "q274_simpson_audit", "q275_burst_episodes",
-        "q276_weighted_overlap", "q277_dedup_savings",
-        "q278_quantile_drift", "q279_otsu_threshold",
-        "q280_ab_power", "q281_price_volume_mix",
-        "q282_association_rules", "q283_effective_sample_size",
-        "q284_jackknife_influence", "q285_clustering_coefficient",
-        "q286_partition_advisor", "q287_peeking_audit",
-        "q288_readability", "q289_oov_emergence",
-        "q290_selectivity_calibration", "q291_heaps_law",
-        "q292_brand_homophily", "q293_brown_backtest",
-        "q294_seasonal_strength", "q295_winsorized_welch",
-        "q296_lead_time_sla", "q297_transitivity_audit",
-        "q298_wasserstein_drift", "q299_decomposition_anomalies",
-        "q300_idf_shift", "q301_water_filling",
-        "q302_churn_labels", "q303_revenue_var",
-        "q304_isotropy_audit", "q305_priority_drift",
-        "q306_cramers_v", "q307_churn_wilson",
-        "q308_duration_planner", "q309_bloom_advisor",
-        "q310_supplier_hhi", "q311_ild_audit",
-        "q312_covariate_balance", "q313_loo_encoding",
-        "q314_price_dispersion", "q315_retrieval_map",
-        "q316_user_influx", "q317_segment_migration",
-        "q318_quantile_effects", "q319_markup_audit",
-        "q320_watermark_sweep", "q321_markov_backtest",
-        "q322_load_profile", "q323_return_trend",
-        "q324_discount_curve", "q325_burstiness",
-        "q326_streak_distribution", "q327_onboarding_velocity",
-        "q328_salt_advisor", "q329_exact_dup_savings",
-        "q330_growth_accounting", "q331_price_elasticity",
-        "q332_lsh_bucket_audit", "q333_priority_sla",
-        "q334_dkw_median_band", "q335_fold_balance",
-        "q336_spearman_length_quality", "q337_freshness_matrix",
-        "q338_charset_profile", "q339_market_share_shift",
-        "q340_dup_rate_by_length", "q341_engagement_diversity",
-        "q342_fulfilment_span", "q343_ingest_quality_trend",
-        "q344_truncation_waste", "q345_events_data_card",
-        "q346_basket_size_profile", "q347_dim_bucketed_join",
-        "q348_hamming_retrieval", "q349_cohort_retention",
-        "q350_retrieval_exposure", "q351_temporal_holdout",
-        "q352_theil_decomposition", "q353_benford_audit",
-        "q354_jl_distortion", "q355_session_paths",
-        "q356_broadcast_advisor", "q357_novelty_curve",
-        "q358_trade_flows", "q359_ltv_curve",
-        "q360_encoding_advisor", "q361_pseudonymize_audit",
-        "q362_shard_rebalance", "q363_exact_median",
-        "q364_neyman_allocation", "q365_logrank_test",
-        "q366_grouped_median", "q367_penny_proration",
-        "q368_revenue_recognition", "q369_open_order_aging",
-        "q370_abc_classification", "q371_duplicate_invoice",
-        "q372_horizon_audit", "q373_quantile_ladder",
-        // round-12 additions + the DistributedRank rewrites
-        "q374_query_likelihood", "q375_ddsketch_quantiles",
-        "q376_compaction_planner", "q377_join_order_advisor",
-        "q378_cell_suppression", "q379_retention_sweep",
-        "q380_quantile_trajectory", "q381_sample_cardinality",
-        // round-13 additions
-        "q382_changepoint", "q383_curation_funnel",
-        "q384_token_budget_sample", "q385_boilerplate_prefix",
-        "q386_simplified_silhouette", "q387_int8_quant_audit",
-        "q388_changepoint2",
-        // round-14 additions
-        "q389_training_materialization", "q390_cross_modal_audit",
-        "q391_video_frame_dedup",
-        // round-15 additions
-        "q392_video_dedup_recall",
-        "q62_ntile", "q205_ranking_auc", "q262_pr_auc",
-        "q279_otsu_threshold", "q260_rank_overlap")
-        .map(n => n -> SparkEntry.queries(n)) :+
-        // q148 is the recall contract (recomputes brute ground truth);
-        // time the incremental serving path itself
-        ("ann_incr_topk_direct" -> ((s: SparkSession, d: String) =>
-          operators.AnnIncremental.incrementalTopK(s, d))) :+
-        // q113/q114/q129 are recall contracts; time the ANN paths themselves
-        ("trunc_topk_direct" -> ((s: SparkSession, d: String) =>
-          operators.AnnRetrieval.truncatedTopK(s, d))) :+
-        ("pq_topk_direct" -> ((s: SparkSession, d: String) =>
-          operators.AnnIndex.pqTopK(s, d))) :+
-        ("ivfpq_topk_direct" -> ((s: SparkSession, d: String) =>
-          operators.AnnIndex.ivfPqTopK(s, d))) :+
-        ("lsh_topk_direct" -> ((s: SparkSession, d: String) =>
-          operators.Similarity.lshTopK(s, d))) :+
-        // like lsh_topk: the registered q52 is the recall CONTRACT and
-        // recomputes brute-force ground truth; time the ANN path itself
-        ("ivf_topk_direct" -> ((s: SparkSession, d: String) =>
-          operators.AnnIndex.ivfTopK(s, d))) :+
-        // the registered q107 is the contract (recomputes Q x N exact
-        // ground truth); time the blocked dedup path itself
-        ("semantic_drops_direct" -> ((s: SparkSession, d: String) =>
-          operators.AnnRetrieval.semanticDrops(s, d)))
-      val unknown = only -- queries.map(_._1).toSet
-      require(unknown.isEmpty,
-        s"unknown query name(s): ${unknown.mkString(", ")}")
-      val selected =
-        if (only.isEmpty) queries else queries.filter(q => only(q._1))
-      // warm code paths at the small SF first (same rationale as Bench)
-      selected.foreach { case (name, fn) =>
-        try fn(spark, "/root/testdata/sf0.001")
-          .write.format("noop").mode("overwrite").save()
-        catch { case scala.util.control.NonFatal(e) =>
-          println(s"[scale] warmup $name failed: ${e.getMessage}")
-        }
-      }
-      selected.foreach { case (name, fn) =>
-        Seq(SrcDir -> "sf0.1", OutDir -> "sfx1").foreach { case (dir, label) =>
-          graft.sources.DfCache.clear(spark)
-          val t0 = System.nanoTime()
-          try {
-            fn(spark, dir).write.format("noop").mode("overwrite").save()
-            val dt = (System.nanoTime() - t0) / 1e9
-            println(f"[scale] $name $label: $dt%.2f s")
-          } catch { case e: Throwable =>
-            println(s"[scale] $name $label FAILED: ${e.getMessage}")
-          }
-        }
-      }
-      if (only.isEmpty) {
-      // the documented production order for near-dup at scale: exact
-      // dedup FIRST (collapses identical-text clusters), then Jaccard
-      // over the survivors — measure the difference on the pathological
-      // 10-identical-copies corpus
-      graft.sources.DfCache.clear(spark)
-      val t0 = System.nanoTime()
-      val survivors = operators.Dedup.q31DedupExact(spark, OutDir)
-        .filter(!col("is_duplicate")).select("doc_id")
-      val survivorDocs = spark.read.parquet(s"$OutDir/documents.parquet")
-        .join(survivors, Seq("doc_id"))
-      val tmpSurv = s"$OutDir/__survivors"
-      survivorDocs.write.mode("overwrite")
-        .parquet(s"$tmpSurv/documents.parquet")
-      operators.Dedup.q34DedupNgramJaccard(spark, tmpSurv)
-        .write.format("noop").mode("overwrite").save()
-      println(f"[scale] q34_after_exact_dedup sfx1: ${(System.nanoTime() - t0) / 1e9}%.2f s")
-      // same recipe for embeddings: identical-VECTOR dedup first, then
-      // banded near-dup over survivors. The proportional hot-bucket cap
-      // keeps q35's recall honest as occupancy grows, so on a
-      // mass-duplicate corpus the twin buckets are legitimately heavy
-      // and the bucket join pays bucket^2 on them — removing exact
-      // twins first (flat cost) is the production order, exactly as for
-      // q34's shingle join.
-      graft.sources.DfCache.clear(spark)
-      val t1 = System.nanoTime()
-      val emb = spark.read.parquet(s"$OutDir/embeddings.parquet")
-      val firstIds = emb
-        .select(col("vec_id"), md5(to_json(col("embedding"))).as("h"))
-        .groupBy("h").agg(min(col("vec_id")).as("vec_id"))
-        .select("vec_id")
-      val tmpEmb = s"$OutDir/__emb_survivors"
-      emb.join(firstIds, Seq("vec_id"))
-        .write.mode("overwrite").parquet(s"$tmpEmb/embeddings.parquet")
-      operators.DedupEmbedding.q35DedupEmbedding(spark, tmpEmb)
-        .write.format("noop").mode("overwrite").save()
-      println(f"[scale] q35_after_exact_dedup sfx1: ${(System.nanoTime() - t1) / 1e9}%.2f s")
-      }
-    }
+    modes(mode)(spark)
     spark.stop()
   }
 }

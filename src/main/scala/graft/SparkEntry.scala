@@ -47,6 +47,18 @@ object SparkEntry {
 
   private lazy val byName: Map[String, QueryDef] = index(all)
 
+  /** The queries named by `patterns`, each an exact name or a prefix
+    * (`q37_`), in pattern order without repeats; no pattern selects
+    * every query in registry order. Every dev main resolves names here,
+    * so a pattern that matches nothing fails the run and is named. */
+  def select(patterns: Seq[String]): Seq[QueryDef] = {
+    val unmatched = patterns.filterNot(p => all.exists(_.name.startsWith(p)))
+    require(unmatched.isEmpty,
+      "no registered query matches: " + unmatched.mkString(", "))
+    if (patterns.isEmpty) all
+    else patterns.flatMap(p => all.filter(_.name.startsWith(p))).distinct
+  }
+
   /** name -> DataFrame program, for every registered query. */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
     byName.map { case (n, d) => n -> d.run }

@@ -7,18 +7,17 @@ object Verify {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val outDir = args(1)
-    // optional: further args restrict which queries run (dev iteration)
-    val only = args.drop(2).toSet
+    // optional: further args (names or prefixes) restrict which queries
+    // run (dev iteration)
+    val selected = SparkEntry.select(args.drop(2).toSeq)
     val spark = DevSession.make()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries
-      .filter { case (name, _) => only.isEmpty || only.contains(name) }
-      .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
+    selected.foreach { q =>
+      try q.run(spark, sfDir).coalesce(1).write.mode("overwrite")
+        .parquet(s"$outDir/${q.name}")
       catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        System.err.println(s"[verify] ${q.name} failed: ${e.getMessage}")
       }
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)

@@ -121,8 +121,8 @@ object AnnIndex {
     * probe width is how production IVF serves: per-query candidate work
     * is O((N/cells) * nprobe * M) = O(sqrt(N) * log(cells) * M) with
     * sqrt-sized cells, and the starvation risk a growing corpus poses
-    * to any capped policy is monitored by the existing RecallScan audit
-    * (plus the ProbeSweep curve in docs/SCALE.md: on this
+    * to any capped policy is monitored by ProbeSweep's default-width
+    * recall audit (plus its width curve in docs/SCALE.md: on this
     * weakly-clustered synthetic corpus, recall rises roughly linearly
     * with probe fraction, so the measured operating points below are
     * chosen to clear the contract floors with margin at every tested
@@ -423,7 +423,7 @@ object AnnIndex {
     avgRecallContract(spark, dir, ivfTopK(spark, dir), IvfRecallFloor)
 
   private val IvfRecallFloor = 0.5
-  // PQ avg recall floor: RecallScan measured (deterministic, fixed
+  // PQ avg recall floor: ProbeSweep measured (deterministic, fixed
   // 20-query hash batch) 0.84 at sf0.001, 0.82 at sf0.01, 0.59 at
   // sf0.1 with the 100-wide shortlist
   // — 32-bit codes on 64-dim vectors keep real quantization error, so
@@ -431,7 +431,7 @@ object AnnIndex {
   // knob is IVF+PQ composition (probe cells, ADC within), not a wider
   // full-corpus shortlist
   private val PqRecallFloor = 0.5
-  // IVF+PQ floor: RecallScan measured (deterministic, fixed 20-query
+  // IVF+PQ floor: ProbeSweep measured (deterministic, fixed 20-query
   // hash batch) 0.81 at sf0.001, 0.80 at sf0.01, 0.58 at sf0.1 — the
   // generous 2/3 probe
   // width keeps the stacked cell-boundary + quantization losses at

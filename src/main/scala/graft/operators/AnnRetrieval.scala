@@ -135,7 +135,7 @@ object AnnRetrieval {
     * embeddings the same operator runs at far deeper truncation. */
   private val TruncDims = 32
   private val TruncShortlist = 100
-  // measured avg recall@10 (deterministic, RecallScan): 0.96 / 0.90 /
+  // measured avg recall@10 (deterministic, ProbeSweep): 0.96 / 0.90 /
   // 0.74 at sf0.001 / 0.01 / 0.1 — floor 0.5 holds with margin
   private val TruncRecallFloor = 0.5
 

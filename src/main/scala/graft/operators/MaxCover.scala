@@ -39,7 +39,9 @@ import graft.QueryDef
 object MaxCover {
 
   /** Picks per campaign — fixed so the DuckDB oracle can unroll the
-    * recurrence mechanically (the q138 pattern). */
+    * recurrence mechanically (the q138 pattern). The lazy `remaining`
+    * chain is K anti-joins deep (O(K²) rescans of the cached shingle
+    * table); a large-K variant would need a `localCheckpoint` cadence. */
   private[graft] val K = 5
 
   /** Hard cap on the per-round driver collect of the winner's posting
@@ -51,14 +53,6 @@ object MaxCover {
     * spark.driver.maxResultSize; beyond it the query fails loudly
     * instead of OOMing the driver. */
   private[graft] val MaxDriverPostings = 4_000_000L
-
-  /** Re-materialize the lazy `remaining` anti-join chain every this
-    * many rounds (ADVICE r15): the chain is K stacked doc-bounded
-    * anti-joins re-executed from the cached shingle table on every
-    * round's postings collect — O(K²) rescans, fine at the registered
-    * K=5 (the cadence never fires, so the bench shape is unchanged)
-    * but a latent plan-depth cliff for a large-K variant. */
-  private val CheckpointEvery = 8
 
   /** q163 — greedy max-cover over distinct word-3-gram shingles: per
     * round the doc with the most not-yet-covered shingles
@@ -115,11 +109,6 @@ object MaxCover {
         .localCheckpoint()
       remaining = remaining.join(won, Seq("shingle"), "left_anti")
         .filter(col("doc_id") =!= docId)
-      // bound the lazy anti-join chain's depth for large-K variants;
-      // never fires at the registered K=5, so no extra materialization
-      // job enters the benched shape (same rows either way — a
-      // checkpoint only truncates lineage)
-      if (r % CheckpointEvery == 0) remaining = remaining.localCheckpoint()
     }
     import spark.implicits._
     picks.result().toDF("round", "doc_id", "gain", "covered_total")

@@ -260,7 +260,7 @@ object Similarity {
       .select(col("n_queries"), (col("r") >= floor).as("avg_recall_ok"))
 
   // floors hold with margin at sf0.001/0.01/0.1 (see DedupSimilaritySpec
-  // + RecallScan, re-measured on the round-13 fixed 20-query hash
+  // + ProbeSweep, re-measured on the round-13 fixed 20-query hash
   // batch): multi-probe LSH per-qid min observed 1.0 at every SF;
   // IVF avg observed 0.74-0.88 after the round-4 Lloyd refinement
   // (deterministic — integer-mean centroids, fixed seeds/queries)

@@ -1,6 +1,6 @@
-package graft
+package graft.operators
 
-import graft.operators.DistributedRank
+import graft.SparkTestBase
 import org.apache.spark.sql.functions._
 
 /** Property coverage for the [[DistributedRank]] primitive family —
@@ -61,7 +61,7 @@ class DistributedRankSpec extends SparkTestBase {
   test("withNtile matches the SQL ntile size rule exactly for a k " +
       "that does not divide n") {
     val k = 7
-    val ranked = graft.operators.DistributedRankTestAccess.globalRank(
+    val ranked = DistributedRank.withGlobalRank(
       profile, "rk", col("cents").desc, col("part").asc)
     val tiles = invokeNtile(k).select("part", "tile").collect()
       .map(r => r.getLong(0) -> r.getInt(1)).toMap
@@ -81,9 +81,8 @@ class DistributedRankSpec extends SparkTestBase {
   }
 
   private def invokeNtile(k: Int) = {
-    // withNtile is private[operators]; exercise it through the same
-    // package via a tiny accessor object
-    graft.operators.DistributedRankTestAccess.ntile(profile, k, "tile",
+    // withNtile is private[operators]; this spec lives in that package
+    DistributedRank.withNtile(profile, k, "tile",
       col("cents").desc, col("part").asc)
   }
 }
