@@ -15,6 +15,7 @@ import org.apache.spark.sql.SparkSession
 object Explain {
   private val Audited = Seq(
     "q01_product_facts", // star join + 4-key agg: broadcasts, partial agg
+    "q03_quarterly_totals", // small ordered result: one-partition sort, no range exchange
     "q05_top_product",   // TakeOrderedAndProject, no global sort
     "q07_top5_reps",     // flagship
     "q09_union_batches", // agg-through-union rule: partial aggs per batch

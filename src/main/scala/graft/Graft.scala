@@ -12,7 +12,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * `SparkSession.builder.config("spark.sql.extensions",
   * "graft.plans.GraftExtensions")` or call [[registerFunctions]] on it.
   * Either installs the native functions (`graft_dot`, ...), the
-  * optimizer rules and the as-of join strategy; no entry point below
+  * optimizer rules and the planner strategies (the as-of join, and the
+  * one-partition sort of small ordered results); no entry point below
   * sets anything up on the session it is given. Also set
   * `spark.sql.codegen.cache.maxEntries` to
   * [[DevSession.CodegenCacheEntries]] on the builder: it is a static

@@ -68,11 +68,16 @@ object MaxCover {
       .localCheckpoint()
     val picks = Seq.newBuilder[(Int, Long, Long, Long)]
     var coveredTotal = 0L
-    (1 to K).foreach { r =>
-      val top = gains
-        .orderBy(col("gain").desc, col("doc_id")).limit(1)
-        .collect().head
-      val (docId, gain) = (top.getLong(0), top.getLong(1))
+    def best() = gains
+      .orderBy(col("gain").desc, col("doc_id")).limit(1)
+      .collect().headOption
+    // a round with nothing left to cover (an empty corpus, or one that
+    // fewer than K picks cover) ends the campaign, as the oracle's
+    // LIMIT 1 over an empty round picks nothing
+    var r = 1
+    var top = best()
+    while (top.isDefined) {
+      val (docId, gain) = (top.get.getLong(0), top.get.getLong(1))
       coveredTotal += gain
       picks += ((r, docId, gain, coveredTotal))
       // r15: the winner's still-uncovered postings are DOC-BOUNDED
@@ -109,6 +114,8 @@ object MaxCover {
         .localCheckpoint()
       remaining = remaining.join(won, Seq("shingle"), "left_anti")
         .filter(col("doc_id") =!= docId)
+      r += 1
+      top = if (r <= K) best() else None
     }
     import spark.implicits._
     picks.result().toDF("round", "doc_id", "gain", "covered_total")

@@ -70,6 +70,10 @@ object Pca {
       val nulls = prof.filter(_.isNullAt(0)).map(_.getLong(2)).sum
       require(nulls == 0,
         s"NULL or empty embedding in $dir: $nulls row(s) have no vector")
+      // no vectors, no direction: refused by name (as the embedding-dim
+      // probe refuses an empty corpus) rather than a bare `head` crash
+      require(prof.nonEmpty,
+        s"empty embedding corpus in $dir: no top component to extract")
       val n = prof.head.getLong(2)
       // n is read off ONE position's profile row, which equals the
       // embedding row count only when every vector has the same length.

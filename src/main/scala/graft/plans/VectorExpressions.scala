@@ -218,7 +218,7 @@ case class VectorSignBits(left: Expression, right: Expression)
 }
 
 /** The graft native functions. [[GraftExtensions]] sets them up on a
-  * session together with graft's optimizer rules and planner strategy. */
+  * session together with graft's optimizer rules and planner strategies. */
 object GraftFunctions {
   /** A native function: its SQL name, the expression class
     * `ExpressionInfo` reports, and how to build it from its arguments. */
@@ -269,7 +269,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
 object GraftExtensions {
   val optimizerRules: Seq[Rule[LogicalPlan]] =
     Seq(RewriteDotProduct, PushAggThroughUnion)
-  val strategies: Seq[SparkStrategy] = Seq(AsofJoinStrategy)
+  val strategies: Seq[SparkStrategy] = Seq(AsofJoinStrategy, SmallSortStrategy)
 
   /** Idempotently add the native functions, optimizer rules and planner
     * strategies to `spark`, skipping any the extension config already

@@ -59,6 +59,20 @@ class Graph2Spec extends SparkTestBase {
       .forall(t => seeds.contains(t._1)))
   }
 
+  test("q143 PPR does not depend on the shuffle-partition count") {
+    // sf0.01 is where summing doubles in partition order moved a score
+    // across the round(r, 8) boundary between 4 and 32 partitions
+    val dir = java.nio.file.Paths.get(sf).resolveSibling("sf0.01").toString
+    def at(partitions: Int) = {
+      val s = spark.newSession()
+      graft.plans.GraftExtensions.install(s)
+      s.conf.set("spark.sql.shuffle.partitions", partitions.toString)
+      G2.q143Ppr(s, dir).collect().toSeq
+    }
+    val (few, many) = (at(4), at(32))
+    assert(few.size == 20 && few == many, s"\n 4: $few\n32: $many")
+  }
+
   test("q144 HITS matches an independent dense iteration") {
     val edges = shipmentEdges()
     val hubs = edges.map(_._1).distinct.sorted
