@@ -4,8 +4,8 @@ import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.SparkSession
 
-/** Physical-plan audit: dumps `explain("formatted")` for representative
-  * queries so pushdown / pruning / join strategy / codegen coverage can
+/** Physical-plan audit: dumps `explain("formatted")` of the executed
+  * plan for representative queries so pushdown / pruning / join strategy / codegen coverage can
   * be reviewed. The output is generated on demand (default
   * docs/PLANS.md, not committed); `PlanContractSpec` enforces the
   * load-bearing plan rules in code.
@@ -375,7 +375,12 @@ object Explain {
       "predicate that fails source translation. This file remains the " +
       "full narrative audit; the spec is the tripwire.\n")
     audited.foreach { q =>
-      val plan = q.run(spark, sfDir).queryExecution.explainString(
+      // dumped after an action, so the plan is AQE's final one, with the
+      // runtime re-planning (small-sort rewrites, broadcast conversions)
+      // applied
+      val df = q.run(spark, sfDir)
+      df.collect()
+      val plan = df.queryExecution.explainString(
         org.apache.spark.sql.execution.FormattedMode)
       sb.append(s"\n## ${q.name}\n\n```\n$plan```\n")
     }
