@@ -11,11 +11,9 @@ SF_DIR="${1:-/root/testdata/sf0.01}"
 A=/tmp/graft_det_a
 B=/tmp/graft_det_b
 rm -rf "$A" "$B"
-# fresh layouts: the StorageLayout/DfCache queries write keyed tables
-# under /tmp/graft_layout — clear so run A rebuilds them from scratch
-# and run B rebuilds them AGAIN (a layout-content dependence would diff)
-rm -rf /tmp/graft_layout
+# fresh layouts: the StorageLayout queries write their tables under a
+# per-session temp directory, so run B rebuilds them from scratch AGAIN
+# (a layout-content dependence would diff)
 sbt -batch "runMain graft.Verify $SF_DIR $A" > /tmp/graft_det_a.log 2>&1
-rm -rf /tmp/graft_layout
 sbt -batch "runMain graft.Verify $SF_DIR $B" > /tmp/graft_det_b.log 2>&1
 python3 scripts/determinism.py "$A" "$B"

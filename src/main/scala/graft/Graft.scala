@@ -14,12 +14,15 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * Either installs the native functions (`graft_dot`, ...), the
   * optimizer rules and the planner strategies (the as-of join, and the
   * one-partition sort of small ordered results); no entry point below
-  * sets anything up on the session it is given. Also set
-  * `spark.sql.codegen.cache.maxEntries` to
-  * [[DevSession.CodegenCacheEntries]] on the builder: it is a static
-  * conf, read before any query runs, so [[registerFunctions]] cannot
-  * set it, and at Spark's default of 100 a mix of more than a few
-  * queries recompiles its generated code on every run (docs/SCALE.md).
+  * sets anything up on the session it is given. Also put
+  * [[DevSession.StaticConfs]] on the builder (`.config(StaticConfs)`):
+  * each is read once, before any query runs, so [[registerFunctions]]
+  * cannot set them. They size Spark's codegen class cache to
+  * [[DevSession.CodegenCacheEntries]] (at Spark's default of 100 a mix
+  * of more than a few queries recompiles its generated code on every
+  * run), and route `file://` through [[sources.LocalFs]] (without it,
+  * every file a stream checkpoint or parquet write creates forks a
+  * `chmod`; docs/SCALE.md).
   */
 object Graft {
 

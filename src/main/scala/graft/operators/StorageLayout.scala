@@ -1,8 +1,14 @@
 package graft.operators
 
+import java.nio.file.Files
+
+import scala.collection.concurrent.TrieMap
+
+import org.apache.commons.io.FileUtils
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.SessionIds
 
 import graft.QueryDef
 import graft.sources.Tables
@@ -23,10 +29,29 @@ import AnnIndex.{ivfCentroids, nearestCells, ivfNprobe, IvfProbeScale, ProbeFloo
   */
 object StorageLayout {
 
-  /** Deterministic per-(dataset) layout root under /tmp — the stand-in
-    * for the table location a real pipeline owns. */
-  private def layoutRoot(dir: String, kind: String): String =
-    s"/tmp/graft_layout/${dir.replaceAll("[^A-Za-z0-9.]+", "_")}/$kind"
+  /** Per-(session, dataset) layout root under a temp directory — the
+    * stand-in for the table location a real pipeline owns. Per session,
+    * like the build gates (`DfCache.timedValue`) that write it: another
+    * session of the context (or another process) writes its own copy
+    * instead of rewriting files that this session's table listings still
+    * point to. Each session's directory is deleted when the JVM exits. */
+  private[graft] def layoutRoot(spark: SparkSession, dir: String,
+      kind: String): String =
+    s"${sessionRoot(spark)}/${dir.replaceAll("[^A-Za-z0-9.]+", "_")}/$kind"
+
+  private val sessionRoots = TrieMap.empty[String, String]
+  private def sessionRoot(spark: SparkSession): String =
+    sessionRoots.getOrElseUpdate(SessionIds.uuid(spark), {
+      val root = Files.createTempDirectory("graft_layout").toFile
+      sys.addShutdownHook(FileUtils.deleteQuietly(root))
+      root.toString
+    })
+
+  /** Catalog name of a bucketed table: per (session, dataset), like its
+    * files, since every session of a context shares one catalog. */
+  private def tableName(spark: SparkSession, dir: String, table: String): String =
+    s"graft_bucketed_${table}_${Tables.nameTag(dir)}_" +
+      SessionIds.uuid(spark).replaceAll("[^A-Za-z0-9]", "")
 
   /** A session for inspecting a bucketed-join plan (q134, q347) with AQE
     * and broadcast off, so the assertion is about the bucket layout, not
@@ -85,7 +110,7 @@ object StorageLayout {
     * engine scanning the files. */
   def q132ZorderScan(spark: SparkSession, dir: String): DataFrame = {
     val (pT, sT) = zorderWriteLayouts(spark, dir)
-    boxScan(spark, dir, s"${layoutRoot(dir, "zorder")}/zordered", pT, sT)
+    boxScan(spark, dir, s"${layoutRoot(spark, dir, "zorder")}/zordered", pT, sT)
       .agg(count(lit(1)).as("n_rows"),
         round(sum(col("l_extendedprice")), 2).as("sum_price"))
   }
@@ -97,7 +122,7 @@ object StorageLayout {
     * `<` is scale/row-group-boundary dependent). */
   def q132PruningMeasurement(spark: SparkSession,
       dir: String): (Long, Long) = {
-    val root = layoutRoot(dir, "zorder")
+    val root = layoutRoot(spark, dir, "zorder")
     val (pT, sT) = zorderWriteLayouts(spark, dir)
     (scannedRows(boxScan(spark, dir, s"$root/zordered", pT, sT)),
       scannedRows(boxScan(spark, dir, s"$root/single", pT, sT)))
@@ -112,7 +137,7 @@ object StorageLayout {
     * box-predicate thresholds `(pMax/4, sMax/4)`. */
   private def zorderWriteLayouts(spark: SparkSession,
       dir: String): (Long, Long) = {
-    val root = layoutRoot(dir, "zorder")
+    val root = layoutRoot(spark, dir, "zorder")
     val base = Tables.lineitem(spark, dir)
       .select("l_partkey", "l_suppkey", "l_extendedprice")
     val maxes = base.agg(max("l_partkey"), max("l_suppkey"))
@@ -157,7 +182,7 @@ object StorageLayout {
     * layout and checked identical to q52's ivfTopK for that query —
     * the layout changes I/O, never answers. */
   def q133CellServing(spark: SparkSession, dir: String): DataFrame = {
-    val root = layoutRoot(dir, "ivfcells")
+    val root = layoutRoot(spark, dir, "ivfcells")
     val all = Tables.embeddings(spark, dir)
       .select(col("vec_id"), col("embedding"),
         DedupEmbedding.normExpr.as("nrm"))
@@ -232,10 +257,9 @@ object StorageLayout {
     * subsequent join, which reads both sides bucket-aligned and streams
     * them through a merge with no network at all. */
   def q134BucketedJoin(spark: SparkSession, dir: String): DataFrame = {
-    val root = layoutRoot(dir, "buckets")
-    val tag = Tables.nameTag(dir)
-    val ordT = s"graft_bucketed_orders_$tag"
-    val liT = s"graft_bucketed_lineitem_$tag"
+    val root = layoutRoot(spark, dir, "buckets")
+    val ordT = tableName(spark, dir, "orders")
+    val liT = tableName(spark, dir, "lineitem")
     graft.sources.DfCache.timedValue(spark, s"bucket_layout|$dir") {
       Tables.orders(spark, dir).select("o_orderkey", "o_totalprice")
         .write.bucketBy(16, "o_orderkey").sortBy("o_orderkey")
@@ -290,10 +314,9 @@ object StorageLayout {
     * DuckDB's layout-free join — the layout changes where bytes sit,
     * never answers. */
   def q347DimBucketedJoin(spark: SparkSession, dir: String): DataFrame = {
-    val root = layoutRoot(dir, "dimbuckets")
-    val tag = Tables.nameTag(dir)
-    val custT = s"graft_bucketed_customer_$tag"
-    val ordT = s"graft_bucketed_orders_cust_$tag"
+    val root = layoutRoot(spark, dir, "dimbuckets")
+    val custT = tableName(spark, dir, "customer")
+    val ordT = tableName(spark, dir, "orders_cust")
     graft.sources.DfCache.timedValue(spark, s"dim_bucket_layout|$dir") {
       Tables.customer(spark, dir).select("c_custkey", "c_mktsegment")
         .write.bucketBy(16, "c_custkey").sortBy("c_custkey")

@@ -589,9 +589,11 @@ object Streams {
     val batchAgg = batch.groupBy("user_id")
       .agg(count(lit(1)).as("n_events"),
         sum(col("value")).as("total_value"))
+    // the sink wrote the previous version with batchAgg's schema: giving
+    // it to the reader skips the one-task schema-inference job per batch
     val merged =
       if (lastVersion < 0) batchAgg
-      else spark.read.parquet(s"$sinkDir/v$lastVersion")
+      else spark.read.schema(batchAgg.schema).parquet(s"$sinkDir/v$lastVersion")
         .unionByName(batchAgg)
         .groupBy("user_id")
         .agg(sum(col("n_events")).as("n_events"),
@@ -606,17 +608,18 @@ object Streams {
     java.nio.file.Files.move(tmp, commit,
       java.nio.file.StandardCopyOption.ATOMIC_MOVE,
       java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    // superseded versions are dead once the pointer moved: GC them, or
-    // a long stream accumulates a full state copy per micro-batch
-    (0L until next).foreach { v =>
-      val dir = root.resolve(s"v$v")
-      if (java.nio.file.Files.exists(dir)) {
-        import scala.jdk.CollectionConverters._
-        java.nio.file.Files.walk(dir).iterator().asScala.toSeq
-          .sortBy(-_.getNameCount)
-          .foreach(java.nio.file.Files.delete)
-      }
-    }
+    // every version but the committed one is dead once the pointer moved:
+    // the one it superseded, and any a crash left behind. GC them, or a
+    // long stream accumulates a full state copy per micro-batch. One
+    // listing of the sink root, so the cost does not grow with the
+    // number of batches the stream has run.
+    import scala.jdk.CollectionConverters._
+    scala.util.Using.resource(java.nio.file.Files.list(root)) {
+      _.iterator().asScala.filter { p =>
+        val name = p.getFileName.toString
+        name.matches("v\\d+") && name != s"v$next"
+      }.toList
+    }.foreach(dir => org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile))
   }
 
   /** Read the current committed state of an [[upsertBatch]] sink. */

@@ -7,14 +7,13 @@ import org.scalatest.funsuite.AnyFunSuite
 object SparkTestSession {
   lazy val spark: SparkSession = {
     val s = SparkSession.builder()
+      .config(DevSession.StaticConfs)
       .master("local[4]")
       .appName("graft-test")
       .config("spark.sql.shuffle.partitions", "8")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.codegen.cache.maxEntries",
-        DevSession.CodegenCacheEntries.toLong)
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     graft.plans.GraftExtensions.install(s)

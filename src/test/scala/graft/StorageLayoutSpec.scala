@@ -47,8 +47,7 @@ class StorageLayoutSpec extends SparkTestBase {
     val qid = row.getLong(0)
     // file-level evidence straight from the filesystem: the layout
     // holds one directory per cell; the query read strictly fewer
-    val root = new java.io.File(s"/tmp/graft_layout/" +
-      sf.replaceAll("[^A-Za-z0-9.]+", "_") + "/ivfcells")
+    val root = new java.io.File(StorageLayout.layoutRoot(spark, sf, "ivfcells"))
     val cellDirs = root.listFiles().count(_.getName.startsWith("cell="))
     assert(cellDirs > 4, s"expected a real cell layout, got $cellDirs dirs")
     // independent recompute of the top-10 within the probed cells'
@@ -101,5 +100,20 @@ class StorageLayoutSpec extends SparkTestBase {
     assert(row.getBoolean(3), "join + per-key agg over the bucketed " +
       "layout must compile with zero ShuffleExchange")
     assert(row.getBoolean(4), "co-located path must be a SortMergeJoin")
+  }
+
+  test("q134 and q347 give the same rows when two sessions of one " +
+      "context run them in turn") {
+    // each session builds its own bucketed tables; one session's build
+    // must not rewrite the files another session's table listing holds
+    val other = spark.newSession()
+    graft.plans.GraftExtensions.install(other)
+    def rows(s: org.apache.spark.sql.SparkSession): Seq[Seq[Any]] =
+      Seq(StorageLayout.q134BucketedJoin(s, sf),
+        StorageLayout.q347DimBucketedJoin(s, sf))
+        .flatMap(_.collect().map(_.toSeq))
+    val first = rows(spark)
+    assert(rows(other) == first, "second session")
+    assert(rows(spark) == first, "first session again")
   }
 }

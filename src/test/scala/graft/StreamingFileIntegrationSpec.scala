@@ -251,4 +251,25 @@ class StreamingFileIntegrationSpec extends SparkTestBase {
         s"user $uid count must be base + exactly one delta application")
     }
   }
+
+  test("upsert sink GC keeps only the committed version, whatever " +
+      "orphan versions a crash left behind") {
+    val sink = Files.createTempDirectory("graft_upsert_gc")
+    val ev = graft.sources.Tables.events(spark, sf).limit(100)
+    Streams.upsertBatch(sink.toString)(ev, 0L)
+    // orphans: versions no pointer names, as a run that crashed after
+    // writing them (before its pointer flip) leaves behind; v0 is the
+    // version the next batch supersedes
+    Seq("v5", "v12", "v1000").foreach { v =>
+      Files.createDirectories(sink.resolve(v))
+      Files.writeString(sink.resolve(s"$v/part-0.parquet"), "orphan")
+    }
+    Streams.upsertBatch(sink.toString)(ev, 1L)
+    val left = Files.list(sink).toArray.map(_.asInstanceOf[java.nio.file.Path]
+      .getFileName.toString).toSet
+    assert(left == Set("_commit", "v1"), s"sink holds $left")
+    assert(Streams.upsertState(spark, sink.toString)
+      .agg(sum("n_events")).collect().head.getLong(0) == 200L)
+    org.apache.commons.io.FileUtils.deleteQuietly(sink.toFile)
+  }
 }
