@@ -3,6 +3,9 @@
 # docs/DETERMINISM.md). Runs the FULL registered sweep twice in
 # separate JVMs — fresh DfCache, fresh /tmp layout tables — and diffs
 # every output cell-exact. Part of the round gate next to check.py.
+# Run A uses DevSession's default core and shuffle-partition count (32),
+# run B SPARK_GRAFT_CPUS=4, so the same diff also catches a result that
+# depends on the partition count (a double sum in partition order).
 #
 # Usage: scripts/two_run_verify.sh [sfDir]   (default sf0.01)
 set -euo pipefail
@@ -14,6 +17,6 @@ rm -rf "$A" "$B"
 # fresh layouts: the StorageLayout queries write their tables under a
 # per-session temp directory, so run B rebuilds them from scratch AGAIN
 # (a layout-content dependence would diff)
-sbt -batch "runMain graft.Verify $SF_DIR $A" > /tmp/graft_det_a.log 2>&1
-sbt -batch "runMain graft.Verify $SF_DIR $B" > /tmp/graft_det_b.log 2>&1
+env -u SPARK_GRAFT_CPUS sbt -batch "runMain graft.Verify $SF_DIR $A" > /tmp/graft_det_a.log 2>&1
+SPARK_GRAFT_CPUS=4 sbt -batch "runMain graft.Verify $SF_DIR $B" > /tmp/graft_det_b.log 2>&1
 python3 scripts/determinism.py "$A" "$B"

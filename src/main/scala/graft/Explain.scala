@@ -26,6 +26,8 @@ object Explain {
     "q35_dedup_embedding", // LSH band equi-join, NO cartesian (r04)
     "q102_cross_batch_minhash", // cross-day sketch join (r04)
     "q44_tumbling_window", // window() agg
+    "q63_value_windows", // one-split orders scan under Coalesce 1: agg,
+                         // window and sort with no exchange, one job
     "q54_pivot",         // declared-domain pivot = one-pass cond. agg
     "q61_range_frame",   // RANGE frame over exact cents
     "q66_contamination", // broadcast benchmark shingles

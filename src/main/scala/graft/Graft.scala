@@ -12,8 +12,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * `SparkSession.builder.config("spark.sql.extensions",
   * "graft.plans.GraftExtensions")` or call [[registerFunctions]] on it.
   * Either installs the native functions (`graft_dot`, ...), the
-  * optimizer rules and the planner strategies (the as-of join, and the
-  * one-partition sort of small ordered results); no entry point below
+  * optimizer rules and the planner strategies (the as-of join, the
+  * one-partition sort of small ordered results, and the exchange-free
+  * plan above a one-split file scan); no entry point below
   * sets anything up on the session it is given. Also put
   * [[DevSession.StaticConfs]] on the builder (`.config(StaticConfs)`):
   * each is read once, before any query runs, so [[registerFunctions]]

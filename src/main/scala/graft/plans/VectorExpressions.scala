@@ -269,7 +269,8 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
 object GraftExtensions {
   val optimizerRules: Seq[Rule[LogicalPlan]] =
     Seq(RewriteDotProduct, PushAggThroughUnion)
-  val strategies: Seq[SparkStrategy] = Seq(AsofJoinStrategy, SmallSortStrategy)
+  val strategies: Seq[SparkStrategy] =
+    Seq(AsofJoinStrategy, SmallSortStrategy, OneSplitScanStrategy)
 
   /** Idempotently add the native functions, optimizer rules and planner
     * strategies to `spark`, skipping any the extension config already

@@ -229,10 +229,11 @@ class AsofJoinSpec extends SparkTestBase {
 
   test("physical plan uses AsofJoinExec with one exchange per side") {
     // AQE wraps the plan in a leaf AdaptiveSparkPlanExec; disable it so
-    // the static plan is inspectable
+    // the static plan is inspectable. Multi-split input: over one-split
+    // scans both sides are already in one partition and need no exchange
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     val plan =
-      try Breadth2.q70AsofNative(spark, sf).queryExecution.executedPlan
+      try Breadth2.q70AsofNative(spark, MultiSplitSf(sf)).queryExecution.executedPlan
       finally spark.conf.set("spark.sql.adaptive.enabled", "true")
     val asofNodes = plan.collect { case e: AsofJoinExec => e }
     assert(asofNodes.nonEmpty, s"no AsofJoinExec in:\n$plan")

@@ -86,27 +86,27 @@ class PcaSpec extends SparkTestBase {
       s"variance removed ${before - after} vs lambda ${tc.rayleigh.last}")
   }
 
-  /** A scratch sf dir whose `embeddings` table holds `vectors` (None = a
-    * NULL embedding); topComponent reads nothing else. */
-  private def corpus(vectors: Seq[Option[Seq[Float]]]): String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_pca").toString
-    val rows = vectors.zipWithIndex.map { case (v, i) =>
-      Row(i.toLong, v.orNull, 0) }
-    spark.createDataFrame(java.util.Arrays.asList(rows: _*),
-      Tables.embeddingsSchema).write.parquet(s"$dir/embeddings.parquet")
-    dir
-  }
+  /** `topComponent`'s refusal on a scratch sf dir whose `embeddings`
+    * table holds `vectors` (None = a NULL embedding); it reads nothing
+    * else. The dir is deleted afterwards. */
+  private def refusal(vectors: Seq[Option[Seq[Float]]]): String =
+    withTempDir("graft_pca") { tmp =>
+      val dir = tmp.toString
+      val rows = vectors.zipWithIndex.map { case (v, i) =>
+        Row(i.toLong, v.orNull, 0) }
+      spark.createDataFrame(java.util.Arrays.asList(rows: _*),
+        Tables.embeddingsSchema).write.parquet(s"$dir/embeddings.parquet")
+      intercept[IllegalArgumentException](P.topComponent(spark, dir)).getMessage
+    }
 
   test("a ragged embedding corpus is refused by name") {
-    val dir = corpus(Seq(Some(Seq(1f, 2f)), Some(Seq(3f, 4f)), Some(Seq(5f))))
-    val e = intercept[IllegalArgumentException](P.topComponent(spark, dir))
-    assert(e.getMessage.contains("ragged embedding corpus"), e.getMessage)
+    val e = refusal(Seq(Some(Seq(1f, 2f)), Some(Seq(3f, 4f)), Some(Seq(5f))))
+    assert(e.contains("ragged embedding corpus"), e)
   }
 
   test("a NULL embedding is refused by name, not dropped from n") {
-    val dir = corpus(Seq(Some(Seq(1f, 2f)), Some(Seq(3f, 4f)), None))
-    val e = intercept[IllegalArgumentException](P.topComponent(spark, dir))
-    assert(e.getMessage.contains("NULL or empty embedding"), e.getMessage)
-    assert(e.getMessage.contains("1 row(s)"), e.getMessage)
+    val e = refusal(Seq(Some(Seq(1f, 2f)), Some(Seq(3f, 4f)), None))
+    assert(e.contains("NULL or empty embedding"), e)
+    assert(e.contains("1 row(s)"), e)
   }
 }

@@ -32,68 +32,70 @@ class SessionRestartIntegrationSpec extends SparkTestBase {
 
   test("checkpoint-restarted timeoutSessions across q166's boundary " +
       "equals the incremental batch sessionization") {
-    val root = Files.createTempDirectory("graft_sess_it").toString
-    val stage = s"$root/in"
-    val sink = s"$root/out"
-    val ckpt = s"$root/ckpt"
-    Files.createDirectories(Paths.get(stage))
-    val ev = graft.sources.Tables.events(spark, sf)
-      .withColumn("ts_us", unix_micros(col("ts")))
-    // the SAME split q166 uses: the data-derived midpoint
-    val Seq(minUs, maxUs) = ev.agg(min("ts_us"), max("ts_us"))
-      .collect().head.toSeq.map(_.asInstanceOf[Long])
-    val cut = (minUs + maxUs) / 2
-    // flush sentinel: far enough past the last event that the
-    // watermark timeout closes every real open session
-    val sentinel = spark.range(1).select(
-      lit(-1L).as("event_id"),
-      timestamp_micros(lit(maxUs) + lit(3L * 3600 * 1000000L)).as("ts"),
-      lit(999999L).as("user_id"), lit("zzz_flush").as("event_type"),
-      lit(0.0).as("value"), lit(null).cast("string").as("props"))
+    withTempDir("graft_sess_it") { tmp =>
+      val root = tmp.toString
+      val stage = s"$root/in"
+      val sink = s"$root/out"
+      val ckpt = s"$root/ckpt"
+      Files.createDirectories(Paths.get(stage))
+      val ev = graft.sources.Tables.events(spark, sf)
+        .withColumn("ts_us", unix_micros(col("ts")))
+      // the SAME split q166 uses: the data-derived midpoint
+      val Seq(minUs, maxUs) = ev.agg(min("ts_us"), max("ts_us"))
+        .collect().head.toSeq.map(_.asInstanceOf[Long])
+      val cut = (minUs + maxUs) / 2
+      // flush sentinel: far enough past the last event that the
+      // watermark timeout closes every real open session
+      val sentinel = spark.range(1).select(
+        lit(-1L).as("event_id"),
+        timestamp_micros(lit(maxUs) + lit(3L * 3600 * 1000000L)).as("ts"),
+        lit(999999L).as("user_id"), lit("zzz_flush").as("event_type"),
+        lit(0.0).as("value"), lit(null).cast("string").as("props"))
 
-    def startQuery() =
-      Streams.timeoutSessions(
-          Streams.eventsStream(spark, stage, maxFilesPerTrigger = Some(1))
-            .withWatermark("ts", "0 seconds"))
-        .toDF()
-        .writeStream.format("parquet")
-        .option("path", sink).option("checkpointLocation", ckpt)
-        .outputMode("append").start()
+      def startQuery() =
+        Streams.timeoutSessions(
+            Streams.eventsStream(spark, stage, maxFilesPerTrigger = Some(1))
+              .withWatermark("ts", "0 seconds"))
+          .toDF()
+          .writeStream.format("parquet")
+          .option("path", sink).option("checkpointLocation", ckpt)
+          .outputMode("append").start()
 
-    // phase 1: everything before the boundary; then the query STOPS —
-    // open sessions survive only as checkpointed state
-    writeChunk(ev.filter(col("ts_us") < cut).drop("ts_us"), stage, "c0")
-    val q1 = startQuery()
-    try q1.processAllAvailable() finally q1.stop()
-    // phase 2: the rest + the flush sentinel land while the query is
-    // down; the restart must resume the open sessions, not re-open
-    writeChunk(ev.filter(col("ts_us") >= cut).drop("ts_us"), stage, "c1")
-    writeChunk(sentinel, stage, "c2_flush")
-    val q2 = startQuery()
-    try q2.processAllAvailable() finally q2.stop()
+      // phase 1: everything before the boundary; then the query STOPS —
+      // open sessions survive only as checkpointed state
+      writeChunk(ev.filter(col("ts_us") < cut).drop("ts_us"), stage, "c0")
+      val q1 = startQuery()
+      try q1.processAllAvailable() finally q1.stop()
+      // phase 2: the rest + the flush sentinel land while the query is
+      // down; the restart must resume the open sessions, not re-open
+      writeChunk(ev.filter(col("ts_us") >= cut).drop("ts_us"), stage, "c1")
+      writeChunk(sentinel, stage, "c2_flush")
+      val q2 = startQuery()
+      try q2.processAllAvailable() finally q2.stop()
 
-    // compare as (user, n_events, duration_ms) multisets — the fields
-    // both formulations emit
-    // span_ms comes from Timestamp.getTime (per-endpoint ms floor), so
-    // the batch side floors each endpoint to ms BEFORE subtracting
-    val streamed = spark.read.parquet(sink)
-      .filter(col("user_id") =!= 999999L)
-      .groupBy("user_id", "n_events", "span_ms")
-      .agg(count(lit(1)).as("m"))
-      .collect().map(_.toSeq).toSet
-    val batch = graft.operators.SessionState
-      .q166IncrementalSessions(spark, sf)
-      .select(col("user_id"), col("n_events"),
-        expr("unix_micros(session_end) div 1000 - " +
-          "unix_micros(session_start) div 1000").as("span_ms"))
-      .groupBy("user_id", "n_events", "span_ms")
-      .agg(count(lit(1)).as("m"))
-      .collect().map(_.toSeq).toSet
-    assert(streamed == batch,
-      s"streamed sessions diverge from incremental batch: " +
-        s"streamed=${streamed.size} batch=${batch.size} " +
-        s"missing=${(batch -- streamed).take(3)} " +
-        s"extra=${(streamed -- batch).take(3)}")
-    assert(Files.list(Paths.get(ckpt)).toArray.nonEmpty)
+      // compare as (user, n_events, duration_ms) multisets — the fields
+      // both formulations emit
+      // span_ms comes from Timestamp.getTime (per-endpoint ms floor), so
+      // the batch side floors each endpoint to ms BEFORE subtracting
+      val streamed = spark.read.parquet(sink)
+        .filter(col("user_id") =!= 999999L)
+        .groupBy("user_id", "n_events", "span_ms")
+        .agg(count(lit(1)).as("m"))
+        .collect().map(_.toSeq).toSet
+      val batch = graft.operators.SessionState
+        .q166IncrementalSessions(spark, sf)
+        .select(col("user_id"), col("n_events"),
+          expr("unix_micros(session_end) div 1000 - " +
+            "unix_micros(session_start) div 1000").as("span_ms"))
+        .groupBy("user_id", "n_events", "span_ms")
+        .agg(count(lit(1)).as("m"))
+        .collect().map(_.toSeq).toSet
+      assert(streamed == batch,
+        s"streamed sessions diverge from incremental batch: " +
+          s"streamed=${streamed.size} batch=${batch.size} " +
+          s"missing=${(batch -- streamed).take(3)} " +
+          s"extra=${(streamed -- batch).take(3)}")
+      assert(Files.list(Paths.get(ckpt)).toArray.nonEmpty)
+    }
   }
 }

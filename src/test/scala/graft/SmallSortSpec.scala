@@ -1,8 +1,5 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicInteger
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.Sort
 import org.apache.spark.sql.catalyst.plans.physical.{Partitioning, RangePartitioning, SinglePartition}
@@ -37,29 +34,11 @@ class SmallSortSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
   private def ranges(df: DataFrame): Int =
     shuffles(df).count(_.isInstanceOf[RangePartitioning])
 
-  /** Jobs launched while `df` is collected, and its rows. */
-  private def jobsAndRows(df: DataFrame): (Int, Seq[org.apache.spark.sql.Row]) = {
-    val sc = df.sparkSession.sparkContext
-    val group = s"small-sort-${java.util.UUID.randomUUID()}"
-    val jobs = new AtomicInteger
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
-          jobs.incrementAndGet()
-    }
-    sc.addSparkListener(listener)
-    sc.setJobGroup(group, group)
-    try {
-      val rows = df.collect().toSeq
-      org.apache.spark.graft.GraftListenerBus.waitUntilEmpty(sc)
-      (jobs.get, rows)
-    } finally {
-      sc.clearJobGroup()
-      sc.removeSparkListener(listener)
-    }
-  }
-
-  private def q03(s: SparkSession) = SparkEntry.queries("q03_quarterly_totals")(s, sf)
+  /** q03 on [[MultiSplitSf]]: its sort input is spread over partitions
+    * there, so the range session plans the range exchange this spec
+    * compares against (on one-split sf0.001 neither session has one). */
+  private def q03(s: SparkSession) =
+    SparkEntry.queries("q03_quarterly_totals")(s, MultiSplitSf(sf))
 
   test("a small ordered query sorts in one partition, one job fewer") {
     q03(spark).collect(); q03(rangeSession).collect() // build the cached facts
@@ -117,7 +96,7 @@ class SmallSortSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
           (col("id") % 13 * 0.25).as("v"))
         .orderBy(col("k").desc, col("v"), col("id"))
     Seq[SparkSession => DataFrame](ordered,
-        s => SparkEntry.queries("q01_product_facts")(s, sf)).foreach { q =>
+        s => SparkEntry.queries("q01_product_facts")(s, MultiSplitSf(sf))).foreach { q =>
       val (small, range) = (q(spark), q(rangeSession))
       val (smallRows, rangeRows) = (small.collect().toSeq, range.collect().toSeq)
       assert(ranges(small) == 0 && ranges(range) == 1)

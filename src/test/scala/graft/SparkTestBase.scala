@@ -1,6 +1,11 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import java.nio.file.{Files, Path}
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.commons.io.FileUtils
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared single SparkSession for all suites (matches Verify's configs). */
@@ -21,7 +26,58 @@ object SparkTestSession {
   }
 }
 
+/** A copy of an sf dir with each table rewritten as a directory of four
+  * parquet files, so every scan of it reads several splits. A
+  * plan-shape test that pins an exchange runs on it: a scan of one split
+  * plans no exchange above it (`graft.plans.OneSplitScanStrategy`), and
+  * every sf0.001 table is one file of one split. Written once per JVM
+  * and source dir, deleted at exit. */
+object MultiSplitSf {
+  private val copies = scala.collection.mutable.Map.empty[String, String]
+
+  def apply(src: String): String = synchronized {
+    copies.getOrElseUpdate(src, {
+      val root = Files.createTempDirectory("graft_multisplit")
+      sys.addShutdownHook(FileUtils.deleteQuietly(root.toFile))
+      new java.io.File(src).list().filter(_.endsWith(".parquet")).foreach { t =>
+        SparkTestSession.spark.read.parquet(s"$src/$t").repartition(4)
+          .write.parquet(s"$root/$t")
+      }
+      root.toString
+    })
+  }
+}
+
 abstract class SparkTestBase extends AnyFunSuite {
   lazy val spark: SparkSession = SparkTestSession.spark
   val sf: String = "/root/testdata/sf0.001"
+
+  /** Runs `body` on a fresh temp directory named after `prefix`, and
+    * deletes the directory afterwards, whether `body` passed or not. */
+  protected def withTempDir[T](prefix: String)(body: Path => T): T = {
+    val dir = Files.createTempDirectory(prefix)
+    try body(dir) finally FileUtils.deleteQuietly(dir.toFile)
+  }
+
+  /** Jobs launched while `df` is collected, and its rows. */
+  protected def jobsAndRows(df: DataFrame): (Int, Seq[Row]) = {
+    val sc = df.sparkSession.sparkContext
+    val group = s"jobs-${java.util.UUID.randomUUID()}"
+    val jobs = new AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
+          jobs.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, group)
+    try {
+      val rows = df.collect().toSeq
+      org.apache.spark.graft.GraftListenerBus.waitUntilEmpty(sc)
+      (jobs.get, rows)
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+  }
 }
