@@ -33,7 +33,7 @@ object AnnIncremental {
     * seed stride (multiples of the Lloyd seed stride are ≡ 0 mod 5 at
     * these corpus sizes): carving the delta out of residue 0 would
     * silently empty the seed set — the spec pins a non-empty quantizer
-    * and baseCentroids requires it loudly. */
+    * and incrementalTopK requires it loudly. */
   private[graft] val DeltaMod = 5
   private[graft] val DeltaResidue = 1
 
@@ -51,11 +51,7 @@ object AnnIncremental {
       .filter(col("vec_id") % DeltaMod =!= DeltaResidue)
       .select(col("vec_id"), col("embedding"),
         DedupEmbedding.normExpr.as("nrm"))
-    val cents = AnnIndex.ivfCentroids(spark, dir, base, "_incrbase")
-    require(graft.sources.DfCache.value(spark,
-        s"ann_incr_ncells|$dir")(cents.count()) > 0,
-      s"empty incremental-IVF quantizer for $dir: no Lloyd seeds in base")
-    cents
+    AnnIndex.ivfCentroids(spark, dir, base, "_incrbase")
   }
 
   /** Merged inverted-file assignment: base vectors under the
@@ -86,8 +82,9 @@ object AnnIncremental {
       .select(col("vec_id"), col("embedding"),
         DedupEmbedding.normExpr.as("nrm"))
     val centroids = baseCentroids(spark, dir)
-    val nCells = graft.sources.DfCache.value(spark,
-      s"ann_incr_ncells|$dir")(centroids.count())
+    val nCells = centroids.count()
+    require(nCells > 0,
+      s"empty incremental-IVF quantizer for $dir: no Lloyd seeds in base")
     val nprobe = AnnIndex.ivfNprobe(nCells, AnnIndex.IvfProbeScale,
       AnnIndex.ProbeFloor)
     val probes = AnnIndex.nearestCells(

@@ -290,9 +290,7 @@ object Breadth3 {
   def q92CountMin(spark: SparkSession, dir: String): DataFrame = {
     val ev = Tables.events(spark, dir)
     val eps = 0.001
-    val sketch = graft.sources.DfCache.value(spark, s"cms_event_type|$dir") {
-      ev.stat.countMinSketch("event_type", eps, 0.99, 42)
-    }
+    val sketch = ev.stat.countMinSketch("event_type", eps, 0.99, 42)
     // probe via the codegen graft_cms_estimate expression (the
     // graft_bloom_contains discipline — serialized sketch as a binary
     // literal, per-row probe inside WholeStageCodegen, no boxed UDF;

@@ -55,7 +55,7 @@ object Graph {
     // persisted like edges/nodes: every round's checkpoint job reads it,
     // and an unpersisted outdeg would re-run the groupBy 5 times
     val outdeg = shipmentOutdeg(spark, dir)
-    val n = graft.sources.DfCache.value(spark, s"pr_n|$dir")(nodes.count())
+    val n = nodes.count()
     // Final ranks are DfCache'd so repeated calls skip the loop.
     val ranks = graft.sources.DfCache.df(spark, s"pr_ranks|$dir")(
       pagerankRanks(nodes, shipmentEdgesD(spark, dir), outdeg, n))

@@ -99,8 +99,7 @@ object Graph2 {
     // (1−d)·s + d·(c + dm·s) update), so scores match the oracle's
     // unrolled recurrence at the registered rounding.
     val edgesD = Graph.shipmentEdgesD(spark, dir)
-    val nSeeds = graft.sources.DfCache.value(spark, s"ppr_nseeds|$dir")(
-      nodes.filter(col("is_seed")).count())
+    val nSeeds = nodes.filter(col("is_seed")).count()
     require(nSeeds > 0, s"PPR seed set empty for $dir (stride $PprSeedStride)")
 
     // seed column: s(v) = 1/|S| on seeds, 0 elsewhere; dangling flag

@@ -51,74 +51,73 @@ object Pca {
       component: Array[Double], rayleigh: Seq[Double])
 
   private[graft] def topComponent(spark: SparkSession, dir: String)
-      : TopComponent =
-    DfCache.value(spark, s"pca_top|$dir") {
-      val ex = DfCache.df(spark, s"pca_embeddings|$dir")(
-        Tables.embeddings(spark, dir).select("embedding"))
-      // ONE job yields n, dim AND the mean vector (was three: count,
-      // dim head, mean collect — each a full scheduling round trip):
-      // the pos-keyed profile's row count IS dim and any pos's count
-      // IS n. Per-pos sums are unchanged, so the mean is bit-identical.
-      // posexplode_OUTER: a NULL (or empty) embedding becomes one
-      // pos = NULL row instead of vanishing, so it is refused below
-      // rather than silently undercounting n.
-      val prof = ex
-        .select(posexplode_outer(col("embedding")).as(Seq("pos", "x")))
-        .groupBy("pos").agg(sum(col("x").cast("double")).as("sx"),
-          count(lit(1)).as("cnt"))
-        .collect()
-      val nulls = prof.filter(_.isNullAt(0)).map(_.getLong(2)).sum
-      require(nulls == 0,
-        s"NULL or empty embedding in $dir: $nulls row(s) have no vector")
-      // no vectors, no direction: refused by name (as the embedding-dim
-      // probe refuses an empty corpus) rather than a bare `head` crash
-      require(prof.nonEmpty,
-        s"empty embedding corpus in $dir: no top component to extract")
-      val n = prof.head.getLong(2)
-      // n is read off ONE position's profile row, which equals the
-      // embedding row count only when every vector has the same length.
-      // Assert that instead of assuming it (ADVICE r15): a ragged
-      // embedding must fail loudly, not silently skew n/dim and the mean.
-      require(prof.forall(_.getLong(2) == n),
-        s"ragged embedding corpus in $dir: per-position counts " +
-          s"${prof.map(_.getLong(2)).distinct.sorted.mkString(",")}")
-      val dim = prof.length
-      val mean = prof.map(r => r.getInt(0) -> r.getDouble(1) / n)
+      : TopComponent = {
+    val ex = DfCache.df(spark, s"pca_embeddings|$dir")(
+      Tables.embeddings(spark, dir).select("embedding"))
+    // ONE job yields n, dim AND the mean vector (was three: count,
+    // dim head, mean collect — each a full scheduling round trip):
+    // the pos-keyed profile's row count IS dim and any pos's count
+    // IS n. Per-pos sums are unchanged, so the mean is bit-identical.
+    // posexplode_OUTER: a NULL (or empty) embedding becomes one
+    // pos = NULL row instead of vanishing, so it is refused below
+    // rather than silently undercounting n.
+    val prof = ex
+      .select(posexplode_outer(col("embedding")).as(Seq("pos", "x")))
+      .groupBy("pos").agg(sum(col("x").cast("double")).as("sx"),
+        count(lit(1)).as("cnt"))
+      .collect()
+    val nulls = prof.filter(_.isNullAt(0)).map(_.getLong(2)).sum
+    require(nulls == 0,
+      s"NULL or empty embedding in $dir: $nulls row(s) have no vector")
+    // no vectors, no direction: refused by name (as the embedding-dim
+    // probe refuses an empty corpus) rather than a bare `head` crash
+    require(prof.nonEmpty,
+      s"empty embedding corpus in $dir: no top component to extract")
+    val n = prof.head.getLong(2)
+    // n is read off ONE position's profile row, which equals the
+    // embedding row count only when every vector has the same length.
+    // Assert that instead of assuming it (ADVICE r15): a ragged
+    // embedding must fail loudly, not silently skew n/dim and the mean.
+    require(prof.forall(_.getLong(2) == n),
+      s"ragged embedding corpus in $dir: per-position counts " +
+        s"${prof.map(_.getLong(2)).distinct.sorted.mkString(",")}")
+    val dim = prof.length
+    val mean = prof.map(r => r.getInt(0) -> r.getDouble(1) / n)
+      .sortBy(_._1).map(_._2)
+    var v = Array.fill(dim)(1.0 / math.sqrt(dim))
+    val lambdas = Seq.newBuilder[Double]
+    import spark.implicits._
+    (1 to Iters).foreach { _ =>
+      val muDotV = mean.zip(v).map { case (a, b) => a * b }.sum
+      // r15: v and μ·v enter as a broadcast 1-row frame, NOT literals
+      // (stage profile: the query's wall was ~4 s against only ~1.6 s
+      // of task time — almost pure driver latency, because embedding
+      // a fresh 64-double literal in every round's plan changes the
+      // generated code and forces a whole-stage-codegen COMPILE per
+      // round, 20×). With the values as broadcast columns the
+      // generated source is identical across rounds (and across
+      // SFs), so round 2+ hit the codegen cache; per-row arithmetic
+      // is unchanged (same graft_dot(embedding, v) − μ·v into the
+      // same pos-keyed sums), and the broadcast of a driver-local
+      // 1-row relation builds without a Spark job.
+      val vRow = broadcast(Seq((v.toSeq, muDotV)).toDF("__v", "__mu"))
+      val agg = ex
+        .crossJoin(vRow)
+        .select((expr("graft_dot(embedding, __v)") - col("__mu")).as("s"),
+          posexplode(col("embedding")).as(Seq("pos", "x")))
+        .groupBy("pos")
+        .agg(sum(col("x").cast("double") * col("s")).as("sxs"),
+          sum(col("s")).as("ss"))
+        .collect().map(r => r.getInt(0) -> (r.getDouble(1), r.getDouble(2)))
         .sortBy(_._1).map(_._2)
-      var v = Array.fill(dim)(1.0 / math.sqrt(dim))
-      val lambdas = Seq.newBuilder[Double]
-      import spark.implicits._
-      (1 to Iters).foreach { _ =>
-        val muDotV = mean.zip(v).map { case (a, b) => a * b }.sum
-        // r15: v and μ·v enter as a broadcast 1-row frame, NOT literals
-        // (stage profile: the query's wall was ~4 s against only ~1.6 s
-        // of task time — almost pure driver latency, because embedding
-        // a fresh 64-double literal in every round's plan changes the
-        // generated code and forces a whole-stage-codegen COMPILE per
-        // round, 20×). With the values as broadcast columns the
-        // generated source is identical across rounds (and across
-        // SFs), so round 2+ hit the codegen cache; per-row arithmetic
-        // is unchanged (same graft_dot(embedding, v) − μ·v into the
-        // same pos-keyed sums), and the broadcast of a driver-local
-        // 1-row relation builds without a Spark job.
-        val vRow = broadcast(Seq((v.toSeq, muDotV)).toDF("__v", "__mu"))
-        val agg = ex
-          .crossJoin(vRow)
-          .select((expr("graft_dot(embedding, __v)") - col("__mu")).as("s"),
-            posexplode(col("embedding")).as(Seq("pos", "x")))
-          .groupBy("pos")
-          .agg(sum(col("x").cast("double") * col("s")).as("sxs"),
-            sum(col("s")).as("ss"))
-          .collect().map(r => r.getInt(0) -> (r.getDouble(1), r.getDouble(2)))
-          .sortBy(_._1).map(_._2)
-        val w = agg.zipWithIndex.map { case ((sxs, ss), j) =>
-          sxs - mean(j) * ss }
-        lambdas += v.zip(w).map { case (a, b) => a * b }.sum / n
-        val norm = math.sqrt(w.map(x => x * x).sum)
-        v = w.map(_ / norm)
-      }
-      TopComponent(n, dim, mean, v, lambdas.result())
+      val w = agg.zipWithIndex.map { case ((sxs, ss), j) =>
+        sxs - mean(j) * ss }
+      lambdas += v.zip(w).map { case (a, b) => a * b }.sum / n
+      val norm = math.sqrt(w.map(x => x * x).sum)
+      v = w.map(_ / norm)
     }
+    TopComponent(n, dim, mean, v, lambdas.result())
+  }
 
   /** q162 — the contract surface of [[topComponent]]: corpus shape and
     * the three laws any correct top-PC extraction satisfies. A broken

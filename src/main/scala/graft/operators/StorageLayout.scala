@@ -31,7 +31,7 @@ object StorageLayout {
 
   /** Per-(session, dataset) layout root under a temp directory — the
     * stand-in for the table location a real pipeline owns. Per session,
-    * like the build gates (`DfCache.timedValue`) that write it: another
+    * like the build-once `DfCache.value` gates that write it: another
     * session of the context (or another process) writes its own copy
     * instead of rewriting files that this session's table listings still
     * point to. Each session's directory is deleted when the JVM exits. */
@@ -143,7 +143,7 @@ object StorageLayout {
     val maxes = base.agg(max("l_partkey"), max("l_suppkey"))
       .collect().head
     val (pMax, sMax) = (maxes.getLong(0), maxes.getLong(1))
-    graft.sources.DfCache.timedValue(spark, s"zorder_layout|$dir") {
+    graft.sources.DfCache.value(spark, s"zorder_layout|$dir") {
       base.repartitionByRange(16, col("l_partkey"))
         .sortWithinPartitions("l_partkey")
         .write.mode("overwrite").parquet(s"$root/single")
@@ -187,7 +187,7 @@ object StorageLayout {
       .select(col("vec_id"), col("embedding"),
         DedupEmbedding.normExpr.as("nrm"))
     val centroids = ivfCentroids(spark, dir, all)
-    graft.sources.DfCache.timedValue(spark, s"cell_layout|$dir") {
+    graft.sources.DfCache.value(spark, s"cell_layout|$dir") {
       nearestCells(all, centroids, 1, "crank")
         .select(col("cent_id").as("cell"), col("vec_id"), col("embedding"))
         .write.mode("overwrite").partitionBy("cell").parquet(root)
@@ -260,7 +260,7 @@ object StorageLayout {
     val root = layoutRoot(spark, dir, "buckets")
     val ordT = tableName(spark, dir, "orders")
     val liT = tableName(spark, dir, "lineitem")
-    graft.sources.DfCache.timedValue(spark, s"bucket_layout|$dir") {
+    graft.sources.DfCache.value(spark, s"bucket_layout|$dir") {
       Tables.orders(spark, dir).select("o_orderkey", "o_totalprice")
         .write.bucketBy(16, "o_orderkey").sortBy("o_orderkey")
         .option("path", s"$root/orders")
@@ -317,7 +317,7 @@ object StorageLayout {
     val root = layoutRoot(spark, dir, "dimbuckets")
     val custT = tableName(spark, dir, "customer")
     val ordT = tableName(spark, dir, "orders_cust")
-    graft.sources.DfCache.timedValue(spark, s"dim_bucket_layout|$dir") {
+    graft.sources.DfCache.value(spark, s"dim_bucket_layout|$dir") {
       Tables.customer(spark, dir).select("c_custkey", "c_mktsegment")
         .write.bucketBy(16, "c_custkey").sortBy("c_custkey")
         .option("path", s"$root/customer")

@@ -416,7 +416,7 @@ object TextOps {
     * consumer ran first silently absorbed the training wall. */
   private[graft] def bpeCached(spark: SparkSession,
       dir: String): (Seq[(Int, String, String, Long)], Long, Long) =
-    graft.sources.DfCache.timedValue(spark, s"bpe_train|$dir")(
+    graft.sources.DfCache.value(spark, s"bpe_train|$dir")(
       bpeTrain(spark, dir, BpeMerges))
 
   /** q137 — BPE tokenizer training as a registered query. The summary

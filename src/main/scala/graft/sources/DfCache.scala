@@ -3,12 +3,13 @@ package graft.sources
 import scala.collection.concurrent.TrieMap
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerApplicationEnd}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.storage.StorageLevel
 
-/** Session-scoped cache for persisted intermediate DataFrames (the
-  * materialized aggregate facts of Relational, the shared shingle table
-  * of Dedup, the LSH plane dimension of Similarity).
+/** Session-scoped build-once cache for shared intermediates: persisted
+  * DataFrames (the materialized aggregate facts of Relational, the
+  * shared shingle table of Dedup) and plain values (a probed dimension,
+  * a layout written once).
   *
   * Keyed by `spark.sessionUUID` — stable and collision-free, unlike an
   * identityHashCode which can be reused after GC and would pin plans of
@@ -20,41 +21,19 @@ import org.apache.spark.storage.StorageLevel
   */
 private[graft] object DfCache {
 
-  private val dfs = TrieMap.empty[(String, String), DataFrame]
   private val vals = TrieMap.empty[(String, String), Any]
 
-  // Bench-only instrumentation (VERDICT r12 #2 — per-query bench
-  // attribution): when enabled, df() materializes the built frame
-  // EAGERLY (one count() populates every persisted partition) and
-  // records the build's wall seconds under its key, so consumer
-  // queries time only their own work and Bench can emit the shared
-  // builds as named setup rows. Off everywhere else: Verify/tests
-  // keep the lazy persist (a consumer that reads only part of a
-  // cached frame must not pay a full materialization there). Nested
-  // builds (a cached df whose builder reads another cached df, e.g.
-  // ann_brute -> ann_qsel) do NOT overlap: the inner df() call runs
-  // while the OUTER BUILDER expression is being evaluated — i.e.
-  // before the outer's persist/count window even opens — and the
-  // inner's count() materializes every persisted partition, so the
-  // outer's timed count() only READS the inner's cached blocks. Each
-  // key's recorded seconds are therefore disjoint wall windows and
-  // Bench's per-query sum-subtraction is exact
-  // (DfCacheNestingSpec pins this).
+  // Build seconds per key, recorded when timing is on (Bench and
+  // perfbench drain them as setup rows). Each key records its SELF
+  // time: `nested` is this thread's running total of build seconds,
+  // and a build subtracts whatever the builds it ran inside itself
+  // added to it. Any nesting (df in df, value in df, df in value) then
+  // records every second under exactly one key, so the recorded keys
+  // of one query sum to the wall time its outermost builds took.
   private val buildTimes = TrieMap.empty[(String, String), Double]
-  // set on this thread while a timed window is open (df's eager count()
-  // under build timing, or a timedValue build): a timed build starting
-  // inside one fails instead of double-counting in Bench's subtraction
-  private val inTimedBuild = ThreadLocal.withInitial[Boolean](() => false)
-  private def timedWindow[T](key: String)(body: => T): T = {
-    require(!inTimedBuild.get,
-      s"DfCache: timed build '$key' started inside another timed build")
-    inTimedBuild.set(true)
-    try body finally inTimedBuild.set(false)
-  }
+  private val nested = ThreadLocal.withInitial[Double](() => 0.0)
   @volatile private var timeBuilds = false
   private[graft] def enableBuildTiming(): Unit = { timeBuilds = true }
-  // test hygiene only (DfCacheNestingSpec): Bench never turns it off
-  private[graft] def disableBuildTiming(): Unit = { timeBuilds = false }
 
   /** Remove and return this session's recorded build times (key ->
     * seconds), for one bench rep. */
@@ -80,29 +59,9 @@ private[graft] object DfCache {
   private def lockFor(k: (String, String)): Object =
     locks.getOrElseUpdate(k, new Object)
 
-  /** Build-once-per-(session, key) persisted DataFrame (thread-safe:
-    * concurrent queries sharing an intermediate get one build). */
-  def df(spark: SparkSession, key: String)(build: => DataFrame): DataFrame = {
-    val sid = org.apache.spark.sql.graft.SessionIds.uuid(spark)
-    hookEviction(spark)
-    val k = (sid, key)
-    dfs.get(k) match {
-      case Some(cached) => cached
-      case None => lockFor(k).synchronized {
-        dfs.getOrElseUpdate(k, {
-          val persisted = build.persist(StorageLevel.MEMORY_AND_DISK)
-          if (timeBuilds) timedWindow(key) {
-            val t0 = System.nanoTime()
-            persisted.count()
-            buildTimes.put(k, (System.nanoTime() - t0) / 1e9)
-          }
-          persisted
-        })
-      }
-    }
-  }
-
-  /** Build-once-per-(session, key) plain value (e.g. a probed dimension). */
+  /** Build-once-per-(session, key) value (thread-safe: concurrent
+    * callers get one build). A build that throws caches and records
+    * nothing. */
   def value[T](spark: SparkSession, key: String)(build: => T): T = {
     val sid = org.apache.spark.sql.graft.SessionIds.uuid(spark)
     hookEviction(spark)
@@ -110,39 +69,30 @@ private[graft] object DfCache {
     vals.get(k) match {
       case Some(cached) => cached.asInstanceOf[T]
       case None => lockFor(k).synchronized {
-        vals.getOrElseUpdate(k, build).asInstanceOf[T]
-      }
-    }
-  }
-
-  /** [[value]] that ADDITIONALLY records the build's wall seconds under
-    * its key when bench build-timing is on (VERDICT r15 #3): for gates
-    * whose build is real shared work — the q132/q133/q134/q347 layout
-    * writes, the q137/q149 BPE merge loop — so consumer query rows
-    * measure the scan/join they exist to measure instead of absorbing
-    * whichever rep ran the one-time build. A timed build (a timed df
-    * materialization or another timedValue) started INSIDE the gated
-    * block fails with a named `require`, timing on or off: the windows
-    * would nest and Bench's per-query sum-subtraction double-count.
-    * Callers write from plain table reads or from cached frames built
-    * BEFORE the gate. Records nothing when timing is off (Verify,
-    * tests). */
-  def timedValue[T](spark: SparkSession, key: String)(build: => T): T = {
-    val sid = org.apache.spark.sql.graft.SessionIds.uuid(spark)
-    hookEviction(spark)
-    val k = (sid, key)
-    vals.get(k) match {
-      case Some(cached) => cached.asInstanceOf[T]
-      case None => lockFor(k).synchronized {
-        vals.getOrElseUpdate(k, timedWindow(key) {
+        vals.getOrElseUpdate(k, {
+          val before = nested.get
           val t0 = System.nanoTime()
           val v = build
-          if (timeBuilds) buildTimes.put(k, (System.nanoTime() - t0) / 1e9)
+          val wall = (System.nanoTime() - t0) / 1e9
+          if (timeBuilds) buildTimes.put(k, wall - (nested.get - before))
+          nested.set(before + wall)
           v
         }).asInstanceOf[T]
       }
     }
   }
+
+  /** [[value]] over a persisted DataFrame, materialized EAGERLY: one
+    * `count()` populates every partition inside the build, so no later
+    * job computes a cached block a second time and every consumer plans
+    * against the cached relation's real size. */
+  def df(spark: SparkSession, key: String)(build: => DataFrame): DataFrame =
+    value(spark, key) {
+      val persisted = build.persist(StorageLevel.MEMORY_AND_DISK)
+      try persisted.count()
+      catch { case e: Throwable => persisted.unpersist(); throw e }
+      persisted
+    }
 
   /** Unpersist and drop every entry for this session (used by Bench to
     * make repeated timed runs pay the full build cost each time).
@@ -153,14 +103,16 @@ private[graft] object DfCache {
     * quiesce their own query threads first. */
   def clear(spark: SparkSession): Unit = {
     val sid = org.apache.spark.sql.graft.SessionIds.uuid(spark)
-    (dfs.keys ++ locks.keys).filter(_._1 == sid).toSet.foreach {
+    (vals.keys ++ locks.keys).filter(_._1 == sid).toSet.foreach {
       (k: (String, String)) =>
         lockFor(k).synchronized {
-          dfs.remove(k).foreach(_.unpersist(blocking = false))
+          vals.remove(k).foreach {
+            case d: Dataset[_] => d.unpersist(blocking = false)
+            case _ => ()
+          }
         }
         locks.remove(k)
     }
-    vals.keys.filter(_._1 == sid).foreach(vals.remove)
   }
 
   private def hookEviction(spark: SparkSession): Unit = {
@@ -173,7 +125,6 @@ private[graft] object DfCache {
           // the context is going away, taking every session's executor
           // storage with it — drop ALL registrations (this JVM hosts one
           // context at a time; entries are only reachable through it)
-          dfs.clear()
           vals.clear()
           locks.clear()
           hookedApps.remove(appId)
