@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** Shared SparkSession builder for the dev/driver mains (Bench, Verify,
-  * PlanDump, ProbeSweep, ScaleSmoke, Explain) — one place for the configs
+  * ProbeSweep, ScaleSmoke, Explain) — one place for the configs
   * every entry point needs (UTC, nanosAsLong, shuffle partitions =
   * cpus, the [[StaticConfs]]), honoring SPARK_GRAFT_CPUS everywhere,
   * and graft's session setup installed once

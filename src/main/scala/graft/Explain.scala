@@ -10,7 +10,9 @@ import org.apache.spark.sql.SparkSession
   * docs/PLANS.md, not committed); `PlanContractSpec` enforces the
   * load-bearing plan rules in code.
   *
-  * Usage: runMain graft.Explain [sfDir] [outFile]
+  * Usage: runMain graft.Explain [sfDir] [outFile] [query...]
+  * (queries are exact names or prefixes; given any, they are audited
+  * instead of the default list)
   */
 object Explain {
   private val Audited = Seq(
@@ -51,7 +53,7 @@ object Explain {
                           // (shuffle-free SMJ contract measured in-query
                           // with AQE + broadcast off — the 100 TB conf)
     "q135_incremental_facts", // delta arm: cutoff pushed into orders scan;
-                              // history arm: InMemoryTableScan of the fact
+                              // history arm: the pre-cutoff fact build
     "q136_snapshot_diff", // one full-outer SMJ on the key, md5 row-hash
                           // compare — the whole diff is a single pass
     "q139_data_expectations", // 10 checks = 3 single-pass conditional-count
@@ -358,7 +360,8 @@ object Explain {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val out = args.lift(1).getOrElse("docs/PLANS.md")
     // an audited name that is no longer registered fails the run
-    val audited = SparkEntry.select(Audited)
+    val audited = SparkEntry.select(
+      if (args.length > 2) args.drop(2).toSeq else Audited)
     val spark = DevSession.make()
     spark.sparkContext.setLogLevel("ERROR")
     val sb = new StringBuilder
@@ -392,7 +395,7 @@ object Explain {
     // separately so the audit keeps the full declarative lineage
     // visible (incl. the graft_bloom_contains scan-stage probe in the
     // decontamination arm).
-    locally {
+    if (audited.exists(_.name == "q389_training_materialization")) {
       val df = graft.operators.Materialize.flagSpinePlan(spark, sfDir)
       val plan = df.queryExecution.explainString(
         org.apache.spark.sql.execution.FormattedMode)

@@ -42,16 +42,14 @@ object AnnIncremental {
     * the measurable definition of "the rebuild can wait". */
   private val RecallFloor = 0.5
 
-  /** The frozen quantizer: Lloyd-trained on the BASE corpus only
-    * (cache-tagged so it never collides with q52's full-corpus
-    * centroids). Exposed for the spec's independent argmax pin. */
+  /** The frozen quantizer: Lloyd-trained on the BASE corpus only,
+    * checkpointed (the probe width, the probes and the merged assignment
+    * all read it). Exposed for the spec's independent argmax pin. */
   private[graft] def baseCentroids(spark: SparkSession,
       dir: String): DataFrame = {
-    val base = Tables.embeddings(spark, dir)
+    val base = AnnIndex.normedVecs(spark, dir)
       .filter(col("vec_id") % DeltaMod =!= DeltaResidue)
-      .select(col("vec_id"), col("embedding"),
-        DedupEmbedding.normExpr.as("nrm"))
-    AnnIndex.ivfCentroids(spark, dir, base, "_incrbase")
+    AnnIndex.lloydCentroids(base, base.count()).localCheckpoint()
   }
 
   /** Merged inverted-file assignment: base vectors under the
@@ -60,28 +58,28 @@ object AnnIncremental {
     * the spec's integrity laws. */
   private[graft] def mergedAssignment(spark: SparkSession,
       dir: String): DataFrame =
-    graft.sources.DfCache.df(spark, s"ann_incr_assigned|$dir") {
-      val all = Tables.embeddings(spark, dir)
-        .select(col("vec_id"), col("embedding"),
-          DedupEmbedding.normExpr.as("nrm"))
-      val base = all.filter(col("vec_id") % DeltaMod =!= DeltaResidue)
-      val delta = all.filter(col("vec_id") % DeltaMod === DeltaResidue)
-      val centroids = baseCentroids(spark, dir)
-      // two independent one-cell assignments against the same frozen
-      // broadcast centroid set: at scale the base half already exists
-      // on disk and only the delta job runs per batch
-      AnnIndex.nearestCells(base, centroids, 1, "crank")
-        .unionByName(AnnIndex.nearestCells(delta, centroids, 1, "crank"))
-        .select(col("vec_id").as("cid"), col("embedding").as("eb"),
-          col("nrm").as("nb"), col("cent_id").as("cell"))
-    }
+    assignToFrozen(spark, dir, baseCentroids(spark, dir))
 
-  private[graft] def incrementalTopK(spark: SparkSession,
-      dir: String): DataFrame = {
-    val all = Tables.embeddings(spark, dir)
-      .select(col("vec_id"), col("embedding"),
-        DedupEmbedding.normExpr.as("nrm"))
-    val centroids = baseCentroids(spark, dir)
+  /** [[mergedAssignment]] against given frozen `centroids`,
+    * checkpointed: q148 reads it twice (integrity counts, probes). */
+  private def assignToFrozen(spark: SparkSession, dir: String,
+      centroids: DataFrame): DataFrame = {
+    val all = AnnIndex.normedVecs(spark, dir)
+    val base = all.filter(col("vec_id") % DeltaMod =!= DeltaResidue)
+    val delta = all.filter(col("vec_id") % DeltaMod === DeltaResidue)
+    // two independent one-cell assignments against the same frozen
+    // broadcast centroid set: at scale the base half already exists
+    // on disk and only the delta job runs per batch
+    AnnIndex.nearestCells(base, centroids, 1, "crank")
+      .unionByName(AnnIndex.nearestCells(delta, centroids, 1, "crank"))
+      .select(col("vec_id").as("cid"), col("embedding").as("eb"),
+        col("nrm").as("nb"), col("cent_id").as("cell"))
+      .localCheckpoint()
+  }
+
+  private def incrementalTopK(spark: SparkSession, dir: String,
+      centroids: DataFrame, merged: DataFrame): DataFrame = {
+    val all = AnnIndex.normedVecs(spark, dir)
     val nCells = centroids.count()
     require(nCells > 0,
       s"empty incremental-IVF quantizer for $dir: no Lloyd seeds in base")
@@ -93,7 +91,7 @@ object AnnIncremental {
       .select(col("vec_id").as("qid"), col("embedding").as("ea"),
         col("nrm").as("na"), col("cent_id").as("cell"))
     val w = Window.partitionBy("qid").orderBy(desc("cosine"), asc("cid"))
-    probes.join(mergedAssignment(spark, dir), Seq("cell"))
+    probes.join(merged, Seq("cell"))
       .filter(col("qid") =!= col("cid"))
       .select(col("qid"), col("cid"), simCol)
       .distinct()
@@ -115,11 +113,13 @@ object AnnIncremental {
       sum(when(col("vec_id") % DeltaMod === DeltaResidue, 1L).otherwise(0L))
         .as("n_delta"),
       count(lit(1)).as("n_corpus"))
-    val assigned = mergedAssignment(spark, dir)
+    val centroids = baseCentroids(spark, dir)
+    val merged = assignToFrozen(spark, dir, centroids)
+    val assigned = merged
       .agg(count(lit(1)).as("n_assigned"),
         countDistinct(col("cid")).as("n_assigned_distinct"))
     val contract = avgRecallContract(spark, dir,
-      incrementalTopK(spark, dir), RecallFloor)
+      incrementalTopK(spark, dir, centroids, merged), RecallFloor)
     counts.crossJoin(broadcast(assigned)).crossJoin(broadcast(contract))
       .select(col("n_queries"), col("n_base"), col("n_delta"),
         (col("n_assigned") === col("n_corpus") &&

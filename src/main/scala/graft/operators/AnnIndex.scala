@@ -66,51 +66,64 @@ object AnnIndex {
     picked.join(vecs, Seq("vec_id"))
   }
 
-  /** Cell count of the (cached) IVF quantizer — exposed for the
-    * ProbeSweep dev tool so sweeps report probe FRACTION honestly. */
-  private[graft] def ivfCellCount(spark: SparkSession, dir: String): Long = {
-    val all = Tables.embeddings(spark, dir)
+  /** The embeddings as (vec_id, embedding, nrm): the input every IVF
+    * build, assignment and probe reads. */
+  private[operators] def normedVecs(spark: SparkSession,
+      dir: String): DataFrame =
+    Tables.embeddings(spark, dir)
       .select(col("vec_id"), col("embedding"), DedupEmbedding.normExpr.as("nrm"))
-    graft.sources.DfCache.value(spark, s"ivf_ncells|$dir")(
-      ivfCentroids(spark, dir, all).count())
-  }
 
-  /** `cacheTag` namespaces the per-(session, dir) cache so a quantizer
-    * trained on a sub-corpus (q148's base-only build) cannot collide
-    * with the full-corpus one q52/q114 share. */
-  private[operators] def ivfCentroids(spark: SparkSession, dir: String,
-      all: DataFrame, cacheTag: String = ""): DataFrame =
-    graft.sources.DfCache.df(spark, s"ivf_centroids$cacheTag|$dir") {
-      // cells ~ sqrt(N) — THE standard IVF sizing. Cells growing
-      // linearly with the corpus (the old fixed every-43rd stride)
-      // makes assignment O(N x cells) = O(N^2/43): the r04 10x study
-      // measured 18x wall-clock at 10x data. sqrt sizing keeps the
-      // build O(N^1.5) and balances cell size (~sqrt(N) members) vs
-      // probe count at any corpus size.
-      val n = graft.sources.DfCache.value(spark, s"emb_count$cacheTag|$dir")(
-        all.count())
-      val targetCells = math.max(4L, math.ceil(math.sqrt(n.toDouble)).toLong)
-      val stride = math.max(1L, n / targetCells)
-      var cent = all.filter(col("vec_id") % stride === 0)
-        .select(col("vec_id").as("cent_id"),
-          col("embedding").cast("array<double>").as("cemb"),
-          col("nrm").as("cnrm"))
-      for (_ <- 1 to IvfLloydIters) {
-        val assigned = nearestCells(all, cent, 1, "crank")
-          .select(col("cent_id").as("cell"), col("embedding"))
-        cent = assigned
-          .select(col("cell"), posexplode(col("embedding")).as(Seq("pos", "v")))
-          .groupBy("cell", "pos")
-          .agg((sum((col("v").cast("double") * 1e6).cast("bigint"))
-            .cast("double") / count(lit(1)) / 1e6).as("c"))
-          .groupBy("cell")
-          .agg(expr("transform(array_sort(collect_list(struct(pos, c))), s -> s.c)")
-            .as("cemb"))
-          .select(col("cell").as("cent_id"), col("cemb"),
-            sqrt(expr("graft_dot(cemb, cemb)")).as("cnrm"))
-      }
-      cent
+  /** Corpus size, cached per (session, dir): the IVF, PQ, MMR and
+    * embedding-LSH sizing all read it. */
+  private[graft] def embCount(spark: SparkSession, dir: String): Long =
+    graft.sources.DfCache.value(spark, s"emb_count|$dir")(
+      Tables.embeddings(spark, dir).count())
+
+  /** Cell count of the cached IVF quantizer: q52/q114 size their probe
+    * width from it, q133 reports it, and the ProbeSweep dev tool
+    * reports probe FRACTION with it. */
+  private[graft] def ivfCellCount(spark: SparkSession, dir: String): Long =
+    graft.sources.DfCache.value(spark, s"ivf_ncells|$dir")(
+      ivfCentroids(spark, dir).count())
+
+  /** The full-corpus IVF quantizer, cached per (session, dir) and
+    * shared by q52, q107, q114 and q133. */
+  private[operators] def ivfCentroids(spark: SparkSession,
+      dir: String): DataFrame =
+    graft.sources.DfCache.df(spark, s"ivf_centroids|$dir")(
+      lloydCentroids(normedVecs(spark, dir), embCount(spark, dir)))
+
+  /** Lloyd-trained centroids (cent_id, cemb, cnrm) over `all`, a
+    * (vec_id, embedding, nrm) frame of `n` rows. */
+  private[operators] def lloydCentroids(all: DataFrame, n: Long): DataFrame = {
+    // cells ~ sqrt(N) — THE standard IVF sizing. Cells growing
+    // linearly with the corpus (the old fixed every-43rd stride)
+    // makes assignment O(N x cells) = O(N^2/43): the r04 10x study
+    // measured 18x wall-clock at 10x data. sqrt sizing keeps the
+    // build O(N^1.5) and balances cell size (~sqrt(N) members) vs
+    // probe count at any corpus size.
+    val targetCells = math.max(4L, math.ceil(math.sqrt(n.toDouble)).toLong)
+    val stride = math.max(1L, n / targetCells)
+    var cent = all.filter(col("vec_id") % stride === 0)
+      .select(col("vec_id").as("cent_id"),
+        col("embedding").cast("array<double>").as("cemb"),
+        col("nrm").as("cnrm"))
+    for (_ <- 1 to IvfLloydIters) {
+      val assigned = nearestCells(all, cent, 1, "crank")
+        .select(col("cent_id").as("cell"), col("embedding"))
+      cent = assigned
+        .select(col("cell"), posexplode(col("embedding")).as(Seq("pos", "v")))
+        .groupBy("cell", "pos")
+        .agg((sum((col("v").cast("double") * 1e6).cast("bigint"))
+          .cast("double") / count(lit(1)) / 1e6).as("c"))
+        .groupBy("cell")
+        .agg(expr("transform(array_sort(collect_list(struct(pos, c))), s -> s.c)")
+          .as("cemb"))
+        .select(col("cell").as("cent_id"), col("cemb"),
+          sqrt(expr("graft_dot(cemb, cemb)")).as("cnrm"))
     }
+    cent
+  }
 
   /** Probe-width policy, shared by q52 (IVF) and q114 (IVF+PQ):
     * `nprobe = clamp(scale * log2(cells), floor, cells)` — LOGARITHMIC
@@ -160,14 +173,10 @@ object AnnIndex {
     * files. */
   def ivfTopK(spark: SparkSession, dir: String,
       nprobeOverride: Option[Int] = None): DataFrame = {
-    val all = Tables.embeddings(spark, dir)
-      .select(col("vec_id"), col("embedding"), DedupEmbedding.normExpr.as("nrm"))
-    val centroids = ivfCentroids(spark, dir, all)
-    // the cell count is a cached limit-free tiny count
-    val nCells = graft.sources.DfCache.value(spark, s"ivf_ncells|$dir")(
-      centroids.count())
+    val all = normedVecs(spark, dir)
+    val centroids = ivfCentroids(spark, dir)
     val nprobe = nprobeOverride.getOrElse(
-      ivfNprobe(nCells, IvfProbeScale, ProbeFloor))
+      ivfNprobe(ivfCellCount(spark, dir), IvfProbeScale, ProbeFloor))
     val assigned = nearestCells(all, centroids, 1, "crank")
       .select(col("vec_id").as("cid"), col("embedding").as("eb"),
         col("nrm").as("nb"), col("cent_id").as("cell"))
@@ -216,14 +225,23 @@ object AnnIndex {
       .select(col("vec_id"), col("sub"),
         expr(s"slice(emb, sub * $subDim + 1, $subDim)").as("svec"))
 
+  /** Subvector width: the embedding dimension split into [[PqM]]
+    * equal slices (a dimension [[PqM]] does not divide is refused). */
+  private def pqSubDim(spark: SparkSession, dir: String): Int = {
+    val dim = embeddingDim(spark, dir)
+    if (dim % PqM != 0)
+      throw new IllegalStateException(
+        s"PQ requires dim % $PqM == 0, got $dim")
+    dim / PqM
+  }
+
   /** Corpus subvector table, persisted per (session, dir): the Lloyd
     * assign passes, the final encode, and the query-side LUT all scan
     * it — caching turns 4 parquet-read+explode passes into one. */
-  private def corpusSubvecs(spark: SparkSession, dir: String,
-      subDim: Int): DataFrame =
+  private def corpusSubvecs(spark: SparkSession, dir: String): DataFrame =
     graft.sources.DfCache.df(spark, s"pq_subvecs|$dir")(
       subvecs(Tables.embeddings(spark, dir).select("vec_id", "embedding"),
-        subDim))
+        pqSubDim(spark, dir)))
 
   /** Nearest codebook entry per (vec_id, sub) by exact L2 (argmin of
     * ||s||^2 - 2 s.c + ||c||^2, graft_dot kernels), code tie-break.
@@ -248,12 +266,10 @@ object AnnIndex {
     * (session, dir): the codebook is the trained artifact a PQ index
     * ships; at 100 TB it trains on a sample and encodes the full
     * corpus with one broadcast. */
-  private def pqCodebooks(spark: SparkSession, dir: String,
-      subDim: Int): DataFrame =
+  private def pqCodebooks(spark: SparkSession, dir: String): DataFrame =
     graft.sources.DfCache.df(spark, s"pq_codebooks|$dir") {
-      val sv = corpusSubvecs(spark, dir, subDim)
-      val n = graft.sources.DfCache.value(spark, s"emb_count|$dir")(
-        Tables.embeddings(spark, dir).count())
+      val sv = corpusSubvecs(spark, dir)
+      val n = embCount(spark, dir)
       val stride = math.max(1L, n / PqK)
       val w = Window.partitionBy("sub").orderBy("vec_id")
       var books = sv.filter(col("vec_id") % stride === 0)
@@ -278,21 +294,19 @@ object AnnIndex {
   /** The encoded corpus (cid, sub, code) — N x M narrow rows, the
     * compressed PQ index artifact. Cached per (session, dir): q113
     * (flat ADC) and q114 (IVF+PQ) scan the same codes. */
-  private def pqCodes(spark: SparkSession, dir: String,
-      subDim: Int): DataFrame =
+  private def pqCodes(spark: SparkSession, dir: String): DataFrame =
     graft.sources.DfCache.df(spark, s"pq_codes|$dir") {
-      val books = pqCodebooks(spark, dir, subDim)
-      assignCodes(corpusSubvecs(spark, dir, subDim), books)
+      val books = pqCodebooks(spark, dir)
+      assignCodes(corpusSubvecs(spark, dir), books)
         .select(col("vec_id").as("cid"), col("sub"), col("code"))
     }
 
   /** Query-side ADC lookup table: qdot[qid][sub][code] = exact dot of
     * the query's subvector with that codebook entry. Q x M x K rows —
     * tiny, broadcast at every use. */
-  private def pqLut(spark: SparkSession, dir: String,
-      subDim: Int): DataFrame =
-    onlyQueries(spark, dir, corpusSubvecs(spark, dir, subDim))
-      .join(broadcast(pqCodebooks(spark, dir, subDim)), Seq("sub"))
+  private def pqLut(spark: SparkSession, dir: String): DataFrame =
+    onlyQueries(spark, dir, corpusSubvecs(spark, dir))
+      .join(broadcast(pqCodebooks(spark, dir)), Seq("sub"))
       .select(col("vec_id").as("qid"), col("sub"), col("code"),
         expr("graft_dot(svec, cvec)").as("qdot"))
 
@@ -310,13 +324,8 @@ object AnnIndex {
     * Raw-vector I/O drops from O(Q x N) (q36 brute) to
     * O(Q x [[PqShortlist]]). */
   def pqTopK(spark: SparkSession, dir: String): DataFrame = {
-    val dim = embeddingDim(spark, dir)
-    if (dim % PqM != 0)
-      throw new IllegalStateException(
-        s"PQ requires dim % $PqM == 0, got $dim")
-    val subDim = dim / PqM
-    val codes = pqCodes(spark, dir, subDim)
-    val lut = pqLut(spark, dir, subDim)
+    val codes = pqCodes(spark, dir)
+    val lut = pqLut(spark, dir)
     val approx = codes.join(broadcast(lut), Seq("sub", "code"))
       .filter(col("qid") =!= col("cid"))
       .groupBy("qid", "cid")
@@ -377,18 +386,10 @@ object AnnIndex {
     * is exactly the budget that pays for wider probes. */
   def ivfPqTopK(spark: SparkSession, dir: String,
       nprobeOverride: Option[Int] = None): DataFrame = {
-    val dim = embeddingDim(spark, dir)
-    if (dim % PqM != 0)
-      throw new IllegalStateException(
-        s"PQ requires dim % $PqM == 0, got $dim")
-    val subDim = dim / PqM
-    val allN = Tables.embeddings(spark, dir)
-      .select(col("vec_id"), col("embedding"), DedupEmbedding.normExpr.as("nrm"))
-    val centroids = ivfCentroids(spark, dir, allN)
-    val nCells = graft.sources.DfCache.value(spark, s"ivf_ncells|$dir")(
-      centroids.count())
+    val allN = normedVecs(spark, dir)
+    val centroids = ivfCentroids(spark, dir)
     val nprobe = nprobeOverride.getOrElse(
-      ivfNprobe(nCells, IvfPqProbeScale, ProbeFloor))
+      ivfNprobe(ivfCellCount(spark, dir), IvfPqProbeScale, ProbeFloor))
     val assigned = nearestCells(allN, centroids, 1, "crank")
       .select(col("vec_id").as("cid"), col("cent_id").as("cell"))
     val probes = nearestCells(
@@ -398,8 +399,8 @@ object AnnIndex {
     val cand = probes.join(assigned, Seq("cell"))
       .filter(col("qid") =!= col("cid"))
       .select("qid", "cid").distinct()
-    val codes = pqCodes(spark, dir, subDim)
-    val lut = pqLut(spark, dir, subDim)
+    val codes = pqCodes(spark, dir)
+    val lut = pqLut(spark, dir)
     val approx = cand.join(codes, Seq("cid"))
       .join(broadcast(lut), Seq("qid", "sub", "code"))
       .groupBy("qid", "cid")

@@ -50,9 +50,8 @@ object AnnRetrieval {
     * SemDeDup paper's cluster-then-pairwise shape, never corpus^2. */
   private[graft] def semanticDrops(spark: SparkSession, dir: String)
       : DataFrame = {
-    val all = Tables.embeddings(spark, dir)
-      .select(col("vec_id"), col("embedding"), DedupEmbedding.normExpr.as("nrm"))
-    val centroids = ivfCentroids(spark, dir, all)
+    val all = AnnIndex.normedVecs(spark, dir)
+    val centroids = ivfCentroids(spark, dir)
     val blocked = nearestCells(all, centroids, SemDedupBlocks, "brank")
       .select(col("cent_id").as("cell"), col("vec_id"), col("embedding"),
         col("nrm"))
@@ -325,7 +324,7 @@ object AnnRetrieval {
   }
 
   /** The micro-quantized (label × dim) centroid profile shared by
-    * q223/q233/q386 (one cached build per (session, dir)): per-
+    * q223/q233/q265/q386 (one cached build per (session, dir)): per-
     * coordinate sums fold exact BIGINT micro-units, the centroid is
     * re-quantized to integer micro-units after the single mean
     * division, so every downstream dot/norm fold runs over exact
@@ -661,18 +660,10 @@ object AnnRetrieval {
     * BIGINT dot itself); all four cells are exact counts, accuracies
     * are single divisions, and the continuity-corrected statistic
     * (|b−c|−1)²/(b+c) is one division of exact integers (NULL when
-    * b + c = 0 — no disagreements, no test). Centroid table shared
-    * with q233 via DfCache. */
+    * b + c = 0 — no disagreements, no test). Centroid table: the
+    * cached [[labelCentroids]]. */
   def q265McnemarPicks(spark: SparkSession, dir: String): DataFrame = {
-    val cd = graft.sources.DfCache.df(spark, s"label_centroids|$dir")(
-      Tables.embeddings(spark, dir)
-        .select(col("label"), posexplode(col("embedding")).as(Seq("pos", "v")))
-        .groupBy("label", "pos")
-        .agg(count(lit(1)).as("n"),
-          sum(expr("cast(round(cast(v as double) * 1000000, 0) as bigint)"))
-            .as("s"))
-        .select(col("label"), col("pos"), col("n"),
-          expr("cast(round(cast(s as double) / n, 0) as bigint)").as("cq")))
+    val cd = labelCentroids(spark, dir)
     val norms = cd.groupBy(col("label").as("c_label"))
       .agg(sum(col("cq") * col("cq")).as("c2"))
     val pts = Tables.embeddings(spark, dir)

@@ -400,12 +400,12 @@ object Breadth3 {
     * path at 100 TB/day rates. Contract oracle like q49: the merged
     * estimate must land within 15% of the exact distinct count. */
   def q100HllUnion(spark: SparkSession, dir: String): DataFrame = {
-    // one cached 3-column projection feeds both the sketch build and
-    // the exact ground truth (no second events scan)
-    val ev = graft.sources.DfCache.df(spark, s"hll_events|$dir")(
-      Tables.events(spark, dir)
-        .select(col("event_type"), to_date(col("ts")).as("day"),
-          col("user_id")))
+    // one checkpointed 3-column projection feeds both the sketch build
+    // and the exact ground truth (no second events scan)
+    val ev = Tables.events(spark, dir)
+      .select(col("event_type"), to_date(col("ts")).as("day"),
+        col("user_id"))
+      .localCheckpoint()
     val daily = ev.groupBy("event_type", "day")
       .agg(expr("hll_sketch_agg(user_id)").as("sk"))
     // count(col) skips a null-day group, matching the oracle's

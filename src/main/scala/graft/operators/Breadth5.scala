@@ -42,8 +42,7 @@ object Breadth5 {
     * Q×N scan anywhere. */
   def q348HammingRetrieval(spark: SparkSession, dir: String): DataFrame = {
     val raw = DedupEmbedding.embeddingBands(spark, dir)
-    val nVecs = graft.sources.DfCache.value(spark, s"emb_count|$dir")(
-      Tables.embeddings(spark, dir).count())
+    val nVecs = AnnIndex.embCount(spark, dir)
     val small = raw.groupBy("k", "v")
       .agg(count(lit(1)).as("bucket_n"))
       .filter(col("bucket_n") <= DedupEmbedding.embHotBucketCap(nVecs))
@@ -56,10 +55,11 @@ object Breadth5 {
       .filter(col("qid") =!= col("cid"))
       .select("qid", "cid")
       .distinct()
-    val sig = graft.sources.DfCache.df(spark, s"hamm_sig|$dir")(
-      raw.groupBy("vec_id")
-        .agg(expr("transform(array_sort(collect_list(struct(k, v))), s -> s.v)")
-          .as("sig")))
+    // read twice: the query side and the candidate side
+    val sig = raw.groupBy("vec_id")
+      .agg(expr("transform(array_sort(collect_list(struct(k, v))), s -> s.v)")
+        .as("sig"))
+      .localCheckpoint()
     val w = Window.partitionBy("qid").orderBy(col("hamming"), col("cid"))
     cand
       .join(sig.select(col("vec_id").as("qid"), col("sig").as("qs")),
@@ -126,8 +126,7 @@ object Breadth5 {
     * Scale shape: the top-k table is |queries|·k rows; the exposure
     * profile at most that; one distributed ordinal over it. */
   def q350RetrievalExposure(spark: SparkSession, dir: String): DataFrame = {
-    val nVecs = graft.sources.DfCache.value(spark, s"emb_count|$dir")(
-      Tables.embeddings(spark, dir).count())
+    val nVecs = AnnIndex.embCount(spark, dir)
     val expo = Similarity.q36AnnBruteTopK(spark, dir)
       .groupBy("cid").agg(count(lit(1)).as("x"))
     val ranked = DistributedRank.withGlobalRank(expo, "r",
@@ -136,7 +135,9 @@ object Breadth5 {
       .agg(count(lit(1)).as("n_exposed"), sum(col("x")).as("sx"),
         sum(col("r") * col("x")).as("srx"))
       .select(lit(nVecs).as("n_corpus"), col("n_exposed"),
-        round(col("n_exposed").cast("double") / nVecs, 6).as("coverage"),
+        // an empty corpus has no coverage: NULL, as the oracle's 0 / 0
+        round(when(lit(nVecs) > 0, col("n_exposed").cast("double") / nVecs), 6)
+          .as("coverage"),
         col("sx").as("total_slots"),
         // Σ rank·x over ALL items = srx + zero_count·sx (every exposed
         // rank shifts past the zeros); Gini = (2Σrx − (n+1)Σx)/(nΣx)

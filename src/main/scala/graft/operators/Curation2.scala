@@ -104,28 +104,27 @@ object Curation2 {
     // measured cut of this operator recomputed the explode three times
     // (raw counts, target counts, scoring): 28.3s at pseudo-sf1 for a
     // scan-shaped pass — the classic uncached-DAG-reuse tax.
-    val docBuckets = graft.sources.DfCache.df(spark, s"dsir_db|$dir") {
-      // repartition the raw docs before the compute-heavy tokenize +
-      // bigram explode (r15, the shingles input-skew guard): the
-      // single-row-group test file otherwise runs the whole feature
-      // derivation as one task inside the scan stage
-      val docs = Tables.documents(spark, dir).repartition(col("doc_id"))
-        .withColumn("ws",
-          expr("filter(split(trim(text), ' '), w -> length(w) > 0)"))
-        .filter(size(col("ws")) >= 1)
-      // features = unigrams ++ adjacent bigrams, as one exploded column
-      // (the size >= 2 guard: Spark's sequence(1, 0) counts DOWN
-      // ([1, 0]), it is not empty like DuckDB's generate_series(1, 0))
-      docs.select(col("doc_id"), col("lang"),
-          explode(concat(col("ws"), expr(
-            """CASE WHEN size(ws) >= 2
-              |     THEN transform(sequence(1, size(ws) - 1),
-              |                    i -> concat_ws(' ', slice(ws, i, 2)))
-              |     ELSE CAST(array() AS array<string>) END""".stripMargin)))
-            .as("f"))
-        .withColumn("b", pmod(Hashing.md5Hash60(col("f")), lit(DsirBuckets)))
-        .groupBy("doc_id", "lang", "b").agg(count(lit(1)).as("c"))
-    }
+    // repartition the raw docs before the compute-heavy tokenize +
+    // bigram explode (r15, the shingles input-skew guard): the
+    // single-row-group test file otherwise runs the whole feature
+    // derivation as one task inside the scan stage
+    val docs = Tables.documents(spark, dir).repartition(col("doc_id"))
+      .withColumn("ws",
+        expr("filter(split(trim(text), ' '), w -> length(w) > 0)"))
+      .filter(size(col("ws")) >= 1)
+    // features = unigrams ++ adjacent bigrams, as one exploded column
+    // (the size >= 2 guard: Spark's sequence(1, 0) counts DOWN
+    // ([1, 0]), it is not empty like DuckDB's generate_series(1, 0))
+    val docBuckets = docs.select(col("doc_id"), col("lang"),
+        explode(concat(col("ws"), expr(
+          """CASE WHEN size(ws) >= 2
+            |     THEN transform(sequence(1, size(ws) - 1),
+            |                    i -> concat_ws(' ', slice(ws, i, 2)))
+            |     ELSE CAST(array() AS array<string>) END""".stripMargin)))
+          .as("f"))
+      .withColumn("b", pmod(Hashing.md5Hash60(col("f")), lit(DsirBuckets)))
+      .groupBy("doc_id", "lang", "b").agg(count(lit(1)).as("c"))
+      .localCheckpoint()
     val raw = docBuckets.groupBy("b").agg(sum(col("c")).as("r"))
     val tgt = docBuckets.filter(col("lang") === "en")
       .groupBy("b").agg(sum(col("c")).as("t"))

@@ -191,16 +191,18 @@ object Dedup {
     val bandCols = (0 to 5).map { k =>
       (0 to 9).map(j => shiftleft(bitCols(k * 10 + j), j)).reduce(_ + _)
     }
-    graft.sources.DfCache.df(spark, s"simhash_sigs|$dir")(
-      Tables.documents(spark, dir)
-        .withColumn("word", explode(split(col("text"), " ")))
-        .groupBy(col("doc_id"), col("word"))
-        .agg(count(lit(1)).as("cnt"))
-        .withColumn("h", Hashing.md5Hash60(col("word")))
-        .groupBy("doc_id")
-        .agg(sums.head, sums.tail: _*)
-        .select(col("doc_id"), sigLo.as("sig_lo"), sigHi.as("sig_hi"),
-          array(bandCols: _*).as("bands")))
+    // checkpointed: q33 reads it four times (both band sides, both
+    // signature sides)
+    Tables.documents(spark, dir)
+      .withColumn("word", explode(split(col("text"), " ")))
+      .groupBy(col("doc_id"), col("word"))
+      .agg(count(lit(1)).as("cnt"))
+      .withColumn("h", Hashing.md5Hash60(col("word")))
+      .groupBy("doc_id")
+      .agg(sums.head, sums.tail: _*)
+      .select(col("doc_id"), sigLo.as("sig_lo"), sigHi.as("sig_hi"),
+        array(bandCols: _*).as("bands"))
+      .localCheckpoint()
   }
 
   /** q33 — SimHash near-dup: 60-bit signature over tf-weighted word
@@ -230,25 +232,24 @@ object Dedup {
       .orderBy("id1", "id2")
   }
 
-  /** Per-ingest-day MinHash band table — the persisted sketch artifact
-    * an INCREMENTAL dedup pipeline stores per batch (day = doc_id % 2
+  /** Per-ingest-day MinHash band table — the sketch artifact an
+    * INCREMENTAL dedup pipeline stores per batch (day = doc_id % 2
     * here, standing in for an ingest-date partition). Each day's table
-    * is built from that day's documents ONLY and cached independently:
-    * the artifact yesterday's job wrote. Because MinHash state is
-    * mergeable (element-wise min — [[graft.functions.MinHashAggregator]]
-    * is the library form, property-tested merge == one-shot), per-day
-    * sketches compose without ever re-reading prior days' text. */
+    * is built from that day's documents ONLY: the artifact yesterday's
+    * job wrote. Because MinHash state is mergeable (element-wise min —
+    * [[graft.functions.MinHashAggregator]] is the library form,
+    * property-tested merge == one-shot), per-day sketches compose
+    * without ever re-reading prior days' text. */
   private def minhashBandsForDay(spark: SparkSession, dir: String,
       day: Int): DataFrame =
-    graft.sources.DfCache.df(spark, s"minhash_day$day|$dir")(
-      // same input-skew guard as [[shingles]]: parallelize the
-      // compute-heavy shingling off the single-split day scan
-      bandsFromShingles(shingleRows(
-        Tables.documents(spark, dir).filter(col("doc_id") % 2 === day)
-          .repartition(col("doc_id")))))
+    // same input-skew guard as [[shingles]]: parallelize the
+    // compute-heavy shingling off the single-split day scan
+    bandsFromShingles(shingleRows(
+      Tables.documents(spark, dir).filter(col("doc_id") % 2 === day)
+        .repartition(col("doc_id"))))
 
   /** q102 — incremental cross-batch near-dup discovery: today's (day-1)
-    * band table joined against yesterday's PERSISTED band table on the
+    * band table joined against yesterday's band table on the
     * band signature — the 100 TB/day operational dedup story (the HLL
     * twin is q100): batch N+1 is deduped against the whole history by
     * reading history's sketches, never its text. Same

@@ -30,17 +30,14 @@ object DedupClusters {
     * convergence checked distributively (the only driver-side value is
     * one boolean count). Both paths produce identical labels. */
   def q73DedupClusters(spark: SparkSession, dir: String): DataFrame = {
-    // release actions for state that must outlive the build only until
-    // the result has materialized into the session cache (it backs the
-    // result's lineage until then)
+    // release actions for the label-propagation rounds: `df` returns the
+    // result already materialized in the session cache, so the rounds
+    // that backed its lineage are freed as soon as it returns
     val toRelease = scala.collection.mutable.ArrayBuffer.empty[() => Unit]
     val out = graft.sources.DfCache.df(spark, s"dedup_clusters|$dir") {
       buildClusters(spark, dir, toRelease)
     }
-    if (toRelease.nonEmpty) { // first build: force, then free the rounds
-      out.count()
-      toRelease.foreach(_.apply())
-    }
+    toRelease.foreach(_.apply())
     out
   }
 

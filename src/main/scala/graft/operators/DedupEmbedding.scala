@@ -163,8 +163,7 @@ object DedupEmbedding {
     // hot-bucket guard (see embHotBucketCap): the bucket-size table is
     // tiny (<= band space), so the exclusion join broadcasts. The count
     // is cached and shared with the IVF sizing probe.
-    val nVecs = graft.sources.DfCache.value(spark, s"emb_count|$dir")(
-      Tables.embeddings(spark, dir).count())
+    val nVecs = AnnIndex.embCount(spark, dir)
     val smallBuckets = raw.groupBy("k", "v")
       .agg(count(lit(1)).as("bucket_n"))
       .filter(col("bucket_n") <= embHotBucketCap(nVecs))

@@ -63,6 +63,30 @@ object Drift {
       .when(psi < 0.25, lit("moderate"))
       .otherwise(lit("drifted"))
 
+  /** The events stream split at the midpoint of its observed time
+    * range: (event_type, value, is_ref), is_ref = the first half. The
+    * cut is data-derived, the integer midpoint of [min, max]
+    * microseconds, exact and identical in both engines. Cached per
+    * (session, dir) and shared by q151, q234 and q278, so the monitors
+    * read the same snapshot. */
+  private def psiFlagged(spark: SparkSession, dir: String): DataFrame =
+    graft.sources.DfCache.df(spark, s"psi_flagged|$dir") {
+      val ev = Tables.events(spark, dir)
+        .select(unix_micros(col("ts")).as("us"), col("event_type"),
+          col("value"))
+      val cut = ev.agg(expr("(min(us) + max(us)) div 2").as("cut"))
+      ev.crossJoin(broadcast(cut))
+        .select(col("event_type"), col("value"),
+          (col("us") < col("cut")).as("is_ref"))
+    }
+
+  /** The reference half's exact decile edges of `value`, rounded to 6
+    * decimals once: one row, column `edges`. */
+  private def refDecileEdges(flagged: DataFrame): DataFrame =
+    flagged.filter(col("is_ref"))
+      .agg(expr(s"transform(percentile(value, array(${DecileProbes.mkString(", ")}))," +
+        " e -> round(e, 6))").as("edges"))
+
   /** q151 — PSI drift monitor over the events stream, split at the
     * midpoint of the observed time range (reference = first half,
     * current = second half): the continuous `value` distribution
@@ -74,20 +98,9 @@ object Drift {
     * steady-state output; the spec drives the drifted branch through
     * [[psiOf]] with a shifted distribution. */
   def q151PsiDrift(spark: SparkSession, dir: String): DataFrame = {
-    val ev = Tables.events(spark, dir)
-      .select(unix_micros(col("ts")).as("us"), col("event_type"),
-        col("value"))
-    // data-derived split: integer midpoint of [min, max] microseconds —
-    // exact and identical in both engines
-    val cut = ev.agg(expr("(min(us) + max(us)) div 2").as("cut"))
-    val flagged = graft.sources.DfCache.df(spark, s"psi_flagged|$dir")(
-      ev.crossJoin(broadcast(cut))
-        .select(col("event_type"), col("value"),
-          (col("us") < col("cut")).as("is_ref")))
+    val flagged = psiFlagged(spark, dir)
     // continuous feature: ref-batch decile edges, rounded once
-    val edges = flagged.filter(col("is_ref"))
-      .agg(expr(s"transform(percentile(value, array(${DecileProbes.mkString(", ")}))," +
-        " e -> round(e, 6))").as("edges"))
+    val edges = refDecileEdges(flagged)
     val valueBuckets = flagged.crossJoin(broadcast(edges))
       .select(col("is_ref"),
         size(expr("filter(edges, e -> value >= e)")).as("bucket"))
@@ -171,17 +184,8 @@ object Drift {
     * Scale shape: one conditional-count fold of the scan to the
     * |types|·buckets profile; everything after runs on that profile. */
   def q234KsDrift(spark: SparkSession, dir: String): DataFrame = {
-    val ev = Tables.events(spark, dir)
-      .select(unix_micros(col("ts")).as("us"), col("event_type"),
-        col("value"))
-    val cut = ev.agg(expr("(min(us) + max(us)) div 2").as("cut"))
-    val flagged = graft.sources.DfCache.df(spark, s"psi_flagged|$dir")(
-      ev.crossJoin(broadcast(cut))
-        .select(col("event_type"), col("value"),
-          (col("us") < col("cut")).as("is_ref")))
-    val edges = flagged.filter(col("is_ref"))
-      .agg(expr(s"transform(percentile(value, array(${DecileProbes.mkString(", ")}))," +
-        " e -> round(e, 6))").as("edges"))
+    val flagged = psiFlagged(spark, dir)
+    val edges = refDecileEdges(flagged)
     val buckets = flagged.crossJoin(broadcast(edges))
       .select(col("event_type"), col("is_ref"),
         size(expr("filter(edges, e -> value >= e)")).as("bucket"))
@@ -370,14 +374,7 @@ object Drift {
     * shifts are single subtractions/divisions of the shared doubles,
     * rounded once, mirrored verbatim. */
   def q278QuantileDrift(spark: SparkSession, dir: String): DataFrame = {
-    val ev = Tables.events(spark, dir)
-      .select(unix_micros(col("ts")).as("us"), col("event_type"),
-        col("value"))
-    val cut = ev.agg(expr("(min(us) + max(us)) div 2").as("cut"))
-    val flagged = ev.crossJoin(broadcast(cut))
-      .select(col("event_type"), col("value"),
-        (col("us") < col("cut")).as("is_ref"))
-    val qs = flagged.groupBy("event_type", "is_ref")
+    val qs = psiFlagged(spark, dir).groupBy("event_type", "is_ref")
       .agg(expr(s"percentile(value, array(${DecileProbes.mkString(", ")}))")
         .as("q"))
     qs.select(col("event_type"), col("is_ref"),

@@ -257,14 +257,15 @@ object FeaturePrep {
     * enum-sized contingency profiles (≤ 25×5 cells); the densify
     * cross join runs on attribute DISTINCTS, never rows. */
   def q306CramersV(spark: SparkSession, dir: String): DataFrame = {
-    val base = graft.sources.DfCache.df(spark, s"cramers_base|$dir")(
-      Tables.orders(spark, dir)
-        .select(col("o_custkey"), col("o_orderpriority").as("priority"))
-        .join(Tables.customer(spark, dir)
-          .select(col("c_custkey").as("o_custkey"),
-            col("c_nationkey").cast("string").as("nation"),
-            col("c_mktsegment").as("segment")), Seq("o_custkey"))
-        .select("nation", "segment", "priority"))
+    // read by all three attribute pairs
+    val base = Tables.orders(spark, dir)
+      .select(col("o_custkey"), col("o_orderpriority").as("priority"))
+      .join(Tables.customer(spark, dir)
+        .select(col("c_custkey").as("o_custkey"),
+          col("c_nationkey").cast("string").as("nation"),
+          col("c_mktsegment").as("segment")), Seq("o_custkey"))
+      .select("nation", "segment", "priority")
+      .localCheckpoint()
     def pairV(a: String, b: String): DataFrame = {
       val cells = base.groupBy(col(a).as("ka"), col(b).as("kb"))
         .agg(count(lit(1)).as("n_ij"))

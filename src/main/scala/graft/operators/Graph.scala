@@ -56,10 +56,8 @@ object Graph {
     // and an unpersisted outdeg would re-run the groupBy 5 times
     val outdeg = shipmentOutdeg(spark, dir)
     val n = nodes.count()
-    // Final ranks are DfCache'd so repeated calls skip the loop.
-    val ranks = graft.sources.DfCache.df(spark, s"pr_ranks|$dir")(
-      pagerankRanks(nodes, shipmentEdgesD(spark, dir), outdeg, n))
-    ranks.select(col("node"), round(col("r"), 8).as("rank"),
+    pagerankRanks(nodes, shipmentEdgesD(spark, dir), outdeg, n)
+      .select(col("node"), round(col("r"), 8).as("rank"),
         col("converged"))
       .orderBy(desc("rank"), asc("node"))
       .limit(TopK)

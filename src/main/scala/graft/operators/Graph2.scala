@@ -198,9 +198,8 @@ object Graph2 {
     * unchanged. */
   def q144Hits(spark: SparkSession, dir: String): DataFrame = {
     val edges = Graph.shipmentEdges(spark, dir)
-    val hubs0 = graft.sources.DfCache.df(spark, s"hits_hubs|$dir")(
-      edges.select(col("src").as("node")).distinct()
-        .repartition(col("node")))
+    val hubs0 = edges.select(col("src").as("node")).distinct()
+      .repartition(col("node"))
     // h/a are NORMALIZED views over the raw checkpoints (lazy literal
     // division — never re-materialized)
     var h = hubs0.withColumn("h", lit(1.0))
@@ -255,6 +254,18 @@ object Graph2 {
     topA.unionAll(topH).orderBy(asc("kind"), desc("score"), asc("node"))
   }
 
+  /** The co-purchase graph as a u-partitioned adjacency list, both
+    * orientations of every edge (u, v), cached per (session, dir) and
+    * shared by q145 and q152. */
+  private def undirectedCopurchase(spark: SparkSession,
+      dir: String): DataFrame =
+    graft.sources.DfCache.df(spark, s"bfs_und|$dir") {
+      val edges = Graph.copurchaseEdges(spark, dir)
+      edges.select(col("p1").as("u"), col("p2").as("v"))
+        .unionAll(edges.select(col("p2").as("u"), col("p1").as("v")))
+        .repartition(col("u"))
+    }
+
   /** BFS round budget and seed stride (part keys % stride == 0). Four
     * synchronous rounds: hop histogram out to distance 4, everything
     * beyond reported as unreached (-1) — the "how far is the corpus
@@ -278,13 +289,10 @@ object Graph2 {
     * the oracle unroll matches bit-for-bit with no rounding argument
     * needed. */
   def q145BfsReach(spark: SparkSession, dir: String): DataFrame = {
-    val edges = Graph.copurchaseEdges(spark, dir)
-    val und = graft.sources.DfCache.df(spark, s"bfs_und|$dir")(
-      edges.select(col("p1").as("u"), col("p2").as("v"))
-        .unionAll(edges.select(col("p2").as("u"), col("p1").as("v")))
-        .repartition(col("u")))
-    val nodes = graft.sources.DfCache.df(spark, s"bfs_nodes|$dir")(
-      und.select(col("u").as("node")).distinct().repartition(col("node")))
+    val und = undirectedCopurchase(spark, dir)
+    // read twice: the seed set and the final left join
+    val nodes = und.select(col("u").as("node")).distinct()
+      .repartition(col("node")).localCheckpoint()
     var dist = nodes.filter(col("node") % BfsSeedStride === 0)
       .select(col("node"), lit(0).as("dist"))
       .localCheckpoint()
@@ -323,11 +331,7 @@ object Graph2 {
     * the cluster and the path string builds incrementally. At 100 TB
     * walk count scales with the node budget, not edges. */
   def q152WalkCorpus(spark: SparkSession, dir: String): DataFrame = {
-    val edges = Graph.copurchaseEdges(spark, dir)
-    val und = graft.sources.DfCache.df(spark, s"bfs_und|$dir")(
-      edges.select(col("p1").as("u"), col("p2").as("v"))
-        .unionAll(edges.select(col("p2").as("u"), col("p1").as("v")))
-        .repartition(col("u")))
+    val und = undirectedCopurchase(spark, dir)
     var cur = und.select(col("u").as("walk")).distinct()
       .filter(col("walk") % WalkSeedStride === 0)
       .select(col("walk"), col("walk").as("node"),
@@ -375,12 +379,13 @@ object Graph2 {
       .filter(col("p1") < col("p2"))
       .groupBy("p1", "p2").agg(count(lit(1)).as("support"))
       .filter(col("support") >= 2)
-    val edges = graft.sources.DfCache.df(spark, s"sssp_edges|$dir")(
-      sup.select(col("p1").as("u"), col("p2").as("v"),
-          expr(s"$WeightNum div support").as("w"))
-        .unionAll(sup.select(col("p2").as("u"), col("p1").as("v"),
-          expr(s"$WeightNum div support").as("w")))
-        .repartition(col("u")))
+    // every round reads the edge list
+    val edges = sup.select(col("p1").as("u"), col("p2").as("v"),
+        expr(s"$WeightNum div support").as("w"))
+      .unionAll(sup.select(col("p2").as("u"), col("p1").as("v"),
+        expr(s"$WeightNum div support").as("w")))
+      .repartition(col("u"))
+      .localCheckpoint()
     val src = edges.agg(min(col("u")).as("src"))
     var dist = edges.crossJoin(broadcast(src))
       .filter(col("u") === col("src"))

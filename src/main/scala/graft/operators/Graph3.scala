@@ -38,16 +38,23 @@ object Graph3 {
   /** Communities reported (largest first). */
   private[graft] val LpaTopK = 20
 
+  /** The shipment graph as a node-partitioned (node, nbr) list, both
+    * orientations of every edge, cached per (session, dir) and shared
+    * by q266 and q269. */
+  private def undirectedShipment(spark: SparkSession,
+      dir: String): DataFrame =
+    graft.sources.DfCache.df(spark, s"lpa_und|$dir") {
+      val edges = Graph.shipmentEdges(spark, dir)
+      edges.select(col("src").as("node"), col("dst").as("nbr"))
+        .union(edges.select(col("dst").as("node"), col("src").as("nbr")))
+        .repartition(col("node"))
+    }
+
   /** q266 — top-[[LpaTopK]] LPA communities after [[LpaRounds]]
     * synchronous rounds: community label, member count, supplier/part
     * split. */
   def q266LpaCommunities(spark: SparkSession, dir: String): DataFrame = {
-    val und = graft.sources.DfCache.df(spark, s"lpa_und|$dir")(
-      Graph.shipmentEdges(spark, dir)
-        .select(col("src").as("node"), col("dst").as("nbr"))
-        .union(Graph.shipmentEdges(spark, dir)
-          .select(col("dst").as("node"), col("src").as("nbr")))
-        .repartition(col("node")))
+    val und = undirectedShipment(spark, dir)
     var labels = Graph.shipmentNodes(spark, dir)
       .withColumn("label", col("node"))
     for (_ <- 1 to LpaRounds) {
@@ -109,12 +116,7 @@ object Graph3 {
     * degree distribution is constant (zero variance — no correlation
     * defined). */
   def q269Assortativity(spark: SparkSession, dir: String): DataFrame = {
-    val und = graft.sources.DfCache.df(spark, s"lpa_und|$dir")(
-      Graph.shipmentEdges(spark, dir)
-        .select(col("src").as("node"), col("dst").as("nbr"))
-        .union(Graph.shipmentEdges(spark, dir)
-          .select(col("dst").as("node"), col("src").as("nbr")))
-        .repartition(col("node")))
+    val und = undirectedShipment(spark, dir)
     val deg = und.groupBy("node").agg(count(lit(1)).as("deg"))
     val stats = und
       .join(deg, Seq("node"))

@@ -47,13 +47,13 @@ object Hierarchy {
       s"""filter(transform(array(${Divisors.mkString("L, ")}L),
          |                 d -> hid div d), a -> a >= 1)""".stripMargin))
       .as("anc"))
-    // persisted: the report and its parent lookup are both slices of
-    // this ≤100-row table — without the persist each side would replay
-    // the FULL path-enumeration scan (two 100 TB scans instead of one)
-    val rollup = graft.sources.DfCache.df(spark, s"hier_rollup|$dir")(
-      contrib.groupBy("anc")
-        .agg(count(lit(1)).as("n_desc"), sum(col("cents")).as("subtree_cents"))
-        .filter(col("anc") <= 99))
+    // checkpointed: the report and its parent lookup are both slices of
+    // this ≤100-row table — without it each side would replay the FULL
+    // path-enumeration scan (two 100 TB scans instead of one)
+    val rollup = contrib.groupBy("anc")
+      .agg(count(lit(1)).as("n_desc"), sum(col("cents")).as("subtree_cents"))
+      .filter(col("anc") <= 99)
+      .localCheckpoint()
     val parents = rollup.select(col("anc").as("p_anc"),
       col("subtree_cents").as("parent_cents"))
     rollup

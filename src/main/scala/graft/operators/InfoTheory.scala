@@ -147,18 +147,17 @@ object InfoTheory {
     * Scale shape: one lead-window pass per user timeline, one
     * broadcast model join, one user-grain fold, TakeOrdered top-K
     * (map-side partial top-K — no global sort). */
-  /** The per-user transition stream (ordered lead pairs), cached —
-    * shared by q241 and q244. */
-  private def userPairs(spark: SparkSession, dir: String): DataFrame =
-    graft.sources.DfCache.df(spark, s"surprisal_pairs|$dir") {
-      val w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-      Tables.events(spark, dir)
-        .select(col("user_id"), col("ts"), col("event_id"),
-          col("event_type"))
-        .withColumn("next_type", lead(col("event_type"), 1).over(w))
-        .filter(col("next_type").isNotNull)
-        .select(col("user_id"), col("event_type"), col("next_type"))
-    }
+  /** The per-user transition stream (ordered lead pairs): the input
+    * of the shared [[surprisalModel]] and of q241's scoring. */
+  private def userPairs(spark: SparkSession, dir: String): DataFrame = {
+    val w = Window.partitionBy("user_id").orderBy("ts", "event_id")
+    Tables.events(spark, dir)
+      .select(col("user_id"), col("ts"), col("event_id"),
+        col("event_type"))
+      .withColumn("next_type", lead(col("event_type"), 1).over(w))
+      .filter(col("next_type").isNotNull)
+      .select(col("user_id"), col("event_type"), col("next_type"))
+  }
 
   /** The quantized surprisal model (|types|² profile), cached —
     * trained on the FULL stream (the stationary snapshot a production

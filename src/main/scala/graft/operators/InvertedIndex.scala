@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.QueryDef
-import graft.sources.{DfCache, Tables}
+import graft.sources.Tables
 
 /** [EXT] positional inverted index + exact phrase retrieval (q157) —
   * the index-side complement of the scoring retrievers (q96 BM25, q120
@@ -30,14 +30,14 @@ import graft.sources.{DfCache, Tables}
 object InvertedIndex {
 
   /** The positional index: one (word, doc_id, pos) row per token
-    * occurrence, pos 0-based within its document. Built once per
-    * (session, dir) — every phrase/proximity query over the same
-    * corpus shares it. */
+    * occurrence, pos 0-based within its document. Checkpointed: q157
+    * reads it four times (both sides of the bigram count and of the
+    * phrase match). */
   private[graft] def postings(spark: SparkSession, dir: String): DataFrame =
-    DfCache.df(spark, s"postings|$dir")(
-      Tables.documents(spark, dir)
-        .select(col("doc_id"),
-          posexplode(split(trim(col("text")), " ")).as(Seq("pos", "word"))))
+    Tables.documents(spark, dir)
+      .select(col("doc_id"),
+        posexplode(split(trim(col("text")), " ")).as(Seq("pos", "word")))
+      .localCheckpoint()
 
   /** q157 — exact phrase search via positional intersection: the most
     * frequent adjacent bigram in the corpus (the data-derived query),
@@ -49,8 +49,8 @@ object InvertedIndex {
   def q157PhraseSearch(spark: SparkSession, dir: String): DataFrame = {
     val idx = postings(spark, dir)
     // data-derived phrase: corpus-top adjacent bigram, deterministic
-    // tie-break; computed from the same cached index by self-join (the
-    // identical positional intersection the query itself runs)
+    // tie-break; computed from the same checkpointed index by self-join
+    // (the identical positional intersection the query itself runs)
     val bigramCounts = idx.alias("x")
       .join(idx.alias("y"),
         col("x.doc_id") === col("y.doc_id") &&

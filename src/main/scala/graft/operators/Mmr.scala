@@ -131,90 +131,86 @@ object Mmr {
     dot.cast("double") /
       (sqrt(n2a.cast("double")) * sqrt(n2b.cast("double")))
 
-  /** Corpus size, cached and shared with the q35/IVF sizing probes. */
-  private def embCount(spark: SparkSession, dir: String): Long =
-    graft.sources.DfCache.value(spark, s"emb_count|$dir")(
-      Tables.embeddings(spark, dir).count())
-
   /** Per-vector band table (vec_id, k, v) at the adaptive width —
-    * one shuffle-free projection of the embeddings scan, cached
-    * because the probe and corpus sides both read it. */
+    * one shuffle-free projection of the embeddings scan, checkpointed
+    * because the hot-bucket profile and the probe and corpus sides all
+    * read it. */
   private def mmrBandTable(spark: SparkSession, dir: String): DataFrame = {
     val dim = Similarity.embeddingDim(spark, dir)
-    val b = mmrBandBits(embCount(spark, dir))
-    graft.sources.DfCache.df(spark, s"mmr_bands|$dir")(
-      Tables.embeddings(spark, dir)
-        .select(col("vec_id"), col("embedding"))
-        .withColumn("xq", expr(
-          "transform(embedding, x -> CAST(floor(CAST(x AS DOUBLE) * 1000.0D) AS DOUBLE))"))
-        .withColumn("planes", typedLit(mmrPlanes(dim, b)))
-        // dimension-mismatch rows raise instead of silently truncating
-        // the signature (the q35/q37 guard: the oracle dots over every
-        // observed dimension)
-        .withColumn("bits", expr(
-          s"""CASE WHEN size(embedding) != $dim THEN
-             |  CAST(raise_error(concat('graft q224: embedding dim ',
-             |                          size(embedding), ' != $dim'))
-             |       AS ARRAY<BIGINT>)
-             |ELSE graft_sign_bits(planes, xq) END""".stripMargin))
-        .select(col("vec_id"), explode(expr(
-          s"""transform(sequence(0, ${MmrBands - 1}), k -> named_struct(
-             |  'k', k,
-             |  'v', aggregate(sequence(0, ${b - 1}), 0L,
-             |         (acc, j) -> acc * 2L +
-             |           element_at(bits, k * $b + j + 1))))"""
-            .stripMargin)).as("band"))
-        .select(col("vec_id"), col("band.k").as("k"), col("band.v").as("v")))
+    val b = mmrBandBits(AnnIndex.embCount(spark, dir))
+    Tables.embeddings(spark, dir)
+      .select(col("vec_id"), col("embedding"))
+      .withColumn("xq", expr(
+        "transform(embedding, x -> CAST(floor(CAST(x AS DOUBLE) * 1000.0D) AS DOUBLE))"))
+      .withColumn("planes", typedLit(mmrPlanes(dim, b)))
+      // dimension-mismatch rows raise instead of silently truncating
+      // the signature (the q35/q37 guard: the oracle dots over every
+      // observed dimension)
+      .withColumn("bits", expr(
+        s"""CASE WHEN size(embedding) != $dim THEN
+           |  CAST(raise_error(concat('graft q224: embedding dim ',
+           |                          size(embedding), ' != $dim'))
+           |       AS ARRAY<BIGINT>)
+           |ELSE graft_sign_bits(planes, xq) END""".stripMargin))
+      .select(col("vec_id"), explode(expr(
+        s"""transform(sequence(0, ${MmrBands - 1}), k -> named_struct(
+           |  'k', k,
+           |  'v', aggregate(sequence(0, ${b - 1}), 0L,
+           |         (acc, j) -> acc * 2L +
+           |           element_at(bits, k * $b + j + 1))))"""
+          .stripMargin)).as("band"))
+      .select(col("vec_id"), col("band.k").as("k"), col("band.v").as("v"))
+      .localCheckpoint()
   }
 
   /** The registered candidate pool: top-[[MmrPool]] by exact integer
     * cosine among the query's LSH band-mates (multi-probe, hot-capped)
-    * — every join an equi-join on a content key. Cached: the MMR
-    * rounds re-read it [[MmrK]] times. */
-  private def lshPool(spark: SparkSession, dir: String): DataFrame =
-    graft.sources.DfCache.df(spark, s"mmr_cand|$dir") {
-      val raw = mmrBandTable(spark, dir)
-      val b = mmrBandBits(embCount(spark, dir))
-      // hot-bucket guard, inverted so the broadcast side is the HOT
-      // set: buckets over MmrHotCap number ≤ bands·N/MmrHotCap = N/~11
-      // by pigeonhole — and in practice a handful — whereas the
-      // NON-hot occupied-bucket table grows like 0.75·N under the
-      // adaptive band width (band space 12·2^b, 2^b ≈ N/16) and would
-      // blow the broadcast at corpus scale. Anti-join keeps semantics
-      // identical: a row survives iff its bucket count ≤ MmrHotCap.
-      val hot = raw.groupBy("k", "v")
-        .agg(count(lit(1)).as("bucket_n"))
-        .filter(col("bucket_n") > MmrHotCap)
-        .select("k", "v")
-      val bands = raw.join(broadcast(hot), Seq("k", "v"), "left_anti")
-      val probes = Similarity.onlyQueries(spark, dir, bands)
-        .select(col("vec_id").as("qid"), col("k"), explode(expr(
-          s"""concat(array(v), transform(sequence(0, ${b - 1}),
-             |                           j -> v ^ shiftleft(1L, j)))"""
-            .stripMargin)).as("v"))
-      val candidates = probes
-        .join(bands.select(col("vec_id").as("cid"), col("k"), col("v")),
-          Seq("k", "v"))
-        .filter(col("qid") =!= col("cid"))
-        .select("qid", "cid")
-        .distinct()
-      val emb = Tables.embeddings(spark, dir)
-        .select(col("vec_id"), intVec(col("embedding")).as("iv"))
-        .withColumn("n2", dotL(col("iv"), col("iv")))
-      val wPool = Window.partitionBy("qid")
-        .orderBy(col("rel").desc, col("cid"))
-      candidates
-        .join(emb.select(col("vec_id").as("qid"), col("iv").as("qv"),
-          col("n2").as("qn2")), Seq("qid"))
-        .join(emb.select(col("vec_id").as("cid"), col("iv").as("cv"),
-          col("n2").as("cn2")), Seq("cid"))
-        .withColumn("rel",
-          cosine(dotL(col("qv"), col("cv")), col("qn2"), col("cn2")))
-        .withColumn("rn", row_number().over(wPool))
-        .filter(col("rn") <= MmrPool)
-        .select(col("qid"), col("cid"), col("rel"), col("cv"),
-          col("cn2"))
-    }
+    * — every join an equi-join on a content key. Checkpointed: the
+    * pairwise sims and the MMR rounds re-read it [[MmrK]] times. */
+  private def lshPool(spark: SparkSession, dir: String): DataFrame = {
+    val raw = mmrBandTable(spark, dir)
+    val b = mmrBandBits(AnnIndex.embCount(spark, dir))
+    // hot-bucket guard, inverted so the broadcast side is the HOT
+    // set: buckets over MmrHotCap number ≤ bands·N/MmrHotCap = N/~11
+    // by pigeonhole — and in practice a handful — whereas the
+    // NON-hot occupied-bucket table grows like 0.75·N under the
+    // adaptive band width (band space 12·2^b, 2^b ≈ N/16) and would
+    // blow the broadcast at corpus scale. Anti-join keeps semantics
+    // identical: a row survives iff its bucket count ≤ MmrHotCap.
+    val hot = raw.groupBy("k", "v")
+      .agg(count(lit(1)).as("bucket_n"))
+      .filter(col("bucket_n") > MmrHotCap)
+      .select("k", "v")
+    val bands = raw.join(broadcast(hot), Seq("k", "v"), "left_anti")
+    val probes = Similarity.onlyQueries(spark, dir, bands)
+      .select(col("vec_id").as("qid"), col("k"), explode(expr(
+        s"""concat(array(v), transform(sequence(0, ${b - 1}),
+           |                           j -> v ^ shiftleft(1L, j)))"""
+          .stripMargin)).as("v"))
+    val candidates = probes
+      .join(bands.select(col("vec_id").as("cid"), col("k"), col("v")),
+        Seq("k", "v"))
+      .filter(col("qid") =!= col("cid"))
+      .select("qid", "cid")
+      .distinct()
+    val emb = Tables.embeddings(spark, dir)
+      .select(col("vec_id"), intVec(col("embedding")).as("iv"))
+      .withColumn("n2", dotL(col("iv"), col("iv")))
+    val wPool = Window.partitionBy("qid")
+      .orderBy(col("rel").desc, col("cid"))
+    candidates
+      .join(emb.select(col("vec_id").as("qid"), col("iv").as("qv"),
+        col("n2").as("qn2")), Seq("qid"))
+      .join(emb.select(col("vec_id").as("cid"), col("iv").as("cv"),
+        col("n2").as("cn2")), Seq("cid"))
+      .withColumn("rel",
+        cosine(dotL(col("qv"), col("cv")), col("qn2"), col("cn2")))
+      .withColumn("rn", row_number().over(wPool))
+      .filter(col("rn") <= MmrPool)
+      .select(col("qid"), col("cid"), col("rel"), col("cv"),
+        col("cn2"))
+      .localCheckpoint()
+  }
 
   /** TEST-ONLY brute pool (the Q×N dot scan q224 used to register):
     * exact top-[[MmrPool]] ground truth Round10Spec measures the LSH
@@ -244,16 +240,17 @@ object Mmr {
     * candidates; see module doc. */
   def q224MmrRetrieval(spark: SparkSession, dir: String): DataFrame = {
     val cand = lshPool(spark, dir)
-    // pairwise candidate-candidate sims on the pool² profile
-    val sims = graft.sources.DfCache.df(spark, s"mmr_sims|$dir")(
-      cand.select(col("qid"), col("cid").as("c1"), col("cv").as("v1"),
-          col("cn2").as("m1"))
-        .join(cand.select(col("qid"), col("cid").as("c2"),
-          col("cv").as("v2"), col("cn2").as("m2")), Seq("qid"))
-        .filter(col("c1") =!= col("c2"))
-        .select(col("qid"), col("c1"), col("c2"),
-          cosine(dotL(col("v1"), col("v2")), col("m1"), col("m2"))
-            .as("sim")))
+    // pairwise candidate-candidate sims on the pool² profile, read by
+    // every round
+    val sims = cand.select(col("qid"), col("cid").as("c1"),
+        col("cv").as("v1"), col("cn2").as("m1"))
+      .join(cand.select(col("qid"), col("cid").as("c2"),
+        col("cv").as("v2"), col("cn2").as("m2")), Seq("qid"))
+      .filter(col("c1") =!= col("c2"))
+      .select(col("qid"), col("c1"), col("c2"),
+        cosine(dotL(col("v1"), col("v2")), col("m1"), col("m2"))
+          .as("sim"))
+      .localCheckpoint()
     val lam = lit(MmrLambdaPct / 100.0)
     val oneMinus = lit((100 - MmrLambdaPct) / 100.0)
     val base = cand.select(col("qid"), col("cid"), col("rel"))

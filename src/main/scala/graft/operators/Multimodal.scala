@@ -187,9 +187,9 @@ object Multimodal {
       if (p.nonEmpty) p(0) = 'z'.toByte
       MediaItem(m.doc_id + VariantOffset, p, m.meta)
     }
-    val sigs = sig64(originals.unionAll(variants))
-    val cached = graft.sources.DfCache.df(spark, s"phash_sigs|$dir")(sigs)
-    val bands = cached.select(col("doc_id"), posexplode(array(
+    // checkpointed: both band sides and both signature sides read it
+    val sigs = sig64(originals.unionAll(variants)).localCheckpoint()
+    val bands = sigs.select(col("doc_id"), posexplode(array(
       col("sig_lo").bitwiseAND(65535),
       shiftright(col("sig_lo"), 16).bitwiseAND(65535),
       col("sig_hi").bitwiseAND(65535),
@@ -201,9 +201,9 @@ object Multimodal {
       .filter(col("id1") < col("id2"))
       .select("id1", "id2").distinct()
     cand
-      .join(cached.select(col("doc_id").as("id1"),
+      .join(sigs.select(col("doc_id").as("id1"),
         col("sig_lo").as("lo1"), col("sig_hi").as("hi1")), Seq("id1"))
-      .join(cached.select(col("doc_id").as("id2"),
+      .join(sigs.select(col("doc_id").as("id2"),
         col("sig_lo").as("lo2"), col("sig_hi").as("hi2")), Seq("id2"))
       .select(col("id1"), col("id2"),
         (bit_count(col("lo1").bitwiseXOR(col("lo2"))) +

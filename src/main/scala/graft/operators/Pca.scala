@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.QueryDef
-import graft.sources.{DfCache, Tables}
+import graft.sources.Tables
 
 /** [EXT] top principal component of the embedding corpus by distributed
   * power iteration — the "all-but-the-top" post-processing step
@@ -20,8 +20,8 @@ import graft.sources.{DfCache, Tables}
   * literal v) and ONE dim-bounded aggregate: grouping the posexploded
   * coordinates by position yields both Σ_i s_i·x_ij and Σ_i s_i in the
   * same 64-row HashAggregate, from which w_j = Σ s_i x_ij − μ_j Σ s_i
-  * — the mean-centering is two correction terms, so the raw (cached,
-  * columnar) table is scanned as-is. Per round the driver collects d
+  * — the mean-centering is two correction terms, so the raw
+  * (checkpointed) table is scanned as-is. Per round the driver collects d
   * doubles (the scalar-per-round discipline of q137's BPE argmax);
   * rounds are fixed at [[Iters]] with the Rayleigh sequence reported.
   * At 100 TB: rounds × (one scan + one 64-row shuffle) — the scan
@@ -52,8 +52,9 @@ object Pca {
 
   private[graft] def topComponent(spark: SparkSession, dir: String)
       : TopComponent = {
-    val ex = DfCache.df(spark, s"pca_embeddings|$dir")(
-      Tables.embeddings(spark, dir).select("embedding"))
+    // checkpointed: the profile job and every round read it
+    val ex = Tables.embeddings(spark, dir).select("embedding")
+      .localCheckpoint()
     // ONE job yields n, dim AND the mean vector (was three: count,
     // dim head, mean collect — each a full scheduling round trip):
     // the pos-keyed profile's row count IS dim and any pos's count

@@ -32,23 +32,20 @@ object Relational {
     * oracle regardless of FP summation order. */
   private def money(c: Column): Column = round(c, 2)
 
-  /** Materialized-aggregate-fact cache: the reference builds
-    * product_facts/rep_facts ONCE (CTAS,
-    * `LoadDataWarehouse.ChatterjeeP.R:90-133`) and every analytics query
-    * re-aggregates them. Mirroring that, fact DataFrames are persisted
-    * per (session, dir) so q03-q08 re-aggregate ~|groups| cached rows
-    * instead of re-running the star join over the full fact scan — the
-    * same two-layer design that makes the warehouse viable at 100 TB. */
-  private def materialized(spark: SparkSession, dir: String, name: String)(
-      build: => DataFrame): DataFrame =
-    graft.sources.DfCache.df(spark, s"$name|$dir")(build)
-
   /** product_facts analogue: grain (brand, year, quarter, customer-nation).
     * Reference: CTAS at `LoadDataWarehouse.ChatterjeeP.R:90-104` (grain
     * product x year x quarter x customer-country).
+    *
+    * Materialized like the reference's CTAS facts
+    * (`LoadDataWarehouse.ChatterjeeP.R:90-133`), which every analytics
+    * query re-aggregates: the fact is persisted per (session, dir), so
+    * q03-q08 re-aggregate ~|groups| cached rows instead of re-running
+    * the star join over the full fact scan — the same two-layer design
+    * that makes the warehouse viable at 100 TB.
     */
   def productFacts(spark: SparkSession, dir: String): DataFrame =
-    materialized(spark, dir, "product_facts")(buildProductFacts(spark, dir))
+    graft.sources.DfCache.df(spark, s"product_facts|$dir")(
+      buildProductFacts(spark, dir))
 
   /** The product-fact star join at its (brand, year, quarter,
     * customer-nation) grain — ONE definition shared by the q01-q08 fact
@@ -81,7 +78,8 @@ object Relational {
   /** rep_facts analogue: grain (supplier, year, quarter, brand).
     * Reference: CTAS at `LoadDataWarehouse.ChatterjeeP.R:118-133`. */
   def repFacts(spark: SparkSession, dir: String): DataFrame =
-    materialized(spark, dir, "rep_facts")(buildRepFacts(spark, dir))
+    graft.sources.DfCache.df(spark, s"rep_facts|$dir")(
+      buildRepFacts(spark, dir))
 
   private def buildRepFacts(spark: SparkSession, dir: String): DataFrame = {
     val li = Tables.lineitem(spark, dir)
@@ -282,7 +280,8 @@ object Relational {
     * reference `LoadDataWarehouse.ChatterjeeP.R:90-104`): the nightly
     * refresh re-aggregates ONLY the new batch and merges it into the
     * persisted fact — history's base rows are never re-read. Here the
-    * history fact is the per-session persisted artifact (the same
+    * history fact is built in the query, standing in for the stored
+    * artifact a nightly refresh would read (the same
     * never-re-read-history pattern as q102's band tables and q127's
     * chunk store), the delta runs [[centsFacts]] with the cutoff
     * predicate pushed into the orders scan (a date-partitioned 100 TB
@@ -294,8 +293,7 @@ object Relational {
     * compare proves incremental == full, not merely plausible. */
   def q135IncrementalFacts(spark: SparkSession, dir: String): DataFrame = {
     val cutoff = lit(RefreshCutoff).cast("timestamp")
-    val hist = materialized(spark, dir, "product_facts_hist")(
-      centsFacts(spark, dir, col("o_orderdate") < cutoff))
+    val hist = centsFacts(spark, dir, col("o_orderdate") < cutoff)
     val delta = centsFacts(spark, dir, col("o_orderdate") >= cutoff)
     hist.unionByName(delta)
       .groupBy("product_brand", "sale_year", "sale_quarter", "region")

@@ -136,8 +136,9 @@ object SketchAlgebra {
     val ev = Tables.events(spark, dir)
       .select(to_date(col("ts")).as("day"),
         Hashing.md5Hash60(concat(lit("kmv:"), col("user_id"))).as("h"))
-    val daily = graft.sources.DfCache.df(spark, s"kmv_daily|$dir")(
-      ev.groupBy("day").agg(kmv(col("h")).as("sk")))
+    // read by the day spine and the cumulative sketches
+    val daily = ev.groupBy("day").agg(kmv(col("h")).as("sk"))
+      .localCheckpoint()
     val days = daily.select(col("day").as("d"))
     val cum = daily.select(col("day"), explode(col("sk")).as("h"))
       .join(broadcast(days), col("day") <= col("d"))

@@ -183,18 +183,15 @@ object StorageLayout {
     * the layout changes I/O, never answers. */
   def q133CellServing(spark: SparkSession, dir: String): DataFrame = {
     val root = layoutRoot(spark, dir, "ivfcells")
-    val all = Tables.embeddings(spark, dir)
-      .select(col("vec_id"), col("embedding"),
-        DedupEmbedding.normExpr.as("nrm"))
-    val centroids = ivfCentroids(spark, dir, all)
+    val all = AnnIndex.normedVecs(spark, dir)
+    val centroids = ivfCentroids(spark, dir)
     graft.sources.DfCache.value(spark, s"cell_layout|$dir") {
       nearestCells(all, centroids, 1, "crank")
         .select(col("cent_id").as("cell"), col("vec_id"), col("embedding"))
         .write.mode("overwrite").partitionBy("cell").parquet(root)
       true
     }
-    val nCells = graft.sources.DfCache.value(spark, s"ivf_ncells|$dir")(
-      centroids.count())
+    val nCells = AnnIndex.ivfCellCount(spark, dir)
     val nprobe = ivfNprobe(nCells, IvfProbeScale, ProbeFloor)
     val qid = Similarity.queryIds(spark, dir)
       .agg(min(col("vec_id"))).collect().head.getLong(0)

@@ -38,35 +38,34 @@ object TextEncode {
     * localCheckpoint per merge, the bpeTrain discipline), then joins
     * instances back. */
   private[graft] def encodedPerDoc(spark: SparkSession,
-      dir: String): DataFrame =
-    graft.sources.DfCache.df(spark, s"bpe_encoded|$dir") {
-      val (merges, _, _) = TextOps.bpeCached(spark, dir)
-      val docWords = Tables.documents(spark, dir)
-        .select(col("doc_id"), explode(split(col("text"), " ")).as("w"))
-        .filter(length(col("w")) > 0)
-      var vocab = docWords.select("w").distinct()
-        .withColumn("syms", split(col("w"), ""))
+      dir: String): DataFrame = {
+    val (merges, _, _) = TextOps.bpeCached(spark, dir)
+    val docWords = Tables.documents(spark, dir)
+      .select(col("doc_id"), explode(split(col("text"), " ")).as("w"))
+      .filter(length(col("w")) > 0)
+    var vocab = docWords.select("w").distinct()
+      .withColumn("syms", split(col("w"), ""))
+      .localCheckpoint()
+    for ((_, l, r, _) <- merges) {
+      val merged = l + r
+      vocab = vocab.withColumn("syms",
+        aggregate(col("syms"), array().cast("array<string>"),
+          (acc, x) =>
+            when(size(acc) > 0 &&
+                element_at(acc, -1) === lit(l) && x === lit(r),
+              concat(slice(acc, lit(1), size(acc) - 1),
+                array(lit(merged))))
+              .otherwise(concat(acc, array(x)))))
         .localCheckpoint()
-      for ((_, l, r, _) <- merges) {
-        val merged = l + r
-        vocab = vocab.withColumn("syms",
-          aggregate(col("syms"), array().cast("array<string>"),
-            (acc, x) =>
-              when(size(acc) > 0 &&
-                  element_at(acc, -1) === lit(l) && x === lit(r),
-                concat(slice(acc, lit(1), size(acc) - 1),
-                  array(lit(merged))))
-                .otherwise(concat(acc, array(x)))))
-          .localCheckpoint()
-      }
-      docWords
-        .join(vocab.select(col("w"), size(col("syms")).as("n_toks")),
-          Seq("w"))
-        .groupBy("doc_id")
-        .agg(count(lit(1)).as("n_words"),
-          sum(length(col("w"))).as("tokens_before"),
-          sum(col("n_toks")).as("n_tokens"))
     }
+    docWords
+      .join(vocab.select(col("w"), size(col("syms")).as("n_toks")),
+        Seq("w"))
+      .groupBy("doc_id")
+      .agg(count(lit(1)).as("n_words"),
+        sum(length(col("w"))).as("tokens_before"),
+        sum(col("n_toks")).as("n_tokens"))
+  }
 
   /** q149 — corpus encode summary: exact corpus-side counts plus the
     * two laws (encode total equals the training histogram total;

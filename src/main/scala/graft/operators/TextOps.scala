@@ -464,14 +464,15 @@ object TextOps {
     * sort) folded to one row. Output is |budgets| rows; everything is
     * exact integers except the final single-division coverage ratio. */
   def q221VocabCoverage(spark: SparkSession, dir: String): DataFrame = {
-    val counts = graft.sources.DfCache.df(spark, s"bigram_counts|$dir")(
-      Tables.documents(spark, dir)
-        .select(split(trim(col("text")), " ").as("ws"))
-        .filter(size(col("ws")) >= 2)
-        .select(explode(expr(
-          "transform(sequence(1, size(ws) - 1)," +
-            " i -> concat(ws[i-1], ' ', ws[i]))")).as("unit"))
-        .groupBy("unit").agg(count(lit(1)).as("n")))
+    // read by the totals and by every budget's top-N
+    val counts = Tables.documents(spark, dir)
+      .select(split(trim(col("text")), " ").as("ws"))
+      .filter(size(col("ws")) >= 2)
+      .select(explode(expr(
+        "transform(sequence(1, size(ws) - 1)," +
+          " i -> concat(ws[i-1], ' ', ws[i]))")).as("unit"))
+      .groupBy("unit").agg(count(lit(1)).as("n"))
+      .localCheckpoint()
     val totals = counts.agg(sum(col("n")).as("total_tokens"),
       count(lit(1)).as("n_vocab"))
     CoverageNs.map { n =>

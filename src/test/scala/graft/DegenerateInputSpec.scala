@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.types.StructType
 
@@ -21,26 +19,31 @@ class DegenerateInputSpec extends SparkTestBase {
   /** Queries on the empty fixture with the rows their oracle returns. */
   private val Expected = Map(
     // every round's LIMIT 1 picks from an empty table
-    "q163_max_cover" -> Seq.empty[Row])
+    "q163_max_cover" -> Seq.empty[Row],
+    // no corpus, no exposure: coverage is 0 / 0 and the slot sums are
+    // over no rows, all NULL
+    "q350_retrieval_exposure" -> Seq(Row(0L, 0L, null, null, null)))
 
-  private lazy val emptyDir: String = {
-    val dir = Files.createTempDirectory("graft_empty").toString
+  /** The zero-row `documents` and `embeddings` tables, in `dir`. */
+  private def writeEmpty(dir: String): Unit = {
     def write(table: String, schema: StructType): Unit =
       spark.createDataFrame(java.util.Collections.emptyList[Row](), schema)
         .write.parquet(s"$dir/$table.parquet")
     write("documents", Tables.documentsSchema)
     write("embeddings", Tables.embeddingsSchema)
-    dir
   }
 
   for (q <- (Refusals.keys ++ Expected.keys).toSeq.sorted) {
     test(s"$q on zero-row input: oracle rows or a named refusal") {
-      val run = () => SparkEntry.queries(q)(spark, emptyDir).collect().toSeq
-      Refusals.get(q) match {
-        case Some(message) =>
-          val e = intercept[IllegalArgumentException](run())
-          assert(e.getMessage.contains(message), e.getMessage)
-        case None => assert(run() == Expected(q))
+      withTempDir("graft_empty") { path =>
+        writeEmpty(path.toString)
+        val run = () => SparkEntry.queries(q)(spark, path.toString).collect().toSeq
+        Refusals.get(q) match {
+          case Some(message) =>
+            val e = intercept[IllegalArgumentException](run())
+            assert(e.getMessage.contains(message), e.getMessage)
+          case None => assert(run() == Expected(q))
+        }
       }
     }
   }

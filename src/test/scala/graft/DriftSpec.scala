@@ -86,38 +86,39 @@ class DriftSpec extends SparkTestBase {
     // reference profile: uniform over three event types
     val ref = Seq(("click", 100L), ("view", 100L), ("purchase", 100L))
       .toDF("bucket", "n")
-    val sink = java.nio.file.Files
-      .createTempDirectory("drift_ledger").toString
-    val input = MemoryStream[Ev]
-    val q = input.toDF().writeStream
-      .foreachBatch(D.driftLedgerBatch(ref, sink) _)
-      .option("checkpointLocation", s"$sink/__ckpt")
-      .start()
-    def ev(tp: String, i: Int): Ev =
-      Ev(Timestamp.valueOf(f"2024-01-01 10:00:${i % 60}%02d"),
-        i.toLong, tp, 1.0)
-    try {
-      // batch 0: same uniform shape as the reference -> stable
-      input.addData((1 to 30).flatMap(i =>
-        Seq(ev("click", i), ev("view", i), ev("purchase", i))))
-      q.processAllAvailable()
-      // batch 1: everything collapses onto one type -> drifted
-      input.addData((1 to 90).map(i => ev("click", i)))
-      q.processAllAvailable()
-    } finally q.stop()
-    val ledger = spark.read.parquet(sink + "/batch=0", sink + "/batch=1")
-      .collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getString(3))).sortBy(_._1)
-    assert(ledger.length == 2)
-    assert(ledger(0) == (0L, 90L, "stable"), s"batch 0: ${ledger(0)}")
-    assert(ledger(1)._1 == 1L && ledger(1)._2 == 90L &&
-      ledger(1)._3 == "drifted", s"batch 1: ${ledger(1)}")
-    // replay idempotence: re-running a batch rewrites the identical
-    // ledger row, never duplicates it
-    val b1Before = spark.read.parquet(sink + "/batch=1").count()
-    D.driftLedgerBatch(ref, sink)(
-      (1 to 90).map(i => ev("click", i)).toDF(), 1L)
-    val b1After = spark.read.parquet(sink + "/batch=1").count()
-    assert(b1Before == 1 && b1After == 1)
+    withTempDir("drift_ledger") { path =>
+      val sink = path.toString
+      val input = MemoryStream[Ev]
+      val q = input.toDF().writeStream
+        .foreachBatch(D.driftLedgerBatch(ref, sink) _)
+        .option("checkpointLocation", s"$sink/__ckpt")
+        .start()
+      def ev(tp: String, i: Int): Ev =
+        Ev(Timestamp.valueOf(f"2024-01-01 10:00:${i % 60}%02d"),
+          i.toLong, tp, 1.0)
+      try {
+        // batch 0: same uniform shape as the reference -> stable
+        input.addData((1 to 30).flatMap(i =>
+          Seq(ev("click", i), ev("view", i), ev("purchase", i))))
+        q.processAllAvailable()
+        // batch 1: everything collapses onto one type -> drifted
+        input.addData((1 to 90).map(i => ev("click", i)))
+        q.processAllAvailable()
+      } finally q.stop()
+      val ledger = spark.read.parquet(sink + "/batch=0", sink + "/batch=1")
+        .collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getString(3))).sortBy(_._1)
+      assert(ledger.length == 2)
+      assert(ledger(0) == (0L, 90L, "stable"), s"batch 0: ${ledger(0)}")
+      assert(ledger(1)._1 == 1L && ledger(1)._2 == 90L &&
+        ledger(1)._3 == "drifted", s"batch 1: ${ledger(1)}")
+      // replay idempotence: re-running a batch rewrites the identical
+      // ledger row, never duplicates it
+      val b1Before = spark.read.parquet(sink + "/batch=1").count()
+      D.driftLedgerBatch(ref, sink)(
+        (1 to 90).map(i => ev("click", i)).toDF(), 1L)
+      val b1After = spark.read.parquet(sink + "/batch=1").count()
+      assert(b1Before == 1 && b1After == 1)
+    }
   }
 }

@@ -85,41 +85,44 @@ class ExpectationsSpec extends SparkTestBase {
   test("an unrecognized events.ts physical encoding fails loudly at the " +
       "source instead of being silently rescaled") {
     import org.apache.spark.sql.functions._
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_bad_events").toString
-    graft.sources.Tables.events(spark, sf).limit(10)
-      .withColumn("ts", col("ts").cast("string"))
-      .write.mode("overwrite").parquet(s"$dir/events.parquet")
-    val e = intercept[IllegalStateException] {
-      graft.sources.Tables.events(spark, dir)
+    withTempDir("graft_bad_events") { path =>
+      val dir = path.toString
+      graft.sources.Tables.events(spark, sf).limit(10)
+        .withColumn("ts", col("ts").cast("string"))
+        .write.mode("overwrite").parquet(s"$dir/events.parquet")
+      val e = intercept[IllegalStateException] {
+        graft.sources.Tables.events(spark, dir)
+      }
+      assert(e.getMessage.contains("unsupported parquet type"))
+      // same drift class: a schema with no ts column at all
+      withTempDir("graft_nots_events") { path2 =>
+        val dir2 = path2.toString
+        graft.sources.Tables.events(spark, sf).limit(10)
+          .drop("ts")
+          .write.mode("overwrite").parquet(s"$dir2/events.parquet")
+        val e2 = intercept[IllegalStateException] {
+          graft.sources.Tables.events(spark, dir2)
+        }
+        assert(e2.getMessage.contains("unsupported parquet type"))
+      }
     }
-    assert(e.getMessage.contains("unsupported parquet type"))
-    // same drift class: a schema with no ts column at all
-    val dir2 = java.nio.file.Files
-      .createTempDirectory("graft_nots_events").toString
-    graft.sources.Tables.events(spark, sf).limit(10)
-      .drop("ts")
-      .write.mode("overwrite").parquet(s"$dir2/events.parquet")
-    val e2 = intercept[IllegalStateException] {
-      graft.sources.Tables.events(spark, dir2)
-    }
-    assert(e2.getMessage.contains("unsupported parquet type"))
   }
 
   test("a MIXED events directory (legacy long files next to logical " +
       "timestamp files) fails loudly instead of decoding one recipe") {
     import org.apache.spark.sql.functions._
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_mixed_events").toString
-    val ev = graft.sources.Tables.events(spark, sf).limit(5)
-    // one file surfaces ts as a raw long (the legacy shape), one as a
-    // logical timestamp — the mid-migration lake layout
-    ev.withColumn("ts", unix_micros(col("ts")))
-      .write.mode("append").parquet(s"$dir/events.parquet")
-    ev.write.mode("append").parquet(s"$dir/events.parquet")
-    val e = intercept[IllegalStateException] {
-      graft.sources.Tables.events(spark, dir)
+    withTempDir("graft_mixed_events") { path =>
+      val dir = path.toString
+      val ev = graft.sources.Tables.events(spark, sf).limit(5)
+      // one file surfaces ts as a raw long (the legacy shape), one as a
+      // logical timestamp — the mid-migration lake layout
+      ev.withColumn("ts", unix_micros(col("ts")))
+        .write.mode("append").parquet(s"$dir/events.parquet")
+      ev.write.mode("append").parquet(s"$dir/events.parquet")
+      val e = intercept[IllegalStateException] {
+        graft.sources.Tables.events(spark, dir)
+      }
+      assert(e.getMessage.contains("mixes incompatible ts encodings"))
     }
-    assert(e.getMessage.contains("mixes incompatible ts encodings"))
   }
 }

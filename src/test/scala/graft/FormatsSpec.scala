@@ -18,79 +18,91 @@ class FormatsSpec extends SparkTestBase {
     .collect().map(_.toSeq).toSeq
 
   test("CSV round-trip with explicit schema preserves values") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_csv").toString
-    sample.write.mode("overwrite").option("header", "true")
-      .csv(s"$tmp/li_csv")
-    val back = spark.read
-      .schema(graft.sources.Tables.lineitemSchema)
-      .option("header", "true")
-      .csv(s"$tmp/li_csv")
-    assert(canon(back) == canon(sample))
+    withTempDir("graft_csv") { path =>
+      val tmp = path.toString
+      sample.write.mode("overwrite").option("header", "true")
+        .csv(s"$tmp/li_csv")
+      val back = spark.read
+        .schema(graft.sources.Tables.lineitemSchema)
+        .option("header", "true")
+        .csv(s"$tmp/li_csv")
+      assert(canon(back) == canon(sample))
+    }
   }
 
   test("JSON round-trip with explicit schema preserves values") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_json").toString
-    sample.write.mode("overwrite").json(s"$tmp/li_json")
-    val back = spark.read
-      .schema(graft.sources.Tables.lineitemSchema)
-      .json(s"$tmp/li_json")
-    assert(canon(back) == canon(sample))
+    withTempDir("graft_json") { path =>
+      val tmp = path.toString
+      sample.write.mode("overwrite").json(s"$tmp/li_json")
+      val back = spark.read
+        .schema(graft.sources.Tables.lineitemSchema)
+        .json(s"$tmp/li_json")
+      assert(canon(back) == canon(sample))
+    }
   }
 
   test("malformed CSV rows: PERMISSIVE captures, FAILFAST raises") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_bad").toString
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(s"$tmp/bad.csv"),
-      "k,v\n1,10\nnot_a_number,20\n3,30\n")
-    val schema = "k LONG, v LONG, _corrupt STRING"
-    val permissive = spark.read
-      .schema(schema)
-      .option("header", "true")
-      .option("mode", "PERMISSIVE")
-      .option("columnNameOfCorruptRecord", "_corrupt")
-      .csv(s"$tmp/bad.csv")
-    val rows = permissive.cache()
-    assert(rows.count() == 3)
-    assert(rows.filter(col("_corrupt").isNotNull).count() == 1)
-    assert(rows.filter(col("k").isNull).count() == 1)
-    val failfast = spark.read
-      .schema("k LONG, v LONG")
-      .option("header", "true").option("mode", "FAILFAST")
-      .csv(s"$tmp/bad.csv")
-    intercept[org.apache.spark.SparkException] { failfast.collect() }
-    rows.unpersist()
+    withTempDir("graft_bad") { path =>
+      val tmp = path.toString
+      java.nio.file.Files.writeString(
+        java.nio.file.Paths.get(s"$tmp/bad.csv"),
+        "k,v\n1,10\nnot_a_number,20\n3,30\n")
+      val schema = "k LONG, v LONG, _corrupt STRING"
+      val permissive = spark.read
+        .schema(schema)
+        .option("header", "true")
+        .option("mode", "PERMISSIVE")
+        .option("columnNameOfCorruptRecord", "_corrupt")
+        .csv(s"$tmp/bad.csv")
+      val rows = permissive.cache()
+      assert(rows.count() == 3)
+      assert(rows.filter(col("_corrupt").isNotNull).count() == 1)
+      assert(rows.filter(col("k").isNull).count() == 1)
+      val failfast = spark.read
+        .schema("k LONG, v LONG")
+        .option("header", "true").option("mode", "FAILFAST")
+        .csv(s"$tmp/bad.csv")
+      intercept[org.apache.spark.SparkException] { failfast.collect() }
+      rows.unpersist()
+    }
   }
 
   test("zstd-compressed parquet round-trips") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_zstd").toString
-    sample.write.mode("overwrite").option("compression", "zstd")
-      .parquet(s"$tmp/li_zstd")
-    assert(canon(spark.read.parquet(s"$tmp/li_zstd")) == canon(sample))
+    withTempDir("graft_zstd") { path =>
+      val tmp = path.toString
+      sample.write.mode("overwrite").option("compression", "zstd")
+        .parquet(s"$tmp/li_zstd")
+      assert(canon(spark.read.parquet(s"$tmp/li_zstd")) == canon(sample))
+    }
   }
 
   test("ORC round-trip preserves values (schema embedded)") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_orc").toString
-    sample.write.mode("overwrite").orc(s"$tmp/li_orc")
-    val back = spark.read.orc(s"$tmp/li_orc")
-    assert(canon(back) == canon(sample))
+    withTempDir("graft_orc") { path =>
+      val tmp = path.toString
+      sample.write.mode("overwrite").orc(s"$tmp/li_orc")
+      val back = spark.read.orc(s"$tmp/li_orc")
+      assert(canon(back) == canon(sample))
+    }
   }
 
   test("partitioned write prunes partitions on read (scale path)") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_part").toString
-    sample.withColumn("flag", col("l_returnflag"))
-      .write.mode("overwrite").partitionBy("flag").parquet(s"$tmp/li_part")
-    val flags = sample.select("l_returnflag").distinct()
-      .collect().map(_.getString(0))
-    assert(flags.length > 1)
-    val one = spark.read.parquet(s"$tmp/li_part")
-      .filter(col("flag") === flags.head)
-    // the partition filter must prune directories, not scan-and-filter
-    val scan = one.queryExecution.executedPlan.collectFirst {
-      case f: org.apache.spark.sql.execution.FileSourceScanExec => f
-    }.get
-    assert(scan.partitionFilters.nonEmpty, "partition filter not pushed")
-    assert(one.count() ==
-      sample.filter(col("l_returnflag") === flags.head).count())
+    withTempDir("graft_part") { path =>
+      val tmp = path.toString
+      sample.withColumn("flag", col("l_returnflag"))
+        .write.mode("overwrite").partitionBy("flag").parquet(s"$tmp/li_part")
+      val flags = sample.select("l_returnflag").distinct()
+        .collect().map(_.getString(0))
+      assert(flags.length > 1)
+      val one = spark.read.parquet(s"$tmp/li_part")
+        .filter(col("flag") === flags.head)
+      // the partition filter must prune directories, not scan-and-filter
+      val scan = one.queryExecution.executedPlan.collectFirst {
+        case f: org.apache.spark.sql.execution.FileSourceScanExec => f
+      }.get
+      assert(scan.partitionFilters.nonEmpty, "partition filter not pushed")
+      assert(one.count() ==
+        sample.filter(col("l_returnflag") === flags.head).count())
+    }
   }
 
   test("variant semantics: JSON null vs absent path are distinguishable") {
@@ -134,39 +146,41 @@ class FormatsSpec extends SparkTestBase {
   }
 
   test("z-order layout prunes multi-dim range scans that random layout can't") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_zorder").toString
-    val li = graft.sources.Tables.lineitem(spark, sf)
-      .select("l_partkey", "l_suppkey", "l_extendedprice")
-    // baseline: 16 arbitrary slices — every file spans the full value
-    // range of both dims, so row-group stats prune nothing
-    li.repartition(16).write.mode("overwrite").parquet(s"$tmp/random")
-    // z-ordered: range-partition + sort by the Morton key, so each file
-    // covers a narrow box in (partkey, suppkey) space
-    li.withColumn("zkey", graft.functions.Zorder.interleave16(
-        col("l_partkey"), col("l_suppkey")))
-      .repartitionByRange(16, col("zkey")).sortWithinPartitions("zkey")
-      .drop("zkey")
-      .write.mode("overwrite").parquet(s"$tmp/zordered")
-    val Seq(pMax, sMax) = li.agg(max("l_partkey"), max("l_suppkey"))
-      .collect().map(r => Seq(r.getLong(0), r.getLong(1))).head
-    def scanned(path: String): (Long, Seq[Seq[Any]]) = {
-      val df = spark.read.parquet(path)
-        .filter(col("l_partkey") <= pMax / 4 && col("l_suppkey") <= sMax / 4)
-      val answer = df.collect().map(_.toSeq).toSeq
-        .sortBy(_.mkString(","))
-      val rows = df.queryExecution.executedPlan.collectFirst {
-        case f: org.apache.spark.sql.execution.FileSourceScanExec =>
-          f.metrics("numOutputRows").value
-      }.get
-      (rows, answer)
+    withTempDir("graft_zorder") { path =>
+      val tmp = path.toString
+      val li = graft.sources.Tables.lineitem(spark, sf)
+        .select("l_partkey", "l_suppkey", "l_extendedprice")
+      // baseline: 16 arbitrary slices — every file spans the full value
+      // range of both dims, so row-group stats prune nothing
+      li.repartition(16).write.mode("overwrite").parquet(s"$tmp/random")
+      // z-ordered: range-partition + sort by the Morton key, so each file
+      // covers a narrow box in (partkey, suppkey) space
+      li.withColumn("zkey", graft.functions.Zorder.interleave16(
+          col("l_partkey"), col("l_suppkey")))
+        .repartitionByRange(16, col("zkey")).sortWithinPartitions("zkey")
+        .drop("zkey")
+        .write.mode("overwrite").parquet(s"$tmp/zordered")
+      val Seq(pMax, sMax) = li.agg(max("l_partkey"), max("l_suppkey"))
+        .collect().map(r => Seq(r.getLong(0), r.getLong(1))).head
+      def scanned(path: String): (Long, Seq[Seq[Any]]) = {
+        val df = spark.read.parquet(path)
+          .filter(col("l_partkey") <= pMax / 4 && col("l_suppkey") <= sMax / 4)
+        val answer = df.collect().map(_.toSeq).toSeq
+          .sortBy(_.mkString(","))
+        val rows = df.queryExecution.executedPlan.collectFirst {
+          case f: org.apache.spark.sql.execution.FileSourceScanExec =>
+            f.metrics("numOutputRows").value
+        }.get
+        (rows, answer)
+      }
+      val (randomScanned, randomAnswer) = scanned(s"$tmp/random")
+      val (zScanned, zAnswer) = scanned(s"$tmp/zordered")
+      // identical answers (pruning must drop only non-matching row
+      // groups), far fewer rows surfaced by the z-ordered scan
+      assert(zAnswer == randomAnswer, "layouts must return the same rows")
+      assert(zScanned < randomScanned / 2,
+        s"z-order should prune: random=$randomScanned z=$zScanned")
     }
-    val (randomScanned, randomAnswer) = scanned(s"$tmp/random")
-    val (zScanned, zAnswer) = scanned(s"$tmp/zordered")
-    // identical answers (pruning must drop only non-matching row
-    // groups), far fewer rows surfaced by the z-ordered scan
-    assert(zAnswer == randomAnswer, "layouts must return the same rows")
-    assert(zScanned < randomScanned / 2,
-      s"z-order should prune: random=$randomScanned z=$zScanned")
   }
 
   test("testdata physical-schema contract: inferred parquet types match " +
@@ -246,27 +260,27 @@ class FormatsSpec extends SparkTestBase {
     // must tolerate ADDITIVE evolution (new column, old files) — the
     // one schema change a lake performs routinely — while the encoding
     // sniff (ExpectationsSpec) guards the breaking kind
-    val tmp = java.nio.file.Files.createTempDirectory("graft_evolve")
-    tmp.toFile.deleteOnExit()
-    val dir = tmp.toString
-    val v1 = graft.sources.Tables.region(spark, sf)
-    v1.write.mode("overwrite").parquet(s"$dir/t")
-    val v2 = v1.withColumn("r_tier",
-      when(col("r_regionkey") % 2 === 0, "gold").otherwise("standard"))
-    v2.write.mode("append").parquet(s"$dir/t")
-    val evolved = org.apache.spark.sql.types.StructType(
-      graft.sources.Tables.regionSchema :+
-        org.apache.spark.sql.types.StructField("r_tier",
-          org.apache.spark.sql.types.StringType))
-    val back = spark.read.schema(evolved).parquet(s"$dir/t")
-    val n = v1.count()
-    assert(back.count() == 2 * n)
-    // old files: NULL tier; new files: populated per the v2 rule
-    assert(back.filter(col("r_tier").isNull).count() == n)
-    assert(back.filter(col("r_tier") === "gold").count() ==
-      v1.filter(col("r_regionkey") % 2 === 0).count())
-    // and mergeSchema infers the union without a declared schema
-    val merged = spark.read.option("mergeSchema", "true").parquet(s"$dir/t")
-    assert(merged.columns.toSet == evolved.fieldNames.toSet)
+    withTempDir("graft_evolve") { tmp =>
+      val dir = tmp.toString
+      val v1 = graft.sources.Tables.region(spark, sf)
+      v1.write.mode("overwrite").parquet(s"$dir/t")
+      val v2 = v1.withColumn("r_tier",
+        when(col("r_regionkey") % 2 === 0, "gold").otherwise("standard"))
+      v2.write.mode("append").parquet(s"$dir/t")
+      val evolved = org.apache.spark.sql.types.StructType(
+        graft.sources.Tables.regionSchema :+
+          org.apache.spark.sql.types.StructField("r_tier",
+            org.apache.spark.sql.types.StringType))
+      val back = spark.read.schema(evolved).parquet(s"$dir/t")
+      val n = v1.count()
+      assert(back.count() == 2 * n)
+      // old files: NULL tier; new files: populated per the v2 rule
+      assert(back.filter(col("r_tier").isNull).count() == n)
+      assert(back.filter(col("r_tier") === "gold").count() ==
+        v1.filter(col("r_regionkey") % 2 === 0).count())
+      // and mergeSchema infers the union without a declared schema
+      val merged = spark.read.option("mergeSchema", "true").parquet(s"$dir/t")
+      assert(merged.columns.toSet == evolved.fieldNames.toSet)
+    }
   }
 }

@@ -19,28 +19,30 @@ class MultimodalSpec extends SparkTestBase {
   test("binaryFile ingest: a directory of raw media files becomes typed " +
       "MediaItems (glob-pruned, nested dirs walked) and decodes") {
     import java.nio.file.{Files, Paths}
-    val root = Files.createTempDirectory("graft_media").toString
-    Files.createDirectories(Paths.get(s"$root/shard0"))
-    val blobs = Map(
-      s"$root/a.bin" -> Array[Byte](0, 64, -128, -1, 7),
-      s"$root/shard0/b.bin" -> Array[Byte](1, 2, 3),
-      s"$root/c.txt" -> "not media".getBytes)
-    blobs.foreach { case (p, b) => Files.write(Paths.get(p), b) }
-    val items = Multimodal.mediaFromFiles(spark, root, "*.bin").collect()
-    // the .txt file is pruned at LISTING time by the glob
-    assert(items.length == 2)
-    assert(items.forall(_.meta.kind == "bin"))
-    val byLen = items.map(m => m.payload.length -> m).toMap
-    assert(byLen(5).payload.toSeq == blobs(s"$root/a.bin").toSeq)
-    assert(byLen(3).meta.width == 3L) // binaryFile's length column
-    // ids are distinct and stable (path-hash)
-    assert(items.map(_.doc_id).distinct.length == 2)
-    // composes with the decode stage unchanged
-    val feats = Multimodal.decodeBatches(
-      Multimodal.mediaFromFiles(spark, root, "*.bin")).collect()
-    val f5 = feats.find(_.n_bytes == 5).get
-    assert(f5.feature.toSeq ==
-      Seq(0.0, 64 / 255.0, 128 / 255.0, 255 / 255.0))
+    withTempDir("graft_media") { path =>
+      val root = path.toString
+      Files.createDirectories(Paths.get(s"$root/shard0"))
+      val blobs = Map(
+        s"$root/a.bin" -> Array[Byte](0, 64, -128, -1, 7),
+        s"$root/shard0/b.bin" -> Array[Byte](1, 2, 3),
+        s"$root/c.txt" -> "not media".getBytes)
+      blobs.foreach { case (p, b) => Files.write(Paths.get(p), b) }
+      val items = Multimodal.mediaFromFiles(spark, root, "*.bin").collect()
+      // the .txt file is pruned at LISTING time by the glob
+      assert(items.length == 2)
+      assert(items.forall(_.meta.kind == "bin"))
+      val byLen = items.map(m => m.payload.length -> m).toMap
+      assert(byLen(5).payload.toSeq == blobs(s"$root/a.bin").toSeq)
+      assert(byLen(3).meta.width == 3L) // binaryFile's length column
+      // ids are distinct and stable (path-hash)
+      assert(items.map(_.doc_id).distinct.length == 2)
+      // composes with the decode stage unchanged
+      val feats = Multimodal.decodeBatches(
+        Multimodal.mediaFromFiles(spark, root, "*.bin")).collect()
+      val f5 = feats.find(_.n_bytes == 5).get
+      assert(f5.feature.toSeq ==
+        Seq(0.0, 64 / 255.0, 128 / 255.0, 255 / 255.0))
+    }
   }
 
   test("decodeBatches emits first-bytes features deterministically") {

@@ -44,56 +44,63 @@ class PushAggThroughUnionSpec extends SparkTestBase {
   /** Parquet-backed frame: ConvertToLocalRelation folds unions of
     * in-memory LocalRelations away before any user rule runs, so the
     * shape tests need real sources. */
-  private def pq(name: String, rows: Seq[(Int, Double)]) = {
+  private def pq(root: java.nio.file.Path, name: String,
+      rows: Seq[(Int, Double)]) = {
     val sess = spark
     import sess.implicits._
-    val path = s"/tmp/graft_pushagg_spec/$name"
+    val path = s"$root/$name"
     rows.toDF("k", "v").write.mode("overwrite").parquet(path)
     spark.read.parquet(path)
   }
 
   test("sum/count/min/max decompose exactly; count never goes null") {
-    val sess = spark
-    import sess.implicits._
-    val a = pq("a", Seq((1, 10.0), (1, 5.0), (2, 1.0)))
-    val b = pq("b", Seq((1, 2.0), (3, 7.0)))
-    val got = a.unionByName(b).groupBy("k")
-      .agg(sum("v").as("s"), count(lit(1)).as("c"),
-        min("v").as("mn"), max("v").as("mx"))
-      .orderBy("k")
-    assert(partialAggsUnderUnion(got.queryExecution.optimizedPlan))
-    assert(got.collect().map(_.toSeq).toSeq == Seq(
-      Seq(1, 17.0, 3L, 2.0, 10.0),
-      Seq(2, 1.0, 1L, 1.0, 1.0),
-      Seq(3, 7.0, 1L, 7.0, 7.0)))
-    // schema must be unchanged by the rewrite (count stays non-null long)
-    assert(got.schema("c").dataType.typeName == "long")
+    withTempDir("graft_pushagg") { root =>
+      val sess = spark
+      import sess.implicits._
+      val a = pq(root, "a", Seq((1, 10.0), (1, 5.0), (2, 1.0)))
+      val b = pq(root, "b", Seq((1, 2.0), (3, 7.0)))
+      val got = a.unionByName(b).groupBy("k")
+        .agg(sum("v").as("s"), count(lit(1)).as("c"),
+          min("v").as("mn"), max("v").as("mx"))
+        .orderBy("k")
+      assert(partialAggsUnderUnion(got.queryExecution.optimizedPlan))
+      assert(got.collect().map(_.toSeq).toSeq == Seq(
+        Seq(1, 17.0, 3L, 2.0, 10.0),
+        Seq(2, 1.0, 1L, 1.0, 1.0),
+        Seq(3, 7.0, 1L, 7.0, 7.0)))
+      // schema must be unchanged by the rewrite (count stays non-null long)
+      assert(got.schema("c").dataType.typeName == "long")
+    }
   }
 
   test("non-decomposable and distinct aggregates are left untouched") {
-    val sess = spark
-    import sess.implicits._
-    val a = pq("na", Seq((1, 10.0), (2, 1.0)))
-    val b = pq("nb", Seq((1, 2.0)))
-    val avgDf = a.unionByName(b).groupBy("k").agg(avg("v").as("m"))
-    assert(!partialAggsUnderUnion(avgDf.queryExecution.optimizedPlan),
-      "avg is not decomposable by this rule and must not rewrite")
-    assert(avgDf.orderBy("k").collect().map(_.toSeq).toSeq ==
-      Seq(Seq(1, 6.0), Seq(2, 1.0)))
-    val distinctDf = a.unionByName(b).groupBy("k")
-      .agg(countDistinct("v").as("d"))
-    assert(!partialAggsUnderUnion(distinctDf.queryExecution.optimizedPlan),
-      "distinct aggregation must not rewrite")
+    withTempDir("graft_pushagg") { root =>
+      val sess = spark
+      import sess.implicits._
+      val a = pq(root, "na", Seq((1, 10.0), (2, 1.0)))
+      val b = pq(root, "nb", Seq((1, 2.0)))
+      val avgDf = a.unionByName(b).groupBy("k").agg(avg("v").as("m"))
+      assert(!partialAggsUnderUnion(avgDf.queryExecution.optimizedPlan),
+        "avg is not decomposable by this rule and must not rewrite")
+      assert(avgDf.orderBy("k").collect().map(_.toSeq).toSeq ==
+        Seq(Seq(1, 6.0), Seq(2, 1.0)))
+      val distinctDf = a.unionByName(b).groupBy("k")
+        .agg(countDistinct("v").as("d"))
+      assert(!partialAggsUnderUnion(distinctDf.queryExecution.optimizedPlan),
+        "distinct aggregation must not rewrite")
+    }
   }
 
   test("global (no grouping) aggregation over a union also decomposes") {
-    val sess = spark
-    import sess.implicits._
-    val a = pq("ga", Seq((0, 1.0), (0, 2.0)))
-    val b = pq("gb", Seq((0, 4.0)))
-    val got = a.unionByName(b)
-      .agg(sum("v").as("s"), count(lit(1)).as("c"))
-    assert(partialAggsUnderUnion(got.queryExecution.optimizedPlan))
-    assert(got.collect().map(_.toSeq).toSeq == Seq(Seq(7.0, 3L)))
+    withTempDir("graft_pushagg") { root =>
+      val sess = spark
+      import sess.implicits._
+      val a = pq(root, "ga", Seq((0, 1.0), (0, 2.0)))
+      val b = pq(root, "gb", Seq((0, 4.0)))
+      val got = a.unionByName(b)
+        .agg(sum("v").as("s"), count(lit(1)).as("c"))
+      assert(partialAggsUnderUnion(got.queryExecution.optimizedPlan))
+      assert(got.collect().map(_.toSeq).toSeq == Seq(Seq(7.0, 3L)))
+    }
   }
 }

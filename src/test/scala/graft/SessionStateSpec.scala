@@ -49,23 +49,23 @@ class SessionStateSpec extends SparkTestBase {
     val rows =
       (0 to 12).map(i => (1L, base + i * min5, 100L + i)) ++
         Seq((2L, base, 200L), (2L, base + 12 * min5, 201L))
-    val tmp = java.nio.file.Files.createTempDirectory("graft_sess")
-    tmp.toFile.deleteOnExit()
-    rows.toDF("user_id", "us", "event_id")
-      .select(col("event_id"), timestamp_micros(col("us")).as("ts"),
-        col("user_id"), lit("view").as("event_type"),
-        lit(1.0).as("value"), lit("{}").as("props"))
-      .write.mode("overwrite").parquet(s"$tmp/events.parquet")
-    val got = SessionState.q166IncrementalSessions(spark, tmp.toString)
-      .collect()
-      .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getLong(5)))
-    // user 1: one merged 60-minute 13-event session (it straddles the
-    // midpoint, so only the carried-state merge can produce this)
-    assert(got.filter(_._1 == 1L).toSeq == Seq((1L, 1, 13L, 3600L)),
-      s"merge case: ${got.toSeq}")
-    // user 2: two singleton sessions — the 60-min gap spans the cut
-    // but exceeds the threshold, so the open state must close as-is
-    assert(got.filter(_._1 == 2L).toSeq ==
-      Seq((2L, 1, 1L, 0L), (2L, 2, 1L, 0L)), s"close case: ${got.toSeq}")
+    withTempDir("graft_sess") { tmp =>
+      rows.toDF("user_id", "us", "event_id")
+        .select(col("event_id"), timestamp_micros(col("us")).as("ts"),
+          col("user_id"), lit("view").as("event_type"),
+          lit(1.0).as("value"), lit("{}").as("props"))
+        .write.mode("overwrite").parquet(s"$tmp/events.parquet")
+      val got = SessionState.q166IncrementalSessions(spark, tmp.toString)
+        .collect()
+        .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getLong(5)))
+      // user 1: one merged 60-minute 13-event session (it straddles the
+      // midpoint, so only the carried-state merge can produce this)
+      assert(got.filter(_._1 == 1L).toSeq == Seq((1L, 1, 13L, 3600L)),
+        s"merge case: ${got.toSeq}")
+      // user 2: two singleton sessions — the 60-min gap spans the cut
+      // but exceeds the threshold, so the open state must close as-is
+      assert(got.filter(_._1 == 2L).toSeq ==
+        Seq((2L, 1, 1L, 0L), (2L, 2, 1L, 0L)), s"close case: ${got.toSeq}")
+    }
   }
 }

@@ -366,33 +366,34 @@ class StreamingSpec extends SparkTestBase {
   test("checkpoint recovery: restart resumes exactly-once (file source)") {
     val sess = spark
     import sess.implicits._
-    val root = java.nio.file.Files.createTempDirectory("graft_ckpt")
-    val srcDir = root.resolve("src").toString
-    val outDir = root.resolve("out").toString
-    val ckpt = root.resolve("ckpt").toString
-    def writeWave(ids: Range): Unit =
-      ids.map(i => (t(f"2024-01-01 10:${i % 60}%02d:00"), i.toLong, "click", 1.0))
-        .toDF("ts", "user_id", "event_type", "value")
-        .repartition(1).write.mode("append").parquet(srcDir)
-    def runOnce(): Unit = {
-      val stream = sess.readStream
-        .schema("ts TIMESTAMP, user_id LONG, event_type STRING, value DOUBLE")
-        .parquet(srcDir)
-      val q = stream.writeStream
-        .format("parquet").option("path", outDir)
-        .option("checkpointLocation", ckpt)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination(120000)
+    withTempDir("graft_ckpt") { root =>
+      val srcDir = root.resolve("src").toString
+      val outDir = root.resolve("out").toString
+      val ckpt = root.resolve("ckpt").toString
+      def writeWave(ids: Range): Unit =
+        ids.map(i => (t(f"2024-01-01 10:${i % 60}%02d:00"), i.toLong, "click", 1.0))
+          .toDF("ts", "user_id", "event_type", "value")
+          .repartition(1).write.mode("append").parquet(srcDir)
+      def runOnce(): Unit = {
+        val stream = sess.readStream
+          .schema("ts TIMESTAMP, user_id LONG, event_type STRING, value DOUBLE")
+          .parquet(srcDir)
+        val q = stream.writeStream
+          .format("parquet").option("path", outDir)
+          .option("checkpointLocation", ckpt)
+          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+          .start()
+        q.awaitTermination(120000)
+      }
+      writeWave(1 to 10)
+      runOnce()
+      writeWave(11 to 15) // second wave lands AFTER the first run finished
+      runOnce()           // restart from the same checkpoint
+      val out = sess.read.parquet(outDir).select("user_id")
+        .collect().map(_.getLong(0)).sorted
+      // every row exactly once: wave 1 not re-emitted, wave 2 complete
+      assert(out.toSeq == (1L to 15L))
     }
-    writeWave(1 to 10)
-    runOnce()
-    writeWave(11 to 15) // second wave lands AFTER the first run finished
-    runOnce()           // restart from the same checkpoint
-    val out = sess.read.parquet(outDir).select("user_id")
-      .collect().map(_.getLong(0)).sorted
-    // every row exactly once: wave 1 not re-emitted, wave 2 complete
-    assert(out.toSeq == (1L to 15L))
   }
 
   test("mapGroupsWithState keeps running counts across micro-batches") {

@@ -41,19 +41,20 @@ class XmlIngestSpec extends SparkTestBase {
         s"<last>${r.getString(2)}</last>" +
         s"<territory>${r.getString(3)}</territory></rep>"
     }.mkString("<reps>", "", "</reps>")
-    val tmp = java.nio.file.Files.createTempDirectory("graft_xmlfile")
-    java.nio.file.Files.writeString(tmp.resolve("pharmaReps.xml"), doc)
-    val schema =
-      "`rep` ARRAY<STRUCT<`_rID`: STRING, `first`: STRING, `last`: STRING, `territory`: STRING>>"
-    val back = spark.read.option("wholetext", "true")
-      .text(tmp.toString)
-      .select(explode(from_xml(col("value"),
-        org.apache.spark.sql.types.StructType.fromDDL(schema).asInstanceOf[org.apache.spark.sql.types.StructType]
-      ).getField("rep")).as("r"))
-      .select(col("r._rID").as("rep_id"), col("r.first").as("first_name"),
-        col("r.last").as("last_name"), col("r.territory").as("territory"))
-    assert(back.collect().map(_.toSeq).toSet ==
-      reps.collect().map(_.toSeq).toSet)
+    withTempDir("graft_xmlfile") { tmp =>
+      java.nio.file.Files.writeString(tmp.resolve("pharmaReps.xml"), doc)
+      val schema =
+        "`rep` ARRAY<STRUCT<`_rID`: STRING, `first`: STRING, `last`: STRING, `territory`: STRING>>"
+      val back = spark.read.option("wholetext", "true")
+        .text(tmp.toString)
+        .select(explode(from_xml(col("value"),
+          org.apache.spark.sql.types.StructType.fromDDL(schema).asInstanceOf[org.apache.spark.sql.types.StructType]
+        ).getField("rep")).as("r"))
+        .select(col("r._rID").as("rep_id"), col("r.first").as("first_name"),
+          col("r.last").as("last_name"), col("r.territory").as("territory"))
+      assert(back.collect().map(_.toSeq).toSet ==
+        reps.collect().map(_.toSeq).toSet)
+    }
   }
 
   test("q48 txn XML round-trip preserves doubles and keys") {
@@ -63,13 +64,15 @@ class XmlIngestSpec extends SparkTestBase {
   }
 
   test("write modes overwrite/append model T1 incremental ingest (S4/S5)") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_ingest").toString
-    val li = graft.sources.Tables.lineitem(spark, sf).limit(100)
-    li.write.mode("overwrite").parquet(s"$tmp/t")
-    li.write.mode("append").parquet(s"$tmp/t")
-    assert(spark.read.parquet(s"$tmp/t").count() == 200)
-    li.write.mode("overwrite").parquet(s"$tmp/t")
-    assert(spark.read.parquet(s"$tmp/t").count() == 100)
+    withTempDir("graft_ingest") { path =>
+      val tmp = path.toString
+      val li = graft.sources.Tables.lineitem(spark, sf).limit(100)
+      li.write.mode("overwrite").parquet(s"$tmp/t")
+      li.write.mode("append").parquet(s"$tmp/t")
+      assert(spark.read.parquet(s"$tmp/t").count() == 200)
+      li.write.mode("overwrite").parquet(s"$tmp/t")
+      assert(spark.read.parquet(s"$tmp/t").count() == 100)
+    }
   }
 
   test("DDL + CTAS: CREATE TABLE AS SELECT and DROP (S7/S8)") {
@@ -84,20 +87,21 @@ class XmlIngestSpec extends SparkTestBase {
   }
 
   test("file-source streaming reads events (S10)") {
-    val streamDir = java.nio.file.Files.createTempDirectory("graft_stream")
-    java.nio.file.Files.copy(
-      java.nio.file.Paths.get(s"$sf/events.parquet"),
-      streamDir.resolve("events-000.parquet"))
-    val q = graft.streaming.Streams.eventsStream(spark, streamDir.toString)
-      .groupBy("event_type").count()
-      .writeStream.format("memory").queryName("file_stream_t")
-      .outputMode("complete")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination(120000)
-    val n = spark.table("file_stream_t")
-      .agg(sum("count")).collect()(0).getLong(0)
-    assert(n == graft.sources.Tables.events(spark, sf).count())
+    withTempDir("graft_stream") { streamDir =>
+      java.nio.file.Files.copy(
+        java.nio.file.Paths.get(s"$sf/events.parquet"),
+        streamDir.resolve("events-000.parquet"))
+      val q = graft.streaming.Streams.eventsStream(spark, streamDir.toString)
+        .groupBy("event_type").count()
+        .writeStream.format("memory").queryName("file_stream_t")
+        .outputMode("complete")
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+        .start()
+      q.awaitTermination(120000)
+      val n = spark.table("file_stream_t")
+        .agg(sum("count")).collect()(0).getLong(0)
+      assert(n == graft.sources.Tables.events(spark, sf).count())
+    }
   }
 
   test("approx_count_distinct accuracy contract holds (A5)") {
