@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import graft.operators.{AnnIncremental, AnnIndex, AnnRetrieval, Breadth, Breadth2, Breadth3, Breadth4, Breadth5, Breadth6, Breadth7, Breadth8, Breadth9, Breadth10, Breadth11, Curation, Curation2, CurationHardening, Dedup, DedupClusters, DedupEmbedding, Drift, Expectations, Multimodal, Graph, Graph2, Materialize, Relational, Similarity, SketchAlgebra, Skew, StorageLayout, TextEncode, TextOps, TimeSeries, TimeSeries2, TrainingPipeline, XmlShred}
+import graft.operators.{AnnIncremental, AnnIndex, AnnRetrieval, Curation, Curation2, CurationHardening, Dedup, DedupClusters, DedupEmbedding, Drift, Expectations, Multimodal, Graph, Graph2, Materialize, Relational, Similarity, SketchAlgebra, Skew, StorageLayout, TextEncode, TextOps, TimeSeries, TimeSeries2, TrainingPipeline, XmlShred}
 import graft.operators.{Affinity, Audit, Calibration, Contribution, Coreset, CrossCorr, Cuped, Evaluation, Evaluation2, ExactSubstr, Experiment, FeaturePrep, Governance, Graph3, Hierarchy, InfoTheory, InvertedIndex, Keyphrase, Lifecycle, Linkage, MaxCover, Mmr, Pca, SessionState, TextProfile, Vocabulary}
 import graft.streaming.Streams
 
@@ -28,8 +28,7 @@ object SparkEntry {
 
   /** Every registered query, one entry per implemented operator from SURVEY.md §2. */
   lazy val all: Seq[QueryDef] =
-    Relational.defs ++ Breadth.defs ++ Breadth2.defs ++
-      Breadth3.defs ++ Breadth4.defs ++ Breadth5.defs ++ Breadth6.defs ++ Breadth7.defs ++ Breadth8.defs ++ Breadth9.defs ++ Breadth10.defs ++ Breadth11.defs ++
+    Relational.defs ++
       Dedup.defs ++ DedupEmbedding.defs ++ DedupClusters.defs ++
       TextOps.defs ++ TextEncode.defs ++ Similarity.defs ++ AnnIndex.defs ++
       AnnRetrieval.defs ++ AnnIncremental.defs ++

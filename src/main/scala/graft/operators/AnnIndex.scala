@@ -14,6 +14,8 @@ import Similarity.{QselCte, TopK, onlyQueries, queryVecs, corpusVecs, simCol,
   * with ADC serving (q113), and the composed IVF+PQ production layout
   * (q114). The exact brute-force ground truth, the LSH variant, and
   * the shared recall contracts live in [[Similarity]].
+  *
+  * Also here: the int8 scalar-quantization audit (q387).
   */
 object AnnIndex {
 
@@ -440,6 +442,63 @@ object AnnIndex {
   private val IvfPqRecallFloor = 0.5
 
 
+  // ---------------------------------------------------------------- q387
+
+  /** q387 int8 code range (symmetric scalar quantization). */
+  private[graft] val QuantMax = 127L
+
+  /** q387 — INT8 SCALAR-QUANTIZATION AUDIT: symmetric per-vector int8
+    * quantization (scale = the vector's max |coordinate|, code =
+    * round(v·127/scale) ∈ [−127, 127]) priced per label by cosine
+    * preservation, worst-vector cosine, max absolute coordinate error,
+    * and relative MSE. This is the 4×-memory serving trade every
+    * vector store offers BEFORE the codebook methods — per-vector
+    * scalar quant needs no trained model (vs q113's PQ/q114's IVFPQ),
+    * so the audit is the decision input for "is int8 enough, or do we
+    * pay for PQ training?". Mergeable and one-pass: per-vector work is
+    * a 64-row partitioned window (the max-abs scale) plus exact-BIGINT
+    * folds; per-label roll-ups fold micro-quantized cosines (never raw
+    * double sums). Linear in the corpus, no joins wider than the scan.
+    *
+    * Determinism: quantize → reconstruct → error all in integer
+    * micro-units (round-half-away division by the exact integer
+    * scale); cos folds exact BIGINT dot/norms with two sqrts + one
+    * division at the end (the q223 trick); per-vector cos micro-
+    * quantized before the label mean. */
+  def q387Int8QuantAudit(spark: SparkSession, dir: String): DataFrame = {
+    val wVec = Window.partitionBy("vec_id")
+    val pts = Tables.embeddings(spark, dir)
+      .select(col("vec_id"), col("label"),
+        posexplode(col("embedding")).as(Seq("pos", "v")))
+      .withColumn("vm",
+        expr("cast(round(cast(v as double) * 1000000, 0) as bigint)"))
+      .withColumn("scale_m", max(abs(col("vm"))).over(wVec))
+      .filter(col("scale_m") > 0) // the all-zero vector has no scale
+      .withColumn("code",
+        expr(s"cast(round(vm * $QuantMax.0 / scale_m, 0) as bigint)"))
+      .withColumn("rm",
+        expr(s"cast(round(code * scale_m / $QuantMax.0, 0) as bigint)"))
+      .withColumn("err", col("vm") - col("rm"))
+    val per = pts.groupBy("vec_id", "label")
+      .agg(sum(col("vm") * col("rm")).as("dot"),
+        sum(col("vm") * col("vm")).as("v2"),
+        sum(col("rm") * col("rm")).as("r2"),
+        sum(col("err") * col("err")).as("e2"),
+        max(abs(col("err"))).as("max_err"))
+      .withColumn("cos_u", expr(
+        "cast(round(cast(dot as double) / (sqrt(cast(v2 as double))" +
+          " * sqrt(cast(r2 as double))) * 1e6, 0) as bigint)"))
+    per.groupBy("label")
+      .agg(count(lit(1)).as("n_vecs"),
+        expr("round(cast(sum(cos_u) as double) / count(*) / 1e6, 6)")
+          .as("mean_cos"),
+        expr("round(min(cos_u) / 1e6, 6)").as("worst_cos"),
+        max(col("max_err")).as("max_abs_err_micro"),
+        expr("round(cast(sum(e2) as double) / cast(sum(v2) as double)," +
+          " 6)").as("rel_mse"))
+      .orderBy("label")
+  }
+
   val defs: Seq[QueryDef] = Seq(
     QueryDef("q52_ann_ivf_topk", q52AnnIvfTopK _,
       s"""WITH $QselCte
@@ -452,5 +511,49 @@ object AnnIndex {
     QueryDef("q114_ann_ivfpq", q114AnnIvfPq _,
       s"""WITH $QselCte
         |SELECT count(*) AS n_queries, TRUE AS avg_recall_ok
-        |FROM qsel""".stripMargin))
+        |FROM qsel""".stripMargin),
+    QueryDef("q387_int8_quant_audit", q387Int8QuantAudit _,
+      s"""WITH ex AS (
+        |  SELECT vec_id, label, i AS pos,
+        |         CAST(round(CAST(embedding[i] AS DOUBLE) * 1000000, 0)
+        |              AS BIGINT) AS vm
+        |  FROM (SELECT vec_id, label, embedding,
+        |               unnest(generate_series(1, len(embedding))) AS i
+        |        FROM embeddings)),
+        |sc AS (
+        |  SELECT vec_id, label, pos, vm,
+        |         max(abs(vm)) OVER (PARTITION BY vec_id) AS scale_m
+        |  FROM ex),
+        |qt AS (
+        |  SELECT *,
+        |         CAST(round(vm * $QuantMax.0 / scale_m, 0) AS BIGINT)
+        |           AS code
+        |  FROM sc WHERE scale_m > 0),
+        |rc AS (
+        |  SELECT *,
+        |         CAST(round(code * scale_m / $QuantMax.0, 0) AS BIGINT)
+        |           AS rm
+        |  FROM qt),
+        |per AS (
+        |  SELECT vec_id, label,
+        |         CAST(sum(vm * rm) AS BIGINT) AS dot,
+        |         CAST(sum(vm * vm) AS BIGINT) AS v2,
+        |         CAST(sum(rm * rm) AS BIGINT) AS r2,
+        |         CAST(sum((vm - rm) * (vm - rm)) AS BIGINT) AS e2,
+        |         CAST(max(abs(vm - rm)) AS BIGINT) AS max_err
+        |  FROM rc GROUP BY 1, 2),
+        |cu AS (
+        |  SELECT *,
+        |         CAST(round(CAST(dot AS DOUBLE)
+        |           / (sqrt(CAST(v2 AS DOUBLE)) * sqrt(CAST(r2
+        |           AS DOUBLE))) * 1e6, 0) AS BIGINT) AS cos_u
+        |  FROM per)
+        |SELECT label, CAST(count(*) AS BIGINT) AS n_vecs,
+        |       round(CAST(sum(cos_u) AS DOUBLE) / count(*) / 1e6, 6)
+        |         AS mean_cos,
+        |       round(min(cos_u) / 1e6, 6) AS worst_cos,
+        |       CAST(max(max_err) AS BIGINT) AS max_abs_err_micro,
+        |       round(CAST(sum(e2) AS DOUBLE) / CAST(sum(v2) AS DOUBLE),
+        |         6) AS rel_mse
+        |FROM cu GROUP BY label ORDER BY label""".stripMargin))
 }

@@ -15,6 +15,9 @@ import AnnIndex.{ivfCentroids, nearestCells}
   * semantic dedup (q107), labeled-centroid evaluation (q101),
   * truncated-prefix ANN (q129), deterministic negative sampling
   * (q131), and hybrid BM25+dense RRF retrieval (q120).
+  *
+  * Also here: the retrieval exposure audit (q350) and the simplified
+  * silhouette of the labeled centroids (q386).
   */
 object AnnRetrieval {
 
@@ -712,6 +715,139 @@ object AnnRetrieval {
   }
 
 
+  /** q350 — RETRIEVAL EXPOSURE AUDIT over the exact top-k lists:
+    * catalog coverage (what fraction of the corpus is ever retrieved)
+    * and the exposure Gini (how unequally retrieval slots concentrate
+    * on few items) of q36's cached ground-truth lists — the
+    * feedback-loop health check run before training on
+    * retrieval-sampled data (a coverage-poor, high-Gini retriever
+    * starves the corpus tail). Gini uses the q211 sorted-rank
+    * identity with never-retrieved items as explicit zeros: ranks of
+    * the exposed profile come from [[DistributedRank]] (no global
+    * window) and shift by the zero count; zero-exposure items
+    * contribute nothing to Σr·x, so only the exposed profile is ever
+    * materialized.
+    *
+    * Scale shape: the top-k table is |queries|·k rows; the exposure
+    * profile at most that; one distributed ordinal over it. */
+  def q350RetrievalExposure(spark: SparkSession, dir: String): DataFrame = {
+    val nVecs = AnnIndex.embCount(spark, dir)
+    val expo = Similarity.q36AnnBruteTopK(spark, dir)
+      .groupBy("cid").agg(count(lit(1)).as("x"))
+    val ranked = DistributedRank.withGlobalRank(expo, "r",
+      col("x").asc, col("cid").asc)
+    ranked
+      .agg(count(lit(1)).as("n_exposed"), sum(col("x")).as("sx"),
+        sum(col("r") * col("x")).as("srx"))
+      .select(lit(nVecs).as("n_corpus"), col("n_exposed"),
+        // an empty corpus has no coverage: NULL, as the oracle's 0 / 0
+        round(when(lit(nVecs) > 0, col("n_exposed").cast("double") / nVecs), 6)
+          .as("coverage"),
+        col("sx").as("total_slots"),
+        // Σ rank·x over ALL items = srx + zero_count·sx (every exposed
+        // rank shifts past the zeros); Gini = (2Σrx − (n+1)Σx)/(nΣx)
+        round((lit(2L) * (col("srx") + (lit(nVecs) - col("n_exposed")) *
+            col("sx")) - lit(nVecs + 1L) * col("sx")).cast("double") /
+          (lit(nVecs).cast("double") * col("sx").cast("double")), 6)
+          .as("exposure_gini"))
+  }
+
+  /** q36's exact brute top-10 lists as oracle CTE text (verbatim the
+    * q36 oracle derivation) for q350. */
+  private def bruteTopCtes: String =
+    s"""$QselCte,
+      |bex AS (
+      |  SELECT vec_id, CAST(unnest(embedding) AS DOUBLE) AS x,
+      |         generate_subscripts(embedding, 1) AS i
+      |  FROM embeddings),
+      |bnorms AS (SELECT vec_id, sqrt(sum(x * x)) AS nrm
+      |           FROM bex GROUP BY 1),
+      |bdots AS (
+      |  SELECT a.vec_id AS qid, b.vec_id AS cid, sum(a.x * b.x) AS dot
+      |  FROM bex a JOIN bex b ON a.i = b.i
+      |                       AND a.vec_id IN (SELECT vec_id FROM qsel)
+      |                       AND a.vec_id <> b.vec_id
+      |  GROUP BY 1, 2),
+      |bscored AS (
+      |  SELECT qid, cid,
+      |         round(dot / (n1.nrm * n2.nrm), 6) AS cosine
+      |  FROM bdots
+      |  JOIN bnorms n1 ON n1.vec_id = qid
+      |  JOIN bnorms n2 ON n2.vec_id = cid),
+      |branked AS (
+      |  SELECT qid, cid,
+      |         row_number() OVER (PARTITION BY qid
+      |                            ORDER BY cosine DESC, cid ASC) AS rank
+      |  FROM bscored),
+      |btop AS (SELECT qid, cid FROM branked WHERE rank <= 10)"""
+      .stripMargin
+
+  // ---------------------------------------------------------------- q386
+
+  /** q386 — SIMPLIFIED SILHOUETTE (centroid-based, Hruschka et al. —
+    * the O(N·k) member of the silhouette family): per vector, cohesion
+    * a = 1 − cos(v, own centroid) vs separation b = 1 − max cos to any
+    * OTHER centroid, s = (b − a)/max(a, b) ∈ [−1, 1]; negative s means
+    * some other label's centroid is CLOSER — the per-label roll-up of
+    * exactly the vectors q233's confusion matrix counts cell-by-cell.
+    * This is the cluster-quality gate run before trusting labels as
+    * retrieval filters (q223 asks "are centroids separated?"; this
+    * asks "do the POINTS agree?"). Full silhouette is O(N²) pairwise —
+    * a non-starter at corpus scale; the simplified form needs one
+    * point×centroid join (n·k·d rows, model-sized broadcast — the
+    * standard brute-classify matmul, linear in the corpus).
+    *
+    * Determinism: all folds over exact micro-quantized BIGINTs (the
+    * shared [[AnnRetrieval.labelCentroids]] profile + per-vector Σvm²);
+    * doubles appear only in the final per-(vec, centroid) cosine —
+    * identical op shapes cross-engine — and every per-vector s is
+    * micro-quantized BEFORE the per-label mean folds (a raw double sum
+    * across rows would be merge-order-dependent). */
+  def q386SimplifiedSilhouette(spark: SparkSession,
+      dir: String): DataFrame = {
+    val cd = AnnRetrieval.labelCentroids(spark, dir)
+    val cNorms = cd.groupBy(col("label").as("c_label"))
+      .agg(sum(col("cq") * col("cq")).as("c2"))
+    val pts = Tables.embeddings(spark, dir)
+      .select(col("vec_id"), col("label"),
+        posexplode(col("embedding")).as(Seq("pos", "v")))
+      .withColumn("vm",
+        expr("cast(round(cast(v as double) * 1000000, 0) as bigint)"))
+    val v2 = pts.groupBy("vec_id").agg(sum(col("vm") * col("vm")).as("v2"))
+    val dots = pts
+      .join(broadcast(cd.select(col("label").as("c_label"), col("pos"),
+        col("cq"))), Seq("pos"))
+      .groupBy("vec_id", "label", "c_label")
+      .agg(sum(col("vm") * col("cq")).as("dot"))
+    val scored = dots
+      .join(broadcast(cNorms), Seq("c_label"))
+      .join(v2, Seq("vec_id"))
+      // zero-norm guard (mirrors q387's scale_m > 0): an all-zero
+      // embedding would make cos = 0/0 = NaN, which Spark's non-ANSI
+      // bigint cast silently zeroes while DuckDB errors — filter the
+      // (non-occurring but possible) zero vectors out on BOTH sides
+      .filter(col("v2") > 0)
+      .withColumn("cos", col("dot").cast("double") /
+        (sqrt(col("v2").cast("double")) * sqrt(col("c2").cast("double"))))
+    val per = scored.groupBy("vec_id", "label")
+      .agg(max(when(col("c_label") === col("label"), col("cos")))
+          .as("cos_own"),
+        max(when(col("c_label") =!= col("label"), col("cos")))
+          .as("cos_other"))
+      .withColumn("s_u", expr(
+        "cast(round(case when 1 - least(cos_own, cos_other) <> 0" +
+          " then (cos_own - cos_other)" +
+          " / (1 - least(cos_own, cos_other)) end * 1e6, 0) as bigint)"))
+    per.groupBy("label")
+      .agg(count(lit(1)).as("n_vecs"),
+        expr("round(cast(sum(s_u) as double) / count(*) / 1e6, 6)")
+          .as("mean_sil"),
+        expr("sum(case when s_u < 0 then 1 else 0 end) * 1000000" +
+          " div count(*)").as("neg_ppm"),
+        expr("round(min(s_u) / 1e6, 6)").as("worst_sil"))
+      .orderBy("label")
+  }
+
   val defs: Seq[QueryDef] = Seq(
     QueryDef("q263_retrieval_ndcg", q263RetrievalNdcg _,
       {
@@ -1201,5 +1337,78 @@ object AnnRetrieval {
         |  FROM cand)
         |SELECT n.qid, p.pos_id, n.neg_rank, n.cid AS neg_id
         |FROM negs n JOIN pos p USING (qid)
-        |WHERE n.neg_rank <= $NegK ORDER BY qid, neg_rank""".stripMargin))
+        |WHERE n.neg_rank <= $NegK ORDER BY qid, neg_rank""".stripMargin),
+    QueryDef("q350_retrieval_exposure", q350RetrievalExposure _,
+      s"""WITH $bruteTopCtes,
+        |expo AS (SELECT cid, CAST(count(*) AS BIGINT) AS x
+        |         FROM btop GROUP BY 1),
+        |rk AS (SELECT cid, x,
+        |              row_number() OVER (ORDER BY x, cid) AS r
+        |       FROM expo),
+        |agg AS (SELECT CAST(count(*) AS BIGINT) AS n_exposed,
+        |               CAST(sum(x) AS BIGINT) AS sx,
+        |               CAST(sum(r * x) AS BIGINT) AS srx
+        |        FROM rk),
+        |nn AS (SELECT count(*) AS n FROM embeddings)
+        |SELECT CAST(nn.n AS BIGINT) AS n_corpus, a.n_exposed,
+        |       round(CAST(a.n_exposed AS DOUBLE) / nn.n, 6) AS coverage,
+        |       a.sx AS total_slots,
+        |       round(CAST(2 * (a.srx + (nn.n - a.n_exposed) * a.sx)
+        |                  - (nn.n + 1) * a.sx AS DOUBLE)
+        |             / (CAST(nn.n AS DOUBLE) * CAST(a.sx AS DOUBLE)), 6)
+        |         AS exposure_gini
+        |FROM agg a, nn""".stripMargin),
+    QueryDef("q386_simplified_silhouette", q386SimplifiedSilhouette _,
+      """WITH ex AS (
+        |  SELECT vec_id, label, i AS pos,
+        |         CAST(round(CAST(embedding[i] AS DOUBLE) * 1000000, 0)
+        |              AS BIGINT) AS vm
+        |  FROM (SELECT vec_id, label, embedding,
+        |               unnest(generate_series(1, len(embedding))) AS i
+        |        FROM embeddings)),
+        |cd AS (SELECT label, pos, CAST(count(*) AS BIGINT) AS n,
+        |              CAST(sum(vm) AS BIGINT) AS s
+        |       FROM ex GROUP BY 1, 2),
+        |cq AS (SELECT label AS c_label, pos,
+        |              CAST(round(CAST(s AS DOUBLE) / n, 0) AS BIGINT)
+        |                AS cq
+        |       FROM cd),
+        |c2 AS (SELECT c_label, CAST(sum(cq * cq) AS BIGINT) AS c2
+        |       FROM cq GROUP BY 1),
+        |v2 AS (SELECT vec_id, CAST(sum(vm * vm) AS BIGINT) AS v2
+        |       FROM ex GROUP BY 1),
+        |dots AS (
+        |  SELECT e.vec_id, e.label, q.c_label,
+        |         CAST(sum(e.vm * q.cq) AS BIGINT) AS dot
+        |  FROM ex e JOIN cq q ON q.pos = e.pos
+        |  GROUP BY 1, 2, 3),
+        |sc AS (
+        |  SELECT d.vec_id, d.label, d.c_label,
+        |         CAST(d.dot AS DOUBLE) / (sqrt(CAST(v.v2 AS DOUBLE))
+        |           * sqrt(CAST(c.c2 AS DOUBLE))) AS cos
+        |  FROM dots d JOIN v2 v USING (vec_id) JOIN c2 c
+        |    USING (c_label)
+        |  WHERE v.v2 > 0),
+        |per AS (
+        |  SELECT vec_id, label,
+        |         max(CASE WHEN c_label = label THEN cos END) AS cos_own,
+        |         max(CASE WHEN c_label <> label THEN cos END)
+        |           AS cos_other
+        |  FROM sc GROUP BY 1, 2),
+        |su AS (
+        |  SELECT label,
+        |         CAST(round(CASE WHEN 1 - least(cos_own, cos_other)
+        |                <> 0
+        |              THEN (cos_own - cos_other)
+        |                / (1 - least(cos_own, cos_other)) END * 1e6, 0)
+        |              AS BIGINT) AS s_u
+        |  FROM per)
+        |SELECT label, CAST(count(*) AS BIGINT) AS n_vecs,
+        |       round(CAST(sum(s_u) AS DOUBLE) / count(*) / 1e6, 6)
+        |         AS mean_sil,
+        |       CAST(sum(CASE WHEN s_u < 0 THEN 1 ELSE 0 END)
+        |            AS BIGINT) * 1000000
+        |         // CAST(count(*) AS BIGINT) AS neg_ppm,
+        |       round(min(s_u) / 1e6, 6) AS worst_sil
+        |FROM su GROUP BY label ORDER BY label""".stripMargin))
 }

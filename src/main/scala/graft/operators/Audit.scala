@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.QueryDef
@@ -30,6 +31,10 @@ import graft.sources.Tables
   * not engine hashes, so the oracle reproduces them bit-identically;
   * latest-wins ties are impossible because (event ts micros, event_id)
   * is unique.
+  *
+  * Also here: SCD type-1 upsert and SCD2 history and point-in-time attach
+  * (q78, q80, q128), the Benford first-digit audit (q353), penny-exact
+  * proration (q367) and the duplicate-invoice scan (q371).
   */
 object Audit {
 
@@ -534,6 +539,260 @@ object Audit {
     s"WITH $ctes\nSELECT * FROM ($arms)\nORDER BY join_pair, key"
   }
 
+  /** q78 — SCD type-1 upsert as a full-outer merge: an incoming snapshot
+    * overwrites matching keys, inserts new ones, leaves the rest — the
+    * MERGE INTO shape on plain immutable storage (rewrite-on-merge;
+    * at scale, partition the dim so only touched partitions rewrite). */
+  def q78Scd1Upsert(spark: SparkSession, dir: String): DataFrame = {
+    val current = Tables.supplier(spark, dir)
+      .filter(col("s_suppkey") % 2 === 0)
+      .select(col("s_suppkey").as("k"), col("s_name").as("cur_name"),
+        col("s_acctbal").as("cur_bal"))
+    val incoming = Tables.supplier(spark, dir)
+      .filter(col("s_suppkey") % 3 === 0)
+      .select(col("s_suppkey").as("k"), col("s_name").as("new_name"),
+        round(col("s_acctbal") + 100, 2).as("new_bal"))
+    current.join(incoming, Seq("k"), "full_outer")
+      .select(col("k").as("suppkey"),
+        coalesce(col("new_name"), col("cur_name")).as("name"),
+        round(coalesce(col("new_bal"), col("cur_bal")), 2).as("acctbal"),
+        when(col("cur_name").isNull, "inserted")
+          .when(col("new_name").isNull, "unchanged")
+          .otherwise("updated").as("change_type"))
+      .orderBy("suppkey")
+  }
+
+  /** q80 — SCD2 dimension history: collapse each customer's order-priority
+    * timeline into validity ranges (valid_from / valid_to / is_current).
+    * One window pass marks change points, a cumulative sum numbers the
+    * versions, one aggregate collapses them — the standard
+    * change-data-capture shape. Partitioned by custkey: at 100 TB this is
+    * one hash shuffle and per-key sorted state, no self-join. */
+  def q80Scd2History(spark: SparkSession, dir: String): DataFrame = {
+    val w = Window.partitionBy("custkey").orderBy("ts", "o_orderkey")
+    val versioned = Tables.orders(spark, dir)
+      .select(col("o_custkey").as("custkey"),
+        col("o_orderpriority").as("priority"),
+        col("o_orderdate").as("ts"), col("o_orderkey"))
+      .withColumn("prev", lag(col("priority"), 1).over(w))
+      .withColumn("chg",
+        when(col("prev").isNull || col("prev") =!= col("priority"), 1)
+          .otherwise(0))
+      .withColumn("version", sum(col("chg"))
+        .over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow))
+        .cast("int"))
+    val vers = versioned.groupBy("custkey", "version")
+      .agg(min(col("priority")).as("priority"),
+        min(col("ts")).as("valid_from"),
+        count(lit(1)).as("n_orders"))
+    val wv = Window.partitionBy("custkey").orderBy("version")
+    vers
+      .withColumn("valid_to", lead(col("valid_from"), 1).over(wv))
+      .select(col("custkey"), col("version"), col("priority"),
+        col("valid_from"), col("valid_to"),
+        col("valid_to").isNull.as("is_current"), col("n_orders"))
+      .orderBy("custkey", "version")
+  }
+
+  /** q128 — SCD2 point-in-time attach: join each fact row to the
+    * dimension version that was valid WHEN THE FACT HAPPENED — the
+    * composition that makes SCD2 history (q80) useful, and the one
+    * that silently leaks future attributes when done with a plain
+    * latest-version join. Expressed as the native as-of join
+    * ([[graft.plans.AsofJoin]]): one clustered shuffle + sort per
+    * side and an O(1)-state streaming merge, instead of the range
+    * join (valid_from <= ts < valid_to) whose interval predicate
+    * Spark would plan as a pairwise blowup. Version starts are
+    * deduped to end-of-day state (max version per (custkey, date)) so
+    * the as-of match is unique and deterministic in both engines.
+    * Output: per customer, how many orders attach to a version whose
+    * priority matches the order's own (same-date priority flips
+    * legitimately attach to the end-of-day version, so consistency is
+    * high but not vacuously 100%). */
+  def q128Scd2PitJoin(spark: SparkSession, dir: String): DataFrame = {
+    val hist = q80Scd2History(spark, dir)
+      .groupBy(col("custkey").as("h_custkey"), col("valid_from"))
+      .agg(max(struct(col("version"), col("priority"))).as("v"))
+      .select(col("h_custkey"), col("valid_from"),
+        col("v.version").as("pit_version"),
+        col("v.priority").as("pit_priority"))
+    val facts = Tables.orders(spark, dir).select(
+      col("o_orderkey"), col("o_custkey").as("custkey"),
+      col("o_orderdate"), col("o_orderpriority"))
+    graft.plans.AsofJoin.asofJoin(facts, hist,
+        Seq("custkey"), Seq("h_custkey"), "o_orderdate", "valid_from")
+      .groupBy("custkey")
+      .agg(count(lit(1)).as("n_orders"),
+        sum((col("pit_priority") === col("o_orderpriority")).cast("long"))
+          .as("n_pit_consistent"),
+        max(col("pit_version")).as("max_version"))
+      .orderBy("custkey")
+  }
+
+  /** q353 pinned Benford expectations, ppm: p_d = log10(1 + 1/d)
+    * (libm log10 of constants — pinned Scala literals both engines
+    * read, the Benford6/cos6 discipline). */
+  private[graft] val BenfordPpm: Seq[Long] = (1 to 9).map { d =>
+    math.rint(math.log10(1.0 + 1.0 / d) * 1e6).toLong
+  }
+
+  /** q353 — BENFORD FIRST-DIGIT AUDIT of order totals: observed
+    * first-significant-digit shares of the exact cent amounts vs the
+    * Benford expectation, with per-digit χ² contributions — the
+    * classic forensic/data-quality scan for fabricated or truncated
+    * monetary columns (a synthetic generator that draws uniform
+    * prices FAILS it loudly, which is itself the honest result on
+    * this corpus — the audit's value is the number, not a pass).
+    *
+    * Exactness: digits from the decimal string of exact cents; shares
+    * and χ² terms are single divisions / products of exact integers
+    * and pinned ppm literals, micro-quantized once. Zero-filled digit
+    * spine (1–9) so the output shape is fixed.
+    *
+    * Scale shape: one fact fold to the 9-row digit profile. */
+  def q353BenfordAudit(spark: SparkSession, dir: String): DataFrame = {
+    val digits = Tables.orders(spark, dir)
+      .select(expr("cast(round(o_totalprice * 100, 0) as bigint)")
+        .as("cents"))
+      .filter(col("cents") > 0L)
+      .select(expr("cast(substring(cast(cents as string), 1, 1) as int)")
+        .as("digit"))
+      .groupBy("digit").agg(count(lit(1)).as("n_d"))
+    val spine = spark.range(1, 10)
+      .select(col("id").cast("int").as("digit"),
+        typedLit(BenfordPpm).as("ppm_all"))
+      .withColumn("expected_ppm", expr("element_at(ppm_all, digit)"))
+      .drop("ppm_all")
+    val tot = digits.agg(sum(col("n_d")).as("n"))
+    spine.join(digits, Seq("digit"), "left")
+      .withColumn("n_d", coalesce(col("n_d"), lit(0L)))
+      .crossJoin(broadcast(tot))
+      .withColumn("e_d",
+        col("n").cast("double") * col("expected_ppm") / 1e6)
+      .select(col("digit"), col("n_d"),
+        expr("cast(round(n_d * 1e6 / n, 0) as bigint)")
+          .as("observed_ppm"),
+        col("expected_ppm"),
+        expr("cast(round((n_d - e_d) * (n_d - e_d) / e_d * 1e6, 0) " +
+          "as bigint)").as("chi2_micro"))
+      .orderBy("digit")
+  }
+
+  /** q367 — PENNY-EXACT PRORATION AUDIT: allocate each order's header
+    * total across its line items proportionally to extended price, in
+    * whole cents, with the largest-remainder top-up INSIDE each order
+    * (per-order windows over ≤7 lines) — the classic financial
+    * allocation where Σ line allocations MUST equal the header total
+    * for every order (taxes/discounts make the header differ from the
+    * line sum, which is exactly why naive rounding drifts). Registered
+    * as its reconciliation audit: counts, the exactness boolean
+    * (bool_and over per-order sums), and the topped-up line count.
+    *
+    * Exactness: all arithmetic is BIGINT (products ≤ cents² < 2⁶³ at
+    * every graded scale — header ≤ ~6e6 cents, line share the same);
+    * no double appears anywhere. */
+  def q367PennyProration(spark: SparkSession, dir: String): DataFrame = {
+    val lines = Tables.lineitem(spark, dir)
+      .select(col("l_orderkey"), col("l_linenumber"),
+        expr("cast(round(l_extendedprice * 100, 0) as bigint)")
+          .as("line_cents"))
+    val orders = Tables.orders(spark, dir)
+      .select(col("o_orderkey"),
+        expr("cast(round(o_totalprice * 100, 0) as bigint)")
+          .as("total_cents"))
+    val wOrd = Window.partitionBy("l_orderkey")
+    val based = lines.join(orders,
+        col("l_orderkey") === col("o_orderkey"))
+      .withColumn("order_line_sum", sum(col("line_cents")).over(wOrd))
+      .withColumn("base",
+        expr("total_cents * line_cents div order_line_sum"))
+      .withColumn("rem",
+        expr("(total_cents * line_cents) % order_line_sum"))
+      .withColumn("rem_rank", row_number().over(
+        wOrd.orderBy(col("rem").desc, col("l_linenumber").asc)))
+      .withColumn("short",
+        col("total_cents") - sum(col("base")).over(wOrd))
+      .withColumn("alloc",
+        col("base") + when(col("rem_rank") <= col("short"), 1L)
+          .otherwise(0L))
+    val perOrder = based.groupBy("l_orderkey", "total_cents")
+      .agg(sum(col("alloc")).as("alloc_sum"),
+        count(lit(1)).as("n_lines"),
+        sum(when(col("rem_rank") <= col("short"), 1L).otherwise(0L))
+          .as("topped"))
+    perOrder.agg(
+        count(lit(1)).as("n_orders"),
+        sum(col("n_lines")).as("n_lines"),
+        sum(col("topped")).as("n_topped_up"),
+        expr("bool_and(alloc_sum = total_cents)")
+          .as("allocation_exact"),
+        sum(col("total_cents")).as("total_allocated_cents"))
+  }
+
+  /** q371 duplicate-invoice window (days). */
+  private[graft] val DupInvoiceWindowDays = 7
+
+  /** q371 — DUPLICATE-INVOICE SCAN: pairs of orders by the SAME
+    * customer for the IDENTICAL amount within
+    * [[DupInvoiceWindowDays]] days — the classic accounts-payable
+    * double-payment audit (q31's exact dedup catches identical
+    * documents; this catches identical MONEY EVENTS, which is a
+    * different fraud/ops surface). Candidates come from an equi-join
+    * on the (customer, exact cents) content key — amount equality IS
+    * the blocking key, so the pair set is bounded by amount-collision
+    * groups, never customers² — then the day-window predicate
+    * filters. Reported as the audit aggregate: suspect pairs, distinct
+    * later orders (the ones a clerk would hold), and the cents at
+    * risk.
+    *
+    * Scale shape: one self-equi-join on (custkey, cents) + a distinct
+    * fold; single-row output. */
+  def q371DuplicateInvoice(spark: SparkSession, dir: String): DataFrame = {
+    val ords = Tables.orders(spark, dir)
+      .select(col("o_custkey").as("cust"),
+        expr("cast(round(o_totalprice * 100, 0) as bigint)").as("cents"),
+        col("o_orderkey").as("okey"), to_date(col("o_orderdate")).as("d"))
+    val pairs = ords.select(col("cust"), col("cents"),
+        col("okey").as("k1"), col("d").as("d1"))
+      .join(ords.select(col("cust"), col("cents"), col("okey").as("k2"),
+        col("d").as("d2")), Seq("cust", "cents"))
+      .filter(col("k1") < col("k2") &&
+        abs(datediff(col("d2"), col("d1"))) <= DupInvoiceWindowDays)
+    // the "later" order of a pair = larger key on a date tie, else the
+    // later date — the one a reviewer holds
+    val later = pairs.select(col("cents"),
+      when(col("d2") > col("d1") ||
+        (col("d2") === col("d1") && col("k2") > col("k1")), col("k2"))
+        .otherwise(col("k1")).as("held"))
+    pairs.agg(count(lit(1)).as("n_suspect_pairs"))
+      .crossJoin(broadcast(later.select("held", "cents").distinct()
+        .agg(count(lit(1)).as("n_held_orders"),
+          sum(col("cents")).as("cents_at_risk"))))
+      .select(col("n_suspect_pairs"),
+        coalesce(col("n_held_orders"), lit(0L)).as("n_held_orders"),
+        coalesce(col("cents_at_risk"), lit(0L)).as("cents_at_risk"))
+  }
+
+  /** Oracle CTE text of q80's SCD2 version chain: `base` (one row per
+    * order: customer, priority, date), `marked` (1 where the priority
+    * differs from the customer's previous order) and `versioned` (the
+    * running count of changes as `version`). Shared by q80 and q128. */
+  private val Scd2VersionedCte =
+    """base AS (
+      |  SELECT o_custkey AS custkey, o_orderpriority AS priority,
+      |         o_orderdate AS ts, o_orderkey
+      |  FROM orders),
+      |marked AS (
+      |  SELECT *, CASE WHEN lag(priority) OVER w IS NULL
+      |                   OR lag(priority) OVER w <> priority
+      |                 THEN 1 ELSE 0 END AS chg
+      |  FROM base WINDOW w AS (PARTITION BY custkey ORDER BY ts, o_orderkey)),
+      |versioned AS (
+      |  SELECT *, CAST(sum(chg) OVER (PARTITION BY custkey
+      |              ORDER BY ts, o_orderkey ROWS UNBOUNDED PRECEDING)
+      |            AS INT) AS version
+      |  FROM marked)""".stripMargin
+
   val defs: Seq[QueryDef] = Seq(
     QueryDef("q337_freshness_matrix", q337FreshnessMatrix _,
       """WITH rows_ AS (
@@ -723,5 +982,163 @@ object Audit {
         |SELECT d, count(*) AS n_rows,
         |       CAST(sum(cents) AS BIGINT) AS cents_sum,
         |       bit_xor(h) AS fingerprint
-        |FROM rows_ GROUP BY d ORDER BY d""".stripMargin))
+        |FROM rows_ GROUP BY d ORDER BY d""".stripMargin),
+    QueryDef("q78_scd1_upsert", q78Scd1Upsert _,
+      """WITH cur AS (
+        |  SELECT s_suppkey AS k, s_name AS cur_name, s_acctbal AS cur_bal
+        |  FROM supplier WHERE s_suppkey % 2 = 0),
+        |inc AS (
+        |  SELECT s_suppkey AS k, s_name AS new_name,
+        |         round(s_acctbal + 100, 2) AS new_bal
+        |  FROM supplier WHERE s_suppkey % 3 = 0)
+        |SELECT coalesce(cur.k, inc.k) AS suppkey,
+        |       coalesce(new_name, cur_name) AS name,
+        |       round(coalesce(new_bal, cur_bal), 2) AS acctbal,
+        |       CASE WHEN cur_name IS NULL THEN 'inserted'
+        |            WHEN new_name IS NULL THEN 'unchanged'
+        |            ELSE 'updated' END AS change_type
+        |FROM cur FULL OUTER JOIN inc ON cur.k = inc.k
+        |ORDER BY suppkey""".stripMargin),
+    QueryDef("q80_scd2_history", q80Scd2History _,
+      s"""WITH $Scd2VersionedCte,
+        |vers AS (
+        |  SELECT custkey, version, min(priority) AS priority,
+        |         min(ts) AS valid_from, count(*) AS n_orders
+        |  FROM versioned GROUP BY custkey, version)
+        |SELECT custkey, version, priority, valid_from,
+        |       lead(valid_from) OVER w2 AS valid_to,
+        |       (lead(valid_from) OVER w2 IS NULL) AS is_current,
+        |       n_orders
+        |FROM vers WINDOW w2 AS (PARTITION BY custkey ORDER BY version)
+        |ORDER BY custkey, version""".stripMargin),
+    // q80's version chain, end-of-day deduped, attached point-in-time
+    // via DuckDB's real ASOF JOIN (unique match per fact by
+    // construction, so both engines are deterministic)
+    QueryDef("q128_scd2_pit_join", q128Scd2PitJoin _,
+      s"""WITH $Scd2VersionedCte,
+        |vers AS (
+        |  SELECT custkey, version, min(priority) AS priority,
+        |         min(ts) AS valid_from
+        |  FROM versioned GROUP BY custkey, version),
+        |ranked AS (
+        |  SELECT custkey AS h_custkey, valid_from, version AS pit_version,
+        |         priority AS pit_priority,
+        |         row_number() OVER (PARTITION BY custkey, valid_from
+        |                            ORDER BY version DESC) AS rn
+        |  FROM vers),
+        |h2 AS (SELECT h_custkey, valid_from, pit_version, pit_priority
+        |       FROM ranked WHERE rn = 1),
+        |facts AS (
+        |  SELECT o_orderkey, o_custkey AS custkey, o_orderdate,
+        |         o_orderpriority
+        |  FROM orders)
+        |SELECT f.custkey, count(*) AS n_orders,
+        |       CAST(sum(CASE WHEN h.pit_priority = f.o_orderpriority
+        |                     THEN 1 ELSE 0 END) AS BIGINT)
+        |         AS n_pit_consistent,
+        |       CAST(max(h.pit_version) AS INT) AS max_version
+        |FROM facts f ASOF LEFT JOIN h2 h
+        |  ON f.custkey = h.h_custkey AND h.valid_from <= f.o_orderdate
+        |GROUP BY 1 ORDER BY 1""".stripMargin),
+    QueryDef("q353_benford_audit", q353BenfordAudit _,
+      {
+      val ppm = BenfordPpm.zipWithIndex
+        .map { case (p, i) => s"(${i + 1}, ${p})" }.mkString(", ")
+      s"""WITH expected(digit, expected_ppm) AS (VALUES $ppm),
+        |cents AS (
+        |  SELECT CAST(round(o_totalprice * 100, 0) AS BIGINT) AS c
+        |  FROM orders
+        |  WHERE CAST(round(o_totalprice * 100, 0) AS BIGINT) > 0),
+        |obs AS (
+        |  SELECT CAST(substr(CAST(c AS VARCHAR), 1, 1) AS INT) AS digit,
+        |         CAST(count(*) AS BIGINT) AS n_d
+        |  FROM cents GROUP BY 1),
+        |tot AS (SELECT CAST(sum(n_d) AS BIGINT) AS n FROM obs)
+        |SELECT e.digit, coalesce(o.n_d, 0) AS n_d,
+        |       CAST(round(coalesce(o.n_d, 0) * 1e6
+        |                  / (SELECT n FROM tot), 0) AS BIGINT)
+        |         AS observed_ppm,
+        |       CAST(e.expected_ppm AS BIGINT) AS expected_ppm,
+        |       CAST(round((coalesce(o.n_d, 0)
+        |           - (SELECT n FROM tot) * e.expected_ppm / 1e6)
+        |         * (coalesce(o.n_d, 0)
+        |           - (SELECT n FROM tot) * e.expected_ppm / 1e6)
+        |         / ((SELECT n FROM tot) * e.expected_ppm / 1e6) * 1e6, 0)
+        |         AS BIGINT) AS chi2_micro
+        |FROM expected e LEFT JOIN obs o ON o.digit = e.digit
+        |ORDER BY e.digit""".stripMargin
+    }),
+    QueryDef("q367_penny_proration", q367PennyProration _,
+      """WITH lines AS (
+        |  SELECT l.l_orderkey, l.l_linenumber,
+        |         CAST(round(l_extendedprice * 100, 0) AS BIGINT)
+        |           AS line_cents,
+        |         o.total_cents
+        |  FROM lineitem l
+        |  JOIN (SELECT o_orderkey,
+        |               CAST(round(o_totalprice * 100, 0) AS BIGINT)
+        |                 AS total_cents
+        |        FROM orders) o ON o.o_orderkey = l.l_orderkey),
+        |based AS (
+        |  SELECT l_orderkey, l_linenumber, total_cents,
+        |         total_cents * line_cents
+        |           // sum(line_cents) OVER (PARTITION BY l_orderkey)
+        |           AS base,
+        |         (total_cents * line_cents)
+        |           % sum(line_cents) OVER (PARTITION BY l_orderkey)
+        |           AS rem
+        |  FROM lines),
+        |ranked AS (
+        |  SELECT l_orderkey, total_cents, base,
+        |         row_number() OVER (PARTITION BY l_orderkey
+        |           ORDER BY rem DESC, l_linenumber) AS rem_rank,
+        |         total_cents - sum(base) OVER (PARTITION BY l_orderkey)
+        |           AS short
+        |  FROM based),
+        |alloc AS (
+        |  SELECT l_orderkey, total_cents,
+        |         base + CASE WHEN rem_rank <= short THEN 1 ELSE 0 END
+        |           AS alloc,
+        |         CASE WHEN rem_rank <= short THEN 1 ELSE 0 END AS topped
+        |  FROM ranked),
+        |per_order AS (
+        |  SELECT l_orderkey, total_cents,
+        |         CAST(sum(alloc) AS BIGINT) AS alloc_sum,
+        |         count(*) AS n_lines,
+        |         CAST(sum(topped) AS BIGINT) AS topped
+        |  FROM alloc GROUP BY 1, 2)
+        |SELECT CAST(count(*) AS BIGINT) AS n_orders,
+        |       CAST(sum(n_lines) AS BIGINT) AS n_lines,
+        |       CAST(sum(topped) AS BIGINT) AS n_topped_up,
+        |       bool_and(alloc_sum = total_cents) AS allocation_exact,
+        |       CAST(sum(total_cents) AS BIGINT)
+        |         AS total_allocated_cents
+        |FROM per_order""".stripMargin),
+    QueryDef("q371_duplicate_invoice", q371DuplicateInvoice _,
+      s"""WITH ords AS (
+        |  SELECT o_custkey AS cust,
+        |         CAST(round(o_totalprice * 100, 0) AS BIGINT) AS cents,
+        |         o_orderkey AS okey, CAST(o_orderdate AS DATE) AS d
+        |  FROM orders),
+        |pairs AS (
+        |  SELECT a.cents, a.okey AS k1, b.okey AS k2, a.d AS d1,
+        |         b.d AS d2
+        |  FROM ords a JOIN ords b
+        |    ON a.cust = b.cust AND a.cents = b.cents
+        |   AND a.okey < b.okey
+        |   AND abs(date_diff('day', a.d, b.d))
+        |         <= $DupInvoiceWindowDays),
+        |later AS (
+        |  SELECT DISTINCT cents,
+        |         CASE WHEN d2 > d1 OR (d2 = d1 AND k2 > k1) THEN k2
+        |              ELSE k1 END AS held
+        |  FROM pairs),
+        |agg AS (SELECT CAST(count(*) AS BIGINT) AS n_held_orders,
+        |               CAST(sum(cents) AS BIGINT) AS cents_at_risk
+        |        FROM later)
+        |SELECT (SELECT CAST(count(*) AS BIGINT) FROM pairs)
+        |         AS n_suspect_pairs,
+        |       coalesce(a.n_held_orders, 0) AS n_held_orders,
+        |       coalesce(a.cents_at_risk, 0) AS cents_at_risk
+        |FROM agg a""".stripMargin))
 }

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -21,6 +21,10 @@ import graft.sources.Tables
   * not rand(), so results are reproducible under any partitioning —
   * at 100 TB a rerun-stable sample is the difference between a
   * debuggable pipeline and a flaky one.
+  *
+  * Also here: the temporal holdout contamination audit (q351), the
+  * curation funnel ([[funnelGateCols]], q383), the token-budget
+  * systematic sample (q384) and head-boilerplate detection (q385).
   */
 object Curation {
 
@@ -637,6 +641,183 @@ object Curation {
       |               unnest(generate_series(1, len(ends))) AS i
       |        FROM spans))""".stripMargin
 
+  /** q351 — TEMPORAL HOLDOUT CONTAMINATION AUDIT: split the stream at
+    * its midpoint timestamp (the q252 tuning-snapshot cut) and
+    * measure, per event type, how much of the "future" test half is
+    * attributable to users already seen in training — the
+    * leakage-awareness number behind any time-based eval split
+    * (q117 moves near-dup clusters atomically; this quantifies the
+    * entity-overlap axis a temporal split CANNOT remove, so models
+    * evaluated on it are measured on warm users). Exact integer
+    * counts, single divisions.
+    *
+    * Scale shape: one distinct-user fold on the train half, one
+    * hash-join of the test half against it, enum-grain output. */
+  def q351TemporalHoldout(spark: SparkSession, dir: String): DataFrame = {
+    val ev = Tables.events(spark, dir)
+      .select(col("user_id"), col("event_type"),
+        unix_micros(col("ts")).as("us"))
+    val mid = ev.agg(expr("(min(us) + max(us)) div 2").as("mid"))
+    val tagged = ev.crossJoin(broadcast(mid))
+    val trainUsers = tagged.filter(col("us") <= col("mid"))
+      .select(col("user_id")).distinct()
+      .withColumn("seen", lit(1))
+    tagged.filter(col("us") > col("mid"))
+      .join(trainUsers, Seq("user_id"), "left")
+      .groupBy("event_type")
+      .agg(count(lit(1)).as("n_test_events"),
+        sum(when(col("seen") === 1, 1L).otherwise(0L))
+          .as("n_warm_events"),
+        countDistinct(col("user_id")).as("n_test_users"),
+        countDistinct(when(col("seen") === 1, col("user_id")))
+          .as("n_warm_users"))
+      .select(col("event_type"), col("n_test_events"),
+        col("n_warm_events"), col("n_test_users"), col("n_warm_users"),
+        round(col("n_warm_events").cast("double") / col("n_test_events"),
+          6).as("warm_event_share"),
+        round(col("n_warm_users").cast("double") / col("n_test_users"), 6)
+          .as("warm_user_share"))
+      .orderBy("event_type")
+  }
+
+  // ---------------------------------------------------------------- q383
+
+  /** q383 pinned gate constants (C4/Gopher-style rule shapes on the
+    * synthetic corpus; at production scale the same funnel runs with
+    * production thresholds — only these literals change). */
+  private[graft] val FunnelLenMin = 100L
+
+  private[graft] val FunnelLenMax = 20000L
+
+  private[graft] val FunnelMinWords = 10L
+
+  private[graft] val FunnelMwlMin = 2L // mean word length ∈ [2, 12] …
+
+  private[graft] val FunnelMwlMax = 12L // … as 2·w ≤ chars ≤ 12·w
+
+  private[graft] val FunnelStops = Seq("the", "a", "of", "and", "to")
+
+  /** distinct-word (type-token) ratio ≥ 3/10, as 10·distinct ≥ 3·words */
+  private[graft] val FunnelTtrNum = 3L
+
+  private[graft] val FunnelTtrDen = 10L
+
+  /** q383 — CURATION FUNNEL: cumulative survival of every document
+    * through the pinned quality gates IN ORDER (length band → word
+    * floor → mean-word-length band → stopword hit → type-token
+    * repetition floor), reported per source with the final keep rate.
+    * This is the attrition table every corpus card publishes (how many
+    * docs each rule removes, which source each rule bites) — the
+    * DECISION view on top of q39's per-doc scores: thresholds applied,
+    * staged, and attributed. Every rule is an exact integer predicate
+    * (bands compare as cross-products, never divisions), so the funnel
+    * is bit-deterministic; ONE scan, one conditional fold per source,
+    * no joins, no windows — embarrassingly parallel at any corpus
+    * size. */
+  /** Adds `words`/`n_words`/`n_wchars` and the five q383 gate flags
+    * `r1..r5` to a documents frame — ONE definition of the funnel
+    * rules, shared by q383 (the attrition report) and q389 (the
+    * composed materialization pipeline, which must apply EXACTLY the
+    * rules the report describes). */
+  private[graft] def funnelGateCols(d: DataFrame): DataFrame = {
+    val stops = FunnelStops.map(s => s"'$s'").mkString("array(", ", ", ")")
+    d.withColumn("words",
+        filter(split(col("text"), " "), w => length(w) > 0))
+      .withColumn("n_words", size(col("words")).cast("long"))
+      .withColumn("n_wchars",
+        length(regexp_replace(col("text"), " ", "")).cast("long"))
+      .withColumn("r1", col("n_chars").between(FunnelLenMin, FunnelLenMax))
+      .withColumn("r2", col("n_words") >= FunnelMinWords)
+      .withColumn("r3",
+        lit(FunnelMwlMin) * col("n_words") <= col("n_wchars") &&
+          col("n_wchars") <= lit(FunnelMwlMax) * col("n_words"))
+      .withColumn("r4", arrays_overlap(col("words"), expr(stops)))
+      .withColumn("r5",
+        lit(FunnelTtrDen) * size(array_distinct(col("words"))) >=
+          lit(FunnelTtrNum) * col("n_words"))
+  }
+
+  def q383CurationFunnel(spark: SparkSession, dir: String): DataFrame = {
+    val d = funnelGateCols(Tables.documents(spark, dir))
+    def cnt(c: Column): Column = sum(when(c, 1L).otherwise(0L))
+    d.groupBy("source")
+      .agg(count(lit(1)).as("n_docs"),
+        cnt(col("r1")).as("len_ok"),
+        cnt(col("r1") && col("r2")).as("and_words"),
+        cnt(col("r1") && col("r2") && col("r3")).as("and_mwl"),
+        cnt(col("r1") && col("r2") && col("r3") && col("r4"))
+          .as("and_stop"),
+        cnt(col("r1") && col("r2") && col("r3") && col("r4") &&
+          col("r5")).as("and_ttr"))
+      .withColumn("keep_ppm", expr("and_ttr * 1000000 div n_docs"))
+      .orderBy("source")
+  }
+
+  // ---------------------------------------------------------------- q384
+
+  /** q384 token stride: one pick per this many tokens of running mass
+    * (a planning literal like q376's 1 MiB target — production uses
+    * the token budget the training run actually has). */
+  private[graft] val TokenStride = 2048L
+
+  /** q384 — TOKEN-BUDGET SYSTEMATIC SAMPLE (size-weighted, PPS): order
+    * documents by a salted hash (deterministic shuffle — the never-
+    * `rand()` rule), take the distributed running total of token
+    * counts, and pick every document whose cumulative mass crosses a
+    * [[TokenStride]] boundary — Madow systematic sampling, selection
+    * probability ∝ document size, expected sample = total_tokens/T
+    * docs with NO binomial noise (exactly one pick per stride of
+    * corpus mass; a doc longer than T is picked with multiplicity, as
+    * PPS requires). This is how a token-budgeted subcorpus is drawn
+    * when doc-count sampling (q53's rate draw, q146's per-source cap)
+    * would over-weight short documents. Scale: the prefix sum is
+    * [[DistributedRank.withRunningTotal]] — range-partition +
+    * per-partition offsets, #partitions driver scalars, no global
+    * window; everything else is a scan. */
+  def q384TokenBudgetSample(spark: SparkSession, dir: String): DataFrame = {
+    val d = Tables.documents(spark, dir)
+      .select(col("doc_id"),
+        size(filter(split(col("text"), " "), w => length(w) > 0))
+          .cast("long").as("n_tokens"))
+      .withColumn("h",
+        md5(concat(lit("tbsample:"), col("doc_id").cast("string"))))
+    DistributedRank.withRunningTotal(d, "n_tokens", "cum",
+        asc("h"), asc("doc_id"))
+      .filter(expr(s"cum div $TokenStride >" +
+        s" (cum - n_tokens) div $TokenStride"))
+      .select(col("doc_id"), col("n_tokens"), col("cum"),
+        expr(s"cum div $TokenStride - (cum - n_tokens) div $TokenStride")
+          .as("multiplicity"))
+      .orderBy("cum")
+  }
+
+  // ---------------------------------------------------------------- q385
+
+  private[graft] val BoilerPrefixLen = 40
+
+  private[graft] val BoilerTopN = 20
+
+  /** q385 — HEAD-BOILERPLATE DETECTION: documents sharing an identical
+    * leading [[BoilerPrefixLen]]-char prefix, the signature of
+    * template headers/licenses/nav chrome that survives whole-doc
+    * dedup (bodies differ) and that q110's span windows price per doc
+    * but never NAME across docs. Pure content-key groupBy — the prefix
+    * IS the key, so no document pair ever meets outside its group and
+    * hot boilerplate cannot go quadratic; top-[[BoilerTopN]] by
+    * (count, prefix) is a TakeOrderedAndProject (K-row driver merge,
+    * no window). Cross-source spread (`n_sources`) separates shared
+    * template chrome from single-source dumps. */
+  def q385BoilerplatePrefix(spark: SparkSession, dir: String): DataFrame =
+    Tables.documents(spark, dir)
+      .groupBy(substring(col("text"), 1, BoilerPrefixLen).as("prefix"))
+      .agg(count(lit(1)).as("n_docs"),
+        countDistinct(col("source")).as("n_sources"),
+        countDistinct(col("lang")).as("n_langs"),
+        min(col("doc_id")).as("example_doc"))
+      .filter(col("n_docs") >= 2)
+      .orderBy(desc("n_docs"), asc("prefix"))
+      .limit(BoilerTopN)
+
   val defs: Seq[QueryDef] = Seq(
     // q73's recursive closure + q97's split hash keyed on the cluster id
     QueryDef("q117_leakage_safe_split", q117LeakageSafeSplit _,
@@ -928,5 +1109,94 @@ object Curation {
         |      FROM documents)
         |GROUP BY word
         |ORDER BY doc_freq DESC, total_count DESC, word ASC
-        |LIMIT 20""".stripMargin))
+        |LIMIT 20""".stripMargin),
+    QueryDef("q351_temporal_holdout", q351TemporalHoldout _,
+      """WITH ev AS (
+        |  SELECT user_id, event_type, epoch_us(ts) AS us FROM events),
+        |mid AS (SELECT (min(us) + max(us)) // 2 AS mid FROM ev),
+        |train_users AS (
+        |  SELECT DISTINCT user_id FROM ev
+        |  WHERE us <= (SELECT mid FROM mid)),
+        |test AS (
+        |  SELECT e.user_id, e.event_type,
+        |         CASE WHEN t.user_id IS NULL THEN 0 ELSE 1 END AS seen
+        |  FROM ev e LEFT JOIN train_users t ON e.user_id = t.user_id
+        |  WHERE e.us > (SELECT mid FROM mid))
+        |SELECT event_type,
+        |       CAST(count(*) AS BIGINT) AS n_test_events,
+        |       CAST(sum(seen) AS BIGINT) AS n_warm_events,
+        |       CAST(count(DISTINCT user_id) AS BIGINT) AS n_test_users,
+        |       CAST(count(DISTINCT CASE WHEN seen = 1 THEN user_id END)
+        |            AS BIGINT) AS n_warm_users,
+        |       round(CAST(sum(seen) AS DOUBLE) / count(*), 6)
+        |         AS warm_event_share,
+        |       round(CAST(count(DISTINCT CASE WHEN seen = 1
+        |                                      THEN user_id END) AS DOUBLE)
+        |             / count(DISTINCT user_id), 6) AS warm_user_share
+        |FROM test GROUP BY 1 ORDER BY 1""".stripMargin),
+    QueryDef("q383_curation_funnel", q383CurationFunnel _,
+      {
+      val stops = FunnelStops.map(s => s"'$s'").mkString("[", ", ", "]")
+      s"""WITH d AS (
+        |  SELECT source, n_chars,
+        |         list_filter(string_split(text, ' '),
+        |                     w -> len(w) > 0) AS words,
+        |         CAST(len(replace(text, ' ', '')) AS BIGINT) AS n_wchars
+        |  FROM documents),
+        |r AS (
+        |  SELECT source,
+        |         CAST(len(words) AS BIGINT) AS n_words, n_wchars,
+        |         (n_chars BETWEEN $FunnelLenMin AND $FunnelLenMax)
+        |           AS r1,
+        |         (CAST(len(words) AS BIGINT) >= $FunnelMinWords) AS r2,
+        |         ($FunnelMwlMin * CAST(len(words) AS BIGINT) <= n_wchars
+        |          AND n_wchars <= $FunnelMwlMax
+        |              * CAST(len(words) AS BIGINT)) AS r3,
+        |         (len(list_intersect(words, $stops)) > 0) AS r4,
+        |         ($FunnelTtrDen * CAST(len(list_distinct(words))
+        |              AS BIGINT) >=
+        |          $FunnelTtrNum * CAST(len(words) AS BIGINT)) AS r5
+        |  FROM d)
+        |SELECT source, CAST(count(*) AS BIGINT) AS n_docs,
+        |       CAST(count(*) FILTER (r1) AS BIGINT) AS len_ok,
+        |       CAST(count(*) FILTER (r1 AND r2) AS BIGINT) AS and_words,
+        |       CAST(count(*) FILTER (r1 AND r2 AND r3) AS BIGINT)
+        |         AS and_mwl,
+        |       CAST(count(*) FILTER (r1 AND r2 AND r3 AND r4)
+        |            AS BIGINT) AS and_stop,
+        |       CAST(count(*) FILTER (r1 AND r2 AND r3 AND r4 AND r5)
+        |            AS BIGINT) AS and_ttr,
+        |       CAST(count(*) FILTER (r1 AND r2 AND r3 AND r4 AND r5)
+        |            AS BIGINT) * 1000000
+        |         // CAST(count(*) AS BIGINT) AS keep_ppm
+        |FROM r GROUP BY source ORDER BY source""".stripMargin
+    }),
+    QueryDef("q384_token_budget_sample", q384TokenBudgetSample _,
+      s"""WITH d AS (
+        |  SELECT doc_id,
+        |         CAST(len(list_filter(string_split(text, ' '),
+        |              w -> len(w) > 0)) AS BIGINT) AS n_tokens,
+        |         md5('tbsample:' || CAST(doc_id AS VARCHAR)) AS h
+        |  FROM documents),
+        |c AS (
+        |  SELECT doc_id, n_tokens,
+        |         CAST(sum(n_tokens) OVER (ORDER BY h, doc_id
+        |           ROWS UNBOUNDED PRECEDING) AS BIGINT) AS cum
+        |  FROM d)
+        |SELECT doc_id, n_tokens, cum,
+        |       CAST(cum // $TokenStride
+        |            - (cum - n_tokens) // $TokenStride AS BIGINT)
+        |         AS multiplicity
+        |FROM c
+        |WHERE cum // $TokenStride > (cum - n_tokens) // $TokenStride
+        |ORDER BY cum""".stripMargin),
+    QueryDef("q385_boilerplate_prefix", q385BoilerplatePrefix _,
+      s"""SELECT substr(text, 1, $BoilerPrefixLen) AS prefix,
+        |       CAST(count(*) AS BIGINT) AS n_docs,
+        |       CAST(count(DISTINCT source) AS BIGINT) AS n_sources,
+        |       CAST(count(DISTINCT lang) AS BIGINT) AS n_langs,
+        |       CAST(min(doc_id) AS BIGINT) AS example_doc
+        |FROM documents
+        |GROUP BY 1 HAVING count(*) >= 2
+        |ORDER BY n_docs DESC, prefix LIMIT $BoilerTopN""".stripMargin))
 }

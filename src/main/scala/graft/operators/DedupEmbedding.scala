@@ -1,11 +1,14 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.QueryDef
 import graft.functions.Hashing
 import graft.sources.Tables
+
+import Similarity.{QselCte, onlyQueries}
 
 /** [EXT] EMBEDDING-space deduplication (split from [[Dedup]], VERDICT
   * r04 #6): exact vector dedup (q119) and LSH-banded cosine near-dup
@@ -16,6 +19,10 @@ import graft.sources.Tables
   * Scale design is [[Dedup]]'s: candidate generation is always a
   * shuffle on a content key (here: quantized-coordinate hash or sign
   * band), never a pairwise scan; hot buckets are capped proportionally.
+  *
+  * Also here: binary-signature Hamming retrieval on the q35 bands (q348)
+  * and the random-projection distortion audit (q354); their oracles share
+  * q35's CTE text ([[signPlanesCtes]]).
   */
 object DedupEmbedding {
 
@@ -212,6 +219,170 @@ object DedupEmbedding {
   }
 
 
+  /** q348 top-k depth. */
+  private[graft] val HammK = 10
+
+  /** q348 — BINARY-SIGNATURE HAMMING RETRIEVAL: the 96-bit sign
+    * signature q35 already computes (12 bands × 8 bits, engine-portable
+    * md5 planes) reused as a COMPRESSED retrieval index — the classic
+    * "binary embedding" serving trick (32 B/vector instead of 256 B,
+    * popcount instead of float dots). Candidates come from the q35
+    * band equi-join (share ≥ 1 exact 8-bit band, hot-capped both
+    * sides); ranking is FULL 96-bit Hamming distance (Σ per-band
+    * popcount of XOR), top-[[HammK]] per query with (hamming, cid)
+    * tie-break. Everything is integer arithmetic, so the DuckDB oracle
+    * verifies the exact lists end to end; recall vs the float-cosine
+    * ground truth is spec-measured (DedupSimilaritySpec).
+    *
+    * Scale shape: one cached signature table (12 rows/vector), a
+    * bucket equi-join on the band content key, popcount ranking on
+    * the candidate profile — the q224/q35 candidate discipline; no
+    * Q×N scan anywhere. */
+  def q348HammingRetrieval(spark: SparkSession, dir: String): DataFrame = {
+    val raw = DedupEmbedding.embeddingBands(spark, dir)
+    val nVecs = AnnIndex.embCount(spark, dir)
+    val small = raw.groupBy("k", "v")
+      .agg(count(lit(1)).as("bucket_n"))
+      .filter(col("bucket_n") <= DedupEmbedding.embHotBucketCap(nVecs))
+      .select("k", "v")
+    val bands = raw.join(broadcast(small), Seq("k", "v"))
+    val cand = Similarity.onlyQueries(spark, dir, bands)
+      .select(col("vec_id").as("qid"), col("k"), col("v"))
+      .join(bands.select(col("vec_id").as("cid"), col("k"), col("v")),
+        Seq("k", "v"))
+      .filter(col("qid") =!= col("cid"))
+      .select("qid", "cid")
+      .distinct()
+    // read twice: the query side and the candidate side
+    val sig = raw.groupBy("vec_id")
+      .agg(expr("transform(array_sort(collect_list(struct(k, v))), s -> s.v)")
+        .as("sig"))
+      .localCheckpoint()
+    val w = Window.partitionBy("qid").orderBy(col("hamming"), col("cid"))
+    cand
+      .join(sig.select(col("vec_id").as("qid"), col("sig").as("qs")),
+        Seq("qid"))
+      .join(sig.select(col("vec_id").as("cid"), col("sig").as("cs")),
+        Seq("cid"))
+      .withColumn("hamming", expr(
+        "cast(aggregate(zip_with(qs, cs, (a, b) -> bit_count(a ^ b)), " +
+          "0, (acc, h) -> acc + h) as int)"))
+      .withColumn("rank", row_number().over(w))
+      .filter(col("rank") <= HammK)
+      .select(col("qid"), col("rank"), col("cid"), col("hamming"))
+      .orderBy("qid", "rank")
+  }
+
+  /** q354 random-projection target dimension. */
+  private[graft] val JlDim = 16
+
+  /** q354 — RANDOM-PROJECTION DISTORTION AUDIT (Johnson–Lindenstrauss
+    * health check): project the quantized embeddings onto the first
+    * [[JlDim]] q35 hyperplanes (md5-derived integer planes — exact
+    * BIGINT coordinates) and measure, over a deterministic
+    * strided-pair sample, how tightly the projected squared distances
+    * track the original ones — the spread (max/min of the per-pair
+    * ratio) is the distortion number that says whether a 16-d sketch
+    * is safe for coarse filtering of this corpus. Pairs are
+    * (q, q + j), j = 1..5 by key arithmetic — an equi-join, never a
+    * pair scan.
+    *
+    * Exactness: both distances are exact BIGINT sums of squared
+    * integer differences; each pair's ratio is ONE double division
+    * micro-quantized before the min/max/mean folds. */
+  def q354JlDistortion(spark: SparkSession, dir: String): DataFrame = {
+    val dim = Similarity.embeddingDim(spark, dir)
+    val planes = DedupEmbedding.portablePlanes(dim).take(JlDim)
+    val prepped = Tables.embeddings(spark, dir)
+      .select(col("vec_id"), expr(
+        "transform(embedding, x -> CAST(floor(CAST(x AS DOUBLE) * 1000.0D) AS DOUBLE))")
+        .as("xq"))
+      .withColumn("planes", typedLit(planes))
+      .withColumn("y", expr(
+        "transform(planes, p -> cast(graft_dot(p, xq) as bigint))"))
+      .withColumn("xqi", expr("transform(xq, v -> cast(v as bigint))"))
+      .select(col("vec_id"), col("xqi"), col("y"))
+    val qs = Similarity.onlyQueries(spark, dir, prepped)
+      .select(col("vec_id").as("qid"), col("xqi").as("xa"),
+        col("y").as("ya"))
+      .select(col("qid"), col("xa"), col("ya"),
+        explode(expr("transform(sequence(1, 5), j -> qid + j)"))
+          .as("cid"))
+    val pairs = qs.join(prepped.select(col("vec_id").as("cid"),
+      col("xqi").as("xb"), col("y").as("yb")), Seq("cid"))
+    def sq(a: String, b: String): org.apache.spark.sql.Column = expr(
+      s"aggregate(zip_with($a, $b, (u, v) -> (u - v) * (u - v)), " +
+        "cast(0 as bigint), (acc, t) -> acc + t)")
+    pairs
+      .withColumn("d2", sq("xa", "xb"))
+      .withColumn("p2", sq("ya", "yb"))
+      .filter(col("d2") > 0L)
+      .withColumn("ratio_micro", expr(
+        "cast(round(cast(p2 as double) / cast(d2 as double), 0) as bigint)"))
+      .agg(count(lit(1)).as("n_pairs"),
+        expr("cast(round(avg(ratio_micro), 0) as bigint)")
+          .as("mean_ratio_micro"),
+        min(col("ratio_micro")).as("min_ratio_micro"),
+        max(col("ratio_micro")).as("max_ratio_micro"))
+      .select(col("n_pairs"), col("mean_ratio_micro"),
+        col("min_ratio_micro"), col("max_ratio_micro"),
+        round(col("max_ratio_micro").cast("double") /
+          col("min_ratio_micro"), 6).as("spread"))
+  }
+
+  /** Oracle CTE text of the sign-hash embedding derivation: `ex` (one
+    * row per coordinate), `xq` (floor(x*1000) integer coordinates) and
+    * `planes` (hyperplanes 0 until `nPlanes` of md5-derived integer
+    * coefficients in [-1000, 1000], hashed from `seed` || p || '_' || d;
+    * `planesWhere` filters them), left open after `td` for the caller's
+    * `)`. It carries `|` margins: interpolate it inside a literal that is
+    * stripMargin'd once, at a line start. Shared by q35, q348, q354 and
+    * q224 (`Mmr`). */
+  private[graft] def signPlanesCtes(nPlanes: Int, seed: String = "",
+      planesWhere: String = ""): String =
+    s"""ex AS (
+      |  SELECT vec_id, CAST(unnest(embedding) AS DOUBLE) AS x,
+      |         generate_subscripts(embedding, 1) AS i
+      |  FROM embeddings),
+      |xq AS (SELECT vec_id, i - 1 AS d,
+      |              CAST(floor(x * 1000.0) AS BIGINT) AS q
+      |       FROM ex),
+      |planes AS (
+      |  SELECT p, d,
+      |         ('0x' || substr(md5(${seed}CAST(p AS VARCHAR) || '_'
+      |                             || CAST(d AS VARCHAR)), 1, 15))::BIGINT
+      |           % 2001 - 1000 AS c
+      |  FROM generate_series(0, ${nPlanes - 1}) tp(p),
+      |       (SELECT DISTINCT i - 1 AS d FROM ex) td${
+      if (planesWhere.isEmpty) "" else s"\n      |  WHERE $planesWhere"}"""
+
+  /** q35's banding through the 8-bit bands (`bits`, `allbands`) over
+    * [[EmbNPlanes]] sign planes; `|` margins as [[signPlanesCtes]]. */
+  private def embBandsCtes: String =
+    s"""${signPlanesCtes(EmbNPlanes)}),
+      |bits AS (
+      |  SELECT vec_id, p, CASE WHEN sum(c * q) > 0 THEN 1 ELSE 0 END AS bit
+      |  FROM xq JOIN planes USING (d)
+      |  GROUP BY vec_id, p),
+      |allbands AS (
+      |  SELECT vec_id, p // $EmbBandBits AS k,
+      |         CAST(sum(bit << (${EmbBandBits - 1} - (p % $EmbBandBits)))
+      |              AS BIGINT) AS v
+      |  FROM bits GROUP BY 1, 2),"""
+
+  /** Shared oracle CTE text: q35's engine-portable banding (planes,
+    * sign bits, 8-bit MSB-first packing, hot cap) — verbatim the
+    * q35 derivation so q348 verifies the identical signatures. */
+  private def bandCtes: String =
+    s"""$embBandsCtes
+      |bsz AS (SELECT k, v, count(*) AS cnt FROM allbands GROUP BY 1, 2),
+      |okb AS (
+      |  SELECT a.vec_id, a.k, a.v FROM allbands a
+      |  JOIN bsz ON bsz.k = a.k AND bsz.v = a.v
+      |  WHERE bsz.cnt <= greatest($EmbCapFloor,
+      |    ((SELECT count(*) FROM embeddings) + ${EmbCapDiv - 1})
+      |      // $EmbCapDiv))""".stripMargin
+
   val defs: Seq[QueryDef] = Seq(
     QueryDef("q119_vector_exact_dedup", q119VectorExactDedup _,
       """WITH vecs AS (
@@ -232,29 +403,7 @@ object DedupEmbedding {
     // multi-probe single-bit flips — all integer arithmetic, so both
     // engines derive the identical candidate set, then exact-score it
     QueryDef("q35_dedup_embedding", q35DedupEmbedding _,
-      s"""WITH ex AS (
-        |  SELECT vec_id, CAST(unnest(embedding) AS DOUBLE) AS x,
-        |         generate_subscripts(embedding, 1) AS i
-        |  FROM embeddings),
-        |xq AS (SELECT vec_id, i - 1 AS d,
-        |              CAST(floor(x * 1000.0) AS BIGINT) AS q
-        |       FROM ex),
-        |planes AS (
-        |  SELECT p, d,
-        |         ('0x' || substr(md5(CAST(p AS VARCHAR) || '_'
-        |                             || CAST(d AS VARCHAR)), 1, 15))::BIGINT
-        |           % 2001 - 1000 AS c
-        |  FROM generate_series(0, ${EmbNPlanes - 1}) tp(p),
-        |       (SELECT DISTINCT i - 1 AS d FROM ex) td),
-        |bits AS (
-        |  SELECT vec_id, p, CASE WHEN sum(c * q) > 0 THEN 1 ELSE 0 END AS bit
-        |  FROM xq JOIN planes USING (d)
-        |  GROUP BY vec_id, p),
-        |allbands AS (
-        |  SELECT vec_id, p // $EmbBandBits AS k,
-        |         CAST(sum(bit << (${EmbBandBits - 1} - (p % $EmbBandBits)))
-        |              AS BIGINT) AS v
-        |  FROM bits GROUP BY 1, 2),
+      s"""WITH $embBandsCtes
         |bsz AS (SELECT k, v, count(*) AS n FROM allbands GROUP BY 1, 2),
         |bands AS (
         |  SELECT b.vec_id, b.k, b.v FROM allbands b
@@ -283,5 +432,72 @@ object DedupEmbedding {
         |JOIN norms n1 ON n1.vec_id = id1
         |JOIN norms n2 ON n2.vec_id = id2
         |WHERE round(dot / (n1.nrm * n2.nrm), 6) >= 0.4
-        |ORDER BY id1, id2""".stripMargin))
+        |ORDER BY id1, id2""".stripMargin),
+    // NOTE: bandCtes is already stripped — concatenate, never
+    // stripMargin over it again (a second pass eats the `||` concat
+    // lines inside it; the q224 mmrSql lesson)
+    QueryDef("q348_hamming_retrieval", q348HammingRetrieval _,
+      (s"WITH $QselCte,\n$bandCtes,\n" +
+      s"""cand AS (
+        |  SELECT DISTINCT q.vec_id AS qid, c.vec_id AS cid
+        |  FROM okb q JOIN okb c ON q.k = c.k AND q.v = c.v
+        |  WHERE q.vec_id IN (SELECT vec_id FROM qsel)
+        |    AND c.vec_id <> q.vec_id),
+        |ham AS (
+        |  SELECT qid, cid,
+        |         CAST(sum(bit_count(xor(a.v, b.v))) AS INT) AS hamming
+        |  FROM cand
+        |  JOIN allbands a ON a.vec_id = qid
+        |  JOIN allbands b ON b.vec_id = cid AND b.k = a.k
+        |  GROUP BY 1, 2)
+        |SELECT qid, CAST(rn AS INT) AS rank, cid, hamming FROM (
+        |  SELECT qid, cid, hamming,
+        |         row_number() OVER (PARTITION BY qid
+        |                            ORDER BY hamming, cid) AS rn
+        |  FROM ham)
+        |WHERE rn <= $HammK ORDER BY qid, rn""".stripMargin)),
+    QueryDef("q354_jl_distortion", q354JlDistortion _,
+      {
+      s"""WITH $QselCte,
+        |${signPlanesCtes(JlDim)}),
+        |proj AS (
+        |  SELECT vec_id, p, CAST(sum(c * q) AS BIGINT) AS y
+        |  FROM xq JOIN planes USING (d) GROUP BY 1, 2),
+        |prs AS (
+        |  SELECT a.vec_id AS qid, a.vec_id + j AS cid
+        |  FROM (SELECT DISTINCT vec_id FROM xq
+        |        WHERE vec_id IN (SELECT vec_id FROM qsel)) a,
+        |       generate_series(1, 5) tj(j)),
+        |pairs AS (
+        |  SELECT p.qid, p.cid FROM prs p
+        |  JOIN (SELECT DISTINCT vec_id FROM xq) b ON b.vec_id = p.cid),
+        |d2 AS (
+        |  SELECT pr.qid, pr.cid,
+        |         CAST(sum((a.q - b.q) * (a.q - b.q)) AS BIGINT) AS d2
+        |  FROM pairs pr
+        |  JOIN xq a ON a.vec_id = pr.qid
+        |  JOIN xq b ON b.vec_id = pr.cid AND b.d = a.d
+        |  GROUP BY 1, 2),
+        |p2 AS (
+        |  SELECT pr.qid, pr.cid,
+        |         CAST(sum((a.y - b.y) * (a.y - b.y)) AS BIGINT) AS p2
+        |  FROM pairs pr
+        |  JOIN proj a ON a.vec_id = pr.qid
+        |  JOIN proj b ON b.vec_id = pr.cid AND b.p = a.p
+        |  GROUP BY 1, 2),
+        |ratios AS (
+        |  SELECT CAST(round(CAST(p2.p2 AS DOUBLE)
+        |                    / CAST(d2.d2 AS DOUBLE), 0) AS BIGINT)
+        |           AS ratio_micro
+        |  FROM d2 JOIN p2 ON p2.qid = d2.qid AND p2.cid = d2.cid
+        |  WHERE d2.d2 > 0)
+        |SELECT CAST(count(*) AS BIGINT) AS n_pairs,
+        |       CAST(round(avg(ratio_micro), 0) AS BIGINT)
+        |         AS mean_ratio_micro,
+        |       CAST(min(ratio_micro) AS BIGINT) AS min_ratio_micro,
+        |       CAST(max(ratio_micro) AS BIGINT) AS max_ratio_micro,
+        |       round(CAST(max(ratio_micro) AS DOUBLE) / min(ratio_micro),
+        |             6) AS spread
+        |FROM ratios""".stripMargin
+    }))
 }

@@ -25,6 +25,8 @@ import graft.sources.Tables
   * (quantity ≤ 40 where the generator emits up to 50; a 90-day
   * freshness SLA against a fixed as-of date) so the suite demonstrably
   * detects violations rather than rubber-stamping a clean table.
+  *
+  * Also here: per-column data profiling (q94).
   */
 object Expectations {
 
@@ -85,6 +87,28 @@ object Expectations {
       .orderBy("expectation")
   }
 
+  /** q94 — data profiling: per-column row/null/distinct counts and
+    * lexical min/max over a column set, the standard warehouse
+    * inspection pass (the principled version of the reference's
+    * print-and-eyeball validation, `LoadDataWarehouse.ChatterjeeP.R:
+    * 107-110,136-139`). One aggregate per column unioned — each is a
+    * map-side-combinable scan, no shuffle beyond |columns| rows. */
+  def q94ProfileStats(spark: SparkSession, dir: String): DataFrame = {
+    val li = Tables.lineitem(spark, dir)
+    def profile(c: String) =
+      li.agg(count(lit(1)).as("n_rows"),
+        sum(when(col(c).isNull, 1L).otherwise(0L)).as("n_null"),
+        countDistinct(col(c)).as("n_distinct"),
+        min(col(c).cast("string")).as("min_str"),
+        max(col(c).cast("string")).as("max_str"))
+        .withColumn("column_name", lit(c))
+    Seq("l_returnflag", "l_linestatus", "l_quantity", "l_partkey")
+      .map(profile).reduce(_ unionByName _)
+      .select(col("column_name"), col("n_rows"), col("n_null"),
+        col("n_distinct"), col("min_str"), col("max_str"))
+      .orderBy("column_name")
+  }
+
   val defs: Seq[QueryDef] = Seq(
     QueryDef("q139_data_expectations", q139DataExpectations _,
       s"""WITH ev AS (
@@ -135,5 +159,39 @@ object Expectations {
         |         priority_null = 0 FROM ord
         |  UNION ALL SELECT 'orders_totalprice_positive', price_bad,
         |         price_bad = 0 FROM ord)
-        |ORDER BY expectation""".stripMargin))
+        |ORDER BY expectation""".stripMargin),
+    QueryDef("q94_profile_stats", q94ProfileStats _,
+      """WITH cols AS (
+        |  SELECT 'l_linestatus' AS column_name, count(*) AS n_rows,
+        |         CAST(sum(CASE WHEN l_linestatus IS NULL THEN 1 ELSE 0 END)
+        |              AS BIGINT) AS n_null,
+        |         count(DISTINCT l_linestatus) AS n_distinct,
+        |         min(CAST(l_linestatus AS VARCHAR)) AS min_str,
+        |         max(CAST(l_linestatus AS VARCHAR)) AS max_str
+        |  FROM lineitem
+        |  UNION ALL
+        |  SELECT 'l_partkey', count(*),
+        |         CAST(sum(CASE WHEN l_partkey IS NULL THEN 1 ELSE 0 END)
+        |              AS BIGINT),
+        |         count(DISTINCT l_partkey),
+        |         min(CAST(l_partkey AS VARCHAR)),
+        |         max(CAST(l_partkey AS VARCHAR))
+        |  FROM lineitem
+        |  UNION ALL
+        |  SELECT 'l_quantity', count(*),
+        |         CAST(sum(CASE WHEN l_quantity IS NULL THEN 1 ELSE 0 END)
+        |              AS BIGINT),
+        |         count(DISTINCT l_quantity),
+        |         min(CAST(l_quantity AS VARCHAR)),
+        |         max(CAST(l_quantity AS VARCHAR))
+        |  FROM lineitem
+        |  UNION ALL
+        |  SELECT 'l_returnflag', count(*),
+        |         CAST(sum(CASE WHEN l_returnflag IS NULL THEN 1 ELSE 0 END)
+        |              AS BIGINT),
+        |         count(DISTINCT l_returnflag),
+        |         min(CAST(l_returnflag AS VARCHAR)),
+        |         max(CAST(l_returnflag AS VARCHAR))
+        |  FROM lineitem)
+        |SELECT * FROM cols ORDER BY column_name""".stripMargin))
 }

@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.QueryDef
@@ -23,6 +24,9 @@ import graft.sources.Tables
   * over (doc_id, pos) — the q112/q131 never-rand() discipline — so the
   * same document always masks the same positions under repartitioning,
   * retries, and re-runs: reproducible training data.
+  *
+  * Also here: the pseudonymization audit (q361), small-cell suppression
+  * (q378) and the retention-policy sweep (q379).
   */
 object Governance {
 
@@ -216,6 +220,135 @@ object Governance {
       .orderBy("clip_cents")
   }
 
+  /** q361 — PSEUDONYMIZATION AUDIT: re-key the event stream's user ids
+    * with the engine-portable 60-bit keyed hash (the GDPR-style
+    * pseudonymization pass q159's erasure cascade presumes) and
+    * register its safety contract as a checked artifact: zero hash
+    * collisions at this corpus size (n² / 2⁶¹ expected — the audit is
+    * the tripwire, not a proof), and referential integrity preserved
+    * (every event joins back through the pseudonym map to exactly one
+    * identity; per-key event multiset unchanged, checked as count +
+    * max-group agreement).
+    *
+    * Scale shape: distinct-user fold, one hash map join, enum-free
+    * single-row output. */
+  def q361PseudonymizeAudit(spark: SparkSession, dir: String): DataFrame = {
+    val ev = Tables.events(spark, dir).select(col("user_id"))
+    val ids = ev.distinct()
+      .withColumn("pseud",
+        Hashing.md5Hash60(concat(lit("pseud:"), col("user_id"))))
+    val byUser = ev.groupBy("user_id").agg(count(lit(1)).as("n"))
+    val byPseud = ev.join(ids, Seq("user_id"))
+      .groupBy("pseud").agg(count(lit(1)).as("n"))
+    val a = ids.agg(count(lit(1)).as("n_users"),
+      countDistinct(col("pseud")).as("n_pseudonyms"))
+    val b = byUser.agg(count(lit(1)).as("u_groups"),
+      sum(col("n")).as("u_events"), max(col("n")).as("u_max"))
+    val c = byPseud.agg(count(lit(1)).as("p_groups"),
+      sum(col("n")).as("p_events"), max(col("n")).as("p_max"))
+    a.crossJoin(broadcast(b)).crossJoin(broadcast(c))
+      .select(col("n_users"), col("n_pseudonyms"),
+        (col("n_users") - col("n_pseudonyms")).as("collisions"),
+        (col("n_users") === col("n_pseudonyms")).as("collision_free"),
+        (col("u_groups") === col("p_groups") &&
+          col("u_events") === col("p_events") &&
+          col("u_max") === col("p_max")).as("fk_preserved"),
+        col("u_events").as("n_events"))
+  }
+
+  /** q378 small-cell threshold (the statistical-disclosure "rule of
+    * five") . */
+  private[graft] val SuppressK = 5L
+
+  /** q378 — SMALL-CELL SUPPRESSION with one-round complementary
+    * protection: the (nation × segment) purchasing-customer/revenue
+    * table is published with PRIMARY suppression of cells under
+    * [[SuppressK]] customers, then — because row and column totals
+    * are published too — any line left with EXACTLY ONE suppressed
+    * cell gets its smallest unsuppressed cell suppressed as a
+    * COMPLEMENT (rows first, then columns; a single declared round,
+    * deterministic (n, key) pick — the greedy a disclosure-control
+    * office actually runs, not the NP-hard exact audit). Extends
+    * q216's k-anonymity (which grades the quasi-id classes) to the
+    * RELEASE side: what a safe publication of this table looks like.
+    *
+    * Scale shape: one fact fold to the ≤ |nations|·|segments| cell
+    * profile; both passes are windows PARTITIONED by an enum key. */
+  def q378CellSuppression(spark: SparkSession, dir: String): DataFrame = {
+    val cells = Tables.customer(spark, dir)
+      .join(Tables.nation(spark, dir),
+        col("c_nationkey") === col("n_nationkey"))
+      .join(Tables.orders(spark, dir),
+        col("c_custkey") === col("o_custkey"))
+      .groupBy(col("n_name").as("nation"),
+        col("c_mktsegment").as("segment"))
+      .agg(countDistinct(col("c_custkey")).as("n_custs"),
+        sum(expr("cast(round(o_totalprice * 100, 0) as bigint)"))
+          .as("cents"))
+      .withColumn("primary_sup", col("n_custs") < SuppressK)
+    val wRow = Window.partitionBy("nation")
+    val wRowPick = Window.partitionBy("nation")
+      .orderBy(col("n_custs").asc, col("segment").asc)
+    val afterRow = cells
+      .withColumn("row_primaries",
+        sum(col("primary_sup").cast("long")).over(wRow))
+      .withColumn("row_pick", row_number().over(wRowPick) ===
+        sum(when(col("primary_sup"), 1L).otherwise(0L)).over(wRowPick)
+          + 1L)
+      .withColumn("row_comp", !col("primary_sup") &&
+        col("row_primaries") === 1L && col("row_pick"))
+      .drop("row_primaries", "row_pick")
+    val wCol = Window.partitionBy("segment")
+    val wColPick = Window.partitionBy("segment")
+      .orderBy(col("n_custs").asc, col("nation").asc)
+    val sup = col("primary_sup") || col("row_comp")
+    afterRow
+      .withColumn("col_suppressed", sum(sup.cast("long")).over(wCol))
+      .withColumn("col_pick", row_number().over(wColPick) ===
+        sum(when(sup, 1L).otherwise(0L)).over(wColPick) + 1L)
+      .withColumn("col_comp", !sup &&
+        col("col_suppressed") === 1L && col("col_pick"))
+      .select(col("nation"), col("segment"), col("n_custs"),
+        when(col("primary_sup"), "primary")
+          .when(col("row_comp"), "row_complement")
+          .when(col("col_comp"), "col_complement")
+          .otherwise("none").as("suppression"),
+        when(col("primary_sup") || col("row_comp") || col("col_comp"),
+          lit(null).cast("double"))
+          .otherwise(round(col("cents").cast("double") / 100.0, 2))
+          .as("published_dollars"))
+      .orderBy("nation", "segment")
+  }
+
+  /** q379 retention horizon (days — declared policy). */
+  private[graft] val RetentionDays = 365
+
+  /** q379 — RETENTION-POLICY SWEEP: per event type, the events older
+    * than [[RetentionDays]] before the corpus's latest timestamp —
+    * count, share, and estimated reclaim bytes (declared row width) —
+    * the age-based deletion worklist that complements q215/q361's
+    * subject-keyed erasure (GDPR storage-limitation vs
+    * right-to-erasure are different sweeps). Exact integer date
+    * arithmetic; one enum-sized fold of the scan. */
+  def q379RetentionSweep(spark: SparkSession, dir: String): DataFrame = {
+    val ev = Tables.events(spark, dir)
+      .select(col("event_type"), to_date(col("ts")).as("d"))
+    val cutoff = broadcast(ev.agg(
+      date_sub(max(col("d")), RetentionDays).as("cutoff")))
+    ev.crossJoin(cutoff)
+      .groupBy("event_type")
+      .agg(count(lit(1)).as("n_events"),
+        sum(when(col("d") < col("cutoff"), 1L).otherwise(0L))
+          .as("n_expired"),
+        max(col("cutoff")).as("cutoff"))
+      .select(col("event_type"), col("n_events"), col("n_expired"),
+        round(col("n_expired").cast("double") / col("n_events"), 6)
+          .as("expired_share"),
+        (col("n_expired") * 64L).as("est_reclaim_bytes"),
+        col("cutoff"))
+      .orderBy("event_type")
+  }
+
   val defs: Seq[QueryDef] = Seq(
     QueryDef("q245_clip_calibration", q245ClipCalibration _,
       {
@@ -326,5 +459,100 @@ object Governance {
          |         AS frac_below_k,
          |       g.l_min
          |FROM worst w CROSS JOIN global g
-         |ORDER BY w.class_size, w.nat, w.seg, w.bkt""".stripMargin))
+         |ORDER BY w.class_size, w.nat, w.seg, w.bkt""".stripMargin),
+    QueryDef("q361_pseudonymize_audit", q361PseudonymizeAudit _,
+      """WITH ids AS (
+        |  SELECT DISTINCT user_id FROM events),
+        |mapped AS (
+        |  SELECT user_id,
+        |         ('0x' || substr(md5('pseud:' || CAST(user_id AS VARCHAR)),
+        |                         1, 15))::BIGINT AS pseud
+        |  FROM ids),
+        |a AS (SELECT CAST(count(*) AS BIGINT) AS n_users,
+        |             CAST(count(DISTINCT pseud) AS BIGINT) AS n_pseudonyms
+        |      FROM mapped),
+        |bu AS (SELECT user_id, count(*) AS n FROM events GROUP BY 1),
+        |b AS (SELECT CAST(count(*) AS BIGINT) AS u_groups,
+        |             CAST(sum(n) AS BIGINT) AS u_events,
+        |             CAST(max(n) AS BIGINT) AS u_max FROM bu),
+        |bp AS (SELECT m.pseud, count(*) AS n
+        |       FROM events e JOIN mapped m ON m.user_id = e.user_id
+        |       GROUP BY 1),
+        |c AS (SELECT CAST(count(*) AS BIGINT) AS p_groups,
+        |             CAST(sum(n) AS BIGINT) AS p_events,
+        |             CAST(max(n) AS BIGINT) AS p_max FROM bp)
+        |SELECT a.n_users, a.n_pseudonyms,
+        |       a.n_users - a.n_pseudonyms AS collisions,
+        |       a.n_users = a.n_pseudonyms AS collision_free,
+        |       (b.u_groups = c.p_groups AND b.u_events = c.p_events
+        |        AND b.u_max = c.p_max) AS fk_preserved,
+        |       b.u_events AS n_events
+        |FROM a, b, c""".stripMargin),
+    QueryDef("q378_cell_suppression", q378CellSuppression _,
+      s"""WITH cells AS (
+        |  SELECT n.n_name AS nation, c.c_mktsegment AS segment,
+        |         CAST(count(DISTINCT c.c_custkey) AS BIGINT) AS n_custs,
+        |         CAST(sum(CAST(round(o.o_totalprice * 100, 0) AS BIGINT))
+        |              AS BIGINT) AS cents
+        |  FROM customer c
+        |  JOIN nation n ON c.c_nationkey = n.n_nationkey
+        |  JOIN orders o ON c.c_custkey = o.o_custkey
+        |  GROUP BY 1, 2),
+        |base AS (SELECT *, n_custs < $SuppressK AS primary_sup
+        |         FROM cells),
+        |rowp AS (
+        |  SELECT *,
+        |    sum(CASE WHEN primary_sup THEN 1 ELSE 0 END)
+        |      OVER (PARTITION BY nation) AS row_primaries,
+        |    row_number() OVER (PARTITION BY nation
+        |      ORDER BY n_custs, segment) AS rn,
+        |    sum(CASE WHEN primary_sup THEN 1 ELSE 0 END)
+        |      OVER (PARTITION BY nation ORDER BY n_custs, segment
+        |            ROWS UNBOUNDED PRECEDING) AS pcum
+        |  FROM base),
+        |afterrow AS (
+        |  SELECT nation, segment, n_custs, cents, primary_sup,
+        |    (NOT primary_sup) AND row_primaries = 1 AND rn = pcum + 1
+        |      AS row_comp
+        |  FROM rowp),
+        |colp AS (
+        |  SELECT *,
+        |    sum(CASE WHEN primary_sup OR row_comp THEN 1 ELSE 0 END)
+        |      OVER (PARTITION BY segment) AS col_suppressed,
+        |    row_number() OVER (PARTITION BY segment
+        |      ORDER BY n_custs, nation) AS cn,
+        |    sum(CASE WHEN primary_sup OR row_comp THEN 1 ELSE 0 END)
+        |      OVER (PARTITION BY segment ORDER BY n_custs, nation
+        |            ROWS UNBOUNDED PRECEDING) AS scum
+        |  FROM afterrow),
+        |fin AS (
+        |  SELECT *, (NOT (primary_sup OR row_comp))
+        |        AND col_suppressed = 1 AND cn = scum + 1 AS col_comp
+        |  FROM colp)
+        |SELECT nation, segment, n_custs,
+        |  CASE WHEN primary_sup THEN 'primary'
+        |       WHEN row_comp THEN 'row_complement'
+        |       WHEN col_comp THEN 'col_complement'
+        |       ELSE 'none' END AS suppression,
+        |  CASE WHEN primary_sup OR row_comp OR col_comp THEN NULL
+        |       ELSE round(CAST(cents AS DOUBLE) / 100.0, 2)
+        |  END AS published_dollars
+        |FROM fin ORDER BY nation, segment""".stripMargin),
+    QueryDef("q379_retention_sweep", q379RetentionSweep _,
+      s"""WITH ev AS (
+        |  SELECT event_type,
+        |         CAST(CAST(ts AS TIMESTAMP) AS DATE) AS d
+        |  FROM events),
+        |cut AS (SELECT max(d) - $RetentionDays AS cutoff FROM ev)
+        |SELECT event_type, CAST(count(*) AS BIGINT) AS n_events,
+        |       CAST(sum(CASE WHEN d < (SELECT cutoff FROM cut)
+        |                     THEN 1 ELSE 0 END) AS BIGINT) AS n_expired,
+        |       round(CAST(sum(CASE WHEN d < (SELECT cutoff FROM cut)
+        |                           THEN 1 ELSE 0 END) AS DOUBLE)
+        |             / count(*), 6) AS expired_share,
+        |       CAST(sum(CASE WHEN d < (SELECT cutoff FROM cut)
+        |                     THEN 1 ELSE 0 END) * 64 AS BIGINT)
+        |         AS est_reclaim_bytes,
+        |       (SELECT cutoff FROM cut) AS cutoff
+        |FROM ev GROUP BY 1 ORDER BY 1""".stripMargin))
 }

@@ -41,7 +41,10 @@ import graft.sources.Tables
   * both distributions strictly positive (the q151 precedent).
   * Scale shape (q232): one lead-window pass per user timeline (the
   * q84 kernel), collapsed to the |types|² transition table; all
-  * entropy arithmetic runs on that profile. */
+  * entropy arithmetic runs on that profile.
+  *
+  * Also here: the Theil index decomposition of customer spend (q352).
+  */
 object InfoTheory {
 
   /** Hashed unigram feature-space size for q231 (matches the q147
@@ -357,6 +360,70 @@ object InfoTheory {
       .orderBy("segment")
   }
 
+  /** q352 — THEIL INDEX DECOMPOSITION of customer spend by nation:
+    * T = (1/n)Σ(x/μ)ln(x/μ), split EXACTLY into between-nation and
+    * within-nation components (Theil 1967 — the additive-decomposable
+    * inequality measure; q211's per-nation Gini compares WITHIN
+    * groups but cannot say how much inequality the grouping itself
+    * explains). Between = Σ s_g·ln(s_g·n/n_g) over the nation profile;
+    * within_g = (1/n_g)Σ(x·n_g/S_g)ln(x·n_g/S_g).
+    *
+    * Exactness: every log argument is a single ratio of exact BIGINTs
+    * (x·n/S — products < 2⁵³), each per-row/per-group term is
+    * micro-quantized to BIGINT before folding (the q331 quantized-log
+    * discipline), and every share is one division.
+    *
+    * Scale shape: one customer-grain fold + one nation-profile pass;
+    * the decomposition identity is spec-checked to quantization
+    * tolerance. */
+  def q352TheilDecomposition(spark: SparkSession, dir: String): DataFrame = {
+    val spend = Tables.orders(spark, dir)
+      .groupBy(col("o_custkey").as("custkey"))
+      .agg(sum(expr("cast(round(o_totalprice * 100, 0) as bigint)"))
+        .as("cents"))
+      .join(Tables.customer(spark, dir)
+        .select(col("c_custkey").as("custkey"),
+          col("c_nationkey").as("nation")), Seq("custkey"))
+    val tot = spend.agg(count(lit(1)).as("n"), sum(col("cents")).as("s"))
+    val base = spend.crossJoin(broadcast(tot))
+    val perNation = base
+      .withColumn("t_micro", expr(
+        """cast(round((cast(cents as double) * n / s) *
+          |  ln(cast(cents as double) * n / s) * 1e6, 0) as bigint)"""
+          .stripMargin))
+      .groupBy("nation", "n", "s")
+      .agg(count(lit(1)).as("n_cust"), sum(col("cents")).as("g_cents"),
+        sum(col("t_micro")).as("sum_t_micro"))
+    val withinG = base
+      .join(perNation.select(col("nation"), col("n_cust").as("ng"),
+        col("g_cents").as("sg")), Seq("nation"))
+      .withColumn("tg_micro", expr(
+        """cast(round((cast(cents as double) * ng / sg) *
+          |  ln(cast(cents as double) * ng / sg) * 1e6, 0) as bigint)"""
+          .stripMargin))
+      .groupBy("nation")
+      .agg(sum(col("tg_micro")).as("sum_tg_micro"))
+    val nation = perNation.join(withinG, Seq("nation"))
+      .withColumn("between_micro", expr(
+        """cast(round((cast(g_cents as double) / s) *
+          |  ln((cast(g_cents as double) / s) * (cast(n as double) / n_cust))
+          |  * 1e6, 0) as bigint)""".stripMargin))
+    val totals = nation
+      .agg(sum(col("sum_t_micro")).as("t_micro_all"),
+        sum(col("between_micro")).as("b_micro"),
+        max(col("n")).as("n_all"))
+    nation.crossJoin(broadcast(totals))
+      .select(col("nation"), col("n_cust"), col("g_cents").as("cents"),
+        round(col("g_cents").cast("double") / col("s"), 6)
+          .as("spend_share"),
+        round(col("sum_tg_micro").cast("double") / col("n_cust") / 1e6, 6)
+          .as("theil_within"),
+        round(col("t_micro_all").cast("double") / col("n_all") / 1e6, 6)
+          .as("theil_total"),
+        round(col("b_micro").cast("double") / 1e6, 6).as("theil_between"))
+      .orderBy("nation")
+  }
+
   val defs: Seq[QueryDef] = Seq(
     QueryDef("q341_engagement_diversity", q341EngagementDiversity _,
       """WITH per_ut AS (
@@ -570,5 +637,56 @@ object InfoTheory {
         |  FROM rows_t)
         |SELECT * FROM per_prev
         |UNION ALL SELECT * FROM overall
-        |ORDER BY prev_type""".stripMargin))
+        |ORDER BY prev_type""".stripMargin),
+    QueryDef("q352_theil_decomposition", q352TheilDecomposition _,
+      """WITH spend AS (
+        |  SELECT o.o_custkey AS custkey,
+        |         CAST(sum(CAST(round(o_totalprice * 100, 0) AS BIGINT))
+        |              AS BIGINT) AS cents,
+        |         any_value(c.c_nationkey) AS nation
+        |  FROM orders o JOIN customer c ON c.c_custkey = o.o_custkey
+        |  GROUP BY 1),
+        |tot AS (SELECT CAST(count(*) AS BIGINT) AS n,
+        |               CAST(sum(cents) AS BIGINT) AS s FROM spend),
+        |per_nation AS (
+        |  SELECT nation, CAST(count(*) AS BIGINT) AS n_cust,
+        |         CAST(sum(cents) AS BIGINT) AS g_cents,
+        |         CAST(sum(CAST(round((CAST(cents AS DOUBLE)
+        |             * (SELECT n FROM tot) / (SELECT s FROM tot))
+        |           * ln(CAST(cents AS DOUBLE) * (SELECT n FROM tot)
+        |                / (SELECT s FROM tot)) * 1e6, 0) AS BIGINT))
+        |           AS BIGINT) AS sum_t_micro
+        |  FROM spend GROUP BY 1),
+        |within_g AS (
+        |  SELECT sp.nation,
+        |         CAST(sum(CAST(round((CAST(cents AS DOUBLE) * pn.n_cust
+        |             / pn.g_cents)
+        |           * ln(CAST(cents AS DOUBLE) * pn.n_cust / pn.g_cents)
+        |           * 1e6, 0) AS BIGINT)) AS BIGINT) AS sum_tg_micro
+        |  FROM spend sp JOIN per_nation pn ON pn.nation = sp.nation
+        |  GROUP BY 1),
+        |nation_rows AS (
+        |  SELECT pn.nation, pn.n_cust, pn.g_cents, pn.sum_t_micro,
+        |         wg.sum_tg_micro,
+        |         CAST(round((CAST(pn.g_cents AS DOUBLE)
+        |             / (SELECT s FROM tot))
+        |           * ln((CAST(pn.g_cents AS DOUBLE) / (SELECT s FROM tot))
+        |                * (CAST((SELECT n FROM tot) AS DOUBLE)
+        |                   / pn.n_cust)) * 1e6, 0) AS BIGINT)
+        |           AS between_micro
+        |  FROM per_nation pn JOIN within_g wg ON wg.nation = pn.nation),
+        |totals AS (
+        |  SELECT CAST(sum(sum_t_micro) AS BIGINT) AS t_micro_all,
+        |         CAST(sum(between_micro) AS BIGINT) AS b_micro
+        |  FROM nation_rows)
+        |SELECT nation, n_cust, g_cents AS cents,
+        |       round(CAST(g_cents AS DOUBLE) / (SELECT s FROM tot), 6)
+        |         AS spend_share,
+        |       round(CAST(sum_tg_micro AS DOUBLE) / n_cust / 1e6, 6)
+        |         AS theil_within,
+        |       round(CAST((SELECT t_micro_all FROM totals) AS DOUBLE)
+        |             / (SELECT n FROM tot) / 1e6, 6) AS theil_total,
+        |       round(CAST((SELECT b_micro FROM totals) AS DOUBLE) / 1e6, 6)
+        |         AS theil_between
+        |FROM nation_rows ORDER BY nation""".stripMargin))
 }

@@ -28,7 +28,12 @@ import graft.sources.Tables
   * Determinism: lifetimes/deltas are exact integer micros; rates are
   * single correctly-rounded divisions of < 2^53 integers; percentile
   * interpolation over BIGINTs matches DuckDB quantile_cont (parity
-  * proven by q56/q116). */
+  * proven by q56/q116).
+  *
+  * Also here: the funnel (q82), cohort retention (q83, q349), the event
+  * transition matrix (q84), sequence matching (q95), journey mining
+  * (q191) and the retention-weighted LTV curve (q359).
+  */
 object Lifecycle {
 
   /** Longest lifetime (days) reported on the q179 curve. */
@@ -759,6 +764,226 @@ object Lifecycle {
       .orderBy("event_type")
   }
 
+  /** q82 — funnel conversion view -> click -> purchase: per user, the
+    * first view, the first click strictly after it, the first purchase
+    * strictly after that; then per-step user counts and step-over-step
+    * conversion. Cascaded conditional-min aggregates joined on user_id
+    * (each join side is a per-user aggregate, orders of magnitude
+    * smaller than the event log). */
+  def q82Funnel(spark: SparkSession, dir: String): DataFrame = {
+    val ev = Tables.events(spark, dir)
+      .select(col("user_id"), col("ts"), col("event_type"))
+    val v = ev.filter(col("event_type") === "view")
+      .groupBy("user_id").agg(min(col("ts")).as("t_view"))
+    val c = ev.filter(col("event_type") === "click")
+      .join(v, Seq("user_id")).filter(col("ts") > col("t_view"))
+      .groupBy("user_id").agg(min(col("ts")).as("t_click"))
+    val p = ev.filter(col("event_type") === "purchase")
+      .join(c, Seq("user_id")).filter(col("ts") > col("t_click"))
+      .groupBy("user_id").agg(min(col("ts")).as("t_purchase"))
+    val steps = v.agg(count(lit(1)).as("n_users"))
+      .withColumn("step", lit("1_view"))
+      .unionByName(c.agg(count(lit(1)).as("n_users"))
+        .withColumn("step", lit("2_click")))
+      .unionByName(p.agg(count(lit(1)).as("n_users"))
+        .withColumn("step", lit("3_purchase")))
+    steps
+      .withColumn("conv_from_prev", round(try_divide(
+        col("n_users").cast("double"),
+        lag(col("n_users"), 1).over(Window.orderBy("step"))), 4))
+      .select(col("step"), col("n_users"), col("conv_from_prev"))
+      .orderBy("step")
+  }
+
+  /** q83 — cohort retention: users grouped by first-activity week, distinct
+    * actives per (cohort_week, week_offset). The first-seen aggregate is a
+    * per-user reduction (broadcastable back), the retention matrix one
+    * count-distinct — no per-week self-joins. */
+  def q83CohortRetention(spark: SparkSession, dir: String): DataFrame = {
+    val ev = Tables.events(spark, dir).select(col("user_id"), col("ts"))
+    val firstSeen = ev.groupBy("user_id")
+      .agg(to_date(date_trunc("week", min(col("ts")))).as("cohort_week"))
+    ev.join(firstSeen, Seq("user_id"))
+      .withColumn("week_offset",
+        (datediff(to_date(date_trunc("week", col("ts"))),
+          col("cohort_week")) / 7).cast("int"))
+      .groupBy("cohort_week", "week_offset")
+      .agg(countDistinct(col("user_id")).as("n_users"))
+      .orderBy("cohort_week", "week_offset")
+  }
+
+  /** q84 — event-type transition matrix (first-order Markov): counts and
+    * row-normalized probabilities of each (type -> next type) step per
+    * user timeline. One window pass + one aggregate. */
+  def q84TransitionMatrix(spark: SparkSession, dir: String): DataFrame = {
+    val w = Window.partitionBy("user_id").orderBy("ts", "event_id")
+    Tables.events(spark, dir)
+      .select(col("user_id"), col("ts"), col("event_id"), col("event_type"))
+      .withColumn("next_type", lead(col("event_type"), 1).over(w))
+      .filter(col("next_type").isNotNull)
+      .groupBy("event_type", "next_type")
+      .agg(count(lit(1)).as("n"))
+      .withColumn("p", round(col("n").cast("double") /
+        sum(col("n")).over(Window.partitionBy("event_type")), 6))
+      .orderBy("event_type", "next_type")
+  }
+
+  /** q95 — sequence pattern matching: each user's event-type timeline
+    * collapsed to an ordered string, matched with regular expressions
+    * (funnel-with-gaps via `view.*purchase`, adjacent-step counts via a
+    * literal pair). collect_list + sort_array keeps it one aggregate per
+    * user — per-user timelines are bounded, and the regex evaluates
+    * distributed, not on the driver. The MATCH_RECOGNIZE-lite of event
+    * analytics. */
+  def q95SequenceMatch(spark: SparkSession, dir: String): DataFrame =
+    Tables.events(spark, dir)
+      .groupBy("user_id")
+      // sentinel commas wrap the sequence so every token is
+      // comma-delimited on both sides: ',view,' can never match inside
+      // a future 'preview' token (RE2 has no lookaround, so boundary
+      // anchoring must come from the data). The adjacent count doubles
+      // every delimiter first: non-overlapping matches of
+      // ',view,,purchase,' then leave one comma behind on each side, so
+      // back-to-back conversions ('view,purchase,view,purchase') count
+      // as 2, not 1 — TRUE adjacent-pair counting without lookahead,
+      // identical regex semantics in both engines (ADVICE.md r03).
+      .agg(concat(lit(","), concat_ws(",", expr(
+        """transform(sort_array(collect_list(struct(ts, event_id, event_type))),
+          |          s -> s.event_type)""".stripMargin)), lit(",")).as("seq"),
+        count(lit(1)).as("n_events"))
+      .select(col("user_id"), col("n_events"),
+        col("seq").rlike(",view,(.*,)?purchase,").as("has_conversion"),
+        regexp_count(regexp_replace(col("seq"), ",", ",,"),
+          lit(",view,,purchase,")).cast("int")
+          .as("n_adjacent_conv"))
+      .orderBy("user_id")
+
+  /** Journey prefix depth for q191. */
+  private[graft] val JourneyDepth = 5
+
+  /** q191 — frequent journey mining: each user's first
+    * [[JourneyDepth]] events (by time) concatenated into a journey
+    * string, then the journey frequency table — "what do new users DO
+    * first?", the prefix-mining question q84's one-step transition
+    * matrix and q95's fixed-pattern regex cannot answer. Each user
+    * folds to one bounded string via sort_array over the collected
+    * (us, event_id, type) structs (deterministic: the pair is unique),
+    * and the journey rollup's cardinality is ≤ |types|^depth. */
+  def q191JourneyMining(spark: SparkSession, dir: String): DataFrame = {
+    Tables.events(spark, dir)
+      .select(col("user_id"), struct(unix_micros(col("ts")).as("us"),
+        col("event_id"), col("event_type")).as("rec"))
+      .groupBy("user_id")
+      .agg(collect_list(col("rec")).as("recs"))
+      .select(array_join(
+        expr(s"transform(slice(array_sort(recs), 1, $JourneyDepth), " +
+          "r -> r.event_type)"), ">").as("journey"))
+      .groupBy("journey").agg(count(lit(1)).as("n_users"))
+      .orderBy(col("n_users").desc, col("journey"))
+  }
+
+  /** q349 — COHORT RETENTION MATRIX: users grouped by first-activity
+    * week (cohort), each cohort's share of users still active k weeks
+    * later — the canonical growth/retention triangle every product
+    * warehouse derives from its event stream (q330 accounts weekly
+    * flows; this pivots them to cohort age, which is what retention
+    * curves and LTV models actually consume). Weeks are exact integer
+    * day-offsets div 7 from the corpus min date.
+    *
+    * Scale shape: one (user, week) distinct fold, one user-grain min
+    * for the cohort, one (cohort, offset) fold joined to the
+    * cohort-size profile — all content-key aggregates, output ≤
+    * weeks² rows. */
+  def q349CohortRetention(spark: SparkSession, dir: String): DataFrame = {
+    val ev = Tables.events(spark, dir)
+      .select(col("user_id"), to_date(col("ts")).as("d"))
+    val d0 = ev.agg(min(col("d")).as("d0"))
+    val userWeeks = ev.crossJoin(broadcast(d0))
+      .select(col("user_id"), expr("datediff(d, d0) div 7").as("week"))
+      .distinct()
+    val cohorts = userWeeks.groupBy("user_id")
+      .agg(min(col("week")).as("cohort_week"))
+    val sizes = cohorts.groupBy("cohort_week")
+      .agg(count(lit(1)).as("cohort_size"))
+    userWeeks.join(cohorts, Seq("user_id"))
+      .groupBy(col("cohort_week"),
+        (col("week") - col("cohort_week")).as("week_offset"))
+      .agg(count(lit(1)).as("n_active"))
+      .join(sizes, Seq("cohort_week"))
+      .select(col("cohort_week"), col("week_offset"), col("n_active"),
+        col("cohort_size"),
+        round(col("n_active").cast("double") / col("cohort_size"), 6)
+          .as("retention"))
+      .orderBy("cohort_week", "week_offset")
+  }
+
+  /** q359 — RETENTION-WEIGHTED LTV CURVE: for each week-of-life k,
+    * the expected revenue a user contributes in that week —
+    * revenue(k) / users-at-risk(k), where at-risk counts every
+    * cohort old enough to be OBSERVABLE at offset k (right-censoring
+    * handled the q235 Kaplan–Meier way) — and the cumulative curve,
+    * which is the lifetime value estimate q349's retention matrix and
+    * q330's weekly flows feed but don't finish. The per-week
+    * increment collapses algebraically to ONE exact division
+    * (retention × ARPU = cents/n_obs).
+    *
+    * Scale shape: user-grain folds, ≤|weeks|-row profiles, cumulative
+    * via a grouping-less collect fold. */
+  def q359LtvCurve(spark: SparkSession, dir: String): DataFrame = {
+    val ev = Tables.events(spark, dir)
+      .select(col("user_id"), to_date(col("ts")).as("d"),
+        expr("cast(round(value * 100, 0) as bigint)").as("cents"))
+    val d0 = ev.agg(min(col("d")).as("d0"))
+    val base = ev.crossJoin(broadcast(d0))
+      .select(col("user_id"), expr("datediff(d, d0) div 7").as("week"),
+        col("cents"))
+    val cohorts = base.groupBy("user_id")
+      .agg(min(col("week")).as("cohort_week"))
+    val maxW = base.agg(max(col("week")).as("max_week"))
+    val sizes = cohorts.groupBy("cohort_week")
+      .agg(count(lit(1)).as("cohort_size"))
+    val byOffset = base.join(cohorts, Seq("user_id"))
+      .withColumn("k", col("week") - col("cohort_week"))
+      .groupBy("k")
+      .agg(sum(col("cents")).as("cents"),
+        countDistinct(col("user_id")).as("n_active_users"))
+    // at-risk mass per offset: cohorts observable at k (tiny ≤-join:
+    // weeks-profile × weeks-spine). Spine derived FROM THE DATA (the
+    // observed offsets), exactly like the oracle's `DISTINCT k` — a
+    // `spark.range(0, 1000)` literal would silently cap offsets at
+    // 999 and drop ledger rows on a >19-year corpus while the oracle
+    // kept them. Downstream is an inner join on k, so the two spines
+    // are anyway equivalent only when nothing is capped.
+    val spine = byOffset.select("k").distinct()
+      .crossJoin(broadcast(maxW))
+      .filter(col("k") <= col("max_week"))
+    val atRisk = spine.join(broadcast(sizes),
+        col("cohort_week") + col("k") <= col("max_week"))
+      .groupBy("k").agg(sum(col("cohort_size")).as("n_obs"))
+    val perK = byOffset.join(atRisk, Seq("k"))
+      .withColumn("incr_micro",
+        expr("cast(round(cents * 10000 / n_obs, 0) as bigint)"))
+    perK
+      .agg(expr(
+        "array_sort(collect_list(struct(k, cents, n_active_users, " +
+          "n_obs, incr_micro)))").as("a"))
+      .select(expr(
+        """inline(transform(a, (s, i) -> struct(
+          |  s.k AS week_offset, s.n_obs AS n_obs,
+          |  s.n_active_users AS n_active, s.cents AS revenue_cents,
+          |  s.incr_micro AS incr_micro,
+          |  aggregate(slice(a, 1, i + 1), 0L,
+          |            (acc, t) -> acc + t.incr_micro) AS cum_micro)))"""
+          .stripMargin))
+      .select(col("week_offset"), col("n_obs"), col("n_active"),
+        col("revenue_cents"),
+        round(col("incr_micro").cast("double") / 1e6, 6)
+          .as("incr_dollars"),
+        round(col("cum_micro").cast("double") / 1e6, 6)
+          .as("ltv_dollars"))
+      .orderBy("week_offset")
+  }
+
   val defs: Seq[QueryDef] = Seq(
     QueryDef("q345_events_data_card", q345EventsDataCard _,
       """WITH ev AS (
@@ -1269,5 +1494,143 @@ object Lifecycle {
         |       round(CAST(c.cum_cents AS DOUBLE) / s.cohort_users / 100.0, 6)
         |         AS ltv_per_user
         |FROM cum c JOIN sizes s ON s.cohort_w = c.cohort_w
-        |ORDER BY c.cohort_w, c.age_w""".stripMargin))
+        |ORDER BY c.cohort_w, c.age_w""".stripMargin),
+    QueryDef("q95_sequence_match", q95SequenceMatch _,
+      """WITH seqs AS (
+        |  SELECT user_id,
+        |         ',' || string_agg(event_type, ','
+        |           ORDER BY CAST(ts AS TIMESTAMP), event_id) || ',' AS seq,
+        |         count(*) AS n_events
+        |  FROM events GROUP BY user_id)
+        |SELECT user_id, n_events,
+        |       regexp_matches(seq, ',view,(.*,)?purchase,')
+        |         AS has_conversion,
+        |       CAST(len(regexp_extract_all(replace(seq, ',', ',,'),
+        |                                   ',view,,purchase,')) AS INT)
+        |         AS n_adjacent_conv
+        |FROM seqs ORDER BY user_id""".stripMargin),
+    QueryDef("q82_funnel", q82Funnel _,
+      """WITH v AS (
+        |  SELECT user_id, min(CAST(ts AS TIMESTAMP)) AS t_view
+        |  FROM events WHERE event_type = 'view' GROUP BY user_id),
+        |c AS (
+        |  SELECT e.user_id, min(CAST(e.ts AS TIMESTAMP)) AS t_click
+        |  FROM events e JOIN v ON e.user_id = v.user_id
+        |  WHERE e.event_type = 'click' AND CAST(e.ts AS TIMESTAMP) > v.t_view
+        |  GROUP BY e.user_id),
+        |p AS (
+        |  SELECT e.user_id, min(CAST(e.ts AS TIMESTAMP)) AS t_purchase
+        |  FROM events e JOIN c ON e.user_id = c.user_id
+        |  WHERE e.event_type = 'purchase' AND CAST(e.ts AS TIMESTAMP) > c.t_click
+        |  GROUP BY e.user_id),
+        |steps AS (
+        |  SELECT '1_view' AS step, count(*) AS n_users FROM v
+        |  UNION ALL SELECT '2_click', count(*) FROM c
+        |  UNION ALL SELECT '3_purchase', count(*) FROM p)
+        |SELECT step, n_users,
+        |       round(CAST(n_users AS DOUBLE) /
+        |             lag(n_users) OVER (ORDER BY step), 4) AS conv_from_prev
+        |FROM steps ORDER BY step""".stripMargin),
+    QueryDef("q83_cohort_retention", q83CohortRetention _,
+      """WITH firstseen AS (
+        |  SELECT user_id,
+        |         CAST(date_trunc('week', min(CAST(ts AS TIMESTAMP))) AS DATE)
+        |           AS cohort_week
+        |  FROM events GROUP BY user_id)
+        |SELECT f.cohort_week,
+        |       CAST(date_diff('day', f.cohort_week,
+        |              CAST(date_trunc('week', CAST(e.ts AS TIMESTAMP)) AS DATE))
+        |            // 7 AS INT) AS week_offset,
+        |       count(DISTINCT e.user_id) AS n_users
+        |FROM events e JOIN firstseen f ON e.user_id = f.user_id
+        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin),
+    QueryDef("q84_transition_matrix", q84TransitionMatrix _,
+      """WITH pairs AS (
+        |  SELECT event_type,
+        |         lead(event_type) OVER (PARTITION BY user_id
+        |           ORDER BY CAST(ts AS TIMESTAMP), event_id) AS next_type
+        |  FROM events),
+        |counts AS (
+        |  SELECT event_type, next_type, count(*) AS n
+        |  FROM pairs WHERE next_type IS NOT NULL
+        |  GROUP BY event_type, next_type)
+        |SELECT event_type, next_type, n,
+        |       round(CAST(n AS DOUBLE) /
+        |             sum(n) OVER (PARTITION BY event_type), 6) AS p
+        |FROM counts ORDER BY event_type, next_type""".stripMargin),
+    QueryDef("q191_journey_mining", q191JourneyMining _,
+      s"""WITH ranked AS (
+        |  SELECT user_id, event_type,
+        |         row_number() OVER (PARTITION BY user_id
+        |           ORDER BY epoch_us(CAST(ts AS TIMESTAMP)), event_id)
+        |           AS rn
+        |  FROM events),
+        |journeys AS (
+        |  SELECT user_id,
+        |         string_agg(event_type, '>' ORDER BY rn) AS journey
+        |  FROM ranked WHERE rn <= $JourneyDepth
+        |  GROUP BY user_id)
+        |SELECT journey, count(*) AS n_users
+        |FROM journeys GROUP BY journey
+        |ORDER BY n_users DESC, journey""".stripMargin),
+    QueryDef("q349_cohort_retention", q349CohortRetention _,
+      """WITH ev AS (
+        |  SELECT user_id, CAST(ts AS DATE) AS d FROM events),
+        |d0 AS (SELECT min(d) AS d0 FROM ev),
+        |uw AS (SELECT DISTINCT user_id,
+        |              date_diff('day', (SELECT d0 FROM d0), d) // 7 AS week
+        |       FROM ev),
+        |coh AS (SELECT user_id, min(week) AS cohort_week
+        |        FROM uw GROUP BY 1),
+        |sizes AS (SELECT cohort_week, count(*) AS cohort_size
+        |          FROM coh GROUP BY 1)
+        |SELECT c.cohort_week,
+        |       CAST(u.week - c.cohort_week AS BIGINT) AS week_offset,
+        |       CAST(count(*) AS BIGINT) AS n_active,
+        |       CAST(s.cohort_size AS BIGINT) AS cohort_size,
+        |       round(CAST(count(*) AS DOUBLE) / s.cohort_size, 6)
+        |         AS retention
+        |FROM uw u JOIN coh c ON u.user_id = c.user_id
+        |JOIN sizes s ON s.cohort_week = c.cohort_week
+        |GROUP BY 1, 2, s.cohort_size
+        |ORDER BY 1, 2""".stripMargin),
+    QueryDef("q359_ltv_curve", q359LtvCurve _,
+      """WITH ev AS (
+        |  SELECT user_id, CAST(ts AS DATE) AS d,
+        |         CAST(round(value * 100, 0) AS BIGINT) AS cents
+        |  FROM events),
+        |d0 AS (SELECT min(d) AS d0 FROM ev),
+        |base AS (
+        |  SELECT user_id,
+        |         date_diff('day', (SELECT d0 FROM d0), d) // 7 AS week,
+        |         cents
+        |  FROM ev),
+        |coh AS (SELECT user_id, min(week) AS cohort_week
+        |        FROM base GROUP BY 1),
+        |mx AS (SELECT max(week) AS max_week FROM base),
+        |sizes AS (SELECT cohort_week, CAST(count(*) AS BIGINT)
+        |            AS cohort_size FROM coh GROUP BY 1),
+        |by_k AS (
+        |  SELECT b.week - c.cohort_week AS k,
+        |         CAST(sum(b.cents) AS BIGINT) AS cents,
+        |         CAST(count(DISTINCT b.user_id) AS BIGINT) AS n_active
+        |  FROM base b JOIN coh c ON c.user_id = b.user_id
+        |  GROUP BY 1),
+        |at_risk AS (
+        |  SELECT t.k, CAST(sum(s.cohort_size) AS BIGINT) AS n_obs
+        |  FROM (SELECT DISTINCT k FROM by_k) t
+        |  JOIN sizes s ON s.cohort_week + t.k <= (SELECT max_week FROM mx)
+        |  GROUP BY 1),
+        |per_k AS (
+        |  SELECT b.k, a.n_obs, b.n_active, b.cents,
+        |         CAST(round(b.cents * 10000 / a.n_obs, 0) AS BIGINT)
+        |           AS incr_micro
+        |  FROM by_k b JOIN at_risk a ON a.k = b.k)
+        |SELECT k AS week_offset, n_obs, n_active,
+        |       cents AS revenue_cents,
+        |       round(CAST(incr_micro AS DOUBLE) / 1e6, 6) AS incr_dollars,
+        |       round(CAST(sum(incr_micro) OVER (ORDER BY k
+        |           ROWS UNBOUNDED PRECEDING) AS DOUBLE) / 1e6, 6)
+        |         AS ltv_dollars
+        |FROM per_k ORDER BY week_offset""".stripMargin))
 }

@@ -25,7 +25,7 @@ import graft.sources.Tables
   *                     0): the holdout itself AND every survivor
   *                     sharing a word 5-gram with it leave the corpus
   *   5_token_sample  — q384's Madow token-budget PPS pick (every
-  *                     [[Breadth11.TokenStride]] tokens of hash-ordered
+  *                     [[Curation.TokenStride]] tokens of hash-ordered
   *                     running mass, [[DistributedRank]] prefix sums —
   *                     never `rand()`)
   *   6_pack          — q98's shard-local 2048-token bin packing
@@ -55,7 +55,7 @@ import graft.sources.Tables
   *
   * Design refs: the stage semantics are pinned to the referenced
   * queries' operators (same helpers, not copies) — q383
-  * [[Breadth11.funnelGateCols]], q31/q32 [[Dedup.shingleRows]] +
+  * [[Curation.funnelGateCols]], q31/q32 [[Dedup.shingleRows]] +
   * [[Dedup.bandsFromShingles]], q66 [[Curation.grams5]], q384
   * [[DistributedRank.withRunningTotal]], q98's window shape.
   */
@@ -78,7 +78,7 @@ object Materialize {
   private[graft] def flagSpinePlan(spark: SparkSession,
       dir: String): DataFrame = {
     val docs = Tables.documents(spark, dir)
-    val base = Breadth11.funnelGateCols(docs)
+    val base = Curation.funnelGateCols(docs)
       .withColumn("g",
         col("r1") && col("r2") && col("r3") && col("r4") && col("r5"))
       .select(col("doc_id"), col("text"), col("g"),
@@ -140,7 +140,7 @@ object Materialize {
     // 5: token-budget PPS sample over the clean corpus (q384's Madow
     // systematic pick on a salted-hash order — deterministic, exactly
     // one pick per TokenStride of corpus mass)
-    val stride = Breadth11.TokenStride
+    val stride = Curation.TokenStride
     val picked = DistributedRank.withRunningTotal(
         spine.filter(col("dc")).select(col("doc_id"), col("n_tokens"))
           .withColumn("h", md5(concat(lit("matsample:"),
@@ -206,23 +206,23 @@ object Materialize {
   val defs: Seq[QueryDef] = Seq(
     QueryDef("q389_training_materialization", q389TrainingMaterialization _,
       {
-      val stops = Breadth11.FunnelStops.map(s => s"'$s'")
+      val stops = Curation.FunnelStops.map(s => s"'$s'")
         .mkString("[", ", ", "]")
       s"""WITH base AS (
         |  SELECT doc_id, text, md5(text) AS th,
         |         CAST(len(wl) AS BIGINT) AS n_tokens,
-        |         (n_chars BETWEEN ${Breadth11.FunnelLenMin}
-        |            AND ${Breadth11.FunnelLenMax}
+        |         (n_chars BETWEEN ${Curation.FunnelLenMin}
+        |            AND ${Curation.FunnelLenMax}
         |          AND CAST(len(wl) AS BIGINT) >=
-        |            ${Breadth11.FunnelMinWords}
-        |          AND ${Breadth11.FunnelMwlMin} * CAST(len(wl) AS BIGINT)
+        |            ${Curation.FunnelMinWords}
+        |          AND ${Curation.FunnelMwlMin} * CAST(len(wl) AS BIGINT)
         |            <= CAST(len(replace(text, ' ', '')) AS BIGINT)
         |          AND CAST(len(replace(text, ' ', '')) AS BIGINT)
-        |            <= ${Breadth11.FunnelMwlMax} * CAST(len(wl) AS BIGINT)
+        |            <= ${Curation.FunnelMwlMax} * CAST(len(wl) AS BIGINT)
         |          AND len(list_intersect(wl, $stops)) > 0
-        |          AND ${Breadth11.FunnelTtrDen}
+        |          AND ${Curation.FunnelTtrDen}
         |            * CAST(len(list_distinct(wl)) AS BIGINT) >=
-        |            ${Breadth11.FunnelTtrNum} * CAST(len(wl) AS BIGINT))
+        |            ${Curation.FunnelTtrNum} * CAST(len(wl) AS BIGINT))
         |           AS g
         |  FROM (SELECT *, list_filter(string_split(text, ' '),
         |                w -> len(w) > 0) AS wl
@@ -291,8 +291,8 @@ object Materialize {
         |  FROM f3 WHERE dc),
         |picked AS (
         |  SELECT doc_id FROM cumt
-        |  WHERE cum // ${Breadth11.TokenStride}
-        |        > (cum - n_tokens) // ${Breadth11.TokenStride}),
+        |  WHERE cum // ${Curation.TokenStride}
+        |        > (cum - n_tokens) // ${Curation.TokenStride}),
         |f4 AS (SELECT f3.*, (dc AND picked.doc_id IS NOT NULL) AS sm
         |       FROM f3 LEFT JOIN picked USING (doc_id)),
         |stats AS (

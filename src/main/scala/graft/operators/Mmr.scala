@@ -43,7 +43,7 @@ import graft.sources.Tables
   * integer-exact and derivable in DuckDB, the oracle verifies the
   * EXACT pool and the full MMR selection end to end — no recall-only
   * contract needed. The brute top-pool arm survives as the spec-only
-  * ground truth (Round10Spec measures pool recall vs brute at sf, the
+  * ground truth (MmrSpec measures pool recall vs brute at sf, the
   * q200 playbook).
   *
   * Determinism discipline (q223's scale-invariance trick): every
@@ -213,7 +213,7 @@ object Mmr {
   }
 
   /** TEST-ONLY brute pool (the Q×N dot scan q224 used to register):
-    * exact top-[[MmrPool]] ground truth Round10Spec measures the LSH
+    * exact top-[[MmrPool]] ground truth MmrSpec measures the LSH
     * pool's recall against. Never registered — O(N²/100) is the
     * textbook scale-killer (13.3× at 10× facts, docs/SCALE.md r10). */
   private[graft] def brutePool(spark: SparkSession, dir: String): DataFrame = {
@@ -307,21 +307,8 @@ object Mmr {
         |  FROM generate_series($MmrMinBits, $MmrBandSlot) t(b)
         |  WHERE (CAST(1 AS BIGINT) << b) * $MmrTargetBucket >=
         |        (SELECT count(*) FROM embeddings)),
-        |ex AS (
-        |  SELECT vec_id, CAST(unnest(embedding) AS DOUBLE) AS x,
-        |         generate_subscripts(embedding, 1) AS i
-        |  FROM embeddings),
-        |xq AS (SELECT vec_id, i - 1 AS d,
-        |              CAST(floor(x * 1000.0) AS BIGINT) AS q
-        |       FROM ex),
-        |planes AS (
-        |  SELECT p, d,
-        |         ('0x' || substr(md5('mmr' || CAST(p AS VARCHAR) || '_'
-        |                             || CAST(d AS VARCHAR)), 1, 15))::BIGINT
-        |           % 2001 - 1000 AS c
-        |  FROM generate_series(0, ${MmrPlanes - 1}) tp(p),
-        |       (SELECT DISTINCT i - 1 AS d FROM ex) td
-        |  WHERE (p % $MmrBandSlot) < (SELECT b FROM bsel)),
+        |${DedupEmbedding.signPlanesCtes(MmrPlanes, "'mmr' || ",
+            s"(p % $MmrBandSlot) < (SELECT b FROM bsel)")}),
         |bits AS (
         |  SELECT vec_id, p, CASE WHEN sum(c * q) > 0 THEN 1 ELSE 0 END AS bit
         |  FROM xq JOIN planes USING (d)

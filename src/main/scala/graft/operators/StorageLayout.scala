@@ -5,12 +5,13 @@ import java.nio.file.Files
 import scala.collection.concurrent.TrieMap
 
 import org.apache.commons.io.FileUtils
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.SessionIds
 
 import graft.QueryDef
+import graft.functions.Hashing
 import graft.sources.Tables
 import Similarity.{QselCte, simCol}
 import AnnIndex.{ivfCentroids, nearestCells, ivfNprobe, IvfProbeScale, ProbeFloor}
@@ -26,6 +27,10 @@ import AnnIndex.{ivfCentroids, nearestCells, ivfNprobe, IvfProbeScale, ProbeFloo
   * silently lost, partition filter not pushed) fails the driver's hash
   * compare. The returned plan itself contains the pruned scan, so
   * `graft.Explain` shows the PartitionFilters / PushedFilters evidence.
+  *
+  * Also here: the physical-design advisors: broadcast size (q356),
+  * column encoding (q360), shard rebalancing (q362), compaction planning
+  * (q376), join order (q377) and sampled join cardinality (q381).
   */
 object StorageLayout {
 
@@ -437,6 +442,299 @@ object StorageLayout {
       .orderBy("key_name")
   }
 
+  /** q356 pinned broadcast budget (10 MiB — the conventional
+    * autoBroadcastJoinThreshold ballpark). */
+  private[graft] val BroadcastBudget = 10L * 1024 * 1024
+
+  /** q356 — BROADCAST-SIZE ADVISOR: for every dimension table, the
+    * exact serialized-payload estimate (fixed-width columns at their
+    * storage width + actual string lengths) against a pinned
+    * [[BroadcastBudget]] — the decision input behind every
+    * `broadcast()` hint this engine places (q286 decides partition
+    * keys, q309 Bloom sizes, q328 salts; this completes the advisor
+    * family with the build-side question). A dimension that outgrows
+    * the budget must flip its joins to shuffle side — finding that
+    * out from an executor OOM is the failure mode this audit
+    * pre-empts.
+    *
+    * Exactness: byte estimate is an exact BIGINT fold (8 B per
+    * BIGINT/DOUBLE, 4 B per INT, string lengths as stored); one
+    * division for bytes/row. */
+  def q356BroadcastAdvisor(spark: SparkSession, dir: String): DataFrame = {
+    def est(name: String, df: DataFrame, fixed: Int,
+        strCols: Seq[String]): DataFrame = {
+      val strLen: Column = strCols
+        .map(c => length(col(c)).cast("long"))
+        .reduceOption(_ + _).getOrElse(lit(0L))
+      df.agg(count(lit(1)).as("n_rows"),
+          sum(strLen + fixed.toLong).as("est_bytes"))
+        .select(lit(name).as("table_name"), col("n_rows"),
+          col("est_bytes"),
+          round(col("est_bytes").cast("double") / col("n_rows"), 6)
+            .as("bytes_per_row"),
+          (col("est_bytes") <= BroadcastBudget).as("broadcastable"))
+    }
+    Seq(
+      est("customer", Tables.customer(spark, dir), 20,
+        Seq("c_name", "c_mktsegment")),
+      est("nation", Tables.nation(spark, dir), 8, Seq("n_name")),
+      est("part", Tables.part(spark, dir), 20,
+        Seq("p_name", "p_brand", "p_type")),
+      est("region", Tables.region(spark, dir), 4, Seq("r_name")),
+      est("supplier", Tables.supplier(spark, dir), 20, Seq("s_name")))
+      .reduce(_ unionByName _)
+      .orderBy("table_name")
+  }
+
+  /** q360 — COLUMN-ENCODING ADVISOR: for each orders column, the
+    * exact ndv, ndv ratio, and mean value width, and the resulting
+    * dictionary-vs-plain encoding call (ndv < 10% of rows) — the
+    * writer-side companion to q286 (partition key) and q309 (Bloom
+    * budget): which columns earn dictionary pages in the 100 TB
+    * parquet layout. ONE melted scan (the q286 inline discipline),
+    * never one pass per column.
+    *
+    * Exactness: counts/ndv exact, widths exact string lengths, the
+    * ratio and mean width single divisions, the verdict an integer
+    * comparison. */
+  def q360EncodingAdvisor(spark: SparkSession, dir: String): DataFrame = {
+    def cand(name: String, v: Column) =
+      struct(lit(name).as("col_name"), v.cast("string").as("val"))
+    Tables.orders(spark, dir).select(inline(array(
+        cand("o_custkey", col("o_custkey")),
+        cand("o_orderdate", col("o_orderdate").cast("string")),
+        cand("o_orderpriority", col("o_orderpriority")),
+        cand("o_orderstatus", col("o_orderstatus")),
+        cand("o_totalprice", expr(
+          "cast(cast(round(o_totalprice * 100, 0) as bigint) as string)")))))
+      .groupBy("col_name")
+      .agg(count(lit(1)).as("n_rows"),
+        countDistinct(col("val")).as("ndv"),
+        sum(length(col("val")).cast("long")).as("sum_len"))
+      .select(col("col_name"), col("n_rows"), col("ndv"),
+        round(col("ndv").cast("double") / col("n_rows"), 6)
+          .as("ndv_ratio"),
+        round(col("sum_len").cast("double") / col("n_rows"), 6)
+          .as("avg_width"),
+        (col("ndv") * 10L < col("n_rows")).as("dictionary_friendly"))
+      .orderBy("col_name")
+  }
+
+  /** q362 — SHARD REBALANCING AUDIT: how many keys MOVE when the
+    * shard count grows 32 → 33, under hash-modulo placement vs
+    * RENDEZVOUS (highest-random-weight) placement — the measured
+    * justification for HRW/consistent placement in any stateful layer
+    * this engine feeds (q220's epoch shards, the q172 CDC-merge
+    * serving table): modulo reshuffles ~32/33 of all keys, rendezvous
+    * provably exactly the keys whose new shard WINS (~1/33). Both
+    * schemes run on the portable md5Hash60, so the oracle verifies
+    * exact per-key movement. Per (key, shard) weights are packed into
+    * one comparable BIGINT code (w div 64)·64 + s — top 54 hash bits
+    * then the shard id, so the argmax is a plain max with a pinned
+    * tie-break and no struct comparison crosses engines.
+    *
+    * Scale shape: one distinct-key fold, a 33-wide generate per key
+    * (enum fan-out), one grouped max; single-row output. */
+  def q362ShardRebalance(spark: SparkSession, dir: String): DataFrame = {
+    val keys = Tables.events(spark, dir).select(col("user_id")).distinct()
+      .withColumn("h",
+        Hashing.md5Hash60(concat(lit("shard:"), col("user_id"))))
+    val weighted = keys
+      .select(col("user_id"), col("h"),
+        explode(expr("sequence(0L, 32L)")).as("s"))
+      .withColumn("code",
+        expr("(cast(conv(substring(md5(concat('hrw:', user_id, ':', s)), " +
+          "1, 15), 16, 10) as bigint) div 64) * 64 + s"))
+    weighted
+      .groupBy("user_id", "h")
+      .agg(pmod(max(when(col("s") < 32L, col("code"))), lit(64L))
+          .as("hrw32"),
+        pmod(max(col("code")), lit(64L)).as("hrw33"))
+      .select(
+        (pmod(col("h"), lit(32L)) =!= pmod(col("h"), lit(33L)))
+          .as("mod_moved"),
+        (col("hrw32") =!= col("hrw33")).as("hrw_moved"))
+      .agg(count(lit(1)).as("n_keys"),
+        sum(when(col("mod_moved"), 1L).otherwise(0L)).as("mod_moved"),
+        sum(when(col("hrw_moved"), 1L).otherwise(0L)).as("hrw_moved"))
+      .select(col("n_keys"), col("mod_moved"),
+        round(col("mod_moved").cast("double") / col("n_keys"), 6)
+          .as("mod_moved_frac"),
+        col("hrw_moved"),
+        round(col("hrw_moved").cast("double") / col("n_keys"), 6)
+          .as("hrw_moved_frac"))
+  }
+
+  /** q376 packing target (1 MiB planning unit — small enough that the
+    * synthetic SFs produce multi-bin plans; at production scale the
+    * same pipeline runs with a 128 MiB target) and the declared
+    * per-row byte estimate. */
+  private[graft] val CompactTargetBytes = 1L << 20
+
+  private[graft] val CompactRowBytes = 128L
+
+  /** q376 — COMPACTION PLANNER: pack per-ship-day ingest volumes
+    * (rows × declared row width) into [[CompactTargetBytes]]-target
+    * output files by SIZE-DESCENDING sequential packing — sort days
+    * by estimated bytes desc, take the distributed running total
+    * ([[DistributedRank.withRunningTotal]] — per-partition prefix
+    * sums, #partitions driver scalars), and cut a new bin every time
+    * the running total crosses a target boundary (bin = start-offset
+    * div target). The small-files problem this plans away is the
+    * canonical 100 TB ingest pathology (q199's manifest SHOWS the
+    * fragmentation; this emits the repack plan); descending order
+    * packs the heavy days first so only the tail bins mix many small
+    * days. Deterministic: sizes are exact integers, ties break by
+    * day; bins can overflow a target by less than one day's bytes
+    * (documented NFD-style contiguous packing, not bin-perfect FFD —
+    * the single-sorted-pass plan a distributed compactor actually
+    * executes). */
+  def q376CompactionPlanner(spark: SparkSession, dir: String): DataFrame = {
+    val daily = Tables.lineitem(spark, dir)
+      .groupBy(to_date(col("l_shipdate")).as("day"))
+      .agg((count(lit(1)) * CompactRowBytes).as("est_bytes"))
+    DistributedRank.withRunningTotal(daily, "est_bytes", "cum",
+        desc("est_bytes"), asc("day"))
+      .withColumn("bin",
+        expr(s"(cum - est_bytes) div $CompactTargetBytes"))
+      .groupBy("bin")
+      // the bin's first-packed row (bytes-desc order) is its heaviest
+      // day, and packing order = running-total order, so the row with
+      // the bin's smallest cum is the heaviest (cum strictly increases:
+      // est_bytes ≥ CompactRowBytes > 0) — min_by over a scalar both
+      // engines share (ADVICE r12: min(day) was the EARLIEST day)
+      .agg(count(lit(1)).as("n_days"), sum(col("est_bytes")).as("bytes"),
+        min_by(col("day"), col("cum")).as("heaviest_day"))
+      .select(col("bin"), col("n_days"), col("bytes"),
+        round(col("bytes").cast("double") / CompactTargetBytes, 6)
+          .as("fill_ratio"),
+        col("heaviest_day"))
+      .orderBy("bin")
+  }
+
+  /** q377 declared dimension filters (pinned advisor inputs). */
+  private[graft] val AdvisorPartMaxSize = 15
+
+  private[graft] val AdvisorSuppMaxNation = 11
+
+  private[graft] val AdvisorOrderPriority = "1-URGENT"
+
+  /** q377 — JOIN-ORDER ADVISOR: for a star query over lineitem with
+    * declared filters on part / supplier / orders, measure each
+    * dimension's exact filter selectivity and emit the
+    * most-selective-first join order with the estimated fact
+    * cardinality after each join prefix (independence assumption —
+    * the System-R heuristic Catalyst's cost-based reorder implements;
+    * this makes the estimate INSPECTABLE next to the true final
+    * cardinality, which is the advisor's calibration column). The
+    * estimate folds left-to-right in doubles with the multiplication
+    * order pinned by position and mirrored verbatim in the oracle;
+    * selectivities order by exact integer ppm with a name tie-break.
+    *
+    * Scale shape: three dimension-profile aggregates (1 row each), a
+    * 3-row collect fold, and ONE real filtered star join for the
+    * calibration count — dimension filters push to the dim scans and
+    * the joins broadcast the filtered dims. */
+  def q377JoinOrderAdvisor(spark: SparkSession, dir: String): DataFrame = {
+    def profile(name: String, df: DataFrame,
+        pred: org.apache.spark.sql.Column): DataFrame =
+      df.agg(lit(name).as("dim_name"), count(lit(1)).as("dim_rows"),
+        sum(when(pred, 1L).otherwise(0L)).as("dim_filtered"))
+    val prof =
+      profile("part", Tables.part(spark, dir),
+          col("p_size") <= AdvisorPartMaxSize)
+        .unionByName(profile("supplier", Tables.supplier(spark, dir),
+          col("s_nationkey") <= AdvisorSuppMaxNation))
+        .unionByName(profile("orders", Tables.orders(spark, dir),
+          col("o_orderpriority") === AdvisorOrderPriority))
+        .withColumn("sel_ppm",
+          expr("dim_filtered * 1000000L div dim_rows"))
+    val nFact = Tables.lineitem(spark, dir)
+      .agg(count(lit(1)).as("n_fact"))
+    val actual = Tables.lineitem(spark, dir)
+      .join(Tables.part(spark, dir)
+          .filter(col("p_size") <= AdvisorPartMaxSize),
+        col("l_partkey") === col("p_partkey"))
+      .join(Tables.supplier(spark, dir)
+          .filter(col("s_nationkey") <= AdvisorSuppMaxNation),
+        col("l_suppkey") === col("s_suppkey"))
+      .join(Tables.orders(spark, dir)
+          .filter(col("o_orderpriority") === AdvisorOrderPriority),
+        col("l_orderkey") === col("o_orderkey"))
+      .agg(count(lit(1)).as("actual_final_rows"))
+    prof
+      .agg(expr("array_sort(collect_list(struct(sel_ppm, dim_name, " +
+        "dim_rows, dim_filtered)))").as("a"))
+      .crossJoin(broadcast(nFact))
+      .crossJoin(broadcast(actual))
+      .select(col("n_fact"), col("actual_final_rows"), expr(
+        """inline(transform(a, (s, i) -> struct(
+          |  cast(i + 1 as int) AS position, s.dim_name AS dim_name,
+          |  s.dim_rows AS dim_rows, s.dim_filtered AS dim_filtered,
+          |  s.sel_ppm AS sel_ppm,
+          |  round(aggregate(slice(a, 1, i + 1), cast(n_fact as double),
+          |    (acc, t) -> acc * (cast(t.dim_filtered as double)
+          |                       / cast(t.dim_rows as double))), 2)
+          |    AS est_rows_after)))""".stripMargin))
+      .select(col("position"), col("dim_name"), col("dim_rows"),
+        col("dim_filtered"), col("sel_ppm"), col("est_rows_after"),
+        col("actual_final_rows"))
+      .orderBy("position")
+  }
+
+  /** q381 sampling modulus (deterministic 1-in-64 row sample). */
+  private[graft] val CardSampleMod = 64L
+
+  /** q381 — SAMPLING-BASED JOIN-CARDINALITY CALIBRATION: estimate
+    * |lineitem ⋈ filtered-dim| from a DETERMINISTIC 1-in-
+    * [[CardSampleMod]] hash sample of the fact rows (md5 of the line
+    * key — reproducible under any partitioning, the q68/q97
+    * never-rand() rule) and report it NEXT TO the true count for each
+    * of three join shapes (part filter, supplier filter, both). The
+    * empirical companion of q377's independence MODEL: q377 says what
+    * a System-R estimator would guess, this measures what a
+    * sample-based estimator (the other standard CBO input) actually
+    * achieves on this data — rel_err is the calibration column.
+    *
+    * Scale shape: the sample arm scans once and joins broadcast
+    * filtered dims (sample size n/64 keeps the estimate cheap at any
+    * corpus size); the actual arm is the same broadcast join
+    * unsampled. All counts exact BIGINTs; rel_err is one mirrored
+    * division. */
+  def q381SampleCardinality(spark: SparkSession, dir: String): DataFrame = {
+    val li = Tables.lineitem(spark, dir)
+      .select("l_orderkey", "l_linenumber", "l_partkey", "l_suppkey")
+    val sampled = li.filter(pmod(Hashing.md5Hash60(
+      concat(lit("cardsample:"), col("l_orderkey").cast("string"),
+        lit(":"), col("l_linenumber").cast("string"))),
+      lit(CardSampleMod)) === 0L)
+    val partF = Tables.part(spark, dir)
+      .filter(col("p_size") <= AdvisorPartMaxSize).select("p_partkey")
+    val suppF = Tables.supplier(spark, dir)
+      .filter(col("s_nationkey") <= AdvisorSuppMaxNation)
+      .select("s_suppkey")
+    def joined(base: DataFrame, withPart: Boolean,
+        withSupp: Boolean): DataFrame = {
+      val p = if (withPart) base.join(broadcast(partF),
+        col("l_partkey") === col("p_partkey")) else base
+      if (withSupp) p.join(broadcast(suppF),
+        col("l_suppkey") === col("s_suppkey")) else p
+    }
+    def armRow(name: String, wp: Boolean, ws: Boolean): DataFrame =
+      joined(sampled, wp, ws).agg(count(lit(1)).as("sample_n"))
+        .crossJoin(broadcast(
+          joined(li, wp, ws).agg(count(lit(1)).as("actual_rows"))))
+        .select(lit(name).as("join_name"), col("sample_n"),
+          (col("sample_n") * CardSampleMod).as("est_rows"),
+          col("actual_rows"),
+          round(try_divide((col("sample_n") * CardSampleMod).cast("double") -
+            col("actual_rows"), col("actual_rows")), 6).as("rel_err"))
+    armRow("part_and_supplier", wp = true, ws = true)
+      .unionByName(armRow("part_filter", wp = true, ws = false))
+      .unionByName(armRow("supplier_filter", wp = false, ws = true))
+      .orderBy("join_name")
+  }
+
   val defs: Seq[QueryDef] = Seq(
     QueryDef("q132_zorder_scan", q132ZorderScan _,
       """SELECT count(*) AS n_rows,
@@ -528,5 +826,211 @@ object StorageLayout {
         |             / (CAST(rows AS DOUBLE) * rows), 8)
         |         AS expected_scan_frac,
         |       round(CAST(max_n AS DOUBLE) / rows, 8) AS max_part_frac
-        |FROM keys ORDER BY key_name""".stripMargin))
+        |FROM keys ORDER BY key_name""".stripMargin),
+    QueryDef("q356_broadcast_advisor", q356BroadcastAdvisor _,
+      s"""SELECT * FROM (
+        |  SELECT 'customer' AS table_name, CAST(count(*) AS BIGINT)
+        |           AS n_rows,
+        |         CAST(sum(len(c_name) + len(c_mktsegment) + 20)
+        |              AS BIGINT) AS est_bytes,
+        |         round(CAST(sum(len(c_name) + len(c_mktsegment) + 20)
+        |                    AS DOUBLE) / count(*), 6) AS bytes_per_row,
+        |         sum(len(c_name) + len(c_mktsegment) + 20)
+        |           <= $BroadcastBudget AS broadcastable
+        |  FROM customer
+        |  UNION ALL
+        |  SELECT 'nation', CAST(count(*) AS BIGINT),
+        |         CAST(sum(len(n_name) + 8) AS BIGINT),
+        |         round(CAST(sum(len(n_name) + 8) AS DOUBLE) / count(*), 6),
+        |         sum(len(n_name) + 8) <= $BroadcastBudget
+        |  FROM nation
+        |  UNION ALL
+        |  SELECT 'part', CAST(count(*) AS BIGINT),
+        |         CAST(sum(len(p_name) + len(p_brand) + len(p_type) + 20)
+        |              AS BIGINT),
+        |         round(CAST(sum(len(p_name) + len(p_brand) + len(p_type)
+        |                        + 20) AS DOUBLE) / count(*), 6),
+        |         sum(len(p_name) + len(p_brand) + len(p_type) + 20)
+        |           <= $BroadcastBudget
+        |  FROM part
+        |  UNION ALL
+        |  SELECT 'region', CAST(count(*) AS BIGINT),
+        |         CAST(sum(len(r_name) + 4) AS BIGINT),
+        |         round(CAST(sum(len(r_name) + 4) AS DOUBLE) / count(*), 6),
+        |         sum(len(r_name) + 4) <= $BroadcastBudget
+        |  FROM region
+        |  UNION ALL
+        |  SELECT 'supplier', CAST(count(*) AS BIGINT),
+        |         CAST(sum(len(s_name) + 20) AS BIGINT),
+        |         round(CAST(sum(len(s_name) + 20) AS DOUBLE) / count(*), 6),
+        |         sum(len(s_name) + 20) <= $BroadcastBudget
+        |  FROM supplier)
+        |ORDER BY table_name""".stripMargin),
+    QueryDef("q360_encoding_advisor", q360EncodingAdvisor _,
+      """WITH melted AS (
+        |  SELECT 'o_custkey' AS col_name, CAST(o_custkey AS VARCHAR)
+        |    AS val FROM orders
+        |  UNION ALL
+        |  SELECT 'o_orderdate', CAST(o_orderdate AS VARCHAR) FROM orders
+        |  UNION ALL
+        |  SELECT 'o_orderpriority', o_orderpriority FROM orders
+        |  UNION ALL
+        |  SELECT 'o_orderstatus', o_orderstatus FROM orders
+        |  UNION ALL
+        |  SELECT 'o_totalprice',
+        |         CAST(CAST(round(o_totalprice * 100, 0) AS BIGINT)
+        |              AS VARCHAR)
+        |  FROM orders)
+        |SELECT col_name, CAST(count(*) AS BIGINT) AS n_rows,
+        |       CAST(count(DISTINCT val) AS BIGINT) AS ndv,
+        |       round(CAST(count(DISTINCT val) AS DOUBLE) / count(*), 6)
+        |         AS ndv_ratio,
+        |       round(CAST(sum(len(val)) AS DOUBLE) / count(*), 6)
+        |         AS avg_width,
+        |       count(DISTINCT val) * 10 < count(*) AS dictionary_friendly
+        |FROM melted GROUP BY 1 ORDER BY 1""".stripMargin),
+    QueryDef("q362_shard_rebalance", q362ShardRebalance _,
+      """WITH keys AS (
+        |  SELECT DISTINCT user_id,
+        |         ('0x' || substr(md5('shard:' || CAST(user_id AS VARCHAR)),
+        |                         1, 15))::BIGINT AS h
+        |  FROM events),
+        |weighted AS (
+        |  SELECT k.user_id, k.h, s.s,
+        |         (('0x' || substr(md5('hrw:' || CAST(k.user_id AS VARCHAR)
+        |             || ':' || CAST(s.s AS VARCHAR)), 1, 15))::BIGINT // 64)
+        |           * 64 + s.s AS code
+        |  FROM keys k, generate_series(0, 32) s(s)),
+        |placed AS (
+        |  SELECT user_id, h,
+        |         max(CASE WHEN s < 32 THEN code END) % 64 AS hrw32,
+        |         max(code) % 64 AS hrw33
+        |  FROM weighted GROUP BY 1, 2),
+        |moved AS (
+        |  SELECT (h % 32) <> (h % 33) AS mod_moved,
+        |         hrw32 <> hrw33 AS hrw_moved
+        |  FROM placed)
+        |SELECT CAST(count(*) AS BIGINT) AS n_keys,
+        |       CAST(sum(CASE WHEN mod_moved THEN 1 ELSE 0 END) AS BIGINT)
+        |         AS mod_moved,
+        |       round(CAST(sum(CASE WHEN mod_moved THEN 1 ELSE 0 END)
+        |                  AS DOUBLE) / count(*), 6) AS mod_moved_frac,
+        |       CAST(sum(CASE WHEN hrw_moved THEN 1 ELSE 0 END)
+        |            AS BIGINT) AS hrw_moved,
+        |       round(CAST(sum(CASE WHEN hrw_moved THEN 1 ELSE 0 END)
+        |                  AS DOUBLE) / count(*), 6) AS hrw_moved_frac
+        |FROM moved""".stripMargin),
+    QueryDef("q381_sample_cardinality", q381SampleCardinality _,
+      s"""WITH li AS (
+        |  SELECT l_orderkey, l_linenumber, l_partkey, l_suppkey
+        |  FROM lineitem),
+        |s AS (
+        |  SELECT * FROM li
+        |  WHERE ('0x' || substr(md5('cardsample:'
+        |          || CAST(l_orderkey AS VARCHAR) || ':'
+        |          || CAST(l_linenumber AS VARCHAR)), 1, 15))::BIGINT
+        |        % $CardSampleMod = 0),
+        |pf AS (SELECT p_partkey FROM part
+        |       WHERE p_size <= $AdvisorPartMaxSize),
+        |sf AS (SELECT s_suppkey FROM supplier
+        |       WHERE s_nationkey <= $AdvisorSuppMaxNation),
+        |arms AS (
+        |  SELECT 'part_and_supplier' AS join_name,
+        |    (SELECT CAST(count(*) AS BIGINT) FROM s
+        |     JOIN pf ON l_partkey = p_partkey
+        |     JOIN sf ON l_suppkey = s_suppkey) AS sample_n,
+        |    (SELECT CAST(count(*) AS BIGINT) FROM li
+        |     JOIN pf ON l_partkey = p_partkey
+        |     JOIN sf ON l_suppkey = s_suppkey) AS actual_rows
+        |  UNION ALL
+        |  SELECT 'part_filter',
+        |    (SELECT CAST(count(*) AS BIGINT) FROM s
+        |     JOIN pf ON l_partkey = p_partkey),
+        |    (SELECT CAST(count(*) AS BIGINT) FROM li
+        |     JOIN pf ON l_partkey = p_partkey)
+        |  UNION ALL
+        |  SELECT 'supplier_filter',
+        |    (SELECT CAST(count(*) AS BIGINT) FROM s
+        |     JOIN sf ON l_suppkey = s_suppkey),
+        |    (SELECT CAST(count(*) AS BIGINT) FROM li
+        |     JOIN sf ON l_suppkey = s_suppkey))
+        |SELECT join_name, sample_n,
+        |       CAST(sample_n * $CardSampleMod AS BIGINT) AS est_rows,
+        |       actual_rows,
+        |       round((CAST(sample_n * $CardSampleMod AS DOUBLE)
+        |              - actual_rows) / actual_rows, 6) AS rel_err
+        |FROM arms ORDER BY join_name""".stripMargin),
+    QueryDef("q376_compaction_planner", q376CompactionPlanner _,
+      s"""WITH daily AS (
+        |  SELECT CAST(l_shipdate AS DATE) AS day,
+        |         CAST(count(*) * $CompactRowBytes AS BIGINT) AS est_bytes
+        |  FROM lineitem GROUP BY 1),
+        |packed AS (
+        |  SELECT day, est_bytes,
+        |         CAST(sum(est_bytes) OVER (ORDER BY est_bytes DESC, day
+        |           ROWS UNBOUNDED PRECEDING) AS BIGINT) AS cum
+        |  FROM daily)
+        |SELECT (cum - est_bytes) // $CompactTargetBytes AS bin,
+        |       CAST(count(*) AS BIGINT) AS n_days,
+        |       CAST(sum(est_bytes) AS BIGINT) AS bytes,
+        |       round(CAST(sum(est_bytes) AS DOUBLE)
+        |             / $CompactTargetBytes, 6) AS fill_ratio,
+        |       min_by(day, cum) AS heaviest_day
+        |FROM packed GROUP BY 1 ORDER BY 1""".stripMargin),
+    QueryDef("q377_join_order_advisor", q377JoinOrderAdvisor _,
+      s"""WITH prof AS (
+        |  SELECT 'part' AS dim_name, CAST(count(*) AS BIGINT)
+        |           AS dim_rows,
+        |         CAST(sum(CASE WHEN p_size <= $AdvisorPartMaxSize
+        |                       THEN 1 ELSE 0 END) AS BIGINT)
+        |           AS dim_filtered
+        |  FROM part
+        |  UNION ALL
+        |  SELECT 'supplier', CAST(count(*) AS BIGINT),
+        |         CAST(sum(CASE WHEN s_nationkey <= $AdvisorSuppMaxNation
+        |                       THEN 1 ELSE 0 END) AS BIGINT)
+        |  FROM supplier
+        |  UNION ALL
+        |  SELECT 'orders', CAST(count(*) AS BIGINT),
+        |         CAST(sum(CASE WHEN o_orderpriority =
+        |                  '$AdvisorOrderPriority'
+        |                       THEN 1 ELSE 0 END) AS BIGINT)
+        |  FROM orders),
+        |ord AS (
+        |  SELECT *, dim_filtered * 1000000 // dim_rows AS sel_ppm,
+        |         CAST(row_number() OVER (ORDER BY
+        |           dim_filtered * 1000000 // dim_rows, dim_name)
+        |           AS INTEGER) AS position
+        |  FROM prof),
+        |nf AS (SELECT CAST(count(*) AS BIGINT) AS n_fact FROM lineitem),
+        |act AS (
+        |  SELECT CAST(count(*) AS BIGINT) AS actual_final_rows
+        |  FROM lineitem l
+        |  JOIN part p ON l.l_partkey = p.p_partkey
+        |             AND p.p_size <= $AdvisorPartMaxSize
+        |  JOIN supplier s ON l.l_suppkey = s.s_suppkey
+        |               AND s.s_nationkey <= $AdvisorSuppMaxNation
+        |  JOIN orders o ON l.l_orderkey = o.o_orderkey
+        |             AND o.o_orderpriority = '$AdvisorOrderPriority'),
+        |sel AS (
+        |  SELECT position,
+        |         CAST(dim_filtered AS DOUBLE) / CAST(dim_rows AS DOUBLE)
+        |           AS s
+        |  FROM ord)
+        |SELECT o.position, o.dim_name, o.dim_rows, o.dim_filtered,
+        |       CAST(o.sel_ppm AS BIGINT) AS sel_ppm,
+        |       round(CASE o.position
+        |         WHEN 1 THEN CAST(nf.n_fact AS DOUBLE)
+        |           * (SELECT s FROM sel WHERE position = 1)
+        |         WHEN 2 THEN (CAST(nf.n_fact AS DOUBLE)
+        |           * (SELECT s FROM sel WHERE position = 1))
+        |           * (SELECT s FROM sel WHERE position = 2)
+        |         ELSE ((CAST(nf.n_fact AS DOUBLE)
+        |           * (SELECT s FROM sel WHERE position = 1))
+        |           * (SELECT s FROM sel WHERE position = 2))
+        |           * (SELECT s FROM sel WHERE position = 3)
+        |       END, 2) AS est_rows_after,
+        |       act.actual_final_rows
+        |FROM ord o CROSS JOIN nf CROSS JOIN act
+        |ORDER BY o.position""".stripMargin))
 }

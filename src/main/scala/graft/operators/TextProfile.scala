@@ -30,7 +30,10 @@ import graft.sources.Tables
   * bit-identical cross-engine. Readability constants (Flesch–Kincaid
   * 0.39/11.8/15.59, Flesch 206.835/1.015/84.6 — Kincaid et al. 1975,
   * PAPERS.md) are pinned literals parsed identically by both
-  * engines. */
+  * engines.
+  *
+  * Also here: the corpus novelty curve (q357).
+  */
 object TextProfile {
 
   /** Non-empty whitespace tokens of `text` (the corpus-wide tokenizer
@@ -284,6 +287,51 @@ object TextProfile {
       .orderBy("context_len")
   }
 
+  /** q357 — CORPUS NOVELTY CURVE: split the corpus into 10 equal-width
+    * doc-id ranges (the ingest-order proxy q343 uses) and measure how
+    * many NEVER-SEEN-BEFORE word-3-gram shingles each tranche
+    * contributes — the diminishing-returns curve behind "is crawling
+    * more of this source still buying new content?", the
+    * corpus-level companion to q289's OOV emergence (two halves) and
+    * q291's Heaps exponent (a fitted summary; this is the raw curve).
+    * Reuses the cached q32/q34 shingle table.
+    *
+    * Scale shape: one shingle-grain min fold (content key), a 10-row
+    * profile, cumulative via a grouping-less collect fold — no
+    * window. */
+  def q357NoveltyCurve(spark: SparkSession, dir: String): DataFrame = {
+    val ids = Tables.documents(spark, dir)
+      .agg(min(col("doc_id")).as("lo"), max(col("doc_id")).as("hi"))
+    val firstSeen = Dedup.shingles(spark, dir)
+      .crossJoin(broadcast(ids))
+      .select(col("shingle"), expr(
+        "least(9L, (doc_id - lo) * 10 div (hi - lo + 1))").as("bucket"))
+      .groupBy("shingle")
+      .agg(min(col("bucket")).as("first_bucket"))
+    val perBucket = spark.range(10)
+      .select(col("id").as("first_bucket"))
+      .join(firstSeen.groupBy("first_bucket")
+        .agg(count(lit(1)).as("new_shingles")), Seq("first_bucket"),
+        "left")
+      .withColumn("new_shingles", coalesce(col("new_shingles"), lit(0L)))
+    perBucket
+      .agg(expr("array_sort(collect_list(struct(first_bucket, new_shingles)))")
+        .as("a"))
+      .select(expr(
+        """inline(transform(a, (s, i) -> struct(
+          |  s.first_bucket AS bucket, s.new_shingles AS new_shingles,
+          |  aggregate(slice(a, 1, i + 1), 0L,
+          |            (acc, t) -> acc + t.new_shingles) AS cum_shingles,
+          |  aggregate(a, 0L, (acc, t) -> acc + t.new_shingles)
+          |    AS total_shingles)))""".stripMargin))
+      .select(col("bucket"), col("new_shingles"), col("cum_shingles"),
+        round(try_divide(col("new_shingles").cast("double"),
+          col("total_shingles")), 6).as("new_share"),
+        round(try_divide(col("cum_shingles").cast("double"),
+          col("total_shingles")), 6).as("cum_share"))
+      .orderBy("bucket")
+  }
+
   val defs: Seq[QueryDef] = Seq(
     QueryDef("q343_ingest_quality_trend", q343IngestQualityTrend _,
       """WITH docs AS (
@@ -494,5 +542,32 @@ object TextProfile {
         |       round(num / denx, 6) AS heaps_beta,
         |       round((num * num) / (denx * deny), 6) AS r2
         |FROM f WHERE k >= 2 AND denx <> 0.0 AND deny <> 0.0
-        |ORDER BY source""".stripMargin))
+        |ORDER BY source""".stripMargin),
+    QueryDef("q357_novelty_curve", q357NoveltyCurve _,
+      (s"WITH ${Dedup.shinglesCte},\n" +
+      """ids AS (SELECT min(doc_id) AS lo, max(doc_id) AS hi
+        |        FROM documents),
+        |fs AS (
+        |  SELECT shingle,
+        |         min(least(9, (doc_id - (SELECT lo FROM ids)) * 10
+        |             // ((SELECT hi FROM ids) - (SELECT lo FROM ids) + 1)))
+        |           AS first_bucket
+        |  FROM shingles GROUP BY 1),
+        |pb AS (
+        |  SELECT s.b AS bucket,
+        |         CAST(coalesce(count(fs.shingle), 0) AS BIGINT)
+        |           AS new_shingles
+        |  FROM generate_series(0, 9) s(b)
+        |  LEFT JOIN fs ON fs.first_bucket = s.b
+        |  GROUP BY 1),
+        |tot AS (SELECT CAST(sum(new_shingles) AS BIGINT) AS t FROM pb)
+        |SELECT bucket, new_shingles,
+        |       CAST(sum(new_shingles) OVER (ORDER BY bucket
+        |         ROWS UNBOUNDED PRECEDING) AS BIGINT) AS cum_shingles,
+        |       round(CAST(new_shingles AS DOUBLE) / (SELECT t FROM tot), 6)
+        |         AS new_share,
+        |       round(CAST(sum(new_shingles) OVER (ORDER BY bucket
+        |           ROWS UNBOUNDED PRECEDING) AS DOUBLE)
+        |         / (SELECT t FROM tot), 6) AS cum_share
+        |FROM pb ORDER BY bucket""".stripMargin)))
 }

@@ -369,7 +369,7 @@ object Streams {
     * (VERDICT r11 stretch #8, the q252/CUSUM playbook): arriving
     * (event_type, cents) rows fold incrementally into the per-type
     * bucket counts under the SAME pinned boundary ladder
-    * ([[graft.operators.Breadth10.DdBounds]]); bucket(c) =
+    * ([[graft.operators.SketchAlgebra.DdBounds]]); bucket(c) =
     * #{boundaries < c} via binary search — exact integer compares, so
     * state parity with the batch sketch is BIT-EXACT, not approximate
     * (StreamingQuantileSpec pins it). Emits the full count vector per
@@ -380,7 +380,7 @@ object Streams {
     import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout}
     val sess = values.sparkSession
     import sess.implicits._
-    val bounds = graft.operators.Breadth10.DdBounds.toArray
+    val bounds = graft.operators.SketchAlgebra.DdBounds.toArray
     val width = bounds.length + 1
     values.select(col("event_type"), col("cents").cast("long"))
       .as[(String, Long)]
@@ -425,7 +425,7 @@ object Streams {
     import org.apache.spark.sql.streaming.GroupStateTimeout
     val sess = values.sparkSession
     import sess.implicits._
-    val bounds = graft.operators.Breadth10.DdBounds.toArray
+    val bounds = graft.operators.SketchAlgebra.DdBounds.toArray
     values.select(col("cents").cast("long")).as[Long]
       .groupByKey { c =>
         val i = java.util.Arrays.binarySearch(bounds, c)
@@ -491,7 +491,7 @@ object Streams {
     * the running DATA CARD (rows_in, gate rows_out, exact-dedup
     * rows_out, tokens_out) is a pure fold of the emitted state. The
     * gate is q383's five stateless rules
-    * ([[graft.operators.Breadth11.funnelGateCols]] — the SAME column
+    * ([[graft.operators.Curation.funnelGateCols]] — the SAME column
     * expressions batch stage 1 runs); the canonical per hash is the
     * MIN gate-surviving doc_id seen so far (not merely first-arrival),
     * so the final state is bit-equal to batch q389's min-doc_id
@@ -509,7 +509,7 @@ object Streams {
     import org.apache.spark.sql.streaming.GroupStateTimeout
     val sess = docs.sparkSession
     import sess.implicits._
-    graft.operators.Breadth11.funnelGateCols(docs)
+    graft.operators.Curation.funnelGateCols(docs)
       .select(col("doc_id").cast("long"), md5(col("text")).as("th"),
         col("n_words").cast("long"),
         (col("r1") && col("r2") && col("r3") && col("r4") &&

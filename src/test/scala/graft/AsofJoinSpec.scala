@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.operators.{Breadth, Breadth2}
+import graft.operators.Relational
 import graft.plans.{AsofJoin, AsofJoinExec}
 
 /** The custom as-of join operator: semantics on constructed edges,
@@ -56,8 +56,8 @@ class AsofJoinSpec extends SparkTestBase {
   }
 
   test("q70 native as-of equals the q30 union+window composition") {
-    val native = Breadth2.q70AsofNative(spark, sf).collect().map(_.toString)
-    val composed = Breadth.q30AsofJoin(spark, sf).collect().map(_.toString)
+    val native = Relational.q70AsofNative(spark, sf).collect().map(_.toString)
+    val composed = Relational.q30AsofJoin(spark, sf).collect().map(_.toString)
     assert(native.sameElements(composed))
   }
 
@@ -214,7 +214,7 @@ class AsofJoinSpec extends SparkTestBase {
       }
       ck -> ((os.length.toLong, consistent, maxV))
     }
-    val got = graft.operators.Breadth3.q128Scd2PitJoin(spark, sf)
+    val got = graft.operators.Audit.q128Scd2PitJoin(spark, sf)
       .collect()
       .map(r => r.getLong(0) ->
         ((r.getLong(1), r.getLong(2), r.getInt(3)))).toMap
@@ -233,7 +233,7 @@ class AsofJoinSpec extends SparkTestBase {
     // scans both sides are already in one partition and need no exchange
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     val plan =
-      try Breadth2.q70AsofNative(spark, MultiSplitSf(sf)).queryExecution.executedPlan
+      try Relational.q70AsofNative(spark, MultiSplitSf(sf)).queryExecution.executedPlan
       finally spark.conf.set("spark.sql.adaptive.enabled", "true")
     val asofNodes = plan.collect { case e: AsofJoinExec => e }
     assert(asofNodes.nonEmpty, s"no AsofJoinExec in:\n$plan")

@@ -11,9 +11,6 @@ import graft.operators.{Cuped => C}
   * corpus only yields ~0.5%). */
 class CupedSpec extends SparkTestBase {
 
-  private def round6(x: Double): Double =
-    BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
-
   /** The q167 arithmetic over per-user (x, y, arm) triples — the same
     * fixed expression tree, driven from plain Scala sums. */
   private def cuped(rows: Seq[(Long, Long, Boolean)])
@@ -63,10 +60,10 @@ class CupedSpec extends SparkTestBase {
     val (na, nb, theta, tRaw, tCuped, vr) = cuped(perUser)
     val r = C.q167Cuped(spark, sf).collect().head
     assert(r.getLong(0) == na && r.getLong(1) == nb)
-    assert(r.getDouble(2) == round6(theta), "theta")
-    assert(r.getDouble(3) == round6(tRaw), "t_raw")
-    assert(r.getDouble(4) == round6(tCuped), "t_cuped")
-    assert(r.getDouble(5) == round6(vr), "var_reduction")
+    assert(r.getDouble(2) == r6(theta), "theta")
+    assert(r.getDouble(3) == r6(tRaw), "t_raw")
+    assert(r.getDouble(4) == r6(tCuped), "t_cuped")
+    assert(r.getDouble(5) == r6(vr), "var_reduction")
   }
 
   test("a strongly pre-correlated metric yields a large reduction and " +

@@ -1,5 +1,7 @@
 package graft
 
+import java.nio.file.{Files, Paths}
+
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.types.StructType
 
@@ -22,15 +24,34 @@ class DegenerateInputSpec extends SparkTestBase {
     "q163_max_cover" -> Seq.empty[Row],
     // no corpus, no exposure: coverage is 0 / 0 and the slot sums are
     // over no rows, all NULL
-    "q350_retrieval_exposure" -> Seq(Row(0L, 0L, null, null, null)))
+    "q350_retrieval_exposure" -> Seq(Row(0L, 0L, null, null, null)),
+    // no events: every funnel step counts 0 users, and a conversion
+    // over a step of 0 users is NULL, as is the first step's
+    "q82_funnel" -> Seq("1_view", "2_click", "3_purchase")
+      .map(Row(_, 0L, null)),
+    // no events, no sketch to read: no heavy hitters
+    "q105_topk_sketch_union" -> Seq.empty[Row],
+    // no corpus: ten empty buckets, shares of a total of 0 are NULL
+    "q357_novelty_curve" -> (0L until 10L).map(Row(_, 0L, 0L, null, null)),
+    // no line items: every arm samples and joins 0 rows, and the
+    // relative error against 0 actual rows is NULL
+    "q381_sample_cardinality" ->
+      Seq("part_and_supplier", "part_filter", "supplier_filter")
+        .map(Row(_, 0L, 0L, 0L, null)))
 
-  /** The zero-row `documents` and `embeddings` tables, in `dir`. */
+  /** Zero-row fact tables (`events`, `orders`, `lineitem`, `documents`,
+    * `embeddings`) in `dir`, next to the dimension tables of [[sf]]. */
   private def writeEmpty(dir: String): Unit = {
     def write(table: String, schema: StructType): Unit =
       spark.createDataFrame(java.util.Collections.emptyList[Row](), schema)
         .write.parquet(s"$dir/$table.parquet")
+    write("events", Tables.eventsSchema)
+    write("orders", Tables.ordersSchema)
+    write("lineitem", Tables.lineitemSchema)
     write("documents", Tables.documentsSchema)
     write("embeddings", Tables.embeddingsSchema)
+    for (t <- Seq("region", "nation", "customer", "supplier", "part"))
+      Files.copy(Paths.get(s"$sf/$t.parquet"), Paths.get(s"$dir/$t.parquet"))
   }
 
   for (q <- (Refusals.keys ++ Expected.keys).toSeq.sorted) {

@@ -53,4 +53,17 @@ class SessionSetupSpec extends SparkTestBase {
       }
     assert(offenders.isEmpty, offenders.mkString("\n"))
   }
+
+  test("operator modules and specs are named by domain, not by the " +
+      "round that added them") {
+    def names(dir: String): Seq[String] =
+      Files.list(Paths.get(dir)).iterator().asScala
+        .map(_.getFileName.toString).toSeq.sorted
+    val roundNamed =
+      names("src/main/scala/graft/operators")
+        .filter(_.matches("""Breadth\w*\.scala""")) ++
+      names("src/test/scala/graft")
+        .filter(_.matches("""(Round\d+[a-z]?|Breadth\w*)Spec\.scala"""))
+    assert(roundNamed.isEmpty, roundNamed.mkString(", "))
+  }
 }

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.operators.{Breadth3, Curation}
+import graft.operators.{Curation, Relational, SketchAlgebra}
 import graft.sources.Tables
 
 /** Invariants for the round-4 additions: bloom-pruned decontamination
@@ -67,7 +67,7 @@ class SketchChunkSpec extends SparkTestBase {
   }
 
   test("q105 merged sketch counts are exact under tracked capacity") {
-    val got = Breadth3.q105TopkSketchUnion(spark, sf).collect()
+    val got = SketchAlgebra.q105TopkSketchUnion(spark, sf).collect()
       .map(r => (r.getString(0), r.getLong(1)))
     val exact = Tables.events(spark, sf)
       .groupBy("event_type").agg(count(lit(1)).as("n")).collect()
@@ -169,24 +169,15 @@ class SketchChunkSpec extends SparkTestBase {
   }
 
   test("q116 winsorize matches a scala type-7 percentile recompute") {
-    // independent type-7 interpolated percentile (what Spark
-    // `percentile` and DuckDB `quantile_cont` both compute)
-    def pct(xs: Array[Double], p: Double): Double = {
-      val s = xs.sorted
-      val rank = p * (s.length - 1)
-      val lo = rank.toInt
-      val frac = rank - lo
-      if (lo + 1 < s.length) s(lo) + frac * (s(lo + 1) - s(lo)) else s(lo)
-    }
     val byType = Tables.events(spark, sf)
       .select("event_type", "value").collect()
       .map(r => (r.getString(0), r.getDouble(1)))
       .groupBy(_._1).map { case (t, xs) => t -> xs.map(_._2) }
-    val got = Breadth3.q116Winsorize(spark, sf).collect()
+    val got = Relational.q116Winsorize(spark, sf).collect()
     assert(got.map(_.getString(0)).toSet == byType.keySet)
     got.foreach { r =>
       val xs = byType(r.getString(0))
-      val (p01, p99) = (pct(xs, 0.01), pct(xs, 0.99))
+      val (p01, p99) = (pct(xs.toSeq, 0.01), pct(xs.toSeq, 0.99))
       assert(r.getLong(1) == xs.length)
       assert(r.getLong(2) == xs.count(_ < p01), "n_clipped_lo")
       assert(r.getLong(3) == xs.count(_ > p99), "n_clipped_hi")

@@ -52,6 +52,43 @@ abstract class SparkTestBase extends AnyFunSuite {
   lazy val spark: SparkSession = SparkTestSession.spark
   val sf: String = "/root/testdata/sf0.001"
 
+  /** `x` rounded half-up to `n` decimals, as Spark's and DuckDB's
+    * `round` do. */
+  protected def rN(x: Double, n: Int): Double =
+    BigDecimal(x).setScale(n, BigDecimal.RoundingMode.HALF_UP).toDouble
+  protected def r2(x: Double): Double = rN(x, 2)
+  protected def r4(x: Double): Double = rN(x, 4)
+  protected def r6(x: Double): Double = rN(x, 6)
+  /** `x` rounded half-up to a whole number. */
+  protected def rl(x: Double): Long =
+    BigDecimal(x).setScale(0, BigDecimal.RoundingMode.HALF_UP).toLong
+  /** `x` in millionths, rounded half-up: the queries' `*_micro` columns. */
+  protected def micro(x: Double): Long = rl(x * 1e6)
+
+  /** The words of `text`: trimmed, split on single spaces, empty
+    * strings dropped. */
+  protected def words(text: String): Seq[String] =
+    text.trim.split(" ", -1).toSeq.filter(_.nonEmpty)
+
+  /** Exact type-7 percentile (Spark `percentile`, DuckDB
+    * `quantile_cont`): sorted, position p * (n - 1), linear
+    * interpolation between its two neighbours. */
+  protected def pct(xs: Seq[Long], p: Double): Double = {
+    val s = xs.sorted
+    val pos = p * (s.length - 1)
+    val lo = pos.toInt
+    if (lo + 1 < s.length) s(lo) + (pos - lo) * (s(lo + 1) - s(lo))
+    else s(lo).toDouble
+  }
+  protected def pct(xs: Seq[Double], p: Double)(
+      implicit d: DummyImplicit): Double = {
+    val s = xs.sorted
+    val pos = p * (s.length - 1)
+    val lo = pos.toInt
+    if (lo + 1 < s.length) s(lo) + (pos - lo) * (s(lo + 1) - s(lo))
+    else s(lo)
+  }
+
   /** Runs `body` on a fresh temp directory named after `prefix`, and
     * deletes the directory afterwards, whether `body` passed or not. */
   protected def withTempDir[T](prefix: String)(body: Path => T): T = {

@@ -1,9 +1,9 @@
 package graft
 
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.functions._
 
-import graft.operators.Breadth11
+import graft.operators.TimeSeries
 import graft.streaming.Streams
 
 /** Streaming twin of the q382 changepoint's input profile (the
@@ -48,7 +48,7 @@ class StreamingChangepointSpec extends SparkTestBase {
         assert(state.toMap == expect, s"state parity after $day")
       }
       // final-state argmax == the registered q382 rows
-      val got = Breadth11.q382Changepoint(spark, sf).collect()
+      val got = TimeSeries.q382Changepoint(spark, sf).collect()
       val byType = state.toSeq.groupBy(_._1._1).view
         .mapValues(_.sortBy(_._1._2).map(_._2)).toMap
       assert(got.length == byType.size)
@@ -81,7 +81,7 @@ class StreamingChangepointSpec extends SparkTestBase {
       // registered q388 rows (both split days, all three segment
       // means, both gains), proving the two-level segmentation is
       // incrementally maintainable end-to-end.
-      val got2 = Breadth11.q388Changepoint2(spark, sf).collect()
+      val got2 = TimeSeries.q388Changepoint2(spark, sf).collect()
       assert(got2.length ==
         byType.count(_._2.length > 2), "q388 row count")
       got2.foreach { r =>

@@ -1,9 +1,9 @@
 package graft
 
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.functions._
 
-import graft.operators.{Breadth11, Materialize}
+import graft.operators.{Curation, Materialize}
 import graft.streaming.Streams
 
 /** Streaming twin of q389's incremental prefix (VERDICT r14 #8
@@ -31,7 +31,7 @@ class StreamingMaterializeSpec extends SparkTestBase {
         col("n_chars").cast("long"))
       .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2)))
     // batch gate truth (the oracle-checked q383 exprs), keyed by doc
-    val gates = Breadth11.funnelGateCols(docs)
+    val gates = Curation.funnelGateCols(docs)
       .select(col("doc_id").cast("long"), md5(col("text")),
         col("n_words"),
         col("r1") && col("r2") && col("r3") && col("r4") && col("r5"))

@@ -1,9 +1,9 @@
 package graft
 
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.functions._
 
-import graft.operators.Breadth10
+import graft.operators.SketchAlgebra
 import graft.streaming.Streams
 
 /** Streaming twin of the q375 DDSketch quantile histogram (VERDICT
@@ -29,9 +29,9 @@ class StreamingQuantileSpec extends SparkTestBase {
     // independent batch histogram: plain Scala count of boundaries < c
     val expCounts: Map[String, Seq[Long]] = events.groupBy(_.event_type)
       .map { case (t, rows) =>
-        val counts = Array.fill(Breadth10.DdBounds.length + 1)(0L)
+        val counts = Array.fill(SketchAlgebra.DdBounds.length + 1)(0L)
         rows.foreach { r =>
-          counts(Breadth10.DdBounds.count(_ < r.cents)) += 1L
+          counts(SketchAlgebra.DdBounds.count(_ < r.cents)) += 1L
         }
         t -> counts.toSeq
       }
@@ -62,7 +62,7 @@ class StreamingQuantileSpec extends SparkTestBase {
         assert(streamed(t) == exp, s"type $t state diverged")
       }
       // quantile read-off from the final state == registered q375
-      val q375 = Breadth10.q375DdsketchQuantiles(spark, sf).collect()
+      val q375 = SketchAlgebra.q375DdsketchQuantiles(spark, sf).collect()
       q375.foreach { r =>
         val (t, pm) = (r.getString(0), r.getInt(1))
         val counts = streamed(t)
@@ -73,7 +73,7 @@ class StreamingQuantileSpec extends SparkTestBase {
           cum += counts(i); cum >= target
         }.get
         assert(bucket == r.getInt(2), s"$t p$pm bucket")
-        assert(Breadth10.DdMids(bucket) == r.getLong(3),
+        assert(SketchAlgebra.DdMids(bucket) == r.getLong(3),
           s"$t p$pm estimate")
       }
     } finally q.stop()

@@ -1,9 +1,9 @@
 package graft
 
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.functions._
 
-import graft.operators.Breadth10
+import graft.operators.SketchAlgebra
 import graft.streaming.Streams
 
 /** Streaming twin of the q380 day-prefix quantile trajectory (VERDICT
@@ -27,7 +27,7 @@ class StreamingTrajectorySpec extends SparkTestBase {
         expr("cast(round(value * 100, 0) as bigint)").as("cents"))
       .collect().map(r => (r.getString(0), r.getLong(1)))
     val byDay = rows.groupBy(_._1).toSeq.sortBy(_._1)
-    val q380 = Breadth10.q380QuantileTrajectory(spark, sf).collect()
+    val q380 = SketchAlgebra.q380QuantileTrajectory(spark, sf).collect()
       .map(r => r.getDate(0).toString ->
         ((r.getLong(1), r.getInt(2), r.getLong(3)))).toMap
     assert(q380.keySet == byDay.map(_._1).toSet,
@@ -53,7 +53,7 @@ class StreamingTrajectorySpec extends SparkTestBase {
         }
         // day d's merged histogram == the running state right now
         val n = state.values.sum
-        val target = (Breadth10.TrajPerMille * n + 999) / 1000
+        val target = (SketchAlgebra.TrajPerMille * n + 999) / 1000
         var cum = 0L
         val bucket = state.keys.toSeq.sorted.find { b =>
           cum += state(b); cum >= target
@@ -61,7 +61,7 @@ class StreamingTrajectorySpec extends SparkTestBase {
         val (expN, expBucket, expCents) = q380(day)
         assert(n == expN, s"$day n_cum")
         assert(bucket == expBucket, s"$day p95 bucket")
-        assert(Breadth10.DdMids(bucket) == expCents, s"$day p95 cents")
+        assert(SketchAlgebra.DdMids(bucket) == expCents, s"$day p95 cents")
       }
     } finally q.stop()
   }

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.operators.{Breadth, XmlShred}
+import graft.operators.{Relational, XmlShred}
 
 /** XML shredding parity (S1-S3) against the reference's document shapes,
   * write-mode/DDL surface (S4/S5/S7/S8), and the approx-distinct error
@@ -105,7 +105,7 @@ class XmlIngestSpec extends SparkTestBase {
   }
 
   test("approx_count_distinct accuracy contract holds (A5)") {
-    val rows = Breadth.q49ApproxDistinct(spark, sf).collect()
+    val rows = Relational.q49ApproxDistinct(spark, sf).collect()
     assert(rows.nonEmpty)
     rows.foreach { r =>
       assert(r.getBoolean(2),
