@@ -149,285 +149,4 @@ class AuditAffinitySpec extends SparkTestBase {
       assert(out(ch)._2 == xs.length.toLong, s"last-touch $ch")
     }
   }
-
-  test("q239 FD audit equals a sequential g3 recompute and separates " +
-      "the true dependencies from the false ones") {
-    val out = Audit.q239FdAudit(spark, sf).collect()
-      .map(r => (r.getString(0), r.getString(1), r.getString(2)) ->
-        ((r.getLong(3), r.getLong(4), r.getLong(5), r.getLong(6)),
-          (r.getDouble(7), r.getBoolean(8)))).toMap
-    assert(out.size == Audit.FdCandidates.size)
-    Audit.FdCandidates.foreach { case (rel, lhs, rhs) =>
-      val rows = (rel match {
-        case "nation" => Tables.nation(spark, sf)
-        case "part" => Tables.part(spark, sf)
-        case "customer" => Tables.customer(spark, sf)
-        case "orders" => Tables.orders(spark, sf)
-        case "lineitem" => Tables.lineitem(spark, sf)
-        case "events" => Tables.events(spark, sf)
-      }).select(col(lhs).cast("string"), col(rhs).cast("string"))
-        .collect().map(r => (r.getString(0), r.getString(1)))
-      val byA = rows.groupBy(_._1)
-      val nRows = rows.length.toLong
-      val nGroups = byA.size.toLong
-      val fixes = byA.values.map { g =>
-        g.length.toLong - g.groupBy(_._2).values.map(_.length).max
-      }
-      val rowsToFix = fixes.sum
-      val violating = fixes.count(_ > 0L).toLong
-      assert(out((rel, lhs, rhs)) == (((nRows, nGroups, violating,
-        rowsToFix), (r6(rowsToFix.toDouble / nRows.toDouble),
-        rowsToFix == 0L))), s"$rel.$lhs->$rhs diverged")
-    }
-    // the fixture mix: key-style and genuine FDs hold, the rest fail
-    assert(out(("nation", "n_name", "n_regionkey"))._2._2)
-    assert(out(("orders", "o_orderkey", "o_orderstatus"))._2._2)
-    assert(!out(("events", "event_type", "user_id"))._2._2)
-  }
-
-  test("q257 cardinality calibration equals a sequential profile " +
-      "recompute, and key-FK joins have q-error 1") {
-    val out = Audit.q257CardCalibration(spark, sf).collect()
-      .map(r => (r.getString(0), r.getString(1)) ->
-        ((r.getLong(2), r.getLong(3), r.getLong(4), r.getLong(5)),
-          (r.getDouble(6), r.getLong(7),
-            if (r.isNullAt(8)) None else Some(r.getDouble(8))))).toMap
-    def keys(rel: String, k: String): Seq[Long] = (rel match {
-      case "customer" => Tables.customer(spark, sf)
-      case "orders" => Tables.orders(spark, sf)
-      case "lineitem" => Tables.lineitem(spark, sf)
-      case "part" => Tables.part(spark, sf)
-      case "supplier" => Tables.supplier(spark, sf)
-      case "events" => Tables.events(spark, sf)
-    }).select(col(k).cast("long")).collect().map(_.getLong(0)).toSeq
-    Audit.CardJoins.foreach { case (ra, ka, rb, kb) =>
-      val a = keys(ra, ka); val b = keys(rb, kb)
-      val pa = a.groupBy(identity).map { case (k, v) => k -> v.size.toLong }
-      val pb = b.groupBy(identity).map { case (k, v) => k -> v.size.toLong }
-      val (na, ndva) = (a.length.toLong, pa.size.toLong)
-      val (nb, ndvb) = (b.length.toLong, pb.size.toLong)
-      val actual = pa.map { case (k, ca) =>
-        ca * pb.getOrElse(k, 0L) }.sum
-      val est = na.toDouble * nb.toDouble / math.max(ndva, ndvb).toDouble
-      val qe = if (actual > 0)
-        Some(r4(math.max(est / actual.toDouble, actual.toDouble / est)))
-      else None
-      assert(out((s"$ra⋈$rb", ka)) == (((na, nb, ndva, ndvb),
-        (r2(est), actual, qe))), s"join $ra⋈$rb diverged")
-    }
-    // the l_orderkey⋈o_orderkey join is key-complete on the PK side:
-    // the uniform estimate is exact there
-    assert(out(("lineitem⋈orders", "l_orderkey"))._2._3.contains(1.0))
-  }
-
-  test("q282 rules equal a sequential a-priori replay and respect " +
-      "the confidence/lift laws") {
-    val items = Tables.lineitem(spark, sf)
-      .select(col("l_orderkey"), col("l_partkey")).distinct()
-      .collect().map(r => (r.getLong(0), r.getLong(1)))
-    val nBaskets = items.map(_._1).distinct.length.toLong
-    val itemSup = items.groupBy(_._2).map { case (p, xs) =>
-      p -> xs.length.toLong }
-    val pairSup = items.groupBy(_._1).toSeq.flatMap { case (_, xs) =>
-      val ps = xs.map(_._2).sorted
-      for (i <- ps.indices; j <- (i + 1) until ps.length)
-        yield (ps(i), ps(j))
-    }.groupBy(identity).map { case (k, v) => k -> v.size.toLong }
-    val triSup = items.groupBy(_._1).toSeq.flatMap { case (_, xs) =>
-      val ps = xs.map(_._2).sorted
-      for (i <- ps.indices; j <- (i + 1) until ps.length;
-           k <- (j + 1) until ps.length)
-        yield (ps(i), ps(j), ps(k))
-    }.groupBy(identity).map { case (k, v) => k -> v.size.toLong }
-      .filter(_._2 >= Affinity.TriMinSup)
-    val rules = triSup.toSeq.flatMap { case ((a, b, c), sup) =>
-      Seq((a, b, c, sup, pairSup((a, b))),
-        (a, c, b, sup, pairSup((a, c))),
-        (b, c, a, sup, pairSup((b, c))))
-    }.map { case (a1, a2, cs, sup, supAnt) =>
-      val conf = rN(sup.toDouble / supAnt, 6)
-      val lift = rN(sup.toDouble / supAnt * nBaskets.toDouble /
-        itemSup(cs), 6)
-      (a1, a2, cs, sup, supAnt, itemSup(cs), conf, lift)
-    }.sortBy(t => (-t._8, -t._7, t._1, t._2, t._3))
-      .take(Affinity.TopRules)
-    val got = Affinity.q282AssociationRules(spark, sf).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3),
-        r.getLong(4), r.getLong(5), r.getDouble(6), r.getDouble(7)))
-    assert(got.toSeq == rules, "rule list diverged")
-    got.foreach { case (_, _, _, sup, supAnt, itemN, conf, lift) =>
-      assert(sup <= supAnt && conf <= 1.0 + 1e-9 && conf > 0)
-      // lift = conf · nBaskets / item_n, re-formed from the columns
-      assert(lift == rN(conf * nBaskets / itemN, 6) ||
-        math.abs(lift - sup.toDouble / supAnt * nBaskets / itemN) < 1e-6)
-      assert(lift > 0)
-    }
-  }
-
-  test("q290 selectivity calibration equals a sequential histogram " +
-      "replay and the boundary probes anchor the estimate") {
-    val cents = Tables.lineitem(spark, sf)
-      .select(expr("cast(round(l_extendedprice * 100, 0) as bigint)"))
-      .collect().map(_.getLong(0)).sorted
-    val n = cents.length
-    val bs = (0 to 10).map(j => pct(cents.toSeq, j / 10.0))
-    val got = Audit.q290SelectivityCalibration(spark, sf).collect()
-    assert(got.length == 10)
-    got.foreach { r =>
-      val j = r.getInt(0)
-      val (lo, hi) = (bs(j - 1), bs(j))
-      val m = (lo + hi) / 2
-      val est =
-        if (hi > lo) (j - 1 + (m - lo) / (hi - lo)) / 10.0
-        else (j.toDouble - 0.5) / 10.0
-      val actual = cents.count(_.toDouble <= m).toDouble / n
-      assert(r.getDouble(1) == rN(lo / 100, 2), s"b$j lo")
-      assert(r.getDouble(2) == rN(hi / 100, 2), s"b$j hi")
-      assert(r.getDouble(3) == rN(est, 8), s"b$j est")
-      assert(r.getDouble(4) == rN(actual, 8), s"b$j actual")
-      assert(r.getDouble(5) == rN(math.abs(est - actual), 8), s"b$j err")
-      // equi-depth: the exact mass below boundary j is ~j/10 by
-      // construction, so mid-bucket actuals sit inside the bucket
-      assert(actual >= (j - 1) / 10.0 - 1e-9 &&
-        actual <= j / 10.0 + 1e-9, s"b$j bucket mass")
-    }
-  }
-
-  test("q328 salt advisor equals a sequential replay") {
-    val li = Tables.lineitem(spark, sf)
-      .select("l_orderkey", "l_partkey", "l_suppkey").collect()
-    val keyed: Map[String, Seq[Long]] = Map(
-      "l_orderkey" -> li.map(_.getLong(0)).toSeq,
-      "l_partkey" -> li.map(_.getLong(1)).toSeq,
-      "l_suppkey" -> li.map(_.getLong(2)).toSeq)
-    val got = Audit.q328SaltAdvisor(spark, sf).collect()
-    assert(got.map(_.getString(0)).toSeq == keyed.keys.toSeq.sorted)
-    got.foreach { r =>
-      val vs = keyed(r.getString(0))
-      val hist = vs.groupBy(identity).map(_._2.size.toLong)
-      val maxN = hist.max
-      val n = vs.length.toLong
-      assert(r.getLong(1) == n && r.getLong(2) == hist.size.toLong)
-      assert(r.getLong(3) == maxN)
-      assert(r.getDouble(4) == rN(maxN.toDouble / n, 8))
-      assert(r.getLong(5) ==
-        (maxN * Audit.SaltParallelism + n - 1) / n)
-      assert(r.getLong(5) >= 1)
-    }
-  }
-
-  test("q337 freshness matrix equals direct per-table counts") {
-    val got = Audit.q337FreshnessMatrix(spark, sf).collect()
-      .map(r => r.getString(0) -> r).toMap
-    assert(got.size == 8)
-    assert(got("lineitem").getLong(1) ==
-      Tables.lineitem(spark, sf).count())
-    assert(got("events").getLong(1) == Tables.events(spark, sf).count())
-    assert(got("customer").getLong(1) ==
-      Tables.customer(spark, sf).count())
-    // dated tables carry staleness; timeless ones NULL
-    assert(!got("lineitem").isNullAt(3) && !got("events").isNullAt(3))
-    assert(got("customer").isNullAt(2) && got("customer").isNullAt(3))
-    // the freshest dated table has staleness zero
-    assert(Seq("lineitem", "orders", "events")
-      .map(t => got(t).getInt(3)).min == 0)
-  }
-
-  test("q346 basket-size profile equals a sequential replay and " +
-      "pins the bounded-basket claim") {
-    val sizes = Tables.lineitem(spark, sf)
-      .select("l_orderkey", "l_partkey").collect()
-      .map(r => (r.getLong(0), r.getLong(1))).distinct
-      .groupBy(_._1).map(_._2.length.toLong).toSeq
-    val n = sizes.length.toLong
-    val m = sizes.sum.toDouble / n
-    val varK = (sizes.map(k => BigDecimal(k) * BigDecimal(k)).sum
-      .toDouble - sizes.sum.toDouble * m) / n
-    val got = Affinity.q346BasketSizeProfile(spark, sf).collect()
-    assert(got.map(_.getLong(1)).sum == n)
-    got.foreach { r =>
-      val cnt = sizes.count(_ == r.getLong(0)).toLong
-      assert(r.getLong(1) == cnt)
-      assert(r.getDouble(2) == rN(cnt.toDouble / n, 6))
-      assert(r.getDouble(3) == rN(m, 4))
-      assert(r.getDouble(4) == rN(varK / m, 6))
-    }
-    // the claim the affinity scaladocs rest on: baskets stay small
-    assert(got.map(_.getLong(0)).max <= 16,
-      "basket-size bound drifted — revisit the a-priori cost claims")
-  }
-
-  test("q353 Benford audit covers all 9 digits and chi2 terms match " +
-      "a recompute") {
-    val rows = Audit.q353BenfordAudit(spark, sf).collect()
-    assert(rows.map(_.getInt(0)).toSeq == (1 to 9))
-    val n = rows.map(_.getLong(1)).sum
-    rows.foreach { r =>
-      val nd = r.getLong(1)
-      val e = n.toDouble * Audit.BenfordPpm(r.getInt(0) - 1) / 1e6
-      assert(r.getLong(4) ==
-        math.round((nd - e) * (nd - e) / e * 1e6),
-        s"digit ${r.getInt(0)} chi2 diverged")
-    }
-  }
-
-  test("q367 penny proration: every order reconciles exactly and the " +
-      "aggregate matches a sequential allocator") {
-    val row = Audit.q367PennyProration(spark, sf).collect().head
-    assert(row.getBoolean(3), "some order did not reconcile to the penny")
-    val lines = Tables.lineitem(spark, sf)
-      .select(col("l_orderkey"), col("l_linenumber"),
-        expr("cast(round(l_extendedprice * 100, 0) as bigint)"))
-      .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2)))
-    val totals = Tables.orders(spark, sf)
-      .select(col("o_orderkey"),
-        expr("cast(round(o_totalprice * 100, 0) as bigint)"))
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    var topped = 0L
-    lines.groupBy(_._1).foreach { case (ok, g) =>
-      val total = totals(ok)
-      val sumL = g.map(_._3).sum
-      // duplicate (order, linenumber) rows exist in this corpus — rank
-      // by INDEX, never by a Set of line numbers
-      val based = g.map { case (_, ln, c) =>
-        (ln, total * c / sumL, total * c % sumL)
-      }.zipWithIndex
-      val short = total - based.map(_._1._2).sum
-      val winners = based
-        .sortBy { case ((ln, _, rem), i) => (-rem, ln, i) }
-        .take(short.toInt).map(_._2).toSet
-      topped += winners.size
-      val alloc = based.map { case ((_, b, _), i) =>
-        b + (if (winners(i)) 1L else 0L) }.sum
-      assert(alloc == total, s"order $ok off by ${total - alloc}")
-    }
-    assert(row.getLong(2) == topped)
-    // 27 line-less orders exist at sf0.001 — the audit covers orders
-    // WITH lines (the allocation subjects)
-    assert(row.getLong(0) == lines.map(_._1).distinct.length.toLong)
-  }
-
-  test("q371 duplicate-invoice scan equals a sequential pair recompute") {
-    val row = Audit.q371DuplicateInvoice(spark, sf).collect().head
-    val ords = Tables.orders(spark, sf)
-      .select(col("o_custkey"),
-        expr("cast(round(o_totalprice * 100, 0) as bigint)"),
-        col("o_orderkey"), to_date(col("o_orderdate"))).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
-        r.getDate(3).toLocalDate))
-    val pairs = ords.groupBy(o => (o._1, o._2)).toSeq.flatMap {
-      case (_, g) =>
-        g.toSeq.flatMap(a => g.toSeq
-          .filter(b => a._3 < b._3 &&
-            math.abs(java.time.temporal.ChronoUnit.DAYS
-              .between(a._4, b._4)) <= Audit.DupInvoiceWindowDays)
-          .map(b => (a, b)))
-    }
-    val held = pairs.map { case (a, b) =>
-      if (b._4.isAfter(a._4) || (b._4 == a._4 && b._3 > a._3)) b else a
-    }.distinct
-    assert(row.getLong(0) == pairs.length.toLong)
-    assert(row.getLong(1) == held.length.toLong)
-    assert(row.getLong(2) == held.map(_._2).sum)
-  }
 }

@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.{Breadth2, Curation, DedupClusters}
+import graft.operators.{Curation, DedupClusters, Relational, TextOps}
 
 /** Semantic invariants for the second-wave relational breadth and the
   * corpus-curation operators (their value-level correctness is
@@ -9,11 +9,11 @@ import graft.operators.{Breadth2, Curation, DedupClusters}
 class Breadth2CurationSpec extends SparkTestBase {
 
   test("q54 pivot x q55 unpivot: reshaping preserves totals") {
-    val pivoted = Breadth2.q54Pivot(spark, sf).collect()
+    val pivoted = Relational.q54Pivot(spark, sf).collect()
     assert(pivoted.nonEmpty)
     // every year row carries 4 quarter columns; their sum equals the
     // year total from the long-form rollup over the same orders measure
-    val longForm = graft.operators.Breadth.q17Rollup(spark, sf)
+    val longForm = Relational.q17Rollup(spark, sf)
       .collect()
       .filter(r => r.getInt(4) == 0 && r.getInt(5) == 0) // detail rows
       .groupBy(_.getInt(0)).view
@@ -28,21 +28,21 @@ class Breadth2CurationSpec extends SparkTestBase {
   }
 
   test("q56 percentiles are monotone non-decreasing") {
-    Breadth2.q56Percentiles(spark, sf).collect().foreach { r =>
+    Relational.q56Percentiles(spark, sf).collect().foreach { r =>
       val ps = (1 to 4).map(r.getDouble)
       assert(ps == ps.sorted, s"non-monotone percentiles $ps")
     }
   }
 
   test("q62 ntile assigns near-balanced quartiles covering 1..4") {
-    val rows = Breadth2.q62Ntile(spark, sf).collect()
+    val rows = Relational.q62Ntile(spark, sf).collect()
     val byQ = rows.groupBy(_.getInt(2)).view.mapValues(_.size)
     assert(byQ.keySet == Set(1, 2, 3, 4))
     assert(byQ.values.max - byQ.values.min <= 1, s"unbalanced $byQ")
   }
 
   test("q61 trailing 7d >= daily revenue and matches a scala recompute") {
-    val rows = Breadth2.q61RangeFrame(spark, sf).collect()
+    val rows = Relational.q61RangeFrame(spark, sf).collect()
       .map(r => (r.getDate(0).toLocalDate.toEpochDay,
         r.getDouble(1), r.getDouble(2)))
     rows.foreach { case (_, rev, t7) => assert(t7 >= rev - 1e-9) }
@@ -212,17 +212,11 @@ class Breadth2CurationSpec extends SparkTestBase {
 
   test("q122 length buckets: quartile edges, waste arithmetic, and the " +
       "baseline row match a scala recompute") {
-    def pct(xs: Array[Double], p: Double): Double = {
-      val s = xs.sorted
-      val rank = p * (s.length - 1)
-      val lo = rank.toInt
-      val frac = rank - lo
-      if (lo + 1 < s.length) s(lo) + frac * (s(lo + 1) - s(lo)) else s(lo)
-    }
     val toks = graft.sources.Tables.documents(spark, sf)
       .selectExpr("size(split(trim(text), ' ')) AS n").collect()
       .map(_.getInt(0).toDouble)
-    val (e1, e2, e3) = (pct(toks, 0.25), pct(toks, 0.5), pct(toks, 0.75))
+    val (e1, e2, e3) =
+      (pct(toks.toSeq, 0.25), pct(toks.toSeq, 0.5), pct(toks.toSeq, 0.75))
     def bucketOf(n: Double): Int =
       if (n <= e1) 0 else if (n <= e2) 1 else if (n <= e3) 2 else 3
     val groups = toks.groupBy(bucketOf) + (-1 -> toks)

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.operators.Breadth4
+import graft.operators.{Contribution, Lifecycle, Relational, TimeSeries}
 import graft.sources.Tables
 
 /** Semantics pins for the breadth-4 operators (q190–q193), each law
@@ -10,7 +10,7 @@ import graft.sources.Tables
 class Breadth4Spec extends SparkTestBase {
 
   test("q190 rolling median matches a brute per-user frame recompute") {
-    val out = Breadth4.q190RollingMedian(spark, sf).collect()
+    val out = TimeSeries.q190RollingMedian(spark, sf).collect()
       .map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(3)).toMap
     val ev = Tables.events(spark, sf)
       .select(col("user_id"), col("event_id"), unix_micros(col("ts")),
@@ -25,7 +25,7 @@ class Breadth4Spec extends SparkTestBase {
     ev.groupBy(_._1).values.foreach { xs =>
       val sorted = xs.sortBy(e => (e._3, e._2))
       sorted.indices.foreach { i =>
-        val frame = sorted.slice(math.max(0, i - Breadth4.MedianFrame), i + 1)
+        val frame = sorted.slice(math.max(0, i - TimeSeries.MedianFrame), i + 1)
         val expected = median(frame.map(_._4)) / 100.0
         val got = out((sorted(i)._1, sorted(i)._2))
         assert(math.abs(got - expected) < 1e-6,
@@ -36,14 +36,14 @@ class Breadth4Spec extends SparkTestBase {
 
   test("q191 journeys conserve users and match a sequential prefix " +
       "recompute") {
-    val out = Breadth4.q191JourneyMining(spark, sf).collect()
+    val out = Lifecycle.q191JourneyMining(spark, sf).collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap
     val ev = Tables.events(spark, sf)
       .select(col("user_id"), col("event_id"), unix_micros(col("ts")),
         col("event_type")).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getString(3)))
     val journeys = ev.groupBy(_._1).values.map { xs =>
-      xs.sortBy(e => (e._3, e._2)).take(Breadth4.JourneyDepth)
+      xs.sortBy(e => (e._3, e._2)).take(Lifecycle.JourneyDepth)
         .map(_._4).mkString(">")
     }.toSeq
     assert(out.values.sum == journeys.length.toLong, "users conserved")
@@ -54,7 +54,7 @@ class Breadth4Spec extends SparkTestBase {
 
   test("q192 skyline equals the brute-force dominance filter, " +
       "including tie semantics") {
-    val out = Breadth4.q192Skyline(spark, sf).collect()
+    val out = Relational.q192Skyline(spark, sf).collect()
       .map(_.getLong(0)).toSet
     val parts = Tables.part(spark, sf)
       .select(col("p_partkey"), col("p_retailprice"), col("p_size"))
@@ -71,7 +71,7 @@ class Breadth4Spec extends SparkTestBase {
   }
 
   test("q193 rank deltas match brute per-half revenue rankings") {
-    val out = Breadth4.q193RankDelta(spark, sf).collect()
+    val out = Contribution.q193RankDelta(spark, sf).collect()
       .map(r => (r.getLong(0), r.getInt(1), r.getInt(2), r.getInt(3)))
     val li = Tables.lineitem(spark, sf).alias("l")
       .join(Tables.orders(spark, sf).alias("o"),

@@ -2,10 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.functions.Hashing
-import graft.operators.Calibration
 import graft.operators.{Calibration => C}
-import graft.sources.Tables
 
 /** q168 quantile normalization pinned against an independent
   * interpolation recompute and the distribution-alignment laws the
@@ -116,91 +113,5 @@ class CalibrationSpec extends SparkTestBase {
     }
     val avg = overlaps.sum / overlaps.length
     assert(avg >= 0.7, s"avg top-10 overlap $avg")
-  }
-
-  test("q218 split-conformal threshold and coverage equal a sequential " +
-      "recompute, and the threshold rank is the finite-sample quantile") {
-    val out = Calibration.q218ConformalThreshold(spark, sf).collect()
-      .map(r => r.getString(0) -> (r.getLong(1), r.getLong(2), r.getLong(3),
-        r.getLong(4), r.getDouble(5), r.getBoolean(6))).toMap
-    val rows = Tables.customer(spark, sf)
-      .select("c_custkey", "c_mktsegment", "c_acctbal").collect()
-      .map(r => (r.getLong(0), r.getString(1),
-        math.round(r.getDouble(2) * 100)))
-    val bySeg = rows.groupBy(_._2)
-    bySeg.foreach { case (seg, rs) =>
-      val (cal, ev) = rs.partition(r =>
-        Hashing.md5Hash60Value(s"conf:${r._1}") % 2 == 0)
-      val nCal = cal.length.toLong
-      val sum = cal.map(_._3).sum
-      def score(r: (Long, String, Long)): Long = math.abs(r._3 * nCal - sum)
-      val m = ((nCal + 1) * Calibration.ConfNum + Calibration.ConfDen - 1) /
-        Calibration.ConfDen
-      val thr = cal.map(r => (score(r), r._1)).sorted.apply(m.toInt - 1)._1
-      val covered = ev.count(r => score(r) <= thr).toLong
-      val coverage = BigDecimal(covered.toDouble / ev.length)
-        .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
-      assert(out(seg) == ((nCal, ev.length.toLong, m, thr, coverage,
-        covered * Calibration.ConfDen >= ev.length * Calibration.ConfNum)),
-        s"segment $seg diverged")
-      assert(m <= nCal, s"fixture must support the quantile rank ($seg)")
-    }
-  }
-
-  test("q237 minimax isotonic fit equals the sequential stack-based " +
-      "PAV algorithm; the curve is monotone and preserves total mass") {
-    val out = Calibration.q237IsotonicCalibrate(spark, sf).collect()
-      .map(r => r.getInt(0) -> ((r.getLong(1), r.getLong(2)),
-        (r.getDouble(3), r.getDouble(4)))).toMap
-    val evs = Tables.events(spark, sf)
-      .select("user_id", "event_type", "value").collect()
-      .map(r => (r.getLong(0), r.getString(1), r.getDouble(2)))
-    val perUser = evs.groupBy(_._1).map { case (u, rs) =>
-      (u, rs.map(r => math.round(r._3 * 100)).sum,
-        rs.count(_._2 == "purchase").toLong)
-    }.toSeq
-    val med = pct(perUser.map(_._3.toDouble), 0.5)
-    val users = perUser.map(u => (u._1, u._2,
-      if (u._3.toDouble > med) 1L else 0L)).sortBy(u => (u._2, u._1))
-    // ntile: first (n mod k) bins get ceil(n/k) users
-    val n = users.length
-    val k = 10
-    val base = n / k
-    val sizes = (1 to k).map(b => if (b <= n % k) base + 1 else base)
-    val binned = sizes.scanLeft(0)(_ + _).zip(sizes).zipWithIndex.map {
-      case ((off, sz), ix) =>
-        val chunk = users.slice(off, off + sz)
-        (ix + 1, chunk.length.toLong, chunk.map(_._3).sum)
-    }
-    // textbook PAV: merge adjacent pools while a violation exists
-    case class Pool(pos: Long, w: Long)
-    val pools = scala.collection.mutable.ArrayBuffer.empty[Pool]
-    val members = scala.collection.mutable.ArrayBuffer.empty[Int]
-    binned.foreach { case (_, nu, np) =>
-      pools += Pool(np, nu); members += 1
-      while (pools.length >= 2 && {
-        val a = pools(pools.length - 2); val b = pools.last
-        a.pos.toDouble * b.w >= b.pos.toDouble * a.w  // rate_a >= rate_b
-      }) {
-        val b = pools.remove(pools.length - 1)
-        val a = pools.remove(pools.length - 1)
-        pools += Pool(a.pos + b.pos, a.w + b.w)
-        val mb = members.remove(members.length - 1)
-        val ma = members.remove(members.length - 1)
-        members += ma + mb
-      }
-    }
-    val isoSeq = pools.toSeq.zip(members.toSeq).flatMap { case (p, m) =>
-      Seq.fill(m)(p.pos.toDouble / p.w.toDouble)
-    }
-    binned.zip(isoSeq).foreach { case ((bin, nu, np), iso) =>
-      assert(out(bin) == (((nu, np),
-        (r6(np.toDouble / nu.toDouble), r6(iso)))), s"bin $bin diverged")
-    }
-    assert(isoSeq.zip(isoSeq.drop(1)).forall { case (a, b) => a <= b + 1e-12 },
-      "isotonic curve must be nondecreasing")
-    val mass = binned.zip(isoSeq).map { case ((_, nu, _), iso) => iso * nu }.sum
-    assert(math.abs(mass - binned.map(_._3).sum.toDouble) < 1e-6,
-      "PAV preserves total positive mass")
   }
 }

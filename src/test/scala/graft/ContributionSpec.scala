@@ -108,502 +108,4 @@ class ContributionSpec extends SparkTestBase {
     assert(out.map(_._5).sliding(2).forall(p => p.head <= p.last) &&
       math.abs(out.last._5 - 1.0) < 1e-6, "cumulative share reaches 1")
   }
-
-  test("q193 rank deltas match brute per-half revenue rankings") {
-    val out = Contribution.q193RankDelta(spark, sf).collect()
-      .map(r => (r.getLong(0), r.getInt(1), r.getInt(2), r.getInt(3)))
-    val li = Tables.lineitem(spark, sf).alias("l")
-      .join(Tables.orders(spark, sf).alias("o"),
-        col("l.l_orderkey") === col("o.o_orderkey"))
-      .select(col("l_partkey"), col("l_extendedprice"),
-        unix_micros(col("o_orderdate")).as("us"))
-      .collect()
-      .map(r => (r.getLong(0), math.round(r.getDouble(1) * 100),
-        r.getLong(2)))
-    val t0 = li.map(_._3).min
-    val t1 = li.map(_._3).max
-    def ranks(rows: Seq[(Long, Long)]): Map[Long, Int] =
-      rows.groupBy(_._1).view.mapValues(_.map(_._2).sum).toSeq
-        .sortBy { case (p, c) => (-c, p) }
-        .zipWithIndex.map { case ((p, _), i) => p -> (i + 1) }.toMap
-    val ra = ranks(li.filter(e => e._3 * 2 <= t0 + t1).map(e => (e._1, e._2)))
-    val rb = ranks(li.filter(e => e._3 * 2 > t0 + t1).map(e => (e._1, e._2)))
-    assert(out.nonEmpty)
-    out.foreach { case (p, a, b, gain) =>
-      assert(ra(p) == a && rb(p) == b && gain == a - b, s"part $p")
-    }
-    // the report is the true top by (gain, cents_b, part): spot-check
-    // the maximal gain is not beaten by any unreported common part
-    val commonGains = ra.keySet.intersect(rb.keySet)
-      .map(p => ra(p) - rb(p))
-    assert(out.head._4 == commonGains.max)
-  }
-
-  test("q260 RBO equals a sequential pinned-weight replay; the " +
-      "cumulative score is nondecreasing and bounded by 1") {
-    val out = Contribution.q260RankOverlap(spark, sf).collect()
-      .map(r => r.getInt(0) -> (r.getLong(1), r.getDouble(2))).toMap
-    val users = Tables.events(spark, sf)
-      .select("user_id", "value").collect()
-      .map(r => (r.getLong(0), math.round(r.getDouble(1) * 100)))
-      .groupBy(_._1).map { case (u, rs) =>
-        (u, rs.map(_._2).sum, rs.length.toLong) }.toSeq
-    val D = Contribution.RboDepth
-    val ra = users.sortBy(u => (-u._2, u._1)).take(D).map(_._1).zipWithIndex
-      .map { case (u, i) => u -> (i + 1) }.toMap
-    val rb = users.sortBy(u => (-u._3, u._1)).take(D).map(_._1).zipWithIndex
-      .map { case (u, i) => u -> (i + 1) }.toMap
-    val enter = ra.keySet.intersect(rb.keySet).toSeq
-      .map(u => math.max(ra(u), rb(u)))
-    var cum = 0L
-    (1 to D).foreach { d =>
-      val overlap = enter.count(_ <= d).toLong
-      cum += BigDecimal(Contribution.RboW6(d - 1) * overlap / d.toDouble)
-        .setScale(0, BigDecimal.RoundingMode.HALF_UP).toLong
-      assert(out(d) == ((overlap, r6(cum.toDouble / 1e6))),
-        s"depth $d diverged")
-    }
-    val curve = (1 to D).map(out(_)._2)
-    assert(curve.zip(curve.drop(1)).forall { case (a, b) => b >= a })
-    assert(curve.last <= 1.0 + 1e-9)
-  }
-
-  test("q274 slopes equal a sequential moment replay and the pooled " +
-      "moments decompose over nations") {
-    val out = Contribution.q274SimpsonAudit(spark, sf).collect()
-      .map(r => r.getAs[Number](0).longValue -> (r.getLong(1),
-        if (r.isNullAt(2)) None else Some(r.getDouble(2)),
-        if (r.isNullAt(3)) None else Some(r.getDouble(3)),
-        r.getBoolean(4))).toMap
-    val nation = Tables.customer(spark, sf)
-      .select("c_custkey", "c_nationkey").collect()
-      .map(r => r.getLong(0) -> r.getAs[Number](1).longValue).toMap
-    val perCust = Tables.orders(spark, sf)
-      .select("o_custkey", "o_totalprice").collect()
-      .map(r => (r.getLong(0), math.round(r.getDouble(1))))
-      .groupBy(_._1).map { case (c, os) =>
-        (nation(c), os.map(_._2).sum, os.size.toLong) }.toSeq
-    def slopeNum(g: Seq[(Long, Long, Long)]): Double = {
-      val n = g.size.toDouble
-      n * g.map(t => t._2 * t._3).sum.toDouble -
-        g.map(_._2).sum.toDouble * g.map(_._3).sum.toDouble
-    }
-    def slopeDen(g: Seq[(Long, Long, Long)]): Double = {
-      val n = g.size.toDouble
-      n * g.map(t => t._2 * t._2).sum.toDouble -
-        g.map(_._2).sum.toDouble * g.map(_._2).sum.toDouble
-    }
-    val pooledNum = slopeNum(perCust); val pooledDen = slopeDen(perCust)
-    perCust.groupBy(_._1).foreach { case (nat, g) =>
-      val expSlope = if (slopeDen(g) != 0.0)
-        Some(rN(slopeNum(g) / slopeDen(g), 8)) else None
-      val expPooled = if (pooledDen != 0.0)
-        Some(rN(pooledNum / pooledDen, 8)) else None
-      val flip = math.signum(slopeNum(g)) * math.signum(pooledNum) < 0.0
-      assert(out(nat) == ((g.size.toLong, expSlope, expPooled, flip)),
-        s"nation $nat diverged")
-    }
-  }
-
-  test("q281 PVM bridge equals a sequential replay and the three " +
-      "effects reconstruct the revenue delta") {
-    val li = Tables.lineitem(spark, sf)
-      .select(unix_micros(col("l_shipdate")).as("us"), col("l_partkey"),
-        expr("cast(round(l_quantity, 0) as bigint)").as("qty"),
-        expr("cast(round(l_extendedprice * 100, 0) as bigint)")
-          .as("cents"))
-      .collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
-    val ptype = Tables.part(spark, sf).select("p_partkey", "p_type")
-      .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
-    val cut = (li.map(_._1).min + li.map(_._1).max) / 2
-    val byType = li.groupBy(t => ptype(t._2))
-    val got = Contribution.q281PriceVolumeMix(spark, sf).collect()
-    assert(got.map(_.getString(0)).toSeq ==
-      byType.keys.toSeq.sorted)
-    got.foreach { r =>
-      val rows = byType(r.getString(0))
-      val (h0, h1) = rows.partition(_._1 < cut)
-      val (q0, r0) = (h0.map(_._3).sum, h0.map(_._4).sum)
-      val (q1, r1) = (h1.map(_._3).sum, h1.map(_._4).sum)
-      assert(r.getDouble(1) == rN(r0.toDouble / 100, 2))
-      assert(r.getDouble(2) == rN(r1.toDouble / 100, 2))
-      assert(r.getDouble(3) == rN((r1 - r0).toDouble / 100, 2))
-      if (q0 > 0 && q1 > 0) {
-        val p0 = r0.toDouble / q0
-        val p1 = r1.toDouble / q1
-        val dq = (q1 - q0).toDouble
-        assert(r.getDouble(4) == rN(p0 * dq / 100, 2), "volume")
-        assert(r.getDouble(5) == rN(q0.toDouble * (p1 - p0) / 100, 2),
-          "price")
-        assert(r.getDouble(6) == rN((p1 - p0) * dq / 100, 2), "cross")
-        // decomposition identity: effects sum to the delta (each
-        // term rounded to cents independently → ≤ 2-cent slack)
-        assert(math.abs(r.getDouble(4) + r.getDouble(5) +
-          r.getDouble(6) - r.getDouble(3)) < 0.02 + 1e-9)
-      } else assert(r.isNullAt(4) && r.isNullAt(5) && r.isNullAt(6))
-    }
-  }
-
-  test("q303 revenue VaR equals a sequential replay and CVaR bounds " +
-      "the floor from below") {
-    val daily = Tables.lineitem(spark, sf)
-      .select(to_date(col("l_shipdate")).as("d"),
-        expr("cast(round(l_extendedprice * 100, 0) as bigint)").as("c"))
-      .collect().map(r => (r.getDate(0).toLocalDate, r.getLong(1)))
-      .groupBy(_._1).map(_._2.map(_._2).sum).toSeq
-    val var5 = pct(daily, 0.05)
-    val tail = daily.filter(_.toDouble <= var5)
-    val r = Contribution.q303RevenueVar(spark, sf).collect().head
-    assert(r.getLong(0) == daily.length.toLong)
-    assert(r.getDouble(1) ==
-      rN(daily.sum.toDouble / daily.length / 100, 2))
-    assert(r.getDouble(2) == rN(var5 / 100, 2))
-    assert(r.getLong(3) == tail.length.toLong)
-    assert(r.getDouble(4) ==
-      rN(tail.sum.toDouble / tail.length / 100, 2))
-    assert(r.getDouble(4) <= r.getDouble(2) + 1e-9, "CVaR <= VaR")
-    assert(r.getDouble(2) <= r.getDouble(1) + 1e-9, "VaR <= mean")
-  }
-
-  test("q310 supplier HHI equals a sequential replay and effective-N " +
-      "is bounded by the supplier count") {
-    val rev = Tables.lineitem(spark, sf)
-      .select(col("l_shipdate"), col("l_suppkey"),
-        expr("cast(round(l_extendedprice * 100, 0) as bigint)").as("c"))
-      .collect()
-      .map { r =>
-        val d = r.getTimestamp(0).toLocalDateTime
-        (s"${d.getYear}-Q${(d.getMonthValue + 2) / 3}", r.getLong(1),
-          r.getLong(2))
-      }
-    val got = Contribution.q310SupplierHhi(spark, sf).collect()
-    val byQ = rev.groupBy(_._1)
-    assert(got.map(_.getString(0)).toSeq == byQ.keys.toSeq.sorted)
-    got.foreach { r =>
-      val sup = byQ(r.getString(0)).groupBy(_._2)
-        .map(_._2.map(_._3).sum).toSeq
-      val rt = sup.sum
-      val s2 = sup.map(x => BigDecimal(x) * BigDecimal(x)).sum
-      val hhi = s2.toDouble / (rt.toDouble * rt.toDouble)
-      assert(r.getLong(1) == sup.length.toLong)
-      assert(r.getDouble(2) == rN(rt.toDouble / 100, 2))
-      assert(r.getDouble(3) == rN(hhi, 8))
-      assert(r.getDouble(4) == rN(1.0 / hhi, 4))
-      assert(r.getDouble(5) == rN(sup.max.toDouble / rt, 6))
-      // 1 <= effective-N <= n_suppliers
-      assert(r.getDouble(4) >= 1.0 - 1e-9)
-      assert(r.getDouble(4) <= sup.length + 1e-6)
-    }
-  }
-
-  test("q314 price dispersion equals a sequential quartile replay") {
-    val parts = Tables.part(spark, sf)
-      .select(col("p_brand"),
-        expr("cast(round(p_retailprice * 100, 0) as bigint)"))
-      .collect().map(r => (r.getString(0), r.getLong(1)))
-    val got = Contribution.q314PriceDispersion(spark, sf).collect()
-    assert(got.map(_.getString(0)).toSeq ==
-      parts.map(_._1).distinct.sorted.toSeq)
-    got.foreach { r =>
-      val cs = parts.filter(_._1 == r.getString(0)).map(_._2)
-      val (q1, q2, q3) = (pct(cs, 0.25), pct(cs, 0.5), pct(cs, 0.75))
-      assert(r.getLong(1) == cs.length.toLong)
-      assert(r.getDouble(2) == rN(q1 / 100, 2))
-      assert(r.getDouble(3) == rN(q2 / 100, 2))
-      assert(r.getDouble(4) == rN(q3 / 100, 2))
-      assert(r.getDouble(5) == rN((q3 - q1) / (q3 + q1), 6))
-      // quartiles are ordered and CQV lives in [0, 1) for positive prices
-      assert(q1 <= q2 + 1e-9 && q2 <= q3 + 1e-9)
-      assert(r.getDouble(5) >= 0 && r.getDouble(5) < 1)
-    }
-  }
-
-  test("q317 migration matrix equals a sequential tercile replay and " +
-      "conserves the customer universe") {
-    val ord = Tables.orders(spark, sf)
-      .select(unix_micros(col("o_orderdate")).as("us"), col("o_custkey"),
-        expr("cast(round(o_totalprice * 100, 0) as bigint)").as("c"))
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
-    val cut = (ord.map(_._1).min + ord.map(_._1).max) / 2
-    val spend = ord.groupBy(_._2).map { case (u, xs) =>
-      val s1 = xs.filter(_._1 < cut).map(_._3)
-      val s2 = xs.filter(_._1 >= cut).map(_._3)
-      (u, if (s1.isEmpty) None else Some(s1.sum),
-        if (s2.isEmpty) None else Some(s2.sum))
-    }.toSeq
-    def segs(vs: Seq[Long]): (Double, Double) =
-      (rN(pct(vs, 0.3333333333333333), 6),
-        rN(pct(vs, 0.6666666666666666), 6))
-    val (e11, e12) = segs(spend.flatMap(_._2))
-    val (e21, e22) = segs(spend.flatMap(_._3))
-    def seg(v: Option[Long], e1: Double, e2: Double): String = v match {
-      case None => "none"
-      case Some(x) if x.toDouble <= e1 => "low"
-      case Some(x) if x.toDouble <= e2 => "mid"
-      case _ => "high"
-    }
-    val matrix = spend.groupBy(t =>
-      (seg(t._2, e11, e12), seg(t._3, e21, e22)))
-      .map { case (k, xs) => k -> xs.length.toLong }
-    val got = Contribution.q317SegmentMigration(spark, sf).collect()
-    assert(got.map(_.getLong(2)).sum == spend.length.toLong,
-      "universe conservation")
-    got.foreach { r =>
-      val k = (r.getString(0), r.getString(1))
-      assert(matrix(k) == r.getLong(2), s"cell $k")
-      assert(r.getDouble(3) ==
-        rN(matrix(k).toDouble / spend.length, 6))
-    }
-    assert(got.length == matrix.size)
-  }
-
-  test("q319 markup audit equals a sequential replay") {
-    val retail = Tables.part(spark, sf)
-      .select("p_partkey", "p_brand", "p_retailprice").collect()
-      .map(r => r.getLong(0) -> (r.getString(1), r.getDouble(2))).toMap
-    val mus = Tables.lineitem(spark, sf)
-      .select("l_partkey", "l_extendedprice", "l_quantity").collect()
-      .map { r =>
-        val (brand, rp) = retail(r.getLong(0))
-        (brand, BigDecimal((r.getDouble(1) / (r.getDouble(2) * rp) - 1.0)
-          * 1e6).setScale(0, BigDecimal.RoundingMode.HALF_UP).toLong)
-      }
-    val got = Contribution.q319MarkupAudit(spark, sf).collect()
-    assert(got.map(_.getString(0)).toSeq ==
-      mus.map(_._1).distinct.sorted.toSeq)
-    got.foreach { r =>
-      val vs = mus.filter(_._1 == r.getString(0)).map(_._2)
-      assert(r.getLong(1) == vs.length.toLong)
-      assert(r.getDouble(2) == rN(pct(vs, 0.5) / 1e6, 6))
-      assert(r.getDouble(3) ==
-        rN(vs.count(_ < 0).toDouble / vs.length, 6))
-    }
-  }
-
-  test("q323 return trend equals a sequential replay and shares are " +
-      "bounded") {
-    val li = Tables.lineitem(spark, sf)
-      .select(date_format(col("l_shipdate"), "yyyy-MM"),
-        col("l_returnflag"),
-        expr("cast(round(l_extendedprice * 100, 0) as bigint)"))
-      .collect().map(r => (r.getString(0), r.getString(1), r.getLong(2)))
-    val got = Contribution.q323ReturnTrend(spark, sf).collect()
-    assert(got.map(_.getString(0)).toSeq ==
-      li.map(_._1).distinct.sorted.toSeq)
-    got.foreach { r =>
-      val rows = li.filter(_._1 == r.getString(0))
-      val ret = rows.filter(_._2 == "R")
-      assert(r.getLong(1) == rows.length.toLong)
-      assert(r.getLong(2) == ret.length.toLong)
-      assert(r.getDouble(3) == rN(ret.length.toDouble / rows.length, 6))
-      assert(r.getDouble(4) ==
-        rN(ret.map(_._3).sum.toDouble / rows.map(_._3).sum, 6))
-      assert(r.getDouble(3) >= 0 && r.getDouble(3) <= 1)
-    }
-  }
-
-  test("q324 discount curve equals a sequential replay") {
-    val li = Tables.lineitem(spark, sf)
-      .select(expr("cast(round(l_discount * 100, 0) as bigint)"),
-        expr("cast(round(l_quantity, 0) as bigint)"),
-        expr("cast(round(l_extendedprice * 100, 0) as bigint)"))
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
-    val got = Contribution.q324DiscountCurve(spark, sf).collect()
-    assert(got.map(_.getLong(0)).toSeq ==
-      li.map(_._1).distinct.sorted.toSeq)
-    got.foreach { r =>
-      val rows = li.filter(_._1 == r.getLong(0))
-      assert(r.getLong(1) == rows.length.toLong)
-      assert(r.getDouble(2) ==
-        rN(rows.map(_._2).sum.toDouble / rows.length, 4))
-      assert(r.getDouble(3) == rN(rows.map(_._3).sum.toDouble / 100, 2))
-      assert(r.getDouble(4) ==
-        rN(rows.map(_._3).sum.toDouble / rows.length / 100, 2))
-    }
-  }
-
-  test("q331 elasticity equals a sequential quantized-OLS replay") {
-    val ptype = Tables.part(spark, sf).select("p_partkey", "p_type")
-      .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
-    val xs = Tables.lineitem(spark, sf)
-      .select("l_partkey", "l_extendedprice", "l_quantity").collect()
-      .map { r =>
-        (ptype(r.getLong(0)),
-          micro(math.log(r.getDouble(1) / r.getDouble(2))),
-          micro(math.log(r.getDouble(2))))
-      }
-    val got = Contribution.q331PriceElasticity(spark, sf).collect()
-    got.foreach { r =>
-      val rows = xs.filter(_._1 == r.getString(0))
-      val k = rows.length.toLong
-      val sx = rows.map(_._2).sum
-      val sy = rows.map(_._3).sum
-      val sxy = rows.map(t => BigDecimal(t._2) * BigDecimal(t._3)).sum
-      val sxx = rows.map(t => BigDecimal(t._2) * BigDecimal(t._2)).sum
-      val syy = rows.map(t => BigDecimal(t._3) * BigDecimal(t._3)).sum
-      val num = k.toDouble * sxy.toDouble - sx.toDouble * sy.toDouble
-      val denx = k.toDouble * sxx.toDouble - sx.toDouble * sx.toDouble
-      val deny = k.toDouble * syy.toDouble - sy.toDouble * sy.toDouble
-      assert(r.getLong(1) == k)
-      assert(r.getDouble(2) == rN(num / denx, 6), s"${r.getString(0)}")
-      assert(r.getDouble(3) == rN(num * num / (denx * deny), 6))
-      assert(r.getDouble(3) >= 0 && r.getDouble(3) <= 1 + 1e-9)
-    }
-  }
-
-  test("q339 market-share shift equals a sequential replay and " +
-      "shares sum to one per half") {
-    val natOf = Tables.supplier(spark, sf)
-      .select("s_suppkey", "s_nationkey").collect()
-      .map(r => r.getLong(0) -> r.getInt(1)).toMap
-    val li = Tables.lineitem(spark, sf)
-      .select(unix_micros(col("l_shipdate")), col("l_suppkey"),
-        expr("cast(round(l_extendedprice * 100, 0) as bigint)"))
-      .collect().map(r => (r.getLong(0), natOf(r.getLong(1)),
-        r.getLong(2)))
-    val cut = (li.map(_._1).min + li.map(_._1).max) / 2
-    val prof = li.groupBy(_._2).map { case (n, xs) =>
-      (n, xs.filter(_._1 < cut).map(_._3).sum,
-        xs.filter(_._1 >= cut).map(_._3).sum) }.toSeq
-    val (t1, t2) = (prof.map(_._2).sum, prof.map(_._3).sum)
-    val got = Contribution.q339MarketShareShift(spark, sf).collect()
-    var (s1, s2) = (0.0, 0.0)
-    got.foreach { r =>
-      val (_, r1, r2) = prof.find(_._1 == r.getInt(0)).get
-      assert(r.getDouble(1) == rN(r1.toDouble / 100, 2))
-      assert(r.getDouble(2) == rN(r2.toDouble / 100, 2))
-      assert(r.getDouble(3) == rN(r1.toDouble / t1, 6))
-      assert(r.getDouble(4) == rN(r2.toDouble / t2, 6))
-      assert(r.getDouble(5) ==
-        rN(r2.toDouble / t2 - r1.toDouble / t1, 6) + 0.0)
-      s1 += r.getDouble(3); s2 += r.getDouble(4)
-    }
-    assert(math.abs(s1 - 1.0) < 1e-4 && math.abs(s2 - 1.0) < 1e-4)
-  }
-
-  test("q342 fulfilment span equals a sequential replay and P50 <= " +
-      "P90") {
-    val spans = Tables.lineitem(spark, sf)
-      .select(col("l_orderkey"), to_date(col("l_shipdate"))).collect()
-      .map(r => (r.getLong(0), r.getDate(1).toLocalDate))
-      .groupBy(_._1).map { case (o, xs) =>
-        val ds = xs.map(_._2)
-        o -> java.time.temporal.ChronoUnit.DAYS
-          .between(ds.min, ds.max)
-      }
-    val month = Tables.orders(spark, sf)
-      .select(col("o_orderkey"),
-        date_format(col("o_orderdate"), "yyyy-MM")).collect()
-      .map(r => r.getLong(0) -> r.getString(1)).toMap
-    val got = Contribution.q342FulfilmentSpan(spark, sf).collect()
-    got.foreach { r =>
-      val ss = spans.filter(t => month(t._1) == r.getString(0))
-        .values.toSeq
-      assert(r.getLong(1) == ss.length.toLong)
-      assert(r.getDouble(2) ==
-        rN(ss.count(_ == 0).toDouble / ss.length, 6))
-      assert(r.getDouble(3) == rN(pct(ss, 0.5), 4))
-      assert(r.getDouble(4) == rN(pct(ss, 0.9), 4))
-      assert(r.getDouble(3) <= r.getDouble(4) + 1e-9)
-    }
-  }
-
-  test("q368 revenue recognition reconciles to the fact table to the " +
-      "penny and shares sum to 1") {
-    val rows = Contribution.q368RevenueRecognition(spark, sf).collect()
-    val recognized = rows.map(_.getLong(1)).sum
-    val factCents = Tables.lineitem(spark, sf)
-      .agg(sum(expr("cast(round(l_extendedprice * 100, 0) as bigint)")))
-      .collect().head.getLong(0)
-    assert(recognized == factCents,
-      s"ledger off by ${factCents - recognized} cents")
-    assert(math.abs(rows.map(_.getDouble(3)).sum - 1.0) < 1e-3)
-    // months are contiguous in the output
-    val months = rows.map(_.getString(0))
-    assert(months.sorted.toSeq == months.toSeq)
-  }
-
-  test("q369 open-order aging equals a sequential snapshot recompute") {
-    val out = Contribution.q369OpenOrderAging(spark, sf).collect()
-      .map(r => r.getString(0) -> (r.getLong(1), r.getLong(2))).toMap
-    val orders = Tables.orders(spark, sf)
-      .select(col("o_orderkey"), to_date(col("o_orderdate")),
-        expr("cast(round(o_totalprice * 100, 0) as bigint)"))
-      .collect()
-      .map(r => (r.getLong(0), r.getDate(1).toLocalDate, r.getLong(2)))
-    val fulfil = Tables.lineitem(spark, sf)
-      .groupBy("l_orderkey").agg(max(to_date(col("l_shipdate"))))
-      .collect().map(r => r.getLong(0) -> r.getDate(1).toLocalDate).toMap
-    val dmin = orders.map(_._2).min
-    val dmax = orders.map(_._2).max
-    val snap = dmin.plusDays(
-      java.time.temporal.ChronoUnit.DAYS.between(dmin, dmax) / 2)
-    // orders with zero line items (27 exist at sf0.001) are out of
-    // scope, mirroring the query's inner join to the fulfilment fold
-    val open = orders.filter { case (k, d, _) =>
-      fulfil.contains(k) && !d.isAfter(snap) && fulfil(k).isAfter(snap)
-    }
-    def bucket(age: Long): String =
-      if (age <= 7) "a_0_7" else if (age <= 30) "b_8_30"
-      else if (age <= 60) "c_31_60" else "d_61_plus"
-    val exp = open.groupBy { case (_, d, _) =>
-      bucket(java.time.temporal.ChronoUnit.DAYS.between(d, snap))
-    }.map { case (b, g) => b -> (g.size.toLong, g.map(_._3).sum) }
-    Seq("a_0_7", "b_8_30", "c_31_60", "d_61_plus").foreach { b =>
-      assert(out(b) == exp.getOrElse(b, (0L, 0L)), s"bucket $b diverged")
-    }
-  }
-
-  test("q370 ABC classes equal a sequential cumulative-share recompute " +
-      "and partition the part dimension") {
-    val out = Contribution.q370AbcClassification(spark, sf).collect()
-      .map(r => r.getString(0) -> (r.getLong(1), r.getLong(2))).toMap
-    val parts = Tables.lineitem(spark, sf)
-      .groupBy("l_partkey")
-      .agg(sum(expr("cast(round(l_extendedprice * 100, 0) as bigint)")))
-      .collect().map(r => (r.getLong(0), r.getLong(1)))
-      .sortBy { case (p, c) => (-c, p) }
-    val total = parts.map(_._2).sum
-    var cum = 0L
-    val exp = parts.map { case (_, c) =>
-      cum += c
-      val k = if (cum * 5 <= total * 4) "A"
-        else if (cum * 20 <= total * 19) "B" else "C"
-      (k, c)
-    }.groupBy(_._1).map { case (k, g) =>
-      k -> (g.size.toLong, g.map(_._2).sum) }
-    assert(out == exp)
-    assert(out.values.map(_._1).sum == parts.length.toLong)
-    // value concentration law: A holds ≥ its count share of revenue
-    val (na, ca) = out("A")
-    assert(ca.toDouble / total >= na.toDouble / parts.length)
-  }
-
-  test("q372 horizon tripwire matches a sequential recompute and the " +
-      "capped share is the honest (large) number on this corpus") {
-    val row = graft.operators.Contribution.q372HorizonAudit(spark, sf)
-      .collect().head
-    val spans = Tables.lineitem(spark, sf)
-      .select(col("l_orderkey"),
-        expr("cast(round(l_extendedprice * 100, 0) as bigint)"),
-        to_date(col("l_shipdate")))
-      .join(Tables.orders(spark, sf)
-        .select(col("o_orderkey"), to_date(col("o_orderdate"))),
-        col("l_orderkey") === col("o_orderkey"))
-      .drop("l_orderkey", "o_orderkey").collect()
-      .map { r =>
-        val (c, ship, ord) =
-          (r.getLong(0), r.getDate(1).toLocalDate, r.getDate(2).toLocalDate)
-        val d = math.abs(
-          java.time.temporal.ChronoUnit.DAYS.between(ship, ord)) + 1
-        (c, d)
-      }
-    val h = graft.operators.Contribution.RecognitionHorizonDays
-    assert(row.getLong(0) == spans.length.toLong)
-    assert(row.getLong(1) == spans.count(_._2 > h).toLong)
-    // the synthetic corpus's independent dates make the cap bind on
-    // most lines — the tripwire's value is that this is REPORTED
-    assert(row.getDouble(2) > 0.5)
-  }
 }

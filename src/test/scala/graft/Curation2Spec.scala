@@ -1,11 +1,7 @@
 package graft
 
-import org.apache.spark.sql.functions._
-
 import graft.functions.Hashing
-import graft.operators.Curation2
 import graft.operators.{Curation2 => C2}
-import graft.sources.Tables
 
 /** q146/q147 pinned against independent plain-Scala implementations
   * (same salted hashes, same tokenization, same smoothing). */
@@ -111,120 +107,5 @@ class Curation2Spec extends SparkTestBase {
     val emittedTotal = expected.map(_._4).sum.toDouble
     assert(math.abs(emittedTotal / docs.length - 1.0) < 0.05,
       s"emitted $emittedTotal vs corpus ${docs.length}")
-  }
-
-  test("q225 weighted median equals a sequential cumulative-weight " +
-      "selection and weighting genuinely moves the statistic") {
-    import graft.operators.Curation2
-    val out = Curation2.q225WeightedMedian(spark, sf).collect()
-      .map(r => r.getString(0) -> (r.getLong(1), r.getLong(2),
-        r.getLong(3), r.getLong(4))).toMap
-    val docs = Tables.documents(spark, sf)
-      .select("doc_id", "source", "text", "n_chars").collect()
-      .map(r => (r.getLong(0), r.getString(1),
-        r.getString(2).trim.split(" ", -1).length.toLong, r.getLong(3)))
-    docs.groupBy(_._2).foreach { case (src, ds) =>
-      val sorted = ds.sortBy(d => (d._3, d._1))
-      val totW = ds.map(_._4).sum
-      var cw = 0L
-      val wm = sorted.find { d => cw += d._4; cw * 2 >= totW }.get._3
-      val um = sorted((ds.length - 1) / 2)._3
-      assert(out(src) == ((ds.length.toLong, totW, wm, um)),
-        s"source $src diverged: ${out(src)} vs (${ds.length}, $totW, $wm, $um)")
-    }
-    assert(out.values.exists(v => v._3 != v._4),
-      "weighted and unweighted medians should differ somewhere")
-  }
-
-  test("q283 ESS equals a sequential replay and is bounded by n_docs") {
-    val docs = Tables.documents(spark, sf)
-      .select("source", "n_chars").collect()
-      .map(r => (r.getString(0), r.getLong(1)))
-      .filter(_._2 > 0)
-    val got = Curation2.q283EffectiveSampleSize(spark, sf).collect()
-    assert(got.map(_.getString(0)).toSeq ==
-      docs.map(_._1).distinct.sorted.toSeq)
-    got.foreach { r =>
-      val ws = docs.filter(_._1 == r.getString(0)).map(_._2)
-      val sw = ws.sum
-      val sw2 = ws.map(w => w * w).sum
-      val ess = sw.toDouble * sw.toDouble / sw2.toDouble
-      assert(r.getLong(1) == ws.length.toLong)
-      assert(r.getDouble(2) == rN(ess, 4))
-      assert(r.getDouble(3) == rN(ess / ws.length, 6))
-      // Kish bound: 1 ≤ ESS ≤ n (equality iff equal weights)
-      assert(r.getDouble(2) >= 1.0 - 1e-9 &&
-        r.getDouble(2) <= ws.length + 1e-6)
-    }
-  }
-
-  test("q284 jackknife equals a sequential replay and influence signs " +
-      "track each source's own mean") {
-    val docs = Tables.documents(spark, sf).select("source", "n_chars")
-      .collect().map(r => (r.getString(0), r.getLong(1)))
-    val bySrc = docs.groupBy(_._1).map { case (s, xs) =>
-      s -> (xs.length.toLong, xs.map(_._2).sum) }
-    val nn = docs.length.toLong
-    val ss = docs.map(_._2).sum
-    val g = bySrc.size.toLong
-    val thetaMu = bySrc.toSeq.sortBy(_._1).map { case (s, (n, sc)) =>
-      s -> BigDecimal((ss - sc).toDouble / (nn - n) * 1000000d)
-        .setScale(0, BigDecimal.RoundingMode.HALF_UP).toLong
-    }
-    val smu = thetaMu.map(_._2).sum
-    val qmu = thetaMu.map(t => BigDecimal(t._2) * BigDecimal(t._2)).sum
-    val se = math.sqrt((qmu.toDouble - smu.toDouble * (smu.toDouble / g))
-      * (g - 1) / g) / 1000000d
-    val got = Curation2.q284JackknifeInfluence(spark, sf).collect()
-    assert(got.length == g)
-    got.foreach { r =>
-      val s = r.getString(0)
-      val (n, sc) = bySrc(s)
-      val loo = (ss - sc).toDouble / (nn - n)
-      assert(r.getLong(1) == n)
-      assert(r.getDouble(2) == rN(sc.toDouble / n, 4), s"$s mean")
-      assert(r.getDouble(3) == rN(loo, 4), s"$s loo")
-      assert(r.getDouble(4) == rN(ss.toDouble / nn - loo, 4), s"$s infl")
-      assert(r.getDouble(5) == rN(se, 6), s"$s se")
-      // a source above the global mean pulls it up (positive influence)
-      val srcMean = sc.toDouble / n
-      val global = ss.toDouble / nn
-      if (math.abs(r.getDouble(4)) > 0.001)
-        assert((r.getDouble(4) > 0) == (srcMean > global), s"$s sign")
-    }
-  }
-
-  test("q301 water-filling equals a sequential level search and " +
-      "conserves the budget") {
-    val sup = Tables.documents(spark, sf).select("source", "text")
-      .collect().map(r => (r.getString(0), words(r.getString(1)).length.toLong))
-      .groupBy(_._1).map { case (s, xs) => s -> xs.map(_._2).sum }
-      .toSeq.sortBy(t => (t._2, t._1))
-    val g = sup.length.toLong
-    val total = sup.map(_._2).sum
-    val budget = total / 2
-    var prefix = 0L
-    var level = -1.0
-    for (((_, s), i) <- sup.zipWithIndex if level < 0) {
-      val prev = if (i == 0) 0L else sup(i - 1)._2
-      val den = g - i
-      val num = budget - prefix
-      if (prev * den <= num && num <= s * den) level = num.toDouble / den
-      else prefix += s
-    }
-    val got = Curation2.q301WaterFilling(spark, sf).collect()
-    assert(got.length == g)
-    var allocSum = 0.0
-    got.foreach { r =>
-      val s = sup.find(_._1 == r.getString(0)).get._2
-      assert(r.getLong(1) == s)
-      assert(r.getLong(2) == budget)
-      assert(r.getDouble(3) == rN(math.min(s.toDouble, level), 4))
-      assert(r.getBoolean(4) == (s.toDouble > level))
-      assert(r.getDouble(5) == rN(level, 4))
-      allocSum += math.min(s.toDouble, level)
-    }
-    // water-filling conserves the budget exactly (pre-rounding)
-    assert(math.abs(allocSum - budget) < 1e-6 * budget + 1e-4)
   }
 }

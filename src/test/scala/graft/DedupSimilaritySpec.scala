@@ -1,10 +1,6 @@
 package graft
 
-import org.apache.spark.sql.functions._
-
-import graft.functions.Hashing
 import graft.operators.{AnnIndex, AnnRetrieval, Dedup, DedupClusters, DedupEmbedding, Similarity}
-import graft.sources.Tables
 
 /** Cross-checks between the dedup/similarity operators: the LSH-style
   * approximations must recover (most of) what the exact methods find. */
@@ -562,446 +558,5 @@ class DedupSimilaritySpec extends SparkTestBase {
       assert(cos(ia) >= cos(ib) - 1e-9,
         s"vec_rank $ra doc $ia has worse cosine than rank $rb doc $ib")
     assert(ranked.nonEmpty, "no dense-arm docs reached the fused top-10")
-  }
-
-  private val P = 1000000007L
-
-  private def perm(j: Int, x: Long): Long = {
-    val a = (2654435761L * (j + 1)) % P
-    val b = (123456789L * (j + 1) + 987654321L) % P
-    (a * (x % P) + b) % P
-  }
-
-  test("q249 threshold curve equals a sequential minhash/Jaccard " +
-      "replay; flagged counts are nonincreasing in the threshold") {
-    val out = Dedup.q249ThresholdCurve(spark, sf).collect()
-      .map(r => r.getInt(0) -> ((r.getLong(1), r.getLong(2), r.getLong(3),
-        r.getLong(4)),
-        (if (r.isNullAt(5)) None else Some(r.getDouble(5)),
-          if (r.isNullAt(6)) None else Some(r.getDouble(6))))).toMap
-    val docs = Tables.documents(spark, sf)
-      .select("doc_id", "text").collect()
-      .map(r => (r.getLong(0), r.getString(1)))
-    val shingles: Map[Long, Set[String]] = docs.map { case (id, text) =>
-      val ws = text.split(" ", -1)
-      id -> (if (ws.length >= 3)
-        (0 to ws.length - 3).map(i => ws.slice(i, i + 3).mkString(" ")).toSet
-      else Set.empty[String])
-    }.toMap
-    val sigs: Map[Long, Seq[Long]] = shingles.collect {
-      case (id, sh) if sh.nonEmpty =>
-        val xs = sh.toSeq.map(Hashing.md5Hash60Value)
-        id -> (0 to 15).map(j => xs.map(x => perm(j, x)).min)
-    }
-    val cands = (for {
-      (i1, s1) <- sigs.toSeq; (i2, s2) <- sigs.toSeq if i1 < i2
-      if (0 to 3).exists(b =>
-        (0 to 3).forall(k => s1(b * 4 + k) == s2(b * 4 + k)))
-    } yield (i1, i2)).toSeq
-    val rows = cands.map { case (i1, i2) =>
-      val k16 = (0 to 15).count(j => sigs(i1)(j) == sigs(i2)(j)).toLong
-      val ni = (shingles(i1) intersect shingles(i2)).size.toLong
-      val un = shingles(i1).size + shingles(i2).size - ni
-      (k16, ni, un)
-    }
-    Dedup.CurveThresholdsPct.foreach { tau =>
-      val est = rows.count(r => r._1 * 100 >= tau * 16).toLong
-      val exact = rows.count(r => r._2 * 100 >= tau * r._3).toLong
-      val tp = rows.count(r => r._1 * 100 >= tau * 16 &&
-        r._2 * 100 >= tau * r._3).toLong
-      val prec = if (est > 0) Some(r6(tp.toDouble / est)) else None
-      val rec = if (exact > 0) Some(r6(tp.toDouble / exact)) else None
-      assert(out(tau) == (((rows.length.toLong, est, exact, tp),
-        (prec, rec))), s"tau $tau diverged")
-    }
-    val flagged = Dedup.CurveThresholdsPct.map(t => out(t)._1._2)
-    assert(flagged.zip(flagged.drop(1)).forall { case (a, b) => b <= a },
-      "est-flagged counts nonincreasing in tau")
-  }
-
-  test("q258 cluster-size histogram conserves the corpus and matches " +
-      "the q73 labels") {
-    val out = DedupClusters.q258ClusterSizes(spark, sf).collect()
-      .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2),
-        r.getDouble(3))).toMap
-    val labels = DedupClusters.q73DedupClusters(spark, sf)
-      .select("cluster_id").collect().map(_.getLong(0))
-    val nTotal = Tables.documents(spark, sf).count()
-    val hist = labels.groupBy(identity).map(_._2.length.toLong)
-      .groupBy(identity).map { case (sz, cs) => sz -> cs.size.toLong }
-    val singles = nTotal - labels.length
-    hist.foreach { case (sz, nc) =>
-      assert(out(sz) == ((nc, sz * nc,
-        r6((sz * nc).toDouble / nTotal))), s"size $sz diverged")
-    }
-    assert(out(1L)._1 == singles)
-    assert(out.values.map(_._2).sum == nTotal,
-      "histogram docs must conserve the corpus")
-  }
-
-  test("q277 savings ledger equals a replay over the q73 labels and " +
-      "dup docs conserve cluster arithmetic") {
-    val row = DedupClusters.q277DedupSavings(spark, sf).collect().head
-    val clusters = DedupClusters.q73DedupClusters(spark, sf)
-      .select("doc_id", "cluster_id").collect()
-      .map(r => r.getLong(0) -> r.getLong(1))
-    val canon = clusters.groupBy(_._2).map { case (c, ms) =>
-      c -> ms.map(_._1).min }
-    val toks = Tables.documents(spark, sf).select("doc_id", "text")
-      .collect()
-      .map(r => r.getLong(0) ->
-        r.getString(1).trim.split(" ", -1).length.toLong).toMap
-    val clMap = clusters.toMap
-    val dupDocs = clusters.filter { case (d, c) => d != canon(c) }
-    val nDup = dupDocs.length.toLong
-    val dupToks = dupDocs.map(d => toks(d._1)).sum
-    val nDocs = toks.size.toLong
-    val nToks = toks.values.sum
-    assert((row.getLong(0), row.getLong(1), row.getLong(2),
-      row.getLong(3)) == ((nDocs, nDup, nToks, dupToks)))
-    assert(row.getDouble(4) == r6(nDup.toDouble / nDocs))
-    assert(row.getDouble(5) == r6(dupToks.toDouble / nToks))
-    // each cluster keeps exactly one canonical
-    val bySize = clusters.groupBy(_._2).map(_._2.size.toLong)
-    assert(nDup == bySize.map(_ - 1).sum)
-    assert(clMap.size == clusters.length)
-  }
-
-  test("q297 transitivity audit equals a sequential wedge replay") {
-    val pairs = Dedup.q34DedupNgramJaccard(spark, sf).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
-    val jmap = pairs.map(p => (p._1, p._2) -> p._3).toMap
-    val adj = (pairs.map(p => p._1 -> (p._2, p._3)) ++
-      pairs.map(p => p._2 -> (p._1, p._3)))
-      .groupBy(_._1).map { case (b, xs) => b -> xs.map(_._2).toSeq }
-    val wedges = adj.toSeq.flatMap { case (_, nbrs) =>
-      for (i <- nbrs.indices; j <- nbrs.indices
-           if nbrs(i)._1 < nbrs(j)._1)
-        yield (math.min(nbrs(i)._2, nbrs(j)._2),
-          jmap.getOrElse((nbrs(i)._1, nbrs(j)._1), -1.0))
-    }
-    val got = Dedup.q297TransitivityAudit(spark, sf).collect()
-    assert(got.map(_.getDouble(0)).toSeq == Dedup.TransitivityTaus)
-    got.foreach { r =>
-      val t = r.getDouble(0)
-      val np = pairs.count(_._3 >= t).toLong
-      val w = wedges.filter(_._1 >= t)
-      val closed = w.count(_._2 >= t).toLong
-      assert(r.getLong(1) == np, s"$t pairs")
-      assert(r.getLong(2) == w.length.toLong, s"$t wedges")
-      assert(r.getLong(3) == closed, s"$t closed")
-      assert(r.getLong(4) == w.length - closed)
-      if (w.nonEmpty)
-        assert(r.getDouble(5) == rN(closed.toDouble / w.length, 6))
-      // violations can only shrink coverage, never exceed wedges
-      assert(r.getLong(4) >= 0 && r.getLong(4) <= r.getLong(2))
-    }
-  }
-
-  test("q300 IDF shift equals a replay over the q73 labels and shifts " +
-      "are non-negative") {
-    val clusters = DedupClusters.q73DedupClusters(spark, sf)
-      .select("doc_id", "cluster_id").collect()
-      .map(r => (r.getLong(0), r.getLong(1)))
-    val canon = clusters.groupBy(_._2).map { case (c, ms) =>
-      c -> ms.map(_._1).min }
-    val dups = clusters.filter { case (d, c) => d != canon(c) }
-      .map(_._1).toSet
-    val docs = Tables.documents(spark, sf).select("doc_id", "text")
-      .collect().map(r => (r.getLong(0), r.getString(1)))
-    val nRaw = docs.length.toLong
-    val nDedup = nRaw - dups.size
-    val dfByWord = docs.flatMap { case (id, t) =>
-      words(t).distinct.map(w => (w, id)) }
-      .groupBy(_._1).map { case (w, xs) =>
-        w -> (xs.length.toLong, xs.count(x => !dups(x._2)).toLong) }
-    def idf(n: Long, df: Long): Double = math.log((n + 1).toDouble / (df + 1))
-    val expect = dfByWord.toSeq.map { case (w, (dr, dd)) =>
-      (w, dr, dd, dr - dd, rN(idf(nRaw, dr), 6), rN(idf(nDedup, dd), 6),
-        rN(idf(nDedup, dd) - idf(nRaw, dr), 6))
-    }.sortBy(t => (-t._4, t._1)).take(DedupClusters.IdfShiftTopK)
-    val got = DedupClusters.q300IdfShift(spark, sf).collect()
-      .map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3),
-        r.getDouble(4), r.getDouble(5), r.getDouble(6)))
-    assert(got.toSeq == expect, "idf-shift list diverged")
-    // dropping docs can only raise idf of the dropped terms
-    got.foreach(t => assert(t._4 >= 0))
-  }
-
-  test("q304 isotropy audit equals a sequential replay and the ratio " +
-      "is in [0, 1]") {
-    val vecs = Tables.embeddings(spark, sf).select("embedding").collect()
-      .map(_.getSeq[Float](0).toArray.map(v =>
-        BigDecimal(v.toDouble * 1000000d).setScale(0,
-          BigDecimal.RoundingMode.HALF_UP).toLong))
-    val n = vecs.length.toLong
-    val dim = vecs.map(_.length).max
-    val sumN2 = vecs.map(_.map(x => x * x).sum).sum
-    val sDim = (0 until dim).map(d => vecs.map(_(d)).sum)
-    val mu2 = sDim.map(s => BigDecimal(s) * BigDecimal(s)).sum
-    val domIdx = sDim.zipWithIndex.maxBy(t => (t._1.abs, -t._2))._2
-    val r = Similarity.q304IsotropyAudit(spark, sf).collect().head
-    assert(r.getLong(0) == n && r.getLong(1) == dim.toLong)
-    assert(r.getDouble(2) == rN(sumN2.toDouble / n / 1e12, 6))
-    assert(r.getDouble(3) == rN(math.sqrt(mu2.toDouble) / n / 1e6, 6))
-    assert(r.getDouble(4) ==
-      rN(mu2.toDouble / (n.toDouble * sumN2.toDouble), 8))
-    assert(r.getInt(5) == domIdx)
-    val sDom = BigDecimal(sDim(domIdx)) * BigDecimal(sDim(domIdx))
-    assert(r.getDouble(6) == rN((sDom / mu2).toDouble, 6) ||
-      r.getDouble(6) == rN(sDom.toDouble / mu2.toDouble, 6))
-    assert(r.getDouble(4) >= 0 && r.getDouble(4) <= 1 + 1e-9)
-  }
-
-  test("q311 ILD equals a sequential pairwise-cosine replay over the " +
-      "exact top-k lists") {
-    val vecs = Tables.embeddings(spark, sf)
-      .select("vec_id", "embedding").collect()
-      .map(r => r.getLong(0) ->
-        r.getSeq[Float](1).toArray.map(v =>
-          BigDecimal(v.toDouble * 1000000d).setScale(0,
-            BigDecimal.RoundingMode.HALF_UP).toLong)).toMap
-    val top = Similarity.q36AnnBruteTopK(spark, sf)
-      .select("qid", "cid").collect()
-      .map(r => (r.getLong(0), r.getLong(1)))
-      .groupBy(_._1).map { case (q, xs) => q -> xs.map(_._2).sorted }
-    val got = Similarity.q311IldAudit(spark, sf).collect()
-    assert(got.length == top.size)
-    got.foreach { r =>
-      val members = top(r.getLong(0))
-      val mus = for (i <- members.indices;
-                     j <- (i + 1) until members.length) yield {
-        val (a, b) = (vecs(members(i)), vecs(members(j)))
-        val dot = a.zip(b).map { case (x, y) => x * y }.sum
-        val cos = dot.toDouble /
-          (math.sqrt(a.map(x => x * x).sum.toDouble) *
-            math.sqrt(b.map(x => x * x).sum.toDouble))
-        micro(cos)
-      }
-      assert(r.getLong(1) == mus.length.toLong)
-      assert(r.getDouble(2) ==
-        rN(mus.sum.toDouble / mus.length / 1e6, 6),
-        s"qid ${r.getLong(0)}")
-      // a cosine mean of unit-ish vectors stays in [-1, 1]
-      assert(r.getDouble(2) >= -1.0 - 1e-9 && r.getDouble(2) <= 1.0 + 1e-9)
-    }
-  }
-
-  test("q329 exact-dup savings equal a sequential md5 replay") {
-    val docs = Tables.documents(spark, sf)
-      .select("doc_id", "source", "text").collect()
-      .map(r => (r.getLong(0), r.getString(1), r.getString(2)))
-    val canon = docs.groupBy(_._3).map { case (_, xs) =>
-      xs.map(_._1).min -> xs.map(_._1).toSet }
-    val canonSet = canon.keys.toSet
-    def toks(t: String): Long =
-      t.trim.split(" ", -1).count(_.nonEmpty).toLong
-    val got = Dedup.q329ExactDupSavings(spark, sf).collect()
-    got.foreach { r =>
-      val ds = docs.filter(_._2 == r.getString(0))
-      val dup = ds.filter(d => !canonSet(d._1))
-      assert(r.getLong(1) == ds.length.toLong)
-      assert(r.getLong(2) == dup.length.toLong)
-      assert(r.getDouble(3) == rN(dup.length.toDouble / ds.length, 6))
-      assert(r.getDouble(4) ==
-        rN(dup.map(d => toks(d._3)).sum.toDouble /
-          ds.map(d => toks(d._3)).sum, 6))
-    }
-  }
-
-  test("q332 bucket audit is internally consistent with the q32 index") {
-    val got = Dedup.q332LshBucketAudit(spark, sf).collect()
-    assert(got.length == 4) // 4 bands
-    val nDocs = got.head.getLong(1)
-    got.foreach { r =>
-      // every band indexes every document exactly once
-      assert(r.getLong(1) == nDocs)
-      assert(r.getLong(3) <= r.getLong(1))
-      assert(r.getLong(2) <= r.getLong(1))
-      assert(r.getDouble(4) ==
-        rN(r.getLong(3).toDouble / r.getLong(1), 6))
-      // expected probe is at least 1 (every doc sees its own bucket)
-      // and at most the hottest bucket
-      assert(r.getDouble(5) >= 1.0 - 1e-9)
-      assert(r.getDouble(5) <= r.getLong(3) + 1e-6)
-    }
-  }
-
-  test("q340 dup rate by length equals a sequential replay and " +
-      "conserves the corpus") {
-    val docs = Tables.documents(spark, sf)
-      .select("doc_id", "n_chars", "text").collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getString(2)))
-    val canon = docs.groupBy(_._3).map(_._2.map(_._1).min).toSet
-    val edges = (1 to 9).map(k =>
-      rN(pct(docs.map(_._2), k / 10.0), 6))
-    val byBucket = docs.groupBy(d => edges.count(d._2.toDouble >= _))
-    val got = Dedup.q340DupRateByLength(spark, sf).collect()
-    assert(got.map(_.getLong(1)).sum == docs.length.toLong)
-    got.foreach { r =>
-      val ds = byBucket(r.getInt(0))
-      val dup = ds.count(d => !canon(d._1)).toLong
-      assert(r.getLong(1) == ds.length.toLong)
-      assert(r.getLong(2) == dup)
-      assert(r.getDouble(3) == rN(dup.toDouble / ds.length, 6))
-    }
-  }
-
-  test("q348 Hamming lists equal a sequential banding+popcount replay " +
-      "and keep recall vs the exact cosine top-k") {
-    val out = DedupEmbedding.q348HammingRetrieval(spark, sf).collect()
-      .map(r => (r.getLong(0), r.getInt(1)) -> (r.getLong(2), r.getInt(3)))
-      .toMap
-    val raw = Tables.embeddings(spark, sf)
-      .select("vec_id", "embedding").collect()
-      .map(r => r.getLong(0) -> r.getSeq[Float](1).toArray).toMap
-    val dim = raw.values.head.length
-    val planes = DedupEmbedding.portablePlanes(dim)
-    def bandsOf(e: Array[Float]): Seq[(Int, Long)] = {
-      val xq = e.map(x => math.floor(x.toDouble * 1000.0))
-      val bits = planes.map { p =>
-        if (p.zip(xq).map { case (c, q) => c * q }.sum > 0) 1L else 0L
-      }
-      (0 until DedupEmbedding.EmbNBands).map { k =>
-        (k, (0 until DedupEmbedding.EmbBandBits).foldLeft(0L)((a, j) =>
-          a * 2L + bits(k * DedupEmbedding.EmbBandBits + j)))
-      }
-    }
-    val allBands = raw.map { case (id, e) => id -> bandsOf(e) }
-    val cap = DedupEmbedding.embHotBucketCap(raw.size.toLong)
-    val bucketN = allBands.values.flatten.groupBy(identity)
-      .map { case (kv, g) => kv -> g.size }
-    val ok = allBands.map { case (id, bs) =>
-      id -> bs.filter(kv => bucketN(kv) <= cap)
-    }
-    val members = ok.toSeq.flatMap { case (id, bs) => bs.map(_ -> id) }
-      .groupBy(_._1).map { case (kv, g) => kv -> g.map(_._2).toSet }
-    def ham(a: Long, b: Long): Int = {
-      val ba = allBands(a).map(_._2); val bb = allBands(b).map(_._2)
-      ba.zip(bb).map { case (x, y) =>
-        java.lang.Long.bitCount(x ^ y) }.sum
-    }
-    def cos(a: Long, b: Long): Double = {
-      val (va, vb) = (raw(a).map(_.toDouble), raw(b).map(_.toDouble))
-      va.zip(vb).map { case (x, y) => x * y }.sum /
-        (math.sqrt(va.map(x => x * x).sum) *
-          math.sqrt(vb.map(x => x * x).sum))
-    }
-    val selCos = scala.collection.mutable.ArrayBuffer.empty[Double]
-    val allCos = scala.collection.mutable.ArrayBuffer.empty[Double]
-    val bruteCos = scala.collection.mutable.ArrayBuffer.empty[Double]
-    Similarity.queryIdSetSeq(raw.keys.toSeq).foreach { qid =>
-      val cands = ok(qid).flatMap(kv => members(kv)).toSet - qid
-      val top = cands.toSeq.map(c => (c, ham(qid, c)))
-        .sortBy { case (c, h) => (h, c) }.take(DedupEmbedding.HammK)
-      top.zipWithIndex.foreach { case ((c, h), i) =>
-        assert(out((qid, i + 1)) == ((c, h)),
-          s"qid $qid rank ${i + 1} diverged")
-      }
-      val others = raw.keys.filter(_ != qid).toSeq
-        .map(c => (c, cos(qid, c)))
-      selCos ++= top.map { case (c, _) => cos(qid, c) }
-      allCos ++= others.map(_._2)
-      bruteCos ++= others.sortBy { case (c, s) => (-s, c) }
-        .take(DedupEmbedding.HammK).map(_._2)
-    }
-    def mean(xs: Iterable[Double]) = xs.sum / xs.size
-    // binary 96-bit signatures on this weakly-clustered random corpus
-    // are a COARSE angle proxy (all cosines ≈ N(0, 1/8), so top-10
-    // overlap with the float ranking is low — that honest limitation
-    // is the audit's point); the quality contract is that popcount
-    // retrieval still recovers most of the cosine headroom: the
-    // selected lists' mean cosine must sit well above the corpus
-    // baseline (measured 0.46 of the headroom at sf0.001:
-    // sel 0.139 vs corpus 0.001 vs exact-top 0.300; floor pinned
-    // with margin)
-    val headroom = mean(bruteCos) - mean(allCos)
-    assert(headroom > 0)
-    assert(mean(selCos) - mean(allCos) >= 0.35 * headroom,
-      s"Hamming lists recover too little cosine headroom: " +
-        s"sel=${mean(selCos)} all=${mean(allCos)} brute=${mean(bruteCos)}")
-  }
-
-  test("q354 JL distortion matches a sequential recompute and the " +
-      "spread is a sane distortion number") {
-    val row = DedupEmbedding.q354JlDistortion(spark, sf).collect().head
-    val raw = Tables.embeddings(spark, sf)
-      .select("vec_id", "embedding").collect()
-      .map(r => r.getLong(0) ->
-        r.getSeq[Float](1).toArray.map(x =>
-          math.floor(x.toDouble * 1000.0).toLong)).toMap
-    val dim = raw.values.head.length
-    val planes = DedupEmbedding.portablePlanes(dim).take(DedupEmbedding.JlDim)
-      .map(_.map(_.toLong))
-    def proj(v: Array[Long]): Seq[Long] =
-      planes.map(p => p.zip(v).map { case (c, q) => c * q }.sum)
-    val ratios = Similarity.queryIdSetSeq(raw.keys.toSeq)
-      .flatMap { q => (1 to 5).map(j => (q, q + j)) }
-      .filter { case (_, c) => raw.contains(c) }
-      .flatMap { case (q, c) =>
-        val d2 = raw(q).zip(raw(c))
-          .map { case (a, b) => (a - b) * (a - b) }.sum
-        if (d2 == 0L) None
-        else {
-          val (pa, pb) = (proj(raw(q)), proj(raw(c)))
-          val p2 = pa.zip(pb).map { case (a, b) => (a - b) * (a - b) }.sum
-          Some(math.round(p2.toDouble / d2.toDouble))
-        }
-      }
-    assert(row.getLong(0) == ratios.length.toLong)
-    assert(row.getLong(2) == ratios.min && row.getLong(3) == ratios.max)
-    assert(row.getDouble(4) >= 1.0)
-  }
-
-  /** HALF_UP-away-from-zero rounding (Spark round / DuckDB round on
-    * doubles) — `math.round` rounds half toward +inf, wrong for
-    * negative halves. */
-  private def embeddingsMicro(): Array[(Long, Int, Array[Long])] =
-    graft.sources.Tables.embeddings(spark, sf)
-      .select("vec_id", "label", "embedding").collect()
-      .map { r =>
-        (r.getLong(0), r.getInt(1),
-          r.getSeq[Float](2).toArray.map(v => rl(v.toDouble * 1e6)))
-      }
-
-  test("q387 int8 audit equals a sequential quantize-reconstruct " +
-      "replay and the coordinate error respects the scale bound") {
-    val rows = AnnIndex.q387Int8QuantAudit(spark, sf).collect()
-    val vecs = embeddingsMicro()
-    val perVec = vecs.flatMap { case (_, label, vm) =>
-      val scale = vm.map(math.abs).max
-      if (scale <= 0) None
-      else {
-        val rm = vm.map { x =>
-          val code = rl(x * 127.0 / scale)
-          rl(code * scale / 127.0)
-        }
-        val errs = vm.indices.map(d => vm(d) - rm(d))
-        // |err| <= scale/(2*127) quantization + 1 for the two roundings
-        assert(errs.map(math.abs).max <= scale / 254 + 1,
-          "per-coordinate error bound")
-        val dot = vm.indices.map(d => BigInt(vm(d)) * rm(d)).sum
-        val v2 = vm.map(x => BigInt(x) * x).sum
-        val r2 = rm.map(x => BigInt(x) * x).sum
-        val e2 = errs.map(e => BigInt(e) * e).sum
-        val cosU = rl(dot.toDouble /
-          (math.sqrt(v2.toDouble) * math.sqrt(r2.toDouble)) * 1e6)
-        Some((label, cosU, e2, v2, errs.map(math.abs).max))
-      }
-    }
-    val expected = perVec.groupBy(_._1).view.mapValues { vs =>
-      (vs.length.toLong, vs.map(_._2).sum, vs.map(_._2).min,
-        vs.map(_._5).max, vs.map(_._3).sum, vs.map(_._4).sum)
-    }.toMap
-    assert(rows.length == expected.size)
-    rows.foreach { r =>
-      val (n, sumCos, minCos, maxErr, e2, v2) = expected(r.getInt(0))
-      assert(r.getLong(1) == n)
-      assert(math.abs(r.getDouble(2) - sumCos.toDouble / n / 1e6) < 1e-6)
-      assert(math.abs(r.getDouble(3) - minCos / 1e6) < 1e-9)
-      assert(r.getLong(4) == maxErr)
-      assert(math.abs(r.getDouble(5) -
-        e2.toDouble / v2.toDouble) < 1e-6)
-    }
   }
 }

@@ -2,9 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.operators.Drift
 import graft.operators.{Drift => D}
-import graft.sources.Tables
 
 /** q151 — the PSI drift monitor pinned against an independent Scala
   * recompute, plus the drifted/identity branches of the PSI core. */
@@ -119,153 +117,6 @@ class DriftSpec extends SparkTestBase {
         (1 to 90).map(i => ev("click", i)).toDF(), 1L)
       val b1After = spark.read.parquet(sink + "/batch=1").count()
       assert(b1Before == 1 && b1After == 1)
-    }
-  }
-
-  test("q234 KS drift equals a sequential CDF-gap recompute and reads " +
-      "stable on the stationary stream") {
-    val out = Drift.q234KsDrift(spark, sf).collect()
-      .map(r => r.getString(0) -> ((r.getLong(1), r.getLong(2)),
-        (r.getDouble(3), r.getDouble(4), r.getString(5)))).toMap
-    val evs = Tables.events(spark, sf)
-      .select(unix_micros(col("ts")).as("us"), col("event_type"),
-        col("value")).collect()
-      .map(r => (r.getLong(0), r.getString(1), r.getDouble(2)))
-    val cut = (evs.map(_._1).min + evs.map(_._1).max) / 2
-    val flagged = evs.map(e => (e._2, e._3, e._1 < cut))
-    val edges = (1 to 9).map(i =>
-      r6(pct(flagged.filter(_._3).map(_._2), i / 10.0)))
-    def bucket(v: Double): Int = edges.count(v >= _)
-    flagged.groupBy(_._1).foreach { case (t, rows) =>
-      val byBucket = rows.groupBy(r => bucket(r._2)).toSeq.sortBy(_._1)
-      val nr = byBucket.map(_._2.count(_._3).toLong)
-      val nc = byBucket.map(_._2.count(!_._3).toLong)
-      val (tr, tc) = (nr.sum, nc.sum)
-      val gaps = byBucket.indices.map { i =>
-        math.abs(nr.take(i + 1).sum.toDouble / tr.toDouble -
-          nc.take(i + 1).sum.toDouble / tc.toDouble)
-      }
-      val ks = r6(gaps.max)
-      val dCrit = r6(Drift.KsCoeff05 * math.sqrt(
-        (tr + tc).toDouble / (tr.toDouble * tc.toDouble)))
-      val verdict = if (ks > dCrit) "drifted" else "stable"
-      assert(out(t) == (((tr, tc), (ks, dCrit, verdict))),
-        s"type $t diverged")
-      assert(verdict == "stable",
-        s"stationary synthetic stream must read stable ($t)")
-    }
-  }
-
-  test("q278 decile shifts equal a sequential two-half percentile " +
-      "replay") {
-    val out = Drift.q278QuantileDrift(spark, sf).collect()
-      .map(r => (r.getString(0), r.getInt(1)) -> (r.getDouble(2),
-        r.getDouble(3), r.getDouble(4),
-        if (r.isNullAt(5)) None else Some(r.getDouble(5)))).toMap
-    val evs = Tables.events(spark, sf)
-      .select("event_type", "ts", "value").collect()
-      .map { r =>
-        val t = r.getTimestamp(1)
-        (r.getString(0),
-          (t.getTime / 1000) * 1000000L + t.getNanos / 1000,
-          r.getDouble(2))
-      }
-    val cut = (evs.map(_._2).min + evs.map(_._2).max) / 2
-    val types = evs.map(_._1).distinct.sorted
-    types.foreach { t =>
-      val ref = evs.filter(e => e._1 == t && e._2 < cut).map(_._3).toSeq
-      val cur = evs.filter(e => e._1 == t && e._2 >= cut).map(_._3).toSeq
-      (1 to 9).foreach { d =>
-        val rv = pct(ref, d / 10.0); val cv = pct(cur, d / 10.0)
-        val expShift = r6(cv - rv)
-        val expPct = if (rv != 0.0) Some(r6((cv - rv) / rv)) else None
-        assert(out((t, d * 10)) == ((r6(rv), r6(cv), expShift, expPct)),
-          s"($t, ${d * 10}) diverged")
-      }
-    }
-    assert(out.size == types.size * 9)
-  }
-
-  test("q298 Wasserstein drift equals a sequential CDF-integral " +
-      "replay and is bounded by the value range") {
-    val ev = Tables.events(spark, sf)
-      .select(unix_micros(col("ts")).as("us"), col("event_type"),
-        expr("cast(round(value * 100, 0) as bigint)").as("c"))
-      .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2)))
-    val cut = (ev.map(_._1).min + ev.map(_._1).max) / 2
-    val got = Drift.q298WassersteinDrift(spark, sf).collect()
-    got.foreach { r =>
-      val rows = ev.filter(_._2 == r.getString(0))
-      val hist = rows.groupBy(_._3).map { case (c, xs) =>
-        (c, xs.count(_._1 < cut).toLong, xs.count(_._1 >= cut).toLong)
-      }.toSeq.sortBy(_._1)
-      val (nr, nc) = (hist.map(_._2).sum, hist.map(_._3).sum)
-      var (cr, cc) = (0L, 0L)
-      val terms = hist.zipWithIndex.map { case ((c, r1, c1), i) =>
-        cr += r1; cc += c1
-        val nxt = if (i + 1 < hist.length) hist(i + 1)._1 else c
-        micro(math.abs(cr.toDouble / nr - cc.toDouble / nc) *
-          (nxt - c).toDouble)
-      }
-      assert(r.getLong(1) == nr && r.getLong(2) == nc)
-      assert(r.getDouble(3) == rN(terms.sum.toDouble / 1000000d / 100, 6),
-        s"${r.getString(0)} w1")
-      // W1 is bounded by the support width
-      val range = (hist.last._1 - hist.head._1) / 100.0
-      assert(r.getDouble(3) >= 0 && r.getDouble(3) <= range + 1e-9)
-    }
-  }
-
-  test("q305 priority drift equals a sequential replay and TV is the " +
-      "half-sum of deltas") {
-    val ord = Tables.orders(spark, sf)
-      .select(unix_micros(col("o_orderdate")).as("us"),
-        col("o_orderpriority")).collect()
-      .map(r => (r.getLong(0), r.getString(1)))
-    val cut = (ord.map(_._1).min + ord.map(_._1).max) / 2
-    val prof = ord.groupBy(_._2).map { case (p, xs) =>
-      (p, xs.count(_._1 < cut).toLong, xs.count(_._1 >= cut).toLong) }
-      .toSeq.sortBy(_._1)
-    val (t1, t2) = (prof.map(_._2).sum, prof.map(_._3).sum)
-    val tvNum = prof.map(p => (p._2 * t2 - p._3 * t1).abs).sum
-    val tv = tvNum.toDouble / (2.0 * t1.toDouble * t2.toDouble)
-    val got = Drift.q305PriorityDrift(spark, sf).collect()
-    assert(got.map(_.getString(0)).toSeq == prof.map(_._1))
-    got.zip(prof).foreach { case (r, (_, n1, n2)) =>
-      assert(r.getLong(1) == n1 && r.getLong(2) == n2)
-      assert(r.getDouble(3) == rN(n1.toDouble / t1, 6))
-      assert(r.getDouble(4) == rN(n2.toDouble / t2, 6))
-      assert(r.getDouble(5) == rN(n2.toDouble / t2 - n1.toDouble / t1, 6))
-      assert(r.getDouble(6) == rN(tv, 6))
-    }
-    // TV ≡ half the L1 distance between the share vectors
-    val halfL1 = prof.map(p =>
-      math.abs(p._2.toDouble / t1 - p._3.toDouble / t2)).sum / 2
-    assert(math.abs(tv - halfL1) < 1e-12)
-  }
-
-  test("q334 DKW band equals a sequential CDF-inversion replay and " +
-      "brackets the median") {
-    val ev = Tables.events(spark, sf)
-      .select(col("event_type"),
-        expr("cast(round(value * 100, 0) as bigint)")).collect()
-      .map(r => (r.getString(0), r.getLong(1)))
-    val got = Drift.q334DkwMedianBand(spark, sf).collect()
-    got.foreach { r =>
-      val cs = ev.filter(_._1 == r.getString(0)).map(_._2)
-      val n = cs.length.toLong
-      val eps = math.sqrt(Drift.DkwLn40 / (2.0 * n))
-      val sorted = cs.sorted
-      val hist = sorted.distinct.map(v => (v, cs.count(_ <= v).toLong))
-      def inv(p: Double): Long =
-        hist.find(_._2.toDouble >= p * n).get._1
-      assert(r.getLong(1) == n)
-      assert(r.getDouble(2) == rN(pct(cs, 0.5) / 100, 4))
-      assert(r.getDouble(3) == rN(inv(0.5 - eps).toDouble / 100, 2))
-      assert(r.getDouble(4) == rN(inv(0.5 + eps).toDouble / 100, 2))
-      // the band brackets the median
-      assert(r.getDouble(3) <= r.getDouble(2) + 1e-9)
-      assert(r.getDouble(4) >= r.getDouble(2) - 1e-9)
     }
   }
 }

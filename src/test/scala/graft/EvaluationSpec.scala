@@ -2,9 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.functions.Hashing
 import graft.operators.{Evaluation, Skew}
-import graft.sources.Tables
 
 /** q205 pinned against the O(P·N) pairwise Mann–Whitney definition,
   * q206 against a sequential profile recompute. */
@@ -58,149 +56,88 @@ class EvaluationSpec extends SparkTestBase {
     assert(row.getLong(8) == math.ceil(counts.map(_._2).max / q(0.9)).toLong,
       "suggested salt")
   }
+}
 
-  test("q222 replicate means equal a sequential hash-subsample replay") {
-    val out = Evaluation.q222MetricStability(spark, sf).collect()
-      .map(r => r.getString(0) -> (r.getLong(1), r.getLong(3),
-        r.getDouble(4), r.getDouble(5), r.getLong(7))).toMap
-    val evs = Tables.events(spark, sf)
-      .select("event_type", "event_id", "value").collect()
-      .map(r => (r.getString(0), r.getLong(1),
-        math.round(r.getDouble(2) * 100)))
-    evs.groupBy(_._1).foreach { case (t, rows) =>
-      val fullMean = rows.map(_._3).sum.toDouble / rows.length / 100.0
-      val means = (0 until Evaluation.StabilityReps).map { b =>
-        val sub = rows.filter(r =>
-          ((Hashing.md5Hash60Value(s"boot:${r._2}") >> b) & 1L) == 1L)
-        sub.map(_._3).sum.toDouble / sub.length / 100.0
+/** q207/q208/q209 pinned against sequential recomputes and (q209) the
+  * rank-limit physical plan. */
+class Evaluation2Spec extends SparkTestBase {
+
+  test("q207 lead-lag r equals a sequential Pearson over the aligned " +
+      "daily series") {
+    val daily = graft.sources.Tables.events(spark, sf)
+      .groupBy(col("event_type"), to_date(col("ts")).as("d"))
+      .agg(count(lit(1)).as("n")).collect()
+      .map(r => (r.getString(0), r.getDate(1).toLocalDate.toEpochDay,
+        r.getLong(2)))
+    val types = daily.map(_._1).distinct.sorted
+    val byType = daily.groupBy(_._1)
+      .view.mapValues(_.map(x => x._2 -> x._3).toMap).toMap
+    val got = graft.operators.CrossCorr.q207LeadLag(spark, sf).collect()
+      .map(r => (r.getString(0), r.getString(1), r.getInt(2)) ->
+        (r.getLong(3), r.getDouble(4))).toMap
+    for (t1 <- types; t2 <- types if t1 < t2; lag <- -3 to 3) {
+      val m1 = byType(t1); val m2 = byType(t2)
+      val pairs = m1.toSeq.flatMap { case (d, n1) =>
+        m2.get(d + lag).map(n2 => (n1, n2))
       }
-      val within = means.count(m => math.abs(m - fullMean) <=
-        fullMean * 0.01).toLong
-      assert(out(t) == ((rows.length.toLong,
-        Evaluation.StabilityReps.toLong, r6(means.min), r6(means.max),
-        within)), s"type $t diverged")
-    }
-  }
-
-  test("q229 kappa equals a sequential contingency recompute and " +
-      "respects the po/pe consistency laws") {
-    val out = Evaluation.q229RaterKappa(spark, sf).collect()
-      .map(r => r.getString(0) -> ((r.getLong(1), r.getLong(2),
-        r.getLong(3), r.getLong(4), r.getLong(5)),
-        (r.getDouble(6), r.getDouble(7), r.getDouble(8)))).toMap
-    val docs = Tables.documents(spark, sf)
-      .select("lang", "n_chars", "text").collect()
-      .map { r =>
-        val ws = words(r.getString(2))
-        (r.getString(0), r.getLong(1), ws.length, ws.distinct.length)
-      }.filter(_._3 >= 1)
-    val medChars = pct(docs.map(_._2.toDouble), 0.5)
-    val medTtr = pct(docs.map(d => d._4.toDouble / d._3.toDouble), 0.5)
-    docs.groupBy(_._1).foreach { case (lang, rows) =>
-      val flags = rows.map(d => (d._2.toDouble >= medChars,
-        d._4.toDouble / d._3.toDouble >= medTtr))
-      val n11 = flags.count(f => f._1 && f._2).toLong
-      val n10 = flags.count(f => f._1 && !f._2).toLong
-      val n01 = flags.count(f => !f._1 && f._2).toLong
-      val n00 = flags.count(f => !f._1 && !f._2).toLong
-      val n = rows.length.toLong
-      val po = (n11.toDouble + n00.toDouble) / n.toDouble
-      val pe = ((n11.toDouble + n10.toDouble) * (n11.toDouble + n01.toDouble) +
-        (n01.toDouble + n00.toDouble) * (n10.toDouble + n00.toDouble)) /
-        (n.toDouble * n.toDouble)
-      val kappa = (po - pe) / (1.0 - pe)
-      assert(out(lang) == (((n, n11, n10, n01, n00),
-        (r6(po), r6(pe), r6(kappa)))), s"lang $lang diverged")
-      // kappa laws: bounded above by 1, and agreement beyond chance
-      // can never exceed observed agreement
-      assert(kappa <= 1.0 + 1e-12, s"kappa > 1 for $lang")
-      assert(po + 1e-12 >= kappa * (1.0 - pe) + pe,
-        s"kappa inconsistent with po/pe for $lang")
-    }
-  }
-
-  private def qNano(x: Double): Long =
-    BigDecimal(x * 1e9).setScale(0, BigDecimal.RoundingMode.HALF_UP).toLong
-
-  test("q242 Brier decomposition equals a sequential recompute and " +
-      "satisfies the Murphy identity") {
-    val out = Evaluation.q242BrierDecomposition(spark, sf).collect()
-      .map(r => r.getInt(0) -> ((r.getLong(1), r.getDouble(2),
-        r.getLong(3), r.getDouble(4)), (r.getDouble(5), r.getDouble(6),
-        r.getDouble(7), r.getDouble(8)))).toMap
-    val evs = Tables.events(spark, sf)
-      .select("user_id", "event_type", "value").collect()
-      .map(r => (r.getLong(0), r.getString(1), r.getDouble(2)))
-    val perUser = evs.groupBy(_._1).map { case (u, rs) =>
-      (u, rs.map(r => math.round(r._3 * 100)).sum,
-        rs.count(_._2 == "purchase").toLong)
-    }.toSeq
-    val med = pct(perUser.map(_._3.toDouble), 0.5)
-    val users = perUser.map(u => (u._1, u._2,
-      if (u._3.toDouble > med) 1L else 0L,
-      Hashing.md5Hash60Value(s"brier:${u._1}") % 2 == 0))
-    val cal = users.filter(_._4)
-    val probes = (1 until Evaluation.BrierBins)
-      .map(_.toDouble / Evaluation.BrierBins)
-    val edges = probes.map(p =>
-      r6(pct(cal.map(_._2.toDouble), p)))
-    def binOf(c: Long): Int = edges.count(c.toDouble >= _)
-    val fMap = cal.groupBy(u => binOf(u._2)).map { case (b, us) =>
-      b -> (us.length.toLong, us.map(_._3).sum,
-        us.map(_._3).sum.toDouble / us.length.toDouble)
-    }
-    val ev = users.filterNot(_._4)
-    val evMap = ev.groupBy(u => binOf(u._2)).map { case (b, us) =>
-      b -> (us.length.toLong, us.map(_._3).sum)
-    }.filter { case (b, _) => fMap.contains(b) }
-    val nTotal = evMap.values.map(_._1).sum
-    val posTotal = evMap.values.map(_._2).sum
-    val ybar = posTotal.toDouble / nTotal.toDouble
-    var relMicro = 0L; var resMicro = 0L; var brierMicro = 0L
-    evMap.toSeq.sortBy(_._1).foreach { case (b, (nEv, posEv)) =>
-      val f = fMap(b)._3
-      val yk = posEv.toDouble / nEv.toDouble
-      relMicro += qNano(nEv * (f - yk) * (f - yk))
-      resMicro += qNano(nEv * (yk - ybar) * (yk - ybar))
-      brierMicro += qNano(nEv * f * f - 2 * f * posEv + posEv)
-      assert(out(b)._1 == ((fMap(b)._1, r6(f), nEv, r6(yk))),
-        s"bin $b cells diverged")
-    }
-    val rel = r6(relMicro.toDouble / 1e9 / nTotal)
-    val res = r6(resMicro.toDouble / 1e9 / nTotal)
-    val unc = r6(ybar * (1.0 - ybar))
-    val brier = r6(brierMicro.toDouble / 1e9 / nTotal)
-    out.values.foreach { case (_, totals) =>
-      assert(totals == ((rel, res, unc, brier)), "summary diverged")
-    }
-    assert(math.abs(brier - (rel - res + unc)) < 5e-6,
-      "Murphy identity: Brier = REL - RES + UNC")
-  }
-
-  test("q254 median stability equals a sequential bit-membership " +
-      "replay with type-7 medians") {
-    val out = Evaluation.q254MedianStability(spark, sf).collect()
-      .map(r => r.getString(0) -> ((r.getLong(1), r.getDouble(2),
-        r.getLong(3)), (r.getDouble(4), r.getDouble(5), r.getDouble(6),
-        r.getLong(7)))).toMap
-    val evs = Tables.events(spark, sf)
-      .select(col("event_type"), col("event_id"), col("value")).collect()
-      .map(r => (r.getString(0), r.getLong(1),
-        math.round(r.getDouble(2) * 100)))
-    evs.groupBy(_._1).foreach { case (t, rows) =>
-      val medFull = pct(rows.map(_._3.toDouble), 0.5)
-      val reps = (0 until Evaluation.StabilityReps).flatMap { b =>
-        val sub = rows.filter(r =>
-          ((Hashing.md5Hash60Value(s"mboot:${r._2}") >> b) & 1L) == 1L)
-        if (sub.nonEmpty) Some(pct(sub.map(_._3.toDouble), 0.5)) else None
+      val k = pairs.length.toLong
+      if (k >= 2) {
+        val s1 = pairs.map(_._1).sum; val s2 = pairs.map(_._2).sum
+        val s12 = pairs.map(p => p._1 * p._2).sum
+        val s11 = pairs.map(p => p._1 * p._1).sum
+        val s22 = pairs.map(p => p._2 * p._2).sum
+        val num = (k * s12 - s1 * s2).toDouble
+        val d1 = (k * s11 - s1 * s1).toDouble
+        val d2 = (k * s22 - s2 * s2).toDouble
+        if (d1 > 0 && d2 > 0) {
+          val r = math.rint(num / math.sqrt(d1 * d2) * 1e6) / 1e6
+          val g = got.get((t1, t2, lag))
+          assert(g.exists(v => v._1 == k && v._2 == r),
+            s"($t1,$t2,$lag): got $g exp ($k,$r)")
+        }
       }
-      val within = reps.count(m =>
-        math.abs(m - medFull) <= math.abs(medFull) * 0.01).toLong
-      assert(out(t) == (((rows.length.toLong, r4(medFull / 100.0),
-        reps.length.toLong), (r4(reps.min / 100.0), r4(reps.max / 100.0),
-        r4((reps.max - reps.min) / 100.0), within))),
-        s"type $t diverged")
-      assert(reps.max >= reps.min && within <= reps.length)
     }
+  }
+
+  test("q208 digit counts match a sequential recompute and residuals " +
+      "are consistent with the chi-square total") {
+    val cents = graft.sources.Tables.orders(spark, sf)
+      .select(expr("cast(round(o_totalprice * 100, 0) as bigint)").as("c"))
+      .collect().map(_.getLong(0)).filter(_ > 0)
+    val obs = cents.groupBy(_.toString.head.asDigit)
+      .view.mapValues(_.length.toLong).toMap
+    val n = cents.length.toLong
+    val rows = graft.operators.Evaluation.q208DigitAudit(spark, sf)
+      .collect()
+    assert(rows.map(_.getInt(0)).toSeq == obs.keys.toSeq.sorted)
+    var chi2micro = 0L
+    rows.foreach { r =>
+      val d = r.getInt(0)
+      assert(r.getLong(1) == obs(d), s"digit $d count")
+      val p = graft.operators.Evaluation.Benford6.toMap.apply(d)
+      val e = p * n
+      assert(r.getDouble(2) == math.rint(e * 1e4) / 1e4, s"digit $d e")
+      chi2micro += math.rint((obs(d) - e) * (obs(d) - e) / e * 1e6).toLong
+    }
+    assert(rows.head.getDouble(4) ==
+      math.rint(chi2micro / 1e6 * 1e6) / 1e6)
+  }
+
+  test("q209 takes exactly K per stratum, is repartition-invariant, " +
+      "and plans as WindowGroupLimit (map-side top-K)") {
+    val out = graft.operators.Evaluation.q209EvalSample(spark, sf)
+    val rows = out.collect()
+    val perType = rows.groupBy(_.getString(0)).view.mapValues(_.length)
+    perType.foreach { case (t, n) =>
+      assert(n == graft.operators.Evaluation.SampleK, s"stratum $t: $n")
+    }
+    // rank-limit pushdown: the physical plan must carry WindowGroupLimit
+    // so each map task keeps only its local top-K before the shuffle
+    assert(out.queryExecution.executedPlan.toString
+      .contains("WindowGroupLimit"), "rank-limit pushdown missing")
+    // hash-rank determinism under a different partitioning
+    val again = graft.operators.Evaluation.q209EvalSample(spark, sf)
+      .repartition(7).orderBy("event_type", "rn").collect()
+    assert(rows.map(_.toSeq).toSeq == again.map(_.toSeq).toSeq)
   }
 }

@@ -2,9 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.operators.ExactSubstr
 import graft.operators.{ExactSubstr => X}
-import graft.sources.Tables
 
 /** q204 pinned two ways: a crafted corpus with a KNOWN 12-word
   * verbatim run (plus a decoy below threshold), and a sequential
@@ -73,59 +71,5 @@ class ExactSubstrSpec extends SparkTestBase {
     if (got.size < X.TopPairs)
       assert(got.keySet == expected.keySet,
         s"missing pairs: ${expected.keySet -- got.keySet}")
-  }
-
-  test("q219 span excision equals a sequential interval-union recompute") {
-    val out = ExactSubstr.q219SpanExcision(spark, sf).collect()
-      .map(r => r.getString(0) -> (r.getLong(1), r.getLong(2), r.getLong(3),
-        r.getLong(4), r.getLong(5))).toMap
-    val docs = Tables.documents(spark, sf)
-      .select("doc_id", "source", "text").collect()
-      .map(r => (r.getLong(0), r.getString(1), r.getString(2)))
-    val W = 8
-    // all window occurrences, globally ordered per hash
-    val occ = docs.flatMap { case (id, _, text) =>
-      val ws = text.split(" ", -1)
-      if (ws.length < W) Seq.empty
-      else (1 to (ws.length - W + 1)).map { i =>
-        val h = {
-          val d = java.security.MessageDigest.getInstance("MD5")
-            .digest(ws.slice(i - 1, i + W - 1).mkString(" ")
-              .getBytes("UTF-8"))
-          d.map("%02x".format(_)).mkString
-        }
-        (h, id, i)
-      }
-    }
-    val dupByDoc = occ.groupBy(_._1).values.flatMap { os =>
-      os.sortBy(o => (o._2, o._3)).drop(1)
-    }.toSeq.groupBy(_._2)
-    def unionLen(intervals: Seq[(Int, Int)]): (Long, Long) = {
-      var spans = 0L; var words = 0L
-      var curS = -1; var curE = -2
-      intervals.sortBy(_._1).foreach { case (s, e) =>
-        if (s > curE) {
-          if (curE >= curS) { spans += 1; words += curE - curS + 1 }
-          curS = s; curE = e
-        } else curE = math.max(curE, e)
-      }
-      if (curE >= curS) { spans += 1; words += curE - curS + 1 }
-      (words, spans)
-    }
-    val perSource = docs.groupBy(_._2).map { case (src, ds) =>
-      val words = ds.map(_._3.split(" ", -1).length.toLong).sum
-      val touched = ds.count(d => dupByDoc.contains(d._1)).toLong
-      val (ex, sp) = ds.map { d =>
-        dupByDoc.get(d._1) match {
-          case Some(os) => unionLen(os.map(o => (o._3, o._3 + W - 1)))
-          case None => (0L, 0L)
-        }
-      }.foldLeft((0L, 0L)) { case ((a, b), (c, d)) => (a + c, b + d) }
-      src -> ((ds.length.toLong, touched, words, ex, sp))
-    }
-    perSource.foreach { case (src, exp) =>
-      assert(out(src) == exp, s"source $src diverged: ${out(src)} vs $exp")
-    }
-    assert(perSource.values.exists(_._2 > 0), "fixture has excisions")
   }
 }

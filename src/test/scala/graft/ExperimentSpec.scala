@@ -3,9 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 
 import graft.functions.Hashing
-import graft.operators.Experiment
 import graft.operators.{Experiment => E}
-import graft.sources.Tables
 
 /** q165 — arm assignment and Welch t pinned against an independent
   * sequential recompute, plus a driven true-effect branch. */
@@ -59,329 +57,5 @@ class ExperimentSpec extends SparkTestBase {
     assert(math.abs(welch(a, b)) > 1.96)
     // and an identical pair must not
     assert(math.abs(welch(a, a.map(identity))) < 1e-9)
-  }
-
-  test("q248 diff-in-diff equals a sequential panel recompute and the " +
-      "estimate is consistent with the four cells") {
-    val out = Experiment.q248DiffInDiff(spark, sf).collect()
-      .map(r => (r.getString(0), r.getString(1)) ->
-        ((r.getLong(2), r.getDouble(3)), r.getDouble(4))).toMap
-    val evs = Tables.events(spark, sf)
-      .select(col("user_id"), unix_micros(col("ts")).as("us"),
-        col("value")).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
-    val cut = (evs.map(_._2).min + evs.map(_._2).max) / 2
-    val panel = evs.groupBy(e =>
-      (e._1, if (e._2 < cut) "pre" else "post")).map { case (k, rs) =>
-      (k._1, k._2, rs.map(r => math.round(r._3 * 100)).sum)
-    }
-    val cells = panel.groupBy(p =>
-      (if (Hashing.md5Hash60Value(s"did:${p._1}") % 2 == 0) "treat"
-       else "control", p._2)).map { case (k, us) =>
-      k -> (us.size.toLong,
-        us.map(_._3).sum.toDouble / us.size.toDouble)
-    }
-    val did = (cells(("treat", "post"))._2 - cells(("treat", "pre"))._2) -
-      (cells(("control", "post"))._2 - cells(("control", "pre"))._2)
-    cells.foreach { case (k, (n, mean)) =>
-      assert(out(k) == (((n, r4(mean / 100.0)), r4(did / 100.0))),
-        s"cell $k diverged")
-    }
-    assert(out.size == 4, "exactly four group x period cells")
-  }
-
-  test("q251 Brown-Forsythe equals a sequential recompute on exact " +
-      "half-cent deviations") {
-    val out = Experiment.q251BrownForsythe(spark, sf).collect()
-      .map(r => r.getString(0) -> ((r.getLong(1), r.getLong(2)),
-        (r.getDouble(3), r.getDouble(4), r.getDouble(5), r.getString(6))))
-      .toMap
-    val evs = Tables.events(spark, sf)
-      .select(col("event_type"), unix_micros(col("ts")).as("us"),
-        col("value")).collect()
-      .map(r => (r.getString(0), r.getLong(1),
-        math.round(r.getDouble(2) * 100)))
-    val cut = (evs.map(_._2).min + evs.map(_._2).max) / 2
-    evs.groupBy(_._1).foreach { case (t, rows) =>
-      val (ref, cur) = rows.partition(_._2 < cut)
-      val medR = pct(ref.map(_._3.toDouble), 0.5)
-      val medC = pct(cur.map(_._3.toDouble), 0.5)
-      def z2(xs: Seq[Long], med: Double): Seq[Long] =
-        xs.map(x => BigDecimal(math.abs(x - med) * 2)
-          .setScale(0, BigDecimal.RoundingMode.HALF_UP).toLong)
-      val za = z2(ref.map(_._3).toSeq, medR)
-      val zb = z2(cur.map(_._3).toSeq, medC)
-      val (na, sa, qa) = (za.length.toLong, za.sum, za.map(x => x * x).sum)
-      val (nb, sb, qb) = (zb.length.toLong, zb.sum, zb.map(x => x * x).sum)
-      val ma = sa.toDouble / na
-      val mb = sb.toDouble / nb
-      val va = (qa.toDouble - sa.toDouble * ma) / (na - 1)
-      val vb = (qb.toDouble - sb.toDouble * mb) / (nb - 1)
-      val tst = (ma - mb) / math.sqrt(va / na + vb / nb)
-      val verdict =
-        if (math.abs(tst) > 1.96) "spread_changed" else "spread_stable"
-      assert(out(t) == (((na, nb), (r4(ma / 200), r4(mb / 200),
-        r6(tst), verdict))), s"type $t diverged")
-    }
-  }
-
-  test("q253 rate-change test equals a sequential recompute") {
-    val out = Experiment.q253RateChange(spark, sf).collect()
-      .map(r => r.getString(0) -> ((r.getLong(1), r.getLong(2)),
-        (r.getDouble(3), r.getDouble(4), r.getString(5)))).toMap
-    val evs = Tables.events(spark, sf)
-      .select(col("event_type"), unix_micros(col("ts"))).collect()
-      .map(r => (r.getString(0), r.getLong(1)))
-    val t0 = evs.map(_._2).min
-    val t1 = evs.map(_._2).max
-    val cut = (t0 + t1) / 2
-    val p0 = (cut - t0).toDouble / ((cut - t0) + (t1 - cut + 1)).toDouble
-    evs.groupBy(_._1).foreach { case (t, rows) =>
-      val c1 = rows.count(_._2 < cut).toLong
-      val c2 = rows.count(_._2 >= cut).toLong
-      val n = c1 + c2
-      val z = (c1.toDouble - n.toDouble * p0) /
-        math.sqrt(n.toDouble * p0 * (1.0 - p0))
-      val verdict =
-        if (math.abs(z) > 1.96) "rate_changed" else "rate_stable"
-      assert(out(t) == (((c1, c2),
-        (r2(n.toDouble * p0), r6(z), verdict))), s"type $t diverged")
-    }
-  }
-
-  test("q280 MDE equals a sequential per-arm recompute and shrinks " +
-      "with sample size") {
-    val rows = Tables.events(spark, sf)
-      .select(col("event_type"), col("user_id"),
-        expr("cast(round(value * 100, 0) as bigint)").as("cents"))
-      .collect()
-      .map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
-    def inA(u: Long): Boolean = Hashing.md5Hash60Value(s"arm:$u") % 2 == 0
-    val got = Experiment.q280AbPower(spark, sf).collect()
-    assert(got.nonEmpty)
-    got.foreach { r =>
-      val tpe = r.getString(0)
-      val (as, bs) = rows.filter(_._1 == tpe).partition(t => inA(t._2))
-      val (na, nb) = (as.length.toLong, bs.length.toLong)
-      assert(r.getLong(1) == na && r.getLong(2) == nb, s"$tpe arm sizes")
-      val (sa, qa) = (as.map(_._3).sum, as.map(t => t._3 * t._3).sum)
-      val (sb, qb) = (bs.map(_._3).sum, bs.map(t => t._3 * t._3).sum)
-      val ma = sa.toDouble / na
-      val mb = sb.toDouble / nb
-      val va = (qa.toDouble - sa.toDouble * ma) / (na - 1)
-      val vb = (qb.toDouble - sb.toDouble * mb) / (nb - 1)
-      val mde = Experiment.ZSum6 * math.sqrt(va / na + vb / nb)
-      assert(r.getDouble(3) == rN(ma / 100, 4), s"$tpe mean_a")
-      assert(r.getDouble(4) == rN(mde / 100, 4), s"$tpe mde_abs")
-      assert(r.getDouble(5) == rN(mde / ma, 6), s"$tpe mde_rel")
-      assert(r.getDouble(4) > 0, s"$tpe zero MDE")
-      // law: quadrupling both arms halves the MDE (same variances)
-      val mde4 = Experiment.ZSum6 *
-        math.sqrt(va / (4 * na) + vb / (4 * nb))
-      assert(math.abs(mde4 - mde / 2) < 1e-9 * mde)
-    }
-  }
-
-  test("q287 peeking audit equals a sequential day-by-day replay") {
-    val ev = Tables.events(spark, sf)
-      .select(col("event_type"), to_date(col("ts")).as("day"),
-        col("user_id"),
-        expr("cast(round(value * 100, 0) as bigint)").as("cents"))
-      .collect()
-      .map(r => (r.getString(0), r.getDate(1), r.getLong(2), r.getLong(3)))
-    def inA(u: Long): Boolean = Hashing.md5Hash60Value(s"arm:$u") % 2 == 0
-    def zOf(rows: Seq[(Boolean, Long)]): Option[Double] = {
-      val (as, bs) = rows.partition(_._1)
-      val (na, nb) = (as.length.toLong, bs.length.toLong)
-      if (na < 2 || nb < 2) return None
-      val (sa, qa) = (as.map(_._2).sum, as.map(t => t._2 * t._2).sum)
-      val (sb, qb) = (bs.map(_._2).sum, bs.map(t => t._2 * t._2).sum)
-      val ma = sa.toDouble / na
-      val mb = sb.toDouble / nb
-      val va = (qa.toDouble - sa.toDouble * ma) / (na - 1)
-      val vb = (qb.toDouble - sb.toDouble * mb) / (nb - 1)
-      val denom = va / na + vb / nb
-      if (denom > 0) Some((ma - mb) / math.sqrt(denom)) else None
-    }
-    val got = Experiment.q287PeekingAudit(spark, sf).collect()
-    got.foreach { r =>
-      val tpe = r.getString(0)
-      val rows = ev.filter(_._1 == tpe)
-        .map(t => (t._2, inA(t._3), t._4))
-      val days = rows.map(_._1).distinct.sortBy(_.getTime)
-      assert(r.getInt(1) == days.length, s"$tpe n_days")
-      val zs = days.zipWithIndex.map { case (d, i) =>
-        (i + 1, zOf(rows.filter(!_._1.after(d)).map(t => (t._2, t._3))))
-      }
-      val overs = zs.filter(_._2.exists(z => math.abs(z) > 1.96))
-      if (overs.isEmpty) assert(r.isNullAt(2), s"$tpe stop idx")
-      else assert(r.getInt(2) == overs.head._1, s"$tpe stop idx")
-      assert(r.getLong(3) == overs.length.toLong, s"$tpe days_over")
-      val fz = zOf(rows.map(t => (t._2, t._3)))
-      fz match {
-        case Some(z) =>
-          assert(r.getDouble(4) == rN(z, 6), s"$tpe final_z")
-          assert(r.getBoolean(5) == (math.abs(z) > 1.96))
-          assert(r.getBoolean(6) ==
-            (overs.nonEmpty && !(math.abs(z) > 1.96)))
-        case None =>
-          assert(r.isNullAt(4) && !r.getBoolean(5))
-          assert(r.getBoolean(6) == overs.nonEmpty)
-      }
-      // consistency: a first stop implies at least one over-day
-      if (!r.isNullAt(2)) assert(r.getLong(3) > 0)
-    }
-  }
-
-  test("q295 winsorized Welch equals a sequential clamp replay and " +
-      "agrees with q165 on the raw t") {
-    val ev = Tables.events(spark, sf)
-      .select(col("event_type"), col("user_id"),
-        expr("cast(round(value * 100, 0) as bigint)").as("cents"))
-      .collect()
-      .map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
-    def inA(u: Long): Boolean = Hashing.md5Hash60Value(s"arm:$u") % 2 == 0
-    def welch(as: Seq[Double], bs: Seq[Double]): Double = {
-      val (na, nb) = (as.length, bs.length)
-      val (ma, mb) = (as.sum / na, bs.sum / nb)
-      val va = (as.map(x => x * x).sum - as.sum * ma) / (na - 1)
-      val vb = (bs.map(x => x * x).sum - bs.sum * mb) / (nb - 1)
-      (ma - mb) / math.sqrt(va / na + vb / nb)
-    }
-    val got = Experiment.q295WinsorizedWelch(spark, sf).collect()
-    got.foreach { r =>
-      val tpe = r.getString(0)
-      val rows = ev.filter(_._1 == tpe)
-      val (lo, hi) = (pct(rows.map(_._3), 0.05), pct(rows.map(_._3), 0.95))
-      val qw = rows.map(t =>
-        (inA(t._2), t._3, micro(math.min(math.max(t._3.toDouble, lo), hi))))
-      val (as, bs) = qw.partition(_._1)
-      assert(r.getLong(1) == as.length.toLong &&
-        r.getLong(2) == bs.length.toLong)
-      // raw and winsorized t from exact integer sums (mirrors the
-      // registered fixed expression up to the replay's equivalent
-      // double arithmetic — asserted within 1 ulp-ish tolerance
-      // because the replay folds Double seqs, then exactly on rounds)
-      val tRawQ = welch(as.map(_._2.toDouble), bs.map(_._2.toDouble))
-      val tWQ = welch(as.map(_._3.toDouble), bs.map(_._3.toDouble))
-      assert(math.abs(r.getDouble(4) - tRawQ) < 1e-6, s"$tpe raw")
-      assert(math.abs(r.getDouble(5) - tWQ) < 1e-6, s"$tpe winsor")
-      assert(r.getString(6) ==
-        (if (math.abs(r.getDouble(4)) > 1.96) "significant"
-         else "not_significant"))
-      assert(r.getString(7) ==
-        (if (math.abs(r.getDouble(5)) > 1.96) "significant"
-         else "not_significant"))
-      assert(r.getBoolean(8) ==
-        ((math.abs(r.getDouble(4)) > 1.96) !=
-          (math.abs(r.getDouble(5)) > 1.96)))
-    }
-  }
-
-  test("q308 duration planner equals a sequential recompute and is " +
-      "consistent with the q280 MDE") {
-    val got = Experiment.q308DurationPlanner(spark, sf).collect()
-    val mde = Experiment.q280AbPower(spark, sf).collect()
-      .map(r => r.getString(0) -> r.getDouble(4)).toMap
-    got.foreach { r =>
-      val tpe = r.getString(0)
-      assert(r.getDouble(6) > 0, s"$tpe days")
-      // consistency law: if the current MDE (dollars) already beats
-      // the target delta, the observed window must be long enough,
-      // and vice versa (same z, same variances, equal-allocation
-      // approximation makes this monotone for near-balanced arms)
-      val target = r.getDouble(4)
-      if (mde(tpe) <= target * 0.7)
-        assert(r.getBoolean(7), s"$tpe should be enough")
-      if (mde(tpe) >= target * 1.5)
-        assert(!r.getBoolean(7), s"$tpe should need more")
-    }
-  }
-
-  test("q318 QTE equals a sequential per-arm quantile replay") {
-    val ev = Tables.events(spark, sf)
-      .select(col("event_type"), col("user_id"),
-        expr("cast(round(value * 100, 0) as bigint)").as("c"))
-      .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
-    def inA(u: Long): Boolean = Hashing.md5Hash60Value(s"arm:$u") % 2 == 0
-    val got = Experiment.q318QuantileEffects(spark, sf).collect()
-    got.foreach { r =>
-      val rows = ev.filter(_._1 == r.getString(0))
-      val (as, bs) = rows.partition(t => inA(t._2))
-      val p = r.getInt(1) / 100.0
-      val qa = pct(as.map(_._3), p)
-      val qb = pct(bs.map(_._3), p)
-      assert(r.getDouble(2) == rN(qa / 100, 4), s"${r.getString(0)} qa")
-      assert(r.getDouble(3) == rN(qb / 100, 4))
-      assert(r.getDouble(4) == rN((qa - qb) / 100, 4) + 0.0)
-    }
-    // 9 probes per type
-    assert(got.groupBy(_.getString(0)).forall(_._2.length == 9))
-  }
-
-  test("q364 Neyman allocation: weights match exact moments, the " +
-      "largest-remainder top-up lands the budget exactly") {
-    val rows = Experiment.q364NeymanAllocation(spark, sf).collect()
-    assert(rows.map(_.getLong(5)).sum == Experiment.NeymanBudget,
-      "allocations must sum to the budget")
-    // weights from an independent BigInt moment recompute
-    val cust = Tables.customer(spark, sf)
-      .select("c_mktsegment", "c_acctbal").collect()
-      .map(r => (r.getString(0), math.round(r.getDouble(1) * 100)))
-    val byStratum = cust.groupBy(_._1).map { case (s, g) =>
-      val xs = g.map(_._2)
-      val n = BigInt(xs.length)
-      val sx = xs.map(BigInt(_)).sum
-      val sxx = xs.map(x => BigInt(x) * x).sum
-      val s2 = (n * sxx - sx * sx).toDouble /
-        (n.toDouble * n.toDouble * (n.toDouble - 1.0))
-      s -> (xs.length.toLong,
-        math.round(xs.length.toDouble * math.sqrt(s2)))
-    }
-    rows.foreach { r =>
-      val (n, w) = byStratum(r.getString(0))
-      assert(r.getLong(1) == n && r.getLong(3) == w,
-        s"stratum ${r.getString(0)} diverged")
-      assert(r.getLong(5) - r.getLong(4) <= 1L,
-        "top-up adds at most one unit")
-    }
-    // Neyman law: the highest-spread×size stratum gets the most
-    val best = rows.maxBy(_.getLong(3))
-    assert(best.getLong(5) == rows.map(_.getLong(5)).max)
-  }
-
-  test("q365 log-rank equals a sequential Mantel–Haenszel recompute " +
-      "and the A/A-like fixture stays under the 5% critical value") {
-    val row = Experiment.q365LogrankTest(spark, sf).collect().head
-    val lifes = Tables.lineitem(spark, sf)
-      .select(col("l_orderkey"), col("l_shipdate"))
-      .join(Tables.orders(spark, sf),
-        col("l_orderkey") === col("o_orderkey"))
-      .select(col("o_orderpriority"),
-        datediff(to_date(col("l_shipdate")), to_date(col("o_orderdate")))
-          .as("life")).collect()
-      .map(r => (Set("1-URGENT", "2-HIGH")(r.getString(0)), r.getInt(1)))
-    val ts = lifes.map(_._2).distinct.sorted
-    var uM = 0L; var vM = 0L
-    ts.foreach { t =>
-      val atRisk = lifes.filter(_._2 >= t)
-      val n = atRisk.length.toLong
-      val n1 = atRisk.count(_._1).toLong
-      val d = atRisk.count(_._2 == t).toLong
-      val d1 = atRisk.count(r => r._1 && r._2 == t).toLong
-      if (n >= 2 && d > 0) {
-        uM += math.round((d1.toDouble - d.toDouble * n1 / n) * 1e6)
-        vM += math.round(n1.toDouble * (n - n1) * d * (n - d) /
-          (n.toDouble * n * (n - 1)) * 1e6)
-      }
-    }
-    assert(row.getLong(0) == lifes.count(_._1).toLong)
-    assert(row.getLong(2) == uM && row.getLong(3) == vM,
-      s"U/V diverged: ${row.getLong(2)}/${row.getLong(3)} vs $uM/$vM")
-    assert(row.getDouble(4) ==
-      r6(uM.toDouble * uM / vM.toDouble / 1e6))
-    // shipdate is priority-independent on this synthetic corpus: the
-    // test must NOT reject at alpha = 0.05 (chi2_1 critical 3.841)
-    assert(row.getDouble(4) < 3.841, s"A/A fixture rejected: $row")
   }
 }

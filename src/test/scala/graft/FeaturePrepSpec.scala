@@ -2,7 +2,6 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.functions.Hashing
 import graft.operators.FeaturePrep
 import graft.sources.Tables
 
@@ -110,210 +109,5 @@ class FeaturePrepSpec extends SparkTestBase {
     val miTotal = out.head._2._3
     assert(math.abs(miTotal - microTotal / 1e6) < 1e-4, "MI total")
     assert(miTotal >= 0.0 - 1e-6, "MI is nonnegative")
-  }
-
-  test("q227 feature correlations equal a sequential sufficient-" +
-      "statistics recompute") {
-    import graft.operators.FeaturePrep
-    val out = FeaturePrep.q227FeatureCorr(spark, sf).collect()
-      .map(r => (r.getString(0), r.getString(1)) ->
-        (r.getLong(2), r.getDouble(3))).toMap
-    val feats = Tables.events(spark, sf)
-      .select(col("user_id"), col("event_type"),
-        expr("cast(round(value * 100, 0) as bigint)").as("cents"),
-        to_date(col("ts")).as("d"))
-      .collect()
-      .map(r => (r.getLong(0), r.getString(1), r.getLong(2),
-        r.getDate(3).toString))
-      .groupBy(_._1).values.map { rows =>
-        Map(
-          "f_events" -> rows.size.toLong,
-          "f_spend" -> rows.map(_._3).sum,
-          "f_purchases" -> rows.count(_._2 == "purchase").toLong,
-          "f_days" -> rows.map(_._4).toSet.size.toLong)
-      }.toSeq
-    val n = feats.size.toLong
-    FeaturePrep.CorrFeatures.combinations(2).foreach { case Seq(a, b) =>
-      val sx = feats.map(_(a)).sum; val sy = feats.map(_(b)).sum
-      val sxx = feats.map(f => f(a) * f(a)).sum
-      val syy = feats.map(f => f(b) * f(b)).sum
-      val sxy = feats.map(f => f(a) * f(b)).sum
-      // the engine forms the moment products in doubles (int64-safe at
-      // any scale); mirror the exact op shapes
-      val r = (n.toDouble * sxy.toDouble - sx.toDouble * sy.toDouble) /
-        (math.sqrt(n.toDouble * sxx.toDouble - sx.toDouble * sx.toDouble) *
-          math.sqrt(n.toDouble * syy.toDouble - sy.toDouble * sy.toDouble))
-      val r6 = BigDecimal(r).setScale(6, BigDecimal.RoundingMode.HALF_UP)
-        .toDouble
-      assert(out((a, b)) == ((n, r6)), s"pair ($a,$b) diverged")
-    }
-  }
-
-  test("q306 Cramér's V equals a sequential contingency replay and " +
-      "lands in [0, 1]") {
-    val cust = Tables.customer(spark, sf)
-      .select(col("c_custkey"), col("c_nationkey").cast("string"),
-        col("c_mktsegment")).collect()
-      .map(r => r.getLong(0) -> (r.getString(1), r.getString(2))).toMap
-    val base = Tables.orders(spark, sf)
-      .select("o_custkey", "o_orderpriority").collect()
-      .map { r =>
-        val (nat, seg) = cust(r.getLong(0))
-        (nat, seg, r.getString(1))
-      }
-    def v(ka: Seq[String], kb: Seq[String], name: String)
-        : (String, Long, Long, Long, Long, Double, Double) = {
-      val cells = ka.zip(kb).groupBy(identity)
-        .map { case (k, xs) => k -> xs.length.toLong }
-      val (as, bs) = (ka.distinct.sorted, kb.distinct.sorted)
-      val n = ka.length.toLong
-      val rowT = as.map(a => a -> cells.filter(_._1._1 == a)
-        .values.sum).toMap
-      val colT = bs.map(b => b -> cells.filter(_._1._2 == b)
-        .values.sum).toMap
-      val chiMicro = (for (a <- as; b <- bs) yield {
-        val o = cells.getOrElse((a, b), 0L)
-        val e = (rowT(a) * colT(b)).toDouble / n
-        micro((o - e) * (o - e) / e)
-      }).sum
-      val chi2 = chiMicro.toDouble / 1e6
-      val cv = math.sqrt(chi2 / (n.toDouble *
-        math.min(as.length - 1, bs.length - 1).toDouble))
-      (name, n, as.length.toLong, bs.length.toLong,
-        (as.length - 1).toLong * (bs.length - 1), rN(chi2, 4), rN(cv, 6))
-    }
-    val expect = Seq(
-      v(base.map(_._1), base.map(_._2), "nation x segment"),
-      v(base.map(_._1), base.map(_._3), "nation x priority"),
-      v(base.map(_._2), base.map(_._3), "segment x priority"))
-      .sortBy(_._1)
-    val got = FeaturePrep.q306CramersV(spark, sf).collect()
-      .map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3),
-        r.getLong(4), r.getDouble(5), r.getDouble(6)))
-    assert(got.toSeq == expect, "association matrix diverged")
-    got.foreach(t => assert(t._7 >= 0 && t._7 <= 1 + 1e-9))
-  }
-
-  test("q312 covariate balance equals a sequential per-arm recompute") {
-    val feats = Tables.events(spark, sf)
-      .select(col("user_id"),
-        expr("cast(round(value * 100, 0) as bigint)").as("cents"),
-        col("event_type"), to_date(col("ts")).as("d"))
-      .collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getString(2), r.getDate(3)))
-      .groupBy(_._1).map { case (u, xs) =>
-        (u, Map(
-          "f_events" -> xs.length.toLong,
-          "f_spend" -> xs.map(_._2).sum,
-          "f_purchases" -> xs.count(_._3 == "purchase").toLong,
-          "f_days" -> xs.map(_._4).distinct.length.toLong))
-      }.toSeq
-    def inA(u: Long): Boolean = Hashing.md5Hash60Value(s"arm:$u") % 2 == 0
-    val (as, bs) = feats.partition(t => inA(t._1))
-    val got = FeaturePrep.q312CovariateBalance(spark, sf).collect()
-    assert(got.map(_.getString(0)).toSeq ==
-      FeaturePrep.CorrFeatures.sorted)
-    got.foreach { r =>
-      val f = r.getString(0)
-      val (xa, xb) = (as.map(_._2(f)), bs.map(_._2(f)))
-      val (na, nb) = (xa.length.toLong, xb.length.toLong)
-      val ma = xa.sum.toDouble / na
-      val mb = xb.sum.toDouble / nb
-      val va = (xa.map(x => x * x).sum.toDouble - xa.sum.toDouble * ma) /
-        (na - 1)
-      val vb = (xb.map(x => x * x).sum.toDouble - xb.sum.toDouble * mb) /
-        (nb - 1)
-      val smd = (ma - mb) / math.sqrt((va + vb) / 2.0)
-      assert(r.getLong(1) == na && r.getLong(2) == nb)
-      assert(r.getDouble(3) == rN(ma, 6) && r.getDouble(4) == rN(mb, 6))
-      assert(r.getDouble(5) == rN(smd, 6), s"$f smd")
-      assert(r.getBoolean(6) ==
-        (math.abs(smd) < FeaturePrep.SmdThreshold))
-    }
-  }
-
-  test("q313 LOO shifts equal a sequential replay and decay with " +
-      "category size") {
-    val rows = Tables.orders(spark, sf)
-      .select(col("o_orderpriority"),
-        expr("cast(round(o_totalprice * 100, 0) as bigint)"))
-      .collect().map(r => (r.getString(0), r.getLong(1)))
-    val got = FeaturePrep.q313LooEncoding(spark, sf).collect()
-    got.foreach { r =>
-      val ys = rows.filter(_._1 == r.getString(0)).map(_._2)
-      val n = ys.length.toLong
-      val s = ys.sum
-      val devs = ys.map(y => (BigDecimal(y) * BigDecimal(n) -
-        BigDecimal(s)).abs)
-      assert(r.getLong(1) == n)
-      assert(r.getDouble(2) == rN(s.toDouble / n / 100, 6))
-      assert(r.getDouble(3) ==
-        rN(devs.sum.toDouble / n / (n.toDouble * (n - 1)) / 100, 6))
-      assert(r.getDouble(4) ==
-        rN(devs.max.toDouble / (n.toDouble * (n - 1)) / 100, 6))
-      // the shift is a 1/n effect: mean shift << naive mean
-      assert(r.getDouble(3) < r.getDouble(2))
-    }
-  }
-
-  test("q335 fold balance equals a sequential hash replay and " +
-      "conserves every stratum") {
-    val rows = Tables.embeddings(spark, sf).select("vec_id", "label")
-      .collect().map(r => (r.getLong(0), r.getInt(1)))
-    val folds = rows.map { case (v, l) =>
-      (l, (Hashing.md5Hash60Value(s"fold:$v") % FeaturePrep.CvFolds).toInt)
-    }
-    val got = FeaturePrep.q335FoldBalance(spark, sf).collect()
-    got.foreach { r =>
-      val cell = folds.count(t => t._1 == r.getInt(0) &&
-        t._2 == r.getInt(1)).toLong
-      val stratum = folds.count(_._1 == r.getInt(0)).toLong
-      assert(r.getLong(2) == cell)
-      assert(r.getLong(3) == stratum)
-      assert(r.getDouble(4) == rN(cell.toDouble / stratum, 6))
-      assert(r.getDouble(5) ==
-        rN(cell.toDouble / stratum - 1.0 / FeaturePrep.CvFolds, 6))
-    }
-    // every stratum's folds sum back to the stratum
-    got.groupBy(_.getInt(0)).foreach { case (_, rs) =>
-      assert(rs.map(_.getLong(2)).sum == rs.head.getLong(3))
-    }
-  }
-
-  test("q336 Spearman equals a sequential midrank replay and lands " +
-      "in [-1, 1]") {
-    val docs = Tables.documents(spark, sf)
-      .select(col("source"), col("n_chars"),
-        size(expr("filter(split(trim(text), ' '), w -> length(w) > 0)"))
-          .cast("long")).collect()
-      .map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
-    def midranks2(vs: Seq[Long]): Seq[Long] = {
-      val sorted = vs.sorted
-      vs.map { v =>
-        val below = sorted.count(_ < v).toLong
-        val ties = sorted.count(_ == v).toLong
-        2 * (below + 1) + ties - 1
-      }
-    }
-    val got = FeaturePrep.q336SpearmanLengthQuality(spark, sf).collect()
-    got.foreach { r =>
-      val ds = docs.filter(_._1 == r.getString(0))
-      val xs = midranks2(ds.map(_._2))
-      val ys = midranks2(ds.map(_._3))
-      val k = ds.length.toLong
-      val sx = xs.sum; val sy = ys.sum
-      val sxy = xs.zip(ys).map { case (a, b) =>
-        BigDecimal(a) * BigDecimal(b) }.sum
-      val sxx = xs.map(a => BigDecimal(a) * BigDecimal(a)).sum
-      val syy = ys.map(a => BigDecimal(a) * BigDecimal(a)).sum
-      val num = k.toDouble * sxy.toDouble - sx.toDouble * sy.toDouble
-      val denx = k.toDouble * sxx.toDouble - sx.toDouble * sx.toDouble
-      val deny = k.toDouble * syy.toDouble - sy.toDouble * sy.toDouble
-      assert(r.getLong(1) == k)
-      assert(r.getDouble(2) ==
-        rN(num / (math.sqrt(denx) * math.sqrt(deny)), 6),
-        s"${r.getString(0)} rho")
-      assert(r.getDouble(2) >= -1 - 1e-9 && r.getDouble(2) <= 1 + 1e-9)
-    }
   }
 }

@@ -5,9 +5,7 @@ import java.security.MessageDigest
 import org.apache.spark.sql.functions._
 
 import graft.functions.Hashing
-import graft.operators.Governance
 import graft.operators.{Governance => G}
-import graft.sources.Tables
 
 /** q159 erasure cascade and q160 MLM masking pinned against independent
   * sequential recomputes, plus the no-residual-reference law erasure
@@ -84,95 +82,5 @@ class GovernanceSpec extends SparkTestBase {
     val rate = totalMasked.toDouble / totalTokens
     assert(rate > 0.5 / G.MaskMod && rate < 2.0 / G.MaskMod,
       s"mask rate $rate out of band")
-  }
-
-  test("q245 clip calibration equals a sequential recompute and " +
-      "retained mass is nondecreasing in the clip level") {
-    val out = Governance.q245ClipCalibration(spark, sf).collect()
-      .map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3),
-        r.getDouble(4), r.getDouble(5)))
-    val evs = Tables.events(spark, sf)
-      .select("user_id", "value").collect()
-      .map(r => (r.getLong(0), r.getDouble(1)))
-    val totals = evs.groupBy(_._1).map { case (_, rs) =>
-      rs.map(r => math.round(r._2 * 100)).sum }.toSeq
-    val expected = Governance.ClipLadderBp.map { bp =>
-      val c = BigDecimal(pct(totals.map(_.toDouble), bp / 10000.0))
-        .setScale(0, BigDecimal.RoundingMode.HALF_UP).toLong
-      val clippedSum = totals.map(x => math.min(x, c)).sum
-      (s"p${bp / 100}", c, totals.length.toLong,
-        totals.count(_ > c).toLong,
-        r6(totals.count(_ > c).toDouble / totals.length),
-        r6(clippedSum.toDouble / totals.sum.toDouble))
-    }.sortBy(_._2)
-    assert(out.toSeq == expected)
-    val masses = out.map(_._6)
-    assert(masses.zip(masses.drop(1)).forall { case (a, b) => b >= a },
-      "retained mass must be nondecreasing in the clip level")
-  }
-
-  test("q361 pseudonymization audit: collision-free, fk preserved, " +
-      "hash matches the Scala twin") {
-    val row = Governance.q361PseudonymizeAudit(spark, sf).collect().head
-    assert(row.getBoolean(3), "collision found at test SF")
-    assert(row.getBoolean(4), "fk not preserved")
-    val users = Tables.events(spark, sf).select("user_id").distinct()
-      .collect().map(_.getLong(0))
-    assert(row.getLong(0) == users.length.toLong)
-    val pseuds = users.map(u => Hashing.md5Hash60Value(s"pseud:$u"))
-    assert(row.getLong(1) == pseuds.distinct.length.toLong)
-  }
-
-  test("q378 suppression equals a sequential greedy replay and every " +
-      "multi-cell segment column ends 0-or-≥2 suppressed") {
-    val rows = Governance.q378CellSuppression(spark, sf).collect()
-      .map(r => ((r.getString(0), r.getString(1)),
-        (r.getLong(2), r.getString(3))))
-    // sequential replay: cells, primary, row pass, column pass
-    val cells = rows.map { case ((n, s), (c, _)) => (n, s, c) }
-    var supp = cells.filter(_._3 < Governance.SuppressK)
-      .map(t => (t._1, t._2) -> "primary").toMap
-    cells.groupBy(_._1).foreach { case (nation, cs) =>
-      val sup = cs.filter(c => supp.contains((c._1, c._2)))
-      val open = cs.filterNot(c => supp.contains((c._1, c._2)))
-        .sortBy(c => (c._3, c._2))
-      if (sup.length == 1 && open.nonEmpty)
-        supp += (open.head._1, open.head._2) -> "row_complement"
-    }
-    cells.groupBy(_._2).foreach { case (segment, cs) =>
-      val sup = cs.filter(c => supp.contains((c._1, c._2)))
-      val open = cs.filterNot(c => supp.contains((c._1, c._2)))
-        .sortBy(c => (c._3, c._1))
-      if (sup.length == 1 && open.nonEmpty)
-        supp += (open.head._1, open.head._2) -> "col_complement"
-    }
-    rows.foreach { case (key, (_, reason)) =>
-      assert(supp.getOrElse(key, "none") == reason, s"cell $key")
-    }
-    assert(rows.exists(_._2._2 != "none"),
-      "fixture must actually exercise suppression")
-    // disclosure-safety law on the last pass: no multi-cell segment
-    // column ends with exactly one suppressed cell
-    rows.groupBy(_._1._2).foreach { case (seg, cs) =>
-      if (cs.length >= 2) {
-        val n = cs.count(_._2._2 != "none")
-        assert(n != 1, s"segment $seg left singly-suppressed")
-      }
-    }
-  }
-
-  test("q379 retention sweep equals a sequential recompute") {
-    val rows = Governance.q379RetentionSweep(spark, sf).collect()
-    val ev = graft.sources.Tables.events(spark, sf)
-      .select(col("event_type"), to_date(col("ts")).as("d")).collect()
-      .map(r => (r.getString(0), r.getDate(1).toLocalDate))
-    val cutoff = ev.map(_._2).max.minusDays(Governance.RetentionDays)
-    rows.foreach { r =>
-      val t = ev.filter(_._1 == r.getString(0))
-      assert(r.getLong(1) == t.length.toLong)
-      assert(r.getLong(2) == t.count(_._2.isBefore(cutoff)).toLong)
-      assert(r.getDate(5).toLocalDate == cutoff)
-    }
-    assert(rows.length == ev.map(_._1).distinct.length)
   }
 }

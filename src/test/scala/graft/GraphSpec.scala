@@ -1,9 +1,6 @@
 package graft
 
-import org.apache.spark.sql.functions._
-
 import graft.operators.Graph
-import graft.sources.Tables
 
 /** q138 — the distributed PageRank loop pinned against an independent
   * dense power iteration in plain Scala (arrays and maps, no Spark
@@ -201,42 +198,5 @@ class GraphSpec extends SparkTestBase {
     val deg = collection.mutable.Map.empty[Long, Int].withDefaultValue(0)
     edges.foreach { case (u, v) => deg(u) += 1; deg(v) += 1 }
     assert(deg.values.forall(_ >= Graph.CoreK))
-  }
-
-  test("q285 local clustering equals a sequential triangle replay") {
-    val li = Tables.lineitem(spark, sf)
-      .select("l_orderkey", "l_partkey").collect()
-      .map(r => (r.getLong(0), r.getLong(1)))
-    // row-level pair support (the q140 edge definition: every row pair
-    // with pa < pb counts, duplicate lines included — no per-order dedup)
-    val edges = li.groupBy(_._1).toSeq.flatMap { case (_, xs) =>
-      val ps = xs.map(_._2).toSeq
-      for (a <- ps; b <- ps if a < b) yield (a, b)
-    }.groupBy(identity).filter(_._2.size >= 2).keys.toSeq
-    val adj = (edges.map(e => e._1 -> e._2) ++
-      edges.map(e => e._2 -> e._1))
-      .groupBy(_._1).map { case (n, xs) => n -> xs.map(_._2).toSet }
-    val triPerNode = scala.collection.mutable.Map.empty[Long, Long]
-      .withDefaultValue(0L)
-    edges.foreach { case (a, b) =>
-      adj(a).intersect(adj(b)).foreach { c =>
-        if (c > b) { // a < b < c counts each triangle once
-          triPerNode(a) += 1; triPerNode(b) += 1; triPerNode(c) += 1
-        }
-      }
-    }
-    val expect = adj.toSeq.map { case (n, nbrs) =>
-      val d = nbrs.size.toLong
-      (n, d, triPerNode(n),
-        rN(2.0 * triPerNode(n) / (d * (d - 1)), 6))
-    }.filter(_._2 >= 2)
-      .sortBy(t => (-t._4, -t._3, -t._2, t._1))
-      .take(Graph.ClusterTopK)
-    val got = Graph.q285ClusteringCoefficient(spark, sf).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
-    assert(got.toSeq == expect, "top-k clustering list diverged")
-    got.foreach { case (_, _, _, cc) =>
-      assert(cc >= 0.0 && cc <= 1.0 + 1e-9)
-    }
   }
 }

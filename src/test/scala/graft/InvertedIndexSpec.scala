@@ -102,42 +102,4 @@ class InvertedIndexSpec extends SparkTestBase {
     val jac = inter.toDouble / (szs(1L) + szs(2L) - inter)
     assert(jac < 0.8, "Jaccard gate would miss this pair")
   }
-
-  test("q374 QL scores equal a sequential Dirichlet-LM replay and " +
-      "rank all docs (smoothing floors absent terms)") {
-    val rows = InvertedIndex.q374QueryLikelihood(spark, sf).collect()
-    assert(rows.length == 20)
-    // sequential replay: tokenize in plain Scala, pick the same query,
-    // score every doc with the same micro-quantization
-    val docs = graft.sources.Tables.documents(spark, sf)
-      .select("doc_id", "text").collect()
-      .map(r => r.getLong(0) -> r.getString(1).trim.split(" ").toSeq)
-    val tf = docs.map { case (id, ws) =>
-      id -> ws.groupBy(identity).map { case (w, g) => w -> g.size.toLong }
-    }.toMap
-    val ctf = docs.flatMap(_._2).groupBy(identity)
-      .map { case (w, g) => w -> g.size.toLong }
-    val t = ctf.values.sum
-    val dfm = tf.values.flatMap(_.keys).groupBy(identity)
-      .map { case (w, g) => w -> g.size }
-    val q = dfm.toSeq.sortBy { case (w, d) => (-d, w) }.take(3).map(_._1)
-    val scores = tf.map { case (id, m) =>
-      val dl = m.values.sum
-      val s = q.map { w =>
-        val num = (m.getOrElse(w, 0L) * t + InvertedIndex.QlMu * ctf(w)).toDouble
-        val den = ((dl + InvertedIndex.QlMu) * t).toDouble
-        BigDecimal(math.log(num / den) * 1e6)
-          .setScale(0, BigDecimal.RoundingMode.HALF_UP).toLong
-      }.sum
-      id -> s
-    }
-    val expTop = scores.toSeq.sortBy { case (id, s) => (-s, id) }.take(20)
-    rows.zip(expTop).zipWithIndex.foreach { case ((r, (id, s)), i) =>
-      assert(r.getInt(0) == i + 1)
-      assert(r.getLong(1) == id, s"rank ${i + 1} doc mismatch")
-      assert(math.abs(r.getDouble(2) - s / 1e6) < 1e-9)
-    }
-    // absent-term floor: a doc with zero matched tokens still scores
-    assert(scores.size == docs.length)
-  }
 }

@@ -136,435 +136,4 @@ class LifecycleSpec extends SparkTestBase {
     assert(expectedOrphans > 0L,
       "the decimation must actually orphan something at this SF")
   }
-
-  test("q191 journeys conserve users and match a sequential prefix " +
-      "recompute") {
-    val out = Lifecycle.q191JourneyMining(spark, sf).collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
-    val ev = Tables.events(spark, sf)
-      .select(col("user_id"), col("event_id"), unix_micros(col("ts")),
-        col("event_type")).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getString(3)))
-    val journeys = ev.groupBy(_._1).values.map { xs =>
-      xs.sortBy(e => (e._3, e._2)).take(Lifecycle.JourneyDepth)
-        .map(_._4).mkString(">")
-    }.toSeq
-    assert(out.values.sum == journeys.length.toLong, "users conserved")
-    journeys.groupBy(identity).foreach { case (j, xs) =>
-      assert(out(j) == xs.length.toLong, s"journey $j")
-    }
-  }
-
-  test("q235 Kaplan-Meier equals a sequential recompute; the curve is " +
-      "nonincreasing and at-risk counts conserve users") {
-    val out = Lifecycle.q235KmSurvival(spark, sf).collect()
-      .map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2), r.getLong(3)),
-        (r.getDouble(4), r.getDouble(5))))
-    val users = Tables.events(spark, sf)
-      .groupBy("user_id")
-      .agg(to_date(min(col("ts"))).as("f"), to_date(max(col("ts"))).as("l"))
-      .collect()
-      .map(r => (r.getDate(1).toLocalDate, r.getDate(2).toLocalDate))
-    val obsEnd = users.map(_._2).max
-    val durs = users.map { case (f, l) =>
-      (java.time.temporal.ChronoUnit.DAYS.between(f, l),
-        java.time.temporal.ChronoUnit.DAYS.between(l, obsEnd) >=
-          Lifecycle.CensorHorizonDays)
-    }
-    val hist = durs.groupBy(_._1).toSeq.sortBy(_._1).map { case (t, rs) =>
-      (t, rs.count(_._2).toLong, rs.count(!_._2).toLong)
-    }
-    val nTotal = users.length.toLong
-    var atRisk = nTotal
-    var prod = 1.0
-    val expected = hist.map { case (t, d, c) =>
-      val factor = r6(1.0 - d.toDouble / atRisk.toDouble)
-      prod = prod * factor
-      val row = t -> ((atRisk, d, c), (factor, r6(prod)))
-      atRisk -= d + c
-      row
-    }
-    assert(out.toSeq == expected)
-    assert(atRisk == 0L, "at-risk exhausts exactly to zero")
-    val curve = out.map(_._2._2._2)
-    assert(curve.zip(curve.drop(1)).forall { case (a, b) => b <= a },
-      "KM survival must be nonincreasing")
-  }
-
-  test("q272 session counts equal a sequential per-user gap replay at " +
-      "every threshold and shrink as the threshold grows") {
-    val out = Lifecycle.q272SessionThresholds(spark, sf).collect()
-      .map(r => r.getLong(0) -> (r.getLong(1), r.getDouble(2),
-        r.getDouble(3))).toMap
-    val evs = Tables.events(spark, sf)
-      .select("user_id", "event_id", "ts").collect()
-      .map { r =>
-        val t = r.getTimestamp(2)
-        (r.getLong(0), r.getLong(1),
-          (t.getTime / 1000) * 1000000L + t.getNanos / 1000)
-      }
-    val byUser = evs.groupBy(_._1).values.map(_.sortBy(e => (e._3, e._2)))
-    val gaps = byUser.flatMap(es =>
-      es.zip(es.drop(1)).map { case (a, b) => b._3 - a._3 }).toSeq
-    val nUsers = byUser.size.toLong
-    val nEvents = evs.length.toLong
-    Lifecycle.SessionThresholds.foreach { t =>
-      val breaks = gaps.count(_ > t * 1000000L).toLong
-      val sessions = nUsers + breaks
-      assert(out(t) == ((sessions,
-        r4(nEvents.toDouble / sessions.toDouble),
-        r6(breaks.toDouble / (nEvents - nUsers).toDouble))),
-        s"threshold $t diverged")
-    }
-    val curve = Lifecycle.SessionThresholds.map(out(_)._1)
-    assert(curve.zip(curve.drop(1)).forall { case (a, b) => b <= a },
-      "sessions must not increase with the threshold")
-  }
-
-  test("q296 lead-time SLA equals a sequential replay and the " +
-      "quantiles are ordered") {
-    val ship = Tables.lineitem(spark, sf)
-      .select(col("l_orderkey"), to_date(col("l_shipdate")).as("s"))
-      .collect().map(r => (r.getLong(0), r.getDate(1).toLocalDate))
-    val ord = Tables.orders(spark, sf)
-      .select(col("o_orderkey"), to_date(col("o_orderdate")).as("o"))
-      .collect().map(r => r.getLong(0) -> r.getDate(1).toLocalDate).toMap
-    val lags = ship.map { case (ok, s) =>
-      val o = ord(ok)
-      (f"${o.getYear}%04d-${o.getMonthValue}%02d",
-        java.time.temporal.ChronoUnit.DAYS.between(o, s))
-    }
-    val got = Lifecycle.q296LeadTimeSla(spark, sf).collect()
-    assert(got.map(_.getString(0)).toSeq ==
-      lags.map(_._1).distinct.sorted.toSeq)
-    got.foreach { r =>
-      val ls = lags.filter(_._1 == r.getString(0)).map(_._2)
-      assert(r.getLong(1) == ls.length.toLong)
-      assert(r.getDouble(2) == rN(ls.sum.toDouble / ls.length, 4))
-      assert(r.getDouble(3) == rN(pct(ls, 0.5), 4))
-      assert(r.getDouble(4) == rN(pct(ls, 0.9), 4))
-      // quantile law (the synthetic generator does ship before order
-      // on some lines, so non-negativity is NOT a data invariant here)
-      assert(r.getDouble(3) <= r.getDouble(4) + 1e-9)
-    }
-  }
-
-  test("q302 churn labels equal a sequential replay and cover every " +
-      "first-half-active user") {
-    val ev = Tables.events(spark, sf)
-      .select(unix_micros(col("ts")).as("us"), col("user_id"))
-      .collect().map(r => (r.getLong(0), r.getLong(1)))
-    val cut = (ev.map(_._1).min + ev.map(_._1).max) / 2
-    val users = ev.groupBy(_._2).map { case (u, xs) =>
-      (u, xs.count(_._1 < cut).toLong, xs.count(_._1 >= cut).toLong)
-    }.filter(_._2 > 0).toSeq
-    val edges = (1 to 9).map(k => rN(pct(users.map(_._2), k / 10.0), 6))
-    val byBucket = users.groupBy(u => edges.count(u._2 >= _))
-    val got = Lifecycle.q302ChurnLabels(spark, sf).collect()
-    assert(got.map(_.getLong(1)).sum == users.length.toLong)
-    got.foreach { r =>
-      val us = byBucket(r.getInt(0))
-      assert(r.getLong(1) == us.length.toLong)
-      assert(r.getLong(2) == us.map(_._2).sum)
-      val churned = us.count(_._3 == 0).toLong
-      assert(r.getLong(3) == churned)
-      assert(r.getDouble(4) == rN(churned.toDouble / us.length, 6))
-    }
-  }
-
-  test("q307 Wilson intervals bracket the q302 point rates and match " +
-      "a sequential recompute") {
-    val pts = Lifecycle.q302ChurnLabels(spark, sf).collect()
-      .map(r => r.getInt(0) -> (r.getLong(1), r.getLong(3))).toMap
-    val z = Lifecycle.WilsonZ
-    val got = Lifecycle.q307ChurnWilson(spark, sf).collect()
-    assert(got.length == pts.size)
-    got.foreach { r =>
-      val (n, k) = pts(r.getInt(0))
-      assert(r.getLong(1) == n && r.getLong(2) == k)
-      val p = k.toDouble / n
-      val denom = 1.0 + z * z / n
-      val center = p + z * z / (2.0 * n)
-      val half = z * math.sqrt(p * (1.0 - p) / n +
-        z * z / (4.0 * n * n))
-      assert(r.getDouble(4) == rN((center - half) / denom, 6) + 0.0)
-      assert(r.getDouble(5) == rN((center + half) / denom, 6) + 0.0)
-      // the interval brackets the point estimate and stays in [0, 1]
-      assert(r.getDouble(4) <= r.getDouble(3) + 1e-9)
-      assert(r.getDouble(5) >= r.getDouble(3) - 1e-9)
-      assert(r.getDouble(4) >= 0.0 && r.getDouble(5) <= 1.0 + 1e-9)
-    }
-  }
-
-  test("q316 influx equals a sequential replay and new users are a " +
-      "subset of h2 users") {
-    val ev = Tables.events(spark, sf)
-      .select(col("event_type"), col("user_id"),
-        unix_micros(col("ts")).as("us")).collect()
-      .map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
-    val cut = (ev.map(_._3).min + ev.map(_._3).max) / 2
-    val firstSeen = ev.groupBy(_._2).map { case (u, xs) =>
-      u -> xs.map(_._3).min }
-    val got = Lifecycle.q316UserInflux(spark, sf).collect()
-    got.foreach { r =>
-      val h2 = ev.filter(e => e._1 == r.getString(0) && e._3 >= cut)
-      val users = h2.map(_._2).distinct
-      val newU = users.filter(u => firstSeen(u) >= cut)
-      val newEv = h2.count(e => firstSeen(e._2) >= cut).toLong
-      assert(r.getLong(1) == users.length.toLong)
-      assert(r.getLong(2) == newU.length.toLong)
-      assert(r.getDouble(3) ==
-        rN(newU.length.toDouble / users.length, 6))
-      assert(r.getDouble(4) == rN(newEv.toDouble / h2.length, 6))
-      assert(r.getLong(2) <= r.getLong(1))
-    }
-  }
-
-  test("q320 watermark sweep equals a sequential running-max replay " +
-      "and drop rates are monotone in the delay") {
-    val ev = Tables.events(spark, sf)
-      .select(col("event_type"), col("event_id"),
-        unix_micros(col("ts")).as("us")).collect()
-      .map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
-    val lateByType = ev.groupBy(_._1).map { case (t, xs) =>
-      var mx = Long.MinValue
-      t -> xs.sortBy(_._2).map { e =>
-        mx = math.max(mx, e._3); mx - e._3
-      }
-    }
-    val got = Lifecycle.q320WatermarkSweep(spark, sf).collect()
-      .map(r => (r.getString(0), r.getLong(2), r.getLong(1), r.getLong(3),
-        r.getDouble(4)))
-    got.foreach { case (t, d, n, dropped, rate) =>
-      val lates = lateByType(t)
-      assert(n == lates.length.toLong)
-      val exp = lates.count(_ > d * 1000000L).toLong
-      assert(dropped == exp, s"$t@$d")
-      assert(rate == rN(exp.toDouble / lates.length, 6))
-    }
-    // tightening the delay can only drop MORE
-    got.groupBy(_._1).foreach { case (_, rows) =>
-      val byDelay = rows.sortBy(_._2).map(_._4)
-      assert(byDelay.zip(byDelay.drop(1)).forall { case (a, b) => a >= b })
-    }
-  }
-
-  test("q325 burstiness equals a sequential replay and lands in " +
-      "(-1, 1)") {
-    val ev = Tables.events(spark, sf)
-      .select(col("user_id"), col("event_type"), col("event_id"),
-        unix_micros(col("ts")).as("us")).collect()
-      .map(r => (r.getLong(0), r.getString(1), r.getLong(2), r.getLong(3)))
-    val gaps = ev.groupBy(t => (t._1, t._2)).toSeq.flatMap { case (_, xs) =>
-      val o = xs.sortBy(e => (e._4, e._3))
-      o.zip(o.drop(1)).map { case (a, b) => (a._2, b._4 - a._4) }
-    }
-    val got = Lifecycle.q325Burstiness(spark, sf).collect()
-    got.foreach { r =>
-      val ds = gaps.filter(_._1 == r.getString(0)).map(_._2)
-      val n = ds.length.toLong
-      val sd = ds.sum
-      val sd2 = ds.map(d => BigDecimal(d) * BigDecimal(d)).sum
-      val m = sd.toDouble / n
-      val sig = math.sqrt((sd2.toDouble - sd.toDouble * m) / n)
-      assert(r.getLong(1) == n)
-      assert(r.getDouble(2) == rN(m / 1e6, 4))
-      assert(r.getDouble(3) == rN(sig / 1e6, 4))
-      assert(r.getDouble(4) == rN((sig - m) / (sig + m), 6))
-      assert(r.getDouble(4) > -1 && r.getDouble(4) < 1)
-    }
-  }
-
-  test("q326 streaks equal a sequential islands replay and conserve " +
-      "user-days") {
-    val userDays = Tables.events(spark, sf)
-      .select(col("user_id"),
-        datediff(to_date(col("ts")), lit("2024-01-01").cast("date")))
-      .collect().map(r => (r.getLong(0), r.getInt(1))).distinct
-    val streaks = userDays.groupBy(_._1).toSeq.flatMap { case (u, xs) =>
-      val days = xs.map(_._2).sorted
-      // .toSeq BEFORE .map: mapping a Map to (u, len) tuples would
-      // dedup all of a user's same-length streaks (the q220 pitfall)
-      days.zipWithIndex.groupBy { case (d, i) => d - i }
-        .toSeq.map { case (_, run) => (u, run.length.toLong) }
-    }
-    val got = Lifecycle.q326StreakDistribution(spark, sf).collect()
-    val hist = streaks.groupBy(_._2)
-    assert(got.map(_.getLong(0)).toSeq == hist.keys.toSeq.sorted)
-    got.foreach { r =>
-      val xs = hist(r.getLong(0))
-      assert(r.getLong(1) == xs.length.toLong)
-      assert(r.getLong(2) == xs.map(_._1).distinct.length.toLong)
-      assert(r.getDouble(3) ==
-        rN(xs.length.toDouble / streaks.length, 6))
-    }
-    // Σ streak_days · n_streaks = total distinct user-days
-    assert(got.map(r => r.getLong(0) * r.getLong(1)).sum ==
-      userDays.length.toLong)
-  }
-
-  test("q327 onboarding velocity equals a sequential replay and " +
-      "reach rates are monotone in K") {
-    val ev = Tables.events(spark, sf)
-      .select(col("user_id"), col("event_id"),
-        unix_micros(col("ts")).as("us")).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
-    val byUser = ev.groupBy(_._1).map { case (u, xs) =>
-      u -> xs.sortBy(e => (e._3, e._2)).map(_._3) }
-    val got = Lifecycle.q327OnboardingVelocity(spark, sf).collect()
-    assert(got.map(_.getLong(0)).toSeq ==
-      Lifecycle.OnboardK.map(_.toLong))
-    got.foreach { r =>
-      val k = r.getLong(0).toInt
-      val days = byUser.values.filter(_.length >= k)
-        .map(ts => (ts(k - 1) - ts.head) / 86400000000L).toSeq
-      assert(r.getLong(1) == byUser.size.toLong)
-      assert(r.getLong(2) == days.length.toLong)
-      assert(r.getDouble(3) == rN(days.length.toDouble / byUser.size, 6))
-      assert(r.getDouble(4) == rN(pct(days, 0.5), 4))
-      assert(r.getDouble(5) == rN(pct(days, 0.9), 4))
-    }
-    val rates = got.map(_.getDouble(3))
-    assert(rates.zip(rates.drop(1)).forall { case (a, b) => a >= b })
-  }
-
-  test("q330 growth accounting equals a sequential replay and " +
-      "decomposes actives exactly") {
-    val uw = Tables.events(spark, sf)
-      .select(col("user_id"),
-        expr("datediff(to_date(ts), date'2024-01-01') div 7"))
-      .collect().map(r => (r.getLong(0), r.getLong(1))).distinct
-    val byUser = uw.groupBy(_._1).map { case (u, xs) =>
-      u -> xs.map(_._2).sorted }
-    val weeks = uw.map(_._2).distinct.sorted
-    val got = Lifecycle.q330GrowthAccounting(spark, sf).collect()
-    assert(got.map(_.getLong(0)).toSeq == weeks.toSeq)
-    got.foreach { r =>
-      val w = r.getLong(0)
-      val active = byUser.count(_._2.contains(w)).toLong
-      val newU = byUser.count(_._2.head == w).toLong
-      val retained = byUser.count(u =>
-        u._2.contains(w) && u._2.contains(w - 1) && u._2.head != w).toLong
-      val resurrected = active - newU - retained
-      val churned = byUser.count(u =>
-        u._2.contains(w - 1) && !u._2.contains(w)).toLong
-      assert(r.getLong(1) == active)
-      assert(r.getLong(2) == newU)
-      assert(r.getLong(3) == retained)
-      assert(r.getLong(4) == resurrected)
-      if (weeks.contains(w - 1)) assert(r.getLong(5) == churned, s"wk $w")
-      else assert(r.isNullAt(5))
-      // decomposition identity
-      assert(r.getLong(1) == r.getLong(2) + r.getLong(3) + r.getLong(4))
-      if (!r.isNullAt(5) && r.getLong(5) > 0)
-        assert(r.getDouble(6) ==
-          rN((newU + resurrected).toDouble / churned, 4))
-    }
-  }
-
-  test("q333 priority SLA equals a sequential replay") {
-    val prio = Tables.orders(spark, sf)
-      .select("o_orderkey", "o_orderpriority", "o_orderdate").collect()
-      .map(r => r.getLong(0) ->
-        (r.getString(1), r.getTimestamp(2).toLocalDateTime.toLocalDate))
-      .toMap
-    val lags = Tables.lineitem(spark, sf)
-      .select(col("l_orderkey"), to_date(col("l_shipdate"))).collect()
-      .map { r =>
-        val (p, od) = prio(r.getLong(0))
-        (p, java.time.temporal.ChronoUnit.DAYS
-          .between(od, r.getDate(1).toLocalDate))
-      }
-    val p90All = pct(lags.map(_._2), 0.9)
-    val got = Lifecycle.q333PrioritySla(spark, sf).collect()
-    got.foreach { r =>
-      val ls = lags.filter(_._1 == r.getString(0)).map(_._2)
-      assert(r.getLong(1) == ls.length.toLong)
-      assert(r.getDouble(2) == rN(pct(ls, 0.5), 4))
-      assert(r.getDouble(3) == rN(pct(ls, 0.9), 4))
-      assert(r.getDouble(4) == rN(p90All, 4))
-      assert(r.getBoolean(5) == (pct(ls, 0.9) <= p90All))
-    }
-  }
-
-  test("q345 events data card equals a sequential replay") {
-    val ev = Tables.events(spark, sf)
-      .select(col("event_type"), col("user_id"), to_date(col("ts")),
-        expr("cast(round(value * 100, 0) as bigint)")).collect()
-      .map(r => (r.getString(0), r.getLong(1), r.getDate(2), r.getLong(3)))
-    val got = Lifecycle.q345EventsDataCard(spark, sf).collect()
-    got.foreach { r =>
-      val xs = ev.filter(_._1 == r.getString(0))
-      assert(r.getLong(1) == xs.length.toLong)
-      assert(r.getLong(2) == xs.map(_._2).distinct.length.toLong)
-      assert(r.getLong(3) == xs.map(_._3).distinct.length.toLong)
-      assert(r.getDouble(4) == rN(xs.map(_._4).sum.toDouble / 100, 2))
-      assert(r.getDouble(5) ==
-        rN(xs.map(_._4).sum.toDouble / xs.length / 100, 4))
-      assert(r.getDouble(6) == rN(pct(xs.map(_._4), 0.5) / 100, 4))
-      assert(r.getDouble(7) == rN(pct(xs.map(_._4), 0.95) / 100, 4))
-      assert(r.getDouble(8) == rN(xs.map(_._4).max.toDouble / 100, 2))
-      assert(r.getDouble(9) ==
-        rN(xs.length.toDouble / xs.map(_._2).distinct.length, 4))
-    }
-  }
-
-  test("q349 cohort retention equals a sequential recompute") {
-    val out = Lifecycle.q349CohortRetention(spark, sf).collect()
-      .map(r => (r.getLong(0), r.getLong(1)) ->
-        (r.getLong(2), r.getLong(3), r.getDouble(4))).toMap
-    val ev = Tables.events(spark, sf)
-      .select(col("user_id"), to_date(col("ts")).as("d")).collect()
-      .map(r => (r.getLong(0), r.getDate(1).toLocalDate))
-    val d0 = ev.map(_._2).min
-    val uw = ev.map { case (u, d) =>
-      (u, java.time.temporal.ChronoUnit.DAYS.between(d0, d) / 7)
-    }.distinct
-    val coh = uw.groupBy(_._1).map { case (u, ws) => u -> ws.map(_._2).min }
-    val sizes = coh.values.groupBy(identity).map { case (w, g) => w -> g.size }
-    val exp = uw.groupBy(r => (coh(r._1), r._2 - coh(r._1)))
-      .map { case ((cw, off), g) => (cw, off) -> g.size }
-    assert(out.keySet == exp.keySet)
-    exp.foreach { case (k, n) =>
-      val (na, cs, rate) = out(k)
-      assert(na == n.toLong && cs == sizes(k._1).toLong)
-      assert(rate == r6(n.toDouble / sizes(k._1)))
-    }
-  }
-
-  test("q359 LTV curve equals a sequential recompute with " +
-      "right-censored at-risk mass") {
-    val out = Lifecycle.q359LtvCurve(spark, sf).collect()
-      .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2),
-        r.getLong(3), r.getDouble(4), r.getDouble(5))).toMap
-    val ev = Tables.events(spark, sf)
-      .select(col("user_id"), to_date(col("ts")).as("d"),
-        expr("cast(round(value * 100, 0) as bigint)").as("c")).collect()
-      .map(r => (r.getLong(0), r.getDate(1).toLocalDate, r.getLong(2)))
-    val d0 = ev.map(_._2).min
-    val base = ev.map { case (u, d, c) =>
-      (u, java.time.temporal.ChronoUnit.DAYS.between(d0, d) / 7, c)
-    }
-    val coh = base.groupBy(_._1).map { case (u, g) =>
-      u -> g.map(_._2).min }
-    val maxW = base.map(_._2).max
-    val sizes = coh.values.groupBy(identity)
-      .map { case (w, g) => w -> g.size.toLong }
-    val byK = base.groupBy(r => r._2 - coh(r._1)).map { case (k, g) =>
-      k -> (g.map(_._3).sum, g.map(_._1).distinct.length.toLong)
-    }
-    var cum = 0L
-    byK.keys.toSeq.sorted.foreach { k =>
-      val (cents, nActive) = byK(k)
-      val nObs = sizes.filter { case (w, _) => w + k <= maxW }
-        .values.sum
-      val incr = math.round(cents.toDouble * 10000 / nObs)
-      cum += incr
-      val (oObs, oAct, oCents, oIncr, oLtv) = out(k)
-      assert(oObs == nObs && oAct == nActive && oCents == cents)
-      assert(oIncr == r6(incr / 1e6) && oLtv == r6(cum / 1e6),
-        s"offset $k diverged")
-    }
-    assert(out.keySet == byK.keySet)
-  }
 }

@@ -107,49 +107,4 @@ class LinkageSpec extends SparkTestBase {
     assert(mSegS > uSegS && mBktS > uBktS)
     assert(mSegF > uSegF && mBktF > uBktF)
   }
-
-  private def editDistance(a: String, b: String): Int = {
-    val dp = Array.tabulate(a.length + 1)(i => i)
-    for (j <- 1 to b.length) {
-      var prev = dp(0); dp(0) = j
-      for (i <- 1 to a.length) {
-        val cur = dp(i)
-        dp(i) = math.min(math.min(dp(i) + 1, dp(i - 1) + 1),
-          prev + (if (a(i - 1) == b(j - 1)) 0 else 1))
-        prev = cur
-      }
-    }
-    dp(a.length)
-  }
-
-  test("q247 clone rate equals a sequential hash-chain replay with an " +
-      "independent DP edit distance; probes are linear in block size") {
-    val out = Linkage.q247CloneRate(spark, sf).collect()
-      .map(r => r.getString(0) -> ((r.getLong(1), r.getLong(2),
-        r.getLong(3), r.getInt(4)), r.getDouble(5))).toMap
-    val evs = Tables.events(spark, sf)
-      .select(col("user_id"), unix_micros(col("ts")).as("us"),
-        col("event_id"), col("event_type")).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getString(3)))
-    val journeys = evs.groupBy(_._1).map { case (u, rows) =>
-      val ordered = rows.sortBy(r => (r._2, r._3)).map(_._4)
-      (u, ordered.take(Linkage.CloneJourneyDepth).mkString(">"),
-        ordered.take(Linkage.ClonePrefixDepth).mkString(">"))
-    }.toSeq
-    journeys.groupBy(_._3).foreach { case (prefix, members) =>
-      val chain = members.sortBy(m =>
-        (Hashing.md5Hash60Value(s"clone:${m._1}"), m._1))
-      if (chain.length < 2) assert(!out.contains(prefix))
-      else {
-        val dists = chain.zip(chain.drop(1)).map { case (a, b) =>
-          editDistance(a._2, b._2) }
-        val clones = dists.count(_ <= Linkage.CloneMaxEdit).toLong
-        assert(out(prefix) == (((members.length.toLong,
-          dists.length.toLong, clones, dists.min),
-          r6(clones.toDouble / dists.length))), s"block $prefix diverged")
-        assert(dists.length == members.length - 1,
-          s"probe count must be linear in block size ($prefix)")
-      }
-    }
-  }
 }

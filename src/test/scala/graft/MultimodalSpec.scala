@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.functions._
-
 import graft.operators.Multimodal
 
 /** Typed multimodal pipeline: binary payloads survive the Dataset
@@ -98,159 +96,5 @@ class MultimodalSpec extends SparkTestBase {
     assert(got.forall(_._4), "unexpected non-variant pair")
     assert(got.length >= (docs.length * 95) / 100,
       s"variant recall ${got.length}/${docs.length}")
-  }
-
-  private def md5hex(s: String): String =
-    java.security.MessageDigest.getInstance("MD5")
-      .digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString
-
-  test("q390 inconsistent groups equal a sequential fingerprint replay " +
-      "and both planted failure modes are found") {
-    val rows = Multimodal.q390CrossModalAudit(spark, sf).collect()
-      .map(r => (r.getString(0), r.getString(1)) ->
-        ((r.getLong(2), r.getLong(3), r.getLong(4)))).toMap
-    val docs = graft.sources.Tables.documents(spark, sf)
-      .select("doc_id", "text").collect()
-      .map(r => (r.getLong(0), r.getString(1)))
-    // the pair corpus: originals + re-captioned (%7) + stock-caption
-    // (%11, byte-reversed "image")
-    val pairs = docs.map { case (id, t) => (id, t, t) } ++
-      docs.filter(_._1 % 7 == 0).map { case (id, t) =>
-        (id + Multimodal.RecapOffset, t, s"photo number $id") } ++
-      docs.filter(_._1 % 11 == 0).map { case (id, t) =>
-        (id + Multimodal.StockOffset, t.reverse, t) }
-    def sig(text: String): String = {
-      val bytes = text.getBytes("UTF-8")
-      val n = bytes.length
-      val s = Array.tabulate(64)(j =>
-        if (n == 0) 0L else (bytes((j * (n - 1)) / 63) & 0xff).toLong)
-      val tot = s.sum
-      def half(off: Int): Long = (0 until 32).map(j =>
-        if (64 * s(off + j) > tot) 1L << j else 0L).sum
-      s"${half(0)}_${half(32)}"
-    }
-    val keyed = pairs.map { case (id, img, cap) =>
-      (id, sig(img), md5hex(cap))
-    }
-    val expect = collection.mutable.Map.empty[(String, String),
-      (Long, Long, Long)]
-    keyed.groupBy(_._2).foreach { case (img, g) =>
-      val caps = g.map(_._3).distinct
-      if (g.size >= 2 && caps.size > 1)
-        expect(("image_dup_caption_mismatch", img)) =
-          (g.size.toLong, caps.size.toLong, g.map(_._1).min)
-    }
-    keyed.groupBy(_._3).foreach { case (cap, g) =>
-      val imgs = g.map(_._2).distinct
-      if (g.size >= 2 && imgs.size > 1)
-        expect(("caption_dup_image_mismatch", cap)) =
-          (g.size.toLong, imgs.size.toLong, g.map(_._1).min)
-    }
-    assert(rows == expect.toMap)
-    // both planted failure modes must actually surface: every %7 doc
-    // whose payload signature is unique among originals yields an
-    // image-dup group; the %11 docs yield caption-dup groups whenever
-    // the reversed payload lands on a different signature
-    assert(rows.keys.exists(_._1 == "image_dup_caption_mismatch"),
-      "no image-dup/caption-mismatch group found")
-    assert(rows.keys.exists(_._1 == "caption_dup_image_mismatch"),
-      "no caption-dup/image-mismatch group found")
-  }
-
-  test("q391 pairs equal a sequential frame-set replay and planted " +
-      "re-encodes with enough frames are all found") {
-    val rows = Multimodal.q391VideoFrameDedup(spark, sf).collect()
-      .map(r => (r.getLong(0), r.getLong(1)) ->
-        ((r.getLong(2), r.getLong(3), r.getLong(4), r.getLong(5),
-          r.getBoolean(6)))).toMap
-    val docs = graft.sources.Tables.documents(spark, sf)
-      .select("doc_id", "text").collect()
-      .map(r => (r.getLong(0), r.getString(1)))
-    val corpus = docs ++ docs.filter(_._1 % 5 == 0).map { case (id, t) =>
-      (id + Multimodal.ReencOffset, "z" * 16 + t.drop(16))
-    }
-    def frameSet(text: String): Set[String] =
-      (0 until math.ceil(text.length / 16.0).toInt)
-        .filter(_ % 4 == 0)
-        .map(i => md5hex(text.slice(i * 16, i * 16 + 16)))
-        .toSet
-    val sets = corpus.map { case (id, t) => id -> frameSet(t) }
-    val df = sets.flatMap(_._2.toSeq).groupBy(identity).view
-      .mapValues(_.size.toLong).toMap
-    val kept = sets.map { case (id, fs) =>
-      id -> fs.filter(df(_) <= Multimodal.FrameDfCap)
-    }.filter(_._2.nonEmpty)
-    val expect = (for {
-      (i1, f1) <- kept; (i2, f2) <- kept if i1 < i2
-      sh = (f1 & f2).size.toLong if sh > 0
-      n1 = f1.size.toLong; n2 = f2.size.toLong
-      if Multimodal.FrameOverlapDen * sh >=
-        Multimodal.FrameOverlapNum * math.min(n1, n2)
-    } yield (i1, i2) -> ((sh, n1, n2, sh * 1000000L / math.min(n1, n2),
-      i2 == i1 + Multimodal.ReencOffset))).toMap
-    assert(rows == expect)
-    // every planted re-encode whose post-df-cap frame sets clear the
-    // 80% floor must be flagged — and at least one must exist
-    val found = rows.keys.count { case (a, b) =>
-      b == a + Multimodal.ReencOffset
-    }
-    assert(found > 0, "no planted re-encode pair found at all")
-  }
-
-  test("q392 status classes equal a sequential replay and `detected` " +
-      "is exactly q391's planted-pair membership") {
-    val got = Multimodal.q392VideoDedupRecall(spark, sf)
-      .collect().map(r => r.getString(0) ->
-        ((r.getLong(1), r.getLong(2), r.getLong(3)))).toMap
-
-    // sequential replay of the shared frame lineage (same recompute
-    // shape as this spec's q391 replay)
-    val docs = graft.sources.Tables.documents(spark, sf)
-      .select(col("doc_id"), col("text"))
-      .collect().map(r => (r.getLong(0), r.getString(1)))
-    val corpus = docs ++ docs.collect { case (id, t) if id % 5 == 0 =>
-      (id + Multimodal.ReencOffset, "z" * 16 + t.drop(16))
-    }
-    def frameSet(text: String): Set[String] =
-      (0 until math.ceil(text.length / 16.0).toInt)
-        .filter(_ % 4 == 0)
-        .map(i => md5hex(text.slice(i * 16, i * 16 + 16)))
-        .toSet
-    val sets = corpus.map { case (id, t) => id -> frameSet(t) }.toMap
-    val df = sets.values.flatMap(_.toSeq).groupBy(identity).view
-      .mapValues(_.size.toLong).toMap
-    val kept = sets.view
-      .mapValues(_.filter(df(_) <= Multimodal.FrameDfCap)).toMap
-    val audits = docs.collect { case (id, _) if id % 5 == 0 =>
-      val f1 = kept(id)
-      val f2 = kept(id + Multimodal.ReencOffset)
-      val (n1, n2) = (f1.size.toLong, f2.size.toLong)
-      val sh = (f1 & f2).size.toLong
-      val status =
-        if (sh > 0 && Multimodal.FrameOverlapDen * sh >=
-          Multimodal.FrameOverlapNum * math.min(n1, n2)) "detected"
-        else if (n2 == 0) "no_surviving_frames"
-        else "below_floor"
-      (id, n2, status)
-    }
-    val expect = audits.groupBy(_._3).view.mapValues { xs =>
-      (xs.size.toLong, xs.map(_._2).min, xs.map(_._2).max)
-    }.toMap
-    assert(got == expect)
-    // every planted pair is accounted for exactly once
-    assert(got.values.map(_._1).sum == docs.count(_._1 % 5 == 0))
-    // the detected class is non-degenerate at this SF, and the honest
-    // misses (the r14 verdict's ask) are VISIBLE, not folded away
-    assert(got.contains("detected"))
-
-    // tie to the detector: q392's per-pair `detected` predicate ==
-    // q391's is_reenc_pair rows
-    val q391Planted = Multimodal.q391VideoFrameDedup(spark, sf)
-      .filter(col("is_reenc_pair")).select(col("id1"))
-      .collect().map(_.getLong(0)).toSet
-    val detectedIds = audits.collect { case (id, _, "detected") => id }
-      .toSet
-    assert(detectedIds == q391Planted,
-      "q392 detected set != q391 is_reenc_pair set")
   }
 }

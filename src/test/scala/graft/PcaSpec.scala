@@ -3,7 +3,6 @@ package graft
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 
-import graft.operators.Pca
 import graft.operators.{Pca => P}
 import graft.sources.Tables
 
@@ -109,37 +108,5 @@ class PcaSpec extends SparkTestBase {
     val e = refusal(Seq(Some(Seq(1f, 2f)), Some(Seq(3f, 4f)), None))
     assert(e.contains("NULL or empty embedding"), e)
     assert(e.contains("1 row(s)"), e)
-  }
-
-  test("q238 dimension health equals a sequential recompute; variances " +
-      "are nonnegative and fractions bounded") {
-    val out = Pca.q238DimHealth(spark, sf).collect()
-      .map(r => r.getInt(0) -> ((r.getLong(1), r.getDouble(2),
-        r.getDouble(3), r.getDouble(4)), (r.getDouble(5), r.getDouble(6),
-        r.getDouble(7), r.getBoolean(8)))).toMap
-    val vecs = Tables.embeddings(spark, sf)
-      .select("embedding").collect()
-      .map(_.getSeq[Float](0).map(v =>
-        BigDecimal(v.toDouble * 1000000)
-          .setScale(0, BigDecimal.RoundingMode.HALF_UP).toLong))
-    val dim = vecs.head.length
-    val profile = (0 until dim).map { p =>
-      val col = vecs.map(_(p))
-      val nn = col.length.toLong
-      val s = col.sum
-      val ss = col.map(v => v * v).sum
-      val variance = (nn.toDouble * ss.toDouble - s.toDouble * s.toDouble) /
-        (nn.toDouble * nn.toDouble) / 1e12
-      (p, nn, s, variance, col.min, col.max,
-        col.count(_ == 0L).toLong)
-    }
-    val medVar = pct(profile.map(_._4), 0.5)
-    profile.foreach { case (p, nn, s, variance, vmin, vmax, nz) =>
-      assert(out(p) == (((nn, r6(s.toDouble / nn / 1e6), r6(variance),
-        r6(math.sqrt(variance))), (r6(vmin.toDouble / 1e6),
-        r6(vmax.toDouble / 1e6), r6(nz.toDouble / nn),
-        variance * 100.0 < medVar))), s"pos $p diverged")
-      assert(variance >= -1e-12 && nz.toDouble / nn <= 1.0)
-    }
   }
 }

@@ -3,7 +3,6 @@ package graft
 import org.apache.spark.sql.functions._
 
 import graft.operators.Relational
-import graft.sources.Tables
 
 /** Golden-value + property tests for the reference-parity surface
   * (SURVEY.md §5.2): goldens pinned from the deterministic sf0.001
@@ -153,133 +152,5 @@ class RelationalSpec extends SparkTestBase {
     assert(Set("added", "deleted", "updated")
       .subsetOf(got.values.toSet),
       "fixture must exercise all three change classes")
-  }
-
-  test("q54 pivot x q55 unpivot: reshaping preserves totals") {
-    val pivoted = Relational.q54Pivot(spark, sf).collect()
-    assert(pivoted.nonEmpty)
-    // every year row carries 4 quarter columns; their sum equals the
-    // year total from the long-form rollup over the same orders measure
-    val longForm = Relational.q17Rollup(spark, sf)
-      .collect()
-      .filter(r => r.getInt(4) == 0 && r.getInt(5) == 0) // detail rows
-      .groupBy(_.getInt(0)).view
-      .mapValues(_.map(_.getDouble(2)).sum)
-    pivoted.foreach { r =>
-      val wideSum = (1 to 4).flatMap(i =>
-        Option(r.get(i)).map(_.asInstanceOf[Double])).sum
-      val expected = longForm(r.getInt(0))
-      assert(math.abs(wideSum - expected) < 1.0,
-        s"year ${r.getInt(0)}: wide=$wideSum long=$expected")
-    }
-  }
-
-  test("q56 percentiles are monotone non-decreasing") {
-    Relational.q56Percentiles(spark, sf).collect().foreach { r =>
-      val ps = (1 to 4).map(r.getDouble)
-      assert(ps == ps.sorted, s"non-monotone percentiles $ps")
-    }
-  }
-
-  test("q62 ntile assigns near-balanced quartiles covering 1..4") {
-    val rows = Relational.q62Ntile(spark, sf).collect()
-    val byQ = rows.groupBy(_.getInt(2)).view.mapValues(_.size)
-    assert(byQ.keySet == Set(1, 2, 3, 4))
-    assert(byQ.values.max - byQ.values.min <= 1, s"unbalanced $byQ")
-  }
-
-  test("q61 trailing 7d >= daily revenue and matches a scala recompute") {
-    val rows = Relational.q61RangeFrame(spark, sf).collect()
-      .map(r => (r.getDate(0).toLocalDate.toEpochDay,
-        r.getDouble(1), r.getDouble(2)))
-    rows.foreach { case (_, rev, t7) => assert(t7 >= rev - 1e-9) }
-    val byDay = rows.map { case (d, rev, _) => d -> rev }.toMap
-    rows.foreach { case (d, _, t7) =>
-      val expect = (0 to 6).flatMap(k => byDay.get(d - k)).sum
-      assert(math.abs(expect - t7) < 0.02, s"day $d: $t7 vs $expect")
-    }
-  }
-
-  test("q192 skyline equals the brute-force dominance filter, " +
-      "including tie semantics") {
-    val out = Relational.q192Skyline(spark, sf).collect()
-      .map(_.getLong(0)).toSet
-    val parts = Tables.part(spark, sf)
-      .select(col("p_partkey"), col("p_retailprice"), col("p_size"))
-      .collect()
-      .map(r => (r.getLong(0), math.round(r.getDouble(1) * 100),
-        r.getInt(2)))
-    val expected = parts.filter { case (_, c, s) =>
-      !parts.exists { case (_, c2, s2) =>
-        c2 <= c && s2 >= s && (c2 < c || s2 > s)
-      }
-    }.map(_._1).toSet
-    assert(out == expected)
-    assert(expected.nonEmpty)
-  }
-
-  test("q358 trade flows: totals match the fact join and net is " +
-      "antisymmetric") {
-    val rows = Relational.q358TradeFlows(spark, sf).collect()
-      .map(r => (r.getInt(0), r.getInt(1)) ->
-        (r.getLong(2), r.getLong(3), r.getLong(4))).toMap
-    val totalCents = rows.values.map(_._2).sum
-    val factCents = Tables.lineitem(spark, sf)
-      .join(Tables.orders(spark, sf),
-        col("l_orderkey") === col("o_orderkey"))
-      .agg(sum(expr("cast(round(l_extendedprice * 100, 0) as bigint)")))
-      .collect().head.getLong(0)
-    assert(totalCents == factCents)
-    rows.foreach { case ((a, b), (_, cents, net)) =>
-      val rev = rows.get((b, a)).map(_._2).getOrElse(0L)
-      assert(net == cents - rev, s"net($a,$b) diverged")
-      rows.get((b, a)).foreach { case (_, _, netRev) =>
-        assert(net == -netRev, s"net not antisymmetric for ($a,$b)")
-      }
-    }
-  }
-
-  test("q363 exact median equals the brute sorted order statistics") {
-    val row = Relational.q363ExactMedian(spark, sf).collect().head
-    val cents = Tables.lineitem(spark, sf)
-      .select(expr("cast(round(l_extendedprice * 100, 0) as bigint)"))
-      .collect().map(_.getLong(0)).sorted
-    val n = cents.length
-    val lo = cents((n + 1) / 2 - 1)
-    val hi = cents((n + 2) / 2 - 1)
-    assert(row.getLong(0) == n.toLong)
-    assert(row.getLong(1) == lo && row.getLong(2) == hi)
-    assert(row.getDouble(3) == (lo + hi).toDouble / 200.0)
-  }
-
-  test("q366 grouped median equals per-segment brute order statistics") {
-    val out = Relational.q366GroupedMedian(spark, sf).collect()
-      .map(r => r.getString(0) ->
-        (r.getLong(1), r.getLong(2), r.getLong(3))).toMap
-    val vals = Tables.orders(spark, sf)
-      .join(Tables.customer(spark, sf),
-        col("o_custkey") === col("c_custkey"))
-      .select(col("c_mktsegment"),
-        expr("cast(round(o_totalprice * 100, 0) as bigint)"))
-      .collect().map(r => (r.getString(0), r.getLong(1)))
-    val exp = vals.groupBy(_._1).map { case (s, g) =>
-      val xs = g.map(_._2).sorted
-      val n = xs.length
-      s -> (n.toLong, xs((n + 1) / 2 - 1), xs((n + 2) / 2 - 1))
-    }
-    assert(out == exp)
-  }
-
-  test("q373 quantile ladder equals brute sorted order statistics") {
-    val out = graft.operators.Relational.q373QuantileLadder(spark, sf)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val cents = Tables.orders(spark, sf)
-      .select(expr("cast(round(o_totalprice * 100, 0) as bigint)"))
-      .collect().map(_.getLong(0)).sorted
-    val n = cents.length.toLong
-    graft.operators.Relational.QuantileLadder.foreach { p =>
-      val r = ((p * n + 999) / 1000).toInt
-      assert(out(p) == cents(r - 1), s"p$p diverged")
-    }
   }
 }

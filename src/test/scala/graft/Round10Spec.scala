@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 
 import graft.functions.{BottomKAggregator, Hashing}
-import graft.operators.{AnnRetrieval, Calibration, Evaluation, ExactSubstr, SketchAlgebra, TextOps, TrainingPipeline}
+import graft.operators.{AnnRetrieval, Calibration, Curation2, Evaluation, ExactSubstr, FeaturePrep, Mmr, SketchAlgebra, TextOps, TrainingPipeline}
 import graft.sources.Tables
 
 /** Independent-formulation semantics pins for the round-10 operators
@@ -215,8 +215,6 @@ class Round10Spec extends SparkTestBase {
           ((Hashing.md5Hash60Value(s"boot:${r._2}") >> b) & 1L) == 1L)
         sub.map(_._3).sum.toDouble / sub.length / 100.0
       }
-      def r6(x: Double) = BigDecimal(x)
-        .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
       val within = means.count(m => math.abs(m - fullMean) <=
         fullMean * 0.01).toLong
       assert(out(t) == ((rows.length.toLong,
@@ -243,8 +241,6 @@ class Round10Spec extends SparkTestBase {
         rnd(s.toDouble / vs.length)
       }
     }
-    def r6(x: Double) = BigDecimal(x)
-      .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
     out.keys.foreach { case (la, lb) =>
       val (ca, cb) = (cents(la), cents(lb))
       val dot = ca.zip(cb).map { case (x, y) => x * y }.sum
@@ -335,8 +331,6 @@ class Round10Spec extends SparkTestBase {
       }
       .groupBy(_._1).view.mapValues(_.map(_._2).toSet).toMap
     val sk = vocab.view.mapValues(_.toSeq.sorted.take(k).toSet).toMap
-    def r6(x: Double) = BigDecimal(x)
-      .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
     var maxErr = 0.0
     out.keys.foreach { case (a, b) =>
       val unionSk = (sk(a) ++ sk(b)).toSeq.sorted.take(k)

@@ -14,26 +14,7 @@ import graft.sources.Tables
   * the analytic laws each statistic must satisfy. */
 class Round10bSpec extends SparkTestBase {
 
-  private def r6(x: Double): Double =
-    BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
-  private def r2(x: Double): Double =
-    BigDecimal(x).setScale(2, BigDecimal.RoundingMode.HALF_UP).toDouble
-  private def quantMicro(x: Double): Long =
-    BigDecimal(x * 1e6).setScale(0, BigDecimal.RoundingMode.HALF_UP).toLong
   private def log2(x: Double): Double = math.log(x) / math.log(2.0)
-
-  /** Exact type-7 percentile (Spark `percentile` == DuckDB
-    * `quantile_cont`): sorted, h = (n−1)p, linear interpolation. */
-  private def pct(xs: Seq[Double], p: Double): Double = {
-    val s = xs.sorted
-    val h = (s.length - 1) * p
-    val lo = math.floor(h).toInt
-    val hi = math.ceil(h).toInt
-    if (lo == hi) s(lo) else s(lo) + (h - lo) * (s(hi) - s(lo))
-  }
-
-  private def tokens(text: String): Seq[String] =
-    text.trim.split(" ", -1).toSeq.filter(_.nonEmpty)
 
   test("q229 kappa equals a sequential contingency recompute and " +
       "respects the po/pe consistency laws") {
@@ -44,7 +25,7 @@ class Round10bSpec extends SparkTestBase {
     val docs = Tables.documents(spark, sf)
       .select("lang", "n_chars", "text").collect()
       .map { r =>
-        val ws = tokens(r.getString(2))
+        val ws = words(r.getString(2))
         (r.getString(0), r.getLong(1), ws.length, ws.distinct.length)
       }.filter(_._3 >= 1)
     val medChars = pct(docs.map(_._2.toDouble), 0.5)
@@ -83,7 +64,7 @@ class Round10bSpec extends SparkTestBase {
       .select("source", "text").collect()
       .map(r => (r.getString(0), r.getString(1)))
     docs.groupBy(_._1).foreach { case (src, rows) =>
-      val hist = rows.flatMap(r => tokens(r._2))
+      val hist = rows.flatMap(r => words(r._2))
         .groupBy(identity).map { case (_, ws) => ws.length }
       val v = hist.size.toLong
       val n = hist.map(_.toLong).sum
@@ -110,7 +91,7 @@ class Round10bSpec extends SparkTestBase {
     val B = InfoTheory.JsdBuckets
     val counts: Map[String, Map[Int, Long]] = docs.groupBy(_._1)
       .map { case (src, rows) =>
-        src -> rows.flatMap(r => tokens(r._2))
+        src -> rows.flatMap(r => words(r._2))
           .map(w => (Hashing.md5Hash60Value(w) % B).toInt)
           .groupBy(identity).map { case (b, ws) => b -> ws.length.toLong }
       }
@@ -123,12 +104,12 @@ class Round10bSpec extends SparkTestBase {
       i <- sources.indices; j <- sources.indices if i < j
     } {
       val (sa, sb) = (sources(i), sources(j))
-      val micro = (0 until B).map { b =>
+      val sumMicro = (0 until B).map { b =>
         val (pa, pb) = (p(sa, b), p(sb, b))
         val m = (pa + pb) / 2.0
-        quantMicro(0.5 * pa * log2(pa / m) + 0.5 * pb * log2(pb / m))
+        micro(0.5 * pa * log2(pa / m) + 0.5 * pb * log2(pb / m))
       }.sum
-      val jsd = r6(micro.toDouble / 1e6)
+      val jsd = r6(sumMicro.toDouble / 1e6)
       assert(out((sa, sb)) == (((totals(sa), totals(sb)), jsd)),
         s"pair ($sa, $sb) diverged")
       assert(jsd >= 0.0 && jsd <= 1.0, "JSD in bits is bounded by 1")
@@ -154,18 +135,18 @@ class Round10bSpec extends SparkTestBase {
     val nAll = nij.values.sum
     ni.keys.foreach { t =>
       val terms = nij.filter(_._1._1 == t)
-      val micro = terms.map { case (_, c) =>
+      val sumMicro = terms.map { case (_, c) =>
         val r = c.toDouble / ni(t).toDouble
-        quantMicro(-r * log2(r))
+        micro(-r * log2(r))
       }.sum
-      val h = r6(micro.toDouble / 1e6)
+      val h = r6(sumMicro.toDouble / 1e6)
       assert(out(t) == (((ni(t), terms.size.toLong), h)),
         s"prev $t diverged")
       assert(h >= -1e-9 && h <= log2(terms.size.toDouble) + 1e-6,
         s"entropy bound violated for $t")
     }
     val gMicro = nij.map { case ((t, _), c) =>
-      quantMicro(-(c.toDouble / nAll.toDouble) *
+      micro(-(c.toDouble / nAll.toDouble) *
         log2(c.toDouble / ni(t).toDouble))
     }.sum
     assert(out("__ALL__") == (((nAll, nij.size.toLong),

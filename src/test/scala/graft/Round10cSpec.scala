@@ -13,20 +13,6 @@ import graft.sources.Tables
   * query — agreement pins the closed form to the textbook algorithm. */
 class Round10cSpec extends SparkTestBase {
 
-  private def r6(x: Double): Double =
-    BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
-  private def r4(x: Double): Double =
-    BigDecimal(x).setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble
-  private def qMicro(x: Double): Long =
-    BigDecimal(x * 1e6).setScale(0, BigDecimal.RoundingMode.HALF_UP).toLong
-  private def pct(xs: Seq[Double], p: Double): Double = {
-    val s = xs.sorted
-    val h = (s.length - 1) * p
-    val lo = math.floor(h).toInt
-    val hi = math.ceil(h).toInt
-    if (lo == hi) s(lo) else s(lo) + (h - lo) * (s(hi) - s(lo))
-  }
-
   test("q235 Kaplan-Meier equals a sequential recompute; the curve is " +
       "nonincreasing and at-risk counts conserve users") {
     val out = Lifecycle.q235KmSurvival(spark, sf).collect()
@@ -239,7 +225,7 @@ class Round10cSpec extends SparkTestBase {
       val ranked = hist.sortBy { case (w, c) => (-c, w) }
         .take(Vocabulary.ZipfTopK).zipWithIndex
         .map { case ((_, c), ix) =>
-          (qMicro(math.log((ix + 1).toDouble)), qMicro(math.log(c.toDouble)))
+          (micro(math.log((ix + 1).toDouble)), micro(math.log(c.toDouble)))
         }
       val kk = ranked.length.toLong
       val sx = ranked.map(_._1).sum; val sy = ranked.map(_._2).sum

@@ -13,20 +13,9 @@ import graft.sources.Tables
   * for q243. */
 class Round10dSpec extends SparkTestBase {
 
-  private def r6(x: Double): Double =
-    BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
   private def qNano(x: Double): Long =
     BigDecimal(x * 1e9).setScale(0, BigDecimal.RoundingMode.HALF_UP).toLong
-  private def qMicro(x: Double): Long =
-    BigDecimal(x * 1e6).setScale(0, BigDecimal.RoundingMode.HALF_UP).toLong
   private def log2(x: Double): Double = math.log(x) / math.log(2.0)
-  private def pct(xs: Seq[Double], p: Double): Double = {
-    val s = xs.sorted
-    val h = (s.length - 1) * p
-    val lo = math.floor(h).toInt
-    val hi = math.ceil(h).toInt
-    if (lo == hi) s(lo) else s(lo) + (h - lo) * (s(hi) - s(lo))
-  }
 
   test("q241 surprisal anomaly equals a sequential model-join replay " +
       "and scores are nonnegative") {
@@ -45,7 +34,7 @@ class Round10dSpec extends SparkTestBase {
       k -> v.size.toLong }
     val ni = nij.groupBy(_._1._1).map { case (t, m) => t -> m.values.sum }
     val sMicro = nij.map { case ((a, b), c) =>
-      (a, b) -> qMicro(-log2(c.toDouble / ni(a).toDouble)) }
+      (a, b) -> micro(-log2(c.toDouble / ni(a).toDouble)) }
     val scored = userPairs.collect { case (u, ps) if ps.nonEmpty =>
       val sum = ps.map(sMicro).sum
       (u, ps.length.toLong, sum.toDouble / ps.length.toDouble / 1e6)
@@ -128,7 +117,7 @@ class Round10dSpec extends SparkTestBase {
       k -> v.size.toLong }
     val ni = nij.groupBy(_._1._1).map { case (t, m) => t -> m.values.sum }
     val sMicro = nij.map { case ((a, b), c) =>
-      (a, b) -> qMicro(-log2(c.toDouble / ni(a).toDouble)) }
+      (a, b) -> micro(-log2(c.toDouble / ni(a).toDouble)) }
     val expected = userSeqs.collect {
       case (u, o) if o.length >= 2 =>
         val trans = o.zip(o.drop(1))

@@ -12,11 +12,6 @@ import graft.sources.Tables
   * engines' builtin levenshtein is itself under test. */
 class Round10eSpec extends SparkTestBase {
 
-  private def r4(x: Double): Double =
-    BigDecimal(x).setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble
-  private def r6(x: Double): Double =
-    BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
-
   test("q246 linear interpolation equals a sequential spine replay; " +
       "observed hours pass through exactly") {
     val out = TimeSeries2.q246LinearInterpolate(spark, sf).collect()

@@ -14,18 +14,6 @@ import graft.sources.Tables
   * itself under test. */
 class Round10fSpec extends SparkTestBase {
 
-  private def r4(x: Double): Double =
-    BigDecimal(x).setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble
-  private def r6(x: Double): Double =
-    BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
-  private def pct(xs: Seq[Double], p: Double): Double = {
-    val s = xs.sorted
-    val h = (s.length - 1) * p
-    val lo = math.floor(h).toInt
-    val hi = math.ceil(h).toInt
-    if (lo == hi) s(lo) else s(lo) + (h - lo) * (s(hi) - s(lo))
-  }
-
   private val P = 1000000007L
   private def perm(j: Int, x: Long): Long = {
     val a = (2654435761L * (j + 1)) % P

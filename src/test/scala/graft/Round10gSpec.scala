@@ -13,20 +13,6 @@ import graft.sources.Tables
   * exactly. */
 class Round10gSpec extends SparkTestBase {
 
-  private def r2(x: Double): Double =
-    BigDecimal(x).setScale(2, BigDecimal.RoundingMode.HALF_UP).toDouble
-  private def r4(x: Double): Double =
-    BigDecimal(x).setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble
-  private def r6(x: Double): Double =
-    BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
-  private def pct(xs: Seq[Double], p: Double): Double = {
-    val s = xs.sorted
-    val h = (s.length - 1) * p
-    val lo = math.floor(h).toInt
-    val hi = math.ceil(h).toInt
-    if (lo == hi) s(lo) else s(lo) + (h - lo) * (s(hi) - s(lo))
-  }
-
   test("q252 CUSUM closed form equals the textbook recursion and the " +
       "statistic is never negative") {
     val out = TimeSeries2.q252Cusum(spark, sf).collect()

@@ -9,13 +9,6 @@ import graft.sources.Tables
   * q257 (cardinality-estimator calibration). */
 class Round10hSpec extends SparkTestBase {
 
-  private def r2(x: Double): Double =
-    BigDecimal(x).setScale(2, BigDecimal.RoundingMode.HALF_UP).toDouble
-  private def r4(x: Double): Double =
-    BigDecimal(x).setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble
-  private def r6(x: Double): Double =
-    BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
-
   test("q256 classification report equals a sequential confusion " +
       "recompute over the q38 predictions") {
     def opt(r: org.apache.spark.sql.Row, i: Int): Option[Double] =

@@ -10,13 +10,6 @@ import graft.sources.Tables
   * q261 exact EWMA). */
 class Round10iSpec extends SparkTestBase {
 
-  private def r4(x: Double): Double =
-    BigDecimal(x).setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble
-  private def r6(x: Double): Double =
-    BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
-  private def qMicro(x: Double): Long =
-    BigDecimal(x * 1e6).setScale(0, BigDecimal.RoundingMode.HALF_UP).toLong
-
   test("q258 cluster-size histogram conserves the corpus and matches " +
       "the q73 labels") {
     val out = DedupClusters.q258ClusterSizes(spark, sf).collect()
@@ -51,7 +44,7 @@ class Round10iSpec extends SparkTestBase {
       if (ranked.length > k) {
         val xk1 = ranked(k)
         val s = ranked.take(k).map(x =>
-          qMicro(math.log(x.toDouble / xk1.toDouble))).sum
+          micro(math.log(x.toDouble / xk1.toDouble))).sum
         val alpha = if (s > 0) Some(r4(k.toDouble * 1e6 / s)) else None
         assert(out(k) == ((xk1, alpha)), s"k $k diverged")
         alpha.foreach(a => assert(a > 0.0))

@@ -10,10 +10,6 @@ import graft.sources.Tables
   * q266 LPA communities, q267 Kendall tau-b). */
 class Round10jSpec extends SparkTestBase {
 
-  private def r6(x: Double): Double =
-    BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
-  private def rl(x: Double): Long =
-    BigDecimal(x).setScale(0, BigDecimal.RoundingMode.HALF_UP).toLong
   private def md5Hex(s: String): String =
     java.security.MessageDigest.getInstance("MD5")
       .digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString

@@ -10,13 +10,6 @@ import graft.sources.Tables
   * forecast backtest). */
 class Round10kSpec extends SparkTestBase {
 
-  private def r4(x: Double): Double =
-    BigDecimal(x).setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble
-  private def r6(x: Double): Double =
-    BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
-  private def rl(x: Double): Long =
-    BigDecimal(x).setScale(0, BigDecimal.RoundingMode.HALF_UP).toLong
-
   private lazy val daily: Map[(String, Long), Long] = {
     val evs = Tables.events(spark, sf)
       .select(col("event_type"), to_date(col("ts"))).collect()

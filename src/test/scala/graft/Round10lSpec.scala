@@ -10,13 +10,6 @@ import graft.sources.Tables
   * audit, q275 burst episodes). */
 class Round10lSpec extends SparkTestBase {
 
-  private def r4(x: Double): Double =
-    BigDecimal(x).setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble
-  private def r6(x: Double): Double =
-    BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
-  private def r8(x: Double): Double =
-    BigDecimal(x).setScale(8, BigDecimal.RoundingMode.HALF_UP).toDouble
-
   /** Spark's exact `percentile(x, 0.5)` (linear interpolation). */
   private def median(xs: Seq[Long]): Double = {
     val s = xs.sorted
@@ -123,9 +116,9 @@ class Round10lSpec extends SparkTestBase {
     val pooledNum = slopeNum(perCust); val pooledDen = slopeDen(perCust)
     perCust.groupBy(_._1).foreach { case (nat, g) =>
       val expSlope = if (slopeDen(g) != 0.0)
-        Some(r8(slopeNum(g) / slopeDen(g))) else None
+        Some(rN(slopeNum(g) / slopeDen(g), 8)) else None
       val expPooled = if (pooledDen != 0.0)
-        Some(r8(pooledNum / pooledDen)) else None
+        Some(rN(pooledNum / pooledDen, 8)) else None
       val flip = math.signum(slopeNum(g)) * math.signum(pooledNum) < 0.0
       assert(out(nat) == ((g.size.toLong, expSlope, expPooled, flip)),
         s"nation $nat diverged")

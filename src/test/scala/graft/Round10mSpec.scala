@@ -10,20 +10,6 @@ import graft.sources.Tables
   * Otsu threshold). */
 class Round10mSpec extends SparkTestBase {
 
-  private def r2(x: Double): Double =
-    BigDecimal(x).setScale(2, BigDecimal.RoundingMode.HALF_UP).toDouble
-  private def r6(x: Double): Double =
-    BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
-
-  /** Spark's exact `percentile(x, p)` (linear interpolation). */
-  private def pct(xs: Seq[Double], p: Double): Double = {
-    val s = xs.sorted
-    val pos = p * (s.length - 1)
-    val lo = pos.toInt
-    if (lo + 1 < s.length) s(lo) + (pos - lo) * (s(lo + 1) - s(lo))
-    else s(lo)
-  }
-
   test("q276 weighted Jaccard equals a sequential frequency replay " +
       "and sum_min is bounded by the smaller total") {
     val out = SketchAlgebra.q276WeightedOverlap(spark, sf).collect()

@@ -11,9 +11,6 @@ import graft.sources.Tables
   * association rules, q283 effective sample size). */
 class Round10nSpec extends SparkTestBase {
 
-  private def rN(x: Double, n: Int): Double =
-    BigDecimal(x).setScale(n, BigDecimal.RoundingMode.HALF_UP).toDouble
-
   test("q280 MDE equals a sequential per-arm recompute and shrinks " +
       "with sample size") {
     val rows = Tables.events(spark, sf)

@@ -11,9 +11,6 @@ import graft.sources.Tables
   * partition-pruning advisor, q287 sequential-peeking audit). */
 class Round10oSpec extends SparkTestBase {
 
-  private def rN(x: Double, n: Int): Double =
-    BigDecimal(x).setScale(n, BigDecimal.RoundingMode.HALF_UP).toDouble
-
   test("q284 jackknife equals a sequential replay and influence signs " +
       "track each source's own mean") {
     val docs = Tables.documents(spark, sf).select("source", "n_chars")

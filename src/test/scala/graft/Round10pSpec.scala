@@ -2,13 +2,13 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.operators.TextProfile
+import graft.operators.{Audit, TextProfile}
 import graft.sources.Tables
 
-/** Semantics pins for [[graft.operators.TextProfile]]: each query is
-  * recomputed from the same fixture with plain Scala collections and
-  * compared exactly, plus the laws its statistic must satisfy. */
-class TextProfileSpec extends SparkTestBase {
+/** Independent-formulation pins for the round-10 fifteenth batch
+  * (q288 readability, q289 OOV emergence, q290 selectivity
+  * calibration, q291 Heaps'-law exponent). */
+class Round10pSpec extends SparkTestBase {
 
   test("q288 readability equals a sequential syllable/sentence replay") {
     val docs = Tables.documents(spark, sf).select("source", "text")
@@ -67,6 +67,35 @@ class TextProfileSpec extends SparkTestBase {
     }
   }
 
+  test("q290 selectivity calibration equals a sequential histogram " +
+      "replay and the boundary probes anchor the estimate") {
+    val cents = Tables.lineitem(spark, sf)
+      .select(expr("cast(round(l_extendedprice * 100, 0) as bigint)"))
+      .collect().map(_.getLong(0)).sorted
+    val n = cents.length
+    val bs = (0 to 10).map(j => pct(cents.toSeq, j / 10.0))
+    val got = Audit.q290SelectivityCalibration(spark, sf).collect()
+    assert(got.length == 10)
+    got.foreach { r =>
+      val j = r.getInt(0)
+      val (lo, hi) = (bs(j - 1), bs(j))
+      val m = (lo + hi) / 2
+      val est =
+        if (hi > lo) (j - 1 + (m - lo) / (hi - lo)) / 10.0
+        else (j.toDouble - 0.5) / 10.0
+      val actual = cents.count(_.toDouble <= m).toDouble / n
+      assert(r.getDouble(1) == rN(lo / 100, 2), s"b$j lo")
+      assert(r.getDouble(2) == rN(hi / 100, 2), s"b$j hi")
+      assert(r.getDouble(3) == rN(est, 8), s"b$j est")
+      assert(r.getDouble(4) == rN(actual, 8), s"b$j actual")
+      assert(r.getDouble(5) == rN(math.abs(est - actual), 8), s"b$j err")
+      // equi-depth: the exact mass below boundary j is ~j/10 by
+      // construction, so mid-bucket actuals sit inside the bucket
+      assert(actual >= (j - 1) / 10.0 - 1e-9 &&
+        actual <= j / 10.0 + 1e-9, s"b$j bucket mass")
+    }
+  }
+
   test("q291 Heaps exponent equals a sequential quantized-OLS replay") {
     val docs = Tables.documents(spark, sf)
       .select("source", "doc_id", "text").collect()
@@ -106,94 +135,5 @@ class TextProfileSpec extends SparkTestBase {
     // law: growth exponents live in (0, 1] for a growing vocabulary
     got.foreach(r => assert(r.getDouble(2) > 0 &&
       r.getDouble(2) <= 1.0 + 1e-6, s"${r.getString(0)} beta range"))
-  }
-
-  test("q338 charset profile equals a sequential replay and shares " +
-      "sum to one") {
-    val docs = Tables.documents(spark, sf).select("source", "text")
-      .collect().map(r => (r.getString(0), r.getString(1)))
-    val got = TextProfile.q338CharsetProfile(spark, sf).collect()
-    got.foreach { r =>
-      val ts = docs.filter(_._1 == r.getString(0)).map(_._2)
-      val chars = ts.map(_.length.toLong).sum
-      def cnt(p: Char => Boolean): Long =
-        ts.map(_.count(p).toLong).sum
-      val l = cnt(_.isLetter)
-      val d = cnt(_.isDigit)
-      val s = cnt(_ == ' ')
-      val p = cnt(c => ".,!?;:".contains(c))
-      assert(r.getLong(1) == chars)
-      assert(r.getDouble(2) == rN(l.toDouble / chars, 6))
-      assert(r.getDouble(3) == rN(d.toDouble / chars, 6))
-      assert(r.getDouble(4) == rN(s.toDouble / chars, 6))
-      assert(r.getDouble(5) == rN(p.toDouble / chars, 6))
-      assert(r.getDouble(6) ==
-        rN((chars - l - d - s - p).toDouble / chars, 6))
-      // rounded shares sum to ~1
-      assert(math.abs(r.getDouble(2) + r.getDouble(3) + r.getDouble(4) +
-        r.getDouble(5) + r.getDouble(6) - 1.0) < 3e-6)
-    }
-  }
-
-  test("q343 ingest-quality trend equals a sequential replay and " +
-      "conserves the corpus") {
-    val docs = Tables.documents(spark, sf)
-      .select("doc_id", "n_chars", "text").collect()
-      .map(r => (r.getLong(0), r.getLong(1),
-        words(r.getString(2)).length.toLong))
-    val edges = (1 to 9).map(k => rN(pct(docs.map(_._1), k / 10.0), 6))
-    val byBucket = docs.groupBy(d => edges.count(d._1.toDouble >= _))
-    val got = TextProfile.q343IngestQualityTrend(spark, sf).collect()
-    assert(got.map(_.getLong(1)).sum == docs.length.toLong)
-    got.foreach { r =>
-      val ds = byBucket(r.getInt(0))
-      assert(r.getLong(1) == ds.length.toLong)
-      assert(r.getDouble(2) ==
-        rN(ds.map(_._2).sum.toDouble / ds.length, 4))
-      assert(r.getDouble(3) ==
-        rN(ds.map(_._3).sum.toDouble / ds.length, 4))
-      assert(r.getDouble(4) ==
-        rN(ds.map(_._2).sum.toDouble / ds.map(_._3).sum, 4))
-      assert(r.getDouble(5) ==
-        rN(ds.count(_._3 < 50).toDouble / ds.length, 6))
-    }
-  }
-
-  test("q344 truncation waste equals a sequential replay and is " +
-      "monotone in the context length") {
-    val toks = Tables.documents(spark, sf).select("text").collect()
-      .map(r => words(r.getString(0)).length.toLong)
-    val got = TextProfile.q344TruncationWaste(spark, sf).collect()
-    assert(got.map(_.getLong(2)).toSeq ==
-      TextProfile.ContextLengths)
-    got.foreach { r =>
-      val l = r.getLong(2)
-      val over = toks.filter(_ > l)
-      assert(r.getLong(0) == toks.length.toLong)
-      assert(r.getLong(1) == toks.sum)
-      assert(r.getLong(3) == over.length.toLong)
-      assert(r.getDouble(4) == rN(over.length.toDouble / toks.length, 6))
-      assert(r.getLong(5) == over.map(_ - l).sum)
-      assert(r.getDouble(6) == rN(over.map(_ - l).sum.toDouble /
-        toks.sum, 6))
-    }
-    val losses = got.map(_.getLong(5))
-    assert(losses.zip(losses.drop(1)).forall { case (a, b) => a >= b })
-  }
-
-  test("q357 novelty curve: buckets partition the corpus shingles, " +
-      "cumulative reaches 1, first bucket dominates novelty") {
-    val rows = TextProfile.q357NoveltyCurve(spark, sf).collect()
-    assert(rows.map(_.getLong(0)).toSeq == (0L to 9L))
-    val total = rows.map(_.getLong(1)).sum
-    assert(rows.last.getLong(2) == total, "cumulative must reach total")
-    assert(rows.last.getDouble(4) == 1.0)
-    // distinct shingle count equals the bucket partition total
-    val nShingles = graft.operators.Dedup.shingleRows(
-        Tables.documents(spark, sf))
-      .select("shingle").distinct().count()
-    assert(total == nShingles)
-    assert(rows.head.getLong(1) >= rows.last.getLong(1),
-      "novelty must not grow from first to last tranche")
   }
 }

@@ -11,12 +11,6 @@ import graft.sources.Tables
   * seasonal/trend strength, q295 winsorized Welch). */
 class Round10qSpec extends SparkTestBase {
 
-  private def rN(x: Double, n: Int): Double =
-    BigDecimal(x).setScale(n, BigDecimal.RoundingMode.HALF_UP).toDouble
-  private def muL(x: Double): Long =
-    BigDecimal(x * 1000000d).setScale(0,
-      BigDecimal.RoundingMode.HALF_UP).toLong
-
   /** (event_type, dayIdx, count) daily profile from raw events. */
   private def dailyCounts(): Seq[(String, Long, Long)] = {
     val ev = Tables.events(spark, sf)
@@ -75,7 +69,7 @@ class Round10qSpec extends SparkTestBase {
         val num2 = (0 until taps2).map(j => k2(j) * y(t - j)).sum
         val f = TimeSeries2.Brown2Plus * (num1.toDouble / w1) -
           TimeSeries2.Brown1Plus * (num2.toDouble / w2)
-        (muL(math.abs(f - y(t + 1).toDouble)),
+        (micro(math.abs(f - y(t + 1).toDouble)),
           math.abs(y(t) - y(t + 1)))
       }
       val seMu = errs.map(_._1).sum
@@ -110,8 +104,8 @@ class Round10qSpec extends SparkTestBase {
         dow -> xs.map(_._3).sum.toDouble / (7 * xs.length)
       }
       val qs = valid.map { case (_, yd, det7, dow) =>
-        (muL(det7 / 7.0), muL(det7 / 7.0 - sdow(dow)),
-          muL(yd - sdow(dow)))
+        (micro(det7 / 7.0), micro(det7 / 7.0 - sdow(dow)),
+          micro(yd - sdow(dow)))
       }
       def varOf(vs: Seq[Long]): Double = {
         val n = vs.length
@@ -139,13 +133,6 @@ class Round10qSpec extends SparkTestBase {
       .collect()
       .map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
     def inA(u: Long): Boolean = Hashing.md5Hash60Value(s"arm:$u") % 2 == 0
-    def pct(xs: Seq[Long], p: Double): Double = {
-      val s = xs.sorted
-      val pos = p * (s.length - 1)
-      val lo = pos.toInt
-      if (lo + 1 < s.length) s(lo) + (pos - lo) * (s(lo + 1) - s(lo))
-      else s(lo).toDouble
-    }
     def welch(as: Seq[Double], bs: Seq[Double]): Double = {
       val (na, nb) = (as.length, bs.length)
       val (ma, mb) = (as.sum / na, bs.sum / nb)
@@ -159,7 +146,7 @@ class Round10qSpec extends SparkTestBase {
       val rows = ev.filter(_._1 == tpe)
       val (lo, hi) = (pct(rows.map(_._3), 0.05), pct(rows.map(_._3), 0.95))
       val qw = rows.map(t =>
-        (inA(t._2), t._3, muL(math.min(math.max(t._3.toDouble, lo), hi))))
+        (inA(t._2), t._3, micro(math.min(math.max(t._3.toDouble, lo), hi))))
       val (as, bs) = qw.partition(_._1)
       assert(r.getLong(1) == as.length.toLong &&
         r.getLong(2) == bs.length.toLong)

@@ -10,19 +10,6 @@ import graft.sources.Tables
   * drift, q299 decomposition anomalies). */
 class Round10rSpec extends SparkTestBase {
 
-  private def rN(x: Double, n: Int): Double =
-    BigDecimal(x).setScale(n, BigDecimal.RoundingMode.HALF_UP).toDouble
-  private def muL(x: Double): Long =
-    BigDecimal(x * 1000000d).setScale(0,
-      BigDecimal.RoundingMode.HALF_UP).toLong
-  private def pct(xs: Seq[Long], p: Double): Double = {
-    val s = xs.sorted
-    val pos = p * (s.length - 1)
-    val lo = pos.toInt
-    if (lo + 1 < s.length) s(lo) + (pos - lo) * (s(lo + 1) - s(lo))
-    else s(lo).toDouble
-  }
-
   test("q296 lead-time SLA equals a sequential replay and the " +
       "quantiles are ordered") {
     val ship = Tables.lineitem(spark, sf)
@@ -100,7 +87,7 @@ class Round10rSpec extends SparkTestBase {
       val terms = hist.zipWithIndex.map { case ((c, r1, c1), i) =>
         cr += r1; cc += c1
         val nxt = if (i + 1 < hist.length) hist(i + 1)._1 else c
-        muL(math.abs(cr.toDouble / nr - cc.toDouble / nc) *
+        micro(math.abs(cr.toDouble / nr - cc.toDouble / nc) *
           (nxt - c).toDouble)
       }
       assert(r.getLong(1) == nr && r.getLong(2) == nc)
@@ -131,7 +118,7 @@ class Round10rSpec extends SparkTestBase {
       val sdow = valid.groupBy(_._4).map { case (dow, xs) =>
         dow -> xs.map(_._3).sum.toDouble / (7 * xs.length) }
       val qs = valid.map { case (d, yd, det7, dow) =>
-        (d, yd, muL(det7 / 7.0 - sdow(dow))) }
+        (d, yd, micro(det7 / 7.0 - sdow(dow))) }
       val n = qs.length
       val s = qs.map(_._3).sum
       val s2 = qs.map(t => BigDecimal(t._3) * BigDecimal(t._3)).sum

@@ -10,18 +10,6 @@ import graft.sources.Tables
   * labels, q303 revenue VaR/CVaR). */
 class Round10sSpec extends SparkTestBase {
 
-  private def rN(x: Double, n: Int): Double =
-    BigDecimal(x).setScale(n, BigDecimal.RoundingMode.HALF_UP).toDouble
-  private def words(t: String): Seq[String] =
-    t.trim.split(" ", -1).toSeq.filter(_.nonEmpty)
-  private def pct(xs: Seq[Long], p: Double): Double = {
-    val s = xs.sorted
-    val pos = p * (s.length - 1)
-    val lo = pos.toInt
-    if (lo + 1 < s.length) s(lo) + (pos - lo) * (s(lo + 1) - s(lo))
-    else s(lo).toDouble
-  }
-
   test("q300 IDF shift equals a replay over the q73 labels and shifts " +
       "are non-negative") {
     val clusters = DedupClusters.q73DedupClusters(spark, sf)

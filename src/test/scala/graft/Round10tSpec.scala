@@ -10,12 +10,6 @@ import graft.sources.Tables
   * matrix). */
 class Round10tSpec extends SparkTestBase {
 
-  private def rN(x: Double, n: Int): Double =
-    BigDecimal(x).setScale(n, BigDecimal.RoundingMode.HALF_UP).toDouble
-  private def muL(x: Double): Long =
-    BigDecimal(x * 1000000d).setScale(0,
-      BigDecimal.RoundingMode.HALF_UP).toLong
-
   test("q304 isotropy audit equals a sequential replay and the ratio " +
       "is in [0, 1]") {
     val vecs = Tables.embeddings(spark, sf).select("embedding").collect()
@@ -94,7 +88,7 @@ class Round10tSpec extends SparkTestBase {
       val chiMicro = (for (a <- as; b <- bs) yield {
         val o = cells.getOrElse((a, b), 0L)
         val e = (rowT(a) * colT(b)).toDouble / n
-        muL((o - e) * (o - e) / e)
+        micro((o - e) * (o - e) / e)
       }).sum
       val chi2 = chiMicro.toDouble / 1e6
       val cv = math.sqrt(chi2 / (n.toDouble *

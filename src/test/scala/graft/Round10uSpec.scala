@@ -10,9 +10,6 @@ import graft.sources.Tables
   * q310 supplier HHI trend). */
 class Round10uSpec extends SparkTestBase {
 
-  private def rN(x: Double, n: Int): Double =
-    BigDecimal(x).setScale(n, BigDecimal.RoundingMode.HALF_UP).toDouble
-
   test("q307 Wilson intervals bracket the q302 point rates and match " +
       "a sequential recompute") {
     val pts = Lifecycle.q302ChurnLabels(spark, sf).collect()

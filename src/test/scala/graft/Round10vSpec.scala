@@ -11,19 +11,6 @@ import graft.sources.Tables
   * target-encoding audit, q314 price dispersion). */
 class Round10vSpec extends SparkTestBase {
 
-  private def rN(x: Double, n: Int): Double =
-    BigDecimal(x).setScale(n, BigDecimal.RoundingMode.HALF_UP).toDouble
-  private def muL(x: Double): Long =
-    BigDecimal(x * 1000000d).setScale(0,
-      BigDecimal.RoundingMode.HALF_UP).toLong
-  private def pct(xs: Seq[Long], p: Double): Double = {
-    val s = xs.sorted
-    val pos = p * (s.length - 1)
-    val lo = pos.toInt
-    if (lo + 1 < s.length) s(lo) + (pos - lo) * (s(lo + 1) - s(lo))
-    else s(lo).toDouble
-  }
-
   test("q311 ILD equals a sequential pairwise-cosine replay over the " +
       "exact top-k lists") {
     val vecs = Tables.embeddings(spark, sf)
@@ -47,7 +34,7 @@ class Round10vSpec extends SparkTestBase {
         val cos = dot.toDouble /
           (math.sqrt(a.map(x => x * x).sum.toDouble) *
             math.sqrt(b.map(x => x * x).sum.toDouble))
-        muL(cos)
+        micro(cos)
       }
       assert(r.getLong(1) == mus.length.toLong)
       assert(r.getDouble(2) ==

@@ -11,16 +11,6 @@ import graft.sources.Tables
   * q318 quantile treatment effects). */
 class Round10wSpec extends SparkTestBase {
 
-  private def rN(x: Double, n: Int): Double =
-    BigDecimal(x).setScale(n, BigDecimal.RoundingMode.HALF_UP).toDouble
-  private def pct(xs: Seq[Long], p: Double): Double = {
-    val s = xs.sorted
-    val pos = p * (s.length - 1)
-    val lo = pos.toInt
-    if (lo + 1 < s.length) s(lo) + (pos - lo) * (s(lo + 1) - s(lo))
-    else s(lo).toDouble
-  }
-
   test("q315 MAP@10 equals a sequential AP replay over the int-cosine " +
       "ranking") {
     val vecs = Tables.embeddings(spark, sf)

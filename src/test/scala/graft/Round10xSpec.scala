@@ -10,16 +10,6 @@ import graft.sources.Tables
   * q322 load profile). */
 class Round10xSpec extends SparkTestBase {
 
-  private def rN(x: Double, n: Int): Double =
-    BigDecimal(x).setScale(n, BigDecimal.RoundingMode.HALF_UP).toDouble
-  private def pct(xs: Seq[Long], p: Double): Double = {
-    val s = xs.sorted
-    val pos = p * (s.length - 1)
-    val lo = pos.toInt
-    if (lo + 1 < s.length) s(lo) + (pos - lo) * (s(lo + 1) - s(lo))
-    else s(lo).toDouble
-  }
-
   test("q319 markup audit equals a sequential replay") {
     val retail = Tables.part(spark, sf)
       .select("p_partkey", "p_brand", "p_retailprice").collect()

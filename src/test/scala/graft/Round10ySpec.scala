@@ -10,9 +10,6 @@ import graft.sources.Tables
   * streak distribution). */
 class Round10ySpec extends SparkTestBase {
 
-  private def rN(x: Double, n: Int): Double =
-    BigDecimal(x).setScale(n, BigDecimal.RoundingMode.HALF_UP).toDouble
-
   test("q323 return trend equals a sequential replay and shares are " +
       "bounded") {
     val li = Tables.lineitem(spark, sf)

@@ -10,19 +10,6 @@ import graft.sources.Tables
   * q334 DKW median band). */
 class Round11aSpec extends SparkTestBase {
 
-  private def rN(x: Double, n: Int): Double =
-    BigDecimal(x).setScale(n, BigDecimal.RoundingMode.HALF_UP).toDouble
-  private def muL(x: Double): Long =
-    BigDecimal(x * 1000000d).setScale(0,
-      BigDecimal.RoundingMode.HALF_UP).toLong
-  private def pct(xs: Seq[Long], p: Double): Double = {
-    val s = xs.sorted
-    val pos = p * (s.length - 1)
-    val lo = pos.toInt
-    if (lo + 1 < s.length) s(lo) + (pos - lo) * (s(lo + 1) - s(lo))
-    else s(lo).toDouble
-  }
-
   test("q331 elasticity equals a sequential quantized-OLS replay") {
     val ptype = Tables.part(spark, sf).select("p_partkey", "p_type")
       .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
@@ -30,8 +17,8 @@ class Round11aSpec extends SparkTestBase {
       .select("l_partkey", "l_extendedprice", "l_quantity").collect()
       .map { r =>
         (ptype(r.getLong(0)),
-          muL(math.log(r.getDouble(1) / r.getDouble(2))),
-          muL(math.log(r.getDouble(2))))
+          micro(math.log(r.getDouble(1) / r.getDouble(2))),
+          micro(math.log(r.getDouble(2))))
       }
     val got = Contribution.q331PriceElasticity(spark, sf).collect()
     got.foreach { r =>

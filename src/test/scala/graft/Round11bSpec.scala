@@ -11,9 +11,6 @@ import graft.sources.Tables
   * charset profile). */
 class Round11bSpec extends SparkTestBase {
 
-  private def rN(x: Double, n: Int): Double =
-    BigDecimal(x).setScale(n, BigDecimal.RoundingMode.HALF_UP).toDouble
-
   test("q335 fold balance equals a sequential hash replay and " +
       "conserves every stratum") {
     val rows = Tables.embeddings(spark, sf).select("vec_id", "label")

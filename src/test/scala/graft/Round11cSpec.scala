@@ -10,16 +10,6 @@ import graft.sources.Tables
   * diversity, q342 fulfilment span). */
 class Round11cSpec extends SparkTestBase {
 
-  private def rN(x: Double, n: Int): Double =
-    BigDecimal(x).setScale(n, BigDecimal.RoundingMode.HALF_UP).toDouble
-  private def pct(xs: Seq[Long], p: Double): Double = {
-    val s = xs.sorted
-    val pos = p * (s.length - 1)
-    val lo = pos.toInt
-    if (lo + 1 < s.length) s(lo) + (pos - lo) * (s(lo + 1) - s(lo))
-    else s(lo).toDouble
-  }
-
   test("q339 market-share shift equals a sequential replay and " +
       "shares sum to one per half") {
     val natOf = Tables.supplier(spark, sf)

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.operators.{Breadth5, DedupEmbedding, Similarity}
+import graft.operators.{AnnRetrieval, Audit, Curation, DedupEmbedding, InfoTheory, Lifecycle, SessionState, Similarity}
 import graft.sources.Tables
 
 /** Round-11 batch (q348–q355): independent sequential recomputes for
@@ -10,13 +10,9 @@ import graft.sources.Tables
   * cosine ground truth (the q224 discipline). */
 class Round11eSpec extends SparkTestBase {
 
-  private def rnd6(x: Double): Double =
-    BigDecimal(java.math.BigDecimal.valueOf(x))
-      .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
-
   test("q348 Hamming lists equal a sequential banding+popcount replay " +
       "and keep recall vs the exact cosine top-k") {
-    val out = Breadth5.q348HammingRetrieval(spark, sf).collect()
+    val out = DedupEmbedding.q348HammingRetrieval(spark, sf).collect()
       .map(r => (r.getLong(0), r.getInt(1)) -> (r.getLong(2), r.getInt(3)))
       .toMap
     val raw = Tables.embeddings(spark, sf)
@@ -60,7 +56,7 @@ class Round11eSpec extends SparkTestBase {
     Similarity.queryIdSetSeq(raw.keys.toSeq).foreach { qid =>
       val cands = ok(qid).flatMap(kv => members(kv)).toSet - qid
       val top = cands.toSeq.map(c => (c, ham(qid, c)))
-        .sortBy { case (c, h) => (h, c) }.take(Breadth5.HammK)
+        .sortBy { case (c, h) => (h, c) }.take(DedupEmbedding.HammK)
       top.zipWithIndex.foreach { case ((c, h), i) =>
         assert(out((qid, i + 1)) == ((c, h)),
           s"qid $qid rank ${i + 1} diverged")
@@ -70,7 +66,7 @@ class Round11eSpec extends SparkTestBase {
       selCos ++= top.map { case (c, _) => cos(qid, c) }
       allCos ++= others.map(_._2)
       bruteCos ++= others.sortBy { case (c, s) => (-s, c) }
-        .take(Breadth5.HammK).map(_._2)
+        .take(DedupEmbedding.HammK).map(_._2)
     }
     def mean(xs: Iterable[Double]) = xs.sum / xs.size
     // binary 96-bit signatures on this weakly-clustered random corpus
@@ -90,7 +86,7 @@ class Round11eSpec extends SparkTestBase {
   }
 
   test("q349 cohort retention equals a sequential recompute") {
-    val out = Breadth5.q349CohortRetention(spark, sf).collect()
+    val out = Lifecycle.q349CohortRetention(spark, sf).collect()
       .map(r => (r.getLong(0), r.getLong(1)) ->
         (r.getLong(2), r.getLong(3), r.getDouble(4))).toMap
     val ev = Tables.events(spark, sf)
@@ -108,13 +104,13 @@ class Round11eSpec extends SparkTestBase {
     exp.foreach { case (k, n) =>
       val (na, cs, rate) = out(k)
       assert(na == n.toLong && cs == sizes(k._1).toLong)
-      assert(rate == rnd6(n.toDouble / sizes(k._1)))
+      assert(rate == r6(n.toDouble / sizes(k._1)))
     }
   }
 
   test("q350 exposure Gini equals a sequential recompute over the " +
       "brute top-k lists") {
-    val row = Breadth5.q350RetrievalExposure(spark, sf).collect().head
+    val row = AnnRetrieval.q350RetrievalExposure(spark, sf).collect().head
     val top = Similarity.q36AnnBruteTopK(spark, sf)
       .select("cid").collect().map(_.getLong(0))
     val n = Tables.embeddings(spark, sf).count()
@@ -126,14 +122,14 @@ class Round11eSpec extends SparkTestBase {
       .map { case ((_, x), i) => (i + 1 + nzero) * x }.sum
     val gini = (2.0 * srx - (n + 1).toDouble * sx) / (n.toDouble * sx)
     assert(row.getLong(0) == n && row.getLong(1) == expo.size.toLong)
-    assert(row.getDouble(2) == rnd6(expo.size.toDouble / n))
+    assert(row.getDouble(2) == r6(expo.size.toDouble / n))
     assert(row.getLong(3) == sx)
-    assert(row.getDouble(4) == rnd6(gini))
+    assert(row.getDouble(4) == r6(gini))
     assert(row.getDouble(4) > 0.0 && row.getDouble(4) < 1.0)
   }
 
   test("q351 temporal holdout equals a sequential recompute") {
-    val out = Breadth5.q351TemporalHoldout(spark, sf).collect()
+    val out = Curation.q351TemporalHoldout(spark, sf).collect()
       .map(r => r.getString(0) ->
         (r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4))).toMap
     val ev = Tables.events(spark, sf)
@@ -154,7 +150,7 @@ class Round11eSpec extends SparkTestBase {
 
   test("q352 Theil decomposition satisfies the additive identity to " +
       "quantization tolerance and matches a sequential recompute") {
-    val rows = Breadth5.q352TheilDecomposition(spark, sf).collect()
+    val rows = InfoTheory.q352TheilDecomposition(spark, sf).collect()
     val tTotal = rows.head.getDouble(5)
     val tBetween = rows.head.getDouble(6)
     val withinWeighted = rows.map { r =>
@@ -172,18 +168,18 @@ class Round11eSpec extends SparkTestBase {
     val t = spend.map { x =>
       math.round((x * n / s) * math.log(x * n / s) * 1e6)
     }.sum / n / 1e6
-    assert(tTotal == rnd6(t))
+    assert(tTotal == r6(t))
     assert(tBetween >= 0.0 || math.abs(tBetween) < 1e-6)
   }
 
   test("q353 Benford audit covers all 9 digits and chi2 terms match " +
       "a recompute") {
-    val rows = Breadth5.q353BenfordAudit(spark, sf).collect()
+    val rows = Audit.q353BenfordAudit(spark, sf).collect()
     assert(rows.map(_.getInt(0)).toSeq == (1 to 9))
     val n = rows.map(_.getLong(1)).sum
     rows.foreach { r =>
       val nd = r.getLong(1)
-      val e = n.toDouble * Breadth5.BenfordPpm(r.getInt(0) - 1) / 1e6
+      val e = n.toDouble * Audit.BenfordPpm(r.getInt(0) - 1) / 1e6
       assert(r.getLong(4) ==
         math.round((nd - e) * (nd - e) / e * 1e6),
         s"digit ${r.getInt(0)} chi2 diverged")
@@ -192,14 +188,14 @@ class Round11eSpec extends SparkTestBase {
 
   test("q354 JL distortion matches a sequential recompute and the " +
       "spread is a sane distortion number") {
-    val row = Breadth5.q354JlDistortion(spark, sf).collect().head
+    val row = DedupEmbedding.q354JlDistortion(spark, sf).collect().head
     val raw = Tables.embeddings(spark, sf)
       .select("vec_id", "embedding").collect()
       .map(r => r.getLong(0) ->
         r.getSeq[Float](1).toArray.map(x =>
           math.floor(x.toDouble * 1000.0).toLong)).toMap
     val dim = raw.values.head.length
-    val planes = DedupEmbedding.portablePlanes(dim).take(Breadth5.JlDim)
+    val planes = DedupEmbedding.portablePlanes(dim).take(DedupEmbedding.JlDim)
       .map(_.map(_.toLong))
     def proj(v: Array[Long]): Seq[Long] =
       planes.map(p => p.zip(v).map { case (c, q) => c * q }.sum)
@@ -222,7 +218,7 @@ class Round11eSpec extends SparkTestBase {
   }
 
   test("q355 session paths equal a sequential sessionizer") {
-    val out = Breadth5.q355SessionPaths(spark, sf).collect()
+    val out = SessionState.q355SessionPaths(spark, sf).collect()
       .map(r => (r.getString(0), r.getLong(1)))
     val ev = Tables.events(spark, sf)
       .select(col("user_id"), col("event_id"), col("event_type"),
@@ -234,7 +230,7 @@ class Round11eSpec extends SparkTestBase {
         scala.collection.mutable.ArrayBuffer(ordered.head))
       ordered.sliding(2).foreach {
         case Array(a, b) =>
-          if (b._4 - a._4 > Breadth5.PathGapUs)
+          if (b._4 - a._4 > SessionState.GapUs)
             sessions += scala.collection.mutable.ArrayBuffer(b)
           else sessions.last += b
         case _ =>

@@ -3,20 +3,16 @@ package graft
 import org.apache.spark.sql.functions._
 
 import graft.functions.Hashing
-import graft.operators.Breadth6
+import graft.operators.{Governance, Lifecycle, Relational, StorageLayout, TextProfile}
 import graft.sources.Tables
 
 /** Round-11 second batch (q356–q362): independent sequential
   * recomputes / law checks per operator. */
 class Round11fSpec extends SparkTestBase {
 
-  private def rnd6(x: Double): Double =
-    BigDecimal(java.math.BigDecimal.valueOf(x))
-      .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
-
   test("q356 broadcast advisor matches exact byte folds and flags " +
       "every small dim broadcastable at this SF") {
-    val out = Breadth6.q356BroadcastAdvisor(spark, sf).collect()
+    val out = StorageLayout.q356BroadcastAdvisor(spark, sf).collect()
       .map(r => r.getString(0) -> (r.getLong(1), r.getLong(2),
         r.getBoolean(4))).toMap
     val cust = Tables.customer(spark, sf)
@@ -31,7 +27,7 @@ class Round11fSpec extends SparkTestBase {
 
   test("q357 novelty curve: buckets partition the corpus shingles, " +
       "cumulative reaches 1, first bucket dominates novelty") {
-    val rows = Breadth6.q357NoveltyCurve(spark, sf).collect()
+    val rows = TextProfile.q357NoveltyCurve(spark, sf).collect()
     assert(rows.map(_.getLong(0)).toSeq == (0L to 9L))
     val total = rows.map(_.getLong(1)).sum
     assert(rows.last.getLong(2) == total, "cumulative must reach total")
@@ -47,7 +43,7 @@ class Round11fSpec extends SparkTestBase {
 
   test("q358 trade flows: totals match the fact join and net is " +
       "antisymmetric") {
-    val rows = Breadth6.q358TradeFlows(spark, sf).collect()
+    val rows = Relational.q358TradeFlows(spark, sf).collect()
       .map(r => (r.getInt(0), r.getInt(1)) ->
         (r.getLong(2), r.getLong(3), r.getLong(4))).toMap
     val totalCents = rows.values.map(_._2).sum
@@ -68,7 +64,7 @@ class Round11fSpec extends SparkTestBase {
 
   test("q359 LTV curve equals a sequential recompute with " +
       "right-censored at-risk mass") {
-    val out = Breadth6.q359LtvCurve(spark, sf).collect()
+    val out = Lifecycle.q359LtvCurve(spark, sf).collect()
       .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2),
         r.getLong(3), r.getDouble(4), r.getDouble(5))).toMap
     val ev = Tables.events(spark, sf)
@@ -96,7 +92,7 @@ class Round11fSpec extends SparkTestBase {
       cum += incr
       val (oObs, oAct, oCents, oIncr, oLtv) = out(k)
       assert(oObs == nObs && oAct == nActive && oCents == cents)
-      assert(oIncr == rnd6(incr / 1e6) && oLtv == rnd6(cum / 1e6),
+      assert(oIncr == r6(incr / 1e6) && oLtv == r6(cum / 1e6),
         s"offset $k diverged")
     }
     assert(out.keySet == byK.keySet)
@@ -104,7 +100,7 @@ class Round11fSpec extends SparkTestBase {
 
   test("q360 encoding advisor: enum columns dictionary-friendly, " +
       "key column not, ndv exact") {
-    val out = Breadth6.q360EncodingAdvisor(spark, sf).collect()
+    val out = StorageLayout.q360EncodingAdvisor(spark, sf).collect()
       .map(r => r.getString(0) -> (r.getLong(1), r.getLong(2),
         r.getBoolean(5))).toMap
     val orders = Tables.orders(spark, sf).collect()
@@ -118,7 +114,7 @@ class Round11fSpec extends SparkTestBase {
 
   test("q361 pseudonymization audit: collision-free, fk preserved, " +
       "hash matches the Scala twin") {
-    val row = Breadth6.q361PseudonymizeAudit(spark, sf).collect().head
+    val row = Governance.q361PseudonymizeAudit(spark, sf).collect().head
     assert(row.getBoolean(3), "collision found at test SF")
     assert(row.getBoolean(4), "fk not preserved")
     val users = Tables.events(spark, sf).select("user_id").distinct()
@@ -130,7 +126,7 @@ class Round11fSpec extends SparkTestBase {
 
   test("q362 shard rebalance: hash-modulo moves ~32/33 of keys, " +
       "rendezvous ~1/33, both match a sequential recompute") {
-    val row = Breadth6.q362ShardRebalance(spark, sf).collect().head
+    val row = StorageLayout.q362ShardRebalance(spark, sf).collect().head
     val users = Tables.events(spark, sf).select("user_id").distinct()
       .collect().map(_.getLong(0))
     def hrw(u: Long, k: Int): Long =

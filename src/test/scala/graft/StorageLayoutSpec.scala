@@ -1,10 +1,7 @@
 package graft
 
-import org.apache.spark.sql.functions._
-
-import graft.functions.Hashing
 import graft.operators.{AnnIndex, StorageLayout}
-import graft.sources.Tables
+import org.apache.spark.sql.functions._
 
 /** q132/q133 — the layout-proof queries, checked against INDEPENDENT
   * recomputes: the filtered aggregate against a direct scan of the
@@ -12,6 +9,8 @@ import graft.sources.Tables
   * the actual file listing on disk, and the served top-k against a
   * plain Scala cosine computation. */
 class StorageLayoutSpec extends SparkTestBase {
+
+
 
   test("q132 z-order aggregate equals the layout-free answer and " +
       "the z scan never surfaces more rows than the single-sort scan") {
@@ -116,211 +115,5 @@ class StorageLayoutSpec extends SparkTestBase {
     val first = rows(spark)
     assert(rows(other) == first, "second session")
     assert(rows(spark) == first, "first session again")
-  }
-
-  test("q286 advisor equals a sequential histogram replay and " +
-      "respects the collision-probability bounds") {
-    val li = Tables.lineitem(spark, sf)
-      .select(date_format(col("l_shipdate"), "yyyy-MM").as("m"),
-        col("l_returnflag"), col("l_linestatus"),
-        pmod(col("l_suppkey"), lit(32)).cast("string").as("sb"),
-        pmod(col("l_partkey"), lit(1024)).cast("string").as("pb"))
-      .collect()
-    val keyed: Map[String, Seq[String]] = Map(
-      "ship_month" -> li.map(_.getString(0)).toSeq,
-      "return_flag" -> li.map(_.getString(1)).toSeq,
-      "line_status" -> li.map(_.getString(2)).toSeq,
-      "supp_bucket_32" -> li.map(_.getString(3)).toSeq,
-      "part_bucket_1024" -> li.map(_.getString(4)).toSeq)
-    val got = StorageLayout.q286PartitionAdvisor(spark, sf).collect()
-    assert(got.map(_.getString(0)).toSeq == keyed.keys.toSeq.sorted)
-    got.foreach { r =>
-      val vs = keyed(r.getString(0))
-      val hist = vs.groupBy(identity).map(_._2.size.toLong)
-      val n = vs.length.toLong
-      val s2 = hist.map(c => BigDecimal(c) * BigDecimal(c)).sum
-      assert(r.getLong(1) == hist.size.toLong)
-      assert(r.getLong(2) == n)
-      val esf = rN(s2.toDouble / (n.toDouble * n), 8)
-      assert(r.getDouble(3) == esf, s"${r.getString(0)} esf")
-      assert(r.getDouble(4) == rN(hist.max.toDouble / n, 8))
-      // Σp² ∈ [1/K, 1] and Σp² ≥ (max p)²
-      assert(r.getDouble(3) >= 1.0 / hist.size - 1e-8)
-      assert(r.getDouble(3) <= 1.0 + 1e-9)
-      assert(r.getDouble(3) >=
-        math.pow(hist.max.toDouble / n, 2) - 1e-8)
-    }
-  }
-
-  test("q309 Bloom advisor equals a sequential ndv replay") {
-    val li = Tables.lineitem(spark, sf)
-      .select("l_orderkey", "l_partkey", "l_suppkey").collect()
-    val oc = Tables.orders(spark, sf).select("o_custkey").collect()
-      .map(_.getLong(0))
-    val keyed: Map[String, Seq[Long]] = Map(
-      "l_orderkey" -> li.map(_.getLong(0)).toSeq,
-      "l_partkey" -> li.map(_.getLong(1)).toSeq,
-      "l_suppkey" -> li.map(_.getLong(2)).toSeq,
-      "o_custkey" -> oc.toSeq)
-    val got = StorageLayout.q309BloomAdvisor(spark, sf).collect()
-    assert(got.map(_.getString(0)).toSeq == keyed.keys.toSeq.sorted)
-    got.foreach { r =>
-      val vs = keyed(r.getString(0))
-      val ndv = vs.distinct.length.toLong
-      assert(r.getLong(1) == vs.length.toLong)
-      assert(r.getLong(2) == ndv)
-      assert(r.getDouble(3) == rN(ndv.toDouble *
-        StorageLayout.BloomBitsPerElem / 8 / 1024 / 1024, 4))
-      assert(r.getInt(4) == StorageLayout.BloomHashes)
-      assert(r.getDouble(5) == rN(ndv.toDouble / vs.length, 6))
-    }
-  }
-
-  test("q356 broadcast advisor matches exact byte folds and flags " +
-      "every small dim broadcastable at this SF") {
-    val out = StorageLayout.q356BroadcastAdvisor(spark, sf).collect()
-      .map(r => r.getString(0) -> (r.getLong(1), r.getLong(2),
-        r.getBoolean(4))).toMap
-    val cust = Tables.customer(spark, sf)
-      .select("c_name", "c_mktsegment").collect()
-    val expBytes = cust.map(r =>
-      r.getString(0).length + r.getString(1).length + 20L).sum
-    assert(out("customer") == ((cust.length.toLong, expBytes, true)))
-    assert(out.keySet ==
-      Set("customer", "nation", "part", "region", "supplier"))
-    assert(out.values.forall(_._3), "all dims broadcastable at test SF")
-  }
-
-  test("q360 encoding advisor: enum columns dictionary-friendly, " +
-      "key column not, ndv exact") {
-    val out = StorageLayout.q360EncodingAdvisor(spark, sf).collect()
-      .map(r => r.getString(0) -> (r.getLong(1), r.getLong(2),
-        r.getBoolean(5))).toMap
-    val orders = Tables.orders(spark, sf).collect()
-    val n = orders.length.toLong
-    val ndvPrio = orders.map(_.getString(5)).distinct.length.toLong
-    assert(out("o_orderpriority") == ((n, ndvPrio, ndvPrio * 10 < n)))
-    assert(out("o_orderstatus")._3, "status must be dictionary-friendly")
-    assert(!out("o_custkey")._3 || out("o_custkey")._2 * 10 <
-      out("o_custkey")._1)
-  }
-
-  test("q362 shard rebalance: hash-modulo moves ~32/33 of keys, " +
-      "rendezvous ~1/33, both match a sequential recompute") {
-    val row = StorageLayout.q362ShardRebalance(spark, sf).collect().head
-    val users = Tables.events(spark, sf).select("user_id").distinct()
-      .collect().map(_.getLong(0))
-    def hrw(u: Long, k: Int): Long =
-      (0 until k).map { s =>
-        (Hashing.md5Hash60Value(s"hrw:$u:$s") / 64) * 64 + s
-      }.max % 64
-    val modMoved = users.count { u =>
-      val h = Hashing.md5Hash60Value(s"shard:$u")
-      h % 32 != h % 33
-    }.toLong
-    val hrwMoved = users.count(u => hrw(u, 32) != hrw(u, 33)).toLong
-    assert(row.getLong(0) == users.length.toLong)
-    assert(row.getLong(1) == modMoved)
-    assert(row.getLong(3) == hrwMoved)
-    // the audit's point: rendezvous placement moves an order of
-    // magnitude less state than modulo when adding one shard
-    assert(row.getDouble(4) * 5 < row.getDouble(2),
-      s"hrw ${row.getDouble(4)} not well below mod ${row.getDouble(2)}")
-  }
-
-  test("q376 bins equal a sequential size-desc pack and conserve bytes") {
-    val rows = StorageLayout.q376CompactionPlanner(spark, sf).collect()
-    val daily = graft.sources.Tables.lineitem(spark, sf)
-      .groupBy(to_date(col("l_shipdate")).as("day"))
-      .agg(count(lit(1)).as("n")).collect()
-      .map(r => (r.getDate(0), r.getLong(1) * StorageLayout.CompactRowBytes))
-    // sequential replay of the contiguous pack
-    val sorted = daily.sortBy { case (d, b) => (-b, d.getTime) }
-    var cum = 0L
-    val binOf = sorted.map { case (_, b) =>
-      val bin = cum / StorageLayout.CompactTargetBytes; cum += b; bin
-    }
-    val expBins = sorted.zip(binOf).groupBy(_._2).view
-      .mapValues(g => (g.length.toLong, g.map(_._1._2).sum)).toMap
-    assert(rows.length == expBins.size)
-    rows.foreach { r =>
-      val (n, bytes) = expBins(r.getLong(0))
-      assert(r.getLong(1) == n && r.getLong(2) == bytes,
-        s"bin ${r.getLong(0)} mismatch")
-    }
-    assert(rows.map(_.getLong(2)).sum == daily.map(_._2).sum,
-      "every byte must land in exactly one bin")
-  }
-
-  test("q381 estimates equal a sequential hash-sample replay and the " +
-      "true counts equal key-set joins") {
-    import graft.functions.Hashing
-    val rows = StorageLayout.q381SampleCardinality(spark, sf).collect()
-    assert(rows.length == 3)
-    val li = graft.sources.Tables.lineitem(spark, sf)
-      .select("l_orderkey", "l_linenumber", "l_partkey", "l_suppkey")
-      .collect()
-      .map(r => (r.getLong(0), r.getAs[Number](1).longValue,
-        r.getLong(2), r.getLong(3)))
-    val pk = graft.sources.Tables.part(spark, sf)
-      .filter(col("p_size") <= StorageLayout.AdvisorPartMaxSize)
-      .select("p_partkey").collect().map(_.getLong(0)).toSet
-    val sk = graft.sources.Tables.supplier(spark, sf)
-      .filter(col("s_nationkey") <= StorageLayout.AdvisorSuppMaxNation)
-      .select("s_suppkey").collect().map(_.getLong(0)).toSet
-    def inSample(ok: Long, ln: Long): Boolean =
-      Hashing.md5Hash60Value(s"cardsample:$ok:$ln") %
-        StorageLayout.CardSampleMod == 0L
-    def counts(wp: Boolean, ws: Boolean): (Long, Long) = {
-      val hits = li.filter(t => (!wp || pk(t._3)) && (!ws || sk(t._4)))
-      (hits.count(t => inSample(t._1, t._2)).toLong, hits.length.toLong)
-    }
-    val exp = Map(
-      "part_and_supplier" -> counts(wp = true, ws = true),
-      "part_filter" -> counts(wp = true, ws = false),
-      "supplier_filter" -> counts(wp = false, ws = true))
-    rows.foreach { r =>
-      val (sn, actual) = exp(r.getString(0))
-      assert(r.getLong(1) == sn, s"${r.getString(0)} sample_n")
-      assert(r.getLong(2) == sn * StorageLayout.CardSampleMod)
-      assert(r.getLong(3) == actual, s"${r.getString(0)} actual")
-    }
-    // the estimator must be in the right ballpark on this fixture
-    // (1-in-64 sampling of >10k matching rows)
-    rows.foreach(r => assert(math.abs(r.getDouble(4)) < 0.5,
-      s"${r.getString(0)} rel_err ${r.getDouble(4)}"))
-  }
-
-  test("q377 estimates follow the independence model and the actual " +
-      "count matches a sequential filtered star join") {
-    val rows = StorageLayout.q377JoinOrderAdvisor(spark, sf).collect()
-    assert(rows.length == 3)
-    // selectivity ordering: ascending ppm with name tie-break
-    val ppms = rows.map(_.getLong(4))
-    assert(ppms.sameElements(ppms.sorted), "most-selective-first order")
-    // independence estimate replay (same left-to-right association)
-    val sels = rows.map(r =>
-      r.getLong(3).toDouble / r.getLong(2).toDouble)
-    val nFact = graft.sources.Tables.lineitem(spark, sf).count()
-    var est = nFact.toDouble
-    rows.zip(sels).foreach { case (r, s) =>
-      est = est * s
-      assert(math.abs(r.getDouble(5) - BigDecimal(est).setScale(2,
-        BigDecimal.RoundingMode.HALF_UP).toDouble) < 1e-6)
-    }
-    // actual: sequential filter + key-set intersection
-    val pk = graft.sources.Tables.part(spark, sf)
-      .filter(col("p_size") <= StorageLayout.AdvisorPartMaxSize)
-      .select("p_partkey").collect().map(_.getLong(0)).toSet
-    val sk = graft.sources.Tables.supplier(spark, sf)
-      .filter(col("s_nationkey") <= StorageLayout.AdvisorSuppMaxNation)
-      .select("s_suppkey").collect().map(_.getLong(0)).toSet
-    val ok = graft.sources.Tables.orders(spark, sf)
-      .filter(col("o_orderpriority") === StorageLayout.AdvisorOrderPriority)
-      .select("o_orderkey").collect().map(_.getLong(0)).toSet
-    val actual = graft.sources.Tables.lineitem(spark, sf)
-      .select("l_partkey", "l_suppkey", "l_orderkey").collect()
-      .count(r => pk(r.getLong(0)) && sk(r.getLong(1)) && ok(r.getLong(2)))
-    rows.foreach(r => assert(r.getLong(6) == actual.toLong))
   }
 }

@@ -1,9 +1,6 @@
 package graft
 
-import org.apache.spark.sql.functions._
-
 import graft.operators.TextOps
-import graft.sources.Tables
 
 /** q137 — the engine's distributed BPE trainer pinned rank-by-rank
   * against an INDEPENDENT sequential Scala reference (the q125
@@ -80,197 +77,5 @@ class TextOpsBpeSpec extends SparkTestBase {
       referenceBpe(Map("aaa" -> 1L), 1)
     assert(merges == Seq((1, "a", "a", 2L)), "pair COUNT sees both overlaps")
     assert(before == 3 && after == 2, "but only one merge applies")
-  }
-
-  test("q118 bigram surprisal matches a scala bigram-model recompute " +
-      "and discriminates across the corpus") {
-    import graft.operators.TextOps
-    val got = TextOps.q118BigramSurprisal(spark, sf).collect()
-      .map(r => r.getLong(0) ->
-        (r.getLong(1), if (r.isNullAt(2)) Double.NaN else r.getDouble(2)))
-      .toMap
-    val docs = graft.sources.Tables.documents(spark, sf).collect()
-      .map(r => r.getLong(0) -> r.getString(1).trim.split(" ", -1).toSeq)
-      .toMap
-    val allBg = docs.values.toSeq.flatMap(ws => ws.zip(ws.drop(1)))
-    val c2 = allBg.groupBy(identity).map { case (k, v) => k -> v.size }
-    val c1 = allBg.groupBy(_._1).map { case (k, v) => k -> v.size }
-    def log2(x: Double) = math.log(x) / math.log(2.0)
-    docs.foreach { case (id, ws) =>
-      val bgs = ws.zip(ws.drop(1))
-      val (n, bits) = got(id)
-      assert(n == bgs.size, s"doc $id bigram count")
-      if (bgs.nonEmpty) {
-        val expect =
-          bgs.map(b => -log2(c2(b).toDouble / c1(b._1))).sum / bgs.size
-        assert(math.abs(bits - expect) < 1e-3,
-          s"doc $id: $bits vs $expect")
-      }
-    }
-    // non-vacuous: the conditional model must discriminate across docs
-    val scores = got.values.filter(v => v._1 > 0).map(_._2)
-    assert(scores.nonEmpty && scores.max - scores.min > 0.1)
-  }
-
-  test("q111 LM surprisal matches a scala unigram-model recompute") {
-    import graft.operators.TextOps
-    val got = TextOps.q111LmSurprisal(spark, sf).collect()
-      .map(r => r.getLong(0) -> (r.getLong(1), r.getDouble(2))).toMap
-    val docs = graft.sources.Tables.documents(spark, sf).collect()
-      .map(r => r.getLong(0) -> r.getString(1).trim.split(" ", -1).toSeq)
-      .toMap
-    val ctf = docs.values.flatten.groupBy(identity)
-      .map { case (w, xs) => w -> xs.size.toLong }
-    val total = ctf.values.sum.toDouble
-    def log2(x: Double) = math.log(x) / math.log(2.0)
-    docs.foreach { case (id, toks) =>
-      val (nTokens, bits) = got(id)
-      assert(nTokens == toks.size, s"doc $id token count")
-      val expect = toks.map(t => -log2(ctf(t) / total)).sum / toks.size
-      assert(math.abs(bits - expect) < 1e-3,
-        s"doc $id surprisal $bits vs recompute $expect")
-    }
-    // the two tails exist: scores vary across the corpus
-    val scores = got.values.map(_._2)
-    assert(scores.max - scores.min > 0.1, "surprisal should discriminate")
-  }
-
-  test("q123 PMI: pair counts and scores match a scala recompute over " +
-      "the top-20 vocabulary") {
-    val docWords = graft.sources.Tables.documents(spark, sf)
-      .select("doc_id", "text").collect()
-      .map(r => r.getLong(0) ->
-        r.getString(1).trim.split(" ").toSet).toMap
-    val df = docWords.values.toSeq.flatten.groupBy(identity)
-      .map { case (w, ws) => w -> ws.size.toLong }
-    val vocab = df.toSeq.sortBy { case (w, d) => (-d, w) }.take(20).toMap
-    val nDocs = docWords.size.toLong
-    val pairCounts = docWords.values.toSeq
-      .flatMap { ws =>
-        val present = ws.filter(vocab.contains).toSeq.sorted
-        for (i <- present.indices; j <- i + 1 until present.length)
-          yield (present(i), present(j))
-      }
-      .groupBy(identity).map { case (p, xs) => p -> xs.size.toLong }
-      .filter(_._2 >= 5)
-    def pmi(w1: String, w2: String, both: Long): Double =
-      math.log(both.toDouble * nDocs / (vocab(w1) * vocab(w2))) /
-        math.log(2.0)
-    val expectTop = pairCounts.toSeq
-      .map { case ((w1, w2), c) =>
-        (w1, w2, c, BigDecimal(pmi(w1, w2, c))
-          .setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble)
-      }
-      .sortBy { case (w1, w2, _, p) => (-p, w1, w2) }.take(30)
-    val got = graft.operators.TextOps.q123PmiCooccurrence(spark, sf)
-      .collect()
-      .map(r => (r.getString(0), r.getString(1), r.getLong(2),
-        r.getDouble(3)))
-    assert(got.length == expectTop.length)
-    got.zip(expectTop).foreach { case (g, e) =>
-      assert(g._1 == e._1 && g._2 == e._2 && g._3 == e._3,
-        s"pair mismatch: $g vs $e")
-      assert(math.abs(g._4 - e._4) < 1e-4, s"pmi mismatch: $g vs $e")
-    }
-  }
-
-  test("q121 adaptive quality: per-source threshold is the exact type-7 " +
-      "p25 and kept flags follow it") {
-    def pct25(xs: Array[Double]): Double = {
-      val s = xs.sorted
-      val rank = 0.25 * (s.length - 1)
-      val lo = rank.toInt
-      val frac = rank - lo
-      if (lo + 1 < s.length) s(lo) + frac * (s(lo + 1) - s(lo)) else s(lo)
-    }
-    val quality = graft.operators.TextOps.q39QualityScore(spark, sf)
-      .collect().map(r => r.getLong(0) -> r.getDouble(6)).toMap
-    val srcOf = graft.sources.Tables.documents(spark, sf)
-      .select("doc_id", "source").collect()
-      .map(r => r.getLong(0) -> r.getString(1)).toMap
-    val bySrc = srcOf.groupBy(_._2)
-      .map { case (s, m) => s -> m.keys.toArray.map(quality) }
-    val got = graft.operators.TextOps.q121AdaptiveQuality(spark, sf)
-      .collect()
-    assert(got.map(_.getLong(0)).toSet == quality.keySet)
-    got.foreach { r =>
-      val (id, src, q, p25, kept) = (r.getLong(0), r.getString(1),
-        r.getDouble(2), r.getDouble(3), r.getBoolean(4))
-      assert(src == srcOf(id))
-      assert(q == quality(id), s"doc $id quality")
-      assert(math.abs(p25 - pct25(bySrc(src))) < 2e-6, s"$src p25")
-      assert(kept == (q >= p25), s"doc $id kept flag")
-    }
-    // a p25 cutoff keeps at least ~75% of every source, never all of a
-    // source with quality variance
-    bySrc.keys.foreach { s =>
-      val rows = got.filter(_.getString(1) == s)
-      val frac = rows.count(_.getBoolean(4)).toDouble / rows.length
-      assert(frac >= 0.74, s"source $s kept fraction $frac")
-      if (bySrc(s).distinct.length > 4)
-        assert(frac < 1.0, s"source $s filtered nothing")
-    }
-  }
-
-  test("q221 bigram coverage equals a sequential Zipf-curve recompute") {
-    val out = TextOps.q221VocabCoverage(spark, sf).collect()
-      .map(r => r.getInt(0) -> (r.getLong(1), r.getLong(2), r.getLong(3),
-        r.getLong(4))).toMap
-    val texts = Tables.documents(spark, sf).select("text").collect()
-      .map(_.getString(0))
-    val counts = scala.collection.mutable.Map.empty[String, Long]
-    texts.foreach { t =>
-      val ws = t.trim.split(" ", -1)
-      if (ws.length >= 2)
-        ws.sliding(2).foreach { p =>
-          val bg = p.mkString(" ")
-          counts(bg) = counts.getOrElse(bg, 0L) + 1L
-        }
-    }
-    val total = counts.values.sum
-    val ranked = counts.toSeq.sortBy { case (u, n) => (-n, u) }
-    TextOps.CoverageNs.foreach { n =>
-      val top = ranked.take(n)
-      assert(out(n) == ((top.size.toLong, counts.size.toLong,
-        top.map(_._2).sum, total)), s"budget $n diverged")
-    }
-    // the curve is non-degenerate on this fixture
-    assert(out(TextOps.CoverageNs.head)._3 < total)
-  }
-
-  test("q256 classification report equals a sequential confusion " +
-      "recompute over the q38 predictions") {
-    def opt(r: org.apache.spark.sql.Row, i: Int): Option[Double] =
-      if (r.isNullAt(i)) None else Some(r.getDouble(i))
-    val out = TextOps.q256ClassReport(spark, sf).collect()
-      .map(r => r.getString(0) -> ((r.getLong(1), r.getLong(2),
-        r.getLong(3)), (opt(r, 4), r.getDouble(5), opt(r, 6),
-        r.getDouble(7), r.getDouble(8)))).toMap
-    val preds = TextOps.q38LangId(spark, sf)
-      .select("lang", "pred_lang").collect()
-      .map(r => (r.getString(0), r.getString(1)))
-    val classes = preds.map(_._1).distinct.sorted
-    val f1s = classes.map { c =>
-      val tp = preds.count(p => p._1 == c && p._2 == c).toLong
-      val nGold = preds.count(_._1 == c).toLong
-      val nPred = preds.count(_._2 == c).toLong
-      val p = if (nPred > 0) Some(tp.toDouble / nPred) else None
-      val r = tp.toDouble / nGold
-      val f1 = p.flatMap(pv =>
-        if (pv + r > 0.0) Some(2.0 * pv * r / (pv + r)) else None)
-      c -> (nGold, nPred, tp, p, r, f1)
-    }.toMap
-    val acc = preds.count(p => p._1 == p._2).toDouble / preds.length
-    val macroF1 = classes.map(c =>
-      BigDecimal(f1s(c)._6.getOrElse(0.0) * 1e6)
-        .setScale(0, BigDecimal.RoundingMode.HALF_UP).toLong)
-      .sum.toDouble / classes.length / 1e6
-    classes.foreach { c =>
-      val (nGold, nPred, tp, p, r, f1) = f1s(c)
-      assert(out(c) == (((nGold, nPred, tp),
-        (p.map(r6), r6(r), f1.map(r6), r6(acc), r6(macroF1)))),
-        s"class $c diverged")
-    }
-    assert(out.size == classes.length)
   }
 }

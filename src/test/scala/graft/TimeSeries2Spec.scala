@@ -158,390 +158,4 @@ class TimeSeries2Spec extends SparkTestBase {
       assert(math.abs(oR2 - r2) < 1e-5, s"$t r2")
     }
   }
-
-  test("q236 Mann-Kendall equals a sequential recompute and |S| is " +
-      "bounded by the pair count") {
-    val out = TimeSeries2.q236MannKendall(spark, sf).collect()
-      .map(r => r.getString(0) -> ((r.getLong(1), r.getLong(2),
-        r.getLong(3)), (r.getDouble(4), r.getDouble(5), r.getString(6))))
-      .toMap
-    val evs = Tables.events(spark, sf)
-      .select(col("event_type"), to_date(col("ts")).as("d")).collect()
-      .map(r => (r.getString(0), r.getDate(1).toLocalDate))
-    val d0 = evs.map(_._2).min
-    evs.groupBy(_._1).foreach { case (t, rows) =>
-      val daily = rows.groupBy(r =>
-        java.time.temporal.ChronoUnit.DAYS.between(d0, r._2))
-        .map { case (d, rs) => (d, rs.length.toLong) }.toSeq.sortBy(_._1)
-      val pairs = for {
-        i <- daily.indices; j <- daily.indices if i < j
-      } yield math.signum(daily(j)._2 - daily(i)._2)
-      val s = pairs.sum
-      val n = daily.length.toLong
-      val tiePoly = daily.groupBy(_._2).values
-        .map(g => { val tt = g.size.toLong; tt * (tt - 1) * (2 * tt + 5) })
-        .sum
-      val varS = (n * (n - 1) * (2 * n + 5) - tiePoly).toDouble / 18.0
-      val z =
-        if (s > 0) (s - 1).toDouble / math.sqrt(varS)
-        else if (s < 0) (s + 1).toDouble / math.sqrt(varS)
-        else 0.0
-      val trend =
-        if (z > TimeSeries2.MkZCrit) "increasing"
-        else if (z < -TimeSeries2.MkZCrit) "decreasing"
-        else "none"
-      assert(out(t) == (((n, pairs.length.toLong, s),
-        (r4(varS), r6(z), trend))), s"type $t diverged")
-      assert(math.abs(s) <= pairs.length, s"|S| bound violated for $t")
-    }
-  }
-
-  test("q246 linear interpolation equals a sequential spine replay; " +
-      "observed hours pass through exactly") {
-    val out = TimeSeries2.q246LinearInterpolate(spark, sf).collect()
-      .map(r => (r.getString(0), r.getTimestamp(1).getTime) ->
-        (r.getLong(2), r.getBoolean(3),
-          if (r.isNullAt(4)) None else Some(r.getDouble(4)))).toMap
-    val evs = Tables.events(spark, sf)
-      .select(col("event_type"),
-        (unix_micros(date_trunc("hour", col("ts")))).as("hus")).collect()
-      .map(r => (r.getString(0), r.getLong(1)))
-    val h0 = evs.map(_._2).min
-    val hmax = evs.map(_._2).max
-    val hours = ((hmax - h0) / 3600000000L).toInt
-    val types = evs.map(_._1).distinct.sorted
-    val counts = evs.groupBy(e =>
-      (e._1, ((e._2 - h0) / 3600000000L))).map { case (k, v) =>
-      k -> v.size.toLong }
-    types.foreach { t =>
-      val obs = (0 to hours).map(h => h.toLong ->
-        counts.get((t, h.toLong))).toMap
-      (0 to hours).foreach { h =>
-        val key = (t, (h0 + h * 3600000000L) / 1000L)
-        val (n, isGap, interp) = out(key)
-        obs(h.toLong) match {
-          case Some(c) =>
-            assert(n == c && !isGap && interp.contains(c.toDouble),
-              s"observed cell ($t, $h) diverged")
-          case None =>
-            assert(n == 0L && isGap, s"gap cell ($t, $h) diverged")
-            val prev = (h - 1 to 0 by -1)
-              .collectFirst { case p if obs(p.toLong).isDefined =>
-                (p.toLong, obs(p.toLong).get) }
-            val next = (h + 1 to hours)
-              .collectFirst { case q if obs(q.toLong).isDefined =>
-                (q.toLong, obs(q.toLong).get) }
-            val expected = for { (ph, pn) <- prev; (nh, nn) <- next }
-              yield r4(pn.toDouble +
-                (nn - pn).toDouble * (h - ph).toDouble / (nh - ph).toDouble)
-            assert(interp == expected, s"interp at ($t, $h) diverged")
-        }
-      }
-    }
-  }
-
-  test("q250 overdispersion equals a sequential recompute and D > 0") {
-    val out = TimeSeries2.q250Overdispersion(spark, sf).collect()
-      .map(r => r.getString(0) -> ((r.getLong(1)), (r.getDouble(2),
-        r.getDouble(3), r.getDouble(4), r.getString(5)))).toMap
-    val evs = Tables.events(spark, sf)
-      .select(col("event_type"), to_date(col("ts"))).collect()
-      .map(r => (r.getString(0), r.getDate(1).toString))
-    evs.groupBy(_._1).foreach { case (t, rows) =>
-      val daily = rows.groupBy(_._2).map(_._2.size.toLong).toSeq
-      val k = daily.length.toLong
-      if (k >= 2) {
-        val s = daily.sum
-        val q = daily.map(n => n * n).sum
-        val mean = s.toDouble / k
-        val variance = (q.toDouble - s.toDouble * mean) / (k - 1)
-        val d = r6(variance / mean)
-        val verdict =
-          if (d < 2.0) "poisson_like"
-          else if (d < 5.0) "moderate" else "bursty"
-        assert(out(t) == ((k, (r6(mean), r6(variance), d, verdict))),
-          s"type $t diverged")
-        assert(d > 0.0)
-      } else assert(!out.contains(t))
-    }
-  }
-
-  test("q252 CUSUM closed form equals the textbook recursion and the " +
-      "statistic is never negative") {
-    val out = TimeSeries2.q252Cusum(spark, sf).collect()
-      .map(r => (r.getString(0), r.getInt(1)) ->
-        (r.getLong(2), r.getLong(3), r.getBoolean(4))).toMap
-    val evs = Tables.events(spark, sf)
-      .select(col("event_type"), to_date(col("ts"))).collect()
-      .map(r => (r.getString(0), r.getDate(1).toLocalDate))
-    val d0 = evs.map(_._2).min
-    val daily = evs.groupBy(e => (e._1,
-      java.time.temporal.ChronoUnit.DAYS.between(d0, e._2)))
-      .map { case (k, v) => k -> v.size.toLong }
-    val allDays = daily.keys.map(_._2).toSeq
-    val mid = (allDays.min + allDays.max) / 2
-    daily.keys.map(_._1).toSeq.distinct.foreach { t =>
-      val series = daily.filter(_._1._1 == t).toSeq
-        .map { case ((_, d), n) => (d, n) }.sortBy(_._1)
-      val firstHalf = series.filter(_._1 <= mid)
-      val mu = BigDecimal(firstHalf.map(_._2).sum * 1e6 /
-        firstHalf.length).setScale(0, BigDecimal.RoundingMode.HALF_UP)
-        .toLong
-      val k = mu / 4
-      val h = mu * 2
-      var s = 0L
-      series.foreach { case (d, n) =>
-        s = math.max(0L, s + (n * 1000000L - mu - k))
-        assert(out((t, d.toInt)) == ((n, s, s > h)),
-          s"cell ($t, $d) diverged")
-        assert(s >= 0L)
-      }
-    }
-  }
-
-  private lazy val daily: Map[(String, Long), Long] = {
-    val evs = Tables.events(spark, sf)
-      .select(col("event_type"), to_date(col("ts"))).collect()
-      .map(r => (r.getString(0), r.getDate(1).toLocalDate))
-    val d0 = evs.map(_._2).min
-    evs.groupBy(e => (e._1,
-      java.time.temporal.ChronoUnit.DAYS.between(d0, e._2)))
-      .map { case (k, v) => k -> v.size.toLong }
-  }
-
-  test("q268 seasonal amplitude equals a sequential pinned-table DFT " +
-      "replay and is nonnegative") {
-    val out = TimeSeries2.q268Periodogram(spark, sf).collect()
-      .map(r => (r.getString(0), r.getInt(1)) ->
-        (r.getLong(2), r.getLong(3), r.getDouble(4))).toMap
-    val types = daily.keys.map(_._1).toSeq.distinct
-    types.foreach { t =>
-      val series = daily.collect { case ((`t`, d), n) => (d, n) }.toSeq
-      TimeSeries2.SeasonPeriods.foreach { p =>
-        val cos = TimeSeries2.cos6(p); val sin = TimeSeries2.sin6(p)
-        val nDays = series.size.toLong
-        val total = series.map(_._2).sum
-        val cS = series.map(s => cos((s._1 % p).toInt)).sum
-        val sS = series.map(s => sin((s._1 % p).toInt)).sum
-        val aS = series.map(s => s._2 * cos((s._1 % p).toInt)).sum
-        val bS = series.map(s => s._2 * sin((s._1 % p).toInt)).sum
-        val x = aS * nDays - total * cS
-        val y = bS * nDays - total * sS
-        val amp = r6(2.0 * math.sqrt(
-          x.toDouble * x.toDouble + y.toDouble * y.toDouble) /
-          (1e6 * nDays.toDouble * total.toDouble))
-        assert(out((t, p)) == ((nDays, total, amp)), s"($t, $p) diverged")
-        assert(amp >= 0.0)
-      }
-    }
-    assert(out.size == types.size * TimeSeries2.SeasonPeriods.size)
-  }
-
-  test("q271 backtest MAEs equal a sequential lag replay and the " +
-      "winner follows the exact error sums") {
-    val out = TimeSeries2.q271ForecastBacktest(spark, sf).collect()
-      .map(r => r.getString(0) -> (r.getLong(1), r.getDouble(2),
-        r.getDouble(3), r.getString(4))).toMap
-    val types = daily.keys.map(_._1).toSeq.distinct
-    types.foreach { t =>
-      val series = daily.collect { case ((`t`, d), n) => (d, n) }.toMap
-      val evalDays = series.keys.filter(d =>
-        series.contains(d - 1) && series.contains(d - 7)).toSeq
-      if (evalDays.nonEmpty) {
-        val ae1 = evalDays.map(d => math.abs(series(d) - series(d - 1))).sum
-        val ae7 = evalDays.map(d => math.abs(series(d) - series(d - 7))).sum
-        val n = evalDays.size.toLong
-        val winner = if (ae7 < ae1) "seasonal_naive"
-          else if (ae1 < ae7) "naive" else "tie"
-        assert(out(t) == ((n, r4(ae1.toDouble / n), r4(ae7.toDouble / n),
-          winner)), s"type $t diverged")
-      } else assert(!out.contains(t))
-    }
-  }
-
-  /** Spark's exact `percentile(x, 0.5)` (linear interpolation). */
-  private def median(xs: Seq[Long]): Double = {
-    val s = xs.sorted
-    val pos = 0.5 * (s.length - 1)
-    val lo = pos.toInt
-    if (lo + 1 < s.length) s(lo) + (pos - lo) * (s(lo + 1) - s(lo))
-    else s(lo).toDouble
-  }
-
-  test("q275 burst episodes equal a sequential islands replay over " +
-      "the Poisson-surprise threshold") {
-    val out = TimeSeries2.q275BurstEpisodes(spark, sf).collect()
-      .map(r => (r.getString(0), r.getLong(1), r.getLong(2),
-        r.getLong(3), r.getLong(4), r.getLong(5)))
-    val evs = Tables.events(spark, sf)
-      .select(col("event_type"), to_date(col("ts"))).collect()
-      .map(r => (r.getString(0), r.getDate(1).toLocalDate))
-    val d0 = evs.map(_._2).min
-    val daily = evs.groupBy(e => (e._1,
-      java.time.temporal.ChronoUnit.DAYS.between(d0, e._2)))
-      .map { case (k, v) => k -> v.size.toLong }
-    val expect = daily.keys.map(_._1).toSeq.distinct.sorted.flatMap { t =>
-      val series = daily.collect { case ((`t`, d), n) => (d, n) }.toSeq
-      val med = median(series.map(_._2))
-      val burstDays = series
-        .filter(s => s._2.toDouble > med + TimeSeries2.BurstSigma *
-          math.sqrt(med))
-        .map(_._1).sorted
-      burstDays.zipWithIndex.groupBy { case (d, i) => d - i }.values
-        .map { ws =>
-          val ds = ws.map(_._1)
-          val ns = ds.map(d => daily((t, d)))
-          (t, ds.min, ds.max, ds.size.toLong, ns.max, ns.sum)
-        }.toSeq
-    }.sortBy(e => (e._1, e._2))
-    assert(out.toSeq == expect)
-    // episodes never overlap and each spans exactly its day count
-    out.foreach(e => assert(e._3 - e._2 + 1 == e._4))
-  }
-
-  /** (event_type, dayIdx, count) daily profile from raw events. */
-  private def dailyCounts(): Seq[(String, Long, Long)] = {
-    val ev = Tables.events(spark, sf)
-      .select(col("event_type"), to_date(col("ts")).as("d")).collect()
-      .map(r => (r.getString(0), r.getDate(1).toLocalDate))
-    val d0 = ev.map(_._2).min
-    ev.groupBy(t => (t._1, java.time.temporal.ChronoUnit.DAYS
-      .between(d0, t._2))).toSeq
-      .map { case ((tpe, day), xs) => (tpe, day, xs.length.toLong) }
-  }
-
-  test("q293 Brown backtest equals a sequential convolution replay") {
-    val daily = dailyCounts()
-    val byType = daily.groupBy(_._1)
-    val maxDay = daily.map(_._2).max
-    val k1 = TimeSeries2.BrownK
-    val k2 = TimeSeries2.BrownK2
-    val (w1, w2) = (k1.sum, k2.sum)
-    val taps2 = k2.length
-    val got = TimeSeries2.q293BrownBacktest(spark, sf).collect()
-    got.foreach { r =>
-      val tpe = r.getString(0)
-      val y = byType(tpe).map(t => t._2 -> t._3).toMap
-        .withDefaultValue(0L)
-      // eval days: full-history days with >= 1 event in the window
-      val evals = ((taps2 - 1).toLong until maxDay).filter(t =>
-        (0 until taps2).exists(j => y(t - j) > 0))
-      val errs = evals.map { t =>
-        val num1 = (0 until k1.length).map(j => k1(j) * y(t - j)).sum
-        val num2 = (0 until taps2).map(j => k2(j) * y(t - j)).sum
-        val f = TimeSeries2.Brown2Plus * (num1.toDouble / w1) -
-          TimeSeries2.Brown1Plus * (num2.toDouble / w2)
-        (micro(math.abs(f - y(t + 1).toDouble)),
-          math.abs(y(t) - y(t + 1)))
-      }
-      val seMu = errs.map(_._1).sum
-      val seN = errs.map(_._2).sum
-      assert(r.getLong(1) == evals.length.toLong, s"$tpe days")
-      assert(r.getDouble(2) ==
-        rN(seMu.toDouble / 1000000d / evals.length, 4), s"$tpe brown")
-      assert(r.getDouble(3) ==
-        rN(seN.toDouble / evals.length, 4), s"$tpe naive")
-      val expWinner = if (seMu < seN * 1000000L) "brown"
-        else if (seMu > seN * 1000000L) "naive" else "tie"
-      assert(r.getString(4) == expWinner, s"$tpe winner")
-      assert(r.getDouble(5) ==
-        rN(1.0 - seMu.toDouble / (seN.toDouble * 1000000d), 6))
-    }
-  }
-
-  test("q294 strengths equal a sequential decomposition replay and " +
-      "land in [0, 1]") {
-    val daily = dailyCounts()
-    val maxDay = daily.map(_._2).max
-    val got = TimeSeries2.q294SeasonalStrength(spark, sf).collect()
-    got.foreach { r =>
-      val tpe = r.getString(0)
-      val y = daily.filter(_._1 == tpe).map(t => t._2 -> t._3).toMap
-        .withDefaultValue(0L)
-      val valid = (3L to maxDay - 3).map { d =>
-        val sum7 = (-3 to 3).map(o => y(d + o)).sum
-        (d, y(d), y(d) * 7 - sum7, d % 7)
-      }
-      val sdow = valid.groupBy(_._4).map { case (dow, xs) =>
-        dow -> xs.map(_._3).sum.toDouble / (7 * xs.length)
-      }
-      val qs = valid.map { case (_, yd, det7, dow) =>
-        (micro(det7 / 7.0), micro(det7 / 7.0 - sdow(dow)),
-          micro(yd - sdow(dow)))
-      }
-      def varOf(vs: Seq[Long]): Double = {
-        val n = vs.length
-        val s = vs.sum
-        val s2 = vs.map(v => BigDecimal(v) * BigDecimal(v)).sum
-        (s2.toDouble - s.toDouble * (s.toDouble / n)) / n
-      }
-      val (vS, vR, vT) = (varOf(qs.map(_._1)), varOf(qs.map(_._2)),
-        varOf(qs.map(_._3)))
-      assert(r.getLong(1) == valid.length.toLong)
-      assert(r.getDouble(2) == rN(math.max(0.0, 1.0 - vR / vT), 6),
-        s"$tpe trend")
-      assert(r.getDouble(3) == rN(math.max(0.0, 1.0 - vR / vS), 6),
-        s"$tpe seasonal")
-      assert(r.getDouble(2) >= 0 && r.getDouble(2) <= 1 + 1e-9)
-      assert(r.getDouble(3) >= 0 && r.getDouble(3) <= 1 + 1e-9)
-    }
-  }
-
-  test("q299 anomalies equal a sequential decomposition replay") {
-    val ev = Tables.events(spark, sf)
-      .select(col("event_type"), to_date(col("ts")).as("d")).collect()
-      .map(r => (r.getString(0), r.getDate(1).toLocalDate))
-    val d0 = ev.map(_._2).min
-    val daily = ev.groupBy(t => (t._1, java.time.temporal.ChronoUnit
-      .DAYS.between(d0, t._2))).map { case (k, xs) =>
-      k -> xs.length.toLong }.withDefaultValue(0L)
-    val maxDay = ev.map(t => java.time.temporal.ChronoUnit.DAYS
-      .between(d0, t._2)).max
-    val types = ev.map(_._1).distinct.sorted
-    val expect = types.flatMap { tpe =>
-      def y(d: Long) = daily((tpe, d))
-      val valid = (3L to maxDay - 3).map { d =>
-        (d, y(d), y(d) * 7 - (-3 to 3).map(o => y(d + o)).sum, d % 7)
-      }
-      val sdow = valid.groupBy(_._4).map { case (dow, xs) =>
-        dow -> xs.map(_._3).sum.toDouble / (7 * xs.length) }
-      val qs = valid.map { case (d, yd, det7, dow) =>
-        (d, yd, micro(det7 / 7.0 - sdow(dow))) }
-      val n = qs.length
-      val s = qs.map(_._3).sum
-      val s2 = qs.map(t => BigDecimal(t._3) * BigDecimal(t._3)).sum
-      val sigma = math.sqrt(
-        (s2.toDouble - s.toDouble * (s.toDouble / n)) / n)
-      qs.filter(t => sigma > 0 &&
-          math.abs(t._3.toDouble / sigma) > TimeSeries2.AnomalySigma)
-        .map(t => (tpe, d0.plusDays(t._1).toString, t._2,
-          rN(t._3.toDouble / 1000000d, 4),
-          rN(t._3.toDouble / sigma, 4)))
-    }
-    val got = TimeSeries2.q299DecompositionAnomalies(spark, sf).collect()
-      .map(r => (r.getString(0), r.getDate(1).toString, r.getLong(2),
-        r.getDouble(3), r.getDouble(4)))
-    assert(got.toSeq == expect.toSeq, "anomaly list diverged")
-    got.foreach(t => assert(math.abs(t._5) > TimeSeries2.AnomalySigma))
-  }
-
-  test("q322 load profile equals a sequential replay and the peak " +
-      "bounds the mean") {
-    val ev = Tables.events(spark, sf)
-      .select(col("event_type"), hour(col("ts")).as("h")).collect()
-      .map(r => (r.getString(0), r.getInt(1)))
-    val got = TimeSeries2.q322LoadProfile(spark, sf).collect()
-    got.foreach { r =>
-      val xs = ev.filter(_._1 == r.getString(0))
-      val hist = xs.groupBy(_._2).map { case (h, ys) =>
-        (h, ys.length.toLong) }.toSeq
-      val (ph, pn) = hist.sortBy(t => (-t._2, t._1)).head
-      assert(r.getLong(1) == xs.length.toLong)
-      assert(r.getInt(2) == ph && r.getLong(3) == pn)
-      assert(r.getDouble(4) == rN(pn.toDouble / xs.length, 6))
-      assert(r.getDouble(5) == rN(pn.toDouble * 24 / xs.length, 4))
-      // the peak is at least the 24-slot mean
-      assert(r.getDouble(5) >= 1.0 - 1e-9)
-    }
-  }
 }

@@ -4,9 +4,7 @@ import java.time.LocalDate
 
 import org.apache.spark.sql.functions._
 
-import graft.operators.TimeSeries
 import graft.operators.{TimeSeries => T}
-import graft.sources.Tables
 
 /** q154/q155/q156 — the time-series trio pinned against independent
   * sequential Scala recomputes from the raw events, plus the structural
@@ -114,161 +112,5 @@ class TimeSeriesSpec extends SparkTestBase {
       if (age / 7 >= 20) 0L else T.WeekWeights6((age % 7).toInt) >> (age / 7)
     (0L to 140L).foreach(a => assert(w6(a + 7) == w6(a) >> 1))
     assert(w6(140) == 0L)
-  }
-
-  test("q190 rolling median matches a brute per-user frame recompute") {
-    val out = TimeSeries.q190RollingMedian(spark, sf).collect()
-      .map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(3)).toMap
-    val ev = Tables.events(spark, sf)
-      .select(col("user_id"), col("event_id"), unix_micros(col("ts")),
-        col("value")).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
-        math.round(r.getDouble(3) * 100)))
-    def median(xs: Seq[Long]): Double = {
-      val s = xs.sorted
-      if (s.length % 2 == 1) s(s.length / 2).toDouble
-      else (s(s.length / 2 - 1) + s(s.length / 2)) / 2.0
-    }
-    ev.groupBy(_._1).values.foreach { xs =>
-      val sorted = xs.sortBy(e => (e._3, e._2))
-      sorted.indices.foreach { i =>
-        val frame = sorted.slice(math.max(0, i - TimeSeries.MedianFrame), i + 1)
-        val expected = median(frame.map(_._4)) / 100.0
-        val got = out((sorted(i)._1, sorted(i)._2))
-        assert(math.abs(got - expected) < 1e-6,
-          s"user ${sorted(i)._1} event ${sorted(i)._2}")
-      }
-    }
-  }
-
-  test("q261 EWMA equals a sequential pinned-weight replay and stays " +
-      "inside the window's observed range") {
-    val out = TimeSeries.q261Ewma(spark, sf).collect()
-      .map(r => (r.getString(0), r.getDate(1).toString) -> r.getDouble(2))
-      .toMap
-    val evs = Tables.events(spark, sf)
-      .select(col("event_type"), to_date(col("ts"))).collect()
-      .map(r => (r.getString(0), r.getDate(1).toLocalDate))
-    val d0 = evs.map(_._2).min
-    val daily = evs.groupBy(e => (e._1,
-      java.time.temporal.ChronoUnit.DAYS.between(d0, e._2)))
-      .map { case (k, v) => k -> v.size.toLong }
-    val maxDay = daily.keys.map(_._2).max
-    daily.keys.map(_._1).toSeq.distinct.foreach { t =>
-      (0L to maxDay).foreach { td =>
-        val window = (0 until TimeSeries.EwmaTaps).flatMap { j =>
-          daily.get((t, td - j)).map(n => (n, TimeSeries.EwmaW6(j)))
-        }
-        if (window.nonEmpty) {
-          val num = window.map { case (n, w) => n * w }.sum
-          val den = window.map(_._2).sum
-          val expect = r4(num.toDouble / den.toDouble)
-          val key = (t, d0.plusDays(td).toString)
-          assert(out(key) == expect, s"cell $key diverged")
-          assert(expect >= window.map(_._1).min.toDouble - 1e-9 &&
-            expect <= window.map(_._1).max.toDouble + 1e-9)
-        }
-      }
-    }
-  }
-
-  test("q382 split equals a sequential exhaustive-gain replay and " +
-      "eta2 is a (0, 1] variance share") {
-    val rows = TimeSeries.q382Changepoint(spark, sf).collect()
-    val daily = graft.sources.Tables.events(spark, sf)
-      .groupBy(col("event_type"), to_date(col("ts")).as("day"))
-      .agg(count(lit(1)).as("x")).collect()
-      .map(r => (r.getString(0), r.getDate(1).toLocalDate, r.getLong(2)))
-    val byType = daily.groupBy(_._1).view
-      .mapValues(_.sortBy(_._2.toEpochDay).map(_._3)).toMap
-    assert(rows.length == byType.size)
-    rows.foreach { r =>
-      val xs = byType(r.getString(0))
-      val n = xs.length
-      val s = xs.sum
-      val q2 = xs.map(x => BigInt(x) * x).sum
-      // exhaustive sequential gain scan — not the window formulation;
-      // argmax on the micro-quantized RELATIVE gain (gain/SSE_total,
-      // bounded in [0,1] — round 14, ADVICE r13), ties by earliest day
-      val sse = q2.toDouble - s.toDouble * s / n
-      val gains = (1 until n).map { k =>
-        val sl = xs.take(k).sum
-        val g = sl.toDouble * sl / k +
-          (s - sl).toDouble * (s - sl) / (n - k) - s.toDouble * s / n
-        (k, if (sse > 0) math.round(g / sse * 1e6) else 0L, g)
-      }
-      val (bestK, _, bestG) =
-        gains.minBy { case (k, gu, _) => (-gu, k) }
-      assert(r.getLong(1) == n, "n_days")
-      val daysSorted = daily.filter(_._1 == r.getString(0))
-        .map(_._2).sorted(
-          Ordering.fromLessThan[java.time.LocalDate](_ isBefore _))
-      assert(r.getDate(2).toLocalDate == daysSorted(bestK - 1),
-        s"${r.getString(0)} split day")
-      assert(math.abs(r.getDouble(5) - bestG) < 1e-6, "gain")
-      if (sse > 0) {
-        val eta2 = r.getDouble(6)
-        assert(eta2 > 0 && eta2 <= 1 + 1e-9, s"eta2 $eta2 out of (0,1]")
-        assert(math.abs(eta2 - bestG / sse) < 1e-6)
-      }
-    }
-  }
-
-  test("q388 depth-2 splits equal a sequential exhaustive two-level " +
-      "replay and both gains are nonnegative") {
-    val rows = TimeSeries.q388Changepoint2(spark, sf).collect()
-    val daily = graft.sources.Tables.events(spark, sf)
-      .groupBy(col("event_type"), to_date(col("ts")).as("day"))
-      .agg(count(lit(1)).as("x")).collect()
-      .map(r => (r.getString(0), r.getDate(1).toLocalDate, r.getLong(2)))
-    val byType = daily.groupBy(_._1).view
-      .mapValues(_.sortBy(_._2.toEpochDay)).toMap
-    assert(rows.length == byType.count(_._2.length > 2))
-    rows.foreach { r =>
-      val seq = byType(r.getString(0))
-      val xs = seq.map(_._3)
-      val n = xs.length
-      val s = xs.sum
-      // both levels quantize RELATIVE to the same per-type SSE_total
-      // (round 14, ADVICE r13 — bounded argmax key)
-      val sse = xs.map(x => BigInt(x) * x).sum.toDouble -
-        s.toDouble * s / n
-      def gainD(lo: Int, hi: Int, k: Int): Double = {
-        // within-segment gain for split at local prefix k of xs(lo until hi)
-        val seg = xs.slice(lo, hi)
-        val st = seg.sum
-        val sl = seg.take(k).sum
-        sl.toDouble * sl / k +
-          (st - sl).toDouble * (st - sl) / (seg.length - k) -
-          st.toDouble * st / seg.length
-      }
-      def rel(g: Double): Long =
-        if (sse > 0) math.round(g / sse * 1e6) else 0L
-      val g1 = (1 until n).map(k => (k, rel(gainD(0, n, k)),
-        gainD(0, n, k)))
-      val (b, _, bestG1) = g1.minBy { case (k, gu, _) => (-gu, k) }
-      // level 2: candidates are global indices != b, expressed as
-      // within-segment splits
-      val g2 = (1 until n).filter(_ != b).map { k =>
-        val g = if (k < b) gainD(0, b, k) else gainD(b, n, k - b)
-        (k, rel(g), g)
-      }
-      val (k2g, _, bestG2) = g2.minBy { case (k, gu, _) =>
-        (-gu, seq(k - 1)._2.toEpochDay)
-      }
-      val (k1, k2) = (math.min(b, k2g), math.max(b, k2g))
-      assert(r.getLong(1) == n)
-      assert(r.getDate(2).toLocalDate == seq(k1 - 1)._2, "split_day_1")
-      assert(r.getDate(3).toLocalDate == seq(k2 - 1)._2, "split_day_2")
-      val (c1, c2) = (xs.take(k1).sum, xs.take(k2).sum)
-      assert(math.abs(r.getDouble(4) - c1.toDouble / k1) < 1e-6, "m1")
-      assert(math.abs(r.getDouble(5) -
-        (c2 - c1).toDouble / (k2 - k1)) < 1e-6, "m2")
-      assert(math.abs(r.getDouble(6) -
-        (s - c2).toDouble / (n - k2)) < 1e-6, "m3")
-      assert(math.abs(r.getDouble(7) - bestG1) < 1e-6, "gain_first")
-      assert(math.abs(r.getDouble(8) - bestG2) < 1e-6, "gain_second")
-      assert(bestG1 >= -1e-9 && bestG2 >= -1e-9)
-    }
   }
 }

@@ -1,9 +1,7 @@
 package graft.operators
 
-import org.apache.spark.sql.functions._
-
 import graft.SparkTestBase
-import graft.sources.Tables
+import org.apache.spark.sql.functions._
 
 /** Property coverage for the [[DistributedRank]] primitive family —
   * now the engine's standard replacement for every data-grown global
@@ -86,19 +84,5 @@ class DistributedRankSpec extends SparkTestBase {
     // withNtile is private[operators]; this spec lives in that package
     DistributedRank.withNtile(profile, k, "tile",
       col("cents").desc, col("part").asc)
-  }
-
-  test("withRunningTotal is invariant to the input partitioning") {
-    import graft.operators.DistributedRank
-    val byPart = Tables.lineitem(spark, sf)
-      .groupBy(col("l_partkey").as("part"))
-      .agg(sum(expr("cast(round(l_extendedprice * 100, 0) as bigint)"))
-        .as("cents"))
-    def run(df: org.apache.spark.sql.DataFrame) =
-      DistributedRank.withRunningTotal(df, "cents", "cum",
-        col("cents").desc, col("part").asc)
-        .select("part", "cum").collect()
-        .map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1).toSeq
-    assert(run(byPart.repartition(13)) == run(byPart.coalesce(1)))
   }
 }
