@@ -382,6 +382,28 @@ object AnnRetrieval {
       .orderBy("label_a", "label_b")
   }
 
+  /** The centroid scoring chain q233 and q265 share: every (vector,
+    * label centroid) pair of the cached [[labelCentroids]] with its
+    * exact BIGINT micro-unit `dot` and score = dot / ‖c‖ (the point's
+    * own norm dropped: cosine argmax is invariant to it). */
+  private def centroidScored(spark: SparkSession, dir: String): DataFrame = {
+    val cd = labelCentroids(spark, dir)
+    val norms = cd.groupBy(col("label").as("c_label"))
+      .agg(sum(col("cq") * col("cq")).as("c2"))
+    Tables.embeddings(spark, dir)
+      .select(col("vec_id"), col("label"),
+        posexplode(col("embedding")).as(Seq("pos", "v")))
+      .withColumn("vm",
+        expr("cast(round(cast(v as double) * 1000000, 0) as bigint)"))
+      .join(broadcast(cd.select(col("label").as("c_label"), col("pos"),
+        col("cq"))), Seq("pos"))
+      .groupBy("vec_id", "label", "c_label")
+      .agg(sum(col("vm") * col("cq")).as("dot"))
+      .join(broadcast(norms), Seq("c_label"))
+      .withColumn("score",
+        col("dot").cast("double") / sqrt(col("c2").cast("double")))
+  }
+
   /** q233 — NEAREST-CENTROID LABEL-NOISE AUDIT (the confident-learning
     * shape, Northcutt et al. — see PAPERS.md): assign every embedding
     * to its nearest label centroid by cosine and report the
@@ -404,22 +426,7 @@ object AnnRetrieval {
     * brute classify matmul; the window partitions by vec_id over k
     * rows each; output folds to the k×k confusion profile. */
   def q233LabelNoise(spark: SparkSession, dir: String): DataFrame = {
-    val cd = labelCentroids(spark, dir)
-    val norms = cd.groupBy(col("label").as("c_label"))
-      .agg(sum(col("cq") * col("cq")).as("c2"))
-    val pts = Tables.embeddings(spark, dir)
-      .select(col("vec_id"), col("label"),
-        posexplode(col("embedding")).as(Seq("pos", "v")))
-      .withColumn("vm",
-        expr("cast(round(cast(v as double) * 1000000, 0) as bigint)"))
-    val scored = pts
-      .join(broadcast(cd.select(col("label").as("c_label"), col("pos"),
-        col("cq"))), Seq("pos"))
-      .groupBy("vec_id", "label", "c_label")
-      .agg(sum(col("vm") * col("cq")).as("dot"))
-      .join(broadcast(norms), Seq("c_label"))
-      .withColumn("score",
-        col("dot").cast("double") / sqrt(col("c2").cast("double")))
+    val scored = centroidScored(spark, dir)
     val wPick = Window.partitionBy("vec_id")
       .orderBy(col("score").desc, col("c_label"))
     val assigned = scored.withColumn("rn", row_number().over(wPick))
@@ -434,6 +441,42 @@ object AnnRetrieval {
         round(col("n_vecs").cast("double") / col("n_label").cast("double"), 6)
           .as("share"))
       .orderBy("label", "pred_label")
+  }
+
+  /** The exact-rank scaffold q255, q263 and q315 share: the embeddings
+    * as micro-quantized BIGINT vectors `emb` (vec_id, label, iv, n2),
+    * the 1% query batch `queries` (qid, qlabel, qv), the `corpus` (cid,
+    * clabel, cv, cn2), and `ranked`: every (query, other vector) pair
+    * with its exact dot, score = dot / ‖c‖ (the query norm dropped,
+    * rank-invariant) and per-query rank `rn` (ties on cid). */
+  private final case class ExactRank(emb: DataFrame, queries: DataFrame,
+      corpus: DataFrame, ranked: DataFrame)
+
+  private def exactRank(spark: SparkSession, dir: String): ExactRank = {
+    val emb = Tables.embeddings(spark, dir)
+      .select(col("vec_id"), col("label"), expr(
+        "transform(embedding, v -> " +
+          "cast(round(cast(v as double) * 1000000, 0) as bigint))")
+        .as("iv"))
+      .withColumn("n2", expr(
+        "aggregate(zip_with(iv, iv, (x, y) -> x * y), " +
+          "cast(0 as bigint), (acc, t) -> acc + t)"))
+    val queries = onlyQueries(spark, dir, emb)
+      .select(col("vec_id").as("qid"), col("label").as("qlabel"),
+        col("iv").as("qv"))
+    val corpus = emb.select(col("vec_id").as("cid"),
+      col("label").as("clabel"), col("iv").as("cv"), col("n2").as("cn2"))
+    val scored = broadcast(queries).crossJoin(corpus)
+      .filter(col("qid") =!= col("cid"))
+      .withColumn("dot", expr(
+        "aggregate(zip_with(qv, cv, (x, y) -> x * y), " +
+          "cast(0 as bigint), (acc, t) -> acc + t)"))
+      .withColumn("score",
+        col("dot").cast("double") / sqrt(col("cn2").cast("double")))
+    val wRank = Window.partitionBy("qid")
+      .orderBy(col("score").desc, col("cid"))
+    ExactRank(emb, queries, corpus,
+      scored.withColumn("rn", row_number().over(wRank)))
   }
 
   /** q255 — LABEL-AWARE RETRIEVAL MRR: for the established 1% query
@@ -457,30 +500,8 @@ object AnnRetrieval {
     * WindowGroupLimit-style min-rank folds; output is the |labels|
     * profile. */
   def q255RetrievalMrr(spark: SparkSession, dir: String): DataFrame = {
-    val emb = Tables.embeddings(spark, dir)
-      .select(col("vec_id"), col("label"), expr(
-        "transform(embedding, v -> " +
-          "cast(round(cast(v as double) * 1000000, 0) as bigint))")
-        .as("iv"))
-      .withColumn("n2", expr(
-        "aggregate(zip_with(iv, iv, (x, y) -> x * y), " +
-          "cast(0 as bigint), (acc, t) -> acc + t)"))
-    val queries = onlyQueries(spark, dir, emb)
-      .select(col("vec_id").as("qid"), col("label").as("qlabel"),
-        col("iv").as("qv"))
-    val corpus = emb.select(col("vec_id").as("cid"),
-      col("label").as("clabel"), col("iv").as("cv"), col("n2").as("cn2"))
-    val scored = broadcast(queries).crossJoin(corpus)
-      .filter(col("qid") =!= col("cid"))
-      .withColumn("dot", expr(
-        "aggregate(zip_with(qv, cv, (x, y) -> x * y), " +
-          "cast(0 as bigint), (acc, t) -> acc + t)"))
-      .withColumn("score",
-        col("dot").cast("double") / sqrt(col("cn2").cast("double")))
-    val wRank = Window.partitionBy("qid")
-      .orderBy(col("score").desc, col("cid"))
-    val firstHit = scored.withColumn("rn", row_number().over(wRank))
-      .filter(col("clabel") === col("qlabel"))
+    val ExactRank(_, queries, _, ranked) = exactRank(spark, dir)
+    val firstHit = ranked.filter(col("clabel") === col("qlabel"))
       .groupBy("qid", "qlabel")
       .agg(min(col("rn")).as("first_rank"))
     queries.select("qid", "qlabel")
@@ -515,27 +536,6 @@ object AnnRetrieval {
   private[graft] val NdcgIdeal6: Seq[Long] =
     NdcgDisc6.scanLeft(0L)(_ + _)
 
-  /** q263 — exact NDCG@[[NdcgK]] per label over the q255 scaffold:
-    * binary relevance (same-label neighbor), exact cosine ranking of
-    * the 1% query batch against the corpus, DCG with the pinned
-    * [[NdcgDisc6]] discounts, ideal DCG truncated at the label's
-    * actually-available neighbor count — the POSITION-WEIGHTED
-    * retrieval quality MRR cannot express: MRR only sees the FIRST
-    * same-label hit, NDCG scores the whole top-[[NdcgK]] page (a
-    * context-assembly window, q170, consumes all of it, so ranking
-    * quality BELOW rank 1 prices real retrieval-augmented pipelines).
-    *
-    * Determinism: integer micro-vector dots, query-norm dropped
-    * (rank-invariant), ranking ties on cid; DCG/IDCG are exact
-    * integer sums of pinned literals, NDCG is ONE division per query
-    * micro-quantized before the per-label fold. Queries with zero
-    * same-label neighbors available score 0 (the q255 miss
-    * convention).
-    *
-    * Scale shape: identical to q255 (query-batch × corpus, per-qid
-    * rank windows) — swap in the ANN candidate paths at corpus
-    * scale; everything after the top-[[NdcgK]] filter runs on
-    * ≤ batch·K rows. */
   /** q315 — MEAN AVERAGE PRECISION @10: the order-sensitive set
     * metric that completes the retrieval-eval triad — q255's MRR
     * rewards the FIRST hit, q263's NDCG applies graded positional
@@ -550,30 +550,8 @@ object AnnRetrieval {
     * true relevant count (exact); per-query APs micro-quantize again
     * before the per-label mean — no float ever sums across rows. */
   def q315RetrievalMap(spark: SparkSession, dir: String): DataFrame = {
-    val emb = Tables.embeddings(spark, dir)
-      .select(col("vec_id"), col("label"), expr(
-        "transform(embedding, v -> " +
-          "cast(round(cast(v as double) * 1000000, 0) as bigint))")
-        .as("iv"))
-      .withColumn("n2", expr(
-        "aggregate(zip_with(iv, iv, (x, y) -> x * y), " +
-          "cast(0 as bigint), (acc, t) -> acc + t)"))
-    val queries = onlyQueries(spark, dir, emb)
-      .select(col("vec_id").as("qid"), col("label").as("qlabel"),
-        col("iv").as("qv"))
-    val corpus = emb.select(col("vec_id").as("cid"),
-      col("label").as("clabel"), col("iv").as("cv"), col("n2").as("cn2"))
-    val scored = broadcast(queries).crossJoin(corpus)
-      .filter(col("qid") =!= col("cid"))
-      .withColumn("dot", expr(
-        "aggregate(zip_with(qv, cv, (x, y) -> x * y), " +
-          "cast(0 as bigint), (acc, t) -> acc + t)"))
-      .withColumn("score",
-        col("dot").cast("double") / sqrt(col("cn2").cast("double")))
-    val wRank = Window.partitionBy("qid")
-      .orderBy(col("score").desc, col("cid"))
-    val top = scored.withColumn("rn", row_number().over(wRank))
-      .filter(col("rn") <= 10)
+    val ExactRank(_, queries, corpus, ranked) = exactRank(spark, dir)
+    val top = ranked.filter(col("rn") <= 10)
     val wHit = Window.partitionBy("qid").orderBy("rn")
     val perQuery = top.filter(col("clabel") === col("qlabel"))
       .withColumn("cumhits", count(lit(1)).over(wHit))
@@ -599,32 +577,31 @@ object AnnRetrieval {
       .orderBy("label")
   }
 
+  /** q263 — exact NDCG@[[NdcgK]] per label over the q255 scaffold:
+    * binary relevance (same-label neighbor), exact cosine ranking of
+    * the 1% query batch against the corpus, DCG with the pinned
+    * [[NdcgDisc6]] discounts, ideal DCG truncated at the label's
+    * actually-available neighbor count — the POSITION-WEIGHTED
+    * retrieval quality MRR cannot express: MRR only sees the FIRST
+    * same-label hit, NDCG scores the whole top-[[NdcgK]] page (a
+    * context-assembly window, q170, consumes all of it, so ranking
+    * quality BELOW rank 1 prices real retrieval-augmented pipelines).
+    *
+    * Determinism: integer micro-vector dots, query-norm dropped
+    * (rank-invariant), ranking ties on cid; DCG/IDCG are exact
+    * integer sums of pinned literals, NDCG is ONE division per query
+    * micro-quantized before the per-label fold. Queries with zero
+    * same-label neighbors available score 0 (the q255 miss
+    * convention).
+    *
+    * Scale shape: identical to q255 (query-batch × corpus, per-qid
+    * rank windows) — swap in the ANN candidate paths at corpus
+    * scale; everything after the top-[[NdcgK]] filter runs on
+    * ≤ batch·K rows. */
   def q263RetrievalNdcg(spark: SparkSession, dir: String): DataFrame = {
-    val emb = Tables.embeddings(spark, dir)
-      .select(col("vec_id"), col("label"), expr(
-        "transform(embedding, v -> " +
-          "cast(round(cast(v as double) * 1000000, 0) as bigint))")
-        .as("iv"))
-      .withColumn("n2", expr(
-        "aggregate(zip_with(iv, iv, (x, y) -> x * y), " +
-          "cast(0 as bigint), (acc, t) -> acc + t)"))
-    val queries = onlyQueries(spark, dir, emb)
-      .select(col("vec_id").as("qid"), col("label").as("qlabel"),
-        col("iv").as("qv"))
-    val corpus = emb.select(col("vec_id").as("cid"),
-      col("label").as("clabel"), col("iv").as("cv"), col("n2").as("cn2"))
-    val scored = broadcast(queries).crossJoin(corpus)
-      .filter(col("qid") =!= col("cid"))
-      .withColumn("dot", expr(
-        "aggregate(zip_with(qv, cv, (x, y) -> x * y), " +
-          "cast(0 as bigint), (acc, t) -> acc + t)"))
-      .withColumn("score",
-        col("dot").cast("double") / sqrt(col("cn2").cast("double")))
-    val wRank = Window.partitionBy("qid")
-      .orderBy(col("score").desc, col("cid"))
+    val ExactRank(emb, _, _, ranked) = exactRank(spark, dir)
     val discArr = s"array(${NdcgDisc6.mkString("L, ")}L)"
-    val dcg = scored.withColumn("rn", row_number().over(wRank))
-      .filter(col("rn") <= NdcgK)
+    val dcg = ranked.filter(col("rn") <= NdcgK)
       .groupBy("qid", "qlabel")
       .agg(sum(when(col("clabel") === col("qlabel"),
         expr(s"element_at($discArr, rn)")).otherwise(0L))
@@ -666,22 +643,7 @@ object AnnRetrieval {
     * b + c = 0 — no disagreements, no test). Centroid table: the
     * cached [[labelCentroids]]. */
   def q265McnemarPicks(spark: SparkSession, dir: String): DataFrame = {
-    val cd = labelCentroids(spark, dir)
-    val norms = cd.groupBy(col("label").as("c_label"))
-      .agg(sum(col("cq") * col("cq")).as("c2"))
-    val pts = Tables.embeddings(spark, dir)
-      .select(col("vec_id"), col("label"),
-        posexplode(col("embedding")).as(Seq("pos", "v")))
-      .withColumn("vm",
-        expr("cast(round(cast(v as double) * 1000000, 0) as bigint)"))
-    val scored = pts
-      .join(broadcast(cd.select(col("label").as("c_label"), col("pos"),
-        col("cq"))), Seq("pos"))
-      .groupBy("vec_id", "label", "c_label")
-      .agg(sum(col("vm") * col("cq")).as("dot"))
-      .join(broadcast(norms), Seq("c_label"))
-      .withColumn("score",
-        col("dot").cast("double") / sqrt(col("c2").cast("double")))
+    val scored = centroidScored(spark, dir)
     val wCos = Window.partitionBy("vec_id")
       .orderBy(col("score").desc, col("c_label"))
     val wDot = Window.partitionBy("vec_id")
@@ -848,37 +810,69 @@ object AnnRetrieval {
       .orderBy("label")
   }
 
+  /** Every embedding coordinate as exact BIGINT micro-units, `ex`
+    * (vec_id, label, pos, vm): the first CTE of the q255/q263/q315
+    * exact-rank chain, the q233/q265 centroid chain and q386. */
+  private val microCoordsCte: String =
+    """ex AS (
+      |  SELECT vec_id, label, i AS pos,
+      |         CAST(round(CAST(embedding[i] AS DOUBLE) * 1000000, 0)
+      |              AS BIGINT) AS vm
+      |  FROM (SELECT vec_id, label, embedding,
+      |               unnest(generate_series(1, len(embedding))) AS i
+      |        FROM embeddings))""".stripMargin
+
+  /** [[exactRank]] as oracle CTEs: `ranked` (qid, cid, rn) over the
+    * query batch `qsel`, with `labels` (vec_id, label) to join. */
+  private val exactRankCtes: String =
+    s"""$QselCte,
+      |$microCoordsCte,
+      |n2 AS (SELECT vec_id, CAST(sum(vm * vm) AS BIGINT) AS nn
+      |       FROM ex GROUP BY 1),
+      |labels AS (SELECT DISTINCT vec_id, label FROM ex),
+      |dots AS (
+      |  SELECT q.vec_id AS qid, c.vec_id AS cid,
+      |         CAST(sum(qe.vm * ce.vm) AS BIGINT) AS dot
+      |  FROM labels q JOIN labels c
+      |    ON q.vec_id IN (SELECT vec_id FROM qsel)
+      |   AND c.vec_id <> q.vec_id
+      |  JOIN ex qe ON qe.vec_id = q.vec_id
+      |  JOIN ex ce ON ce.vec_id = c.vec_id AND ce.pos = qe.pos
+      |  GROUP BY 1, 2),
+      |ranked AS (
+      |  SELECT d.qid, d.cid,
+      |         row_number() OVER (PARTITION BY d.qid
+      |           ORDER BY CAST(d.dot AS DOUBLE)
+      |             / sqrt(CAST(n.nn AS DOUBLE)) DESC, d.cid) AS rn
+      |  FROM dots d JOIN n2 n ON n.vec_id = d.cid)""".stripMargin
+
+  /** [[centroidScored]] up to its exact dots as oracle CTEs: the
+    * centroids `cq` (c_label, pos, cqv), their squared norms `norms`
+    * (c_label, c2) and `dots` (vec_id, label, c_label, dot). */
+  private val centroidDotsCtes: String =
+    s"""$microCoordsCte,
+      |cd AS (
+      |  SELECT label, pos, count(*) AS n, CAST(sum(vm) AS BIGINT) AS s
+      |  FROM ex GROUP BY 1, 2),
+      |cq AS (
+      |  SELECT label AS c_label, pos,
+      |         CAST(round(CAST(s AS DOUBLE) / n, 0) AS BIGINT) AS cqv
+      |  FROM cd),
+      |norms AS (
+      |  SELECT c_label, CAST(sum(cqv * cqv) AS BIGINT) AS c2
+      |  FROM cq GROUP BY 1),
+      |dots AS (
+      |  SELECT e.vec_id, e.label, c.c_label,
+      |         CAST(sum(e.vm * c.cqv) AS BIGINT) AS dot
+      |  FROM ex e JOIN cq c ON e.pos = c.pos
+      |  GROUP BY 1, 2, 3)""".stripMargin
+
   val defs: Seq[QueryDef] = Seq(
     QueryDef("q263_retrieval_ndcg", q263RetrievalNdcg _,
       {
       val discList = s"[${NdcgDisc6.mkString(", ")}]"
       val idealList = s"[${NdcgIdeal6.mkString(", ")}]"
-      s"""WITH $QselCte,
-        |ex AS (
-        |  SELECT vec_id, label, i AS pos,
-        |         CAST(round(CAST(embedding[i] AS DOUBLE) * 1000000, 0)
-        |              AS BIGINT) AS vm
-        |  FROM (SELECT vec_id, label, embedding,
-        |               unnest(generate_series(1, len(embedding))) AS i
-        |        FROM embeddings)),
-        |n2 AS (SELECT vec_id, CAST(sum(vm * vm) AS BIGINT) AS nn
-        |       FROM ex GROUP BY 1),
-        |labels AS (SELECT DISTINCT vec_id, label FROM ex),
-        |dots AS (
-        |  SELECT q.vec_id AS qid, c.vec_id AS cid,
-        |         CAST(sum(qe.vm * ce.vm) AS BIGINT) AS dot
-        |  FROM labels q JOIN labels c
-        |    ON q.vec_id IN (SELECT vec_id FROM qsel)
-        |   AND c.vec_id <> q.vec_id
-        |  JOIN ex qe ON qe.vec_id = q.vec_id
-        |  JOIN ex ce ON ce.vec_id = c.vec_id AND ce.pos = qe.pos
-        |  GROUP BY 1, 2),
-        |ranked AS (
-        |  SELECT d.qid, d.cid,
-        |         row_number() OVER (PARTITION BY d.qid
-        |           ORDER BY CAST(d.dot AS DOUBLE)
-        |             / sqrt(CAST(n.nn AS DOUBLE)) DESC, d.cid) AS rn
-        |  FROM dots d JOIN n2 n ON n.vec_id = d.cid),
+      s"""WITH $exactRankCtes,
         |dcg AS (
         |  SELECT t.qid, ql.label,
         |         CAST(sum(CASE WHEN cl.label = ql.label
@@ -911,28 +905,7 @@ object AnnRetrieval {
         |FROM scoredq GROUP BY 1 ORDER BY label""".stripMargin
     }),
     QueryDef("q265_mcnemar_picks", q265McnemarPicks _,
-      """WITH ex AS (
-        |  SELECT vec_id, label, i AS pos,
-        |         CAST(round(CAST(embedding[i] AS DOUBLE) * 1000000, 0)
-        |              AS BIGINT) AS vm
-        |  FROM (SELECT vec_id, label, embedding,
-        |               unnest(generate_series(1, len(embedding))) AS i
-        |        FROM embeddings)),
-        |cd AS (
-        |  SELECT label, pos, count(*) AS n, CAST(sum(vm) AS BIGINT) AS s
-        |  FROM ex GROUP BY 1, 2),
-        |cq AS (
-        |  SELECT label AS c_label, pos,
-        |         CAST(round(CAST(s AS DOUBLE) / n, 0) AS BIGINT) AS cqv
-        |  FROM cd),
-        |norms AS (
-        |  SELECT c_label, CAST(sum(cqv * cqv) AS BIGINT) AS c2
-        |  FROM cq GROUP BY 1),
-        |dots AS (
-        |  SELECT e.vec_id, e.label, c.c_label,
-        |         CAST(sum(e.vm * c.cqv) AS BIGINT) AS dot
-        |  FROM ex e JOIN cq c ON e.pos = c.pos
-        |  GROUP BY 1, 2, 3),
+      s"""WITH $centroidDotsCtes,
         |scored AS (
         |  SELECT d.vec_id, d.label, d.c_label, d.dot,
         |         CAST(d.dot AS DOUBLE) / sqrt(CAST(n.c2 AS DOUBLE)) AS score
@@ -969,32 +942,7 @@ object AnnRetrieval {
         |       END AS mcnemar_chi2
         |FROM cells""".stripMargin),
     QueryDef("q315_retrieval_map", q315RetrievalMap _,
-      s"""WITH $QselCte,
-        |ex AS (
-        |  SELECT vec_id, label, i AS pos,
-        |         CAST(round(CAST(embedding[i] AS DOUBLE) * 1000000, 0)
-        |              AS BIGINT) AS vm
-        |  FROM (SELECT vec_id, label, embedding,
-        |               unnest(generate_series(1, len(embedding))) AS i
-        |        FROM embeddings)),
-        |n2 AS (SELECT vec_id, CAST(sum(vm * vm) AS BIGINT) AS nn
-        |       FROM ex GROUP BY 1),
-        |labels AS (SELECT DISTINCT vec_id, label FROM ex),
-        |dots AS (
-        |  SELECT q.vec_id AS qid, c.vec_id AS cid,
-        |         CAST(sum(qe.vm * ce.vm) AS BIGINT) AS dot
-        |  FROM labels q JOIN labels c
-        |    ON q.vec_id IN (SELECT vec_id FROM qsel)
-        |   AND c.vec_id <> q.vec_id
-        |  JOIN ex qe ON qe.vec_id = q.vec_id
-        |  JOIN ex ce ON ce.vec_id = c.vec_id AND ce.pos = qe.pos
-        |  GROUP BY 1, 2),
-        |ranked AS (
-        |  SELECT d.qid, d.cid,
-        |         row_number() OVER (PARTITION BY d.qid
-        |           ORDER BY CAST(d.dot AS DOUBLE)
-        |             / sqrt(CAST(n.nn AS DOUBLE)) DESC, d.cid) AS rn
-        |  FROM dots d JOIN n2 n ON n.vec_id = d.cid),
+      s"""WITH $exactRankCtes,
         |top AS (SELECT qid, cid, rn FROM ranked WHERE rn <= 10),
         |hits AS (
         |  SELECT t.qid, ql.label AS qlabel, t.rn,
@@ -1029,32 +977,7 @@ object AnnRetrieval {
         |         AS mean_hits_at_10
         |FROM ap GROUP BY 1 ORDER BY 1""".stripMargin),
     QueryDef("q255_retrieval_mrr", q255RetrievalMrr _,
-      s"""WITH $QselCte,
-        |ex AS (
-        |  SELECT vec_id, label, i AS pos,
-        |         CAST(round(CAST(embedding[i] AS DOUBLE) * 1000000, 0)
-        |              AS BIGINT) AS vm
-        |  FROM (SELECT vec_id, label, embedding,
-        |               unnest(generate_series(1, len(embedding))) AS i
-        |        FROM embeddings)),
-        |n2 AS (SELECT vec_id, CAST(sum(vm * vm) AS BIGINT) AS nn
-        |       FROM ex GROUP BY 1),
-        |labels AS (SELECT DISTINCT vec_id, label FROM ex),
-        |dots AS (
-        |  SELECT q.vec_id AS qid, c.vec_id AS cid,
-        |         CAST(sum(qe.vm * ce.vm) AS BIGINT) AS dot
-        |  FROM labels q JOIN labels c
-        |    ON q.vec_id IN (SELECT vec_id FROM qsel)
-        |   AND c.vec_id <> q.vec_id
-        |  JOIN ex qe ON qe.vec_id = q.vec_id
-        |  JOIN ex ce ON ce.vec_id = c.vec_id AND ce.pos = qe.pos
-        |  GROUP BY 1, 2),
-        |ranked AS (
-        |  SELECT d.qid, d.cid,
-        |         row_number() OVER (PARTITION BY d.qid
-        |           ORDER BY CAST(d.dot AS DOUBLE)
-        |             / sqrt(CAST(n.nn AS DOUBLE)) DESC, d.cid) AS rn
-        |  FROM dots d JOIN n2 n ON n.vec_id = d.cid),
+      s"""WITH $exactRankCtes,
         |first_hit AS (
         |  SELECT r.qid, min(r.rn) AS first_rank
         |  FROM ranked r
@@ -1078,28 +1001,7 @@ object AnnRetrieval {
         |         AS hits_at_10
         |FROM per_q GROUP BY 1 ORDER BY label""".stripMargin),
     QueryDef("q233_label_noise", q233LabelNoise _,
-      """WITH ex AS (
-        |  SELECT vec_id, label, i AS pos,
-        |         CAST(round(CAST(embedding[i] AS DOUBLE) * 1000000, 0)
-        |              AS BIGINT) AS vm
-        |  FROM (SELECT vec_id, label, embedding,
-        |               unnest(generate_series(1, len(embedding))) AS i
-        |        FROM embeddings)),
-        |cd AS (
-        |  SELECT label, pos, count(*) AS n, CAST(sum(vm) AS BIGINT) AS s
-        |  FROM ex GROUP BY 1, 2),
-        |cq AS (
-        |  SELECT label AS c_label, pos,
-        |         CAST(round(CAST(s AS DOUBLE) / n, 0) AS BIGINT) AS cqv
-        |  FROM cd),
-        |norms AS (
-        |  SELECT c_label, CAST(sum(cqv * cqv) AS BIGINT) AS c2
-        |  FROM cq GROUP BY 1),
-        |dots AS (
-        |  SELECT e.vec_id, e.label, c.c_label,
-        |         CAST(sum(e.vm * c.cqv) AS BIGINT) AS dot
-        |  FROM ex e JOIN cq c ON e.pos = c.pos
-        |  GROUP BY 1, 2, 3),
+      s"""WITH $centroidDotsCtes,
         |scored AS (
         |  SELECT d.vec_id, d.label, d.c_label,
         |         CAST(d.dot AS DOUBLE) / sqrt(CAST(n.c2 AS DOUBLE)) AS score
@@ -1154,18 +1056,7 @@ object AnnRetrieval {
         |             6) AS cos_sim
         |FROM agg ORDER BY label_a, label_b""".stripMargin),
     QueryDef("q170_context_assembly", q170ContextAssembly _,
-      s"""WITH ${Similarity.QselCte},
-         |ex AS (
-         |  SELECT vec_id, CAST(unnest(embedding) AS DOUBLE) AS x,
-         |         generate_subscripts(embedding, 1) AS i
-         |  FROM embeddings),
-         |norms AS (SELECT vec_id, sqrt(sum(x * x)) AS nrm FROM ex GROUP BY 1),
-         |dots AS (
-         |  SELECT a.vec_id AS qid, b.vec_id AS cid, sum(a.x * b.x) AS dot
-         |  FROM ex a JOIN ex b ON a.i = b.i
-         |                     AND a.vec_id IN (SELECT vec_id FROM qsel)
-         |                     AND a.vec_id <> b.vec_id
-         |  GROUP BY 1, 2),
+      s"""WITH ${Similarity.bruteDotsCtes},
          |scored AS (
          |  SELECT qid, cid, round(dot / (n1.nrm * n2.nrm), 6) AS cosine
          |  FROM dots
@@ -1225,27 +1116,7 @@ object AnnRetrieval {
     // unnest/norm/dot CTEs specialized to query vector 0; RRF in
     // explicit DOUBLE so DuckDB's DECIMAL literals can't diverge
     QueryDef("q120_hybrid_rrf", q120HybridRrf _,
-      s"""WITH tokens AS (
-        |  SELECT doc_id, unnest(string_split(trim(text), ' ')) AS word
-        |  FROM documents),
-        |tf AS (
-        |  SELECT doc_id, word, count(*) AS tf
-        |  FROM tokens GROUP BY doc_id, word),
-        |dl AS (SELECT doc_id, CAST(sum(tf) AS BIGINT) AS dl
-        |       FROM tf GROUP BY doc_id),
-        |stats AS (SELECT count(*) AS n_docs, avg(dl) AS avgdl FROM dl),
-        |dfreq AS (SELECT word, count(*) AS df FROM tf GROUP BY word),
-        |qt AS (SELECT word, df FROM dfreq ORDER BY df DESC, word LIMIT 3),
-        |scored AS (
-        |  SELECT t.doc_id,
-        |         round(sum(ln((n_docs - q.df + 0.5) / (q.df + 0.5) + 1.0)
-        |               * (t.tf * (1.2 + 1)) /
-        |                 (t.tf + 1.2 * (1 - 0.75 + 0.75 * d.dl / avgdl))),
-        |               4) AS bm25,
-        |         count(*) AS n_matched_terms
-        |  FROM tf t JOIN qt q USING (word) JOIN dl d USING (doc_id)
-        |  CROSS JOIN stats
-        |  GROUP BY t.doc_id),
+      s"""WITH ${TextOps.bm25Ctes},
         |lex AS (
         |  SELECT doc_id,
         |         CAST(row_number() OVER (ORDER BY bm25 DESC, doc_id) AS INT)
@@ -1294,18 +1165,7 @@ object AnnRetrieval {
     // exclusion set; the negative draw is the same portable md5
     // priority race both engines compute bit-identically
     QueryDef("q131_negative_sampling", q131NegativeSampling _,
-      s"""WITH $QselCte,
-        |ex AS (
-        |  SELECT vec_id, CAST(unnest(embedding) AS DOUBLE) AS x,
-        |         generate_subscripts(embedding, 1) AS i
-        |  FROM embeddings),
-        |norms AS (SELECT vec_id, sqrt(sum(x * x)) AS nrm FROM ex GROUP BY 1),
-        |dots AS (
-        |  SELECT a.vec_id AS qid, b.vec_id AS cid, sum(a.x * b.x) AS dot
-        |  FROM ex a JOIN ex b ON a.i = b.i
-        |                     AND a.vec_id IN (SELECT vec_id FROM qsel)
-        |                     AND a.vec_id <> b.vec_id
-        |  GROUP BY 1, 2),
+      s"""WITH ${Similarity.bruteDotsCtes},
         |scored AS (
         |  SELECT qid, cid,
         |         round(dot / (n1.nrm * n2.nrm), 6) AS cosine
@@ -1359,13 +1219,7 @@ object AnnRetrieval {
         |         AS exposure_gini
         |FROM agg a, nn""".stripMargin),
     QueryDef("q386_simplified_silhouette", q386SimplifiedSilhouette _,
-      """WITH ex AS (
-        |  SELECT vec_id, label, i AS pos,
-        |         CAST(round(CAST(embedding[i] AS DOUBLE) * 1000000, 0)
-        |              AS BIGINT) AS vm
-        |  FROM (SELECT vec_id, label, embedding,
-        |               unnest(generate_series(1, len(embedding))) AS i
-        |        FROM embeddings)),
+      s"""WITH $microCoordsCte,
         |cd AS (SELECT label, pos, CAST(count(*) AS BIGINT) AS n,
         |              CAST(sum(vm) AS BIGINT) AS s
         |       FROM ex GROUP BY 1, 2),

@@ -793,6 +793,24 @@ object Audit {
       |            AS INT) AS version
       |  FROM marked)""".stripMargin
 
+  /** The CDC replay q171 and q172 share as oracle CTEs: the synthetic
+    * `base` snapshot (user_id, base_cents) and each user's `latest`
+    * change (user_id, op, chg_cents), an error event deleting. */
+  private val cdcCtes: String =
+    s"""base AS (
+      |  SELECT CAST(unnest(range(0, $BaseUsers)) AS BIGINT) AS user_id,
+      |         CAST($BaseCents AS BIGINT) AS base_cents),
+      |chg AS (
+      |  SELECT user_id,
+      |         CASE WHEN event_type = 'error' THEN 'D' ELSE 'U' END AS op,
+      |         CAST(round(value * 100, 0) AS BIGINT) AS cents,
+      |         row_number() OVER (PARTITION BY user_id
+      |           ORDER BY epoch_us(CAST(ts AS TIMESTAMP)) DESC,
+      |                    event_id DESC) AS rn
+      |  FROM events),
+      |latest AS (SELECT user_id, op, cents AS chg_cents
+      |           FROM chg WHERE rn = 1)""".stripMargin
+
   val defs: Seq[QueryDef] = Seq(
     QueryDef("q337_freshness_matrix", q337FreshnessMatrix _,
       """WITH rows_ AS (
@@ -882,19 +900,7 @@ object Audit {
       cardCalibrationSql),
     QueryDef("q239_fd_audit", q239FdAudit _, fdAuditSql),
     QueryDef("q171_replica_audit", q171ReplicaAudit _,
-      s"""WITH base AS (
-        |  SELECT CAST(unnest(range(0, $BaseUsers)) AS BIGINT) AS user_id,
-        |         CAST($BaseCents AS BIGINT) AS base_cents),
-        |chg AS (
-        |  SELECT user_id,
-        |         CASE WHEN event_type = 'error' THEN 'D' ELSE 'U' END AS op,
-        |         CAST(round(value * 100, 0) AS BIGINT) AS cents,
-        |         row_number() OVER (PARTITION BY user_id
-        |           ORDER BY epoch_us(CAST(ts AS TIMESTAMP)) DESC,
-        |                    event_id DESC) AS rn
-        |  FROM events),
-        |latest AS (SELECT user_id, op, cents AS chg_cents
-        |           FROM chg WHERE rn = 1),
+      s"""WITH $cdcCtes,
         |expected AS (
         |  SELECT COALESCE(base.user_id, latest.user_id) AS k,
         |         CASE WHEN op = 'U' THEN chg_cents
@@ -921,19 +927,7 @@ object Audit {
         |       min(k) AS min_key, max(k) AS max_key
         |FROM classified GROUP BY status ORDER BY status""".stripMargin),
     QueryDef("q172_cdc_merge", q172CdcMerge _,
-      s"""WITH base AS (
-        |  SELECT CAST(unnest(range(0, $BaseUsers)) AS BIGINT) AS user_id,
-        |         CAST($BaseCents AS BIGINT) AS base_cents),
-        |chg AS (
-        |  SELECT user_id,
-        |         CASE WHEN event_type = 'error' THEN 'D' ELSE 'U' END AS op,
-        |         CAST(round(value * 100, 0) AS BIGINT) AS cents,
-        |         row_number() OVER (PARTITION BY user_id
-        |           ORDER BY epoch_us(CAST(ts AS TIMESTAMP)) DESC,
-        |                    event_id DESC) AS rn
-        |  FROM events),
-        |latest AS (SELECT user_id, op, cents AS chg_cents
-        |           FROM chg WHERE rn = 1)
+      s"""WITH $cdcCtes
         |SELECT COALESCE(base.user_id, latest.user_id) AS user_id,
         |       CASE WHEN op = 'U' THEN chg_cents ELSE base_cents END AS cents,
         |       CASE WHEN op = 'U' THEN 'changelog' ELSE 'base' END AS src

@@ -258,20 +258,7 @@ object Calibration {
 
   val defs: Seq[QueryDef] = Seq(
     QueryDef("q237_isotonic_calibrate", q237IsotonicCalibrate _,
-      s"""WITH per_user AS (
-        |  SELECT user_id,
-        |         CAST(sum(CAST(round(value * 100, 0) AS BIGINT))
-        |              AS BIGINT) AS cents,
-        |         CAST(sum(CASE WHEN event_type = 'purchase' THEN 1
-        |                       ELSE 0 END) AS BIGINT) AS pcnt
-        |  FROM events GROUP BY 1),
-        |med AS (SELECT quantile_cont(CAST(pcnt AS DOUBLE), 0.5) AS med
-        |        FROM per_user),
-        |users AS (
-        |  SELECT user_id, cents,
-        |         CASE WHEN pcnt > (SELECT med FROM med) THEN 1
-        |              ELSE 0 END AS label
-        |  FROM per_user),
+      s"""WITH ${Evaluation.labeledUsersCtes},
         |bins AS (
         |  SELECT bin, count(*) AS n_users,
         |         CAST(sum(label) AS BIGINT) AS n_pos

@@ -62,16 +62,7 @@ object CrossCorr {
 
   val defs: Seq[QueryDef] = Seq(
     QueryDef("q207_lead_lag", q207LeadLag _,
-      s"""WITH ev AS (
-        |  SELECT event_type, CAST(CAST(ts AS TIMESTAMP) AS DATE) AS dd
-        |  FROM events),
-        |d0 AS (SELECT min(dd) AS d0 FROM ev),
-        |daily AS (
-        |  SELECT event_type,
-        |         CAST(date_diff('day', (SELECT d0 FROM d0), dd) AS BIGINT)
-        |           AS day,
-        |         count(*) AS n
-        |  FROM ev GROUP BY 1, 2),
+      s"""WITH ${TimeSeries.dayIndexCtes()},
         |lags AS (SELECT CAST(unnest(generate_series(-$MaxLag, $MaxLag))
         |                     AS INTEGER) AS lag),
         |sums AS (

@@ -215,25 +215,7 @@ object CurationHardening {
 
   val defs: Seq[QueryDef] = Seq(
     QueryDef("q393_leakage_free_split", q393LeakageFreeSplit _,
-      s"""WITH RECURSIVE ${Dedup.shinglesCte},
-         |sizes AS (SELECT doc_id, count(*) AS sz FROM shingles GROUP BY 1),
-         |inter AS (
-         |  SELECT a.doc_id AS id1, b.doc_id AS id2, count(*) AS n_inter
-         |  FROM shingles a JOIN shingles b
-         |    ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-         |  GROUP BY 1, 2),
-         |pairs AS (
-         |  SELECT id1, id2 FROM inter
-         |  JOIN sizes z1 ON z1.doc_id = id1
-         |  JOIN sizes z2 ON z2.doc_id = id2
-         |  WHERE CAST(n_inter AS DOUBLE) / (z1.sz + z2.sz - n_inter)
-         |        >= 0.8),
-         |edges AS (SELECT id1 AS u, id2 AS v FROM pairs
-         |          UNION SELECT id2, id1 FROM pairs),
-         |reach(u, v) AS (
-         |  SELECT u, v FROM edges
-         |  UNION
-         |  SELECT r.u, e.v FROM reach r JOIN edges e ON r.v = e.u),
+      s"""WITH RECURSIVE ${DedupClusters.closureCtes},
          |labels AS (
          |  SELECT u AS doc_id, least(u, min(v)) AS cluster_id
          |  FROM reach GROUP BY u),

@@ -740,6 +740,59 @@ object Dedup {
       |               unnest(generate_series(1, len(string_split(text, ' ')) - 2)) AS i
       |        FROM documents))""".stripMargin
 
+  /** Oracle CTEs of the 16 MinHash signatures per document: the
+    * shingle hashes `hashed` and `minhashes` (doc_id, j, mh). */
+  private val minhashCtes: String =
+    s"""$shinglesCte,
+      |hashed AS (
+      |  SELECT doc_id, shingle,
+      |         ('0x' || substr(md5(shingle), 1, 15))::BIGINT AS x
+      |  FROM shingles),
+      |perms AS (
+      |  SELECT doc_id, x, unnest(generate_series(0, 15)) AS j
+      |  FROM hashed),
+      |minhashes AS (
+      |  SELECT doc_id, j,
+      |         min((((2654435761 * (j + 1)) % 1000000007) * (x % 1000000007)
+      |              + ((123456789 * (j + 1) + 987654321) % 1000000007))
+      |             % 1000000007) AS mh
+      |  FROM perms GROUP BY doc_id, j)""".stripMargin
+
+  /** [[minhashCtes]] plus q32's LSH bands: `bands` (doc_id, band,
+    * band_sig), four signatures per band; q32, q102 and q249 read it
+    * (q332 casts its band ids). */
+  private val minhashBandsCtes: String =
+    s"""$minhashCtes,
+      |bands AS (
+      |  SELECT doc_id, j // 4 AS band,
+      |         md5(string_agg(CAST(mh AS VARCHAR), '_' ORDER BY j)) AS band_sig
+      |  FROM minhashes GROUP BY doc_id, j // 4)""".stripMargin
+
+  /** Oracle CTEs of the exact shingle overlap: per-document shingle
+    * counts `sizes` and every sharing pair's intersection `inter` (id1,
+    * id2, n_inter), id1 < id2. q34, q106, q158, q297 and the q73
+    * closure ([[DedupClusters]]) read it. */
+  private[operators] val jaccardCtes: String =
+    s"""$shinglesCte,
+      |sizes AS (SELECT doc_id, count(*) AS sz FROM shingles GROUP BY 1),
+      |inter AS (
+      |  SELECT a.doc_id AS id1, b.doc_id AS id2, count(*) AS n_inter
+      |  FROM shingles a JOIN shingles b
+      |    ON a.shingle = b.shingle AND a.doc_id < b.doc_id
+      |  GROUP BY 1, 2)""".stripMargin
+
+  /** q34's exact-Jaccard pairs at ≥ 0.8, also q106's oracle. */
+  private val exactJaccardSql: String =
+    s"""WITH $jaccardCtes
+      |SELECT id1, id2,
+      |       round(CAST(n_inter AS DOUBLE) / (z1.sz + z2.sz - n_inter), 6)
+      |         AS jaccard
+      |FROM inter
+      |JOIN sizes z1 ON z1.doc_id = id1
+      |JOIN sizes z2 ON z2.doc_id = id2
+      |WHERE CAST(n_inter AS DOUBLE) / (z1.sz + z2.sz - n_inter) >= 0.8
+      |ORDER BY id1, id2""".stripMargin
+
   val defs: Seq[QueryDef] = Seq(
     QueryDef("q340_dup_rate_by_length", q340DupRateByLength _,
       """WITH docs AS (
@@ -767,20 +820,7 @@ object Dedup {
         |               AS DOUBLE) / count(*), 6) AS dup_rate
         |FROM bucketed GROUP BY 1 ORDER BY 1""".stripMargin),
     QueryDef("q332_lsh_bucket_audit", q332LshBucketAudit _,
-      s"""WITH $shinglesCte,
-         |hashed AS (
-         |  SELECT doc_id, shingle,
-         |         ('0x' || substr(md5(shingle), 1, 15))::BIGINT AS x
-         |  FROM shingles),
-         |perms AS (
-         |  SELECT doc_id, x, unnest(generate_series(0, 15)) AS j
-         |  FROM hashed),
-         |minhashes AS (
-         |  SELECT doc_id, j,
-         |         min((((2654435761 * (j + 1)) % 1000000007) * (x % 1000000007)
-         |              + ((123456789 * (j + 1) + 987654321) % 1000000007))
-         |             % 1000000007) AS mh
-         |  FROM perms GROUP BY doc_id, j),
+      s"""WITH $minhashCtes,
          |bands AS (
          |  SELECT doc_id, CAST(j // 4 AS INTEGER) AS band,
          |         md5(string_agg(CAST(mh AS VARCHAR), '_' ORDER BY j))
@@ -816,24 +856,7 @@ object Dedup {
         |               AS DOUBLE) / sum(toks), 6) AS token_savings
         |FROM tagged GROUP BY 1 ORDER BY 1""".stripMargin),
     QueryDef("q249_threshold_curve", q249ThresholdCurve _,
-      s"""WITH $shinglesCte,
-         |hashed AS (
-         |  SELECT doc_id, shingle,
-         |         ('0x' || substr(md5(shingle), 1, 15))::BIGINT AS x
-         |  FROM shingles),
-         |perms AS (
-         |  SELECT doc_id, x, unnest(generate_series(0, 15)) AS j
-         |  FROM hashed),
-         |minhashes AS (
-         |  SELECT doc_id, j,
-         |         min((((2654435761 * (j + 1)) % 1000000007) * (x % 1000000007)
-         |              + ((123456789 * (j + 1) + 987654321) % 1000000007))
-         |             % 1000000007) AS mh
-         |  FROM perms GROUP BY doc_id, j),
-         |bands AS (
-         |  SELECT doc_id, j // 4 AS band,
-         |         md5(string_agg(CAST(mh AS VARCHAR), '_' ORDER BY j)) AS band_sig
-         |  FROM minhashes GROUP BY doc_id, j // 4),
+      s"""WITH $minhashBandsCtes,
          |cands AS (
          |  SELECT DISTINCT a.doc_id AS id1, b.doc_id AS id2
          |  FROM bands a JOIN bands b
@@ -893,13 +916,7 @@ object Dedup {
         |       doc_id <> min(doc_id) OVER (PARTITION BY text_hash) AS is_duplicate
         |FROM docs ORDER BY doc_id""".stripMargin),
     QueryDef("q158_containment_dedup", q158ContainmentDedup _,
-      s"""WITH $shinglesCte,
-         |sizes AS (SELECT doc_id, count(*) AS sz FROM shingles GROUP BY 1),
-         |inter AS (
-         |  SELECT a.doc_id AS id1, b.doc_id AS id2, count(*) AS n_inter
-         |  FROM shingles a JOIN shingles b
-         |    ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-         |  GROUP BY 1, 2)
+      s"""WITH $jaccardCtes
          |SELECT id1, id2, n_inter, z1.sz AS sz1, z2.sz AS sz2,
          |       round(CAST(n_inter AS DOUBLE) / least(z1.sz, z2.sz), 6)
          |         AS containment,
@@ -938,24 +955,7 @@ object Dedup {
          |WHERE 10 * n_inter >= 9 * least(z1.sz, z2.sz)
          |ORDER BY id1, id2""".stripMargin),
     QueryDef("q32_dedup_minhash", q32DedupMinhash _,
-      s"""WITH $shinglesCte,
-         |hashed AS (
-         |  SELECT doc_id, shingle,
-         |         ('0x' || substr(md5(shingle), 1, 15))::BIGINT AS x
-         |  FROM shingles),
-         |perms AS (
-         |  SELECT doc_id, x, unnest(generate_series(0, 15)) AS j
-         |  FROM hashed),
-         |minhashes AS (
-         |  SELECT doc_id, j,
-         |         min((((2654435761 * (j + 1)) % 1000000007) * (x % 1000000007)
-         |              + ((123456789 * (j + 1) + 987654321) % 1000000007))
-         |             % 1000000007) AS mh
-         |  FROM perms GROUP BY doc_id, j),
-         |bands AS (
-         |  SELECT doc_id, j // 4 AS band,
-         |         md5(string_agg(CAST(mh AS VARCHAR), '_' ORDER BY j)) AS band_sig
-         |  FROM minhashes GROUP BY doc_id, j // 4)
+      s"""WITH $minhashBandsCtes
          |SELECT a.doc_id AS id1, b.doc_id AS id2,
          |       count(DISTINCT a.band) AS n_shared_bands
          |FROM bands a JOIN bands b
@@ -1006,13 +1006,7 @@ object Dedup {
            |  (SELECT CAST(sum(CASE WHEN jmin >= $t AND jac >= $t
            |     THEN 1 ELSE 0 END) AS BIGINT) FROM wedges) AS n_closed""".stripMargin
       }.mkString("\nUNION ALL\n")
-      s"""WITH $shinglesCte,
-         |sizes AS (SELECT doc_id, count(*) AS sz FROM shingles GROUP BY 1),
-         |inter AS (
-         |  SELECT a.doc_id AS id1, b.doc_id AS id2, count(*) AS n_inter
-         |  FROM shingles a JOIN shingles b
-         |    ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-         |  GROUP BY 1, 2),
+      s"""WITH $jaccardCtes,
          |pairs AS MATERIALIZED (
          |  SELECT id1, id2,
          |         round(CAST(n_inter AS DOUBLE)
@@ -1039,41 +1033,13 @@ object Dedup {
          |FROM report ORDER BY tau""".stripMargin
     }),
     QueryDef("q34_dedup_ngram_jaccard", q34DedupNgramJaccard _,
-      s"""WITH $shinglesCte,
-         |sizes AS (SELECT doc_id, count(*) AS sz FROM shingles GROUP BY 1),
-         |inter AS (
-         |  SELECT a.doc_id AS id1, b.doc_id AS id2, count(*) AS n_inter
-         |  FROM shingles a JOIN shingles b
-         |    ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-         |  GROUP BY 1, 2)
-         |SELECT id1, id2,
-         |       round(CAST(n_inter AS DOUBLE) / (z1.sz + z2.sz - n_inter), 6)
-         |         AS jaccard
-         |FROM inter
-         |JOIN sizes z1 ON z1.doc_id = id1
-         |JOIN sizes z2 ON z2.doc_id = id2
-         |WHERE CAST(n_inter AS DOUBLE) / (z1.sz + z2.sz - n_inter) >= 0.8
-         |ORDER BY id1, id2""".stripMargin),
+      exactJaccardSql),
     // q106 is the PROVABLY-LOSSLESS prefix-filtered plan for the same
     // semantics, so its ground truth is q34's exact-Jaccard SQL verbatim
     // — the strongest possible oracle for an optimization: the driver
     // hash-compares the optimized plan against the unoptimized answer
     QueryDef("q106_jaccard_prefix", q106DedupJaccardPrefix _,
-      s"""WITH $shinglesCte,
-         |sizes AS (SELECT doc_id, count(*) AS sz FROM shingles GROUP BY 1),
-         |inter AS (
-         |  SELECT a.doc_id AS id1, b.doc_id AS id2, count(*) AS n_inter
-         |  FROM shingles a JOIN shingles b
-         |    ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-         |  GROUP BY 1, 2)
-         |SELECT id1, id2,
-         |       round(CAST(n_inter AS DOUBLE) / (z1.sz + z2.sz - n_inter), 6)
-         |         AS jaccard
-         |FROM inter
-         |JOIN sizes z1 ON z1.doc_id = id1
-         |JOIN sizes z2 ON z2.doc_id = id2
-         |WHERE CAST(n_inter AS DOUBLE) / (z1.sz + z2.sz - n_inter) >= 0.8
-         |ORDER BY id1, id2""".stripMargin),
+      exactJaccardSql),
     QueryDef("q110_span_dedup", q110SpanDedup _,
       s"""WITH spans AS (
         |  SELECT doc_id, md5(substring(text, CAST(s AS INT), $SpanLen)) AS h
@@ -1099,24 +1065,7 @@ object Dedup {
     // pairs — verifies the incremental path finds exactly what a
     // monolithic build would across the batch boundary
     QueryDef("q102_cross_batch_minhash", q102CrossBatchMinhash _,
-      s"""WITH $shinglesCte,
-         |hashed AS (
-         |  SELECT doc_id, shingle,
-         |         ('0x' || substr(md5(shingle), 1, 15))::BIGINT AS x
-         |  FROM shingles),
-         |perms AS (
-         |  SELECT doc_id, x, unnest(generate_series(0, 15)) AS j
-         |  FROM hashed),
-         |minhashes AS (
-         |  SELECT doc_id, j,
-         |         min((((2654435761 * (j + 1)) % 1000000007) * (x % 1000000007)
-         |              + ((123456789 * (j + 1) + 987654321) % 1000000007))
-         |             % 1000000007) AS mh
-         |  FROM perms GROUP BY doc_id, j),
-         |bands AS (
-         |  SELECT doc_id, j // 4 AS band,
-         |         md5(string_agg(CAST(mh AS VARCHAR), '_' ORDER BY j)) AS band_sig
-         |  FROM minhashes GROUP BY doc_id, j // 4)
+      s"""WITH $minhashBandsCtes
          |SELECT a.doc_id AS id1, b.doc_id AS id2,
          |       count(DISTINCT a.band) AS n_shared_bands
          |FROM bands a JOIN bands b

@@ -325,7 +325,7 @@ object DedupClusters {
       .unionAll(singletons)
       .crossJoin(broadcast(totals))
       .select(col("size"), col("n_clusters"), col("n_docs"),
-        round(col("n_docs").cast("double") / col("n_total"), 6)
+        round(try_divide(col("n_docs").cast("double"), col("n_total")), 6)
           .as("doc_share"))
       .orderBy("size")
   }
@@ -424,31 +424,29 @@ object DedupClusters {
       .limit(IdfShiftTopK)
   }
 
-  /** q73's oracle closure is shared verbatim with q115/q126. */
-  private val shinglesCte: String = Dedup.shinglesCte
+  /** q73's oracle closure: the q34 shingle pairs at Jaccard ≥ 0.8 as an
+    * undirected edge list and its recursive reachability `reach(u, v)`.
+    * Shared verbatim with q115/q126/q258/q277/q300, q117 ([[Curation]])
+    * and q393 ([[CurationHardening]]); each names its own label CTE. */
+  private[operators] val closureCtes: String =
+    s"""${Dedup.jaccardCtes},
+       |pairs AS (
+       |  SELECT id1, id2 FROM inter
+       |  JOIN sizes z1 ON z1.doc_id = id1
+       |  JOIN sizes z2 ON z2.doc_id = id2
+       |  WHERE CAST(n_inter AS DOUBLE) / (z1.sz + z2.sz - n_inter)
+       |        >= 0.8),
+       |edges AS (SELECT id1 AS u, id2 AS v FROM pairs
+       |          UNION SELECT id2, id1 FROM pairs),
+       |reach(u, v) AS (
+       |  SELECT u, v FROM edges
+       |  UNION
+       |  SELECT r.u, e.v FROM reach r JOIN edges e ON r.v = e.u)""".stripMargin
 
 
   val defs: Seq[QueryDef] = Seq(
     QueryDef("q300_idf_shift", q300IdfShift _,
-      s"""WITH RECURSIVE $shinglesCte,
-         |sizes AS (SELECT doc_id, count(*) AS sz FROM shingles GROUP BY 1),
-         |inter AS (
-         |  SELECT a.doc_id AS id1, b.doc_id AS id2, count(*) AS n_inter
-         |  FROM shingles a JOIN shingles b
-         |    ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-         |  GROUP BY 1, 2),
-         |pairs AS (
-         |  SELECT id1, id2 FROM inter
-         |  JOIN sizes z1 ON z1.doc_id = id1
-         |  JOIN sizes z2 ON z2.doc_id = id2
-         |  WHERE CAST(n_inter AS DOUBLE) / (z1.sz + z2.sz - n_inter)
-         |        >= 0.8),
-         |edges AS (SELECT id1 AS u, id2 AS v FROM pairs
-         |          UNION SELECT id2, id1 FROM pairs),
-         |reach(u, v) AS (
-         |  SELECT u, v FROM edges
-         |  UNION
-         |  SELECT r.u, e.v FROM reach r JOIN edges e ON r.v = e.u),
+      s"""WITH RECURSIVE $closureCtes,
          |labels AS (
          |  SELECT u AS doc_id, least(u, min(v)) AS cluster_id
          |  FROM reach GROUP BY u),
@@ -487,25 +485,7 @@ object DedupClusters {
          |FROM dfs, totals t
          |ORDER BY df_drop DESC, word LIMIT $IdfShiftTopK""".stripMargin),
     QueryDef("q277_dedup_savings", q277DedupSavings _,
-      s"""WITH RECURSIVE $shinglesCte,
-         |sizes AS (SELECT doc_id, count(*) AS sz FROM shingles GROUP BY 1),
-         |inter AS (
-         |  SELECT a.doc_id AS id1, b.doc_id AS id2, count(*) AS n_inter
-         |  FROM shingles a JOIN shingles b
-         |    ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-         |  GROUP BY 1, 2),
-         |pairs AS (
-         |  SELECT id1, id2 FROM inter
-         |  JOIN sizes z1 ON z1.doc_id = id1
-         |  JOIN sizes z2 ON z2.doc_id = id2
-         |  WHERE CAST(n_inter AS DOUBLE) / (z1.sz + z2.sz - n_inter)
-         |        >= 0.8),
-         |edges AS (SELECT id1 AS u, id2 AS v FROM pairs
-         |          UNION SELECT id2, id1 FROM pairs),
-         |reach(u, v) AS (
-         |  SELECT u, v FROM edges
-         |  UNION
-         |  SELECT r.u, e.v FROM reach r JOIN edges e ON r.v = e.u),
+      s"""WITH RECURSIVE $closureCtes,
          |labels AS (
          |  SELECT u AS doc_id, least(u, min(v)) AS cluster_id
          |  FROM reach GROUP BY u),
@@ -538,25 +518,7 @@ object DedupClusters {
          |         AS token_savings
          |FROM agg""".stripMargin),
     QueryDef("q258_cluster_sizes", q258ClusterSizes _,
-      s"""WITH RECURSIVE $shinglesCte,
-         |sizes AS (SELECT doc_id, count(*) AS sz FROM shingles GROUP BY 1),
-         |inter AS (
-         |  SELECT a.doc_id AS id1, b.doc_id AS id2, count(*) AS n_inter
-         |  FROM shingles a JOIN shingles b
-         |    ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-         |  GROUP BY 1, 2),
-         |pairs AS (
-         |  SELECT id1, id2 FROM inter
-         |  JOIN sizes z1 ON z1.doc_id = id1
-         |  JOIN sizes z2 ON z2.doc_id = id2
-         |  WHERE CAST(n_inter AS DOUBLE) / (z1.sz + z2.sz - n_inter)
-         |        >= 0.8),
-         |edges AS (SELECT id1 AS u, id2 AS v FROM pairs
-         |          UNION SELECT id2, id1 FROM pairs),
-         |reach(u, v) AS (
-         |  SELECT u, v FROM edges
-         |  UNION
-         |  SELECT r.u, e.v FROM reach r JOIN edges e ON r.v = e.u),
+      s"""WITH RECURSIVE $closureCtes,
          |labels AS (
          |  SELECT u AS doc_id, least(u, min(v)) AS cluster_id
          |  FROM reach GROUP BY u),
@@ -580,25 +542,7 @@ object DedupClusters {
          |             / (SELECT n_total FROM tot), 6) AS doc_share
          |FROM full_h ORDER BY size""".stripMargin),
     QueryDef("q73_dedup_clusters", q73DedupClusters _,
-      s"""WITH RECURSIVE $shinglesCte,
-         |sizes AS (SELECT doc_id, count(*) AS sz FROM shingles GROUP BY 1),
-         |inter AS (
-         |  SELECT a.doc_id AS id1, b.doc_id AS id2, count(*) AS n_inter
-         |  FROM shingles a JOIN shingles b
-         |    ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-         |  GROUP BY 1, 2),
-         |pairs AS (
-         |  SELECT id1, id2 FROM inter
-         |  JOIN sizes z1 ON z1.doc_id = id1
-         |  JOIN sizes z2 ON z2.doc_id = id2
-         |  WHERE CAST(n_inter AS DOUBLE) / (z1.sz + z2.sz - n_inter)
-         |        >= 0.8),
-         |edges AS (SELECT id1 AS u, id2 AS v FROM pairs
-         |          UNION SELECT id2, id1 FROM pairs),
-         |reach(u, v) AS (
-         |  SELECT u, v FROM edges
-         |  UNION
-         |  SELECT r.u, e.v FROM reach r JOIN edges e ON r.v = e.u)
+      s"""WITH RECURSIVE $closureCtes
          |SELECT u AS doc_id,
          |       least(u, min(v)) AS cluster_id,
          |       u = least(u, min(v)) AS is_canonical
@@ -606,25 +550,7 @@ object DedupClusters {
     // q73's closure + q39's quality formula: canonical = per-cluster
     // argmax(quality), lowest-id tie-break
     QueryDef("q115_cluster_canonical", q115ClusterCanonical _,
-      s"""WITH RECURSIVE $shinglesCte,
-         |sizes AS (SELECT doc_id, count(*) AS sz FROM shingles GROUP BY 1),
-         |inter AS (
-         |  SELECT a.doc_id AS id1, b.doc_id AS id2, count(*) AS n_inter
-         |  FROM shingles a JOIN shingles b
-         |    ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-         |  GROUP BY 1, 2),
-         |pairs AS (
-         |  SELECT id1, id2 FROM inter
-         |  JOIN sizes z1 ON z1.doc_id = id1
-         |  JOIN sizes z2 ON z2.doc_id = id2
-         |  WHERE CAST(n_inter AS DOUBLE) / (z1.sz + z2.sz - n_inter)
-         |        >= 0.8),
-         |edges AS (SELECT id1 AS u, id2 AS v FROM pairs
-         |          UNION SELECT id2, id1 FROM pairs),
-         |reach(u, v) AS (
-         |  SELECT u, v FROM edges
-         |  UNION
-         |  SELECT r.u, e.v FROM reach r JOIN edges e ON r.v = e.u),
+      s"""WITH RECURSIVE $closureCtes,
          |members AS (
          |  SELECT u AS doc_id, least(u, min(v)) AS cluster_id
          |  FROM reach GROUP BY u),
@@ -654,25 +580,7 @@ object DedupClusters {
     // q73's recursive closure + the documents source column: clusters
     // spanning a source pair counted once per pair
     QueryDef("q126_cross_source_dup", q126CrossSourceDup _,
-      s"""WITH RECURSIVE $shinglesCte,
-         |sizes AS (SELECT doc_id, count(*) AS sz FROM shingles GROUP BY 1),
-         |inter AS (
-         |  SELECT a.doc_id AS id1, b.doc_id AS id2, count(*) AS n_inter
-         |  FROM shingles a JOIN shingles b
-         |    ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-         |  GROUP BY 1, 2),
-         |pairs AS (
-         |  SELECT id1, id2 FROM inter
-         |  JOIN sizes z1 ON z1.doc_id = id1
-         |  JOIN sizes z2 ON z2.doc_id = id2
-         |  WHERE CAST(n_inter AS DOUBLE) / (z1.sz + z2.sz - n_inter)
-         |        >= 0.8),
-         |edges AS (SELECT id1 AS u, id2 AS v FROM pairs
-         |          UNION SELECT id2, id1 FROM pairs),
-         |reach(u, v) AS (
-         |  SELECT u, v FROM edges
-         |  UNION
-         |  SELECT r.u, e.v FROM reach r JOIN edges e ON r.v = e.u),
+      s"""WITH RECURSIVE $closureCtes,
          |members AS (
          |  SELECT u AS doc_id, least(u, min(v)) AS cluster_id
          |  FROM reach GROUP BY u),

@@ -453,6 +453,31 @@ object Evaluation {
       .orderBy("event_type")
   }
 
+  /** Oracle CTEs of the spend-vs-label frame: per-user spend `cents`
+    * and purchase count `pcnt` (`per_user`), and the median purchase
+    * count `med` a label is drawn against. */
+  private val spendLabelCtes: String =
+    """per_user AS (
+      |  SELECT user_id,
+      |         CAST(sum(CAST(round(value * 100, 0) AS BIGINT))
+      |              AS BIGINT) AS cents,
+      |         CAST(sum(CASE WHEN event_type = 'purchase' THEN 1
+      |                       ELSE 0 END) AS BIGINT) AS pcnt
+      |  FROM events GROUP BY 1),
+      |med AS (SELECT quantile_cont(CAST(pcnt AS DOUBLE), 0.5) AS med
+      |        FROM per_user)""".stripMargin
+
+  /** [[spendLabelCtes]] plus `users` (user_id, cents, label): label = 1
+    * above the median purchase count. q213 and q237 ([[Calibration]])
+    * read it. */
+  private[operators] val labeledUsersCtes: String =
+    s"""$spendLabelCtes,
+      |users AS (
+      |  SELECT user_id, cents,
+      |         CASE WHEN pcnt > (SELECT med FROM med) THEN 1
+      |              ELSE 0 END AS label
+      |  FROM per_user)""".stripMargin
+
   val defs: Seq[QueryDef] = Seq(
     QueryDef("q254_median_stability", q254MedianStability _,
       s"""WITH base AS (
@@ -492,15 +517,7 @@ object Evaluation {
     QueryDef("q242_brier_decomposition", q242BrierDecomposition _,
       {
       val probes = (1 until BrierBins).map(_.toDouble / BrierBins)
-      s"""WITH per_user AS (
-        |  SELECT user_id,
-        |         CAST(sum(CAST(round(value * 100, 0) AS BIGINT))
-        |              AS BIGINT) AS cents,
-        |         CAST(sum(CASE WHEN event_type = 'purchase' THEN 1
-        |                       ELSE 0 END) AS BIGINT) AS pcnt
-        |  FROM events GROUP BY 1),
-        |med AS (SELECT quantile_cont(CAST(pcnt AS DOUBLE), 0.5) AS med
-        |        FROM per_user),
+      s"""WITH $spendLabelCtes,
         |users AS (
         |  SELECT user_id, cents,
         |         CASE WHEN pcnt > (SELECT med FROM med) THEN 1
@@ -649,15 +666,7 @@ object Evaluation {
         |       round(rep_max - rep_min, 6) AS rep_range, within_1pct
         |FROM agg ORDER BY event_type""".stripMargin),
     QueryDef("q205_ranking_auc", q205RankingAuc _,
-      """WITH per_user AS (
-        |  SELECT user_id,
-        |         CAST(sum(CAST(round(value * 100, 0) AS BIGINT))
-        |              AS BIGINT) AS cents,
-        |         CAST(sum(CASE WHEN event_type = 'purchase' THEN 1
-        |                       ELSE 0 END) AS BIGINT) AS pcnt
-        |  FROM events GROUP BY 1),
-        |med AS (SELECT quantile_cont(CAST(pcnt AS DOUBLE), 0.5) AS med
-        |        FROM per_user),
+      s"""WITH $spendLabelCtes,
         |users AS (
         |  SELECT cents,
         |         CASE WHEN pcnt > (SELECT med FROM med) THEN 1
@@ -728,20 +737,7 @@ object Evaluation {
         |FROM ranked WHERE rn <= $SampleK
         |ORDER BY event_type, rn""".stripMargin),
     QueryDef("q213_reliability_curve", q213ReliabilityCurve _,
-      """WITH per_user AS (
-        |  SELECT user_id,
-        |         CAST(sum(CAST(round(value * 100, 0) AS BIGINT))
-        |              AS BIGINT) AS cents,
-        |         CAST(sum(CASE WHEN event_type = 'purchase' THEN 1
-        |                       ELSE 0 END) AS BIGINT) AS pcnt
-        |  FROM events GROUP BY 1),
-        |med AS (SELECT quantile_cont(CAST(pcnt AS DOUBLE), 0.5) AS med
-        |        FROM per_user),
-        |users AS (
-        |  SELECT user_id, cents,
-        |         CASE WHEN pcnt > (SELECT med FROM med) THEN 1
-        |              ELSE 0 END AS label
-        |  FROM per_user),
+      s"""WITH $labeledUsersCtes,
         |binned AS (
         |  SELECT CAST(ntile(10) OVER (ORDER BY cents DESC, user_id)
         |              AS INTEGER) AS decile,

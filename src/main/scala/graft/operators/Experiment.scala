@@ -38,36 +38,47 @@ import graft.sources.Tables
   */
 object Experiment {
 
+  /** q165's arm fold, shared with q280: per event type, the exact
+    * (n, Σx, Σx²) of value cents in each user-hash arm — na/sa/qa for
+    * arm A, nb/sb/qb for arm B ([[armSums]], which q308 folds too). */
+  private def armStats(spark: SparkSession, dir: String): DataFrame =
+    Tables.events(spark, dir)
+      .select(col("event_type"),
+        (pmod(Hashing.md5Hash60(concat(lit("arm:"), col("user_id"))),
+          lit(2)) === 0).as("in_a"),
+        expr("cast(round(value * 100, 0) as bigint)").as("cents"))
+      .groupBy("event_type").agg(armSums.head, armSums.tail: _*)
+
+  /** The six exact arm sums over an `in_a` flag and `cents`. */
+  private def armSums: Seq[Column] = Seq(
+    sum(when(col("in_a"), 1L).otherwise(0L)).as("na"),
+    sum(when(col("in_a"), col("cents")).otherwise(0L)).as("sa"),
+    sum(when(col("in_a"), col("cents") * col("cents")).otherwise(0L)).as("qa"),
+    sum(when(!col("in_a"), 1L).otherwise(0L)).as("nb"),
+    sum(when(!col("in_a"), col("cents")).otherwise(0L)).as("sb"),
+    sum(when(!col("in_a"), col("cents") * col("cents")).otherwise(0L)).as("qb"))
+
+  /** Arm means and sample variances (ma, mb, va, vb) from exact arm
+    * sums: ONE fixed expression tree over the six integers — identical
+    * in the oracle, hence bit-identical doubles (every IEEE op incl.
+    * sqrt is correctly rounded). */
+  private def armMoments(na: Column, sa: Column, qa: Column,
+      nb: Column, sb: Column, qb: Column): (Column, Column, Column, Column) = {
+    val ma = sa.cast("double") / na
+    val mb = sb.cast("double") / nb
+    (ma, mb, (qa.cast("double") - sa.cast("double") * ma) / (na - 1),
+      (qb.cast("double") - sb.cast("double") * mb) / (nb - 1))
+  }
+
   /** q165 — per event type: arm sizes, mean value per arm (exact cents
     * → rounded display), Welch t, and the |t| > 1.96 verdict. Arms are
     * user_id-hash split ~50/50; on this synthetic stream the metric is
     * arm-independent, so verdicts read not_significant — the monitor's
     * steady state (the spec drives a true-effect branch). */
   def q165AbWelch(spark: SparkSession, dir: String): DataFrame = {
-    val ev = Tables.events(spark, dir)
-      .select(col("event_type"),
-        (pmod(Hashing.md5Hash60(concat(lit("arm:"), col("user_id"))),
-          lit(2)) === 0).as("in_a"),
-        expr("cast(round(value * 100, 0) as bigint)").as("cents"))
-    val stats = ev.groupBy("event_type")
-      .agg(
-        sum(when(col("in_a"), 1L).otherwise(0L)).as("na"),
-        sum(when(col("in_a"), col("cents")).otherwise(0L)).as("sa"),
-        sum(when(col("in_a"), col("cents") * col("cents")).otherwise(0L))
-          .as("qa"),
-        sum(when(!col("in_a"), 1L).otherwise(0L)).as("nb"),
-        sum(when(!col("in_a"), col("cents")).otherwise(0L)).as("sb"),
-        sum(when(!col("in_a"), col("cents") * col("cents")).otherwise(0L))
-          .as("qb"))
-    // ONE fixed expression tree over the six exact integers — identical
-    // in the oracle, hence bit-identical doubles (every IEEE op incl.
-    // sqrt is correctly rounded)
-    val ma = col("sa").cast("double") / col("na")
-    val mb = col("sb").cast("double") / col("nb")
-    val va = (col("qa").cast("double") - col("sa").cast("double") * ma) /
-      (col("na") - 1)
-    val vb = (col("qb").cast("double") - col("sb").cast("double") * mb) /
-      (col("nb") - 1)
+    val stats = armStats(spark, dir)
+    val (ma, mb, va, vb) = armMoments(col("na"), col("sa"), col("qa"),
+      col("nb"), col("sb"), col("qb"))
     val t = (ma - mb) / sqrt(va / col("na") + vb / col("nb"))
     stats.select(col("event_type"), col("na"), col("nb"),
         round(ma / 100, 4).as("mean_a"),
@@ -171,12 +182,8 @@ object Experiment {
         sum(when(!col("is_ref"), col("z2")).otherwise(0L)).as("sb"),
         sum(when(!col("is_ref"), col("z2") * col("z2")).otherwise(0L))
           .as("qb"))
-    val ma = col("sa").cast("double") / col("na")
-    val mb = col("sb").cast("double") / col("nb")
-    val va = (col("qa").cast("double") - col("sa").cast("double") * ma) /
-      (col("na") - 1)
-    val vb = (col("qb").cast("double") - col("sb").cast("double") * mb) /
-      (col("nb") - 1)
+    val (ma, mb, va, vb) = armMoments(col("na"), col("sa"), col("qa"),
+      col("nb"), col("sb"), col("qb"))
     val t = (ma - mb) / sqrt(va / col("na") + vb / col("nb"))
     stats.select(col("event_type"), col("na").as("n_ref"),
         col("nb").as("n_cur"),
@@ -251,27 +258,9 @@ object Experiment {
     * with pinned z literals; √ and every IEEE op correctly rounded,
     * mirrored verbatim (the q165 discipline). */
   def q280AbPower(spark: SparkSession, dir: String): DataFrame = {
-    val ev = Tables.events(spark, dir)
-      .select(col("event_type"),
-        (pmod(Hashing.md5Hash60(concat(lit("arm:"), col("user_id"))),
-          lit(2)) === 0).as("in_a"),
-        expr("cast(round(value * 100, 0) as bigint)").as("cents"))
-    val stats = ev.groupBy("event_type")
-      .agg(
-        sum(when(col("in_a"), 1L).otherwise(0L)).as("na"),
-        sum(when(col("in_a"), col("cents")).otherwise(0L)).as("sa"),
-        sum(when(col("in_a"), col("cents") * col("cents")).otherwise(0L))
-          .as("qa"),
-        sum(when(!col("in_a"), 1L).otherwise(0L)).as("nb"),
-        sum(when(!col("in_a"), col("cents")).otherwise(0L)).as("sb"),
-        sum(when(!col("in_a"), col("cents") * col("cents")).otherwise(0L))
-          .as("qb"))
-    val ma = col("sa").cast("double") / col("na")
-    val mb = col("sb").cast("double") / col("nb")
-    val va = (col("qa").cast("double") - col("sa").cast("double") * ma) /
-      (col("na") - 1)
-    val vb = (col("qb").cast("double") - col("sb").cast("double") * mb) /
-      (col("nb") - 1)
+    val stats = armStats(spark, dir)
+    val (ma, _, va, vb) = armMoments(col("na"), col("sa"), col("qa"),
+      col("nb"), col("sb"), col("qb"))
     val mde = lit(ZSum6) * sqrt(va / col("na") + vb / col("nb"))
     stats.select(col("event_type"), col("na"), col("nb"),
         round(ma / 100, 4).as("mean_a"),
@@ -326,10 +315,7 @@ object Experiment {
       sum("dqb").over(w).as("qb"))
     def z(na: Column, sa: Column, qa: Column,
         nb: Column, sb: Column, qb: Column): Column = {
-      val ma = sa.cast("double") / na
-      val mb = sb.cast("double") / nb
-      val va = (qa.cast("double") - sa.cast("double") * ma) / (na - 1)
-      val vb = (qb.cast("double") - sb.cast("double") * mb) / (nb - 1)
+      val (ma, mb, va, vb) = armMoments(na, sa, qa, nb, sb, qb)
       val denom = va / na + vb / nb
       when(na >= 2 && nb >= 2 && denom > 0, (ma - mb) / sqrt(denom))
     }
@@ -405,10 +391,7 @@ object Experiment {
           .otherwise(lit(0).cast("decimal(38,0)"))).as("vb"))
     def welch(na: Column, sa: Column, qa: Column,
         nb: Column, sb: Column, qb: Column): Column = {
-      val ma = sa.cast("double") / na
-      val mb = sb.cast("double") / nb
-      val va = (qa.cast("double") - sa.cast("double") * ma) / (na - 1)
-      val vb = (qb.cast("double") - sb.cast("double") * mb) / (nb - 1)
+      val (ma, mb, va, vb) = armMoments(na, sa, qa, nb, sb, qb)
       (ma - mb) / sqrt(va / na + vb / nb)
     }
     val tRaw = welch(col("na"), col("sa"), col("qa"),
@@ -453,21 +436,9 @@ object Experiment {
           lit(2)) === 0).as("in_a"),
         expr("cast(round(value * 100, 0) as bigint)").as("cents"))
     val stats = ev.groupBy("event_type")
-      .agg(countDistinct(col("day")).as("n_days"),
-        sum(when(col("in_a"), 1L).otherwise(0L)).as("na"),
-        sum(when(col("in_a"), col("cents")).otherwise(0L)).as("sa"),
-        sum(when(col("in_a"), col("cents") * col("cents")).otherwise(0L))
-          .as("qa"),
-        sum(when(!col("in_a"), 1L).otherwise(0L)).as("nb"),
-        sum(when(!col("in_a"), col("cents")).otherwise(0L)).as("sb"),
-        sum(when(!col("in_a"), col("cents") * col("cents")).otherwise(0L))
-          .as("qb"))
-    val ma = col("sa").cast("double") / col("na")
-    val va = (col("qa").cast("double") - col("sa").cast("double") * ma) /
-      (col("na") - 1)
-    val mb = col("sb").cast("double") / col("nb")
-    val vb = (col("qb").cast("double") - col("sb").cast("double") * mb) /
-      (col("nb") - 1)
+      .agg(countDistinct(col("day")).as("n_days"), armSums: _*)
+    val (ma, _, va, vb) = armMoments(col("na"), col("sa"), col("qa"),
+      col("nb"), col("sb"), col("qb"))
     val delta = lit(TargetLift) * ma
     val nReq = lit(ZSum6) * lit(ZSum6) * (va + vb) / (delta * delta)
     val daysA = nReq * col("n_days") / col("na")
@@ -635,6 +606,47 @@ object Experiment {
           col("v_micro").cast("double") / 1e6, 6).as("chi2"))
   }
 
+  /** [[armStats]] as oracle CTEs: `stats` (event_type, na, sa, qa, nb,
+    * sb, qb) over the user-hash arms `ev`; q165 and q280 read it. */
+  private val armStatsCtes: String =
+    """ev AS (
+      |  SELECT event_type,
+      |         ('0x' || substr(md5('arm:' || user_id), 1, 15))::BIGINT
+      |           % 2 = 0 AS in_a,
+      |         CAST(round(value * 100, 0) AS BIGINT) AS cents
+      |  FROM events),
+      |stats AS (
+      |  SELECT event_type,
+      |         CAST(sum(CASE WHEN in_a THEN 1 ELSE 0 END) AS BIGINT) AS na,
+      |         CAST(sum(CASE WHEN in_a THEN cents ELSE 0 END) AS BIGINT) AS sa,
+      |         CAST(sum(CASE WHEN in_a THEN cents * cents ELSE 0 END) AS BIGINT) AS qa,
+      |         CAST(sum(CASE WHEN NOT in_a THEN 1 ELSE 0 END) AS BIGINT) AS nb,
+      |         CAST(sum(CASE WHEN NOT in_a THEN cents ELSE 0 END) AS BIGINT) AS sb,
+      |         CAST(sum(CASE WHEN NOT in_a THEN cents * cents ELSE 0 END) AS BIGINT) AS qb
+      |  FROM ev GROUP BY 1)""".stripMargin
+
+  /** q287's Welch z over (na, sa, qa, nb, sb, qb), NULL until both arms
+    * hold two events and the variance term is positive: the oracle
+    * twin of its `z`, read per day (`zd`) and on the totals (`finz`). */
+  private val peekZ: String =
+    """CASE WHEN na >= 2 AND nb >= 2 AND
+      |                   (CAST(qa AS DOUBLE)
+      |                    - CAST(sa AS DOUBLE) * (CAST(sa AS DOUBLE) / na))
+      |                     / (na - 1) / na
+      |                   + (CAST(qb AS DOUBLE)
+      |                      - CAST(sb AS DOUBLE) * (CAST(sb AS DOUBLE) / nb))
+      |                       / (nb - 1) / nb > 0
+      |              THEN (CAST(sa AS DOUBLE) / na - CAST(sb AS DOUBLE) / nb)
+      |                   / sqrt((CAST(qa AS DOUBLE)
+      |                           - CAST(sa AS DOUBLE)
+      |                             * (CAST(sa AS DOUBLE) / na))
+      |                            / (na - 1) / na
+      |                          + (CAST(qb AS DOUBLE)
+      |                             - CAST(sb AS DOUBLE)
+      |                               * (CAST(sb AS DOUBLE) / nb))
+      |                              / (nb - 1) / nb)
+      |         END""".stripMargin
+
   val defs: Seq[QueryDef] = Seq(
     QueryDef("q318_quantile_effects", q318QuantileEffects _,
       """WITH ev AS (
@@ -772,7 +784,7 @@ object Experiment {
         |       (abs(t_raw) > 1.96) <> (abs(t_winsor) > 1.96) AS flipped
         |FROM t ORDER BY event_type""".stripMargin),
     QueryDef("q287_peeking_audit", q287PeekingAudit _,
-      """WITH ev AS (
+      s"""WITH ev AS (
         |  SELECT event_type, CAST(ts AS DATE) AS day,
         |         ('0x' || substr(md5('arm:' || user_id), 1, 15))::BIGINT
         |           % 2 = 0 AS in_a,
@@ -806,23 +818,7 @@ object Experiment {
         |  WINDOW w AS (PARTITION BY event_type ORDER BY day)),
         |zd AS (
         |  SELECT *,
-        |         CASE WHEN na >= 2 AND nb >= 2 AND
-        |                   (CAST(qa AS DOUBLE)
-        |                    - CAST(sa AS DOUBLE) * (CAST(sa AS DOUBLE) / na))
-        |                     / (na - 1) / na
-        |                   + (CAST(qb AS DOUBLE)
-        |                      - CAST(sb AS DOUBLE) * (CAST(sb AS DOUBLE) / nb))
-        |                       / (nb - 1) / nb > 0
-        |              THEN (CAST(sa AS DOUBLE) / na - CAST(sb AS DOUBLE) / nb)
-        |                   / sqrt((CAST(qa AS DOUBLE)
-        |                           - CAST(sa AS DOUBLE)
-        |                             * (CAST(sa AS DOUBLE) / na))
-        |                            / (na - 1) / na
-        |                          + (CAST(qb AS DOUBLE)
-        |                             - CAST(sb AS DOUBLE)
-        |                               * (CAST(sb AS DOUBLE) / nb))
-        |                              / (nb - 1) / nb)
-        |         END AS z
+        |         $peekZ AS z
         |  FROM cum),
         |interim AS (
         |  SELECT event_type,
@@ -843,23 +839,7 @@ object Experiment {
         |  FROM daily GROUP BY 1),
         |finz AS (
         |  SELECT event_type,
-        |         round(CASE WHEN na >= 2 AND nb >= 2 AND
-        |                   (CAST(qa AS DOUBLE)
-        |                    - CAST(sa AS DOUBLE) * (CAST(sa AS DOUBLE) / na))
-        |                     / (na - 1) / na
-        |                   + (CAST(qb AS DOUBLE)
-        |                      - CAST(sb AS DOUBLE) * (CAST(sb AS DOUBLE) / nb))
-        |                       / (nb - 1) / nb > 0
-        |              THEN (CAST(sa AS DOUBLE) / na - CAST(sb AS DOUBLE) / nb)
-        |                   / sqrt((CAST(qa AS DOUBLE)
-        |                           - CAST(sa AS DOUBLE)
-        |                             * (CAST(sa AS DOUBLE) / na))
-        |                            / (na - 1) / na
-        |                          + (CAST(qb AS DOUBLE)
-        |                             - CAST(sb AS DOUBLE)
-        |                               * (CAST(sb AS DOUBLE) / nb))
-        |                              / (nb - 1) / nb)
-        |         END, 6) AS final_z
+        |         round($peekZ, 6) AS final_z
         |  FROM fin)
         |SELECT i.event_type, i.n_days, i.first_stop_idx, i.days_over,
         |       f.final_z,
@@ -869,21 +849,7 @@ object Experiment {
         |FROM interim i JOIN finz f USING (event_type)
         |ORDER BY i.event_type""".stripMargin),
     QueryDef("q280_ab_power", q280AbPower _,
-      s"""WITH ev AS (
-        |  SELECT event_type,
-        |         ('0x' || substr(md5('arm:' || user_id), 1, 15))::BIGINT
-        |           % 2 = 0 AS in_a,
-        |         CAST(round(value * 100, 0) AS BIGINT) AS cents
-        |  FROM events),
-        |stats AS (
-        |  SELECT event_type,
-        |         CAST(sum(CASE WHEN in_a THEN 1 ELSE 0 END) AS BIGINT) AS na,
-        |         CAST(sum(CASE WHEN in_a THEN cents ELSE 0 END) AS BIGINT) AS sa,
-        |         CAST(sum(CASE WHEN in_a THEN cents * cents ELSE 0 END) AS BIGINT) AS qa,
-        |         CAST(sum(CASE WHEN NOT in_a THEN 1 ELSE 0 END) AS BIGINT) AS nb,
-        |         CAST(sum(CASE WHEN NOT in_a THEN cents ELSE 0 END) AS BIGINT) AS sb,
-        |         CAST(sum(CASE WHEN NOT in_a THEN cents * cents ELSE 0 END) AS BIGINT) AS qb
-        |  FROM ev GROUP BY 1)
+      s"""WITH $armStatsCtes
         |SELECT event_type, na, nb,
         |       round((CAST(sa AS DOUBLE) / na) / 100, 4) AS mean_a,
         |       round(($ZSum6
@@ -1025,21 +991,7 @@ object Experiment {
         |       round((SELECT did_cents FROM did) / 100.0, 4) AS did_spend
         |FROM cells ORDER BY grp, period""".stripMargin),
     QueryDef("q165_ab_welch", q165AbWelch _,
-      """WITH ev AS (
-        |  SELECT event_type,
-        |         ('0x' || substr(md5('arm:' || user_id), 1, 15))::BIGINT
-        |           % 2 = 0 AS in_a,
-        |         CAST(round(value * 100, 0) AS BIGINT) AS cents
-        |  FROM events),
-        |stats AS (
-        |  SELECT event_type,
-        |         CAST(sum(CASE WHEN in_a THEN 1 ELSE 0 END) AS BIGINT) AS na,
-        |         CAST(sum(CASE WHEN in_a THEN cents ELSE 0 END) AS BIGINT) AS sa,
-        |         CAST(sum(CASE WHEN in_a THEN cents * cents ELSE 0 END) AS BIGINT) AS qa,
-        |         CAST(sum(CASE WHEN NOT in_a THEN 1 ELSE 0 END) AS BIGINT) AS nb,
-        |         CAST(sum(CASE WHEN NOT in_a THEN cents ELSE 0 END) AS BIGINT) AS sb,
-        |         CAST(sum(CASE WHEN NOT in_a THEN cents * cents ELSE 0 END) AS BIGINT) AS qb
-        |  FROM ev GROUP BY 1)
+      s"""WITH $armStatsCtes
         |SELECT event_type, na, nb,
         |       round((CAST(sa AS DOUBLE) / na) / 100, 4) AS mean_a,
         |       round((CAST(sb AS DOUBLE) / nb) / 100, 4) AS mean_b,

@@ -449,14 +449,36 @@ object Graph {
       .limit(ClusterTopK)
   }
 
+  /** `edges` of the supplier → part graph as oracle CTE text. */
+  private[operators] val supplierPartEdgesCte: String =
+    """edges AS (
+      |  SELECT DISTINCT 's' || CAST(l_suppkey AS VARCHAR) AS src,
+      |         'p' || CAST(l_partkey AS VARCHAR) AS dst
+      |  FROM lineitem)""".stripMargin
+
+  /** Power-iteration round `i` over `edges`/`outdeg` as oracle CTEs:
+    * the dangling mass `dang$i` of round `r${i-1}` and each node's
+    * inflow `contrib$i`. PageRank (q138) and PPR (q143, [[Graph2]])
+    * differ only in the `r$i` they form from them. */
+  private[operators] def roundFlowCtes(i: Int): String = {
+    val prev = s"r${i - 1}"
+    s"""dang$i AS (
+       |  SELECT COALESCE(sum(r), CAST(0 AS DOUBLE)) AS m
+       |  FROM $prev LEFT JOIN outdeg USING (node)
+       |  WHERE outdeg.d IS NULL),
+       |contrib$i AS (
+       |  SELECT e.dst AS node, sum(p.r / o.d) AS c
+       |  FROM edges e
+       |  JOIN $prev p ON e.src = p.node
+       |  JOIN outdeg o ON e.src = o.node
+       |  GROUP BY 1)""".stripMargin
+  }
+
   /** The oracle generates one CTE per iteration — same recurrence,
     * mechanically unrolled. */
   private def pagerankSql: String = {
     val base =
-      """WITH edges AS (
-        |  SELECT DISTINCT 's' || CAST(l_suppkey AS VARCHAR) AS src,
-        |         'p' || CAST(l_partkey AS VARCHAR) AS dst
-        |  FROM lineitem),
+      s"""WITH $supplierPartEdgesCte,
         |nodes AS (
         |  SELECT src AS node FROM edges
         |  UNION SELECT dst FROM edges),
@@ -465,22 +487,12 @@ object Graph {
         |r0 AS (SELECT node, (SELECT CAST(1 AS DOUBLE) / n FROM nc) AS r
         |       FROM nodes)""".stripMargin
     val iters = (1 to Iterations).map { i =>
-      val prev = s"r${i - 1}"
       // MATERIALIZED: each round is referenced 2-3x (dang, contrib, and
       // — for the final two rounds — the converged delta), so DuckDB's
       // default CTE inlining would re-expand the whole prefix chain per
       // reference (the q142 kcore lesson; observed as a disk-filling
       // spill once the delta sub-select added a second r4 reference)
-      s"""dang$i AS (
-         |  SELECT COALESCE(sum(r), CAST(0 AS DOUBLE)) AS m
-         |  FROM $prev LEFT JOIN outdeg USING (node)
-         |  WHERE outdeg.d IS NULL),
-         |contrib$i AS (
-         |  SELECT e.dst AS node, sum(p.r / o.d) AS c
-         |  FROM edges e
-         |  JOIN $prev p ON e.src = p.node
-         |  JOIN outdeg o ON e.src = o.node
-         |  GROUP BY 1),
+      s"""${roundFlowCtes(i)},
          |r$i AS MATERIALIZED (
          |  SELECT nodes.node,
          |         (SELECT (1 - CAST(0.85 AS DOUBLE)) / n FROM nc)

@@ -415,10 +415,7 @@ object Graph2 {
     * q138/q142 lesson). */
   private def pprSql: String = {
     val base =
-      s"""WITH edges AS (
-        |  SELECT DISTINCT 's' || CAST(l_suppkey AS VARCHAR) AS src,
-        |         'p' || CAST(l_partkey AS VARCHAR) AS dst
-        |  FROM lineitem),
+      s"""WITH ${Graph.supplierPartEdgesCte},
         |nodes AS (
         |  SELECT node,
         |         node LIKE 's%' AND
@@ -435,17 +432,7 @@ object Graph2 {
         |       FROM nodes),
         |r0 AS (SELECT node, is_seed, s, s AS r FROM sv)""".stripMargin
     val iters = (1 to PprIterations).map { i =>
-      val prev = s"r${i - 1}"
-      s"""dang$i AS (
-         |  SELECT COALESCE(sum(r), CAST(0 AS DOUBLE)) AS m
-         |  FROM $prev LEFT JOIN outdeg USING (node)
-         |  WHERE outdeg.d IS NULL),
-         |contrib$i AS (
-         |  SELECT e.dst AS node, sum(p.r / o.d) AS c
-         |  FROM edges e
-         |  JOIN $prev p ON e.src = p.node
-         |  JOIN outdeg o ON e.src = o.node
-         |  GROUP BY 1),
+      s"""${Graph.roundFlowCtes(i)},
          |r$i AS MATERIALIZED (
          |  SELECT sv.node, sv.is_seed, sv.s,
          |         (1 - CAST($Damping AS DOUBLE)) * sv.s
@@ -467,10 +454,7 @@ object Graph2 {
   /** HITS oracle: two MATERIALIZED CTEs (authority, hub) per sweep. */
   private def hitsSql: String = {
     val base =
-      """WITH edges AS (
-        |  SELECT DISTINCT 's' || CAST(l_suppkey AS VARCHAR) AS src,
-        |         'p' || CAST(l_partkey AS VARCHAR) AS dst
-        |  FROM lineitem),
+      s"""WITH ${Graph.supplierPartEdgesCte},
         |h0 AS (SELECT DISTINCT src AS node, CAST(1 AS DOUBLE) AS h
         |       FROM edges)""".stripMargin
     val iters = (1 to HitsIterations).map { i =>
@@ -505,19 +489,25 @@ object Graph2 {
        |ORDER BY kind ASC, score DESC, node ASC""".stripMargin
   }
 
+  /** The co-purchase graph q145 and q152 walk, as oracle CTEs: part
+    * pairs sharing at least [[Graph.MinSupport]] orders `edges` (p1,
+    * p2) and both directions of each `und` (u, v). */
+  private val coPurchaseCtes: String =
+    s"""pairs AS (
+      |  SELECT a.l_partkey AS p1, b.l_partkey AS p2, count(*) AS support
+      |  FROM lineitem a JOIN lineitem b
+      |    ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
+      |  GROUP BY 1, 2),
+      |edges AS (SELECT p1, p2 FROM pairs
+      |          WHERE support >= ${Graph.MinSupport}),
+      |und AS (SELECT p1 AS u, p2 AS v FROM edges
+      |        UNION ALL SELECT p2, p1 FROM edges)""".stripMargin
+
   /** BFS oracle: one MATERIALIZED distance CTE per round — exact
     * integer relaxation, bit-identical by construction. */
   private def bfsSql: String = {
     val base =
-      s"""WITH pairs AS (
-        |  SELECT a.l_partkey AS p1, b.l_partkey AS p2, count(*) AS support
-        |  FROM lineitem a JOIN lineitem b
-        |    ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-        |  GROUP BY 1, 2),
-        |edges AS (SELECT p1, p2 FROM pairs
-        |          WHERE support >= ${Graph.MinSupport}),
-        |und AS (SELECT p1 AS u, p2 AS v FROM edges
-        |        UNION ALL SELECT p2, p1 FROM edges),
+      s"""WITH $coPurchaseCtes,
         |nodes AS (SELECT DISTINCT u AS node FROM und),
         |d0 AS (SELECT node, 0 AS dist FROM nodes
         |       WHERE node % $BfsSeedStride = 0)""".stripMargin
@@ -542,15 +532,7 @@ object Graph2 {
     * salted-hash argmin over the frontier's neighbors. */
   private def walkSql: String = {
     val base =
-      s"""WITH pairs AS (
-        |  SELECT a.l_partkey AS p1, b.l_partkey AS p2, count(*) AS support
-        |  FROM lineitem a JOIN lineitem b
-        |    ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-        |  GROUP BY 1, 2),
-        |edges AS (SELECT p1, p2 FROM pairs
-        |          WHERE support >= ${Graph.MinSupport}),
-        |und AS (SELECT p1 AS u, p2 AS v FROM edges
-        |        UNION ALL SELECT p2, p1 FROM edges),
+      s"""WITH $coPurchaseCtes,
         |s0 AS (SELECT DISTINCT u AS walk, u AS node,
         |              CAST(u AS VARCHAR) AS path
         |       FROM und WHERE u % $WalkSeedStride = 0)""".stripMargin

@@ -193,10 +193,7 @@ object Graph3 {
   val defs: Seq[QueryDef] = Seq(
     QueryDef("q266_lpa_communities", q266LpaCommunities _, lpaSql),
     QueryDef("q269_assortativity", q269Assortativity _,
-      """WITH edges AS (
-        |  SELECT DISTINCT 's' || CAST(l_suppkey AS VARCHAR) AS src,
-        |         'p' || CAST(l_partkey AS VARCHAR) AS dst
-        |  FROM lineitem),
+      s"""WITH ${Graph.supplierPartEdgesCte},
         |und AS MATERIALIZED (
         |  SELECT src AS node, dst AS nbr FROM edges
         |  UNION ALL SELECT dst, src FROM edges),
@@ -273,10 +270,7 @@ object Graph3 {
     * next round's count AND the pick. */
   private def lpaSql: String = {
     val base =
-      """WITH edges AS (
-        |  SELECT DISTINCT 's' || CAST(l_suppkey AS VARCHAR) AS src,
-        |         'p' || CAST(l_partkey AS VARCHAR) AS dst
-        |  FROM lineitem),
+      s"""WITH ${Graph.supplierPartEdgesCte},
         |und AS MATERIALIZED (
         |  SELECT src AS node, dst AS nbr FROM edges
         |  UNION ALL SELECT dst, src FROM edges),

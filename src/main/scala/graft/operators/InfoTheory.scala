@@ -424,6 +424,28 @@ object InfoTheory {
       .orderBy("nation")
   }
 
+  /** The transition-surprisal model q241 and q244 share as oracle
+    * CTEs: each user's consecutive event `pairs` (user_id, event_type,
+    * next_type) and the micro-bit surprisal of each transition `model`
+    * (event_type, next_type, s_micro). */
+  private val surprisalCtes: String =
+    """pairs AS (
+      |  SELECT user_id, event_type, next_type
+      |  FROM (SELECT user_id, event_type,
+      |               lead(event_type) OVER (PARTITION BY user_id
+      |                 ORDER BY ts, event_id) AS next_type
+      |        FROM events)
+      |  WHERE next_type IS NOT NULL),
+      |model AS (
+      |  SELECT event_type, next_type,
+      |         CAST(round(-log2(CAST(n_ij AS DOUBLE)
+      |                          / CAST(n_i AS DOUBLE)) * 1e6, 0)
+      |              AS BIGINT) AS s_micro
+      |  FROM (SELECT event_type, next_type, count(*) AS n_ij,
+      |               CAST(sum(count(*)) OVER (PARTITION BY event_type)
+      |                    AS BIGINT) AS n_i
+      |        FROM pairs GROUP BY 1, 2))""".stripMargin
+
   val defs: Seq[QueryDef] = Seq(
     QueryDef("q341_engagement_diversity", q341EngagementDiversity _,
       """WITH per_ut AS (
@@ -499,22 +521,7 @@ object InfoTheory {
         |GROUP BY 1, 2
         |ORDER BY t.prev""".stripMargin),
     QueryDef("q241_surprisal_anomaly", q241SurprisalAnomaly _,
-      s"""WITH pairs AS (
-        |  SELECT user_id, event_type, next_type
-        |  FROM (SELECT user_id, event_type,
-        |               lead(event_type) OVER (PARTITION BY user_id
-        |                 ORDER BY ts, event_id) AS next_type
-        |        FROM events)
-        |  WHERE next_type IS NOT NULL),
-        |model AS (
-        |  SELECT event_type, next_type,
-        |         CAST(round(-log2(CAST(n_ij AS DOUBLE)
-        |                          / CAST(n_i AS DOUBLE)) * 1e6, 0)
-        |              AS BIGINT) AS s_micro
-        |  FROM (SELECT event_type, next_type, count(*) AS n_ij,
-        |               CAST(sum(count(*)) OVER (PARTITION BY event_type)
-        |                    AS BIGINT) AS n_i
-        |        FROM pairs GROUP BY 1, 2)),
+      s"""WITH $surprisalCtes,
         |scored AS (
         |  SELECT p.user_id, count(*) AS n_trans,
         |         CAST(sum(m.s_micro) AS BIGINT) AS s_sum
@@ -531,22 +538,7 @@ object InfoTheory {
     // the q166 equivalence class: the oracle is the plain FULL
     // recompute — hash equality proves incremental == full
     QueryDef("q244_incremental_surprisal", q244IncrementalSurprisal _,
-      """WITH pairs AS (
-        |  SELECT user_id, event_type, next_type
-        |  FROM (SELECT user_id, event_type,
-        |               lead(event_type) OVER (PARTITION BY user_id
-        |                 ORDER BY ts, event_id) AS next_type
-        |        FROM events)
-        |  WHERE next_type IS NOT NULL),
-        |model AS (
-        |  SELECT event_type, next_type,
-        |         CAST(round(-log2(CAST(n_ij AS DOUBLE)
-        |                          / CAST(n_i AS DOUBLE)) * 1e6, 0)
-        |              AS BIGINT) AS s_micro
-        |  FROM (SELECT event_type, next_type, count(*) AS n_ij,
-        |               CAST(sum(count(*)) OVER (PARTITION BY event_type)
-        |                    AS BIGINT) AS n_i
-        |        FROM pairs GROUP BY 1, 2))
+      s"""WITH $surprisalCtes
         |SELECT p.user_id, count(*) AS n_trans,
         |       round(CAST(CAST(sum(m.s_micro) AS BIGINT) AS DOUBLE)
         |             / CAST(count(*) AS DOUBLE) / 1e6, 6)

@@ -642,7 +642,7 @@ object Lifecycle {
     }.reduce(_ unionByName _)
     rows.crossJoin(broadcast(totalUsers))
       .select(col("milestone_k"), col("n_users"), col("n_reached"),
-        round(col("n_reached").cast("double") / col("n_users"), 6)
+        round(try_divide(col("n_reached").cast("double"), col("n_users")), 6)
           .as("reach_rate"),
         round(col("p50"), 4).as("p50_days"),
         round(col("p90"), 4).as("p90_days"))
@@ -984,6 +984,31 @@ object Lifecycle {
       .orderBy("week_offset")
   }
 
+  /** The churn frame q302 and q307 share as oracle CTEs: `users`
+    * (user_id, n1, n2) active in the first half of the event span,
+    * with first- and second-half event counts, and the n1 decile
+    * `edges`. */
+  private val churnCtes: String =
+    """ev AS (
+      |  SELECT epoch_us(CAST(ts AS TIMESTAMP)) AS us, user_id
+      |  FROM events),
+      |cut AS (SELECT (min(us) + max(us)) // 2 AS cut FROM ev),
+      |users AS (
+      |  SELECT user_id,
+      |         CAST(sum(CASE WHEN us < (SELECT cut FROM cut)
+      |                       THEN 1 ELSE 0 END) AS BIGINT) AS n1,
+      |         CAST(sum(CASE WHEN us >= (SELECT cut FROM cut)
+      |                       THEN 1 ELSE 0 END) AS BIGINT) AS n2
+      |  FROM ev GROUP BY 1
+      |  HAVING sum(CASE WHEN us < (SELECT cut FROM cut)
+      |             THEN 1 ELSE 0 END) > 0),
+      |edges AS (
+      |  SELECT list_transform(
+      |           quantile_cont(n1, [0.1, 0.2, 0.3, 0.4, 0.5,
+      |                              0.6, 0.7, 0.8, 0.9]),
+      |           e -> round(e, 6)) AS edges
+      |  FROM users)""".stripMargin
+
   val defs: Seq[QueryDef] = Seq(
     QueryDef("q345_events_data_card", q345EventsDataCard _,
       """WITH ev AS (
@@ -1183,25 +1208,7 @@ object Lifecycle {
         |               AS DOUBLE) / sum(n_ev), 6) AS new_volume_share
         |FROM put GROUP BY 1 ORDER BY 1""".stripMargin),
     QueryDef("q307_churn_wilson", q307ChurnWilson _,
-      s"""WITH ev AS (
-        |  SELECT epoch_us(CAST(ts AS TIMESTAMP)) AS us, user_id
-        |  FROM events),
-        |cut AS (SELECT (min(us) + max(us)) // 2 AS cut FROM ev),
-        |users AS (
-        |  SELECT user_id,
-        |         CAST(sum(CASE WHEN us < (SELECT cut FROM cut)
-        |                       THEN 1 ELSE 0 END) AS BIGINT) AS n1,
-        |         CAST(sum(CASE WHEN us >= (SELECT cut FROM cut)
-        |                       THEN 1 ELSE 0 END) AS BIGINT) AS n2
-        |  FROM ev GROUP BY 1
-        |  HAVING sum(CASE WHEN us < (SELECT cut FROM cut)
-        |             THEN 1 ELSE 0 END) > 0),
-        |edges AS (
-        |  SELECT list_transform(
-        |           quantile_cont(n1, [0.1, 0.2, 0.3, 0.4, 0.5,
-        |                              0.6, 0.7, 0.8, 0.9]),
-        |           e -> round(e, 6)) AS edges
-        |  FROM users),
+      s"""WITH $churnCtes,
         |bucketed AS (
         |  SELECT CAST(len(list_filter((SELECT edges FROM edges),
         |                              e -> u.n1 >= e)) AS INTEGER)
@@ -1232,25 +1239,7 @@ object Lifecycle {
         |      FROM agg)
         |ORDER BY bucket""".stripMargin),
     QueryDef("q302_churn_labels", q302ChurnLabels _,
-      """WITH ev AS (
-        |  SELECT epoch_us(CAST(ts AS TIMESTAMP)) AS us, user_id
-        |  FROM events),
-        |cut AS (SELECT (min(us) + max(us)) // 2 AS cut FROM ev),
-        |users AS (
-        |  SELECT user_id,
-        |         CAST(sum(CASE WHEN us < (SELECT cut FROM cut)
-        |                       THEN 1 ELSE 0 END) AS BIGINT) AS n1,
-        |         CAST(sum(CASE WHEN us >= (SELECT cut FROM cut)
-        |                       THEN 1 ELSE 0 END) AS BIGINT) AS n2
-        |  FROM ev GROUP BY 1
-        |  HAVING sum(CASE WHEN us < (SELECT cut FROM cut)
-        |             THEN 1 ELSE 0 END) > 0),
-        |edges AS (
-        |  SELECT list_transform(
-        |           quantile_cont(n1, [0.1, 0.2, 0.3, 0.4, 0.5,
-        |                              0.6, 0.7, 0.8, 0.9]),
-        |           e -> round(e, 6)) AS edges
-        |  FROM users),
+      s"""WITH $churnCtes,
         |bucketed AS (
         |  SELECT CAST(len(list_filter((SELECT edges FROM edges),
         |                              e -> u.n1 >= e)) AS INTEGER)

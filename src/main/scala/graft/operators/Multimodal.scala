@@ -445,6 +445,34 @@ object Multimodal {
       .orderBy("status")
   }
 
+  /** The frame index q391 and q392 share as oracle CTEs: the
+    * corpus with its planted re-encodes, each document's sampled frame
+    * hashes `frames`, the rare ones it keeps `kept` (doc_id, f) and its
+    * kept-frame count `sizes` (doc_id, nf). */
+  private val frameCtes: String =
+    s"""corpus AS (
+      |  SELECT doc_id, text FROM documents
+      |  UNION ALL
+      |  SELECT doc_id + $ReencOffset,
+      |         repeat('z', 16) || substr(text, 17)
+      |  FROM documents WHERE doc_id % 5 = 0),
+      |frames AS (
+      |  SELECT DISTINCT doc_id,
+      |         md5(substr(text, CAST(i AS INT) * 16 + 1, 16)) AS f
+      |  FROM (SELECT doc_id, text,
+      |               unnest(generate_series(0,
+      |                 CAST(ceil(length(text) / 16.0) AS BIGINT) - 1))
+      |                 AS i
+      |        FROM corpus)
+      |  WHERE i % 4 = 0),
+      |rare AS (
+      |  SELECT f FROM (SELECT f, count(DISTINCT doc_id) AS fdf
+      |                 FROM frames GROUP BY f)
+      |  WHERE fdf <= $FrameDfCap),
+      |kept AS (SELECT doc_id, f FROM frames JOIN rare USING (f)),
+      |sizes AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS nf
+      |          FROM kept GROUP BY doc_id)""".stripMargin
+
   val defs: Seq[QueryDef] = Seq(
     QueryDef("q43_multimodal_decode", q43MultimodalDecode _,
       """SELECT doc_id,
@@ -564,28 +592,7 @@ object Multimodal {
          |  HAVING count(*) >= 2 AND count(DISTINCT img) > 1)
          |ORDER BY modality, group_key""".stripMargin),
     QueryDef("q391_video_frame_dedup", q391VideoFrameDedup _,
-      s"""WITH corpus AS (
-         |  SELECT doc_id, text FROM documents
-         |  UNION ALL
-         |  SELECT doc_id + $ReencOffset,
-         |         repeat('z', 16) || substr(text, 17)
-         |  FROM documents WHERE doc_id % 5 = 0),
-         |frames AS (
-         |  SELECT DISTINCT doc_id,
-         |         md5(substr(text, CAST(i AS INT) * 16 + 1, 16)) AS f
-         |  FROM (SELECT doc_id, text,
-         |               unnest(generate_series(0,
-         |                 CAST(ceil(length(text) / 16.0) AS BIGINT) - 1))
-         |                 AS i
-         |        FROM corpus)
-         |  WHERE i % 4 = 0),
-         |rare AS (
-         |  SELECT f FROM (SELECT f, count(DISTINCT doc_id) AS fdf
-         |                 FROM frames GROUP BY f)
-         |  WHERE fdf <= $FrameDfCap),
-         |kept AS (SELECT doc_id, f FROM frames JOIN rare USING (f)),
-         |sizes AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS nf
-         |          FROM kept GROUP BY doc_id),
+      s"""WITH $frameCtes,
          |shared AS (
          |  SELECT a.doc_id AS id1, b.doc_id AS id2,
          |         CAST(count(*) AS BIGINT) AS n_shared
@@ -602,28 +609,7 @@ object Multimodal {
          |      >= $FrameOverlapNum * least(s1.nf, s2.nf)
          |ORDER BY id1, id2""".stripMargin),
     QueryDef("q392_video_dedup_recall", q392VideoDedupRecall _,
-      s"""WITH corpus AS (
-         |  SELECT doc_id, text FROM documents
-         |  UNION ALL
-         |  SELECT doc_id + $ReencOffset,
-         |         repeat('z', 16) || substr(text, 17)
-         |  FROM documents WHERE doc_id % 5 = 0),
-         |frames AS (
-         |  SELECT DISTINCT doc_id,
-         |         md5(substr(text, CAST(i AS INT) * 16 + 1, 16)) AS f
-         |  FROM (SELECT doc_id, text,
-         |               unnest(generate_series(0,
-         |                 CAST(ceil(length(text) / 16.0) AS BIGINT) - 1))
-         |                 AS i
-         |        FROM corpus)
-         |  WHERE i % 4 = 0),
-         |rare AS (
-         |  SELECT f FROM (SELECT f, count(DISTINCT doc_id) AS fdf
-         |                 FROM frames GROUP BY f)
-         |  WHERE fdf <= $FrameDfCap),
-         |kept AS (SELECT doc_id, f FROM frames JOIN rare USING (f)),
-         |sizes AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS nf
-         |          FROM kept GROUP BY doc_id),
+      s"""WITH $frameCtes,
          |planted AS (SELECT doc_id AS orig_id FROM documents
          |            WHERE doc_id % 5 = 0),
          |pshared AS (

@@ -357,20 +357,27 @@ object Similarity {
   }
 
 
+  /** Oracle CTEs of the exact brute scoring behind q36: the query
+    * batch `qsel`, coordinates `ex`, vector norms `norms` (vec_id, nrm)
+    * and every query's raw dot with each other vector `dots` (qid, cid,
+    * dot); q311, q131 and q170 read it too. */
+  private[operators] val bruteDotsCtes: String =
+    s"""$QselCte,
+      |ex AS (
+      |  SELECT vec_id, CAST(unnest(embedding) AS DOUBLE) AS x,
+      |         generate_subscripts(embedding, 1) AS i
+      |  FROM embeddings),
+      |norms AS (SELECT vec_id, sqrt(sum(x * x)) AS nrm FROM ex GROUP BY 1),
+      |dots AS (
+      |  SELECT a.vec_id AS qid, b.vec_id AS cid, sum(a.x * b.x) AS dot
+      |  FROM ex a JOIN ex b ON a.i = b.i
+      |                     AND a.vec_id IN (SELECT vec_id FROM qsel)
+      |                     AND a.vec_id <> b.vec_id
+      |  GROUP BY 1, 2)""".stripMargin
+
   val defs: Seq[QueryDef] = Seq(
     QueryDef("q311_ild_audit", q311IldAudit _,
-      s"""WITH $QselCte,
-        |ex AS (
-        |  SELECT vec_id, CAST(unnest(embedding) AS DOUBLE) AS x,
-        |         generate_subscripts(embedding, 1) AS i
-        |  FROM embeddings),
-        |norms AS (SELECT vec_id, sqrt(sum(x * x)) AS nrm FROM ex GROUP BY 1),
-        |dots AS (
-        |  SELECT a.vec_id AS qid, b.vec_id AS cid, sum(a.x * b.x) AS dot
-        |  FROM ex a JOIN ex b ON a.i = b.i
-        |                     AND a.vec_id IN (SELECT vec_id FROM qsel)
-        |                     AND a.vec_id <> b.vec_id
-        |  GROUP BY 1, 2),
+      s"""WITH $bruteDotsCtes,
         |ranked AS (
         |  SELECT qid, cid,
         |         row_number() OVER (PARTITION BY qid
@@ -449,18 +456,7 @@ object Similarity {
         |             / CAST(a.mu2 AS DOUBLE), 6) AS dominant_share
         |FROM rows_ r, dim_agg a, dom d""".stripMargin),
     QueryDef("q36_ann_brute_topk", q36AnnBruteTopK _,
-      s"""WITH $QselCte,
-        |ex AS (
-        |  SELECT vec_id, CAST(unnest(embedding) AS DOUBLE) AS x,
-        |         generate_subscripts(embedding, 1) AS i
-        |  FROM embeddings),
-        |norms AS (SELECT vec_id, sqrt(sum(x * x)) AS nrm FROM ex GROUP BY 1),
-        |dots AS (
-        |  SELECT a.vec_id AS qid, b.vec_id AS cid, sum(a.x * b.x) AS dot
-        |  FROM ex a JOIN ex b ON a.i = b.i
-        |                     AND a.vec_id IN (SELECT vec_id FROM qsel)
-        |                     AND a.vec_id <> b.vec_id
-        |  GROUP BY 1, 2),
+      s"""WITH $bruteDotsCtes,
         |scored AS (
         |  SELECT qid, cid,
         |         round(dot / (n1.nrm * n2.nrm), 6) AS cosine

@@ -100,8 +100,12 @@ object SketchAlgebra {
         Hashing.md5Hash60(concat(lit("kmv:"), col("user_id"))).as("h"))
     val perType = hashed.groupBy(col("event_type").as("scope"))
       .agg(kmv(col("h")).as("sk"))
+    // a global fold over no events still yields one, empty, sketch; the
+    // oracle has no scope without a hash, so that row is dropped before
+    // `element_at(sk, -1)` can read past its end
     val union = perType.select(explode(col("sk")).as("h"))
       .agg(kmv(col("h")).as("sk"))
+      .filter(size(col("sk")) > 0)
       .select(lit("__all").as("scope"), col("sk"))
     val sketches = perType.unionByName(union)
     val exact = hashed.groupBy(col("event_type").as("scope"))

@@ -46,18 +46,9 @@ object TextEncode {
     var vocab = docWords.select("w").distinct()
       .withColumn("syms", split(col("w"), ""))
       .localCheckpoint()
-    for ((_, l, r, _) <- merges) {
-      val merged = l + r
-      vocab = vocab.withColumn("syms",
-        aggregate(col("syms"), array().cast("array<string>"),
-          (acc, x) =>
-            when(size(acc) > 0 &&
-                element_at(acc, -1) === lit(l) && x === lit(r),
-              concat(slice(acc, lit(1), size(acc) - 1),
-                array(lit(merged))))
-              .otherwise(concat(acc, array(x)))))
+    for ((_, l, r, _) <- merges)
+      vocab = vocab.withColumn("syms", TextOps.applyMerge(col("syms"), l, r))
         .localCheckpoint()
-    }
     docWords
       .join(vocab.select(col("w"), size(col("syms")).as("n_toks")),
         Seq("w"))

@@ -394,21 +394,24 @@ object TextOps {
         val (l, r, cnt) =
           (top.head.getString(0), top.head.getString(1), top.head.getLong(2))
         merges += ((rank, l, r, cnt))
-        val merged = l + r
-        words = words.withColumn("syms",
-          aggregate(col("syms"), array().cast("array<string>"),
-            (acc, x) =>
-              when(size(acc) > 0 &&
-                  element_at(acc, -1) === lit(l) && x === lit(r),
-                concat(slice(acc, lit(1), size(acc) - 1),
-                  array(lit(merged))))
-                .otherwise(concat(acc, array(x)))))
+        words = words.withColumn("syms", applyMerge(col("syms"), l, r))
           .localCheckpoint()
         rank += 1
       }
     }
     (merges.result(), before, tokens(words))
   }
+
+  /** One BPE merge over a symbol array: each adjacent (l, r) pair, in
+    * one left-to-right pass, becomes the symbol l + r. Training (q137)
+    * and encoding (q149, [[TextEncode]]) apply merges with it. */
+  private[operators] def applyMerge(syms: Column, l: String, r: String): Column =
+    aggregate(syms, array().cast("array<string>"),
+      (acc, x) =>
+        when(size(acc) > 0 &&
+            element_at(acc, -1) === lit(l) && x === lit(r),
+          concat(slice(acc, lit(1), size(acc) - 1), array(lit(l + r))))
+          .otherwise(concat(acc, array(x))))
 
   /** The trained tokenizer, built once per (session, dir): q137
     * reports it, q149 (TextEncode) applies it. Timed as its own bench
@@ -539,6 +542,37 @@ object TextOps {
         round(col("macro_f1"), 6).as("macro_f1"))
       .orderBy("cls")
   }
+
+  /** Oracle CTEs of the space-split term frequencies: `tokens` (doc_id,
+    * word) and `tf` (doc_id, word, tf). */
+  private val termFreqCtes: String =
+    """tokens AS (
+      |  SELECT doc_id, unnest(string_split(trim(text), ' ')) AS word
+      |  FROM documents),
+      |tf AS (
+      |  SELECT doc_id, word, count(*) AS tf
+      |  FROM tokens GROUP BY doc_id, word)""".stripMargin
+
+  /** q96's lexical BM25 arm as oracle CTEs: `scored` (doc_id, bm25,
+    * n_matched_terms) for the three highest-df query terms `qt`; q120
+    * ([[AnnRetrieval]]) fuses it with the vector arm. */
+  private[operators] val bm25Ctes: String =
+    s"""$termFreqCtes,
+      |dl AS (SELECT doc_id, CAST(sum(tf) AS BIGINT) AS dl
+      |       FROM tf GROUP BY doc_id),
+      |stats AS (SELECT count(*) AS n_docs, avg(dl) AS avgdl FROM dl),
+      |dfreq AS (SELECT word, count(*) AS df FROM tf GROUP BY word),
+      |qt AS (SELECT word, df FROM dfreq ORDER BY df DESC, word LIMIT 3),
+      |scored AS (
+      |  SELECT t.doc_id,
+      |         round(sum(ln((n_docs - q.df + 0.5) / (q.df + 0.5) + 1.0)
+      |               * (t.tf * (1.2 + 1)) /
+      |                 (t.tf + 1.2 * (1 - 0.75 + 0.75 * d.dl / avgdl))),
+      |               4) AS bm25,
+      |         count(*) AS n_matched_terms
+      |  FROM tf t JOIN qt q USING (word) JOIN dl d USING (doc_id)
+      |  CROSS JOIN stats
+      |  GROUP BY t.doc_id)""".stripMargin
 
   val defs: Seq[QueryDef] = Seq(
     QueryDef("q256_class_report", q256ClassReport _,
@@ -692,12 +726,7 @@ object TextOps {
         |FROM documents d LEFT JOIN agg USING (doc_id)
         |ORDER BY doc_id""".stripMargin),
     QueryDef("q111_lm_surprisal", q111LmSurprisal _,
-      """WITH tokens AS (
-        |  SELECT doc_id, unnest(string_split(trim(text), ' ')) AS word
-        |  FROM documents),
-        |tf AS (
-        |  SELECT doc_id, word, count(*) AS tf
-        |  FROM tokens GROUP BY doc_id, word),
+      s"""WITH $termFreqCtes,
         |vocab AS (SELECT word, CAST(sum(tf) AS BIGINT) AS ctf
         |          FROM tf GROUP BY word),
         |tot AS (SELECT CAST(sum(ctf) AS BIGINT) AS t_total FROM vocab),
@@ -711,27 +740,7 @@ object TextOps {
         |       round(bits / n_tokens, 4) AS avg_surprisal_bits
         |FROM agg ORDER BY doc_id""".stripMargin),
     QueryDef("q96_bm25", q96Bm25 _,
-      """WITH tokens AS (
-        |  SELECT doc_id, unnest(string_split(trim(text), ' ')) AS word
-        |  FROM documents),
-        |tf AS (
-        |  SELECT doc_id, word, count(*) AS tf
-        |  FROM tokens GROUP BY doc_id, word),
-        |dl AS (SELECT doc_id, CAST(sum(tf) AS BIGINT) AS dl
-        |       FROM tf GROUP BY doc_id),
-        |stats AS (SELECT count(*) AS n_docs, avg(dl) AS avgdl FROM dl),
-        |dfreq AS (SELECT word, count(*) AS df FROM tf GROUP BY word),
-        |qt AS (SELECT word, df FROM dfreq ORDER BY df DESC, word LIMIT 3),
-        |scored AS (
-        |  SELECT t.doc_id,
-        |         round(sum(ln((n_docs - q.df + 0.5) / (q.df + 0.5) + 1.0)
-        |               * (t.tf * (1.2 + 1)) /
-        |                 (t.tf + 1.2 * (1 - 0.75 + 0.75 * d.dl / avgdl))),
-        |               4) AS bm25,
-        |         count(*) AS n_matched_terms
-        |  FROM tf t JOIN qt q USING (word) JOIN dl d USING (doc_id)
-        |  CROSS JOIN stats
-        |  GROUP BY t.doc_id),
+      s"""WITH $bm25Ctes,
         |top AS (SELECT doc_id, bm25, n_matched_terms FROM scored
         |        ORDER BY bm25 DESC, doc_id LIMIT 20)
         |SELECT CAST(row_number() OVER (ORDER BY bm25 DESC, doc_id) AS INT)
@@ -739,12 +748,7 @@ object TextOps {
         |       doc_id, bm25, n_matched_terms
         |FROM top ORDER BY rank""".stripMargin),
     QueryDef("q86_tfidf", q86Tfidf _,
-      """WITH tokens AS (
-        |  SELECT doc_id, unnest(string_split(trim(text), ' ')) AS word
-        |  FROM documents),
-        |tf AS (
-        |  SELECT doc_id, word, count(*) AS tf
-        |  FROM tokens GROUP BY doc_id, word),
+      s"""WITH $termFreqCtes,
         |dfreq AS (SELECT word, count(*) AS df FROM tf GROUP BY word),
         |n AS (SELECT count(*) AS n_docs FROM documents),
         |scored AS (
@@ -760,12 +764,7 @@ object TextOps {
         |SELECT doc_id, rnk, word, score FROM ranked
         |WHERE rnk <= 3 ORDER BY doc_id, rnk""".stripMargin),
     QueryDef("q87_entropy", q87Entropy _,
-      """WITH tokens AS (
-        |  SELECT doc_id, unnest(string_split(trim(text), ' ')) AS word
-        |  FROM documents),
-        |tf AS (
-        |  SELECT doc_id, word, count(*) AS tf
-        |  FROM tokens GROUP BY doc_id, word),
+      s"""WITH $termFreqCtes,
         |agg AS (
         |  SELECT doc_id, CAST(sum(tf) AS BIGINT) AS n_tokens,
         |         count(*) AS n_distinct,

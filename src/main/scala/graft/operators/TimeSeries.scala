@@ -468,6 +468,22 @@ object TimeSeries {
       .orderBy("event_type")
   }
 
+  /** Oracle CTEs of the per-type daily event counts on a day index:
+    * `ev` (event_type, date `dd`), the first day `d0`, and `daily`
+    * (event_type, `day` = days since d0, n = `count`, the count's SQL). */
+  private[operators] def dayIndexCtes(count: String = "count(*)",
+      day: String = "day"): String =
+    s"""ev AS (
+      |  SELECT event_type, CAST(CAST(ts AS TIMESTAMP) AS DATE) AS dd
+      |  FROM events),
+      |d0 AS (SELECT min(dd) AS d0 FROM ev),
+      |daily AS (
+      |  SELECT event_type,
+      |         CAST(date_diff('day', (SELECT d0 FROM d0), dd) AS BIGINT)
+      |           AS $day,
+      |         $count AS n
+      |  FROM ev GROUP BY 1, 2)""".stripMargin
+
   /** Oracle CTE text of [[dailyIdx]]: `daily` (events per type and
     * day) and `idx` (each day's 1-based position `k` in its type's
     * series, the prefix sum `slft`, and the series' `s`, `n` and sum
@@ -493,16 +509,7 @@ object TimeSeries {
     QueryDef("q261_ewma", q261Ewma _,
       {
       val w6List = s"[${EwmaW6.mkString(", ")}]"
-      s"""WITH ev AS (
-        |  SELECT event_type, CAST(CAST(ts AS TIMESTAMP) AS DATE) AS dd
-        |  FROM events),
-        |d0 AS (SELECT min(dd) AS d0 FROM ev),
-        |daily AS (
-        |  SELECT event_type,
-        |         CAST(date_diff('day', (SELECT d0 FROM d0), dd) AS BIGINT)
-        |           AS day,
-        |         count(*) AS n
-        |  FROM ev GROUP BY 1, 2),
+      s"""WITH ${dayIndexCtes()},
         |md AS (SELECT max(day) AS max_day FROM daily),
         |contrib AS (
         |  SELECT d.event_type, d.day + t.j AS tday,

@@ -33,14 +33,11 @@ object TimeSeries2 {
 
   private val HourUs = 3600000000L
 
-  /** q175 — calendar gap-fill to an hourly grid: build the dense
-    * (event_type × hour) spine spanning the corpus, left-join the
-    * observed hourly counts, zero-fill the holes, carry the last
-    * observed count forward (the imputation a monitor plots), and flag
-    * the gaps. q90 forward-fills over EXISTING rows; this operator
-    * materializes the missing ones — the step q90 cannot express.
-    * Spine size is #types × #hours regardless of event count. */
-  def q175GapFill(spark: SparkSession, dir: String): DataFrame = {
+  /** The hourly spine q175 and q246 share: every (event_type, hour
+    * index `hidx`) from the first to the last observed hour, with the
+    * grid origin `h0` (µs) and the observed count `n_obs` (NULL on a
+    * gap). */
+  private def hourlyGrid(spark: SparkSession, dir: String): DataFrame = {
     val ev = Tables.events(spark, dir)
       .select(col("event_type"),
         unix_micros(date_trunc("hour", col("ts"))).as("hus"))
@@ -54,9 +51,20 @@ object TimeSeries2 {
       .select(col("h0"), explode(sequence(lit(0L),
         ((col("hmax") - col("h0")) / HourUs).cast("long"))).as("hidx"))
       .crossJoin(broadcast(types))
+    spine.join(hourly, Seq("event_type", "hidx"), "left")
+  }
+
+  /** q175 — calendar gap-fill to an hourly grid: build the dense
+    * (event_type × hour) spine spanning the corpus, left-join the
+    * observed hourly counts, zero-fill the holes, carry the last
+    * observed count forward (the imputation a monitor plots), and flag
+    * the gaps. q90 forward-fills over EXISTING rows; this operator
+    * materializes the missing ones — the step q90 cannot express.
+    * Spine size is #types × #hours regardless of event count. */
+  def q175GapFill(spark: SparkSession, dir: String): DataFrame = {
     val w = Window.partitionBy("event_type").orderBy("hidx")
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    spine.join(hourly, Seq("event_type", "hidx"), "left")
+    hourlyGrid(spark, dir)
       .withColumn("carried_n",
         last(col("n_obs"), ignoreNulls = true).over(w))
       .select(col("event_type"),
@@ -299,24 +307,11 @@ object TimeSeries2 {
     * #types × #hours regardless of event count, and both
     * neighbor-windows run per type over that calendar-bounded spine. */
   def q246LinearInterpolate(spark: SparkSession, dir: String): DataFrame = {
-    val ev = Tables.events(spark, dir)
-      .select(col("event_type"),
-        unix_micros(date_trunc("hour", col("ts"))).as("hus"))
-    val bounds = ev.agg(min(col("hus")).as("h0"), max(col("hus")).as("hmax"))
-    val hourly = ev.crossJoin(broadcast(bounds))
-      .select(col("event_type"), ((col("hus") - col("h0")) / HourUs)
-        .cast("long").as("hidx"))
-      .groupBy("event_type", "hidx").agg(count(lit(1)).as("n_obs"))
-    val types = ev.select("event_type").distinct()
-    val spine = bounds
-      .select(col("h0"), explode(sequence(lit(0L),
-        ((col("hmax") - col("h0")) / HourUs).cast("long"))).as("hidx"))
-      .crossJoin(broadcast(types))
     val wPrev = Window.partitionBy("event_type").orderBy("hidx")
       .rowsBetween(Window.unboundedPreceding, -1)
     val wNext = Window.partitionBy("event_type").orderBy("hidx")
       .rowsBetween(1, Window.unboundedFollowing)
-    val grid = spine.join(hourly, Seq("event_type", "hidx"), "left")
+    val grid = hourlyGrid(spark, dir)
       .withColumn("obs_h",
         when(col("n_obs").isNotNull, col("hidx")))
       .withColumn("prev_h", last(col("obs_h"), ignoreNulls = true)
@@ -816,20 +811,18 @@ object TimeSeries2 {
       .orderBy("event_type")
   }
 
-  /** Shared oracle CTE chain for the q294/q299 decomposition frame:
-    * ends at `q(event_type, day, y, qdetr, qresid, qdeseas)`. */
-  private val decompCte: String =
-    """ev AS (
-      |  SELECT event_type, CAST(CAST(ts AS TIMESTAMP) AS DATE) AS dd
-      |  FROM events),
-      |d0 AS (SELECT min(dd) AS d0 FROM ev),
-      |daily AS (
-      |  SELECT event_type,
-      |         CAST(date_diff('day', (SELECT d0 FROM d0), dd) AS BIGINT)
-      |           AS day,
-      |         CAST(count(*) AS BIGINT) AS n
-      |  FROM ev GROUP BY 1, 2),
-      |md AS (SELECT max(day) AS max_day FROM daily),
+  /** Oracle CTEs of the per-type daily counts with exact BIGINT `n`
+    * and the last day index `md`; q293 and the decomposition chain
+    * below read them. */
+  private val dailyCountsCtes: String =
+    s"""${TimeSeries.dayIndexCtes("CAST(count(*) AS BIGINT)")},
+      |md AS (SELECT max(day) AS max_day FROM daily)""".stripMargin
+
+  /** The seasonal decomposition q294 and q299 share: the dense
+    * (type × day) `spine`, its centered 7-day sums `ma`, the detrended
+    * `valid` days and the weekday means `sdow`. */
+  private val seasonalCtes: String =
+    s"""$dailyCountsCtes,
       |spine AS (
       |  SELECT t.event_type, g.day,
       |         CAST(COALESCE(d.n, 0) AS BIGINT) AS y
@@ -852,17 +845,7 @@ object TimeSeries2 {
       |sdow AS (
       |  SELECT event_type, dow,
       |         CAST(sum(det7) AS DOUBLE) / (7 * count(*)) AS sdow
-      |  FROM valid GROUP BY 1, 2),
-      |q AS (
-      |  SELECT v.event_type, v.day, v.y,
-      |         CAST(round(v.det7 / 7.0 * 1000000, 0) AS BIGINT)
-      |           AS qdetr,
-      |         CAST(round((v.det7 / 7.0 - s.sdow) * 1000000, 0)
-      |           AS BIGINT) AS qresid,
-      |         CAST(round((v.y - s.sdow) * 1000000, 0) AS BIGINT)
-      |           AS qdeseas
-      |  FROM valid v JOIN sdow s
-      |    ON s.event_type = v.event_type AND s.dow = v.dow)""".stripMargin
+      |  FROM valid GROUP BY 1, 2)""".stripMargin
 
   val defs: Seq[QueryDef] = Seq(
     QueryDef("q322_load_profile", q322LoadProfile _,
@@ -885,7 +868,17 @@ object TimeSeries2 {
         |FROM ranked WHERE rn = 1 ORDER BY event_type""".stripMargin
         .replace("ranked_src", "hourly")),
     QueryDef("q299_decomposition_anomalies", q299DecompositionAnomalies _,
-      s"""WITH $decompCte,
+      s"""WITH $seasonalCtes,
+        |q AS (
+        |  SELECT v.event_type, v.day, v.y,
+        |         CAST(round(v.det7 / 7.0 * 1000000, 0) AS BIGINT)
+        |           AS qdetr,
+        |         CAST(round((v.det7 / 7.0 - s.sdow) * 1000000, 0)
+        |           AS BIGINT) AS qresid,
+        |         CAST(round((v.y - s.sdow) * 1000000, 0) AS BIGINT)
+        |           AS qdeseas
+        |  FROM valid v JOIN sdow s
+        |    ON s.event_type = v.event_type AND s.dow = v.dow),
         |mom AS (
         |  SELECT event_type,
         |         sqrt((CAST(sum(CAST(qresid AS HUGEINT) * qresid)
@@ -904,40 +897,7 @@ object TimeSeries2 {
         |  AND abs(CAST(q.qresid AS DOUBLE) / m.sigma_mu) > $AnomalySigma
         |ORDER BY q.event_type, day""".stripMargin),
     QueryDef("q294_seasonal_strength", q294SeasonalStrength _,
-      """WITH ev AS (
-        |  SELECT event_type, CAST(CAST(ts AS TIMESTAMP) AS DATE) AS dd
-        |  FROM events),
-        |d0 AS (SELECT min(dd) AS d0 FROM ev),
-        |daily AS (
-        |  SELECT event_type,
-        |         CAST(date_diff('day', (SELECT d0 FROM d0), dd) AS BIGINT)
-        |           AS day,
-        |         CAST(count(*) AS BIGINT) AS n
-        |  FROM ev GROUP BY 1, 2),
-        |md AS (SELECT max(day) AS max_day FROM daily),
-        |spine AS (
-        |  SELECT t.event_type, g.day,
-        |         CAST(COALESCE(d.n, 0) AS BIGINT) AS y
-        |  FROM (SELECT DISTINCT event_type FROM daily) t
-        |  CROSS JOIN (SELECT unnest(generate_series(0,
-        |                (SELECT max_day FROM md))) AS day) g
-        |  LEFT JOIN daily d ON d.event_type = t.event_type
-        |                   AND d.day = g.day),
-        |ma AS (
-        |  SELECT event_type, day, y,
-        |         CAST(sum(y) OVER (PARTITION BY event_type ORDER BY day
-        |           ROWS BETWEEN 3 PRECEDING AND 3 FOLLOWING) AS BIGINT)
-        |           AS sum7
-        |  FROM spine),
-        |valid AS (
-        |  SELECT event_type, day, y, y * 7 - sum7 AS det7,
-        |         day % 7 AS dow
-        |  FROM ma
-        |  WHERE day >= 3 AND day <= (SELECT max_day FROM md) - 3),
-        |sdow AS (
-        |  SELECT event_type, dow,
-        |         CAST(sum(det7) AS DOUBLE) / (7 * count(*)) AS sdow
-        |  FROM valid GROUP BY 1, 2),
+      s"""WITH $seasonalCtes,
         |q AS (
         |  SELECT v.event_type,
         |         CAST(round(v.det7 / 7.0 * 1000000, 0) AS BIGINT)
@@ -984,17 +944,7 @@ object TimeSeries2 {
       val k2List = s"[${BrownK2.mkString(", ")}]"
       val w1 = BrownK.sum
       val w2 = BrownK2.sum
-      s"""WITH ev AS (
-        |  SELECT event_type, CAST(CAST(ts AS TIMESTAMP) AS DATE) AS dd
-        |  FROM events),
-        |d0 AS (SELECT min(dd) AS d0 FROM ev),
-        |daily AS (
-        |  SELECT event_type,
-        |         CAST(date_diff('day', (SELECT d0 FROM d0), dd) AS BIGINT)
-        |           AS day,
-        |         CAST(count(*) AS BIGINT) AS n
-        |  FROM ev GROUP BY 1, 2),
-        |md AS (SELECT max(day) AS max_day FROM daily),
+      s"""WITH $dailyCountsCtes,
         |contrib AS (
         |  SELECT d.event_type, d.day + t.j AS tday,
         |         d.n * $k1List[t.j + 1] AS wn1,
@@ -1041,16 +991,7 @@ object TimeSeries2 {
         |FROM agg ORDER BY event_type""".stripMargin
     }),
     QueryDef("q275_burst_episodes", q275BurstEpisodes _,
-      s"""WITH ev AS (
-        |  SELECT event_type, CAST(CAST(ts AS TIMESTAMP) AS DATE) AS dd
-        |  FROM events),
-        |d0 AS (SELECT min(dd) AS d0 FROM ev),
-        |daily AS (
-        |  SELECT event_type,
-        |         CAST(date_diff('day', (SELECT d0 FROM d0), dd) AS BIGINT)
-        |           AS day,
-        |         count(*) AS n
-        |  FROM ev GROUP BY 1, 2),
+      s"""WITH ${TimeSeries.dayIndexCtes()},
         |med AS (
         |  SELECT event_type,
         |         quantile_cont(CAST(n AS DOUBLE), 0.5) AS med
@@ -1075,16 +1016,7 @@ object TimeSeries2 {
     QueryDef("q268_periodogram", q268Periodogram _,
       {
       def lst(xs: Seq[Long]) = s"[${xs.mkString(", ")}]"
-      s"""WITH ev AS (
-        |  SELECT event_type, CAST(CAST(ts AS TIMESTAMP) AS DATE) AS dd
-        |  FROM events),
-        |d0 AS (SELECT min(dd) AS d0 FROM ev),
-        |daily AS (
-        |  SELECT event_type,
-        |         CAST(date_diff('day', (SELECT d0 FROM d0), dd) AS BIGINT)
-        |           AS day,
-        |         count(*) AS n
-        |  FROM ev GROUP BY 1, 2),
+      s"""WITH ${TimeSeries.dayIndexCtes()},
         |withp AS (
         |  SELECT event_type, day, n,
         |         unnest(${lst(SeasonPeriods.map(_.toLong))}) AS p
@@ -1124,16 +1056,7 @@ object TimeSeries2 {
         |FROM xy ORDER BY event_type, period""".stripMargin
     }),
     QueryDef("q271_forecast_backtest", q271ForecastBacktest _,
-      """WITH ev AS (
-        |  SELECT event_type, CAST(CAST(ts AS TIMESTAMP) AS DATE) AS dd
-        |  FROM events),
-        |d0 AS (SELECT min(dd) AS d0 FROM ev),
-        |daily AS (
-        |  SELECT event_type,
-        |         CAST(date_diff('day', (SELECT d0 FROM d0), dd) AS BIGINT)
-        |           AS day,
-        |         count(*) AS n
-        |  FROM ev GROUP BY 1, 2),
+      s"""WITH ${TimeSeries.dayIndexCtes()},
         |ev_l AS (
         |  SELECT d.event_type, d.n, a.n AS l1, b.n AS l7
         |  FROM daily d
@@ -1155,16 +1078,7 @@ object TimeSeries2 {
         |            ELSE 'tie' END AS winner
         |FROM agg ORDER BY event_type""".stripMargin),
     QueryDef("q252_cusum", q252Cusum _,
-      """WITH ev AS (
-        |  SELECT event_type, CAST(CAST(ts AS TIMESTAMP) AS DATE) AS dd
-        |  FROM events),
-        |d0 AS (SELECT min(dd) AS d0 FROM ev),
-        |daily AS (
-        |  SELECT event_type,
-        |         CAST(date_diff('day', (SELECT d0 FROM d0), dd) AS BIGINT)
-        |           AS day,
-        |         count(*) AS n
-        |  FROM ev GROUP BY 1, 2),
+      s"""WITH ${TimeSeries.dayIndexCtes()},
         |mid AS (SELECT (min(day) + max(day)) // 2 AS mid FROM daily),
         |mu AS (
         |  SELECT event_type,
@@ -1269,16 +1183,7 @@ object TimeSeries2 {
         |       END AS interp
         |FROM nb ORDER BY event_type, ts_hour""".stripMargin),
     QueryDef("q236_mann_kendall", q236MannKendall _,
-      s"""WITH ev AS (
-        |  SELECT event_type, CAST(CAST(ts AS TIMESTAMP) AS DATE) AS dd
-        |  FROM events),
-        |d0 AS (SELECT min(dd) AS d0 FROM ev),
-        |daily AS (
-        |  SELECT event_type,
-        |         CAST(date_diff('day', (SELECT d0 FROM d0), dd) AS BIGINT)
-        |           AS d,
-        |         count(*) AS n
-        |  FROM ev GROUP BY 1, 2),
+      s"""WITH ${TimeSeries.dayIndexCtes(day = "d")},
         |s_fold AS (
         |  SELECT a.event_type, count(*) AS n_pairs,
         |         CAST(sum(CASE WHEN b.n > a.n THEN 1
@@ -1313,16 +1218,7 @@ object TimeSeries2 {
         |            ELSE 'none' END AS trend
         |FROM z ORDER BY event_type""".stripMargin),
     QueryDef("q194_theil_sen", q194TheilSen _,
-      """WITH ev AS (
-        |  SELECT event_type, CAST(CAST(ts AS TIMESTAMP) AS DATE) AS dd
-        |  FROM events),
-        |d0 AS (SELECT min(dd) AS d0 FROM ev),
-        |daily AS (
-        |  SELECT event_type,
-        |         CAST(date_diff('day', (SELECT d0 FROM d0), dd) AS BIGINT)
-        |           AS d,
-        |         count(*) AS n
-        |  FROM ev GROUP BY 1, 2),
+      s"""WITH ${TimeSeries.dayIndexCtes(day = "d")},
         |slopes AS (
         |  SELECT a.event_type,
         |         CAST(b.n - a.n AS DOUBLE) / (b.d - a.d) AS slope

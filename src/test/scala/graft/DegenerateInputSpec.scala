@@ -37,7 +37,16 @@ class DegenerateInputSpec extends SparkTestBase {
     // relative error against 0 actual rows is NULL
     "q381_sample_cardinality" ->
       Seq("part_and_supplier", "part_filter", "supplier_filter")
-        .map(Row(_, 0L, 0L, 0L, null)))
+        .map(Row(_, 0L, 0L, 0L, null)),
+    // no documents: only the singleton bucket, with 0 docs, and a share
+    // of a total of 0 is NULL
+    "q258_cluster_sizes" -> Seq(Row(1L, 0L, 0L, null)),
+    // no events: no user reaches any milestone, rates over 0 users and
+    // percentiles over no rows are NULL
+    "q327_onboarding_velocity" ->
+      Seq(2L, 5L, 10L).map(Row(_, 0L, 0L, null, null, null)),
+    // no events: no scope has a hash, so no sketch row, not even __all
+    "q217_kmv_distinct" -> Seq.empty[Row])
 
   /** Zero-row fact tables (`events`, `orders`, `lineitem`, `documents`,
     * `embeddings`) in `dir`, next to the dimension tables of [[sf]]. */
